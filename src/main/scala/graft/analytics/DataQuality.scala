@@ -183,9 +183,10 @@ object DataQuality {
     * columns, fits a long) split hi/lo at base 1e7 so BOTH split lanes
     * carry ≤~1.2e7 per row — every `sum(long)` stays inside long capacity
     * to ~7.7e11 input rows, which covers a 100 TB lineitem (~6e11 rows).
-    * `spark.sql.ansi.enabled` is OFF in this engine, so `sum(long)` would
-    * WRAP SILENTLY past capacity — the loud posture therefore comes from
-    * an explicit guard computed in the same aggregate: max(abs(x)) lanes
+    * The ANSI posture (`spark.sql.ansi.enabled`) depends on the
+    * deployment, and with it off `sum(long)` would WRAP SILENTLY past
+    * capacity — the only loud path that is guaranteed is therefore an
+    * explicit guard computed in the same aggregate: max(abs(x)) lanes
     * bound the worst per-row addend exactly, and the single post-agg row
     * raises an error (`raise_error`) when either (a) n × worst-addend
     * approaches Long.MaxValue for any sum lane, or (b) any per-row

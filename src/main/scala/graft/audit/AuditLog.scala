@@ -40,6 +40,8 @@ final case class AuditLog(pkCol: String, seqCol: String) {
   val byEntity: WindowSpec = Window.partitionBy(pkCol).orderBy(seqCol)
   val running: WindowSpec =
     byEntity.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  private val byEntityDesc: WindowSpec =
+    Window.partitionBy(pkCol).orderBy(col(seqCol).desc)
 
   private val isInsert = col("operation") === "I"
   /** Delete OR truncate: the row no longer exists after either
@@ -74,6 +76,13 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     }
   }
 
+  /** Each entity's last row by seq, whatever columns it carries — the
+    * one top-1 every "latest per entity" view goes through. */
+  private[audit] def latest(df: DataFrame): DataFrame =
+    df.withColumn("__rn", row_number().over(byEntityDesc))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
+
   /** Latest reconstructed state per entity.
     *
     * With `dropDeleted = true` this is the reference's live table: an
@@ -82,39 +91,13 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     * "what was this row when it was deleted"). */
   def current(log: DataFrame, payload: Seq[String],
       dropDeleted: Boolean = false): DataFrame = {
-    val desc = Window.partitionBy(pkCol).orderBy(col(seqCol).desc)
-    val latest = snapshot(log, payload)
-      .withColumn("__rn", row_number().over(desc))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    if (dropDeleted) latest.filter(!isTerminal) else latest
+    val top = latest(snapshot(log, payload))
+    if (dropDeleted) top.filter(!isTerminal) else top
   }
 
   /** State as of a given point in the change sequence (time travel). */
   def asOf(log: DataFrame, payload: Seq[String], maxSeq: Column): DataFrame =
     current(log.filter(col(seqCol) <= maxSeq), payload)
-
-  // ------------------------------------------------------ typed payloads --
-
-  /** Delta over a typed payload: reconstruct on the string form, cast the
-    * OUTPUT columns. `old_*` is NULL on insert (nothing preceded the row);
-    * a malformed value surfaces as the cast's NULL, exactly as the
-    * reference's `::type` would error-or-null per dialect. */
-  def deltaTyped(log: DataFrame, payload: Seq[TypedField]): DataFrame =
-    payload.foldLeft(log) { (df, f) =>
-      df.withColumn(s"old_${f.name}",
-          when(isInsert, lit(null))
-            .otherwise(lag(col(f.name), 1).over(byEntity)).cast(f.sqlType))
-        .withColumn(s"new_${f.name}", col(f.name).cast(f.sqlType))
-    }
-
-  /** Snapshot over a typed payload: running last non-null string state per
-    * key, cast back to the declared source type (audit.go:1262). */
-  def snapshotTyped(log: DataFrame, payload: Seq[TypedField]): DataFrame =
-    payload.foldLeft(log) { (df, f) =>
-      df.withColumn(s"state_${f.name}",
-        last(col(f.name), ignoreNulls = true).over(running).cast(f.sqlType))
-    }
 
   // ------------------------------------------- statement-level truncate --
 
@@ -187,13 +170,17 @@ final case class AuditLog(pkCol: String, seqCol: String) {
 
   // ----------------------------------------------- old-values (before_change) --
 
-  /** Rows strictly after the current change — the forward scan the
-    * reference implements as a correlated `DISTINCT ON ... WHERE
+  /** Rows strictly after the current change, nearest last — the forward
+    * scan the reference implements as a correlated `DISTINCT ON ... WHERE
     * spa.audit_id > audit_id ORDER BY audit_id` subquery per row
-    * (audit.go:1051, audit.go:1262). As a window it is one pass over the
-    * same (pk, seq) partitioning every other reconstruction uses. */
-  private val fwdExcl: WindowSpec =
-    byEntity.rowsBetween(1, Window.unboundedFollowing)
+    * (audit.go:1051, audit.go:1262). Walked in descending seq order it is
+    * a frame that grows one row at a time, so a running aggregate over it
+    * is linear in an entity's history; the ascending
+    * `rowsBetween(1, unboundedFollowing)` form re-aggregates the whole
+    * tail for every row (quadratic). Same (pk) partitioning as every other
+    * reconstruction, so no extra exchange. */
+  private val later: WindowSpec =
+    byEntityDesc.rowsBetween(Window.unboundedPreceding, -1)
 
   /** Joins the live table (pk + payload columns) and coalesces each
     * `state_c` with the live value — the reference's `row_to_json` lateral
@@ -220,7 +207,7 @@ final case class AuditLog(pkCol: String, seqCol: String) {
   def snapshotFromOld(log: DataFrame, payload: Seq[String],
       live: Option[DataFrame] = None): DataFrame = {
     val states = payload.foldLeft(log) { (df, c) =>
-      df.withColumn(s"state_$c", first(col(s"old_$c"), ignoreNulls = true).over(fwdExcl))
+      df.withColumn(s"state_$c", last(col(s"old_$c"), ignoreNulls = true).over(later))
     }
     withLiveFallback(states, payload, live)
   }

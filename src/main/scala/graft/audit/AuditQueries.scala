@@ -51,6 +51,26 @@ object AuditQueries {
     .withColumn("k", when(col("operation") === "U", col("field_k")))
     .withColumn("val", when(col("event_type") === "purchase", col("value")))
 
+  /** Adds `n_changes`, each entity's change count, as the ascending
+    * position: on the last row — the one `current` keeps — it equals the
+    * count, and it rides the snapshot's own sort. BIGINT, like the
+    * oracle's `count(*)`. */
+  private def withChangeCount(df: DataFrame): DataFrame =
+    df.withColumn("n_changes", row_number().over(alg.byEntity).cast("long"))
+
+  /** Gap sessions per entity: a change opens a new session when it is the
+    * entity's first or comes more than 30 minutes after the previous one;
+    * `session_id` is the running count of opened sessions. */
+  private def withSessionId(df: DataFrame): DataFrame = {
+    val secs = unix_timestamp(col("ts"))
+    val opens = when(lag(col("audit_id"), 1).over(alg.byEntity).isNull, 1)
+      .when(secs - lag(secs, 1).over(alg.byEntity) > 1800, 1)
+      .otherwise(0)
+    df.withColumn("__new_session", opens)
+      .withColumn("session_id", sum("__new_session").over(alg.running))
+      .drop("__new_session")
+  }
+
   /** Oracle-side twin of `log` + `sparse` (DuckDB dialect). */
   private val auditCte =
     s"""WITH audit AS (
@@ -141,10 +161,7 @@ object AuditQueries {
       |FROM rec ORDER BY audit_id""".stripMargin) { (s, d) =>
     val base = log(s, d)
     val oldFeed = base.withColumn("old_value", lag("value", 1).over(alg.byEntity))
-    val descW = Window.partitionBy("entity_id").orderBy(col("audit_id").desc)
-    val live = base
-      .withColumn("__rn", row_number().over(descW)).filter(col("__rn") === 1)
-      .select(col("entity_id"), col("value"))
+    val live = alg.latest(base).select(col("entity_id"), col("value"))
     alg.deltaFromOld(oldFeed, Seq("value"), Some(live))
       .select("audit_id", "entity_id", "operation", "old_value", "new_value")
       .orderBy("audit_id")
@@ -335,9 +352,8 @@ object AuditQueries {
     * `(before_change ->> '{col}')::{dataType}`. Here the feed carries an
     * INT, a DECIMAL(12,2) and a DATE field as extracted strings (the
     * `->>` form, built with cast/strftime arithmetic shared by both
-    * engines), reconstruction runs on the strings, and the outputs are
-    * cast back via [[TypedField]] — delta old/new pairs plus a typed
-    * snapshot state column. */
+    * engines), reconstruction runs on the strings, and the output select
+    * casts back — delta old/new pairs plus a typed snapshot state column. */
   val auditTypedDelta: Q = Q.sql(
     "audit_typed_delta",
     auditCte + s""", typed AS (
@@ -366,20 +382,17 @@ object AuditQueries {
       when(col("event_type") === "purchase",
         col("value").cast("decimal(12,2)").cast("string")).as("amount_s"),
       when(col("operation") === "I", date_format(col("ts"), "yyyy-MM-dd")).as("day_s"))
-    val fields = Seq(
-      TypedField("k_s", "int"), TypedField("amount_s", "decimal(12,2)"),
-      TypedField("day_s", "date"))
-    alg.snapshotTyped(alg.deltaTyped(typed, fields),
-        Seq(TypedField("amount_s", "decimal(12,2)")))
+    // decimal-typed reconstruction surfaced as DOUBLE (Det convention:
+    // exact work in decimal space; the harness compares float dtypes)
+    def amount(c: String) = col(c).cast("decimal(12,2)").cast("double")
+    alg.snapshot(alg.delta(typed, Seq("k_s", "amount_s", "day_s")), Seq("amount_s"))
       .select(
         col("audit_id"), col("entity_id"), col("operation"),
-        col("old_k_s").as("old_k"), col("new_k_s").as("new_k"),
-        // decimal-typed reconstruction surfaced as DOUBLE (Det convention:
-        // exact work in decimal space; the harness compares float dtypes)
-        col("old_amount_s").cast("double").as("old_amount"),
-        col("new_amount_s").cast("double").as("new_amount"),
-        col("old_day_s").as("old_day"), col("new_day_s").as("new_day"),
-        col("state_amount_s").cast("double").as("state_amount"))
+        col("old_k_s").cast("int").as("old_k"), col("new_k_s").cast("int").as("new_k"),
+        amount("old_amount_s").as("old_amount"), amount("new_amount_s").as("new_amount"),
+        col("old_day_s").cast("date").as("old_day"),
+        col("new_day_s").cast("date").as("new_day"),
+        amount("state_amount_s").as("state_amount"))
       .orderBy("audit_id")
   }
 
@@ -511,13 +524,10 @@ object AuditQueries {
     val wm = lg.crossJoin(broadcast(mid))
     val oldHalf = wm.filter(col("audit_id") <= col("__mid")).drop("__mid")
     val newHalf = wm.filter(col("audit_id") > col("__mid")).drop("__mid")
-    val descW = Window.partitionBy("entity_id").orderBy(col("audit_id").desc)
-    val compacted = alg.snapshot(oldHalf, Seq("k", "val"))
-      .withColumn("rn", row_number().over(descW)).filter(col("rn") === 1)
+    val compacted = alg.current(oldHalf, Seq("k", "val"))
       .select(col("audit_id"), col("entity_id"), col("operation"), col("ts"),
         col("state_k").as("k"), col("state_val").as("val"))
-    alg.snapshot(compacted.unionByName(newHalf), Seq("k", "val"))
-      .withColumn("rn", row_number().over(descW)).filter(col("rn") === 1)
+    alg.current(compacted.unionByName(newHalf), Seq("k", "val"))
       .select(col("entity_id"), col("audit_id").as("last_audit_id"),
         date_format(col("ts"), TS).as("last_changed_at"),
         col("operation").as("last_op"), col("state_k"), col("state_val"))
@@ -568,11 +578,7 @@ object AuditQueries {
       |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_changed_at,
       |  state_k, state_val, n_changes
       |FROM snap WHERE rn = 1 ORDER BY entity_id""".stripMargin) { (s, d) =>
-    val descW = Window.partitionBy("entity_id").orderBy(col("audit_id").desc)
-    alg.snapshot(sparse(log(s, d)), Seq("k", "val"))
-      .withColumn("rn", row_number().over(descW))
-      .withColumn("n_changes", count(lit(1)).over(Window.partitionBy("entity_id")))
-      .filter(col("rn") === 1)
+    alg.current(withChangeCount(sparse(log(s, d))), Seq("k", "val"))
       .select(
         col("entity_id"), col("audit_id").as("last_audit_id"),
         date_format(col("ts"), TS).as("last_changed_at"),
@@ -718,14 +724,7 @@ object AuditQueries {
       + Det.dsumRoundSql("value", 2) + """ AS session_value
       |FROM sessions GROUP BY entity_id, session_id
       |ORDER BY entity_id, session_id""".stripMargin) { (s, d) =>
-    val secs = unix_timestamp(col("ts"))
-    val marked = log(s, d)
-      .withColumn("new_session",
-        when(secs - lag(secs, 1).over(alg.byEntity) > 1800, 1)
-          .when(lag(col("audit_id"), 1).over(alg.byEntity).isNull, 1)
-          .otherwise(0))
-    marked
-      .withColumn("session_id", sum("new_session").over(alg.running))
+    withSessionId(log(s, d))
       .groupBy("entity_id", "session_id")
       .agg(
         date_format(min("ts"), TS).as("session_start"),
@@ -1485,11 +1484,7 @@ object AuditQueries {
     val live = Tables.customer(s, d)
       .filter(col("c_custkey") % 7 =!= 0)
       .select(col("c_custkey").as("entity_id"))
-    val descW = Window.partitionBy("entity_id").orderBy(col("audit_id").desc)
-    alg.snapshot(sparse(log(s, d)), Seq("k", "val"))
-      .withColumn("rn", row_number().over(descW))
-      .withColumn("n_changes", count(lit(1)).over(Window.partitionBy("entity_id")))
-      .filter(col("rn") === 1)
+    alg.current(withChangeCount(sparse(log(s, d))), Seq("k", "val"))
       .join(live, Seq("entity_id"), "left_anti")
       .select(col("entity_id"), col("audit_id").as("last_audit_id"),
         col("operation").as("last_operation"),
@@ -1530,13 +1525,12 @@ object AuditQueries {
       |  AND CAST(floor(epoch(ts)) AS BIGINT)
       |    - CAST(floor(epoch(prev_ts)) AS BIGINT) < 300
       |ORDER BY entity_id, audit_id""".stripMargin) { (s, d) =>
-    val w = Window.partitionBy("entity_id").orderBy("audit_id")
     log(s, d)
       .select(col("entity_id"), col("audit_id"), col("ts"),
         col("changed_by"), col("db_user"))
-      .withColumn("prev_audit_id", lag("audit_id", 1).over(w))
-      .withColumn("prev_ts", lag("ts", 1).over(w))
-      .withColumn("prev_session", lag("db_user", 1).over(w))
+      .withColumn("prev_audit_id", lag("audit_id", 1).over(alg.byEntity))
+      .withColumn("prev_ts", lag("ts", 1).over(alg.byEntity))
+      .withColumn("prev_session", lag("db_user", 1).over(alg.byEntity))
       .withColumn("gap_s",
         unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")))
       .filter(col("prev_session").isNotNull
@@ -1609,13 +1603,10 @@ object AuditQueries {
       .select("audit_id", "entity_id", "operation", "ts", "k", "val")
     val mid = lg.agg(floor(max("audit_id") / 2).cast("long").as("mid"))
     val snap = alg.snapshot(lg, Seq("k", "val")).crossJoin(broadcast(mid))
-    val descW = Window.partitionBy("entity_id").orderBy(col("audit_id").desc)
-    val pre = snap.filter(col("audit_id") <= col("mid"))
-      .withColumn("rn", row_number().over(descW)).filter(col("rn") === 1)
+    val pre = alg.latest(snap.filter(col("audit_id") <= col("mid")))
       .select(col("entity_id"), col("operation").as("pre_op"),
         col("state_k").as("restore_k"), col("state_val").as("restore_val"))
-    val cur = snap
-      .withColumn("rn", row_number().over(descW)).filter(col("rn") === 1)
+    val cur = alg.latest(snap)
       .select(col("entity_id"), col("operation").as("cur_op"),
         col("state_k").as("cur_k"), col("state_val").as("cur_val"))
     val post = snap.filter(col("audit_id") > col("mid"))
@@ -1824,11 +1815,10 @@ object AuditQueries {
       |       WHEN prev_op = 'T' AND op IN ('U', 'D') THEN 1
       |       ELSE 0 END AS anomalous
       |FROM c ORDER BY prev_op, op""".stripMargin) { (s, d) =>
-    val w = Window.partitionBy("entity_id").orderBy("audit_id")
     val allW = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     log(s, d)
       .select(col("entity_id"), col("audit_id"), col("operation"))
-      .withColumn("prev_op", coalesce(lag("operation", 1).over(w), lit("^")))
+      .withColumn("prev_op", coalesce(lag("operation", 1).over(alg.byEntity), lit("^")))
       .groupBy(col("prev_op"), col("operation").as("op"))
       .agg(count(lit(1)).as("n"), countDistinct("entity_id").as("n_entities"))
       .withColumn("share", round(lit(1.0) * col("n") / sum("n").over(allW), 6))
@@ -2522,18 +2512,9 @@ object AuditQueries {
         |  ${qSel("0.5", "p50")}, ${qSel("0.9", "p90")}, ${qSel("0.99", "p99")},
         |  CAST(max(v) AS BIGINT) AS max_v
         |FROM t GROUP BY metric ORDER BY metric""".stripMargin) { (s, d) =>
-      val byEnt = Window.partitionBy("entity_id").orderBy("audit_id")
-      val secs = unix_timestamp(col("ts"))
-      val marked = log(s, d)
-        .select(col("entity_id"), col("audit_id"), col("ts"))
-        .withColumn("new_session",
-          when(lag(col("audit_id"), 1).over(byEnt).isNull, 1)
-            .when(secs - lag(secs, 1).over(byEnt) > 1800, 1)
-            .otherwise(0))
-      val per = marked
-        .withColumn("sess_n", sum("new_session").over(
-          byEnt.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("entity_id", "sess_n")
+      val per = withSessionId(
+          log(s, d).select(col("entity_id"), col("audit_id"), col("ts")))
+        .groupBy("entity_id", "session_id")
         .agg(count(lit(1)).cast("long").as("n_events"),
           (unix_timestamp(max("ts")) - unix_timestamp(min("ts"))).as("duration_s"))
       val m = per.select(lit("n_events").as("metric"), col("n_events").as("v"))
@@ -2926,10 +2907,8 @@ object AuditQueries {
       .select("audit_id", "entity_id", "operation", "k", "val")
     val mid = lg.agg(floor(max("audit_id") / 2).cast("long").as("__mid"))
     val wm = lg.crossJoin(broadcast(mid))
-    val descW = Window.partitionBy("entity_id").orderBy(col("audit_id").desc)
     def lastState(half: DataFrame): DataFrame =
-      alg.snapshot(half, Seq("k", "val"))
-        .withColumn("rn", row_number().over(descW)).filter(col("rn") === 1)
+      alg.current(half, Seq("k", "val"))
         .select(col("entity_id"), col("audit_id"), col("operation"),
           col("state_k"), col("state_val"))
     val base = lastState(wm.filter(col("audit_id") <= col("__mid")).drop("__mid"))
@@ -2996,10 +2975,9 @@ object AuditQueries {
       |  round(1.0 * n_entities / total, 4) AS entity_share
       |FROM c CROSS JOIN t
       |ORDER BY n_entities DESC, path LIMIT 20""".stripMargin) { (s, d) =>
-    val w = Window.partitionBy("entity_id").orderBy("audit_id")
     val capped = log(s, d)
       .select(col("entity_id"), col("operation"), col("audit_id"),
-        row_number().over(w).as("rn"))
+        row_number().over(alg.byEntity).as("rn"))
       .filter(col("rn") <= 5)
     val paths = capped.groupBy("entity_id")
       .agg(array_join(
@@ -3159,9 +3137,8 @@ object AuditQueries {
       |  CAST(count(DISTINCT entity_id) AS BIGINT) AS n_entities
       |FROM t WHERE prev_user IS NOT NULL AND prev_user <> db_user
       |GROUP BY 1, 2 ORDER BY n_handoffs DESC, from_role, to_role""".stripMargin) { (s, d) =>
-    val w = Window.partitionBy("entity_id").orderBy("audit_id")
     val t = log(s, d).select(col("entity_id"), col("audit_id"), col("db_user"))
-      .withColumn("prev_user", lag(col("db_user"), 1).over(w))
+      .withColumn("prev_user", lag(col("db_user"), 1).over(alg.byEntity))
     t.filter(col("prev_user").isNotNull && col("prev_user") =!= col("db_user"))
       .groupBy(col("prev_user").as("from_role"), col("db_user").as("to_role"))
       .agg(count(lit(1)).as("n_handoffs"),
@@ -3225,8 +3202,7 @@ object AuditQueries {
       |  round(1.0 * count(*) FILTER (WHERE last_op IN ('D', 'T')) / count(*), 4)
       |    AS rewrite_share
       |FROM lo GROUP BY 1 ORDER BY day""".stripMargin) { (s, d) =>
-    val w = Window.partitionBy("entity_id").orderBy("audit_id")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val w = alg.byEntity.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val lo = log(s, d).select(col("entity_id"), col("audit_id"), col("ts"),
         col("operation"))
       .withColumn("last_op", last(col("operation")).over(w))

@@ -43,6 +43,19 @@ object AuditViews {
     ()
   }
 
+  /** The checked sink's payload columns and every reconstruction column
+    * over them: compare() derives state_* (snapshot) and old_/new_state_*
+    * (compare) in one stacked window pass; delta old/new of the raw
+    * payload rides the same partitioning. */
+  private def reconstruct(spark: SparkSession, cfg: AuditConfig, table: String,
+      pkCol: String, seqCol: String): (Seq[String], DataFrame) = {
+    checked(cfg, table)
+    val alg = AuditLog(pkCol, seqCol)
+    val sink = AuditStorage.read(spark, table)
+    val payload = payloadColumns(sink, pkCol, seqCol)
+    (payload, alg.delta(alg.compare(sink, payload), payload))
+  }
+
   /** Rebuilds the reconstruction views over the written sink `table`.
     * Reads nothing but the sink; capture is untouched (the views_only
     * contract). The config must opt in via `views_only: true`, pass
@@ -51,16 +64,8 @@ object AuditViews {
     * the sink schema — a 2-column and a 60-column sink both rebuild in
     * full, like the reference's all-columns views. */
   def rebuild(spark: SparkSession, cfg: AuditConfig, table: String,
-      pkCol: String = "entity_id", seqCol: String = "audit_id"): DataFrame = {
-    checked(cfg, table)
-    val alg = AuditLog(pkCol, seqCol)
-    val sink = AuditStorage.read(spark, table)
-    val payload = payloadColumns(sink, pkCol, seqCol)
-    // compare() derives state_* (snapshot) and old_/new_state_* (compare)
-    // in one stacked window pass; delta old/new of the raw payload rides
-    // the same partitioning.
-    alg.delta(alg.compare(sink, payload), payload)
-  }
+      pkCol: String = "entity_id", seqCol: String = "audit_id"): DataFrame =
+    reconstruct(spark, cfg, table, pkCol, seqCol)._2
 
   /** Typed rebuild: the sink stores payloads type-erased (the reference's
     * JSON audit table — strings), reconstruction runs on the strings, and
@@ -71,17 +76,13 @@ object AuditViews {
   def rebuildTyped(spark: SparkSession, cfg: AuditConfig, table: String,
       payload: Seq[TypedField],
       pkCol: String = "entity_id", seqCol: String = "audit_id"): DataFrame = {
-    checked(cfg, table)
-    val alg = AuditLog(pkCol, seqCol)
-    val sink = AuditStorage.read(spark, table)
+    // discovered = sink column order, like the reference's views
+    val (discovered, rebuilt) = reconstruct(spark, cfg, table, pkCol, seqCol)
     val declared = payload.map(_.name).toSet
-    val discovered = payloadColumns(sink, pkCol, seqCol)
     require(declared == discovered.toSet,
       s"typed payload $declared does not match sink columns $discovered")
-    val names = discovered // sink column order, like the reference's views
     val types = payload.map(f => f.name -> f.sqlType).toMap
-    val rebuilt = alg.delta(alg.compare(sink, names), names)
-    names.foldLeft(rebuilt) { (df, c) =>
+    discovered.foldLeft(rebuilt) { (df, c) =>
       Seq(c, s"state_$c", s"old_state_$c", s"new_state_$c", s"old_$c", s"new_$c")
         .foldLeft(df)((d, n) => d.withColumn(n, col(n).cast(types(c))))
     }

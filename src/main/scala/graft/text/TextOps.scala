@@ -513,8 +513,6 @@ object TextOps {
       changed = jumped.filter(col("label") < col("old_label")).count()
       lab = jumped
       rounds += 1
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        System.err.println(s"[componentLabels] round $rounds changed=$changed")
     }
     // a graph needing more rounds must fail loudly, not return silently
     // non-converged components that diverge from the transitive closure

@@ -102,11 +102,11 @@ case class FromScaled18(child: Expression) extends UnaryExpression {
   * `CAST(DECIMAL AS DOUBLE)` performs. The hi/lo split (base 1e7,
   * balanced so both lanes carry ≤~1.2e7/row for the monetary columns)
   * keeps each `sum(long)` lane inside long capacity to ~7.7e11 input
-  * rows — a 100 TB lineitem (~6e11 rows) fits. NOTE: this engine runs
-  * with `spark.sql.ansi.enabled` OFF, so `sum(long)` past capacity would
-  * wrap SILENTLY — the loud posture is enforced by the caller-side guard
-  * in DataQuality.correlationsFrom (max|x| witness lanes + raise_error),
-  * not by ANSI. */
+  * rows — a 100 TB lineitem (~6e11 rows) fits. NOTE: the ANSI posture
+  * (`spark.sql.ansi.enabled`) depends on the deployment; with it off,
+  * `sum(long)` past capacity would wrap SILENTLY. The only loud path that
+  * is guaranteed is the caller-side guard in
+  * DataQuality.correlationsFrom (max|x| witness lanes + raise_error). */
 case class ToScaledN(child: Expression, scale: Int) extends UnaryExpression {
 
   override def prettyName: String = s"graft_to_scaled$scale"

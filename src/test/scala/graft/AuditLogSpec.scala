@@ -152,6 +152,32 @@ class AuditLogSpec extends AnyFunSuite {
       Seq(None, Some(1), None, Some(2), Some(7), None))
   }
 
+  test("deltaFromOld: a long single-entity history matches a driver-side forward fold") {
+    // thousands of changes to ONE entity (the case the forward scan must
+    // stay linear on), old_k carried by about one change in eight, and a
+    // final stretch no change touches, so the live row fills it
+    val n = 3000
+    val rnd = new scala.util.Random(11)
+    val rows = (1 to n).map { i =>
+      val oldK =
+        if (i > 1 && i <= n - 40 && rnd.nextInt(8) == 0) Some(rnd.nextInt(1000)) else None
+      (i.toLong, 1L, if (i == 1) "I" else "U", oldK)
+    }
+    val liveK = 4242
+    val got = alg.deltaFromOld(
+        rows.toDF("audit_id", "entity_id", "operation", "old_k"), Seq("k"),
+        Some(Seq((1L, liveK)).toDF("entity_id", "k")))
+      .orderBy("audit_id").select("old_k", "new_k")
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+    // new value of change i: the next non-null old value after i, else live
+    val nextOld = rows.map(_._4).scanRight(Option.empty[Int])(_ orElse _).tail
+    val want = rows.zip(nextOld).map { case ((_, _, op, oldK), next) =>
+      (if (op == "I") None else oldK, Some(next.getOrElse(liveK)))
+    }
+    assert(got.size === n)
+    assert(got === want)
+  }
+
   private val sf = "/root/testdata/sf0.001"
 
   test("audit_scd2: intervals tile each entity's timeline, one open row per entity") {

@@ -346,7 +346,7 @@ class NativeExprSpec extends AnyFunSuite {
       || m.contains("ARITHMETIC_OVERFLOW") || m.contains("long overflow")),
       errAnsi.toString)
     // defense-in-depth leg: with ANSI off nothing else is loud — the
-    // guard must be
+    // guard must be what raises
     val ansiKey = "spark.sql.ansi.enabled"
     val prevAnsi = spark.conf.get(ansiKey)
     try {

@@ -55,6 +55,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // guards the sharing: both reconstruction windows on ONE exchange.
     assert(shuffles(p) <= 3, s"delta_old window partitioning no longer shared:\n$p")
     assert(p.toString.contains("BroadcastHashJoin"), p.toString)
+    // the forward scan must not be an UnboundedFollowing frame: Spark
+    // re-aggregates the whole tail of the entity for every row of it
+    assert(!p.toString.toLowerCase.contains("unboundedfollowing"),
+      s"delta_old forward scan is quadratic per entity:\n$p")
   }
 
   test("audit_truncate_reset: stacked windows over a single data exchange") {

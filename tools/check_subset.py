@@ -1,7 +1,6 @@
 #!/usr/bin/env python3
 """Per-op DuckDB oracle check with a hard timeout, merged into one
-CORRECTNESS_sfN.json-style artifact — the scale-gate companion of
-bench_subset.py.
+CORRECTNESS_sfN.json-style artifact.
 
 check.py runs all requested oracles in one process; at sf10 a single
 heavy oracle (recursive closure, 400M-pair pagerank) could stall the

@@ -1,12 +1,12 @@
 #!/bin/bash
 # Direct-JVM launcher for graft mains — bypasses the sbt build lock so a
-# long Verify/Bench can run in the background while sbt compiles/tests.
+# long Verify can run in the background while sbt compiles/tests.
 # Requires a prior `sbt compile`. Mirrors build.sbt's fork settings
 # (JDK17 add-opens, SPARK_DRIVER_MEM heap).
 #
 # usage: tools/run_graft.sh <MainClass> [args...]
 #   env: SPARK_GRAFT_CPUS (read by GraftSession), SPARK_DRIVER_MEM,
-#        SPARK_GRAFT_SF_DIR (graft.Bench)
+#        SPARK_GRAFT_SF_DIR (graft.ExplainOne)
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 MAIN=$1; shift
 OPENS=""
