@@ -77,28 +77,11 @@ object Similarity {
       |ar AS (SELECT vec_id, clabel, row_number() OVER (
       |         PARTITION BY vec_id ORDER BY dist, clabel) AS rn FROM ad)""".stripMargin
 
-  /** Spark twin of `ar`: every (vector, centroid) pair ranked by L2²
-    * (ties by label) — filter rn = 1 for assignment, rn ≤ p for probes.
-    * Distance runs through the native graft_l2sq loop (bit-identical to
-    * the HOF fold and the oracle's list_sum, minus the per-pair array
-    * allocation). Rank = position in the per-row (dist, clabel)-sorted
-    * centroid array — the same total order the per-vector row_number
-    * window produced without shuffling |vectors|×|cells| rows (the
-    * kmeansRanks discipline). */
-  private def centroidRanks(e: DataFrame): DataFrame = {
-    val centArr = labelCentroids(e)
-      .agg(expr("array_sort(collect_list(struct(clabel, cv)))").as("cents"))
-    e.withColumn("emb_d", expr("transform(embedding, x -> cast(x as double))"))
-      .crossJoin(broadcast(centArr))
-      .select(col("vec_id"),
-        posexplode(expr(
-          """array_sort(transform(cents,
-            |  x -> named_struct('dist', graft_l2sq(emb_d, x.cv),
-            |                    'clabel', x.clabel)))""".stripMargin))
-          .as(Seq("pos", "dc")))
-      .select(col("vec_id"), col("dc.clabel").as("clabel"),
-        col("dc.dist").as("dist"), (col("pos") + 1).cast("int").as("rn"))
-  }
+  /** Spark twin of `ar`: every (vector, label centroid) pair ranked by
+    * L2², ties by label — the [[cellRanks]] fold over the label codebook;
+    * `cid` is the label. */
+  private def centroidRanks(e: DataFrame): DataFrame =
+    cellRanks(toEmbD(e), labelCents(e))
 
   /** Spark twin of `amin`: per-(vector, subspace) nearest sub-codeword —
     * (vec_id, m, code, dist); the codebook rides a broadcast. The argmin
@@ -106,11 +89,9 @@ object Similarity {
     * (dist, clabel) tie rule as the former per-(vector, m) window — no
     * |vectors|×4×|codebook| shuffle. */
   private def pqAmin(e: DataFrame): DataFrame = {
-    val centArr = labelCentroids(e)
-      .agg(expr("array_sort(collect_list(struct(clabel, cv)))").as("cents"))
     val sub = "slice(emb_d, (m-1)*16 + 1, 16)"
     e.withColumn("emb_d", expr("transform(embedding, x -> cast(x as double))"))
-      .crossJoin(broadcast(centArr))
+      .crossJoin(broadcast(labelCents(e)))
       .withColumn("m", explode(array((1 to 4).map(lit): _*)))
       .select(col("vec_id"), col("m"),
         expr(
@@ -118,11 +99,114 @@ object Similarity {
              |  named_struct('d', cast('Infinity' as double), 'c', -1),
              |  (acc, x) -> IF(graft_l2sq($sub, slice(x.cv, (m-1)*16 + 1, 16)) < acc.d,
              |    named_struct('d', graft_l2sq($sub, slice(x.cv, (m-1)*16 + 1, 16)),
-             |                 'c', x.clabel),
+             |                 'c', x.cid),
              |    acc))""".stripMargin).as("mc"))
       .select(col("vec_id"), col("m"), col("mc.c").as("code"),
         col("mc.d").as("dist"))
   }
+
+  // ---- serve core: cell ranks, probe list, query broadcast, top-k ----
+
+  private def toEmbD(e: DataFrame): DataFrame = e.select(col("vec_id"),
+    expr("transform(embedding, x -> cast(x as double))").as("emb_d"))
+
+  /** Centroid set folded to ONE broadcast row — array of (cid, cv) sorted
+    * by cid. All per-vector centroid math (argmin assignment, min dist,
+    * full rank order) then runs as a per-row fold/sort over this bounded
+    * array: ZERO corpus-wide shuffle, where the join + groupBy(vec_id) /
+    * per-vector window alternatives re-exchange the whole corpus on every
+    * use — at 100 TB the difference between one map pass and a corpus
+    * shuffle per Lloyd round. */
+  private def centsArr(cent: DataFrame): DataFrame =
+    cent.agg(expr("array_sort(collect_list(struct(cid, cv)))").as("cents"))
+
+  /** The label codebook as a [[centsArr]] row (cid = label). */
+  private def labelCents(e: DataFrame): DataFrame =
+    centsArr(labelCentroids(e).withColumnRenamed("clabel", "cid"))
+
+  /** Nearest centroid over the cents array as a (d, cid) struct: strict
+    * `<` on a cid-ascending fold keeps the lower cid on distance ties —
+    * exactly `min(struct(dist, cid))`, the old shuffle-side tie rule. */
+  private val argmin =
+    """aggregate(cents,
+      |  named_struct('d', cast('Infinity' as double), 'cid', -1),
+      |  (acc, x) -> IF(graft_l2sq(emb_d, x.cv) < acc.d,
+      |    named_struct('d', graft_l2sq(emb_d, x.cv), 'cid', x.cid),
+      |    acc))""".stripMargin
+
+  /** The cell rank order: every (vector, centroid) pair ranked by
+    * (L2², cid) — (vec_id, cid, dist, rn), rn = 1 is the cell assignment,
+    * rn ≤ p the probe list. Distance runs through the native graft_l2sq
+    * loop (bit-identical to the oracle's list_sum fold). Rank = position in
+    * the per-row (dist, cid)-sorted centroid array — the same total order
+    * a per-vector row_number window produces, without shuffling
+    * |vectors|×|cells| rows to sort them. */
+  private def cellRanks(embD: DataFrame, cents: DataFrame): DataFrame =
+    embD.crossJoin(broadcast(cents))
+      .select(col("vec_id"),
+        posexplode(expr(
+          """array_sort(transform(cents,
+            |  x -> named_struct('dist', graft_l2sq(emb_d, x.cv),
+            |                    'cid', x.cid)))""".stripMargin))
+          .as(Seq("pos", "dc")))
+      .select(col("vec_id"), col("dc.cid").as("cid"),
+        col("dc.dist").as("dist"), (col("pos") + 1).cast("int").as("rn"))
+
+  /** The probe list over one rank table: database vectors keep their
+    * rn = 1 cell (`assign`: vec_id, cell); the queries (vec_id < 10) probe
+    * their `nprobe` nearest cells (query_id, qe, qcell, probe). Every
+    * candidate lives in exactly one cell, so no pair is scored twice.
+    * Persisted: both frames branch off the rank subtree, and without it
+    * each re-runs centroid training + the |vectors|×|cells| scoring (≤
+    * nprobe tiny rows per vector; session-scoped, Verify clearCache).
+    * MEMORY_AND_DISK: the table is ∝ |vectors|, so at 100 TB memory-only
+    * eviction would re-train per miss; disk spill bounds the recompute at
+    * one. */
+  private def probeList(e: DataFrame, ranks: DataFrame,
+      nprobe: Int): (DataFrame, DataFrame) = {
+    val r = ranks.filter(col("rn") <= nprobe)
+      .select(col("vec_id"), col("cid"), col("rn"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assign = r.filter(col("rn") === 1)
+      .select(col("vec_id"), col("cid").as("cell"))
+    val qprobe = r.filter(col("vec_id") < 10)
+      .select(col("vec_id"), col("cid").as("qcell"), col("rn").cast("int").as("probe"))
+    val q = e.join(qprobe, Seq("vec_id"))
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+        col("qcell"), col("probe"))
+    (assign, q)
+  }
+
+  /** The IVF candidate side: every vector with its assigned cell. */
+  private def cellCands(e: DataFrame, assign: DataFrame): DataFrame =
+    e.join(assign, Seq("vec_id"))
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("cell"))
+
+  /** The query-side broadcast: the bounded query frame (query_id, …)
+    * meets every candidate (neighbor_id, …) — in the query's probed cell
+    * (`qcell` = `cell`) when `byCell` — and never the query itself. The
+    * corpus side streams once and never shuffles for the join. */
+  private def probe(cands: DataFrame, q: DataFrame, byCell: Boolean): DataFrame = {
+    val notSelf = col("neighbor_id") =!= col("query_id")
+    cands.join(broadcast(q),
+      if (byCell) col("qcell") === col("cell") && notSelf else notSelf)
+  }
+
+  /** The top-k tie rule: per query, the `k` best by `score` (a sort
+    * order — `desc` for similarities), ties by neighbor_id — the
+    * row_number every oracle's `r` CTE computes. */
+  private def topk(scored: DataFrame, score: Column, k: Int): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(score, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+
+  /** The 4-dim sign-bit coarse cell (1 of 16) of the raw embedding. */
+  private val signCell: Column =
+    (when(element_at(col("embedding"), 1) > 0f, 8).otherwise(0)
+      + when(element_at(col("embedding"), 2) > 0f, 4).otherwise(0)
+      + when(element_at(col("embedding"), 3) > 0f, 2).otherwise(0)
+      + when(element_at(col("embedding"), 4) > 0f, 1).otherwise(0)).cast("int")
 
   /** Brute-force cosine top-k per query vector (query side broadcast). */
   val annTopk: Q = Q.sql(
@@ -142,11 +226,9 @@ object Similarity {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), cosR(col("qe"), col("ce")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    topk(probe(c, q, byCell = false)
+      .select(col("query_id"), col("neighbor_id"), cosR(col("qe"), col("ce")).as("cos_sim")),
+      col("cos_sim").desc, 5)
       .orderBy("query_id", "rank")
   }
 
@@ -211,18 +293,17 @@ object Similarity {
         expr(sparkSig(32, 64, 32)).as("hi"))
       val q = sig.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("lo").as("qlo"), col("hi").as("qhi"))
-      val wH = Window.partitionBy("query_id").orderBy(col("hamming"), col("neighbor_id"))
-      val served = sig.select(col("vec_id").as("neighbor_id"), col("lo"), col("hi"))
-        .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          expr("bit_count(lo ^ qlo) + bit_count(hi ^ qhi)").cast("int").as("hamming"))
-        .withColumn("rank", row_number().over(wH))
-        .filter(col("rank") <= 5)
+      val served = topk(
+        probe(sig.select(col("vec_id").as("neighbor_id"), col("lo"), col("hi")), q,
+          byCell = false)
+          .select(col("query_id"), col("neighbor_id"),
+            expr("bit_count(lo ^ qlo) + bit_count(hi ^ qhi)").cast("int").as("hamming")),
+        col("hamming"), 5)
       val qv = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val wX = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-      val ex = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-        .join(broadcast(qv), col("neighbor_id") =!= col("query_id"))
+      val ex = probe(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce")),
+          qv, byCell = false)
         .select(col("query_id"), col("neighbor_id"), cosR(col("qe"), col("ce")).as("cos_sim"))
         .withColumn("xrank", row_number().over(wX))
       ex.join(broadcast(served), Seq("query_id", "neighbor_id"))
@@ -252,20 +333,13 @@ object Similarity {
       |      FROM s)
       |SELECT query_id, neighbor_id, cell, cos_sim, rank
       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    val cell =
-      (when(element_at(col("embedding"), 1) > 0f, 8).otherwise(0)
-        + when(element_at(col("embedding"), 2) > 0f, 4).otherwise(0)
-        + when(element_at(col("embedding"), 3) > 0f, 2).otherwise(0)
-        + when(element_at(col("embedding"), 4) > 0f, 1).otherwise(0)).cast("int")
-    val e = emb(s, d).select(col("vec_id"), col("embedding"), cell.as("cell"))
+    val e = emb(s, d).select(col("vec_id"), col("embedding"), signCell.as("cell"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cell").as("qcell"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    e.join(broadcast(q), col("qcell") === col("cell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        cosR(col("qe"), col("embedding")).as("cos_sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    topk(probe(e.withColumnRenamed("vec_id", "neighbor_id"), q, byCell = true)
+      .select(col("query_id"), col("neighbor_id"), col("cell"),
+        cosR(col("qe"), col("embedding")).as("cos_sim")),
+      col("cos_sim").desc, 3)
       .orderBy("query_id", "rank")
   }
 
@@ -427,20 +501,11 @@ object Similarity {
       |SELECT query_id, neighbor_id, cell, cos_sim, rank
       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d)
-    val assign = centroidRanks(e).filter(col("rn") === 1)
-      .select(col("vec_id"), col("clabel").as("cell"))
-    val assigned = e.join(assign, Seq("vec_id"))
-    val q = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("cell").as("qcell"))
-    val rankW = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    assigned
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("cell"))
-      .join(broadcast(q), col("qcell") === col("cell") && col("neighbor_id") =!= col("query_id"))
+    val (assign, q) = probeList(e, centroidRanks(e), nprobe = 1)
+    topk(probe(cellCands(e, assign), q, byCell = true)
       .select(col("query_id"), col("neighbor_id"), col("cell"),
-        cosR(col("qe"), col("ce")).as("cos_sim"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
+        cosR(col("qe"), col("ce")).as("cos_sim")),
+      col("cos_sim").desc, 3)
       .orderBy("query_id", "rank")
   }
 
@@ -603,13 +668,27 @@ object Similarity {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"),
         expr("transform(embedding, x -> cast(x as double))").as("qe"))
-    val rankW = Window.partitionBy("query_id").orderBy(col("adc_dist"), col("neighbor_id"))
-    recon.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(expr("graft_l2sq(qe, rv)"), 6).as("adc_dist"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
+    topk(probe(recon.withColumnRenamed("vec_id", "neighbor_id"), q, byCell = false)
+      .select(col("query_id"), col("neighbor_id"),
+        round(expr("graft_l2sq(qe, rv)"), 6).as("adc_dist")),
+      col("adc_dist"), 3)
       .orderBy("query_id", "rank")
+  }
+
+  /** recall@3 of an index's top-3 against the brute-force top-3
+    * ([[annTopk]]), per query: the body of every recall audit. */
+  private def recallAt3(index: Q)(s: SparkSession, d: String): DataFrame = {
+    val bf3 = annTopk.fn(s, d).filter(col("rank") <= 3)
+      .select(col("query_id"), col("neighbor_id"))
+    val iv3 = index.fn(s, d).filter(col("rank") <= 3)
+      .select(col("query_id").as("iv_query"), col("neighbor_id").as("iv_neighbor"))
+    bf3.join(iv3,
+        col("query_id") === col("iv_query") && col("neighbor_id") === col("iv_neighbor"),
+        "left")
+      .groupBy("query_id")
+      .agg(count(col("iv_neighbor")).as("n_hits"), count(lit(1)).as("n_exact"),
+        round(count(col("iv_neighbor")) / 3.0, 4).as("recall_at_3"))
+      .orderBy("query_id")
   }
 
   /** ANN quality audit: recall@3 of the IVF index against the brute-force
@@ -646,19 +725,7 @@ object Similarity {
       |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
       |FROM bf3 b LEFT JOIN iv3 i
       |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-      |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin) { (s, d) =>
-    val bf3 = annTopk.fn(s, d).filter(col("rank") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
-    val iv3 = annIvf.fn(s, d).filter(col("rank") <= 3)
-      .select(col("query_id").as("iv_query"), col("neighbor_id").as("iv_neighbor"))
-    bf3.join(iv3,
-        col("query_id") === col("iv_query") && col("neighbor_id") === col("iv_neighbor"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(col("iv_neighbor")).as("n_hits"), count(lit(1)).as("n_exact"),
-        round(count(col("iv_neighbor")) / 3.0, 4).as("recall_at_3"))
-      .orderBy("query_id")
-  }
+      |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin)(recallAt3(annIvf))
 
   /** Position-aware twin of ann_recall: nDCG@3 of the IVF list against
     * the brute-force ranking. Recall counts WHICH true neighbors the
@@ -752,31 +819,11 @@ object Similarity {
       |SELECT query_id, neighbor_id, cell, probe, cos_sim, rank
       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d)
-    // persisted: assign and qprobe both branch off this subtree, and
-    // without it each branch re-runs centroid training + the full
-    // |vectors|×|centroids| distance scoring (tiny to store: ≤2 rows of
-    // (id, label, rn) per vector; session-scoped, Verify/Bench
-    // clearCache). MEMORY_AND_DISK: the table is ∝ |vectors|, so at 100 TB
-    // memory-only eviction would re-train per miss; disk spill bounds the
-    // recompute at one.
-    val ranks = centroidRanks(e).filter(col("rn") <= 2)
-      .select(col("vec_id"), col("clabel"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val assign = ranks.filter(col("rn") === 1)
-      .select(col("vec_id"), col("clabel").as("cell"))
-    val qprobe = ranks.filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("clabel").as("qcell"), col("rn").cast("int").as("probe"))
-    val q = e.join(qprobe, Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("qcell"), col("probe"))
-    val rankW = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    e.join(assign, Seq("vec_id"))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("cell"))
-      .join(broadcast(q), col("qcell") === col("cell") && col("neighbor_id") =!= col("query_id"))
+    val (assign, q) = probeList(e, centroidRanks(e), nprobe = 2)
+    topk(probe(cellCands(e, assign), q, byCell = true)
       .select(col("query_id"), col("neighbor_id"), col("cell"), col("probe"),
-        cosR(col("qe"), col("ce")).as("cos_sim"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
+        cosR(col("qe"), col("ce")).as("cos_sim")),
+      col("cos_sim").desc, 3)
       .orderBy("query_id", "rank")
   }
 
@@ -842,25 +889,12 @@ object Similarity {
       |  CROSS JOIN tot CROSS JOIN nq
       |ORDER BY shares.nprobe""".stripMargin) { (s, d) =>
     val e = emb(s, d)
-    val ranks = centroidRanks(e).filter(col("rn") <= 4)
-      .select(col("vec_id"), col("clabel"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val assign = ranks.filter(col("rn") === 1)
-      .select(col("vec_id"), col("clabel").as("cell"))
-    val qprobe = ranks.filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("clabel").as("qcell"),
-        col("rn").cast("int").as("probe_rank"))
-    val q = e.join(qprobe, Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("qcell"), col("probe_rank"))
-    val px = e.join(assign, Seq("vec_id"))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("cell"))
-      .join(broadcast(q),
-        col("qcell") === col("cell") && col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("probe_rank"),
+    val (assign, q) = probeList(e, centroidRanks(e), nprobe = 4)
+    val px = probe(cellCands(e, assign), q, byCell = true)
+      .select(col("query_id"), col("neighbor_id"), col("probe"),
         cosR(col("qe"), col("ce")).as("cs"))
       .withColumn("nprobe", explode(array(lit(1), lit(2), lit(4))))
-      .filter(col("probe_rank") <= col("nprobe"))
+      .filter(col("probe") <= col("nprobe"))
     val shares = px.groupBy("nprobe").agg(count(lit(1)).cast("long").as("sum_cand"))
     val wr = Window.partitionBy("nprobe", "query_id")
       .orderBy(col("cs").desc, col("neighbor_id"))
@@ -989,74 +1023,37 @@ object Similarity {
       |SELECT query_id, rank, neighbor_id, adc_dist, probe
       |FROM rk WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d)
-    // shared centroid-rank subtree: assignment + probe list (the
-    // ann_ivf_multiprobe persistence discipline — MEMORY_AND_DISK so an
-    // eviction at scale re-reads local disk, not re-trains)
-    val ranks = centroidRanks(e).filter(col("rn") <= 2)
-      .select(col("vec_id"), col("clabel"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val asg = ranks.filter(col("rn") === 1)
-      .select(col("vec_id"), col("clabel").as("cell"))
-    val qp = e
-      .join(ranks.filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("clabel").as("qcell"),
-          col("rn").cast("int").as("probe")), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("qe"),
-        col("qcell"), col("probe"))
-    val rankW = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    pqRecon(e).join(asg, Seq("vec_id"))
-      .join(broadcast(qp),
-        col("qcell") === col("cell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("probe"),
-        round(expr("graft_l2sq(qe, rv)"), 6).as("adc_dist"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
+    val (assign, q) = probeList(e, centroidRanks(e), nprobe = 2)
+    val cands = pqRecon(e).join(assign, Seq("vec_id"))
+      .withColumnRenamed("vec_id", "neighbor_id")
+    // ADC scores the raw query against the reconstruction, as doubles
+    val qd = q.withColumn("qe", expr("transform(qe, x -> cast(x as double))"))
+    topk(probe(cands, qd, byCell = true)
+      .select(col("query_id"), col("neighbor_id"), col("probe"),
+        round(expr("graft_l2sq(qe, rv)"), 6).as("adc_dist")),
+      col("adc_dist"), 3)
       .select("query_id", "rank", "neighbor_id", "adc_dist", "probe")
       .orderBy("query_id", "rank")
   }
 
   // ------------------------- parameterized k-means IVF (k cells, Lloyd) --
 
-  // native codegen loop; bit-identical to the zip_with/aggregate HOF fold
-  // it replaced (left-to-right accumulation) without per-pair allocation
-  private val l2Fold = "graft_l2sq(emb_d, cv)"
-
-  /** K-means-trained centroid ranks with cell count and Lloyd rounds as
-    * REAL knobs — the 100 TB shape the fixed label quantizer only sketched
-    * (cells in the hundreds-to-thousands, trained, nprobe a parameter).
-    *
-    * Deterministic everywhere so the DuckDB oracle reproduces training
-    * bit-for-bit: seeds are the embeddings of the k smallest vec_ids
-    * (cid = rank); each Lloyd round assigns every vector to its nearest
-    * centroid (L2² folded in array order, ties by cid — argmin as an
-    * order-independent `min(struct(dist, cid))`, partial-aggregating
-    * map-side) and recomputes centroids as decimal-exact per-dim means.
-    * A cluster that loses all members simply drops out, identically in
-    * both engines.
-    *
-    * Scale shape per round: centroids are a broadcast (k × dims doubles);
-    * assignment is one corpus scan + a groupBy(vec) partial agg; centroid
-    * recompute is one partial-aggregating shuffle on (cid, dim). Rounds
-    * are O(log-ish) few and each is linear — the standard distributed
-    * Lloyd schedule. */
-  private def toEmbD(e: DataFrame): DataFrame = e.select(col("vec_id"),
-    expr("transform(embedding, x -> cast(x as double))").as("emb_d"))
+  /** Vectors added per maximin seeding round, in both engines. */
+  private final val seedBatch = 8
 
   /** Seeding knob. `"id"` — the embeddings of the k smallest vec_ids
     * (cid = rank): one limit, zero extra passes. `"maximin"` — the
     * deterministic batch farthest-point schedule: start from the
-    * smallest-id vector, then each round add the `batch` vectors with the
-    * LARGEST min-L2² to the chosen set (ties by vec_id). This is the
-    * k-means‖ oversampling idea (Bahmani et al., VLDB 2012 — also what
+    * smallest-id vector, then each round add the [[seedBatch]] vectors
+    * with the LARGEST min-L2² to the chosen set (ties by vec_id). This is
+    * the k-means‖ oversampling idea (Bahmani et al., VLDB 2012 — also what
     * Spark MLlib initializes with) with the probability-proportional
     * sample replaced by a deterministic top-m, so the DuckDB oracle
-    * replays training bit-for-bit: ⌈(k-1)/batch⌉ corpus passes instead of
-    * sequential kmeans++'s k, and each chosen set is a tiny (≤k row)
-    * eagerly-materialized frame so the loop's lineage stays bounded. */
-  private def seedCentroids(embD: DataFrame, k: Int, seeding: String,
-      batch: Int = 8): DataFrame = {
+    * replays training bit-for-bit: ⌈(k-1)/seedBatch⌉ corpus passes
+    * instead of sequential kmeans++'s k, and each chosen set is a tiny
+    * (≤k row) eagerly-materialized frame so the loop's lineage stays
+    * bounded. */
+  private def seedCentroids(embD: DataFrame, k: Int, seeding: String): DataFrame = {
     val seedW = Window.orderBy("vec_id") // ≤k rows post-limit: single tiny partition
     val chosen = seeding match {
       case "id" => embD.orderBy("vec_id").limit(k)
@@ -1064,7 +1061,7 @@ object Similarity {
         var picked = embD.orderBy("vec_id").limit(1).localCheckpoint()
         var n = 1
         while (n < k) {
-          val m = math.min(batch, k - n)
+          val m = math.min(seedBatch, k - n)
           // min-L2² to the chosen set as a per-row fold over the ≤k-row
           // broadcast array — min is order-free, so this is value-identical
           // to the former join + groupBy(vec_id) while shuffling NOTHING
@@ -1086,26 +1083,6 @@ object Similarity {
     chosen.select(row_number().over(seedW).as("cid"), col("emb_d").as("cv"))
   }
 
-  /** Centroid set folded to ONE broadcast row — array of (cid, cv) sorted
-    * by cid. All per-vector centroid math (argmin assignment, min dist,
-    * full rank order) then runs as a per-row fold/sort over this bounded
-    * array: ZERO corpus-wide shuffle, where the join + groupBy(vec_id) /
-    * per-vector window alternatives re-exchange the whole corpus on every
-    * use — at 100 TB the difference between one map pass and a corpus
-    * shuffle per Lloyd round. */
-  private def centsArr(cent: DataFrame): DataFrame =
-    cent.agg(expr("array_sort(collect_list(struct(cid, cv)))").as("cents"))
-
-  /** argmin over the cents array by (dist, cid): strict `<` on a
-    * cid-ascending fold keeps the lower cid on distance ties — exactly
-    * `min(struct(dist, cid))`, the old shuffle-side tie rule. */
-  private val argminCid =
-    """aggregate(cents,
-      |  named_struct('d', cast('Infinity' as double), 'cid', -1),
-      |  (acc, x) -> IF(graft_l2sq(emb_d, x.cv) < acc.d,
-      |    named_struct('d', graft_l2sq(emb_d, x.cv), 'cid', x.cid),
-      |    acc)).cid""".stripMargin
-
   /** Centroid sets per Lloyd round: element 0 = the seeds, element r = the
     * decimal-exact means after round r — exposed so the convergence audit
     * can difference consecutive rounds. */
@@ -1120,7 +1097,7 @@ object Similarity {
       // former join + groupBy(vec_id) + join-back shuffled the corpus
       // twice per round for the same values
       val assign = embD.crossJoin(broadcast(centsArr(cent)))
-        .select(col("vec_id"), col("emb_d"), expr(argminCid).as("cid"))
+        .select(col("vec_id"), col("emb_d"), expr(s"$argmin.cid").as("cid"))
       // vector-level mergeable sum: ONE exchange of k buffers per round
       // (vs posexplode's k×|dims| rows through two exchanges), per-dim
       // values bit-identical (exact decimal sums, same double division)
@@ -1135,22 +1112,28 @@ object Similarity {
     out.toSeq
   }
 
+  /** K-means-trained centroid ranks with cell count and Lloyd rounds as
+    * REAL knobs — the 100 TB shape the fixed label quantizer only sketched
+    * (cells in the hundreds-to-thousands, trained, nprobe a parameter).
+    *
+    * Deterministic everywhere so the DuckDB oracle reproduces training
+    * bit-for-bit: seeds are the embeddings of the k smallest vec_ids
+    * (cid = rank); each Lloyd round assigns every vector to its nearest
+    * centroid (L2² folded in array order, ties by cid — argmin as an
+    * order-independent `min(struct(dist, cid))`, partial-aggregating
+    * map-side) and recomputes centroids as decimal-exact per-dim means.
+    * A cluster that loses all members simply drops out, identically in
+    * both engines.
+    *
+    * Scale shape per round: centroids are a broadcast (k × dims doubles);
+    * assignment is one corpus scan + a groupBy(vec) partial agg; centroid
+    * recompute is one partial-aggregating shuffle on (cid, dim). Rounds
+    * are O(log-ish) few and each is linear — the standard distributed
+    * Lloyd schedule. */
   private def kmeansRanks(e: DataFrame, k: Int, rounds: Int,
       seeding: String = "id"): DataFrame = {
     val embD = toEmbD(e)
-    val cent = kmeansRounds(embD, k, rounds, seeding).last
-    // rank = position in the per-row (dist, cid)-sorted centroid array —
-    // the same total order the old per-vector row_number window produced,
-    // without shuffling |vectors|×k rows to sort them
-    embD.crossJoin(broadcast(centsArr(cent)))
-      .select(col("vec_id"),
-        posexplode(expr(
-          """array_sort(transform(cents,
-            |  x -> named_struct('dist', graft_l2sq(emb_d, x.cv),
-            |                    'cid', x.cid)))""".stripMargin))
-          .as(Seq("pos", "dc")))
-      .select(col("vec_id"), col("dc.cid").as("cid"),
-        col("dc.dist").as("dist"), (col("pos") + 1).cast("int").as("rn"))
+    cellRanks(embD, centsArr(kmeansRounds(embD, k, rounds, seeding).last))
   }
 
   private def kmeansDistSql(e: String, c: String) =
@@ -1158,11 +1141,11 @@ object Similarity {
 
   /** Oracle twin of [[seedCentroids]]. `"id"` is one LIMIT; `"maximin"`
     * unrolls the batch farthest-point rounds as CTE hops (p0 → pN), each
-    * adding the `batch` vectors with the largest min-L2² to the chosen
+    * adding the [[seedBatch]] vectors with the largest min-L2² to the chosen
     * set, ties by vec_id — the same deterministic schedule the Spark loop
     * runs. Emits a CTE named `seeds$sfx`. */
-  private def kmeansSeedsSql(k: Int, seeding: String, sfx: String,
-      batch: Int = 8): String = seeding match {
+  private def kmeansSeedsSql(k: Int, seeding: String,
+      sfx: String): String = seeding match {
     case "id" =>
       s"""seeds$sfx AS MATERIALIZED (
          |          SELECT row_number() OVER (ORDER BY vec_id) AS cid, emb AS cv
@@ -1176,7 +1159,7 @@ object Similarity {
       var n = 1
       var i = 0
       while (n < k) {
-        val m = math.min(batch, k - n)
+        val m = math.min(seedBatch, k - n)
         i += 1
         sb ++= s""",
           |m$sfx$i AS MATERIALIZED (
@@ -1254,28 +1237,11 @@ object Similarity {
   private def kmeansSearch(s: SparkSession, d: String,
       k: Int, rounds: Int, nprobe: Int, seeding: String = "id"): DataFrame = {
     val e = emb(s, d)
-    // persisted for the same reason as ann_ivf_multiprobe: assign and
-    // qprobe both branch off training; ≤nprobe tiny rows per vector, but
-    // ∝ |vectors| — MEMORY_AND_DISK so eviction at scale spills instead of
-    // re-running the Lloyd rounds
-    val ranks = kmeansRanks(e, k, rounds, seeding).filter(col("rn") <= nprobe)
-      .select(col("vec_id"), col("cid"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val assign = ranks.filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val qprobe = ranks.filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("cid").as("qcell"), col("rn").cast("int").as("probe"))
-    val q = e.join(qprobe, Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("qcell"), col("probe"))
-    val rankW = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
-    e.join(assign, Seq("vec_id"))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("cell"))
-      .join(broadcast(q), col("qcell") === col("cell") && col("neighbor_id") =!= col("query_id"))
+    val (assign, q) = probeList(e, kmeansRanks(e, k, rounds, seeding), nprobe)
+    topk(probe(cellCands(e, assign), q, byCell = true)
       .select(col("query_id"), col("neighbor_id"), col("cell"), col("probe"),
-        cosR(col("qe"), col("ce")).as("cos_sim"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= 3)
+        cosR(col("qe"), col("ce")).as("cos_sim")),
+      col("cos_sim").desc, 3)
       .orderBy("query_id", "rank")
   }
 
@@ -1308,19 +1274,7 @@ object Similarity {
        |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
        |FROM bf3 b LEFT JOIN iv3 i
        |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-       |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin) { (s, d) =>
-    val bf3 = annTopk.fn(s, d).filter(col("rank") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
-    val iv3 = annIvfKmeans.fn(s, d)
-      .select(col("query_id").as("iv_query"), col("neighbor_id").as("iv_neighbor"))
-    bf3.join(iv3,
-        col("query_id") === col("iv_query") && col("neighbor_id") === col("iv_neighbor"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(col("iv_neighbor")).as("n_hits"), count(lit(1)).as("n_exact"),
-        round(count(col("iv_neighbor")) / 3.0, 4).as("recall_at_3"))
-      .orderBy("query_id")
-  }
+       |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin)(recallAt3(annIvfKmeans))
 
   /** The k-means index with the `maximin` seeding knob engaged — seeds are
     * spread by deterministic batch farthest-point (k-means‖-style, see
@@ -1358,19 +1312,7 @@ object Similarity {
        |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
        |FROM bf3 b LEFT JOIN iv3 i
        |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-       |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin) { (s, d) =>
-    val bf3 = annTopk.fn(s, d).filter(col("rank") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
-    val iv3 = annIvfKmeanspp.fn(s, d)
-      .select(col("query_id").as("iv_query"), col("neighbor_id").as("iv_neighbor"))
-    bf3.join(iv3,
-        col("query_id") === col("iv_query") && col("neighbor_id") === col("iv_neighbor"),
-        "left")
-      .groupBy("query_id")
-      .agg(count(col("iv_neighbor")).as("n_hits"), count(lit(1)).as("n_exact"),
-        round(count(col("iv_neighbor")) / 3.0, 4).as("recall_at_3"))
-      .orderBy("query_id")
-  }
+       |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin)(recallAt3(annIvfKmeanspp))
 
   /** Per-round convergence audit of the k-means trainer, both seedings
     * side by side: after each Lloyd round, how many cells survive, how far
@@ -1553,7 +1495,7 @@ object Similarity {
     // per-vector cell + centroid cosine off the broadcast argmin fold —
     // the corpus is never exchanged for assignment
     val cc = embD.crossJoin(broadcast(centsArr(cent)))
-      .select(col("vec_id"), col("emb_d"), expr(argminCid).as("cell"))
+      .select(col("vec_id"), col("emb_d"), expr(s"$argmin.cid").as("cell"))
       .join(broadcast(cent.select(col("cid").as("cell"), col("cv"))), Seq("cell"))
       .select(col("vec_id"), col("cell"), col("emb_d"),
         cosR(col("emb_d"), col("cv")).as("ccos"))
@@ -1650,7 +1592,7 @@ object Similarity {
     val embD = toEmbD(emb(s, d))
     val cent = kmeansRounds(embD, 64, 2, "id").last
     val cc = embD.crossJoin(broadcast(centsArr(cent)))
-      .select(col("vec_id"), col("emb_d"), expr(argminCid).as("cell"))
+      .select(col("vec_id"), col("emb_d"), expr(s"$argmin.cid").as("cell"))
       .join(broadcast(cent.select(col("cid").as("cell"), col("cv"))), Seq("cell"))
       .select(col("vec_id"), col("cell"), col("emb_d"),
         cosR(col("emb_d"), col("cv")).as("ccos"))
@@ -2507,7 +2449,7 @@ object Similarity {
        |FROM r CROSS JOIN q GROUP BY cell ORDER BY cell""".stripMargin) { (s, d) =>
     val e = emb(s, d)
     val assign = centroidRanks(e).filter(col("rn") === 1)
-      .select(col("vec_id"), col("clabel").as("cell"))
+      .select(col("vec_id"), col("cid").as("cell"))
     val t = assign.agg(count(lit(1)).cast("long").as("n"),
       countDistinct(col("cell")).cast("long").as("k"))
       .select(expr("(n + k - 1) div k").cast("long").as("quota"))
@@ -2756,27 +2698,18 @@ object Similarity {
       |      FROM s)
       |SELECT query_id, neighbor_id, label, n_candidates, cos_sim, rank
       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    val cell =
-      (when(element_at(col("embedding"), 1) > 0f, 8).otherwise(0)
-        + when(element_at(col("embedding"), 2) > 0f, 4).otherwise(0)
-        + when(element_at(col("embedding"), 3) > 0f, 2).otherwise(0)
-        + when(element_at(col("embedding"), 4) > 0f, 1).otherwise(0)).cast("int")
     val e = emb(s, d)
-      .select(col("vec_id"), col("label"), col("embedding"), cell.as("cell"))
+      .select(col("vec_id"), col("label"), col("embedding"), signCell.as("cell"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("cell").as("qcell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    e.filter(col("label") % 2 === 1)
-      .join(broadcast(q),
-        col("qcell") === col("cell") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("label"),
+    val cands = e.filter(col("label") % 2 === 1).withColumnRenamed("vec_id", "neighbor_id")
+    topk(probe(cands, q, byCell = true)
+      .select(col("query_id"), col("neighbor_id"), col("label"),
         cosR(col("qe"), col("embedding")).as("cos_sim"))
       .withColumn("n_candidates",
-        count(lit(1)).over(Window.partitionBy("query_id")).cast("long"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+        count(lit(1)).over(Window.partitionBy("query_id")).cast("long")),
+      col("cos_sim").desc, 3)
       .orderBy("query_id", "rank")
   }
 
@@ -2884,7 +2817,7 @@ object Similarity {
       |  t.n_cells, round(1.0 * t.mx * t.n_cells / t.tot, 4) AS imbalance
       |FROM a CROSS JOIN t ORDER BY a.cell""".stripMargin) { (s, d) =>
     val a = centroidRanks(emb(s, d)).filter(col("rn") === 1)
-      .groupBy(col("clabel").as("cell"))
+      .groupBy(col("cid").as("cell"))
       .agg(count(lit(1)).cast("long").as("n_vecs"))
     val t = a.agg(sum("n_vecs").cast("long").as("tot"),
       count(lit(1)).cast("long").as("n_cells"),
@@ -2939,10 +2872,10 @@ object Similarity {
     val ranks = centroidRanks(emb(s, d))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = ranks.filter(col("rn") === 1)
-      .groupBy(col("clabel").as("cell"))
+      .groupBy(col("cid").as("cell"))
       .agg(count(lit(1)).cast("long").as("n_vecs"))
     val qt = ranks.filter(col("rn") <= 2 && col("vec_id") % 17 === 0)
-      .groupBy(col("clabel").as("cell"))
+      .groupBy(col("cid").as("cell"))
       .agg(count(lit(1)).cast("long").as("n_queries"))
     val sp = labelCentroids(emb(s, d)).select(col("clabel").as("cell"))
     val t = a.agg(sum("n_vecs").cast("long").as("tot"))
@@ -3128,7 +3061,7 @@ object Similarity {
       |FROM sh CROSS JOIN t GROUP BY shard, t.tot
       |ORDER BY shard""".stripMargin) { (s, d) =>
     val a = centroidRanks(emb(s, d)).filter(col("rn") === 1)
-      .groupBy(col("clabel").as("cell"))
+      .groupBy(col("cid").as("cell"))
       .agg(count(lit(1)).cast("long").as("n_vecs"))
     val r = a.withColumn("rk",
       row_number().over(Window.orderBy(col("n_vecs").desc, col("cell"))) - 1)
@@ -3458,81 +3391,72 @@ object Similarity {
     * distances — order-free. The oracle replays level-2 training
     * bit-for-bit through the shared kmeansTrainSql CTEs with `e` bound
     * to the residual table. */
-  val embRvq: Q = {
-    val argminStruct =
-      """aggregate(cents,
-        |  named_struct('d', cast('Infinity' as double), 'cid', -1),
-        |  (acc, x) -> IF(graft_l2sq(emb_d, x.cv) < acc.d,
-        |    named_struct('d', graft_l2sq(emb_d, x.cv), 'cid', x.cid),
-        |    acc))""".stripMargin
-    Q.sql(
-      "emb_rvq",
-      s"""WITH e0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-        |            FROM embeddings),
-        |u0 AS (SELECT label, unnest(emb) AS v, generate_subscripts(emb, 1) AS dim
-        |       FROM e0),
-        |cd0 AS (SELECT label, dim,
-        |          CAST(sum(CAST(v AS DECIMAL(28,9))) AS DOUBLE) / count(*) AS c
-        |        FROM u0 GROUP BY label, dim),
-        |cent1 AS (SELECT label AS clabel, list(c ORDER BY dim) AS cv
-        |          FROM cd0 GROUP BY label),
-        |a1r AS (SELECT vec_id, clabel AS code1, dist FROM (
-        |          SELECT e0.vec_id, cent1.clabel,
-        |            ${kmeansDistSql("e0.emb", "cent1.cv")} AS dist,
-        |            row_number() OVER (PARTITION BY e0.vec_id
-        |              ORDER BY ${kmeansDistSql("e0.emb", "cent1.cv")}, cent1.clabel) AS rn
-        |          FROM e0, cent1) WHERE rn = 1),
-        |e AS MATERIALIZED (SELECT e0.vec_id,
-        |       list_transform(range(1, len(e0.emb) + 1),
-        |         i -> round(e0.emb[i] - cent1.cv[i], 6)) AS emb
-        |     FROM e0 JOIN a1r ON e0.vec_id = a1r.vec_id
-        |       JOIN cent1 ON cent1.clabel = a1r.code1),
-        |${kmeansTrainSql(8, "id")},
-        |a2r AS (SELECT vec_id, dist FROM (
-        |          SELECT e.vec_id, ${kmeansDistSql("e.emb", "c2.cv")} AS dist,
-        |            row_number() OVER (PARTITION BY e.vec_id
-        |              ORDER BY ${kmeansDistSql("e.emb", "c2.cv")}, c2.cid) AS rn
-        |          FROM e, c2) WHERE rn = 1)
-        |SELECT CAST(a1r.code1 AS BIGINT) AS code1, CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(round(CAST(sum(CAST(round(a1r.dist, 6) AS DECIMAL(18,6))) AS DOUBLE), 4)
-        |    AS DOUBLE) AS sse1,
-        |  CAST(round(CAST(sum(CAST(round(a2r.dist, 6) AS DECIMAL(18,6))) AS DOUBLE), 4)
-        |    AS DOUBLE) AS sse2,
-        |  round(1e0 - CAST(sum(CAST(round(a2r.dist, 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |    / CAST(sum(CAST(round(a1r.dist, 6) AS DECIMAL(18,6))) AS DOUBLE), 4)
-        |    AS reduction
-        |FROM a1r JOIN a2r ON a1r.vec_id = a2r.vec_id
-        |GROUP BY a1r.code1 ORDER BY a1r.code1""".stripMargin) { (s, d) =>
-      val e0 = emb(s, d)
-      val c1 = labelCentroids(e0)
-        .select(col("clabel").cast("int").as("cid"), col("cv"))
-      val ca1 = c1.agg(expr("array_sort(collect_list(struct(cid, cv)))").as("cents"))
-      val a1 = toEmbD(e0).crossJoin(broadcast(ca1))
-        .withColumn("mc", expr(argminStruct))
-        .select(col("vec_id"), col("emb_d"),
-          col("mc.cid").as("code1"), col("mc.d").as("dist1"))
-        .join(broadcast(c1.select(col("cid").as("code1"), col("cv"))), Seq("code1"))
-        .select(col("vec_id"), col("code1"), col("dist1"),
-          expr("zip_with(emb_d, cv, (a, b) -> round(a - b, 6))").as("r"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val resid = a1.select(col("vec_id"), col("r").as("emb_d"))
-      val c2 = kmeansRounds(resid, 8, 2, "id").last
-      val a2 = resid.crossJoin(broadcast(centsArr(c2)))
-        .withColumn("mc", expr(argminStruct))
-        .select(col("vec_id"), col("mc.d").as("dist2"))
-      a1.select(col("vec_id"), col("code1"), col("dist1"))
-        .join(a2, Seq("vec_id"))
-        .groupBy("code1")
-        .agg(count(lit(1)).cast("long").as("n_vecs"),
-          sum(round(col("dist1"), 6).cast("decimal(18,6)")).as("s1"),
-          sum(round(col("dist2"), 6).cast("decimal(18,6)")).as("s2"))
-        .select(col("code1").cast("long").as("code1"), col("n_vecs"),
-          round(col("s1").cast("double"), 4).as("sse1"),
-          round(col("s2").cast("double"), 4).as("sse2"),
-          round(lit(1e0) - col("s2").cast("double") / col("s1").cast("double"), 4)
-            .as("reduction"))
-        .orderBy("code1")
-    }
+  val embRvq: Q = Q.sql(
+    "emb_rvq",
+    s"""WITH e0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
+      |            FROM embeddings),
+      |u0 AS (SELECT label, unnest(emb) AS v, generate_subscripts(emb, 1) AS dim
+      |       FROM e0),
+      |cd0 AS (SELECT label, dim,
+      |          CAST(sum(CAST(v AS DECIMAL(28,9))) AS DOUBLE) / count(*) AS c
+      |        FROM u0 GROUP BY label, dim),
+      |cent1 AS (SELECT label AS clabel, list(c ORDER BY dim) AS cv
+      |          FROM cd0 GROUP BY label),
+      |a1r AS (SELECT vec_id, clabel AS code1, dist FROM (
+      |          SELECT e0.vec_id, cent1.clabel,
+      |            ${kmeansDistSql("e0.emb", "cent1.cv")} AS dist,
+      |            row_number() OVER (PARTITION BY e0.vec_id
+      |              ORDER BY ${kmeansDistSql("e0.emb", "cent1.cv")}, cent1.clabel) AS rn
+      |          FROM e0, cent1) WHERE rn = 1),
+      |e AS MATERIALIZED (SELECT e0.vec_id,
+      |       list_transform(range(1, len(e0.emb) + 1),
+      |         i -> round(e0.emb[i] - cent1.cv[i], 6)) AS emb
+      |     FROM e0 JOIN a1r ON e0.vec_id = a1r.vec_id
+      |       JOIN cent1 ON cent1.clabel = a1r.code1),
+      |${kmeansTrainSql(8, "id")},
+      |a2r AS (SELECT vec_id, dist FROM (
+      |          SELECT e.vec_id, ${kmeansDistSql("e.emb", "c2.cv")} AS dist,
+      |            row_number() OVER (PARTITION BY e.vec_id
+      |              ORDER BY ${kmeansDistSql("e.emb", "c2.cv")}, c2.cid) AS rn
+      |          FROM e, c2) WHERE rn = 1)
+      |SELECT CAST(a1r.code1 AS BIGINT) AS code1, CAST(count(*) AS BIGINT) AS n_vecs,
+      |  CAST(round(CAST(sum(CAST(round(a1r.dist, 6) AS DECIMAL(18,6))) AS DOUBLE), 4)
+      |    AS DOUBLE) AS sse1,
+      |  CAST(round(CAST(sum(CAST(round(a2r.dist, 6) AS DECIMAL(18,6))) AS DOUBLE), 4)
+      |    AS DOUBLE) AS sse2,
+      |  round(1e0 - CAST(sum(CAST(round(a2r.dist, 6) AS DECIMAL(18,6))) AS DOUBLE)
+      |    / CAST(sum(CAST(round(a1r.dist, 6) AS DECIMAL(18,6))) AS DOUBLE), 4)
+      |    AS reduction
+      |FROM a1r JOIN a2r ON a1r.vec_id = a2r.vec_id
+      |GROUP BY a1r.code1 ORDER BY a1r.code1""".stripMargin) { (s, d) =>
+    val e0 = emb(s, d)
+    val c1 = labelCentroids(e0)
+      .select(col("clabel").cast("int").as("cid"), col("cv"))
+    val a1 = toEmbD(e0).crossJoin(broadcast(centsArr(c1)))
+      .withColumn("mc", expr(argmin))
+      .select(col("vec_id"), col("emb_d"),
+        col("mc.cid").as("code1"), col("mc.d").as("dist1"))
+      .join(broadcast(c1.select(col("cid").as("code1"), col("cv"))), Seq("code1"))
+      .select(col("vec_id"), col("code1"), col("dist1"),
+        expr("zip_with(emb_d, cv, (a, b) -> round(a - b, 6))").as("r"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val resid = a1.select(col("vec_id"), col("r").as("emb_d"))
+    val c2 = kmeansRounds(resid, 8, 2, "id").last
+    val a2 = resid.crossJoin(broadcast(centsArr(c2)))
+      .withColumn("mc", expr(argmin))
+      .select(col("vec_id"), col("mc.d").as("dist2"))
+    a1.select(col("vec_id"), col("code1"), col("dist1"))
+      .join(a2, Seq("vec_id"))
+      .groupBy("code1")
+      .agg(count(lit(1)).cast("long").as("n_vecs"),
+        sum(round(col("dist1"), 6).cast("decimal(18,6)")).as("s1"),
+        sum(round(col("dist2"), 6).cast("decimal(18,6)")).as("s2"))
+      .select(col("code1").cast("long").as("code1"), col("n_vecs"),
+        round(col("s1").cast("double"), 4).as("sse1"),
+        round(col("s2").cast("double"), 4).as("sse2"),
+        round(lit(1e0) - col("s2").cast("double") / col("s1").cast("double"), 4)
+          .as("reduction"))
+      .orderBy("code1")
   }
 
   val all: Seq[Q] = Seq(

@@ -748,6 +748,19 @@ class PlanShapeSpec extends AnyFunSuite {
       s"balance audit shuffled the corpus into a join:\n$s")
   }
 
+  test("ann serve ops: query side broadcasts, no cartesian; IVF rank table persisted once") {
+    for (q <- Seq("ann_topk", "ann_ivf_kmeans", "ann_ivf_multiprobe", "ann_ivf_pq")) {
+      val s = finalPlan(SparkEntry.queries(q)(spark, sfDir)).toString
+      assert(!s.contains("SortMergeJoin") && !s.contains("ShuffledHashJoin"),
+        s"$q: the query side fell out of broadcast:\n$s")
+      assert(!s.contains("CartesianProduct"), s"$q: cartesian in the serve path:\n$s")
+      // assignment and probe list both read the one persisted rank table
+      if (q != "ann_topk")
+        assert(s.contains("InMemoryTableScan"), s"$q: centroid ranks not persisted:\n$s")
+      spark.catalog.clearCache()
+    }
+  }
+
   test("event_concurrency: running sums ride day-partitioned windows — the only " +
     "single-partition work is the bounded day ledger") {
     val p = finalPlan(SparkEntry.queries("event_concurrency")(spark, sfDir))

@@ -78,6 +78,27 @@ class VectorSpec extends AnyFunSuite {
       assert(kmeans(q) >= r, s"query $q: kmeans ${kmeans(q)} < sign-bit $r")
     }
     assert(kmeans.values.sum > signBit.values.sum)
+    // each audit's n_hits is the overlap of the brute-force top-3 with
+    // its index's own top-3, recounted here from the collected rows
+    def top3(q: graft.Q): Map[Long, Set[Long]] =
+      q.fn(spark, TestSession.sfDir).filter(col("rank") <= 3)
+        .select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
+        .as[(Long, Long)].collect().groupBy(_._1)
+        .map { case (qid, ns) => qid -> ns.map(_._2).toSet }
+    import graft.vector.Similarity._
+    val exact = top3(annTopk)
+    for ((audit, index) <- Seq(annRecall -> annIvf, annRecallKmeans -> annIvfKmeans,
+        annRecallKmeanspp -> annIvfKmeanspp)) {
+      val hits = audit.fn(spark, TestSession.sfDir)
+        .select(col("query_id").cast("long"), col("n_hits").cast("long"))
+        .as[(Long, Long)].collect().toMap
+      val served = top3(index)
+      assert(hits.keySet === exact.keySet, audit.name)
+      exact.foreach { case (q, truth) =>
+        val overlap = (truth intersect served.getOrElse(q, Set.empty)).size
+        assert(hits(q) === overlap.toLong, s"${audit.name} query $q")
+      }
+    }
   }
 
   test("seeding knob: id recall holds ≥ 0.73 and maximin wins the k-means objective (sf0.01)") {
