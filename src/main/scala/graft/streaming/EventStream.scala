@@ -426,8 +426,8 @@ object EventStream {
     // TextOps.incrementalVerdicts) — bounded by distinct texts, not
     // corpus rows, and probed per micro-batch without ever shuffling
     val exGroups = graft.text.TextOps.sigGroups(
-        graft.text.TextOps.minhashSigVecsOf(
-          graft.Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0)))
+        graft.text.TextOps.signaturesOf(graft.Tables.documents(s, d)
+          .filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val docSchema = graft.Tables.documents(s, d).schema
     drained(s) {
@@ -439,7 +439,7 @@ object EventStream {
         .option("checkpointLocation", s"$tmp/ckpt")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           graft.text.TextOps.incrementalVerdicts(exGroups,
-              graft.text.TextOps.minhashSigVecsOf(batch.toDF()))
+              graft.text.TextOps.signaturesOf(batch.toDF()))
             .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$tmp/sink")
         }
         .trigger(availableNow)

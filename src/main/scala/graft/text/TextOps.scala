@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -219,8 +219,6 @@ object TextOps {
        |      FROM p JOIN szs sa ON p.doc_a = sa.doc_id
        |             JOIN szs sb ON p.doc_b = sb.doc_id)""".stripMargin
 
-  /** All same-block candidate pairs with exact (df-capped) jaccard —
-    * (doc_a, doc_b, jacc), doc_a < doc_b, unthresholded. */
   /** Star edges over a (doc_id, fp) fingerprint relation: every doc links
     * to its group's min doc id — k-1 edges per k-member duplicate group
     * (an fp self-join emits k²/2; at 100 TB a boilerplate page duplicated
@@ -268,6 +266,8 @@ object TextOps {
       .join(szs.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
   }
 
+  /** All same-block candidate pairs with exact (df-capped) jaccard —
+    * (doc_a, doc_b, jacc), doc_a < doc_b, unthresholded. */
   private def jaccardPairs(s: SparkSession, d: String): DataFrame =
     cappedPairStats(s, d)
       .select(col("doc_a"), col("doc_b"),
@@ -626,16 +626,6 @@ object TextOps {
     }
   }
 
-  /** The "what will dedup delete" histogram: near-dup cluster sizes over
-    * the SAME transitive closure dedup_components/dedup_keep_best key
-    * their decisions on — per cluster size: clusters, docs, docs the
-    * keep-one rule drops, and the smallest root as a drill-down example.
-    * This is the report reviewed before a destructive dedup run (a fat
-    * tail of giant clusters = boilerplate flood; all-size-2 = true pairs).
-    *
-    * Shape: the label engine's output collapses to (component, sz) —
-    * |components| rows — then to ≤ |distinct sizes| rows; both groupBys
-    * partial-aggregate, nothing rejoins the corpus. */
   /** Token-inflation bill of near-duplication, per source: the share of
     * a source's token mass sitting in NON-ROOT members of dedup
     * components — tokens a training run pays for again without new
@@ -696,6 +686,16 @@ object TextOps {
     }
   }
 
+  /** The "what will dedup delete" histogram: near-dup cluster sizes over
+    * the SAME transitive closure dedup_components/dedup_keep_best key
+    * their decisions on — per cluster size: clusters, docs, docs the
+    * keep-one rule drops, and the smallest root as a drill-down example.
+    * This is the report reviewed before a destructive dedup run (a fat
+    * tail of giant clusters = boilerplate flood; all-size-2 = true pairs).
+    *
+    * Shape: the label engine's output collapses to (component, sz) —
+    * |components| rows — then to ≤ |distinct sizes| rows; both groupBys
+    * partial-aggregate, nothing rejoins the corpus. */
   val dedupClusterStats: Q = {
     val tail =
       """cs AS (SELECT component, count(*) AS sz FROM comp GROUP BY 1)
@@ -905,83 +905,75 @@ object TextOps {
   private[graft] def sparkWordHash(w: String): String =
     s"cast(conv(substring(md5($w), 1, 8), 16, 10) as bigint)"
 
-  /** MinHash/LSH over 3-gram shingles: 4 hashes = 4 single-row bands, plus
-    * per-doc count of other docs sharing at least one band — the LSH
-    * candidate set size.
-    *
-    * Shingles, not unigrams: with a small vocabulary every document
-    * contains nearly every word, so a unigram MinHash collides for every
-    * pair and the band join degenerates to all-pairs. The ~|vocab|³
-    * shingle space keeps band collisions ≈ true Jaccard similarity, which
-    * is what bounds the candidate join at scale. */
-  /** Shingle MinHash signatures (doc_id, s3, sig1..sig4) — shared by the
-    * banding dedup and the estimator-quality readout. Cached: the subtree
-    * feeds both band-join branches and the final projection — without it
-    * the md5 signature pass runs three times (at cluster scale:
-    * persist(DISK_ONLY) or a checkpoint instead; session-scoped here,
-    * Verify/Bench clearCache() between queries). */
-  /** `withShingles` controls what the cache holds: the banding op needs
-    * only (doc_id, 4 longs); caching the shingle arrays too would store
-    * ~3× the corpus text for nothing. The estimator audit opts in and
-    * gets the deduplicated sets (what it actually intersects). */
-  private def minhashSigs(s: SparkSession, d: String,
+  /** sig1..sigk: one signature column per hash of the family = per band. */
+  private val sigNames: Seq[String] = minhashParams.indices.map(i => s"sig${i + 1}")
+  private val sigCols: Seq[Column] = sigNames.map(col)
+
+  /** Shingle MinHash signatures of a frame with a `text` column and an
+    * id (`doc_id`, a group id or a content key): `text` becomes
+    * sig1..sigk (NULL for docs under 3 words), preceded by the distinct
+    * shingle set `s3d` when `withShingles`; every other column is
+    * carried through. The one signature pass of the MinHash
+    * family — batch ops, the incremental probe and its streaming ingest
+    * twin (EventStream.streamDedupIncremental) all call it, so no two
+    * paths can drift. */
+  private[graft] def signaturesOf(df: DataFrame,
       withShingles: Boolean = false): DataFrame = {
-    val sigCols = minhashParams.indices.map(i =>
-      element_at(col("__sigs"), i + 1).as(s"sig${i + 1}"))
-    val base = docs(s, d)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), expr(shingleExpr("ws")).as("s3"))
+    val keep = df.columns.toSeq.filter(_ != "text").map(col)
+    val sigs = df.select(keep :+ split(col("text"), " ").as("ws"): _*)
+      .select(keep :+ expr(shingleExpr("ws")).as("s3"): _*)
       .withColumn("__sigs", expr("graft_minhash_sig(s3)"))
-    val cols =
-      if (withShingles)
-        col("doc_id") +: array_distinct(col("s3")).as("s3d") +: sigCols
-      else col("doc_id") +: sigCols
-    // MEMORY_AND_DISK, not cache(): the signature table is ~9 longs +
-    // optional shingle array per doc — small relative to the corpus but
-    // still ∝ |docs|, so at 100 TB a memory-only cache would silently
-    // recompute evicted partitions (shingling + minhash, the expensive
-    // part) every time a consumer misses; spilling to local disk keeps the
-    // recompute bound at one
-    base.select(cols: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val s3d = if (withShingles) Seq(array_distinct(col("s3")).as("s3d")) else Nil
+    sigs.select(keep ++ s3d ++ sigNames.zipWithIndex.map { case (n, i) =>
+      element_at(col("__sigs"), i + 1).as(n) }: _*)
   }
 
-  /** (doc_id, band, v) minhash band rows of an arbitrary (doc_id, text)
-    * frame — the probe-index unit shared by dedup_incremental (batch
-    * split) and its streaming ingest twin
-    * (EventStream.streamDedupIncremental, which probes per micro-batch).
-    * One shared definition: the two admit/reject paths cannot drift. */
-  private[graft] def minhashBandsOf(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), expr(shingleExpr("ws")).as("s3"))
-      .withColumn("__sigs", expr("graft_minhash_sig(s3)"))
-      .select(col("doc_id"),
-        posexplode(array(minhashParams.indices
-          .map(i => element_at(col("__sigs"), i + 1)): _*)).as(Seq("band", "v")))
+  /** Shingle MinHash signatures (doc_id, [s3d,] sig1..sigk) of the
+    * corpus — shared by the banding dedup, the incremental probe and the
+    * estimator-quality readouts. Persisted: the subtree feeds both
+    * band-join branches and the final projection — without it the md5
+    * signature pass runs three times. MEMORY_AND_DISK, not cache(): the
+    * table is ∝ |docs|, so at 100 TB a memory-only cache would silently
+    * recompute evicted partitions (shingling + minhash, the expensive
+    * part) every time a consumer misses; spilling to local disk keeps the
+    * recompute bound at one (at cluster scale: DISK_ONLY or a
+    * checkpoint). `withShingles` controls what the cache holds: the
+    * banding op needs only (doc_id, k longs); caching the shingle arrays
+    * too would store ~3× the corpus text for nothing. The estimator
+    * audit opts in and gets the deduplicated sets (what it actually
+    * intersects). */
+  private def minhashSigs(s: SparkSession, d: String,
+      withShingles: Boolean = false): DataFrame =
+    signaturesOf(docs(s, d).select("doc_id", "text"), withShingles)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** Signature vectors (doc_id, sig1..sig4) of an arbitrary
-    * (doc_id, text) frame — the unexploded sibling of
-    * [[minhashBandsOf]], shared by the two incremental admit/reject
-    * paths. */
-  private[graft] def minhashSigVecsOf(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), expr(shingleExpr("ws")).as("s3"))
-      .withColumn("__sigs", expr("graft_minhash_sig(s3)"))
-      .select(col("doc_id") +: minhashParams.indices.map(i =>
-        element_at(col("__sigs"), i + 1).as(s"sig${i + 1}")): _*)
+  /** (keep…, band, v) band rows of a signature frame: one row per
+    * signature component. Bands are 0-based positions here and 1-based
+    * in the oracles — they are only ever join keys, and both sides of
+    * every band join come from this one explode. */
+  private def bandsOf(sigs: DataFrame, keep: Column*): DataFrame =
+    sigs.select(keep :+ posexplode(array(sigCols: _*)).as(Seq("band", "v")): _*)
 
-  /** Existing-corpus signature groups (sig1..sig4, ex_mult, ex_min): the
-    * collapsed band index the incremental verdict probe joins against.
-    * Docs with the same 4-band signature are indistinguishable to the
-    * probe, so the index holds one row per DISTINCT signature with its
-    * multiplicity and min doc id — index size is bounded by distinct
-    * texts, not corpus rows (on a replicated crawl that is the difference
-    * between linear and quadratic probe-join volume). */
-  private[graft] def sigGroups(sigs: DataFrame): DataFrame = {
-    val sigCols = minhashParams.indices.map(i => col(s"sig${i + 1}"))
+  /** The LSH candidate pairs: distinct (ga, gb) of `id` values whose band
+    * rows collide on (band, v) and satisfy `pred(ga, gb)` — the one band
+    * self-join of the family (NULL signatures never collide). */
+  private def bandPairs(bands: DataFrame, id: String,
+      pred: (Column, Column) => Column): DataFrame =
+    bands.select(col(id).as("ga"), col("band"), col("v"))
+      .join(bands.select(col(id).as("gb"), col("band"), col("v")), Seq("band", "v"))
+      .filter(pred(col("ga"), col("gb")))
+      .select("ga", "gb").distinct()
+
+  /** Signature groups (sig1..sigk, ex_mult, ex_min): one row per DISTINCT
+    * signature with its multiplicity and min doc id. Docs with the same
+    * k-band signature are indistinguishable to any band join, so the
+    * join runs over groups and index size is bounded by distinct texts,
+    * not corpus rows (on a replicated crawl that is the difference
+    * between linear and quadratic band-join volume). The all-NULL
+    * signature of docs under 3 words is one group that never collides. */
+  private[graft] def sigGroups(sigs: DataFrame): DataFrame =
     sigs.groupBy(sigCols: _*)
       .agg(count(lit(1)).as("ex_mult"), min("doc_id").as("ex_min"))
-  }
 
   /** Signature-group-collapsed incremental admit/reject verdicts —
     * value-identical to the naive per-doc band join the oracle runs:
@@ -997,14 +989,10 @@ object TextOps {
     * backfill), so the index never shuffles for the probe. */
   private[graft] def incrementalVerdicts(exGroups: DataFrame,
       incSigs: DataFrame): DataFrame = {
-    val sigNames = minhashParams.indices.map(i => s"sig${i + 1}")
-    val sigCols = sigNames.map(col)
-    val exBands = exGroups.select(col("ex_mult"), col("ex_min"),
-      posexplode(array(sigCols: _*)).as(Seq("band", "v")))
-    val bySig = Window.partitionBy(sigCols: _*)
-    val incAll = incSigs.withColumn("igid", min("doc_id").over(bySig))
-    val incBands = incAll.filter(col("doc_id") === col("igid"))
-      .select(col("igid"), posexplode(array(sigCols: _*)).as(Seq("band", "v")))
+    val exBands = bandsOf(exGroups, col("ex_mult"), col("ex_min"))
+    val incAll = incSigs.withColumn("igid",
+      min("doc_id").over(Window.partitionBy(sigCols: _*)))
+    val incBands = bandsOf(incAll.filter(col("doc_id") === col("igid")), col("igid"))
     val gm = exBands.join(broadcast(incBands), Seq("band", "v"))
       .select(col("igid"), col("ex_min"), col("ex_mult")).distinct()
       .groupBy("igid")
@@ -1025,21 +1013,42 @@ object TextOps {
     s"array_min(transform(s3, w -> ($a * ${sparkWordHash("w")} + $b) % $P))"
   }
 
-  /** Oracle twin of [[minhashSigs]]'s CTE prefix (docs → sig). */
-  private[graft] def duckSigCtes: String = {
-    val duckSigs = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform(s3, w -> ($a * ${duckWordHash("w")} + $b) % $P)) AS sig${i + 1}"
+  /** DuckDB twin of `graft_minhash_sig` over the shingle list `s3`:
+    * the sig1..sigk select items. */
+  private def duckSigExprs(s3: String): String =
+    minhashParams.zip(sigNames).map { case ((a, b), n) =>
+      s"list_min(list_transform($s3, w -> ($a * ${duckWordHash("w")} + $b) % $P)) AS $n"
     }.mkString(",\n  ")
+
+  /** DuckDB twin of [[bandsOf]]: one `UNION ALL` arm per band over the
+    * signature relation `from`, keeping the `keep` select items. */
+  private def duckBandsSql(keep: String, from: String): String =
+    sigNames.zipWithIndex
+      .map { case (n, i) => s"SELECT $keep, ${i + 1} AS band, $n AS v FROM $from" }
+      .mkString("\n  UNION ALL ")
+
+  /** DuckDB count of equal signature components between `sa` and `sb`. */
+  private val duckSigMatchSql: String = sigNames
+    .map(n => s"CASE WHEN sa.$n = sb.$n THEN 1 ELSE 0 END")
+    .mkString("\n         + ")
+
+  /** Oracle twin of [[minhashSigs]]'s CTE prefix (docs → sig). */
+  private[graft] def duckSigCtes: String =
     s"""w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
        |docs AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
        |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
-       |sig AS (SELECT doc_id, s3, $duckSigs FROM docs)""".stripMargin
-  }
+       |sig AS (SELECT doc_id, s3, ${duckSigExprs("s3")} FROM docs)""".stripMargin
 
+  /** MinHash/LSH over 3-gram shingles: 4 hashes = 4 single-row bands, plus
+    * per-doc count of other docs sharing at least one band — the LSH
+    * candidate set size.
+    *
+    * Shingles, not unigrams: with a small vocabulary every document
+    * contains nearly every word, so a unigram MinHash collides for every
+    * pair and the band join degenerates to all-pairs. The ~|vocab|³
+    * shingle space keeps band collisions ≈ true Jaccard similarity, which
+    * is what bounds the candidate join at scale. */
   val dedupMinhash: Q = {
-    val duckBands = minhashParams.indices
-      .map(i => s"SELECT doc_id, ${i + 1} AS band, sig${i + 1} AS v FROM sig")
-      .mkString("\n  UNION ALL ")
     // Collapsed scale twin: the SQL mirror of the Spark side's signature
     // collapse. The naive oracle's doc-level band self-join is
     // replication-quadratic (a twin cluster of M shares every band, M²
@@ -1050,12 +1059,6 @@ object TextOps {
     // expands as Σ mult(matching other groups) + (own mult − 1) — with
     // the all-NULL-sig class (docs under 3 words) pinned to 0, matching
     // the naive join's NULL-never-equal semantics.
-    val scaleSigs = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform(s3, w -> ($a * ${duckWordHash("w")} + $b) % $P)) AS sig${i + 1}"
-    }.mkString(",\n  ")
-    val sgBands = minhashParams.indices
-      .map(i => s"SELECT gid, ${i + 1} AS band, sig${i + 1} AS v FROM sg")
-      .mkString("\n  UNION ALL ")
     val scaleOracle =
       s"""WITH grp AS MATERIALIZED (
          |  SELECT md5(text) AS tk, min(text) AS text, CAST(count(*) AS BIGINT) AS m
@@ -1063,12 +1066,12 @@ object TextOps {
          |w AS (SELECT tk, m, str_split(text, ' ') AS ws FROM grp),
          |docs AS (SELECT tk, m, list_transform(range(1, len(ws) - 1),
          |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
-         |tsig AS MATERIALIZED (SELECT tk, m, $scaleSigs FROM docs),
+         |tsig AS MATERIALIZED (SELECT tk, m, ${duckSigExprs("s3")} FROM docs),
          |sg AS MATERIALIZED (
          |  SELECT sig1, sig2, sig3, sig4, CAST(sum(m) AS BIGINT) AS mult,
          |    md5(concat_ws('|', sig1, sig2, sig3, sig4)) AS gid
          |  FROM tsig GROUP BY 1, 2, 3, 4),
-         |gb AS ($sgBands),
+         |gb AS (${duckBandsSql("gid", "sg")}),
          |gp AS (SELECT DISTINCT a.gid AS ga, b.gid AS gb2 FROM gb a JOIN gb b
          |       ON a.band = b.band AND a.v = b.v AND a.gid <> b.gid),
          |ext AS (SELECT gp.ga, CAST(sum(s.mult) AS BIGINT) AS ext
@@ -1086,7 +1089,7 @@ object TextOps {
     Q.sqlDual(
       "dedup_minhash",
       s"""WITH $duckSigCtes,
-         |bands AS ($duckBands),
+         |bands AS (${duckBandsSql("doc_id", "sig")}),
          |m AS (SELECT a.doc_id, count(DISTINCT b.doc_id) AS nm
          |      FROM bands a JOIN bands b
          |        ON a.band = b.band AND a.v = b.v AND a.doc_id <> b.doc_id
@@ -1099,51 +1102,34 @@ object TextOps {
       // Signature-collapsed formulation, value-identical to the oracle's
       // per-doc pair join: docs with the SAME 4-band signature are
       // indistinguishable to the counter (they match exactly the same
-      // neighbor set), so the pair enumeration runs on DISTINCT
-      // signatures weighted by multiplicity and each doc's count is
+      // neighbor set), so the pair enumeration runs on [[sigGroups]]
+      // weighted by multiplicity and each doc's count is
       // Σ mult(other matching groups) + (own mult − 1). An exact-dup
       // cluster of N docs costs ONE group row instead of N² join rows —
       // dup clusters grow with the corpus, so at 100 TB this is the
       // difference between linear and quadratic band-bucket work. The
-      // oracle keeps the naive doc-level join: two independent
-      // formulations must hash-agree.
-      val sigCols = minhashParams.indices.map(i => col(s"sig${i + 1}"))
+      // all-NULL signature group (docs under 3 words) never collides and
+      // is pinned to 0; docs join back to their group NULL-safely so
+      // those docs keep their row. The oracle keeps the naive doc-level
+      // join: two independent formulations must hash-agree.
       val sigs = minhashSigs(s, d)
-      val groups = sigs.groupBy(sigCols: _*)
-        .agg(count(lit(1)).as("mult"))
-        .withColumn("gid", md5(concat_ws("|",
-          minhashParams.indices.map(i => col(s"sig${i + 1}").cast("string")): _*)))
+      val groups = sigGroups(sigs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val gBands = groups.select(col("gid"),
-        posexplode(array(sigCols: _*)).as(Seq("band", "v")))
-      val gPairs = gBands.select(col("gid").as("ga"), col("band"), col("v"))
-        .join(gBands.select(col("gid").as("gb"), col("band").as("band_b"),
-            col("v").as("v_b")),
-          col("band") === col("band_b") && col("v") === col("v_b") &&
-            col("ga") =!= col("gb"))
-        .select("ga", "gb").dropDuplicates("ga", "gb")
-      val ext = gPairs
-        .join(groups.select(col("gid").as("gb"), col("mult").as("mult_b")), Seq("gb"))
+      val ext = bandPairs(bandsOf(groups, col("ex_min")), "ex_min", _ =!= _)
+        .join(groups.select(col("ex_min").as("gb"), col("ex_mult").as("mult_b")), Seq("gb"))
         .groupBy(col("ga")).agg(sum("mult_b").as("ext"))
       val gNm = groups
-        .join(ext, col("gid") === col("ga"), "left")
-        .select(sigCols :+
-          (coalesce(col("ext"), lit(0L)) + col("mult") - 1).cast("long").as("nm"): _*)
-      sigs.join(gNm, minhashParams.indices.map(i => s"sig${i + 1}"))
-        .select(col("doc_id"), col("sig1"), col("sig2"), col("sig3"), col("sig4"),
-          col("nm").as("n_band_matches"))
+        .join(ext, col("ex_min") === col("ga"), "left")
+        .select(sigNames.map(n => col(n).as(s"g_$n")) :+
+          when(col("sig1").isNull, lit(0L))
+            .otherwise(coalesce(col("ext"), lit(0L)) + col("ex_mult") - 1)
+            .cast("long").as("nm"): _*)
+      sigs.join(gNm, sigNames.map(n => col(n) <=> col(s"g_$n")).reduce(_ && _))
+        .select(col("doc_id") +: sigCols :+ col("nm").as("n_band_matches"): _*)
         .orderBy("doc_id")
     }
   }
 
-  /** Estimator-quality readout for the MinHash family: on every LSH
-    * candidate pair (≥1 matching band), the signature-estimated Jaccard
-    * (matching components / 4) against the EXACT Jaccard over distinct
-    * shingle sets — the accuracy audit that justifies trusting band
-    * collisions as a similarity proxy at 100 TB, where exact Jaccard on
-    * all pairs is unaffordable. Exact similarity is computed only on the
-    * LSH-bounded candidate set (that is the scale shape: estimate
-    * globally, verify locally); per-pair cost is one array intersect. */
   /** Distinct-shingle-set group machinery shared by [[dedupMinhashEst]]
     * (the full doc-pair estimator audit) and [[dedupMinhashCalib]] (its
     * bounded calibration summary): returns
@@ -1155,8 +1141,6 @@ object TextOps {
   private def minhashGroupMetrics(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val k = minhashParams.length
-    val sigNames = minhashParams.indices.map(i => s"sig${i + 1}")
-    val sigCols = sigNames.map(col)
     val sigs = minhashSigs(s, d, withShingles = true)
     // group id = min doc id over the identical-array partition; ONE
     // exchange on hash(s3d) serves both the id and the multiplicity
@@ -1167,13 +1151,7 @@ object TextOps {
     val gsig = gAll.filter(col("doc_id") === col("gid"))
       .select(col("gid") +: col("s3d") +: sigCols: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gbands = gsig.select(col("gid"),
-      posexplode(array(sigCols: _*)).as(Seq("band", "v")))
-    val gpairs = gbands.select(col("gid").as("ga"), col("band"), col("v"))
-      .join(gbands.select(col("gid").as("gb"), col("band"), col("v")),
-        Seq("band", "v"))
-      .filter(col("ga") < col("gb"))
-      .select("ga", "gb").distinct()
+    val gpairs = bandPairs(bandsOf(gsig, col("gid")), "gid", _ < _)
     def gside(tag: String) = gsig.select(
       col("gid").as(s"g$tag") +: col("s3d").as(s"s3d_$tag") +:
         sigNames.map(n => col(n).as(s"${n}_$tag")): _*)
@@ -1201,16 +1179,6 @@ object TextOps {
     * head of the dedup_minhash_est and dedup_minhash_calib scale twins. */
   private lazy val minhashScaleHeadSql: String = {
     val k = minhashParams.length
-    val sigNames = minhashParams.indices.map(i => s"sig${i + 1}")
-    val scaleSigExprs = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform(sk.s3d, w -> ($a * ${duckWordHash("w")} + $b) % $P)) AS sig${i + 1}"
-    }.mkString(",\n       ")
-    val scaleBands = minhashParams.indices
-      .map(i => s"SELECT gid, ${i + 1} AS band, sig${i + 1} AS v FROM gsd")
-      .mkString("\n  UNION ALL ")
-    val scaleNMatch = sigNames
-      .map(n => s"CASE WHEN sa.$n = sb.$n THEN 1 ELSE 0 END")
-      .mkString("\n         + ")
     s"""w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
        |docs AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
        |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
@@ -1220,15 +1188,15 @@ object TextOps {
        |        PARTITION BY md5(array_to_string(s3d, chr(10)))) AS gid
        |      FROM sk),
        |gsd AS MATERIALIZED (SELECT gmm.gid, sk.s3d,
-       |       $scaleSigExprs
+       |       ${duckSigExprs("sk.s3d")}
        |     FROM sk JOIN gmm ON sk.doc_id = gmm.doc_id
        |     WHERE sk.doc_id = gmm.gid),
-       |gbands AS ($scaleBands),
+       |gbands AS (${duckBandsSql("gid", "gsd")}),
        |gpairs AS (SELECT DISTINCT a.gid AS ga, b.gid AS gb
        |          FROM gbands a JOIN gbands b
        |            ON a.band = b.band AND a.v = b.v AND a.gid < b.gid),
        |gj AS (SELECT ga, gb,
-       |        ($scaleNMatch) AS n_sig_match,
+       |        ($duckSigMatchSql) AS n_sig_match,
        |        len(list_intersect(sa.s3d, sb.s3d)) AS common,
        |        len(sa.s3d) AS za, len(sb.s3d) AS zb
        |      FROM gpairs JOIN gsd sa ON sa.gid = ga
@@ -1241,9 +1209,35 @@ object TextOps {
        |      FROM gj)""".stripMargin
   }
 
+  /** DuckDB CTE chain of the naive doc-level candidate pairs, ending in
+    * `j(doc_a, doc_b, n_sig_match, common, za, zb)` over the distinct
+    * shingle sets `sd(doc_id, s3d, sig1..)` — the shared head of the
+    * dedup_minhash_est and dedup_minhash_calib naive oracles. */
+  private lazy val minhashNaiveHeadSql: String =
+    s"""$duckSigCtes,
+       |bands AS (${duckBandsSql("doc_id", "sig")}),
+       |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |          FROM bands a JOIN bands b
+       |            ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id),
+       |sd AS (SELECT doc_id, list_distinct(s3) AS s3d, ${sigNames.mkString(", ")}
+       |       FROM sig),
+       |j AS (SELECT doc_a, doc_b,
+       |        ($duckSigMatchSql) AS n_sig_match,
+       |        len(list_intersect(sa.s3d, sb.s3d)) AS common,
+       |        len(sa.s3d) AS za, len(sb.s3d) AS zb
+       |      FROM pairs JOIN sd sa ON sa.doc_id = doc_a
+       |                 JOIN sd sb ON sb.doc_id = doc_b)""".stripMargin
+
+  /** Estimator-quality readout for the MinHash family: on every LSH
+    * candidate pair (≥1 matching band), the signature-estimated Jaccard
+    * (matching components / 4) against the EXACT Jaccard over distinct
+    * shingle sets — the accuracy audit that justifies trusting band
+    * collisions as a similarity proxy at 100 TB, where exact Jaccard on
+    * all pairs is unaffordable. Exact similarity is computed only on the
+    * LSH-bounded candidate set (that is the scale shape: estimate
+    * globally, verify locally); per-pair cost is one array intersect. */
   val dedupMinhashEst: Q = {
     val k = minhashParams.length
-    val sigNames = minhashParams.indices.map(i => s"sig${i + 1}")
     // Collapsed-formulation scale twin (Q.scaleOracle): the SQL mirror of
     // the Spark side's distinct-shingle-set collapse — group docs by
     // their (ordered) distinct shingle array, run the band join +
@@ -1274,23 +1268,7 @@ object TextOps {
          |ORDER BY doc_a, doc_b""".stripMargin
     Q.sqlDual(
     "dedup_minhash_est",
-    s"""WITH $duckSigCtes,
-       |bands AS (${minhashParams.indices
-      .map(i => s"SELECT doc_id, ${i + 1} AS band, sig${i + 1} AS v FROM sig")
-      .mkString("\n  UNION ALL ")}),
-       |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |          FROM bands a JOIN bands b
-       |            ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id),
-       |sd AS (SELECT doc_id, list_distinct(s3) AS s3d, ${sigNames.mkString(", ")}
-       |       FROM sig),
-       |j AS (SELECT doc_a, doc_b,
-       |        (${sigNames
-      .map(n => s"CASE WHEN sa.$n = sb.$n THEN 1 ELSE 0 END")
-      .mkString("\n         + ")}) AS n_sig_match,
-       |        len(list_intersect(sa.s3d, sb.s3d)) AS common,
-       |        len(sa.s3d) AS za, len(sb.s3d) AS zb
-       |      FROM pairs JOIN sd sa ON sa.doc_id = doc_a
-       |                 JOIN sd sb ON sb.doc_id = doc_b)
+    s"""WITH $minhashNaiveHeadSql
        |SELECT doc_a, doc_b, n_sig_match,
        |  round(n_sig_match / $k.0, 4) AS est_jacc,
        |  round(1.0 * common / (za + zb - common), 4) AS exact_jacc,
@@ -1357,7 +1335,6 @@ object TextOps {
     * materialized, the one posture dedup_minhash_est cannot offer. */
   val dedupMinhashCalib: Q = {
     val k = minhashParams.length
-    val sigNames = minhashParams.indices.map(i => s"sig${i + 1}")
     val nullCols =
       """CAST(NULL AS BIGINT) AS doc_a, CAST(NULL AS BIGINT) AS doc_b,
         |          CAST(NULL AS DOUBLE) AS exact_jacc""".stripMargin
@@ -1370,23 +1347,7 @@ object TextOps {
     // formulation) reduced to bucket sums; exhibits filter to pairs whose
     // BOTH endpoints are their distinct-shingle-set group representative
     val naive =
-      s"""WITH $duckSigCtes,
-         |bands AS (${minhashParams.indices
-        .map(i => s"SELECT doc_id, ${i + 1} AS band, sig${i + 1} AS v FROM sig")
-        .mkString("\n  UNION ALL ")}),
-         |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |          FROM bands a JOIN bands b
-         |            ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id),
-         |sd AS (SELECT doc_id, list_distinct(s3) AS s3d, ${sigNames.mkString(", ")}
-         |       FROM sig),
-         |j AS (SELECT doc_a, doc_b,
-         |        (${sigNames
-        .map(n => s"CASE WHEN sa.$n = sb.$n THEN 1 ELSE 0 END")
-        .mkString("\n         + ")}) AS n_sig_match,
-         |        len(list_intersect(sa.s3d, sb.s3d)) AS common,
-         |        len(sa.s3d) AS za, len(sb.s3d) AS zb
-         |      FROM pairs JOIN sd sa ON sa.doc_id = doc_a
-         |                 JOIN sd sb ON sb.doc_id = doc_b),
+      s"""WITH $minhashNaiveHeadSql,
          |met AS (SELECT doc_a, doc_b, n_sig_match,
          |        round(1.0 * common / (za + zb - common), 4) AS exact_jacc,
          |        round(abs(round(n_sig_match / $k.0, 4)
@@ -1513,9 +1474,6 @@ object TextOps {
     * decision AQE already owns.) The LEFT join back to the batch keeps
     * no-match docs in the report with verdict 'admit'. */
   val dedupIncremental: Q = {
-    val duckBands = minhashParams.indices
-      .map(i => s"SELECT doc_id, ${i + 1} AS band, sig${i + 1} AS v FROM sig")
-      .mkString("\n  UNION ALL ")
     // Collapsed scale twin — the SQL mirror of [[incrementalVerdicts]]:
     // both sides fold to one row per DISTINCT 4-band signature (GROUP BY
     // treats the all-NULL empty-shingle signature as one group, exactly
@@ -1523,13 +1481,6 @@ object TextOps {
     // the per-doc expansion is a window + LEFT join so null-sig docs
     // keep their 'admit' rows. Keeps the 100x/1000x gates hash-checkable
     // where the naive per-doc band join OOMs single-box DuckDB.
-    val sigNames = minhashParams.indices.map(i => s"sig${i + 1}")
-    val exBandsSql = sigNames.zipWithIndex
-      .map { case (sn, i) => s"SELECT ex_mult, ex_min, ${i + 1} AS band, $sn AS v FROM exg" }
-      .mkString("\n  UNION ALL ")
-    val inBandsSql = sigNames.zipWithIndex
-      .map { case (sn, i) => s"SELECT igid, ${i + 1} AS band, $sn AS v FROM ing" }
-      .mkString("\n  UNION ALL ")
     val scaleOracle =
       s"""WITH $duckSigCtes,
          |exg AS (SELECT ${sigNames.mkString(", ")},
@@ -1539,8 +1490,8 @@ object TextOps {
          |ing AS (SELECT ${sigNames.mkString(", ")}, min(doc_id) AS igid
          |        FROM sig WHERE doc_id % 10 = 0
          |        GROUP BY ${sigNames.mkString(", ")}),
-         |eb AS ($exBandsSql),
-         |ib AS ($inBandsSql),
+         |eb AS (${duckBandsSql("ex_mult, ex_min", "exg")}),
+         |ib AS (${duckBandsSql("igid", "ing")}),
          |gm AS (SELECT igid, CAST(sum(ex_mult) AS BIGINT) AS n_near_dups,
          |         min(ex_min) AS first_match
          |       FROM (SELECT DISTINCT ib.igid, eb.ex_min, eb.ex_mult
@@ -1558,7 +1509,7 @@ object TextOps {
     Q.sqlDual(
       "dedup_incremental",
       s"""WITH $duckSigCtes,
-         |bands AS ($duckBands),
+         |bands AS (${duckBandsSql("doc_id", "sig")}),
          |ib AS (SELECT doc_id AS inc_id, band, v FROM bands WHERE doc_id % 10 = 0),
          |eb AS (SELECT doc_id AS ex_id, band, v FROM bands WHERE doc_id % 10 <> 0),
          |m AS (SELECT inc_id, count(DISTINCT ex_id) AS n_near_dups,
@@ -2063,12 +2014,6 @@ object TextOps {
     * (doc_a, doc_b) for the FULL OUTER — no broadcast of either
     * pair-scale side — and the final aggregate is ≤ 10 rows. */
   val dedupLshCurve: Q = {
-    val duckSigs = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-      s"list_min(list_transform(s3, w -> ($a * ${duckWordHash("w")} + $b) % $P)) AS sig${i + 1}"
-    }.mkString(",\n  ")
-    val duckBands = minhashParams.indices
-      .map(i => s"SELECT doc_id, ${i + 1} AS band, sig${i + 1} AS v FROM lsig")
-      .mkString("\n  UNION ALL ")
     // Collapsed scale twin (the dedup_plane_agreement twin pattern):
     // groups = distinct (lang, source, text) — FINER than the Spark
     // side's (lang, source, s3d) but value-identical, because two
@@ -2078,9 +2023,6 @@ object TextOps {
     // n(n−1)/2. df stays TRUE document frequency (sum of group
     // multiplicities). Keeps the 1000x gate hash-checkable where the
     // naive doc-pair universe OOMs single-box DuckDB.
-    val gBands = minhashParams.indices
-      .map(i => s"SELECT gid, n, ${i + 1} AS band, sig${i + 1} AS v FROM sig")
-      .mkString("\n  UNION ALL ")
     val scaleOracle =
       s"""WITH grp AS MATERIALIZED (
          |  SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS n,
@@ -2089,8 +2031,8 @@ object TextOps {
          |w AS (SELECT gid, n, lang, source, str_split(text, ' ') AS ws FROM grp),
          |d2 AS (SELECT gid, n, lang, source, list_transform(range(1, len(ws) - 1),
          |         i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
-         |sig AS MATERIALIZED (SELECT gid, n, lang, source, s3, $duckSigs FROM d2),
-         |bands AS ($gBands),
+         |sig AS MATERIALIZED (SELECT gid, n, lang, source, s3, ${duckSigExprs("s3")} FROM d2),
+         |bands AS (${duckBandsSql("gid, n", "sig")}),
          |ex AS (SELECT gid, n, lang, source, unnest(list_distinct(s3)) AS shingle
          |       FROM sig),
          |exf AS (SELECT gid, lang, source, shingle FROM (
@@ -2138,8 +2080,8 @@ object TextOps {
          |lw AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
          |ld AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
          |         i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM lw),
-         |lsig AS (SELECT doc_id, $duckSigs FROM ld),
-         |bands AS ($duckBands),
+         |lsig AS (SELECT doc_id, ${duckSigExprs("s3")} FROM ld),
+         |bands AS (${duckBandsSql("doc_id", "lsig")}),
          |det AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
          |        FROM bands a JOIN bands b
          |          ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id),
@@ -2172,18 +2114,9 @@ object TextOps {
       // on a replicated crawl — costs one group row instead of N²/2
       // join rows on each side. The oracle keeps the naive doc-level
       // FULL OUTER: two independent shapes must hash-agree.
-      val sigCols = minhashParams.indices.map(i => col(s"sig${i + 1}"))
-      val sigExprs = minhashParams.indices.map(i =>
-        element_at(col("__sigs"), i + 1).as(s"sig${i + 1}"))
       val byText = Window.partitionBy("lang", "source", "s3d")
-      val gAll = docs(s, d)
-        .select(col("doc_id"), col("lang"), col("source"),
-          split(col("text"), " ").as("ws"))
-        .select(col("doc_id"), col("lang"), col("source"),
-          expr(shingleExpr("ws")).as("s3"))
-        .withColumn("__sigs", expr("graft_minhash_sig(s3)"))
-        .select(col("doc_id") +: col("lang") +: col("source") +:
-          array_distinct(col("s3")).as("s3d") +: sigExprs: _*)
+      val gAll = signaturesOf(docs(s, d).select("doc_id", "lang", "source", "text"),
+          withShingles = true)
         .withColumn("gid", min("doc_id").over(byText))
         .withColumn("n", count(lit(1)).over(byText))
       val gmeta = gAll.filter(col("doc_id") === col("gid"))
@@ -2211,13 +2144,7 @@ object TextOps {
           round(lit(1.0) * col("common")
             / (col("sz_a") + col("sz_b") - col("common")), 4).as("jacc"))
       // detector side over representatives
-      val gBands = gmeta.select(col("gid"),
-        posexplode(array(sigCols: _*)).as(Seq("band", "v")))
-      val detG = gBands.select(col("gid").as("ga"), col("band"), col("v"))
-        .join(gBands.select(col("gid").as("gb"), col("band"), col("v")),
-          Seq("band", "v"))
-        .filter(col("ga") < col("gb"))
-        .select("ga", "gb").distinct()
+      val detG = bandPairs(bandsOf(gmeta, col("gid")), "gid", _ < _)
         .withColumn("det", lit(1))
       val gn = gmeta.select(col("gid"), col("n"))
       val cross = jaccG.join(detG, Seq("ga", "gb"), "full_outer")
@@ -2449,9 +2376,6 @@ object TextOps {
     * the same graft_minhash_sig machinery as dedup_minhash — one
     * definition, the two planes cannot drift. */
   val decontaminateFuzzy: Q = {
-    val duckBands = minhashParams.indices
-      .map(i => s"SELECT doc_id, ${i + 1} AS band, sig${i + 1} AS v FROM sig")
-      .mkString("\n  UNION ALL ")
     // Collapsed scale twin: the SQL mirror of the Spark side's
     // distinct-content collapse. The naive oracle's corpus-band × bench-
     // band join is replication-quadratic (twins stand on both sides of
@@ -2459,13 +2383,7 @@ object TextOps {
     // at content level: signatures once per distinct text, bench
     // multiplicity and min bench id carried on the content group, the
     // per-doc report expanded by the linear membership join.
-    val scaleOracle = {
-      val scaleSigs = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-        s"list_min(list_transform(s3, w -> ($a * ${duckWordHash("w")} + $b) % $P)) AS sig${i + 1}"
-      }.mkString(",\n  ")
-      val tkBands = minhashParams.indices
-        .map(i => s"SELECT tk, ${i + 1} AS band, sig${i + 1} AS v FROM tsig")
-        .mkString("\n  UNION ALL ")
+    val scaleOracle =
       s"""WITH grp AS MATERIALIZED (
          |  SELECT md5(text) AS tk, min(text) AS text,
          |    CAST(sum(CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -2475,8 +2393,8 @@ object TextOps {
          |w AS (SELECT tk, str_split(text, ' ') AS ws FROM grp),
          |docs AS (SELECT tk, list_transform(range(1, len(ws) - 1),
          |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
-         |tsig AS MATERIALIZED (SELECT tk, $scaleSigs FROM docs),
-         |tb AS ($tkBands),
+         |tsig AS MATERIALIZED (SELECT tk, ${duckSigExprs("s3")} FROM docs),
+         |tb AS (${duckBandsSql("tk", "tsig")}),
          |bb AS (SELECT t.tk AS btk, g.m_bench, g.min_bench_id, t.band, t.v
          |       FROM tb t JOIN grp g ON g.tk = t.tk WHERE g.m_bench >= 1),
          |hitg AS (SELECT c.tk, b.btk, b.m_bench, b.min_bench_id,
@@ -2498,11 +2416,10 @@ object TextOps {
          |JOIN pickg p ON md5(d.text) = p.tk
          |WHERE d.doc_id % 29 <> 0
          |ORDER BY d.doc_id""".stripMargin
-    }
     Q.sqlDual(
       "decontaminate_fuzzy",
       s"""WITH $duckSigCtes,
-         |bands AS ($duckBands),
+         |bands AS (${duckBandsSql("doc_id", "sig")}),
          |bb AS (SELECT doc_id AS bench_id, band, v FROM bands WHERE doc_id % 29 = 0),
          |cb AS (SELECT doc_id, band, v FROM bands WHERE doc_id % 29 <> 0),
          |hit AS (SELECT cb.doc_id, bb.bench_id, count(*) AS shared_bands
@@ -2538,9 +2455,7 @@ object TextOps {
       val distTexts = docs(s, d)
         .select(graft.Hash128.key128(col("text")).as("tkey"), col("text"))
         .groupBy("tkey").agg(min("text").as("text"))
-      val bands = minhashBandsOf(distTexts.withColumnRenamed("tkey", "doc_id"))
-        .withColumn("band", col("band") + 1)
-        .withColumnRenamed("doc_id", "tkey")
+      val bands = bandsOf(signaturesOf(distTexts), col("tkey"))
       val bench = bands
         .join(meta.filter(col("m_bench") >= 1)
           .select(col("tkey").as("btk"), col("m_bench"), col("min_bench_id")),
@@ -2593,9 +2508,7 @@ object TextOps {
     * with half-up integer means (no double rounds near ties). */
   val dedupPlaneAgreement: Q = {
     import graft.vector.Similarity
-    val duckBands = minhashParams.indices
-      .map(i => s"SELECT doc_id, ${i + 1} AS band, sig${i + 1} AS v FROM sig")
-      .mkString("\n  UNION ALL ")
+    val duckBands = duckBandsSql("doc_id", "sig")
     // Collapsed scale twin: the group-level mirror of the Spark body —
     // signatures/buckets per distinct (text, embedding) representative,
     // a<=b self-rows as the within-group twin pairs, counts as
@@ -2603,10 +2516,7 @@ object TextOps {
     // width pinned to the FULL corpus count. Keeps the 100x gate
     // hash-checkable where the naive doc-pair universe exceeds
     // single-box DuckDB's spill capacity.
-    val scaleOracle = {
-      val duckSigs = minhashParams.zipWithIndex.map { case ((a, b), i) =>
-        s"list_min(list_transform(s3, w -> ($a * ${duckWordHash("w")} + $b) % $P)) AS sig${i + 1}"
-      }.mkString(",\n  ")
+    val scaleOracle =
       s"""WITH j AS MATERIALIZED (
          |  SELECT d.doc_id, d.text, CAST(e0.embedding AS DOUBLE[]) AS emb
          |  FROM documents d JOIN embeddings e0 ON d.doc_id = e0.vec_id),
@@ -2616,7 +2526,7 @@ object TextOps {
          |w AS (SELECT gid AS doc_id, str_split(text, ' ') AS ws FROM grp),
          |docs AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
          |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
-         |sig AS (SELECT doc_id, s3, $duckSigs FROM docs),
+         |sig AS (SELECT doc_id, s3, ${duckSigExprs("s3")} FROM docs),
          |tb AS ($duckBands),
          |tp AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |       FROM tb x JOIN tb y
@@ -2660,7 +2570,6 @@ object TextOps {
          |  CAST((2 * s4 + n_pairs) // (2 * n_pairs) AS DOUBLE) / 10000 - 1
          |    AS mean_cos
          |FROM g CROSS JOIN t ORDER BY verdict""".stripMargin
-    }
     Q.sqlDual(
       "dedup_plane_agreement",
       s"""WITH $duckSigCtes,
@@ -2722,12 +2631,8 @@ object TextOps {
         .agg(count(lit(1)).cast("long").as("m"), min("doc_id").as("gid"))
         .select(col("gid"), col("m"), col("text"), col("embedding"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val tb = minhashBandsOf(rep.select(col("gid").as("doc_id"), col("text")))
-      val tp = tb.select(col("doc_id").as("a"), col("band"), col("v"))
-        .join(tb.select(col("doc_id").as("b"), col("band"), col("v")),
-          Seq("band", "v"))
-        .filter(col("a") <= col("b"))
-        .select("a", "b").distinct()
+      val tp = bandPairs(bandsOf(signaturesOf(rep.select("gid", "text")), col("gid")),
+        "gid", _ <= _).toDF("a", "b")
       // countFrom pins the adaptive bit width to the FULL corpus count:
       // banding only representatives must not change the bucket geometry
       // (the ann_knn_graph collapse's lesson, and exactly what the naive

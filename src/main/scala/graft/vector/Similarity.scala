@@ -28,6 +28,10 @@ object Similarity {
   private def cosR(a: Column, b: Column): Column =
     round(GraftFunctions.graftCosine(a, b), 4)
 
+  /** The serve query set: vectors with id < 10 are the queries of every
+    * ANN op (the oracles spell the same predicate as `vec_id < 10`). */
+  private val isQuery: Column = col("vec_id") < 10
+
   // ---- shared quantizer-training blocks (trained IVF + PQ, both engines) --
 
   /** Decimal-exact per-label centroid CTEs (e, u, cd, cent) — the single
@@ -169,7 +173,7 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val assign = r.filter(col("rn") === 1)
       .select(col("vec_id"), col("cid").as("cell"))
-    val qprobe = r.filter(col("vec_id") < 10)
+    val qprobe = r.filter(isQuery)
       .select(col("vec_id"), col("cid").as("qcell"), col("rn").cast("int").as("probe"))
     val q = e.join(qprobe, Seq("vec_id"))
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -223,7 +227,7 @@ object Similarity {
       |SELECT query_id, neighbor_id, cos_sim, rank
       |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d)
-    val q = e.filter(col("vec_id") < 10)
+    val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
     topk(probe(c, q, byCell = false)
@@ -291,7 +295,7 @@ object Similarity {
       val sig = e.select(col("vec_id"),
         expr(sparkSig(0, 32, 0)).as("lo"),
         expr(sparkSig(32, 64, 32)).as("hi"))
-      val q = sig.filter(col("vec_id") < 10)
+      val q = sig.filter(isQuery)
         .select(col("vec_id").as("query_id"), col("lo").as("qlo"), col("hi").as("qhi"))
       val served = topk(
         probe(sig.select(col("vec_id").as("neighbor_id"), col("lo"), col("hi")), q,
@@ -299,7 +303,7 @@ object Similarity {
           .select(col("query_id"), col("neighbor_id"),
             expr("bit_count(lo ^ qlo) + bit_count(hi ^ qhi)").cast("int").as("hamming")),
         col("hamming"), 5)
-      val qv = e.filter(col("vec_id") < 10)
+      val qv = e.filter(isQuery)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val wX = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("neighbor_id"))
       val ex = probe(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce")),
@@ -334,7 +338,7 @@ object Similarity {
       |SELECT query_id, neighbor_id, cell, cos_sim, rank
       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d).select(col("vec_id"), col("embedding"), signCell.as("cell"))
-    val q = e.filter(col("vec_id") < 10)
+    val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cell").as("qcell"))
     topk(probe(e.withColumnRenamed("vec_id", "neighbor_id"), q, byCell = true)
       .select(col("query_id"), col("neighbor_id"), col("cell"),
@@ -665,7 +669,7 @@ object Similarity {
       |FROM rk WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d)
     val recon = pqRecon(e)
-    val q = e.filter(col("vec_id") < 10)
+    val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"),
         expr("transform(embedding, x -> cast(x as double))").as("qe"))
     topk(probe(recon.withColumnRenamed("vec_id", "neighbor_id"), q, byCell = false)
@@ -2700,7 +2704,7 @@ object Similarity {
       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d)
       .select(col("vec_id"), col("label"), col("embedding"), signCell.as("cell"))
-    val q = e.filter(col("vec_id") < 10)
+    val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("cell").as("qcell"))
     val cands = e.filter(col("label") % 2 === 1).withColumnRenamed("vec_id", "neighbor_id")
@@ -3203,7 +3207,7 @@ object Similarity {
         |    AS converged
         |FROM found f JOIN bf USING (query_id) ORDER BY query_id""".stripMargin) { (s, d) =>
       val e0 = emb(s, d)
-      val q = e0.filter(col("vec_id") < 10)
+      val q = e0.filter(isQuery)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       val reps = e0.filter(col("vec_id") >= 10)
         .groupBy("embedding").agg(min("vec_id").as("vec_id"))

@@ -622,6 +622,34 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!s.contains("CartesianProduct"), s)
   }
 
+  test("dedup_minhash: band self-join runs over persisted signature groups, no cartesian") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val df = SparkEntry.queries("dedup_minhash")(spark, sfDir)
+    val s = finalPlan(df).toString
+    assert(s.contains("InMemoryTableScan"), s"signature table not persisted:\n$s")
+    assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"), s)
+    // a side is collapsed when it aggregates on exactly the signature
+    // columns — in its own plan or inside a persisted relation's plan
+    val sigNames = Set("sig1", "sig2", "sig3", "sig4")
+    def sigGrouped(p: LogicalPlan): Boolean = p.collectFirst {
+      case a: Aggregate
+          if a.groupingExpressions.flatMap(_.references.map(_.name)).toSet == sigNames => a
+      case r: InMemoryRelation if sigGrouped(r.cacheBuilder.logicalPlan) => r
+    }.isDefined
+    val bandJoins = df.queryExecution.optimizedPlan.collect {
+      case j: Join if j.condition.exists(_.references.exists(_.name == "band")) => j
+    }
+    assert(bandJoins.nonEmpty, "no band join found — vacuous")
+    bandJoins.foreach { j =>
+      Seq("left" -> j.left, "right" -> j.right).foreach { case (side, in) =>
+        assert(sigGrouped(in),
+          s"dedup_minhash band join has a raw per-doc $side input:\n$j")
+      }
+    }
+    spark.catalog.clearCache()
+  }
+
   test("vocab_coverage: two-phase rank — bucket pre-pass before the per-lang rank") {
     val df = SparkEntry.queries("vocab_coverage")(spark, sfDir)
     val windows = df.queryExecution.optimizedPlan.collect {

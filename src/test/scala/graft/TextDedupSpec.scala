@@ -225,6 +225,49 @@ class TextDedupSpec extends AnyFunSuite {
       "every prefix group was already an exact-dup group — edge class vacuous")
   }
 
+  test("dedup_minhash: every doc gets a row; sub-3-word docs match nothing") {
+    GraftFunctions.ensureRegistered(spark)
+    // random texts, exact-dup clusters, one-word-edited near dups, and
+    // several docs under 3 words (one empty) — the all-NULL signature
+    // class, itself duplicated, shuffled across the id range
+    val rnd = new scala.util.Random(11)
+    val vocab = Seq("red", "green", "blue", "cyan", "pink", "gray", "gold", "teal")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val base = Seq.fill(24)(words(5 + rnd.nextInt(12)))
+    val texts = base ++ base.take(5) ++ base.take(2) ++ Seq.fill(3)(base(7)) ++
+      base.slice(10, 18).map(t => ("mauve" +: t.split(" ").tail).mkString(" ")) ++
+      Seq("", "red", "red blue", "red blue", "gold teal") ++
+      Seq.fill(13)(words(3 + rnd.nextInt(6)))
+    val dir = java.nio.file.Files.createTempDirectory("graft-minhash").toString
+    rnd.shuffle(texts).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // independent per-doc band count straight off the native signature
+    // expression — no shared helper with the op's plan
+    val sigs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), expr(TextOps.shingleExpr("ws")).as("s3"))
+      .select(col("doc_id"), expr("graft_minhash_sig(s3)").as("sigs"))
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) Seq.fill(4)(None) else r.getSeq[Long](1).map(Some(_))))
+      .toMap
+    val expected = sigs.toSeq.sortBy(_._1).map { case (id, sv) =>
+      val n = sigs.count { case (o, ov) =>
+        o != id && sv.zip(ov).exists { case (a, b) => a.isDefined && a == b }
+      }
+      (id, sv, n.toLong)
+    }
+    val got = TextOps.dedupMinhash.fn(spark, dir).collect().toSeq.map(r =>
+      (r.getLong(0), (1 to 4).map(i => if (r.isNullAt(i)) None else Some(r.getLong(i))),
+        r.getLong(5)))
+    assert(got.length === texts.length, "dedup_minhash dropped documents")
+    assert(got === expected)
+    val nulls = expected.filter(_._2.head.isEmpty)
+    assert(nulls.length === 5 && nulls.forall(_._3 == 0L), "fixture lost its short docs")
+    assert(expected.exists(_._3 >= 3), "fixture has no duplicate cluster — vacuous")
+    spark.catalog.clearCache()
+  }
+
   test("dedup_minhash_est: signature-collapsed output equals the naive pair join exactly") {
     // the naive doc-level formulation the oracle runs, replicated in
     // Spark — the collapse must be invisible (same rows, same values)

@@ -318,7 +318,8 @@ def main():
                 dmis.append(f"{c}: spark={st} oracle={ot}")
         if dmis:
             print(f"FAIL {name}: dtype mismatch (driver hash is dtype-"
-                  f"sensitive): {'; '.join(dmis)}")
+                  f"sensitive): {'; '.join(dmis)} "
+                  f"spark_rows={len(srows)} oracle_rows={len(orows)}")
             record(name, srows, orows, err="dtype");  counters[1] += 1;  continue
 
         # --- value layer ---
