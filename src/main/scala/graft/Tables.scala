@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 
 /** Parquet table loader for the graft engine.
   *
@@ -13,8 +16,27 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** (path, size, mtime) of the files each table path was last read with. */
+  private val listings = new ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
+
+  /** Reads one table. Spark finds a cached plan by path, not by file
+    * content, so a frame persisted over a table that was rewritten
+    * outside this session would keep serving the old rows. The listing
+    * the fresh read already holds (no job) is compared with the one this
+    * path was last read with; when they differ, every cached plan over
+    * the path is refreshed before the frame is handed out. */
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.parquet(path)
+    val files = df.queryExecution.analyzed.collectLeaves().flatMap {
+      case LogicalRelation(HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _),
+          _, _, _, _) => i.allFiles()
+      case _ => Nil
+    }.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    val last = listings.put(path, files)
+    if (last != null && last != files) spark.catalog.refreshByPath(path)
+    df
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

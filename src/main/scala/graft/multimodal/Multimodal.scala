@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.{Q, Tables}
+import graft.text.Tokens.words
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -353,7 +354,7 @@ object Multimodal {
         element_at(array(lit("image"), lit("audio"), lit("video")),
           (col("doc_id") % 3 + 1).cast("int")).as("media_type"),
         expr("cast(length(text) div 256 + 1 as int)").as("n_frames"),
-        expr("size(split(text, ' '))").as("n_words"))
+        size(words).as("n_words"))
     // sampled-frame count under the multimodal_frames stride rule:
     // |range(0, n-1, stride)| = 1 + (n-1) div stride
     val g = f
@@ -429,7 +430,7 @@ object Multimodal {
         (expr("cast(1 + (cast(length(text) div 256 + 1 as int) - 1) div " +
           "greatest(1, cast(length(text) div 256 + 1 as int) div 8) as bigint)")
           * 64).as("media_tokens"),
-        expr("cast(size(split(text, ' ')) as bigint)").as("caption_tokens"))
+        size(words).cast("bigint").as("caption_tokens"))
     val w = Window.partitionBy("media_type", "shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     t.withColumn("n_tok", col("media_tokens") + col("caption_tokens"))

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.text.Tokens.{distinctTexts, docs, duckGrams, grams, shingles, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -19,48 +20,6 @@ import org.apache.spark.sql.expressions.Window
   * the real use case (held-out evals vs a 100 TB corpus).
   */
 object CorpusOps {
-
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(s) // graft_shingles in any session
-    Tables.documents(s, d)
-  }
-
-  /** Exact-duplicate collapse for the LM scorers: the corpus folded to
-    * one row per distinct text (keyed by a 128-bit [[graft.Hash128]]
-    * fold) with its multiplicity, plus the (doc_id, tkey) map for the
-    * final expansion join. Model counts weighted by `m` equal the
-    * doc-level counts exactly, and twin docs score identically, so
-    * collapsed compute + linear join-back reproduces the naive per-doc
-    * output bit-for-bit — the duplicate-collapse discipline (SURVEY §4)
-    * applied to LM scoring. On a replicated crawl every downstream stage
-    * (token explode, tf partial-agg, model joins) shrinks by the
-    * duplication factor, for the price of the one text-key shuffle
-    * dedup_exact already pays (partial-agg: each map partition ships at
-    * most one copy of each distinct text). Key injectivity is pinned by
-    * CorpusOpsSpec's guard, by the cross-engine hash gate at every
-    * tested SF (the DuckDB twins stay doc-level), and structurally by
-    * the 128-bit width (~2^-128 per pair — holds past 1e9 distinct
-    * texts, where a 64-bit fold's birthday bound reached ~3%). */
-  private[text] def distinctTexts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val base = docs(s, d)
-      .select(col("doc_id"), graft.Hash128.key128(col("text")).as("tkey"), col("text"))
-    val keyed = base.select("doc_id", "tkey")
-    val dist = base.groupBy("tkey")
-      .agg(min("text").as("text"), count(lit(1)).cast("long").as("m"))
-    (keyed, dist)
-  }
-
-  /** Word bigrams / 4-grams via the native codegen shingler
-    * ([[WordShingles]] — see TextOps.shingleExpr for why not a
-    * higher-order-function composition). */
-  private def bigramExpr(ws: String): String = s"graft_shingles($ws, 2)"
-  private def gram4Expr(ws: String): String = s"graft_shingles($ws, 4)"
-
-  /** DuckDB twin of [[gram4Expr]] — single definition shared by
-    * decontaminate and the funnel (drift here silently desynchronizes the
-    * funnel from the stage it summarizes). */
-  private val duckG4: String =
-    "list_transform(range(1, len(ws) - 2), i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3])"
 
   /** Quality-gate features + per-rule flags — the single source of the
     * thresholds, shared by quality_filter (flags per rule) and
@@ -94,11 +53,11 @@ object CorpusOps {
     * predicates are the exact strings the oracles use). */
   private[graft] def withQualityFlags(df: DataFrame): DataFrame = {
     val staged = df
-      .withColumn("n_words", expr("size(split(text, ' '))"))
-      .withColumn("n_distinct", expr("size(array_distinct(split(text, ' ')))"))
+      .withColumn("n_words", size(words))
+      .withColumn("n_distinct", size(array_distinct(words)))
       .withColumn("word_chars", expr("length(replace(text, ' ', ''))"))
       .withColumn("n_stop",
-        expr("size(filter(split(text, ' '), w -> w IN ('the', 'a', 'of')))"))
+        size(filter(words, _.isin("the", "a", "of"))))
     ruleFlags.foldLeft(staged) { case (d, (n, p)) =>
       d.withColumn(n, when(expr(p), 1).otherwise(0))
     }
@@ -113,9 +72,9 @@ object CorpusOps {
     * |distinct bigrams| rows, linear at any corpus size. */
   val docRepetition: Q = Q.sql(
     "doc_repetition",
-    """WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
       |g AS (SELECT doc_id,
-      |        unnest(list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1]))
+      |        unnest(${duckGrams(2)})
       |          AS gram
       |      FROM w),
       |c AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
@@ -135,9 +94,9 @@ object CorpusOps {
     // chain this replaces, minus its two gram-string exchanges). Docs
     // with fewer than 2 words produce no bigrams and are absent from the
     // former inner join — the tot > 0 filter reproduces that dropout.
-    val (keyed, dist) = distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val per = dist
-      .select(col("tkey"), split(col("text"), " ").as("ws"))
+      .select(col("tkey"), words.as("ws"))
       .select(col("tkey"), expr("graft_gram_stats(ws, 2)").as("st"))
       .filter(col("st.tot") > 0)
       .select(col("tkey"), col("st.tot").as("n_bigrams"),
@@ -175,7 +134,7 @@ object CorpusOps {
       |FROM r ORDER BY doc_id""".stripMargin) { (s, d) =>
     // distinct-text collapse: the whole rule battery is a pure text
     // function — evaluated once per distinct text, mapped back by tkey
-    val (keyed, dist) = distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val per = withQualityFlags(dist)
       .withColumn("n_failed", ruleFlags.map(f => col(f._1)).reduce(_ + _))
       .withColumn("passed", when(col("n_failed") === 0, 1).otherwise(0))
@@ -234,9 +193,7 @@ object CorpusOps {
         |    / nullif(1.0 * tot_failed / tot_docs, 0), 4) AS lift
         |FROM ($duckRows)
         |ORDER BY source, rule""".stripMargin) { (s, d) =>
-      val keyedSrc = docs(s, d).select(col("doc_id"), col("source"),
-        graft.Hash128.key128(col("text")).as("tkey"))
-      val (_, dist) = distinctTexts(s, d)
+      val (keyedSrc, dist) = distinctTexts(docs(s, d), Seq("doc_id", "source"))
       val per = withQualityFlags(dist)
         .select(col("tkey") +: ruleFlags.map(f => col(f._1)): _*)
       val w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -293,7 +250,7 @@ object CorpusOps {
          |  FROM documents GROUP BY md5(text)),
          |w AS (SELECT tk, str_split(text, ' ') AS ws FROM grp),
          |ex AS MATERIALIZED (
-         |  SELECT tk, unnest(list_distinct($duckG4)) AS shingle FROM w),
+         |  SELECT tk, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
          |bsh AS MATERIALIZED (
          |  SELECT e.tk AS btk, e.shingle FROM ex e
          |  JOIN grp g ON g.tk = e.tk WHERE g.m_bench >= 1),
@@ -312,7 +269,7 @@ object CorpusOps {
     Q.sqlDual(
       "decontaminate",
       s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-        |ex AS (SELECT doc_id, unnest(list_distinct($duckG4)) AS shingle FROM w),
+        |ex AS (SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
         |b AS (SELECT doc_id AS bench_id, shingle FROM ex WHERE doc_id % 29 = 0),
         |c AS (SELECT doc_id, shingle FROM ex WHERE doc_id % 29 <> 0)
         |SELECT c.doc_id, count(DISTINCT c.shingle) AS n_hit_shingles,
@@ -329,15 +286,12 @@ object CorpusOps {
       // share verdicts, expanded by the linear membership join. Note the
       // bench/corpus split is an ID property (doc_id % 29), so a content
       // group can stand on BOTH sides; m_bench counts its bench twins.
-      val keyedAll = docs(s, d)
-        .select(col("doc_id"), graft.Hash128.key128(col("text")).as("tkey"))
+      val (keyedAll, dist) = distinctTexts(docs(s, d))
       val meta = keyedAll.groupBy("tkey").agg(
         sum(when(col("doc_id") % 29 === 0, 1).otherwise(0)).cast("long").as("m_bench"))
-      val exd = docs(s, d)
-        .select(graft.Hash128.key128(col("text")).as("tkey"), col("text"))
-        .groupBy("tkey").agg(min("text").as("text"))
-        .select(col("tkey"), split(col("text"), " ").as("ws"))
-        .select(col("tkey"), explode(array_distinct(expr(gram4Expr("ws")))).as("shingle"))
+      val exd = dist
+        .select(col("tkey"), words.as("ws"))
+        .select(col("tkey"), grams(4, distinct = true).as("shingle"))
       val benchSh = exd
         .join(meta.filter(col("m_bench") >= 1).select("tkey"), Seq("tkey"), "left_semi")
         .select(col("tkey").as("btk"), col("shingle"))
@@ -374,7 +328,7 @@ object CorpusOps {
   val contaminationSources: Q = Q.sqlDual(
     "contamination_sources",
     s"""WITH w AS (SELECT doc_id, source, str_split(text, ' ') AS ws FROM documents),
-      |ex AS (SELECT doc_id, source, unnest(list_distinct($duckG4)) AS shingle FROM w),
+      |ex AS (SELECT doc_id, source, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
       |b AS (SELECT doc_id AS bench_id, shingle FROM ex WHERE doc_id % 29 = 0),
       |h AS (SELECT c.doc_id, c.source, c.shingle, b.bench_id
       |      FROM ex c JOIN b USING (shingle) WHERE c.doc_id % 29 <> 0),
@@ -409,7 +363,7 @@ object CorpusOps {
       |  SELECT md5(text) AS tk, min(text) AS text FROM documents GROUP BY 1),
       |w AS (SELECT tk, str_split(text, ' ') AS ws FROM gt),
       |ex AS MATERIALIZED (
-      |  SELECT tk, unnest(list_distinct($duckG4)) AS shingle FROM w),
+      |  SELECT tk, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
       |bb AS (SELECT tk, source, mb FROM gts WHERE mb >= 1),
       |bsh AS MATERIALIZED (
       |  SELECT e.tk AS btk, e.shingle FROM ex e
@@ -448,9 +402,9 @@ object CorpusOps {
     // broadcast(bench) also pinned an sf-scaling frame to the driver;
     // the distinct set joins un-hinted, AQE decides.)
     val ex = docs(s, d)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("source"), words.as("ws"))
       .select(col("doc_id"), col("source"),
-        explode(array_distinct(expr(gram4Expr("ws")))).as("shingle"))
+        grams(4, distinct = true).as("shingle"))
     val bench = ex.filter(col("doc_id") % 29 === 0)
       .select(col("doc_id").as("bench_id"), col("shingle"))
     val corpus = ex.filter(col("doc_id") % 29 =!= 0)
@@ -517,7 +471,7 @@ object CorpusOps {
     Q.sql(
       "decontaminate_bloom",
       s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-        |ex AS (SELECT doc_id, unnest(list_distinct($duckG4)) AS shingle FROM w),
+        |ex AS (SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
         |bs AS (SELECT DISTINCT shingle FROM ex WHERE doc_id % 29 = 0),
         |bh AS (SELECT shingle, ${TextOps.duckWordHash("shingle")} AS h FROM bs),
         |mm AS (SELECT 8 * count(*) AS m FROM bs),
@@ -542,8 +496,8 @@ object CorpusOps {
         |FROM fl GROUP BY 1 HAVING sum(bloom_hit) > 0
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
       val ex = docs(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
-        .select(col("doc_id"), explode(array_distinct(expr(gram4Expr("ws")))).as("shingle"))
+        .select(col("doc_id"), words.as("ws"))
+        .select(col("doc_id"), grams(4, distinct = true).as("shingle"))
       val bs = ex.filter(col("doc_id") % 29 === 0).select("shingle").distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val bh = bs.select(col("shingle"),
@@ -644,7 +598,7 @@ object CorpusOps {
       |  round(1.0 * sum(u.n_new) OVER (ORDER BY u.bucket) / t.n_distinct, 4)
       |    AS cum_distinct_share
       |FROM u CROSS JOIN t ORDER BY u.bucket""".stripMargin) { (s, d) =>
-    val (keyed, dist0) = distinctTexts(s, d)
+    val (keyed, dist0) = distinctTexts(docs(s, d))
     val mx = docs(s, d).agg((max("doc_id") + 1).as("hi"))
     val bc = docs(s, d).crossJoin(broadcast(mx))
       .select(expr("CAST(doc_id * 20 div hi AS BIGINT)").as("bucket"))
@@ -712,7 +666,7 @@ object CorpusOps {
       |       WHEN psi < 0.25 THEN 'moderate' ELSE 'shifted' END AS verdict
       |FROM agg ORDER BY source, feature""".stripMargin) { (s, d) =>
     val f = docs(s, d).select(col("source"),
-      expr("size(split(text, ' '))").as("n_words"),
+      size(words).as("n_words"),
       expr("length(replace(text, ' ', ''))").as("word_chars"))
     val b = f.select(col("source"), lit("n_words").as("feature"),
         expr("least(n_words div 10, 12)").cast("long").as("bin"))
@@ -873,7 +827,7 @@ object CorpusOps {
       |        / round(1.0 * tokens / sum_tokens, 6), 4) AS boost
       |FROM w CROSS JOIN t ORDER BY lang""".stripMargin) { (s, d) =>
     val perLang = docs(s, d)
-      .select(col("lang"), expr("size(split(text, ' '))").as("n_tok"))
+      .select(col("lang"), size(words).as("n_tok"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tokens"))
       .withColumn("wgt",
@@ -914,7 +868,7 @@ object CorpusOps {
       |  round(quantile_cont(n_tok, 0.90), 4) AS p90
       |FROM t GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
     docs(s, d)
-      .select(col("source"), expr("size(split(text, ' '))").as("n_tok"))
+      .select(col("source"), size(words).as("n_tok"))
       .groupBy("source").agg(
         count(lit(1)).as("n_docs"),
         sum("n_tok").as("total_tokens"),
@@ -959,7 +913,7 @@ object CorpusOps {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs(s, d)
       .select(col("doc_id"), col("source"),
-        expr("size(split(text, ' '))").as("n_tok"))
+        size(words).as("n_tok"))
       .withColumn("start_off",
         (sum("n_tok").over(tape) - col("n_tok")).cast("long"))
       .select(col("doc_id"), col("source"), col("n_tok"), col("start_off"),
@@ -1015,7 +969,7 @@ object CorpusOps {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs(s, d)
       .select(col("doc_id"), col("source"),
-        expr("size(split(text, ' '))").as("n_tok"))
+        size(words).as("n_tok"))
       .withColumn("start_off",
         (sum("n_tok").over(tape) - col("n_tok")).cast("long"))
       .withColumn("cf", expr("start_off div 512"))
@@ -1070,9 +1024,9 @@ object CorpusOps {
       |    CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY fp) THEN 1 ELSE 0 END
       |      AS ok_unique
       |  FROM f),
-      |ex AS (SELECT doc_id, unnest(list_distinct($duckG4)) AS shingle FROM f),
+      |ex AS (SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM f),
       |b AS (SELECT DISTINCT shingle FROM (
-      |        SELECT doc_id, unnest(list_distinct($duckG4)) AS shingle
+      |        SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle
       |        FROM (SELECT doc_id, str_split(text, ' ') AS ws FROM documents
       |              WHERE doc_id % 29 = 0))),
       |hit AS (SELECT DISTINCT ex.doc_id FROM ex JOIN b USING (shingle))""".stripMargin
@@ -1090,25 +1044,21 @@ object CorpusOps {
     // survivor per exact-dup group) and stays a corpus-side window —
     // partitioned by tkey, the SAME grouping the former md5(text) fp
     // induced, so verdicts are unchanged.
-    def distinctOf(df: DataFrame): DataFrame = df
-      .groupBy(graft.Hash128.key128(col("text")).as("tkey"))
-      .agg(min("text").as("text"))
     val scoped = docs(s, d).filter(col("doc_id") % 29 =!= 0)
-    val distS = distinctOf(scoped)
+    val (keyedS, distS) = distinctTexts(scoped, scoped.columns.toSeq)
     val flagsT = withQualityFlags(distS)
       .withColumn("ok_quality",
         when(ruleFlags.map(f => col(f._1)).reduce(_ + _) === 0, 1).otherwise(0))
       .select("tkey", "ok_quality")
     def gramsT(df: DataFrame) = df
-      .select(col("tkey"), split(col("text"), " ").as("ws"))
-      .select(col("tkey"), explode(array_distinct(expr(gram4Expr("ws")))).as("shingle"))
+      .select(col("tkey"), words.as("ws"))
+      .select(col("tkey"), grams(4, distinct = true).as("shingle"))
     val benchShingles =
-      gramsT(distinctOf(docs(s, d).filter(col("doc_id") % 29 === 0)))
+      gramsT(distinctTexts(docs(s, d).filter(col("doc_id") % 29 === 0))._2)
         .select("shingle").distinct()
     val hitT = gramsT(distS).join(broadcast(benchShingles), Seq("shingle"))
       .select(col("tkey").as("hit_tkey")).distinct()
-    scoped
-      .withColumn("tkey", graft.Hash128.key128(col("text")))
+    keyedS
       .withColumn("ok_unique",
         when(col("doc_id") === min("doc_id").over(Window.partitionBy("tkey")), 1)
           .otherwise(0))
@@ -1177,7 +1127,7 @@ object CorpusOps {
       docs(s, d)
         .select(col("lang"), col("source"),
           expr(splitCase(sparkBucket)).as("split"),
-          size(split(col("text"), " ")).as("n_words"))
+          size(words).as("n_words"))
         .groupBy("lang", "source", "split")
         .agg(count(lit(1)).as("n_docs"), sum("n_words").as("n_words"))
         .withColumn("doc_share",
@@ -1354,16 +1304,16 @@ object CorpusOps {
       |FROM x ORDER BY doc_id""".stripMargin,
     scaleOracle) { (s, d) =>
     // two collapses before anything heavy: docs fold to distinct texts
-    // (multiplicity-weighted model counts — [[distinctTexts]]), and
+    // (multiplicity-weighted model counts — [[Tokens.distinctTexts]]), and
     // terms dictionary-encode to 16-byte 128-bit ids (Hash128.key128),
     // so the tf partial-agg and the model join — the sf10 spill drivers
     // — carry fixed-width keys over 1/dup-factor of the mass. Surprisal
     // needs only counts, so the string itself is never published
     // (injectivity pinned by CorpusOpsSpec's term-id guard and by the
     // ~2^-128 pair bound — holds at web-vocab scale)
-    val (keyed, dist) = distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val tf = dist
-      .select(col("tkey"), col("m"), split(col("text"), " ").as("ws"))
+      .select(col("tkey"), col("m"), words.as("ws"))
       .select(col("tkey"), col("m"), size(col("ws")).as("n"), explode(col("ws")).as("term"))
       .select(col("tkey"), col("m"), col("n"), graft.Hash128.key128(col("term")).as("tid"))
       .groupBy("tkey", "m", "n", "tid").agg(count(lit(1)).as("c"))
@@ -1420,7 +1370,7 @@ object CorpusOps {
     * xent_e4, bucket) under the per-language unigram LM. */
   private def pplDocBuckets(s: SparkSession, d: String): DataFrame = {
     val tf = docs(s, d)
-      .select(col("doc_id"), col("lang"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("lang"), words.as("ws"))
       .select(col("doc_id"), col("lang"), size(col("ws")).as("n"),
         explode(col("ws")).as("term"))
       .groupBy("doc_id", "lang", "n", "term").agg(count(lit(1)).as("c"))
@@ -1595,7 +1545,7 @@ object CorpusOps {
     "boilerplate_ngrams",
     s"""WITH w AS (SELECT doc_id, source, str_split(text, ' ') AS ws FROM documents),
       |g AS (SELECT doc_id, source, unnest(list_distinct(
-      |        list_transform(range(1, len(ws)), i -> ws[i] || ' ' || ws[i+1])))
+      |        ${duckGrams(2)}))
       |        AS gram
       |      FROM w),
       |df AS (SELECT source, gram, count(*) AS df FROM g GROUP BY 1, 2),
@@ -1610,9 +1560,9 @@ object CorpusOps {
       |  round(1.0 * n_boiler / n_grams, 4) AS boiler_ratio
       |FROM per ORDER BY doc_id""".stripMargin) { (s, d) =>
     val g = docs(s, d)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("source"), words.as("ws"))
       .select(col("doc_id"), col("source"),
-        explode(array_distinct(expr(bigramExpr("ws")))).as("gram"))
+        grams(2, distinct = true).as("gram"))
     val df = g.groupBy("source", "gram").agg(count(lit(1)).as("df"))
     val nd = docs(s, d).groupBy("source").agg(count(lit(1)).as("n_docs"))
     val bp = df.join(broadcast(nd), Seq("source"))
@@ -1664,7 +1614,7 @@ object CorpusOps {
       |  CAST(cum_types AS BIGINT) AS cum_types,
       |  round(1.0 * cum_types / total_types, 4) AS vocab_share
       |FROM cum ORDER BY decile""".stripMargin) { (s, d) =>
-    val w = docs(s, d).select(col("doc_id"), split(col("text"), " ").as("ws"))
+    val w = docs(s, d).select(col("doc_id"), words.as("ws"))
     val mx = docs(s, d).agg((max("doc_id") + 1).as("n_docs"))
     val ft = w.select(col("doc_id"), explode(col("ws")).as("term")).distinct()
       .groupBy("term").agg(min("doc_id").as("first_doc"))
@@ -1721,7 +1671,7 @@ object CorpusOps {
          |  round(1.0 * sum(oov) / count(*), 4) AS oov_type_rate
          |FROM j GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
       val b = docs(s, d).select(col("doc_id"), col("lang"),
-        split(col("text"), " ").as("ws"),
+        words.as("ws"),
         expr(sparkBucket).as("bucket"))
       val tv = b.filter(col("bucket") < 90)
         .select(explode(col("ws")).as("term")).distinct()
@@ -1799,7 +1749,7 @@ object CorpusOps {
          |  $slopeF AS slope, $interceptF AS intercept, $r2F AS r2
          |FROM a ORDER BY lang""".stripMargin) { (s, dir) =>
       val lc = docs(s, dir)
-        .select(col("lang"), explode(split(col("text"), " ")).as("term"))
+        .select(col("lang"), explode(words).as("term"))
         .groupBy("lang", "term").agg(count(lit(1)).as("c"))
       // two-phase top-k: membership in the global top-1000 implies
       // membership in the owning bucket's top-1000 under the same
@@ -1882,13 +1832,11 @@ object CorpusOps {
     // fans per-TEXT distinct terms out over the bounded distinct
     // (lang, source, tkey) frame instead of exploding every twin. The
     // persisted per-doc frame is TEXT-FREE (a few dozen bytes/doc).
-    val (_, dist) = distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d), Seq("doc_id", "lang", "source"))
     val perText = withQualityFlags(dist)
       .withColumn("passed", when(expr(passAllSql), 1).otherwise(0))
       .select("tkey", "n_words", "passed")
-    val f = docs(s, d)
-      .select(col("doc_id"), col("lang"), col("source"),
-        graft.Hash128.key128(col("text")).as("tkey"))
+    val f = keyed
       .join(perText, Seq("tkey"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dup = f.groupBy("tkey").agg(count(lit(1)).as("n_same"))
@@ -1900,7 +1848,7 @@ object CorpusOps {
         sum("passed").cast("long").as("n_pass"),
         sum("is_dup").cast("long").as("n_exact_dup"))
     val terms = dist.select(col("tkey"),
-      explode(array_distinct(split(col("text"), " "))).as("term"))
+      explode(array_distinct(words)).as("term"))
     val ty = f.select("lang", "source", "tkey").distinct()
       .join(terms, Seq("tkey"))
       .select("lang", "source", "term").distinct()
@@ -1963,7 +1911,7 @@ object CorpusOps {
        |    AS data_constrained
        |FROM a ORDER BY lang""".stripMargin) { (s, d) =>
       val perLang = docs(s, d)
-        .select(col("lang"), expr("size(split(text, ' '))").as("n_tok"))
+        .select(col("lang"), size(words).as("n_tok"))
         .groupBy("lang")
         .agg(sum("n_tok").cast("long").as("tokens"))
         .withColumn("wgt",
@@ -2012,7 +1960,7 @@ object CorpusOps {
          |  SELECT doc_id, ${splitCase(duckBucket)} AS split,
          |    str_split(text, ' ') AS ws
          |  FROM documents),
-         |ex AS (SELECT doc_id, split, unnest(list_distinct($duckG4)) AS shingle
+         |ex AS (SELECT doc_id, split, unnest(list_distinct(${duckGrams(4)})) AS shingle
          |       FROM w),
          |tr AS (SELECT DISTINCT shingle FROM ex WHERE split = 'train'),
          |leaked AS (
@@ -2029,9 +1977,9 @@ object CorpusOps {
          |ORDER BY tot.split""".stripMargin) { (s, d) =>
       val w = docs(s, d).select(col("doc_id"),
         expr(splitCase(sparkBucket)).as("split"),
-        split(col("text"), " ").as("ws"))
+        words.as("ws"))
       val ex = w.select(col("doc_id"), col("split"),
-        explode(array_distinct(expr(gram4Expr("ws")))).as("shingle"))
+        grams(4, distinct = true).as("shingle"))
       val tr = ex.filter(col("split") === "train").select("shingle").distinct()
       val leaked = ex.filter(col("split") =!= "train")
         .join(tr, Seq("shingle"), "left_semi")
@@ -2065,11 +2013,10 @@ object CorpusOps {
     * over raw data, no all-pairs anywhere. */
   val ngramNovelty: Q = Q.sql(
     "ngram_novelty",
-    """WITH w AS (SELECT doc_id, lang, source, str_split(text, ' ') AS ws
+    s"""WITH w AS (SELECT doc_id, lang, source, str_split(text, ' ') AS ws
       |       FROM documents),
       |sh AS (SELECT doc_id, lang, source,
-      |         list_distinct(list_transform(range(1, len(ws) - 1),
-      |           i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s3
+      |         list_distinct(${duckGrams(3)}) AS s3
       |       FROM w),
       |ex AS (SELECT doc_id, lang, source, unnest(s3) AS shingle FROM sh),
       |f AS (SELECT shingle, min(doc_id) AS first_doc FROM ex GROUP BY 1)
@@ -2083,8 +2030,7 @@ object CorpusOps {
       |GROUP BY 1, 2, 3 ORDER BY doc_id""".stripMargin) { (s, d) =>
     val ex = docs(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
-        expr(s"array_distinct(${TextOps.shingleExpr("split(text, ' ')")})")
-          .as("s3"))
+        array_distinct(shingles(3, words)).as("s3"))
       .select(col("doc_id"), col("lang"), col("source"),
         explode(col("s3")).as("shingle"))
     val firsts = ex.groupBy("shingle").agg(min("doc_id").as("first_doc"))
@@ -2146,7 +2092,7 @@ object CorpusOps {
         |  round(1.0 * k.n_kept / r.n_docs, 4) AS realized_rate
         |FROM r JOIN k USING (lang) ORDER BY r.lang""".stripMargin) { (s, d) =>
       val perLang = docs(s, d)
-        .select(col("lang"), expr("size(split(text, ' '))").as("n_tok"))
+        .select(col("lang"), size(words).as("n_tok"))
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tokens"))
         .withColumn("wgt",
@@ -2163,7 +2109,7 @@ object CorpusOps {
         round(col("rate") * 1000000, 0).cast("long")
       val kept = docs(s, d)
         .select(col("lang"), col("doc_id"),
-          expr("size(split(text, ' '))").as("n_tok"))
+          size(words).as("n_tok"))
         .join(broadcast(rates.select("lang", "rate")), Seq("lang"))
         .groupBy("lang")
         .agg(sum(when(keep, 1).otherwise(0)).cast("long").as("n_kept"),
@@ -2206,7 +2152,7 @@ object CorpusOps {
         |  CAST(max(n_words) AS INT) AS max_words
         |FROM t GROUP BY lang ORDER BY lang""".stripMargin) { (s, d) =>
       val hist = docs(s, d)
-        .select(col("lang"), expr("size(split(text, ' '))").as("n_words"))
+        .select(col("lang"), size(words).as("n_words"))
         .groupBy("lang", "n_words").agg(count(lit(1)).as("cnt"))
       val byLang = Window.partitionBy("lang")
       val t = hist
@@ -2351,7 +2297,7 @@ object CorpusOps {
       |ORDER BY source""".stripMargin) { (s, d) =>
     val dec = "decimal(18,6)"
     val sw = docs(s, d)
-      .select(col("source"), explode(split(col("text"), " ")).as("word"))
+      .select(col("source"), explode(words).as("word"))
       .groupBy("source", "word").agg(count(lit(1)).as("c"))
     val vocab = sw.groupBy("word").agg(sum("c").cast("long").as("cw"))
     val top5 = vocab.orderBy(col("cw").desc, col("word")).limit(5)
@@ -2416,7 +2362,7 @@ object CorpusOps {
        |FROM cv JOIN t ON cv.lang = t.lang
        |ORDER BY t.lang""".stripMargin) { (s, d) =>
     val lc = docs(s, d)
-      .select(col("lang"), explode(split(col("text"), " ")).as("term"))
+      .select(col("lang"), explode(words).as("term"))
       .groupBy("lang", "term").agg(count(lit(1)).as("c"))
     val t = lc.groupBy("lang")
       .agg(count(lit(1)).cast("long").as("n_types"),
@@ -2481,7 +2427,7 @@ object CorpusOps {
       |JOIN n nb ON nb.lang = p.lang_b
       |ORDER BY lang_a, lang_b""".stripMargin) { (s, d) =>
     val lt = docs(s, d)
-      .select(col("lang"), explode(split(col("text"), " ")).as("term"))
+      .select(col("lang"), explode(words).as("term"))
       .distinct()
     val n = lt.groupBy("lang").agg(count(lit(1)).cast("long").as("n_types"))
     val p = lt.select(col("lang").as("lang_a"), col("term"))
@@ -2536,8 +2482,7 @@ object CorpusOps {
          |ug AS (SELECT m, unnest(ws) AS term FROM w),
          |uc AS (SELECT term, CAST(sum(m) AS BIGINT) AS cu FROM ug GROUP BY 1),
          |nt AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
-         |db AS (SELECT gid, m, unnest(list_transform(range(1, len(ws)),
-         |         i -> ws[i] || ' ' || ws[i+1])) AS gram FROM w),
+         |db AS (SELECT gid, m, unnest(${duckGrams(2)}) AS gram FROM w),
          |dtf AS MATERIALIZED (SELECT gid, m, gram, CAST(count(*) AS BIGINT) AS tf
          |        FROM db GROUP BY 1, 2, 3),
          |bc AS (SELECT gram, CAST(sum(tf * m) AS BIGINT) AS cbg FROM dtf GROUP BY 1),
@@ -2565,8 +2510,7 @@ object CorpusOps {
          |ug AS (SELECT unnest(ws) AS term FROM w),
          |uc AS (SELECT term, CAST(count(*) AS BIGINT) AS cu FROM ug GROUP BY 1),
          |nt AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
-         |db AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)),
-         |         i -> ws[i] || ' ' || ws[i+1])) AS gram FROM w),
+         |db AS (SELECT doc_id, unnest(${duckGrams(2)}) AS gram FROM w),
          |dtf AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
          |        FROM db GROUP BY 1, 2),
          |bc AS (SELECT gram, CAST(sum(tf) AS BIGINT) AS cbg FROM dtf GROUP BY 1),
@@ -2598,13 +2542,13 @@ object CorpusOps {
       // stage that explodes them. gid determines (w1, w2), so grouping
       // carries them for free. A doc with < 2 words has no bigram rows
       // and drops out of the expansion join — exactly the naive shape.
-      val (keyed, dist) = distinctTexts(s, d)
-      val w = dist.select(col("tkey"), col("m"), split(col("text"), " ").as("ws"))
+      val (keyed, dist) = distinctTexts(docs(s, d))
+      val w = dist.select(col("tkey"), col("m"), words.as("ws"))
       val uc = w.select(col("m"), explode(col("ws")).as("term"))
         .select(col("m"), graft.Hash128.key128(col("term")).as("w2"))
         .groupBy("w2").agg(sum("m").cast("long").as("cu"))
       val nt = uc.agg(sum("cu").cast("long").as("n"))
-      val dtf = w.select(col("tkey"), col("m"), explode(expr("graft_shingles(ws, 2)")).as("gram"))
+      val dtf = w.select(col("tkey"), col("m"), grams(2).as("gram"))
         .select(col("tkey"), col("m"), graft.Hash128.key128(col("gram")).as("gid"),
           graft.Hash128.key128(expr("split_part(gram, ' ', 1)")).as("w1"),
           graft.Hash128.key128(expr("split_part(gram, ' ', 2)")).as("w2"))
@@ -2673,8 +2617,7 @@ object CorpusOps {
          |gmr AS MATERIALIZED (SELECT d.doc_id, g.gid
          |       FROM documents d JOIN grp g USING (text)),
          |w AS (SELECT gid, m, str_split(text, ' ') AS ws FROM grp),
-         |db AS (SELECT gid, m, unnest(list_transform(range(1, len(ws)),
-         |         i -> ws[i] || ' ' || ws[i+1])) AS gram FROM w),
+         |db AS (SELECT gid, m, unnest(${duckGrams(2)}) AS gram FROM w),
          |dtf AS MATERIALIZED (SELECT gid, m, gram, CAST(count(*) AS BIGINT) AS tf
          |        FROM db GROUP BY 1, 2, 3),
          |bc AS MATERIALIZED (SELECT gram, CAST(sum(tf * m) AS BIGINT) AS cbg
@@ -2706,8 +2649,7 @@ object CorpusOps {
     Q.sqlDual(
       "corpus_kn_ppl",
       s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-         |db AS (SELECT doc_id, unnest(list_transform(range(1, len(ws)),
-         |         i -> ws[i] || ' ' || ws[i+1])) AS gram FROM w),
+         |db AS (SELECT doc_id, unnest(${duckGrams(2)}) AS gram FROM w),
          |dtf AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
          |        FROM db GROUP BY 1, 2),
          |bc AS (SELECT gram, CAST(sum(tf) AS BIGINT) AS cbg FROM dtf GROUP BY 1),
@@ -2742,9 +2684,9 @@ object CorpusOps {
       // multiplicity-aware or multiplicity-FREE: cbg weights by m, while
       // k1/nl/bb count DISTINCT gram types — a twin doc introduces no
       // new type, so the group-level bc yields them exactly.
-      val (keyed, dist) = distinctTexts(s, d)
-      val w = dist.select(col("tkey"), col("m"), split(col("text"), " ").as("ws"))
-      val dtf = w.select(col("tkey"), col("m"), explode(expr("graft_shingles(ws, 2)")).as("gram"))
+      val (keyed, dist) = distinctTexts(docs(s, d))
+      val w = dist.select(col("tkey"), col("m"), words.as("ws"))
+      val dtf = w.select(col("tkey"), col("m"), grams(2).as("gram"))
         .select(col("tkey"), col("m"), graft.Hash128.key128(col("gram")).as("gid"),
           graft.Hash128.key128(expr("split_part(gram, ' ', 1)")).as("w1"),
           graft.Hash128.key128(expr("split_part(gram, ' ', 2)")).as("w2"))
@@ -2818,8 +2760,8 @@ object CorpusOps {
     // exact int/10⁴ quotient, identical IEEE both sides
     val f = docs(s, d)
       .select(col("doc_id"), col("lang"),
-        expr("size(split(text, ' '))").as("n_words"),
-        expr("size(array_distinct(split(text, ' ')))").as("n_distinct"),
+        size(words).as("n_words"),
+        size(array_distinct(words)).as("n_distinct"),
         substring(md5(col("text")), 1, 8).as("order_key"))
     f.withColumn("bp",
         expr("""(7 * least(n_words * 100, 10000)
@@ -2975,7 +2917,7 @@ object CorpusOps {
       |FROM d CROSS JOIN dt ORDER BY doc_id""".stripMargin) { (s, d) =>
     val f = docs(s, d)
       .select(col("doc_id"), col("lang"),
-        explode(split(col("text"), " ")).as("term"))
+        explode(words).as("term"))
       .filter(length(col("term")) > 0)
       .select(col("doc_id"), col("lang"),
         (expr(TextOps.sparkWordHash("term")) % DsirB).as("b"))
@@ -3075,7 +3017,7 @@ object CorpusOps {
       |    AS new_weight
       |FROM u CROSS JOIN n ORDER BY lang""".stripMargin) { (s, d) =>
     val tf = docs(s, d)
-      .select(col("lang"), explode(split(col("text"), " ")).as("term"))
+      .select(col("lang"), explode(words).as("term"))
       .groupBy("lang", "term").agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val gt = tf.groupBy("term").agg(sum("c").cast("long").as("ct"))
@@ -3213,7 +3155,7 @@ object CorpusOps {
     // doc-level shape (the unchanged doc-level DuckDB oracle is the
     // proof); the win is that no token and no duplicate text ever rides
     // a shuffle — replication-invariant at the 100x/1000x legs.
-    val (keyed, dist) = distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val feats = withQualityFlags(dist)
       .withColumn("heur_pass", when(expr(passAllSql), 1L).otherwise(0L))
       .select(col("tkey"), col("text"), col("heur_pass"),
@@ -3223,7 +3165,7 @@ object CorpusOps {
     val lab = feats.join(mt, Seq("tkey"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tf = lab
-      .select(col("tkey"), explode(split(col("text"), " ")).as("term"))
+      .select(col("tkey"), explode(words).as("term"))
       .filter(length(col("term")) > 0)
       .select(col("tkey"), (expr(TextOps.sparkWordHash("term")) % NbB).as("b"))
       .groupBy("tkey", "b").agg(count(lit(1)).as("c"))
@@ -3447,18 +3389,13 @@ object CorpusOps {
     * independent doc-level explode shape. */
   val docRepetitionTopn: Q = {
     val ns = Seq(3, 4, 5, 10)
-    def duckGram(n: Int) = {
-      val parts = (0 until n).map(k => if (k == 0) "ws[i]" else s"ws[i+$k]")
-        .mkString(" || ' ' || ")
-      s"list_transform(range(1, len(ws) - ${n - 2}), i -> $parts)"
-    }
-    val duckGrams = ns.map(n =>
-      s"SELECT doc_id, $n AS n, unnest(${duckGram(n)}) AS gram FROM w")
+    val gramRows = ns.map(n =>
+      s"SELECT doc_id, $n AS n, unnest(${duckGrams(n)}) AS gram FROM w")
       .mkString("\n  UNION ALL ")
     Q.sql(
       "doc_repetition_topn",
       s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-         |g AS ($duckGrams),
+         |g AS ($gramRows),
          |c AS (SELECT doc_id, n, gram, CAST(count(*) AS BIGINT) AS c
          |      FROM g GROUP BY 1, 2, 3),
          |a AS (SELECT doc_id, n, CAST(sum(c) AS BIGINT) AS tot,
@@ -3484,9 +3421,9 @@ object CorpusOps {
         s"IF($c.tot = 0, 0.0e0, round(1.0 * $c.best / $c.tot, 4))"
       def dupRatio(c: String): String =
         s"IF($c.tot = 0, 0.0e0, round(1.0 * ($c.tot - $c.dist) / $c.tot, 4))"
-      val (keyed, dist) = distinctTexts(s, d)
+      val (keyed, dist) = distinctTexts(docs(s, d))
       val perText = dist
-        .select(col("tkey"), split(col("text"), " ").as("ws"))
+        .select(col("tkey"), words.as("ws"))
         .select(col("tkey"),
           expr(famStats(3)).as("f3"), expr(famStats(4)).as("f4"),
           expr(famStats(5)).as("f5"), expr(famStats(10)).as("f10"))

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.text.Tokens.{distinctTexts, docs, duckGrams, grams, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -19,11 +20,6 @@ import org.apache.spark.sql.expressions.Window
   * shuffle must not change a score), ranks order by (value, id).
   */
 object Retrieval {
-
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(s) // graft_shingles in any session
-    Tables.documents(s, d)
-  }
 
   // --------------------------------------------------------- chunking --
 
@@ -57,7 +53,7 @@ object Retrieval {
        |    AS chunk_digest
        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin) { (s, d) =>
     docs(s, d)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), words.as("ws"))
       .withColumn("n", size(col("ws")))
       .select(col("doc_id"), col("ws"), col("n"),
         explode(expr(s"sequence(0, n - 1, $ChunkStride)")).as("start_word"))
@@ -172,12 +168,12 @@ object Retrieval {
     // (minhashSigs discipline: MEMORY_AND_DISK so eviction at 100 TB
     // degrades to local-disk reads, not a silent recompute)
     val tf = docs(s, d)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), words.as("ws"))
       .select(col("doc_id"), size(col("ws")).as("dl"), explode(col("ws")).as("term"))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val stats = docs(s, d)
-      .select(size(split(col("text"), " ")).as("dl"))
+      .select(size(words).as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
     val dft = tf.join(broadcast(qTerms), Seq("term"))
       .groupBy("term").agg(count(lit(1)).as("df"))
@@ -336,9 +332,9 @@ object Retrieval {
     // containing the term, n_docs = Σm. So the whole chain runs on the
     // distinct-text collapse (SURVEY §4) — twins re-derive identical
     // top-3 lists, published per doc through the linear membership join.
-    val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val tf = dist
-      .select(col("tkey"), col("m"), explode(split(col("text"), " ")).as("term"))
+      .select(col("tkey"), col("m"), explode(words).as("term"))
       .groupBy("tkey", "m", "term").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dft = tf.groupBy("term").agg(sum("m").cast("long").as("df"))
@@ -389,7 +385,7 @@ object Retrieval {
        |  round(1.0 * n_shared / n_digests, 4) AS shared_ratio
        |FROM per WHERE n_shared >= 1 ORDER BY doc_id""".stripMargin) { (s, d) =>
     val dd = docs(s, d)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), words.as("ws"))
       .withColumn("n", size(col("ws")))
       .select(col("doc_id"), col("ws"), col("n"),
         explode(expr(s"sequence(0, n - 1, $ChunkStride)")).as("start_word"))
@@ -432,8 +428,7 @@ object Retrieval {
   val ngramStats: Q = Q.sql(
     "ngram_stats",
     s"""WITH w AS (SELECT lang, str_split(text, ' ') AS ws FROM documents),
-       |g AS (SELECT lang, unnest(list_transform(range(1, len(ws) - 1),
-       |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gram
+       |g AS (SELECT lang, unnest(${duckGrams(3)}) AS gram
        |      FROM w),
        |c AS (SELECT lang, gram, count(*) AS n FROM g GROUP BY 1, 2),
        |r AS (SELECT lang, gram, n,
@@ -442,8 +437,8 @@ object Retrieval {
        |SELECT lang, rnk, gram, n FROM r
        |WHERE rnk <= $NgramTopN ORDER BY lang, rnk""".stripMargin) { (s, d) =>
     val counts = docs(s, d)
-      .select(col("lang"), split(col("text"), " ").as("ws"))
-      .select(col("lang"), explode(expr("graft_shingles(ws, 3)")).as("gram"))
+      .select(col("lang"), words.as("ws"))
+      .select(col("lang"), grams(3).as("gram"))
       .groupBy("lang", "gram").agg(count(lit(1)).as("n"))
     // bucket fn needs no oracle parity: membership in the global top-10
     // implies membership in the owning bucket's top-10 for ANY partition
@@ -494,8 +489,7 @@ object Retrieval {
          |ug AS (SELECT unnest(ws) AS term FROM w),
          |uc AS (SELECT term, CAST(count(*) AS BIGINT) AS c FROM ug GROUP BY 1),
          |nt AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM uc),
-         |bg AS (SELECT unnest(list_transform(range(1, len(ws)),
-         |         i -> ws[i] || ' ' || ws[i+1])) AS gram FROM w),
+         |bg AS (SELECT unnest(${duckGrams(2)}) AS gram FROM w),
          |bc AS (SELECT gram, CAST(count(*) AS BIGINT) AS cxy FROM bg GROUP BY 1),
          |nbt AS (SELECT CAST(sum(cxy) AS BIGINT) AS nb FROM bc),
          |j AS (SELECT gram, cxy, ux.c AS cx, uy.c AS cy, n, nb
@@ -507,12 +501,12 @@ object Retrieval {
          |SELECT gram, cxy AS c_pair, cx AS c_left, cy AS c_right,
          |  $pmiFormula AS pmi
          |FROM j ORDER BY gram""".stripMargin) { (s, d) =>
-      val w = docs(s, d).select(split(col("text"), " ").as("ws"))
+      val w = docs(s, d).select(words.as("ws"))
       val uc = w.select(explode(col("ws")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("c"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nt = uc.agg(sum("c").cast("long").as("n"))
-      val bc = w.select(explode(expr("graft_shingles(ws, 2)")).as("gram"))
+      val bc = w.select(grams(2).as("gram"))
         .groupBy("gram").agg(count(lit(1)).as("cxy"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nbt = bc.agg(sum("cxy").cast("long").as("nb"))
@@ -667,7 +661,7 @@ object Retrieval {
        |FROM c GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2
        |ORDER BY chunk_digest""".stripMargin) { (s, d) =>
     docs(s, d)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), words.as("ws"))
       .withColumn("n", size(col("ws")))
       .select(col("doc_id"), col("ws"), col("n"),
         explode(expr(s"sequence(0, n - 1, $ChunkStride)")).as("start_word"))
@@ -1011,14 +1005,14 @@ object Retrieval {
     scaleOracle) { (s, d) =>
     // RAKE is a pure function of the text, so the Spark side mirrors the
     // scale twin: segment + score once per DISTINCT text (the
-    // CorpusOps.distinctTexts collapse — tkey replaces doc_id through
+    // Tokens.distinctTexts collapse — tkey replaces doc_id through
     // the whole chain) and expand the ≤3 phrase rows per doc through
     // the linear membership join at the end. Twin docs re-derive
     // identical phrases, so the output is bit-identical to the per-doc
     // run the naive oracle computes.
-    val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val t = dist
-      .select(col("tkey"), posexplode(split(col("text"), " ")).as(Seq("p", "word")))
+      .select(col("tkey"), posexplode(words).as(Seq("p", "word")))
       .filter(length(col("word")) > 0)
       .select(col("tkey"), col("word"), (col("p") + 1).cast("long").as("pos"),
         when(col("word").isin("the", "a", "of"), 1).otherwise(0).as("stop"))
@@ -1085,11 +1079,9 @@ object Retrieval {
          |w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
          |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
          |g2 AS (SELECT doc_id, len(ws) AS dl,
-         |         unnest(list_transform(range(1, len(ws)),
-         |           i -> ws[i] || ' ' || ws[i+1])) AS gram FROM w),
+         |         unnest(${duckGrams(2)}) AS gram FROM w),
          |g3 AS (SELECT doc_id, len(ws) AS dl,
-         |         unnest(list_transform(range(1, len(ws) - 1),
-         |           i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gram
+         |         unnest(${duckGrams(3)}) AS gram
          |       FROM w),
          |hits AS (SELECT pq.query_id, g.doc_id, g.dl, count(*) AS tf
          |         FROM pq JOIN g2 g ON pq.plen = 2 AND g.gram = pq.phrase
@@ -1114,12 +1106,10 @@ object Retrieval {
       graft.GraftFunctions.ensureRegistered(s)
       val pq = phraseQueries.toDF("query_id", "phrase", "plen")
       val w = docs(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+        .select(col("doc_id"), words.as("ws"))
       val st = w.agg(count(lit(1)).as("n_docs"), sum(size(col("ws"))).as("sum_dl"))
-      def grams(l: Int) = w.select(col("doc_id"), size(col("ws")).as("dl"),
-        explode(expr(s"graft_shingles(ws, $l)")).as("gram"))
       val hits = Seq(2, 3).map { l =>
-        grams(l)
+        w.select(col("doc_id"), size(col("ws")).as("dl"), grams(l).as("gram"))
           .join(broadcast(pq.filter(col("plen") === l)),
             col("gram") === col("phrase"))
           .groupBy("query_id", "doc_id", "dl").agg(count(lit(1)).as("tf"))

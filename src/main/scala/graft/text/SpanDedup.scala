@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Q, Tables}
+import graft.text.Tokens.distinctTexts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -80,10 +81,8 @@ object SpanDedup {
     // OR in one text that ≥ 2 docs share (max multiplicity ≥ 2). Per-doc
     // attributes (lang/source) rejoin at the linear doc-level expansion,
     // so two same-text docs from different sources keep their own rows.
-    val dist = docs(s, d)
-      .select(graft.Hash128.key128(col("text")).as("tkey"), col("text"), col("n_chars"))
-      .groupBy("tkey").agg(min("text").as("text"), min("n_chars").as("n_chars"),
-        count(lit(1)).cast("long").as("m"))
+    val (keyed, dist) = distinctTexts(docs(s, d), Seq("doc_id", "lang", "source", "n_chars"),
+      Seq(min("n_chars").as("n_chars")))
     val sp = dist
       .filter(col("n_chars") >= K)
       .select(col("tkey"), col("m"),
@@ -98,10 +97,7 @@ object SpanDedup {
       .agg(count(lit(1)).as("n_spans"),
         sum(when(col("mnt") =!= col("mxt") || col("mxm") >= 2, 1).otherwise(0))
           .as("n_dup"))
-    val perDoc = docs(s, d)
-      .filter(col("n_chars") >= K)
-      .select(col("doc_id"), col("lang"), col("source"), graft.Hash128.key128(col("text")).as("tkey"))
-      .join(perText, Seq("tkey"))
+    val perDoc = keyed.filter(col("n_chars") >= K).join(perText, Seq("tkey"))
     val rollup = perDoc.groupBy("lang", "source")
       .agg(count(lit(1)).as("docs_scanned"),
         sum(when(col("n_dup") > 0, 1).otherwise(0)).as("docs_with_dup"),
@@ -165,12 +161,9 @@ object SpanDedup {
     // contains it), first_doc is the min doc id over containing texts —
     // and the countDistinct over corpus-scale doc ids disappears. The
     // pass-2 text recovery re-scans only the distinct texts.
-    val base = docs(s, d)
-      .select(col("doc_id"), graft.Hash128.key128(col("text")).as("tkey"), col("text"), col("n_chars"))
-    val dist = base.groupBy("tkey")
-      .agg(min("text").as("text"), min("n_chars").as("n_chars"),
-        count(lit(1)).cast("long").as("m"), min("doc_id").as("mindoc"))
-      .filter(col("n_chars") >= K)
+    val (_, distAll) = distinctTexts(docs(s, d),
+      aggs = Seq(min("n_chars").as("n_chars"), min("doc_id").as("mindoc")))
+    val dist = distAll.filter(col("n_chars") >= K)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keyed = dist
       .select(col("tkey"), col("m"), col("mindoc"),

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.text.Tokens.{distinctTexts, docs, duckGrams, duckShingleCtes, shingles, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -19,11 +20,6 @@ import org.apache.spark.sql.expressions.Window
   * join shuffle-partitions cleanly; nothing here is O(n²) over the corpus.
   */
 object TextOps {
-
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(s) // graft_shingles in any session
-    Tables.documents(s, d)
-  }
 
   // ------------------------------------------------------------ exact --
 
@@ -86,7 +82,7 @@ object TextOps {
   private val duckBowFp =
     "md5(array_to_string(list_sort(list_distinct(str_split(text, ' '))), ' '))"
   private def bowFp: org.apache.spark.sql.Column =
-    md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " "))
+    md5(array_join(array_sort(array_distinct(words)), " "))
 
   /** Word-order-insensitive duplicates: sorted bag-of-words fingerprint. */
   val dedupBow: Q = Q.sql(
@@ -156,22 +152,6 @@ object TextOps {
 
   // ---------------------------------------------------------- jaccard --
 
-  /** 3-gram shingle list over a word-array column — the native
-    * [[WordShingles]] codegen expression (empty for sub-3-word docs).
-    *
-    * History of this call site, because the formulation decided two
-    * rounds of bench: `transform(sequence(...), i -> element_at(ws, i)
-    * ...)` was O(words²) per evaluation (the optimizer's
-    * InferFiltersFromGenerate clones the expression into scan filters
-    * with `ws` inlined back to `split(text)`, and higher-order functions
-    * run interpreted — no codegen, no subexpression elimination), fixed in
-    * round 2 by a sliced `zip_with` ([[shingleHofExpr]]). Round 3 moved
-    * the primitive into a Catalyst Expression with `doGenCode`: one
-    * generated loop, no intermediate slice arrays, and the enclosing
-    * Project stays inside whole-stage codegen. */
-  private[graft] def shingleExpr(ws: String): String =
-    s"graft_shingles($ws, 3)"
-
   /** The round-2 sliced-`zip_with` formulation, kept as the
     * composition-only twin ([[WordShingles]] equivalence is spec-asserted
     * against it). */
@@ -200,8 +180,7 @@ object TextOps {
   private val jaccardPairsCtesSql: String =
     s"""w AS (SELECT doc_id, lang, source, str_split(text, ' ') AS ws FROM documents),
        |sh AS (SELECT doc_id, lang, source,
-       |         list_distinct(list_transform(range(1, len(ws) - 1),
-       |           i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s3
+       |         list_distinct(${duckGrams(3)}) AS s3
        |       FROM w),
        |ex AS (SELECT doc_id, lang, source, unnest(s3) AS shingle FROM sh),
        |dft AS MATERIALIZED (SELECT lang, source, shingle FROM ex
@@ -238,9 +217,9 @@ object TextOps {
     * readouts. */
   private def cappedPairStats(s: SparkSession, d: String): DataFrame = {
     val ex = docs(s, d)
-      .select(col("doc_id"), col("lang"), col("source"), split(col("text"), " ").as("ws"))
+      .select(col("doc_id"), col("lang"), col("source"), words.as("ws"))
       .select(col("doc_id"), col("lang"), col("source"),
-        expr(s"array_distinct(${shingleExpr("ws")})").as("s3"))
+        array_distinct(shingles(3)).as("s3"))
       .select(col("doc_id"), col("lang"), col("source"), explode(col("s3")).as("shingle"))
     // df cap as a window over the join key: the window's hash partitioning
     // on (lang, source, shingle) is exactly the join's requirement, so the
@@ -408,8 +387,7 @@ object TextOps {
        |     WHERE doc_id = mid),
        |w2 AS (SELECT gid, lang, source, mult, str_split(text, ' ') AS ws FROM grp),
        |sh2 AS (SELECT gid, lang, source, mult,
-       |         list_distinct(list_transform(range(1, len(ws) - 1),
-       |           i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s3
+       |         list_distinct(${duckGrams(3)}) AS s3
        |       FROM w2),
        |ex2 AS (SELECT gid, lang, source, mult, unnest(s3) AS shingle FROM sh2),
        |exf2 AS MATERIALIZED (SELECT gid, lang, source, shingle FROM (
@@ -454,8 +432,7 @@ object TextOps {
     * The shared Spark-side engine of dedup_components (cluster report)
     * and dedup_keep_best (the keep-one decision). */
   private[text] def componentLabels(s: SparkSession, d: String): DataFrame = {
-    val bow = docs(s, d).select(col("doc_id"),
-      md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " ")).as("fp"))
+    val bow = docs(s, d).select(col("doc_id"), bowFp.as("fp"))
     // star edges, not an fp self-join: each doc connects to its group's min
     // doc id — k edges per duplicate group instead of k² (a boilerplate page
     // duplicated 1M× would otherwise emit 5·10¹¹ pairs), identical closure
@@ -604,9 +581,9 @@ object TextOps {
       s"WITH RECURSIVE $componentsScaleCtesSql,\n$tail") { (s, d) =>
     val scores = docs(s, d)
       .select(col("doc_id"), col("n_chars"),
-        expr("size(split(text, ' '))").as("n_words"),
-        expr("size(array_distinct(split(text, ' ')))").as("n_distinct_words"),
-        expr("size(filter(split(text, ' '), w -> w IN ('the', 'a')))").as("n_stop"))
+        size(words).as("n_words"),
+        size(array_distinct(words)).as("n_distinct_words"),
+        size(filter(words, _.isin("the", "a"))).as("n_stop"))
       .select(col("doc_id"), col("n_chars"),
         round(((lit(1.0) * col("n_distinct_words") / col("n_words"))
           + lit(1) - (lit(1.0) * col("n_stop") / col("n_words"))) / 2, 4)
@@ -663,7 +640,7 @@ object TextOps {
       s"WITH RECURSIVE $componentsScaleCtesSql,\n$tail") { (s, d) =>
     val tok = docs(s, d)
       .select(col("doc_id"), col("source"),
-        size(split(col("text"), " ")).as("n_tok"))
+        size(words).as("n_tok"))
     val j = tok.join(componentLabels(s, d), Seq("doc_id"))
       .withColumn("is_dup",
         when(col("doc_id") =!= col("component"), 1).otherwise(0))
@@ -767,7 +744,7 @@ object TextOps {
       s"WITH RECURSIVE $componentsCtesSql,\n$tail",
       s"WITH RECURSIVE $componentsScaleCtesSql,\n$tail") { (s, d) =>
     val tok = docs(s, d)
-      .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
+      .select(col("doc_id"), size(words).as("n_tok"))
     val cl = tok.join(componentLabels(s, d), Seq("doc_id"))
       .groupBy("component")
       .agg(count(lit(1)).cast("long").as("sz"),
@@ -859,11 +836,11 @@ object TextOps {
       }
       val de = dups(md5(col("text")))
       val dp = dups(md5(expr("substring(text, 1, 96)")))
-      val db = dups(md5(array_join(array_sort(array_distinct(split(col("text"), " "))), " ")))
+      val db = dups(bowFp)
       val dj = jaccardPairs(s, d).filter(col("jacc") >= 0.5)
         .select(col("doc_b").as("doc_id")).distinct()
       val st = docs(s, d)
-        .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
+        .select(col("doc_id"), size(words).as("n_tok"))
         .join(de.withColumn("f_e", lit(1)), Seq("doc_id"), "left")
         .join(dp.withColumn("f_p", lit(1)), Seq("doc_id"), "left")
         .join(db.withColumn("f_b", lit(1)), Seq("doc_id"), "left")
@@ -920,8 +897,8 @@ object TextOps {
   private[graft] def signaturesOf(df: DataFrame,
       withShingles: Boolean = false): DataFrame = {
     val keep = df.columns.toSeq.filter(_ != "text").map(col)
-    val sigs = df.select(keep :+ split(col("text"), " ").as("ws"): _*)
-      .select(keep :+ expr(shingleExpr("ws")).as("s3"): _*)
+    val sigs = df.select(keep :+ words.as("ws"): _*)
+      .select(keep :+ shingles(3).as("s3"): _*)
       .withColumn("__sigs", expr("graft_minhash_sig(s3)"))
     val s3d = if (withShingles) Seq(array_distinct(col("s3")).as("s3d")) else Nil
     sigs.select(keep ++ s3d ++ sigNames.zipWithIndex.map { case (n, i) =>
@@ -1034,9 +1011,7 @@ object TextOps {
 
   /** Oracle twin of [[minhashSigs]]'s CTE prefix (docs → sig). */
   private[graft] def duckSigCtes: String =
-    s"""w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-       |docs AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
+    s"""${duckShingleCtes()},
        |sig AS (SELECT doc_id, s3, ${duckSigExprs("s3")} FROM docs)""".stripMargin
 
   /** MinHash/LSH over 3-gram shingles: 4 hashes = 4 single-row bands, plus
@@ -1063,9 +1038,7 @@ object TextOps {
       s"""WITH grp AS MATERIALIZED (
          |  SELECT md5(text) AS tk, min(text) AS text, CAST(count(*) AS BIGINT) AS m
          |  FROM documents GROUP BY 1),
-         |w AS (SELECT tk, m, str_split(text, ' ') AS ws FROM grp),
-         |docs AS (SELECT tk, m, list_transform(range(1, len(ws) - 1),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
+         |${duckShingleCtes("tk, m", "grp")},
          |tsig AS MATERIALIZED (SELECT tk, m, ${duckSigExprs("s3")} FROM docs),
          |sg AS MATERIALIZED (
          |  SELECT sig1, sig2, sig3, sig4, CAST(sum(m) AS BIGINT) AS mult,
@@ -1179,9 +1152,7 @@ object TextOps {
     * head of the dedup_minhash_est and dedup_minhash_calib scale twins. */
   private lazy val minhashScaleHeadSql: String = {
     val k = minhashParams.length
-    s"""w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-       |docs AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-       |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
+    s"""${duckShingleCtes()},
        |sk AS MATERIALIZED (SELECT doc_id, list_distinct(s3) AS s3d FROM docs),
        |gmm AS MATERIALIZED (SELECT doc_id,
        |      min(doc_id) OVER (
@@ -1277,7 +1248,7 @@ object TextOps {
        |FROM j ORDER BY doc_a, doc_b""".stripMargin,
     scaleOracle) { (s, d) =>
     // Signature-collapsed formulation (the dedup_minhash trick applied to
-    // the estimator audit, r8 VERDICT watch item): every per-pair metric
+    // the estimator audit): every per-pair metric
     // here — n_sig_match, exact Jaccard, the error — is a pure function
     // of the two docs' DISTINCT SHINGLE SETS, and duplicated documents
     // (the dominant near-dup class) share their set verbatim. So the
@@ -1564,9 +1535,9 @@ object TextOps {
       // the word explode + md5 votes run once per distinct text; per-doc
       // rows (and the corpus-level n_same window) restore over the tkey
       // map join
-      val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+      val (keyed, dist) = distinctTexts(docs(s, d))
       val h = dist
-        .select(col("tkey"), explode(array_distinct(split(col("text"), " "))).as("word"))
+        .select(col("tkey"), explode(array_distinct(words)).as("word"))
         .withColumn("h4", expr("substring(md5(word), 1, 4)"))
       val votes = (0 until 16).map { bi =>
         val (j, t) = (bi / 4 + 1, bi % 4)
@@ -1612,18 +1583,16 @@ object TextOps {
     * once per distinct text; shared by lang_id and lang_id_metrics so
     * the two cannot drift. */
   private def langPredicted(s: SparkSession, d: String): DataFrame = {
-    val (_, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d), Seq("lang"))
     val per = dist.select(col("tkey"),
-        expr("size(filter(split(text, ' '), w -> w = 'the'))").as("n_the"),
-        expr("size(filter(split(text, ' '), w -> w = 'data'))").as("n_data"),
-        expr("size(filter(split(text, ' '), w -> w = 'spark'))").as("n_spark"))
+        size(filter(words, _ === "the")).as("n_the"),
+        size(filter(words, _ === "data")).as("n_data"),
+        size(filter(words, _ === "spark")).as("n_spark"))
       .select(col("tkey"),
         when(col("n_the") >= col("n_data") && col("n_the") >= col("n_spark"), "en")
           .when(col("n_data") >= col("n_spark"), "es")
           .otherwise("zh").as("predicted"))
-    docs(s, d)
-      .select(col("lang"), graft.Hash128.key128(col("text")).as("tkey"))
-      .join(per, Seq("tkey"))
+    keyed.join(per, Seq("tkey"))
       .select("lang", "predicted")
   }
 
@@ -1705,16 +1674,13 @@ object TextOps {
     // distinct-text collapse: all four feature arrays are pure text
     // functions; n_chars is a stored per-doc column, so the doc scan
     // keeps (doc_id, n_chars) and joins the per-text features by tkey
-    val (_, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d), Seq("doc_id", "n_chars"))
     val per = dist.select(col("tkey"),
-      expr("size(split(text, ' '))").as("n_words"),
-      expr("size(array_distinct(split(text, ' ')))").as("n_distinct_words"),
+      size(words).as("n_words"),
+      size(array_distinct(words)).as("n_distinct_words"),
       expr("length(replace(text, ' ', ''))").as("word_chars"),
-      expr("size(filter(split(text, ' '), w -> w IN ('the', 'a')))").as("n_stop"))
-    docs(s, d)
-      .select(col("doc_id"), col("n_chars"),
-        graft.Hash128.key128(col("text")).as("tkey"))
-      .join(per, Seq("tkey"))
+      size(filter(words, _.isin("the", "a"))).as("n_stop"))
+    keyed.join(per, Seq("tkey"))
       .select(col("doc_id"), col("n_chars"), col("n_words"), col("n_distinct_words"),
         round(lit(1.0) * col("word_chars") / col("n_words"), 4).as("avg_word_len"),
         round(lit(1.0) * col("n_distinct_words") / col("n_words"), 4).as("type_token_ratio"),
@@ -1744,7 +1710,7 @@ object TextOps {
     * the operator pins.
     *
     * Scale shape: pure text function → distinct-text collapse
-    * ([[graft.text.CorpusOps.distinctTexts]]): hits are counted once per
+    * ([[Tokens.distinctTexts]]): hits are counted once per
     * distinct text via an array filter (no explode, no shuffle beyond
     * the collapse's own), per-doc rows expand through the linear
     * membership join. The blocklist is a literal IN-list compiled into
@@ -1766,13 +1732,11 @@ object TextOps {
          |       WHEN round(1.0 * n_hits / n_words, 4) >= 0.02 THEN 'review'
          |       ELSE 'pass' END AS verdict
          |FROM f ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val sparkList = BlocklistWords.map(w => s"'$w'").mkString(", ")
-      val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+      val (keyed, dist) = distinctTexts(docs(s, d))
       val per = dist.select(col("tkey"),
-        expr("size(split(text, ' '))").as("n_words"),
-        expr(s"size(filter(split(text, ' '), w -> w IN ($sparkList)))")
-          .as("n_hits"),
-        expr(s"size(array_distinct(filter(split(text, ' '), w -> w IN ($sparkList))))")
+        size(words).as("n_words"),
+        size(filter(words, _.isin(BlocklistWords: _*))).as("n_hits"),
+        size(array_distinct(filter(words, _.isin(BlocklistWords: _*))))
           .as("n_distinct_hits"))
         .withColumn("hit_rate", round(lit(1.0) * col("n_hits") / col("n_words"), 4))
         .withColumn("verdict",
@@ -1829,14 +1793,14 @@ object TextOps {
       |       WHEN flesch >= 30 THEN 'hard'
       |       ELSE 'very_hard' END AS bucket
       |FROM sc ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val per = dist.select(col("tkey"),
-      expr("size(split(text, ' '))").as("n_words"),
+      size(words).as("n_words"),
       expr("greatest(1, size(filter(split(text, '[.!?]+'), s -> trim(s) != '')))")
         .as("n_sentences"),
-      expr("""aggregate(transform(split(text, ' '),
-          |  w -> greatest(1, size(filter(split(w, '[^aeiouy]+'), x -> x != '')))),
-          |  0L, (a, x) -> a + x)""".stripMargin).as("n_syllables"))
+      aggregate(transform(words,
+          w => greatest(lit(1), size(filter(split(w, "[^aeiouy]+"), _ =!= "")))),
+        lit(0L), _ + _).as("n_syllables"))
       .withColumn("flesch",
         round(lit(206.835) - lit(1.015) * (lit(1.0) * col("n_words") / col("n_sentences"))
           - lit(84.6) * (lit(1.0) * col("n_syllables") / col("n_words")), 4))
@@ -1888,9 +1852,9 @@ object TextOps {
     // text function, so the term explode and both aggregates run once
     // per distinct text; the per-doc output is a tkey map join. Values
     // bit-identical (decimal-exact fold, same per-text row set).
-    val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val per = dist
-      .select(col("tkey"), split(col("text"), " ").as("ws"))
+      .select(col("tkey"), words.as("ws"))
       .select(col("tkey"), size(col("ws")).as("n"), explode(col("ws")).as("term"))
       .groupBy("tkey", "n", "term").agg(count(lit(1)).as("c"))
       .groupBy("tkey", "n")
@@ -1914,10 +1878,10 @@ object TextOps {
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     docs(s, d)
       .select(col("doc_id"),
-        expr("size(split(text, ' '))").as("n_ws_tokens"),
+        size(words).as("n_ws_tokens"),
         col("n_chars"),
         expr("(n_chars + 3) div 4").as("approx_bpe_tokens"),
-        round(lit(1.0) * col("n_chars") / expr("size(split(text, ' '))"), 4)
+        round(lit(1.0) * col("n_chars") / size(words), 4)
           .as("chars_per_token"))
       .orderBy("doc_id")
   }
@@ -1933,12 +1897,12 @@ object TextOps {
        |FROM w ORDER BY doc_id""".stripMargin) { (s, d) =>
     // zip_with binds each word directly — an element_at(ws, i) version
     // would re-evaluate the (optimizer-inlined) split per element access,
-    // the same O(words²) trap documented on shingleExpr. The fold is a
+    // the same O(words²) trap documented on Tokens.shingles. The fold is a
     // pure text function, so it runs once per distinct text (the
     // quality_nb collapse pattern) and maps back over the tkey join.
-    val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val per = dist
-      .select(col("tkey"), split(col("text"), " ").as("ws"))
+      .select(col("tkey"), words.as("ws"))
       .select(col("tkey"),
         expr(s"""aggregate(
                 |  zip_with(ws, sequence(1, size(ws)),
@@ -1979,7 +1943,7 @@ object TextOps {
     // distinct-text collapse: the two regex extractions are the whole
     // cost and are pure text functions — run once per distinct text,
     // map back over the tkey join
-    val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     val per = dist.select(col("tkey"),
       expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
         .as("n_regex_tokens"),
@@ -2029,8 +1993,7 @@ object TextOps {
          |    lang, source, text
          |  FROM documents GROUP BY lang, source, text),
          |w AS (SELECT gid, n, lang, source, str_split(text, ' ') AS ws FROM grp),
-         |d2 AS (SELECT gid, n, lang, source, list_transform(range(1, len(ws) - 1),
-         |         i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
+         |d2 AS (SELECT gid, n, lang, source, ${duckGrams(3)} AS s3 FROM w),
          |sig AS MATERIALIZED (SELECT gid, n, lang, source, s3, ${duckSigExprs("s3")} FROM d2),
          |bands AS (${duckBandsSql("gid, n", "sig")}),
          |ex AS (SELECT gid, n, lang, source, unnest(list_distinct(s3)) AS shingle
@@ -2078,8 +2041,7 @@ object TextOps {
       "dedup_lsh_curve",
       s"""WITH $jaccardPairsCtesSql,
          |lw AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
-         |ld AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-         |         i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM lw),
+         |ld AS (SELECT doc_id, ${duckGrams(3)} AS s3 FROM lw),
          |lsig AS (SELECT doc_id, ${duckSigExprs("s3")} FROM ld),
          |bands AS (${duckBandsSql("doc_id", "lsig")}),
          |det AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2210,15 +2172,12 @@ object TextOps {
     // functions — once per distinct text; lang/source are doc columns,
     // so predicted/win_votes derive per text and label_votes (lang-
     // dependent) derives after the tkey map join
-    val (_, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d), Seq("doc_id", "lang", "source"))
     val per = dist.select(col("tkey"),
-      expr("size(filter(split(text, ' '), w -> w = 'the'))").as("n_the"),
-      expr("size(filter(split(text, ' '), w -> w = 'data'))").as("n_data"),
-      expr("size(filter(split(text, ' '), w -> w = 'spark'))").as("n_spark"))
-    docs(s, d)
-      .select(col("doc_id"), col("lang"), col("source"),
-        graft.Hash128.key128(col("text")).as("tkey"))
-      .join(per, Seq("tkey"))
+      size(filter(words, _ === "the")).as("n_the"),
+      size(filter(words, _ === "data")).as("n_data"),
+      size(filter(words, _ === "spark")).as("n_spark"))
+    keyed.join(per, Seq("tkey"))
       .withColumn("predicted",
         when(col("n_the") >= col("n_data") && col("n_the") >= col("n_spark"), "en")
           .when(col("n_data") >= col("n_spark"), "es")
@@ -2290,17 +2249,15 @@ object TextOps {
         |ORDER BY lang, pred_head, pred_tail""".stripMargin) { (s, d) =>
       // distinct-text collapse: both half-classifications are pure text
       // functions — sliced, voted and argmaxed once per distinct text
-      val (_, dist) = CorpusOps.distinctTexts(s, d)
+      val (keyed, dist) = distinctTexts(docs(s, d), Seq("lang"))
       val base = dist
-        .select(col("tkey"), split(col("text"), " ").as("ws"))
+        .select(col("tkey"), words.as("ws"))
         .withColumn("hw", expr("slice(ws, 1, size(ws) div 2)"))
         .withColumn("tw", expr("slice(ws, size(ws) div 2 + 1, size(ws) - size(ws) div 2)"))
       val per = sparkVotes(sparkVotes(base, "hw", "h"), "tw", "t")
         .select(col("tkey"), sparkPred("h").as("pred_head"),
           sparkPred("t").as("pred_tail"))
-      docs(s, d)
-        .select(col("lang"), graft.Hash128.key128(col("text")).as("tkey"))
-        .join(per, Seq("tkey"))
+      keyed.join(per, Seq("tkey"))
         .groupBy("lang", "pred_head", "pred_tail")
         .agg(count(lit(1)).as("n_docs"))
         .select(col("lang"), col("pred_head"), col("pred_tail"), col("n_docs"),
@@ -2390,9 +2347,7 @@ object TextOps {
          |      AS m_bench,
          |    min(CASE WHEN doc_id % 29 = 0 THEN doc_id END) AS min_bench_id
          |  FROM documents GROUP BY 1),
-         |w AS (SELECT tk, str_split(text, ' ') AS ws FROM grp),
-         |docs AS (SELECT tk, list_transform(range(1, len(ws) - 1),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
+         |${duckShingleCtes("tk", "grp")},
          |tsig AS MATERIALIZED (SELECT tk, ${duckSigExprs("s3")} FROM docs),
          |tb AS (${duckBandsSql("tk", "tsig")}),
          |bb AS (SELECT t.tk AS btk, g.m_bench, g.min_bench_id, t.band, t.v
@@ -2447,14 +2402,10 @@ object TextOps {
       // both sides), per-content verdicts aggregate content-pair rows,
       // and the per-doc report expands by the linear membership join
       // (twins share signatures, hence verdicts).
-      val keyedAll = docs(s, d)
-        .select(col("doc_id"), graft.Hash128.key128(col("text")).as("tkey"))
+      val (keyedAll, distTexts) = distinctTexts(docs(s, d))
       val meta = keyedAll.groupBy("tkey").agg(
         sum(when(col("doc_id") % 29 === 0, 1).otherwise(0)).cast("long").as("m_bench"),
         min(when(col("doc_id") % 29 === 0, col("doc_id"))).as("min_bench_id"))
-      val distTexts = docs(s, d)
-        .select(graft.Hash128.key128(col("text")).as("tkey"), col("text"))
-        .groupBy("tkey").agg(min("text").as("text"))
       val bands = bandsOf(signaturesOf(distTexts), col("tkey"))
       val bench = bands
         .join(meta.filter(col("m_bench") >= 1)
@@ -2524,8 +2475,7 @@ object TextOps {
          |  SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS m, text, emb
          |  FROM j GROUP BY text, emb),
          |w AS (SELECT gid AS doc_id, str_split(text, ' ') AS ws FROM grp),
-         |docs AS (SELECT doc_id, list_transform(range(1, len(ws) - 1),
-         |    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS s3 FROM w),
+         |docs AS (SELECT doc_id, ${duckGrams(3)} AS s3 FROM w),
          |sig AS (SELECT doc_id, s3, ${duckSigExprs("s3")} FROM docs),
          |tb AS ($duckBands),
          |tp AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -2818,13 +2768,13 @@ object TextOps {
        |  pt.words_in_dup, pt.dup_chunk_ratio
        |FROM documents d JOIN dt ON d.text = dt.text JOIN pt ON dt.gid = pt.gid
        |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-    val (keyed, dist) = CorpusOps.distinctTexts(s, d)
+    val (keyed, dist) = distinctTexts(docs(s, d))
     // per-position word rows over DISTINCT texts; the 3-word window comes
     // from two lags over the tkey partition (never element_at(ws, i) —
-    // the optimizer-inlined-split O(words²) trap, see shingleExpr)
+    // the optimizer-inlined-split O(words²) trap, see Tokens.shingles)
     val pos = dist
       .select(col("tkey"), col("m"),
-        posexplode(split(col("text"), " ")).as(Seq("p0", "word")))
+        posexplode(words).as(Seq("p0", "word")))
       .select(col("tkey"), col("m"), (col("p0") + 1).as("i"), col("word"))
     val wnd = Window.partitionBy("tkey").orderBy("i")
     val bnd = pos

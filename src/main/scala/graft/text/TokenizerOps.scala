@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.{Q, Tables}
+import graft.text.Tokens.words
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -89,7 +90,7 @@ object TokenizerOps {
       |FROM f GROUP BY 1, 2 ORDER BY lang, source""".stripMargin) { (s, d) =>
     docs(s, d)
       .select(col("lang"), col("source"), col("n_chars"),
-        expr("size(split(text, ' '))").as("n_words"),
+        size(words).as("n_words"),
         expr("size(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
           .as("n_tokens"))
       .groupBy("lang", "source")
@@ -349,7 +350,7 @@ object TokenizerOps {
         |           ELSE TRUE END
         |ORDER BY word""".stripMargin) { (s, d) =>
       val wf = docs(s, d)
-        .select(explode(split(col("text"), " ")).as("word"))
+        .select(explode(words).as("word"))
         .filter(length(col("word")) > 0)
         .groupBy("word").agg(count(lit(1)).as("freq"))
         .withColumn("len", length(col("word")))

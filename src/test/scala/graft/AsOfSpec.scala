@@ -69,7 +69,7 @@ class AsOfSpec extends AnyFunSuite {
     GraftFunctions.ensureRegistered(spark)
     val df = Seq("one two", "a b c d e").toDF("text")
       .select(split(col("text"), " ").as("ws"))
-      .select(expr(graft.text.TextOps.shingleExpr("ws")).as("s3"))
+      .select(graft.text.Tokens.shingles(3).as("s3"))
     val sizes = df.select(size(col("s3"))).collect().map(_.getInt(0))
     assert(sizes.toSeq === Seq(0, 3))
   }

@@ -14,7 +14,7 @@ class MinHashSigSpec extends AnyFunSuite {
     GraftFunctions.ensureRegistered(spark)
     val s3 = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), expr(TextOps.shingleExpr("ws")).as("s3"))
+      .select(col("doc_id"), graft.text.Tokens.shingles(3).as("s3"))
     val both = s3.withColumn("__sigs", expr("graft_minhash_sig(s3)"))
     val diff = MinHashSig.Params.indices.map { i =>
       both.filter(element_at(col("__sigs"), i + 1) =!=

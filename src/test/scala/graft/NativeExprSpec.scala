@@ -108,7 +108,7 @@ class NativeExprSpec extends AnyFunSuite {
     // |v| = 4000 > ~3034: a single scale-12 term exceeds Long.MaxValue.
     // The kernel's contract is per-row scale-6 vectors of bounded
     // magnitude — corpus-scale matrix-vector sums (Pca's y) must use the
-    // DECIMAL fold instead (the ADVICE r8 overflow finding).
+    // DECIMAL fold instead (a scale-12 sum there overflows BIGINT).
     val big = Seq.fill(4)(4000.0)
     val df = Seq(1).toDF("i").withColumn("y_arr", typedLit(big))
     val thrown = intercept[Exception] {

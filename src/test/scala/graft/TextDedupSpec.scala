@@ -30,7 +30,7 @@ class TextDedupSpec extends AnyFunSuite {
     // native signature expression — no shared helper with the op's plan
     val sigs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), expr(TextOps.shingleExpr("ws")).as("s3"))
+      .select(col("doc_id"), graft.text.Tokens.shingles(3).as("s3"))
       .withColumn("sigs", expr("graft_minhash_sig(s3)"))
       .select(col("doc_id"), posexplode(col("sigs")).as(Seq("band", "v")))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
@@ -132,7 +132,7 @@ class TextDedupSpec extends AnyFunSuite {
     // band-collision pairs off the spec-verified native signature
     val sigRows = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), expr(TextOps.shingleExpr("ws")).as("s3"))
+      .select(col("doc_id"), graft.text.Tokens.shingles(3).as("s3"))
       .withColumn("sigs", expr("graft_minhash_sig(s3)"))
       .select(col("doc_id"), posexplode(col("sigs")).as(Seq("band", "v")))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
@@ -246,7 +246,7 @@ class TextDedupSpec extends AnyFunSuite {
     // expression — no shared helper with the op's plan
     val sigs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"), expr(TextOps.shingleExpr("ws")).as("s3"))
+      .select(col("doc_id"), graft.text.Tokens.shingles(3).as("s3"))
       .select(col("doc_id"), expr("graft_minhash_sig(s3)").as("sigs"))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) Seq.fill(4)(None) else r.getSeq[Long](1).map(Some(_))))

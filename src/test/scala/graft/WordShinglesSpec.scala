@@ -15,7 +15,7 @@ class WordShinglesSpec extends AnyFunSuite {
     val ws = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
     val diff = ws.select(col("doc_id"),
-        expr(TextOps.shingleExpr("ws")).as("native"),
+        graft.text.Tokens.shingles(3).as("native"),
         expr(TextOps.shingleHofExpr("ws")).as("hof"))
       .filter(col("native") =!= col("hof"))
     assert(diff.count() === 0)

@@ -191,16 +191,16 @@ def main():
     # --json <path>: also emit a driver-format artifact
     # ({name: {rows_match, schema_match, hash_match, spark_rows,
     #   oracle_rows, err}}) so scale-gate runs can be committed as
-    # CORRECTNESS_sf1.json-style evidence.
+    # scale-gate evidence (CORRECTNESS_sf100.json has this format).
     # --scale-oracles: overlay oracle_sql_scale.json (collapsed twins for
     #   the replicated scale gates) over oracle_sql.json.
     # --bighash N: for ops whose spark output exceeds N rows (parquet
     #   metadata, nothing loaded), compare via the DuckDB multiset hash
     #   instead of the in-memory pandas path.
     args = sys.argv[1:]
-    # --sf100-gate: round invariant (VERDICT r12 item 7) — every op
-    # carrying a BENCH_sf100 row must also carry a CORRECTNESS_sf100 hash
-    # row, except the two documented output-sized / one-box-disk carries.
+    # --sf100-gate: a speed figure without a correctness figure is not
+    # evidence — every op carrying a BENCH_sf100 row must also carry a
+    # CORRECTNESS_sf100 hash row, except the two documented output-sized / one-box-disk carries.
     # Fails the round loudly when a new bench row enters without its
     # correctness twin.
     if args and args[0] == "--sf100-gate":
