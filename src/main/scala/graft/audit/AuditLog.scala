@@ -99,6 +99,56 @@ final case class AuditLog(pkCol: String, seqCol: String) {
   def asOf(log: DataFrame, payload: Seq[String], maxSeq: Column): DataFrame =
     current(log.filter(col(seqCol) <= maxSeq), payload)
 
+  // ------------------------------------------------ DuckDB oracle twins --
+  // The oracles re-derive every view in DuckDB from the raw feed; these
+  // are the one spelling of each reconstruction step they share. Only
+  // oracle strings read them.
+
+  /** Twin of `byEntity`: the named window `w` the old-side lags run over. */
+  val duckWindow: String = s"WINDOW w AS (PARTITION BY $pkCol ORDER BY $seqCol)"
+
+  /** Twin of `running` + `last(_, ignoreNulls = true)`: `expr`'s last
+    * non-null value up to and including this change. */
+  def duckLast(expr: String): String =
+    s"last_value($expr IGNORE NULLS) OVER " +
+      s"(PARTITION BY $pkCol ORDER BY $seqCol ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+
+  /** Twin of `snapshot`'s columns: `<prefix>c` per payload field. */
+  def duckStates(payload: Seq[String], prefix: String = "state_"): String =
+    payload.map(c => s"${duckLast(c)} AS $prefix$c").mkString(",\n    ")
+
+  /** Twin of `latest`: 1 on each entity's last row. */
+  val duckLatestRn: String = s"row_number() OVER (PARTITION BY $pkCol ORDER BY $seqCol DESC)"
+
+  /** Twin of `snapshot`: the CTE `name` selecting `keep`, the payload's
+    * states and any `extra` columns from `from`. */
+  def duckSnapCte(name: String, keep: String, payload: Seq[String],
+      from: String = "audit", extra: Seq[String] = Nil,
+      prefix: String = "state_"): String =
+    s"""$name AS (
+       |  SELECT $keep,
+       |    ${(duckStates(payload, prefix) +: extra).mkString(",\n    ")}
+       |  FROM $from)""".stripMargin
+
+  /** Twin of the old side of `delta` and `compare`: NULL on insert, else
+    * the previous change's `c` over `w` ([[duckWindow]]). */
+  def duckOld(c: String): String = s"CASE WHEN operation = 'I' THEN NULL ELSE lag($c) OVER w END"
+
+  /** Twin of the new side of `compare`: NULL after a delete or truncate. */
+  def duckNew(c: String): String =
+    s"CASE WHEN operation IN (${AuditModel.terminalOps.map(o => s"'$o'").mkString(", ")})" +
+      s" THEN NULL ELSE $c END"
+
+  /** Twin of `delta`: `old_c`, `new_c` per payload field. */
+  def duckDelta(payload: Seq[String]): String =
+    payload.map(c => s"${duckOld(c)} AS old_$c,\n  $c AS new_$c").mkString(",\n  ")
+
+  /** Twin of `compare` over `state_c` columns: `old_state_c`, `new_state_c`. */
+  def duckCompare(payload: Seq[String]): String =
+    payload.map { c =>
+      s"${duckOld(s"state_$c")} AS old_state_$c,\n  ${duckNew(s"state_$c")} AS new_state_$c"
+    }.mkString(",\n  ")
+
   // ------------------------------------------- statement-level truncate --
 
   /** Per-row table-wide truncation boundary + per-field raw state and the

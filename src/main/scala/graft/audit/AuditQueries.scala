@@ -91,8 +91,13 @@ object AuditQueries {
        |  FROM events)
        |""".stripMargin
 
-  private val runningW =
-    "PARTITION BY entity_id ORDER BY audit_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+  /** The (k, val) snapshot CTE with `rn` = 1 on each entity's last row. */
+  private def latestSnap(name: String, keep: String, from: String): String =
+    alg.duckSnapCte(name, keep, Seq("k", "val"), from, Seq(s"${alg.duckLatestRn} AS rn"))
+
+  /** `rn` = 1 on each entity's last row, plus its change count. */
+  private val latestWithCount =
+    Seq(s"${alg.duckLatestRn} AS rn", "count(*) OVER (PARTITION BY entity_id) AS n_changes")
 
   // ---------------------------------------------------------------- ops --
 
@@ -113,15 +118,10 @@ object AuditQueries {
   val auditDelta: Q = Q.sql(
     "audit_delta",
     auditCte +
-      """SELECT audit_id, entity_id, operation,
-        |  CASE WHEN operation = 'I' THEN NULL
-        |    ELSE lag(field_k) OVER w END AS old_field_k,
-        |  field_k AS new_field_k,
-        |  CASE WHEN operation = 'I' THEN NULL
-        |    ELSE lag(value) OVER w END AS old_value,
-        |  value AS new_value
+      s"""SELECT audit_id, entity_id, operation,
+        |  ${alg.duckDelta(Seq("field_k", "value"))}
         |FROM audit
-        |WINDOW w AS (PARTITION BY entity_id ORDER BY audit_id)
+        |${alg.duckWindow}
         |ORDER BY audit_id""".stripMargin) { (s, d) =>
     alg.delta(log(s, d), Seq("field_k", "value"))
       .select("audit_id", "entity_id", "operation",
@@ -139,14 +139,14 @@ object AuditQueries {
     * same reconstruction. */
   val auditDeltaOld: Q = Q.sql(
     "audit_delta_old",
-    auditCte + """, old_feed AS (
+    auditCte + s""", old_feed AS (
       |  SELECT audit_id, entity_id, operation, value,
       |    lag(value) OVER (PARTITION BY entity_id ORDER BY audit_id) AS old_value
       |  FROM audit),
       |live AS (
       |  SELECT entity_id, value AS live_value
       |  FROM (SELECT entity_id, value,
-      |          row_number() OVER (PARTITION BY entity_id ORDER BY audit_id DESC) AS rn
+      |          ${alg.duckLatestRn} AS rn
       |        FROM audit) WHERE rn = 1),
       |rec AS (
       |  SELECT f.audit_id, f.entity_id, f.operation,
@@ -174,8 +174,7 @@ object AuditQueries {
       s"""SELECT audit_id, entity_id,
          |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS changed_at,
          |  row_number() OVER (PARTITION BY entity_id ORDER BY audit_id) AS change_seq,
-         |  last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-         |  last_value(val IGNORE NULLS) OVER ($runningW) AS state_val
+         |  ${alg.duckStates(Seq("k", "val"))}
          |FROM audit ORDER BY audit_id""".stripMargin) { (s, d) =>
     alg.snapshot(sparse(log(s, d)), Seq("k", "val"))
       .select(
@@ -188,18 +187,11 @@ object AuditQueries {
   /** Reference `*_audit_compare` (audit.go:1362): old+new reconstructed. */
   val auditCompare: Q = Q.sql(
     "audit_compare",
-    auditCte + s""", snap AS (
-      |  SELECT audit_id, entity_id, operation,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val
-      |  FROM audit)
+    auditCte + s""", ${alg.duckSnapCte("snap", "audit_id, entity_id, operation", Seq("k", "val"))}
       |SELECT audit_id, entity_id, operation,
-      |  CASE WHEN operation = 'I' THEN NULL ELSE lag(state_k) OVER w END AS old_state_k,
-      |  CASE WHEN operation IN ('D', 'T') THEN NULL ELSE state_k END AS new_state_k,
-      |  CASE WHEN operation = 'I' THEN NULL ELSE lag(state_val) OVER w END AS old_state_val,
-      |  CASE WHEN operation IN ('D', 'T') THEN NULL ELSE state_val END AS new_state_val
+      |  ${alg.duckCompare(Seq("k", "val"))}
       |FROM snap
-      |WINDOW w AS (PARTITION BY entity_id ORDER BY audit_id)
+      |${alg.duckWindow}
       |ORDER BY audit_id""".stripMargin) { (s, d) =>
     alg.compare(sparse(log(s, d)), Seq("k", "val"))
       .select("audit_id", "entity_id", "operation",
@@ -220,22 +212,13 @@ object AuditQueries {
     * sink round-trip fidelity. */
   val auditViewsOnly: Q = Q.sql(
     "audit_views_only",
-    auditCte + s""", snap AS (
-      |  SELECT audit_id, entity_id, operation, k, val,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val
-      |  FROM audit)
+    auditCte + s""", ${alg.duckSnapCte("snap", "audit_id, entity_id, operation, k, val",
+        Seq("k", "val"))}
       |SELECT audit_id, entity_id, operation, state_k, state_val,
-      |  CASE WHEN operation = 'I' THEN NULL ELSE lag(state_k) OVER w END AS old_state_k,
-      |  CASE WHEN operation IN ('D', 'T') THEN NULL ELSE state_k END AS new_state_k,
-      |  CASE WHEN operation = 'I' THEN NULL ELSE lag(state_val) OVER w END AS old_state_val,
-      |  CASE WHEN operation IN ('D', 'T') THEN NULL ELSE state_val END AS new_state_val,
-      |  CASE WHEN operation = 'I' THEN NULL ELSE lag(k) OVER w END AS old_k,
-      |  k AS new_k,
-      |  CASE WHEN operation = 'I' THEN NULL ELSE lag(val) OVER w END AS old_val,
-      |  val AS new_val
+      |  ${alg.duckCompare(Seq("k", "val"))},
+      |  ${alg.duckDelta(Seq("k", "val"))}
       |FROM snap
-      |WINDOW w AS (PARTITION BY entity_id ORDER BY audit_id)
+      |${alg.duckWindow}
       |ORDER BY audit_id""".stripMargin) { (s, d) =>
     AuditStorage.rewriteBucketed(s,
       sparse(log(s, d)).select("audit_id", "entity_id", "operation", "k", "val"),
@@ -284,15 +267,9 @@ object AuditQueries {
         |    CASE WHEN event_type = 'signup'
         |      THEN CAST(CAST(floor(value * 100) AS BIGINT) % 1000 AS VARCHAR) END AS w_init
         |  FROM audit),
-        |snap AS (
-        |  SELECT audit_id, entity_id, operation,
-        |    last_value(w_k IGNORE NULLS) OVER ($runningW) AS s_w_k,
-        |    last_value(w_val IGNORE NULLS) OVER ($runningW) AS s_w_val,
-        |    last_value(w_tag IGNORE NULLS) OVER ($runningW) AS s_w_tag,
-        |    last_value(w_cnt IGNORE NULLS) OVER ($runningW) AS s_w_cnt,
-        |    last_value(w_who IGNORE NULLS) OVER ($runningW) AS s_w_who,
-        |    last_value(w_init IGNORE NULLS) OVER ($runningW) AS s_w_init
-        |  FROM typed)
+        |${alg.duckSnapCte("snap", "audit_id, entity_id, operation",
+          Seq("w_k", "w_val", "w_tag", "w_cnt", "w_who", "w_init"), from = "typed",
+          prefix = "s_")}
         |SELECT audit_id, entity_id, operation,
         |  CAST(s_w_k AS INT) AS state_w_k,
         |  CAST(CAST(s_w_val AS DECIMAL(12,2)) AS DOUBLE) AS state_w_val,
@@ -300,16 +277,12 @@ object AuditQueries {
         |  CAST(s_w_cnt AS INT) AS state_w_cnt,
         |  s_w_who AS state_w_who,
         |  CAST(s_w_init AS BIGINT) AS state_w_init,
-        |  CAST(CAST(CASE WHEN operation = 'I' THEN NULL
-        |    ELSE lag(s_w_val) OVER w END AS DECIMAL(12,2)) AS DOUBLE) AS old_state_w_val,
-        |  CAST(CAST(CASE WHEN operation IN ('D', 'T') THEN NULL
-        |    ELSE s_w_val END AS DECIMAL(12,2)) AS DOUBLE) AS new_state_w_val,
-        |  CAST(CASE WHEN operation = 'I' THEN NULL
-        |    ELSE lag(s_w_cnt) OVER w END AS INT) AS old_state_w_cnt,
-        |  CAST(CASE WHEN operation IN ('D', 'T') THEN NULL
-        |    ELSE s_w_cnt END AS INT) AS new_state_w_cnt
+        |  CAST(CAST(${alg.duckOld("s_w_val")} AS DECIMAL(12,2)) AS DOUBLE) AS old_state_w_val,
+        |  CAST(CAST(${alg.duckNew("s_w_val")} AS DECIMAL(12,2)) AS DOUBLE) AS new_state_w_val,
+        |  CAST(${alg.duckOld("s_w_cnt")} AS INT) AS old_state_w_cnt,
+        |  CAST(${alg.duckNew("s_w_cnt")} AS INT) AS new_state_w_cnt
         |FROM snap
-        |WINDOW w AS (PARTITION BY entity_id ORDER BY audit_id)
+        |${alg.duckWindow}
         |ORDER BY audit_id""".stripMargin) { (s, d) =>
       val typed = sparse(log(s, d)).select(
         col("audit_id"), col("entity_id"), col("operation"),
@@ -364,17 +337,17 @@ object AuditQueries {
       |    CASE WHEN operation = 'I' THEN strftime(ts, '%Y-%m-%d') END AS day_s
       |  FROM audit)
       |SELECT audit_id, entity_id, operation,
-      |  CAST(CASE WHEN operation = 'I' THEN NULL ELSE lag(k_s) OVER w END AS INT) AS old_k,
+      |  CAST(${alg.duckOld("k_s")} AS INT) AS old_k,
       |  CAST(k_s AS INT) AS new_k,
-      |  CAST(CAST(CASE WHEN operation = 'I' THEN NULL ELSE lag(amount_s) OVER w END
+      |  CAST(CAST(${alg.duckOld("amount_s")}
       |    AS DECIMAL(12,2)) AS DOUBLE) AS old_amount,
       |  CAST(CAST(amount_s AS DECIMAL(12,2)) AS DOUBLE) AS new_amount,
-      |  CAST(CASE WHEN operation = 'I' THEN NULL ELSE lag(day_s) OVER w END AS DATE) AS old_day,
+      |  CAST(${alg.duckOld("day_s")} AS DATE) AS old_day,
       |  CAST(day_s AS DATE) AS new_day,
-      |  CAST(CAST(last_value(amount_s IGNORE NULLS) OVER ($runningW)
+      |  CAST(CAST(${alg.duckLast("amount_s")}
       |    AS DECIMAL(12,2)) AS DOUBLE) AS state_amount
       |FROM typed
-      |WINDOW w AS (PARTITION BY entity_id ORDER BY audit_id)
+      |${alg.duckWindow}
       |ORDER BY audit_id""".stripMargin) { (s, d) =>
     val typed = sparse(log(s, d)).select(
       col("audit_id"), col("entity_id"), col("operation"),
@@ -412,12 +385,10 @@ object AuditQueries {
       |  FROM audit),
       |s AS (
       |  SELECT audit_id, entity_id, operation, tb,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS raw_k,
-      |    last_value(CASE WHEN k IS NOT NULL THEN audit_id END IGNORE NULLS)
-      |      OVER ($runningW) AS src_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS raw_val,
-      |    last_value(CASE WHEN val IS NOT NULL THEN audit_id END IGNORE NULLS)
-      |      OVER ($runningW) AS src_val
+      |    ${alg.duckLast("k")} AS raw_k,
+      |    ${alg.duckLast("CASE WHEN k IS NOT NULL THEN audit_id END")} AS src_k,
+      |    ${alg.duckLast("val")} AS raw_val,
+      |    ${alg.duckLast("CASE WHEN val IS NOT NULL THEN audit_id END")} AS src_val
       |  FROM b),
       |c AS (
       |  SELECT *,
@@ -472,8 +443,7 @@ object AuditQueries {
         |      THEN CAST(floor(value * 100) AS BIGINT) % 1000 END AS w_init
         |  FROM audit)
         |SELECT audit_id, entity_id, operation,
-        |${stateCols.map(c => s"  last_value($c IGNORE NULLS) OVER ($runningW) AS state_$c")
-          .mkString(",\n")}
+        |  ${alg.duckStates(stateCols)}
         |FROM wide ORDER BY audit_id""".stripMargin) { (s, d) =>
       val wide = sparse(log(s, d))
         .withColumn("w_k", col("k"))
@@ -508,12 +478,7 @@ object AuditQueries {
     * deliberately not preserved — compaction collapses it; state is.) */
   val auditCompact: Q = Q.sql(
     "audit_compact",
-    auditCte + s""", snap AS (
-      |  SELECT audit_id, entity_id, operation, ts,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val,
-      |    row_number() OVER (PARTITION BY entity_id ORDER BY audit_id DESC) AS rn
-      |  FROM audit)
+    auditCte + s""", ${latestSnap("snap", "audit_id, entity_id, operation, ts", "audit")}
       |SELECT entity_id, audit_id AS last_audit_id,
       |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_changed_at,
       |  operation AS last_op, state_k, state_val
@@ -567,13 +532,8 @@ object AuditQueries {
   /** Latest reconstructed state per entity (the live-table equivalent). */
   val auditCurrent: Q = Q.sql(
     "audit_current",
-    auditCte + s""", snap AS (
-      |  SELECT audit_id, entity_id, ts,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val,
-      |    row_number() OVER (PARTITION BY entity_id ORDER BY audit_id DESC) AS rn,
-      |    count(*) OVER (PARTITION BY entity_id) AS n_changes
-      |  FROM audit)
+    auditCte + s""", ${alg.duckSnapCte("snap", "audit_id, entity_id, ts", Seq("k", "val"),
+      extra = latestWithCount)}
       |SELECT entity_id, audit_id AS last_audit_id,
       |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_changed_at,
       |  state_k, state_val, n_changes
@@ -1428,11 +1388,8 @@ object AuditQueries {
 
   val auditScd2: Q = Q.sql(
     "audit_scd2",
-    auditCte + s""", snap AS (
-      |  SELECT audit_id, entity_id, operation, ts,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val
-      |  FROM audit)
+    auditCte + s""", ${alg.duckSnapCte("snap", "audit_id, entity_id, operation, ts",
+      Seq("k", "val"))}
       |SELECT audit_id, entity_id, operation, state_k, state_val,
       |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
       |  strftime(lead(ts) OVER (PARTITION BY entity_id ORDER BY audit_id),
@@ -1465,13 +1422,8 @@ object AuditQueries {
     * all-pairs anywhere. */
   val auditOrphans: Q = Q.sql(
     "audit_orphans",
-    auditCte + s""", snap AS (
-      |  SELECT audit_id, entity_id, operation, ts,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val,
-      |    row_number() OVER (PARTITION BY entity_id ORDER BY audit_id DESC) AS rn,
-      |    count(*) OVER (PARTITION BY entity_id) AS n_changes
-      |  FROM audit),
+    auditCte + s""", ${alg.duckSnapCte("snap", "audit_id, entity_id, operation, ts",
+      Seq("k", "val"), extra = latestWithCount)},
       |cur AS (SELECT * FROM snap WHERE rn = 1),
       |live AS (SELECT c_custkey AS entity_id FROM customer
       |         WHERE c_custkey % 7 <> 0)
@@ -1568,20 +1520,14 @@ object AuditQueries {
   val auditRollback: Q = Q.sql(
     "audit_rollback",
     auditCte + s""", cut AS (SELECT CAST(floor(max(audit_id) / 2) AS BIGINT) AS mid FROM audit),
-      |snap AS (
-      |  SELECT audit_id, entity_id, operation, ts,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val
-      |  FROM audit),
+      |${alg.duckSnapCte("snap", "audit_id, entity_id, operation, ts", Seq("k", "val"))},
       |pre AS (SELECT entity_id, operation AS pre_op,
       |          state_k AS restore_k, state_val AS restore_val
-      |        FROM (SELECT snap.*, row_number() OVER (
-      |                PARTITION BY entity_id ORDER BY audit_id DESC) AS rn
+      |        FROM (SELECT snap.*, ${alg.duckLatestRn} AS rn
       |              FROM snap, cut WHERE audit_id <= mid) WHERE rn = 1),
       |cur AS (SELECT entity_id, operation AS cur_op,
       |          state_k AS cur_k, state_val AS cur_val
-      |        FROM (SELECT snap.*, row_number() OVER (
-      |                PARTITION BY entity_id ORDER BY audit_id DESC) AS rn
+      |        FROM (SELECT snap.*, ${alg.duckLatestRn} AS rn
       |              FROM snap) WHERE rn = 1),
       |post AS (SELECT entity_id, count(*) AS n_changes_after
       |         FROM audit, cut WHERE audit_id > mid GROUP BY 1)
@@ -2862,26 +2808,13 @@ object AuditQueries {
   val auditMergeUpsert: Q = Q.sql(
     "audit_merge_upsert",
     auditCte + s""", m AS (SELECT CAST(floor(max(audit_id) / 2) AS BIGINT) AS mid FROM audit),
-      |pre AS (
-      |  SELECT entity_id, audit_id, operation,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val,
-      |    row_number() OVER (PARTITION BY entity_id ORDER BY audit_id DESC) AS rn
-      |  FROM audit CROSS JOIN m WHERE audit_id <= mid),
-      |post AS (
-      |  SELECT entity_id, audit_id, operation,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val,
-      |    row_number() OVER (PARTITION BY entity_id ORDER BY audit_id DESC) AS rn
-      |  FROM audit CROSS JOIN m WHERE audit_id > mid),
+      |${latestSnap("pre", "entity_id, audit_id, operation",
+        "audit CROSS JOIN m WHERE audit_id <= mid")},
+      |${latestSnap("post", "entity_id, audit_id, operation",
+        "audit CROSS JOIN m WHERE audit_id > mid")},
       |b AS (SELECT * FROM pre WHERE rn = 1),
       |dl AS (SELECT * FROM post WHERE rn = 1),
-      |full_rep AS (
-      |  SELECT entity_id, audit_id,
-      |    last_value(k IGNORE NULLS) OVER ($runningW) AS state_k,
-      |    last_value(val IGNORE NULLS) OVER ($runningW) AS state_val,
-      |    row_number() OVER (PARTITION BY entity_id ORDER BY audit_id DESC) AS rn
-      |  FROM audit),
+      |${latestSnap("full_rep", "entity_id, audit_id", "audit")},
       |f AS (SELECT * FROM full_rep WHERE rn = 1),
       |mg AS (
       |  SELECT coalesce(dl.entity_id, b.entity_id) AS entity_id,

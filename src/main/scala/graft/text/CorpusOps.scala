@@ -1,7 +1,8 @@
 package graft.text
 
 import graft.Q
-import graft.text.Tokens.{distinctTexts, docs, duckGrams, grams, shingles, words}
+import graft.text.Tokens.{distinctTexts, docs, duckDistinctTexts, duckGrams, duckWords, grams,
+  shingles, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -72,7 +73,7 @@ object CorpusOps {
     * |distinct bigrams| rows, linear at any corpus size. */
   val docRepetition: Q = Q.sql(
     "doc_repetition",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
       |g AS (SELECT doc_id,
       |        unnest(${duckGrams(2)})
       |          AS gram
@@ -243,12 +244,9 @@ object CorpusOps {
     // each bench content's copy multiplicity, and only the (output-sized)
     // per-doc expansion scales — checkable via the bighash compare.
     val scaleOracle =
-      s"""WITH grp AS MATERIALIZED (
-         |  SELECT md5(text) AS tk, min(text) AS text,
-         |    CAST(sum(CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS m_bench
-         |  FROM documents GROUP BY md5(text)),
-         |w AS (SELECT tk, str_split(text, ' ') AS ws FROM grp),
+      s"""WITH ${duckDistinctTexts(Seq(
+           "CAST(sum(CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS m_bench"))},
+         |${duckWords("tk", "grp")},
          |ex AS MATERIALIZED (
          |  SELECT tk, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
          |bsh AS MATERIALIZED (
@@ -268,7 +266,7 @@ object CorpusOps {
          |ORDER BY d.doc_id""".stripMargin
     Q.sqlDual(
       "decontaminate",
-      s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+      s"""WITH ${duckWords()},
         |ex AS (SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
         |b AS (SELECT doc_id AS bench_id, shingle FROM ex WHERE doc_id % 29 = 0),
         |c AS (SELECT doc_id, shingle FROM ex WHERE doc_id % 29 <> 0)
@@ -327,7 +325,7 @@ object CorpusOps {
     * partial-aggregating groupBy of the raw table. */
   val contaminationSources: Q = Q.sqlDual(
     "contamination_sources",
-    s"""WITH w AS (SELECT doc_id, source, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords("doc_id, source")},
       |ex AS (SELECT doc_id, source, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
       |b AS (SELECT doc_id AS bench_id, shingle FROM ex WHERE doc_id % 29 = 0),
       |h AS (SELECT c.doc_id, c.source, c.shingle, b.bench_id
@@ -359,9 +357,8 @@ object CorpusOps {
       |    CAST(sum(CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS mb,
       |    CAST(sum(CASE WHEN doc_id % 29 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS mc
       |  FROM documents GROUP BY 1, 2),
-      |gt AS MATERIALIZED (
-      |  SELECT md5(text) AS tk, min(text) AS text FROM documents GROUP BY 1),
-      |w AS (SELECT tk, str_split(text, ' ') AS ws FROM gt),
+      |${duckDistinctTexts(name = "gt")},
+      |${duckWords("tk", "gt")},
       |ex AS MATERIALIZED (
       |  SELECT tk, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
       |bb AS (SELECT tk, source, mb FROM gts WHERE mb >= 1),
@@ -470,7 +467,7 @@ object CorpusOps {
       s"((${ab._1} * c.h + ${ab._2}) % $BloomP) % mm.m"
     Q.sql(
       "decontaminate_bloom",
-      s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+      s"""WITH ${duckWords()},
         |ex AS (SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
         |bs AS (SELECT DISTINCT shingle FROM ex WHERE doc_id % 29 = 0),
         |bh AS (SELECT shingle, ${TextOps.duckWordHash("shingle")} AS h FROM bs),
@@ -1013,22 +1010,17 @@ object CorpusOps {
     * (ok_quality, ok_unique), benchmark shingles `b`, contaminated ids
     * `hit`. */
   private val funnelCtesSql: String =
-    s"""f AS (
-      |  SELECT doc_id, lang, source,
-      |    $duckQualityFeatures,
-      |    md5(text) AS fp,
-      |    str_split(text, ' ') AS ws
-      |  FROM documents WHERE doc_id % 29 <> 0),
+    s"""${duckWords(s"doc_id, lang, source,\n    $duckQualityFeatures,\n    md5(text) AS fp",
+        "documents WHERE doc_id % 29 <> 0", name = "f")},
       |q AS (SELECT *,
       |    CASE WHEN $passAllSql THEN 1 ELSE 0 END AS ok_quality,
       |    CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY fp) THEN 1 ELSE 0 END
       |      AS ok_unique
       |  FROM f),
       |ex AS (SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM f),
+      |${duckWords("doc_id", "documents WHERE doc_id % 29 = 0", name = "bw")},
       |b AS (SELECT DISTINCT shingle FROM (
-      |        SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle
-      |        FROM (SELECT doc_id, str_split(text, ' ') AS ws FROM documents
-      |              WHERE doc_id % 29 = 0))),
+      |        SELECT doc_id, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM bw)),
       |hit AS (SELECT DISTINCT ex.doc_id FROM ex JOIN b USING (shingle))""".stripMargin
 
   /** Spark twin of [[funnelCtesSql]]: in-scope corpus with quality flags,
@@ -1262,7 +1254,7 @@ object CorpusOps {
         |       text FROM documents GROUP BY text),
         |gmr AS MATERIALIZED (SELECT d.doc_id, g.gid
         |       FROM documents d JOIN grp g USING (text)),
-        |w AS (SELECT gid, m, str_split(text, ' ') AS ws FROM grp),
+        |${duckWords("gid, m", "grp")},
         |t AS (SELECT gid, m, len(ws) AS n, unnest(ws) AS term FROM w),
         |tf AS (SELECT gid, m, n, term, count(*) AS c FROM t GROUP BY 1, 2, 3, 4),
         |gt AS (SELECT term, CAST(sum(c * m) AS BIGINT) AS ct FROM tf GROUP BY 1),
@@ -1283,7 +1275,7 @@ object CorpusOps {
         |FROM x JOIN gmr ON x.gid = gmr.gid ORDER BY gmr.doc_id""".stripMargin
     Q.sqlDual(
     "corpus_perplexity",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
       |t AS (SELECT doc_id, len(ws) AS n, unnest(ws) AS term FROM w),
       |tf AS (SELECT doc_id, n, term, count(*) AS c FROM t GROUP BY 1, 2, 3),
       |gt AS (SELECT term, CAST(sum(c) AS BIGINT) AS ct FROM tf GROUP BY 1),
@@ -1408,7 +1400,7 @@ object CorpusOps {
     * the per-language unigram LM — shared by perplexity_buckets and
     * quality_plane_agreement (both dialects). */
   private val pplDocBucketSql: String =
-    s"""WITH w AS (SELECT doc_id, lang, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords("doc_id, lang")},
       |t AS (SELECT doc_id, lang, len(ws) AS n, unnest(ws) AS term FROM w),
       |tf AS (SELECT doc_id, lang, n, term, count(*) AS c FROM t GROUP BY 1, 2, 3, 4),
       |gt AS (SELECT lang, term, CAST(sum(c) AS BIGINT) AS ct FROM tf GROUP BY 1, 2),
@@ -1543,7 +1535,7 @@ object CorpusOps {
     * NOT force-broadcast: it grows with source count, AQE decides. */
   val boilerplateNgrams: Q = Q.sql(
     "boilerplate_ngrams",
-    s"""WITH w AS (SELECT doc_id, source, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords("doc_id, source")},
       |g AS (SELECT doc_id, source, unnest(list_distinct(
       |        ${duckGrams(2)}))
       |        AS gram
@@ -1594,7 +1586,7 @@ object CorpusOps {
     * tail IS the signal this curve exists to show. */
   val vocabGrowth: Q = Q.sql(
     "vocab_growth",
-    """WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
       |mx AS (SELECT max(doc_id) + 1 AS n_docs FROM documents),
       |dt AS (SELECT DISTINCT doc_id, unnest(ws) AS term FROM w),
       |ft AS (SELECT term, min(doc_id) AS first_doc FROM dt GROUP BY 1),
@@ -1652,9 +1644,7 @@ object CorpusOps {
     val sparkBucket = s"${TextOps.sparkWordHash("cast(doc_id as string)")} % 100"
     Q.sql(
       "oov_rate",
-      s"""WITH b AS (SELECT doc_id, lang, str_split(text, ' ') AS ws,
-         |         $duckBucket AS bucket
-         |       FROM documents),
+      s"""WITH ${duckWords(s"doc_id, lang, $duckBucket AS bucket", name = "b")},
          |tv AS (SELECT DISTINCT unnest(ws) AS term FROM b WHERE bucket < 90),
          |vt AS (SELECT lang, unnest(ws) AS term FROM b
          |       WHERE bucket >= 90 AND bucket < 95),
@@ -1956,10 +1946,7 @@ object CorpusOps {
       s"CASE WHEN $b < 90 THEN 'train' WHEN $b < 95 THEN 'val' ELSE 'test' END"
     Q.sql(
       "split_leakage",
-      s"""WITH w AS (
-         |  SELECT doc_id, ${splitCase(duckBucket)} AS split,
-         |    str_split(text, ' ') AS ws
-         |  FROM documents),
+      s"""WITH ${duckWords(s"doc_id, ${splitCase(duckBucket)} AS split")},
          |ex AS (SELECT doc_id, split, unnest(list_distinct(${duckGrams(4)})) AS shingle
          |       FROM w),
          |tr AS (SELECT DISTINCT shingle FROM ex WHERE split = 'train'),
@@ -2013,8 +2000,7 @@ object CorpusOps {
     * over raw data, no all-pairs anywhere. */
   val ngramNovelty: Q = Q.sql(
     "ngram_novelty",
-    s"""WITH w AS (SELECT doc_id, lang, source, str_split(text, ' ') AS ws
-      |       FROM documents),
+    s"""WITH ${duckWords("doc_id, lang, source")},
       |sh AS (SELECT doc_id, lang, source,
       |         list_distinct(${duckGrams(3)}) AS s3
       |       FROM w),
@@ -2478,7 +2464,7 @@ object CorpusOps {
          |       CAST(count(*) AS BIGINT) AS m, text FROM documents GROUP BY text),
          |gmr AS MATERIALIZED (SELECT d.doc_id, g.gid
          |       FROM documents d JOIN grp g USING (text)),
-         |w AS (SELECT gid, m, str_split(text, ' ') AS ws FROM grp),
+         |${duckWords("gid, m", "grp")},
          |ug AS (SELECT m, unnest(ws) AS term FROM w),
          |uc AS (SELECT term, CAST(sum(m) AS BIGINT) AS cu FROM ug GROUP BY 1),
          |nt AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
@@ -2506,7 +2492,7 @@ object CorpusOps {
          |FROM agg JOIN gmr ON agg.gid = gmr.gid ORDER BY gmr.doc_id""".stripMargin
     Q.sqlDual(
       "corpus_bigram_ppl",
-      s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+      s"""WITH ${duckWords()},
          |ug AS (SELECT unnest(ws) AS term FROM w),
          |uc AS (SELECT term, CAST(count(*) AS BIGINT) AS cu FROM ug GROUP BY 1),
          |nt AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
@@ -2616,7 +2602,7 @@ object CorpusOps {
          |       CAST(count(*) AS BIGINT) AS m, text FROM documents GROUP BY text),
          |gmr AS MATERIALIZED (SELECT d.doc_id, g.gid
          |       FROM documents d JOIN grp g USING (text)),
-         |w AS (SELECT gid, m, str_split(text, ' ') AS ws FROM grp),
+         |${duckWords("gid, m", "grp")},
          |db AS (SELECT gid, m, unnest(${duckGrams(2)}) AS gram FROM w),
          |dtf AS MATERIALIZED (SELECT gid, m, gram, CAST(count(*) AS BIGINT) AS tf
          |        FROM db GROUP BY 1, 2, 3),
@@ -2648,7 +2634,7 @@ object CorpusOps {
          |FROM agg JOIN gmr ON agg.gid = gmr.gid ORDER BY gmr.doc_id""".stripMargin
     Q.sqlDual(
       "corpus_kn_ppl",
-      s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+      s"""WITH ${duckWords()},
          |db AS (SELECT doc_id, unnest(${duckGrams(2)}) AS gram FROM w),
          |dtf AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
          |        FROM db GROUP BY 1, 2),
@@ -3394,7 +3380,7 @@ object CorpusOps {
       .mkString("\n  UNION ALL ")
     Q.sql(
       "doc_repetition_topn",
-      s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+      s"""WITH ${duckWords()},
          |g AS ($gramRows),
          |c AS (SELECT doc_id, n, gram, CAST(count(*) AS BIGINT) AS c
          |      FROM g GROUP BY 1, 2, 3),

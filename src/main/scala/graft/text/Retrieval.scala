@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.Q
-import graft.text.Tokens.{distinctTexts, docs, duckGrams, grams, words}
+import graft.text.Tokens.{distinctTexts, docs, duckGrams, duckWords, grams, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -41,7 +41,7 @@ object Retrieval {
     * output partitioning inherited from the input files. */
   val docChunk: Q = Q.sql(
     "doc_chunk",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
        |s AS (SELECT doc_id, ws, len(ws) AS n,
        |        unnest(range(0, len(ws), $ChunkStride)) AS start_word
        |      FROM w)
@@ -125,7 +125,7 @@ object Retrieval {
     Q.sql(
       "bm25_search",
       s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
-         |w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+         |${duckWords()},
          |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
          |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
          |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
@@ -212,7 +212,7 @@ object Retrieval {
       "bm25_eval",
       s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
          |qn AS (SELECT query_id, count(DISTINCT term) AS nq FROM qt GROUP BY 1),
-         |w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+         |${duckWords()},
          |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
          |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
          |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
@@ -314,7 +314,7 @@ object Retrieval {
     * length, never a full-feed partition. */
   val tfidfKeywords: Q = Q.sql(
     "tfidf_keywords",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
        |t AS (SELECT doc_id, unnest(ws) AS term FROM w),
        |tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1, 2),
        |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
@@ -367,7 +367,7 @@ object Retrieval {
     * not k². Only docs with at least one shared window are reported. */
   val chunkOverlap: Q = Q.sql(
     "chunk_overlap",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
        |s AS (SELECT doc_id, ws, len(ws) AS n,
        |        unnest(range(0, len(ws), $ChunkStride)) AS start_word
        |      FROM w),
@@ -427,7 +427,7 @@ object Retrieval {
     * so the oracle doesn't need to model the buckets at all. */
   val ngramStats: Q = Q.sql(
     "ngram_stats",
-    s"""WITH w AS (SELECT lang, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords("lang")},
        |g AS (SELECT lang, unnest(${duckGrams(3)}) AS gram
        |      FROM w),
        |c AS (SELECT lang, gram, count(*) AS n FROM g GROUP BY 1, 2),
@@ -485,7 +485,7 @@ object Retrieval {
       s"CAST(${lg("cxy")} + 2 * ${lg("n")} - ${lg("nb")} - ${lg("cx")} - ${lg("cy")} AS DOUBLE)"
     Q.sql(
       "pmi_bigrams",
-      s"""WITH w AS (SELECT str_split(text, ' ') AS ws FROM documents),
+      s"""WITH ${duckWords("")},
          |ug AS (SELECT unnest(ws) AS term FROM w),
          |uc AS (SELECT term, CAST(count(*) AS BIGINT) AS c FROM ug GROUP BY 1),
          |nt AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM uc),
@@ -567,7 +567,7 @@ object Retrieval {
     Q.sql(
       "hybrid_rrf",
       s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
-         |w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+         |${duckWords()},
          |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
          |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
          |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
@@ -588,7 +588,7 @@ object Retrieval {
          |seed AS (SELECT query_id, doc_id FROM sk WHERE sparse_rnk = 1),
          |q AS (SELECT seed.query_id, CAST(e.embedding AS DOUBLE[]) AS qe
          |      FROM seed JOIN embeddings e ON e.vec_id = seed.doc_id),
-         |ce AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+         |${graft.vector.Similarity.duckEmb(name = "ce")},
          |ds AS (SELECT query_id, vec_id AS doc_id,
          |         round(list_cosine_similarity(qe, emb), 4) AS cos_sim
          |       FROM q, ce),
@@ -648,7 +648,7 @@ object Retrieval {
     * inflate the report: the count is distinct DOCS per digest. */
   val chunkDedup: Q = Q.sql(
     "chunk_dedup",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
        |s AS (SELECT doc_id, ws, len(ws) AS n,
        |        unnest(range(0, len(ws), $ChunkStride)) AS start_word
        |      FROM w),
@@ -710,7 +710,7 @@ object Retrieval {
       "bm25_param_sensitivity",
       s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
         |cfg(cfg_id, k1v, bv) AS (VALUES $duckCfgValues),
-        |w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+        |${duckWords()},
         |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
         |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
         |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
@@ -822,7 +822,7 @@ object Retrieval {
     Q.sql(
       "query_expansion_prf",
       s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
-         |w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+         |${duckWords()},
          |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
          |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
          |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
@@ -1076,7 +1076,7 @@ object Retrieval {
     Q.sql(
       "bm25_phrase",
       s"""WITH pq(query_id, phrase, plen) AS (VALUES $duckPhraseValues),
-         |w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+         |${duckWords()},
          |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
          |g2 AS (SELECT doc_id, len(ws) AS dl,
          |         unnest(${duckGrams(2)}) AS gram FROM w),

@@ -1,7 +1,8 @@
 package graft.text
 
 import graft.Q
-import graft.text.Tokens.{distinctTexts, docs, duckGrams, duckShingleCtes, shingles, words}
+import graft.text.Tokens.{distinctTexts, docs, duckDistinctTexts, duckGrams, duckShingleCtes,
+  duckWords, shingles, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -178,7 +179,7 @@ object TextOps {
     * `dedup_ngram_jaccard` and `dedup_components` (emitted without the
     * leading WITH so the components oracle can prepend RECURSIVE). */
   private val jaccardPairsCtesSql: String =
-    s"""w AS (SELECT doc_id, lang, source, str_split(text, ' ') AS ws FROM documents),
+    s"""${duckWords("doc_id, lang, source")},
        |sh AS (SELECT doc_id, lang, source,
        |         list_distinct(${duckGrams(3)}) AS s3
        |       FROM w),
@@ -385,7 +386,7 @@ object TextOps {
        |             count(*) OVER (PARTITION BY lang, source, text) AS mult
        |           FROM documents)
        |     WHERE doc_id = mid),
-       |w2 AS (SELECT gid, lang, source, mult, str_split(text, ' ') AS ws FROM grp),
+       |${duckWords("gid, lang, source, mult", "grp", name = "w2")},
        |sh2 AS (SELECT gid, lang, source, mult,
        |         list_distinct(${duckGrams(3)}) AS s3
        |       FROM w2),
@@ -909,16 +910,11 @@ object TextOps {
     * corpus — shared by the banding dedup, the incremental probe and the
     * estimator-quality readouts. Persisted: the subtree feeds both
     * band-join branches and the final projection — without it the md5
-    * signature pass runs three times. MEMORY_AND_DISK, not cache(): the
-    * table is ∝ |docs|, so at 100 TB a memory-only cache would silently
-    * recompute evicted partitions (shingling + minhash, the expensive
-    * part) every time a consumer misses; spilling to local disk keeps the
-    * recompute bound at one (at cluster scale: DISK_ONLY or a
-    * checkpoint). `withShingles` controls what the cache holds: the
-    * banding op needs only (doc_id, k longs); caching the shingle arrays
-    * too would store ~3× the corpus text for nothing. The estimator
-    * audit opts in and gets the deduplicated sets (what it actually
-    * intersects). */
+    * signature pass runs three times. `withShingles` controls what the
+    * cache holds: the banding op needs only (doc_id, k longs); caching
+    * the shingle arrays too would store ~3× the corpus text for nothing.
+    * The estimator audit opts in and gets the deduplicated sets (what it
+    * actually intersects). */
   private def minhashSigs(s: SparkSession, d: String,
       withShingles: Boolean = false): DataFrame =
     signaturesOf(docs(s, d).select("doc_id", "text"), withShingles)
@@ -1010,8 +1006,8 @@ object TextOps {
     .mkString("\n         + ")
 
   /** Oracle twin of [[minhashSigs]]'s CTE prefix (docs → sig). */
-  private[graft] def duckSigCtes: String =
-    s"""${duckShingleCtes()},
+  private[graft] def duckSigCtes(from: String = "documents"): String =
+    s"""${duckShingleCtes("doc_id", from)},
        |sig AS (SELECT doc_id, s3, ${duckSigExprs("s3")} FROM docs)""".stripMargin
 
   /** MinHash/LSH over 3-gram shingles: 4 hashes = 4 single-row bands, plus
@@ -1035,9 +1031,7 @@ object TextOps {
     // the all-NULL-sig class (docs under 3 words) pinned to 0, matching
     // the naive join's NULL-never-equal semantics.
     val scaleOracle =
-      s"""WITH grp AS MATERIALIZED (
-         |  SELECT md5(text) AS tk, min(text) AS text, CAST(count(*) AS BIGINT) AS m
-         |  FROM documents GROUP BY 1),
+      s"""WITH ${duckDistinctTexts(Seq("CAST(count(*) AS BIGINT) AS m"))},
          |${duckShingleCtes("tk, m", "grp")},
          |tsig AS MATERIALIZED (SELECT tk, m, ${duckSigExprs("s3")} FROM docs),
          |sg AS MATERIALIZED (
@@ -1061,7 +1055,7 @@ object TextOps {
          |ORDER BY 1""".stripMargin
     Q.sqlDual(
       "dedup_minhash",
-      s"""WITH $duckSigCtes,
+      s"""WITH ${duckSigCtes()},
          |bands AS (${duckBandsSql("doc_id", "sig")}),
          |m AS (SELECT a.doc_id, count(DISTINCT b.doc_id) AS nm
          |      FROM bands a JOIN bands b
@@ -1185,7 +1179,7 @@ object TextOps {
     * shingle sets `sd(doc_id, s3d, sig1..)` — the shared head of the
     * dedup_minhash_est and dedup_minhash_calib naive oracles. */
   private lazy val minhashNaiveHeadSql: String =
-    s"""$duckSigCtes,
+    s"""${duckSigCtes()},
        |bands AS (${duckBandsSql("doc_id", "sig")}),
        |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |          FROM bands a JOIN bands b
@@ -1453,7 +1447,7 @@ object TextOps {
     // keep their 'admit' rows. Keeps the 100x/1000x gates hash-checkable
     // where the naive per-doc band join OOMs single-box DuckDB.
     val scaleOracle =
-      s"""WITH $duckSigCtes,
+      s"""WITH ${duckSigCtes()},
          |exg AS (SELECT ${sigNames.mkString(", ")},
          |          CAST(count(*) AS BIGINT) AS ex_mult, min(doc_id) AS ex_min
          |        FROM sig WHERE doc_id % 10 <> 0
@@ -1479,7 +1473,7 @@ object TextOps {
          |ORDER BY inc.doc_id""".stripMargin
     Q.sqlDual(
       "dedup_incremental",
-      s"""WITH $duckSigCtes,
+      s"""WITH ${duckSigCtes()},
          |bands AS (${duckBandsSql("doc_id", "sig")}),
          |ib AS (SELECT doc_id AS inc_id, band, v FROM bands WHERE doc_id % 10 = 0),
          |eb AS (SELECT doc_id AS ex_id, band, v FROM bands WHERE doc_id % 10 <> 0),
@@ -1838,7 +1832,7 @@ object TextOps {
     * sum is DECIMAL so shuffle order cannot move a score. */
   val textEntropy: Q = Q.sql(
     "text_entropy",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
        |t AS (SELECT doc_id, len(ws) AS n, unnest(ws) AS term FROM w),
        |tf AS (SELECT doc_id, n, term, count(*) AS c FROM t GROUP BY 1, 2, 3),
        |e AS (SELECT doc_id, n, count(*) AS n_distinct,
@@ -1889,7 +1883,7 @@ object TextOps {
   /** Position-weighted polynomial fingerprint (mod-p fold over words). */
   val docFingerprint: Q = Q.sql(
     "doc_fingerprint",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents)
+    s"""WITH ${duckWords()}
        |SELECT doc_id,
        |  CAST(list_sum(list_transform(range(1, len(ws) + 1),
        |    i -> CAST(i AS BIGINT) * (ascii(substr(ws[i], 1, 1)) * 31 + length(ws[i]))))
@@ -1992,7 +1986,7 @@ object TextOps {
          |  SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS n,
          |    lang, source, text
          |  FROM documents GROUP BY lang, source, text),
-         |w AS (SELECT gid, n, lang, source, str_split(text, ' ') AS ws FROM grp),
+         |${duckWords("gid, n, lang, source", "grp")},
          |d2 AS (SELECT gid, n, lang, source, ${duckGrams(3)} AS s3 FROM w),
          |sig AS MATERIALIZED (SELECT gid, n, lang, source, s3, ${duckSigExprs("s3")} FROM d2),
          |bands AS (${duckBandsSql("gid, n", "sig")}),
@@ -2040,7 +2034,7 @@ object TextOps {
     Q.sqlDual(
       "dedup_lsh_curve",
       s"""WITH $jaccardPairsCtesSql,
-         |lw AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+         |${duckWords("doc_id", "documents", name = "lw")},
          |ld AS (SELECT doc_id, ${duckGrams(3)} AS s3 FROM lw),
          |lsig AS (SELECT doc_id, ${duckSigExprs("s3")} FROM ld),
          |bands AS (${duckBandsSql("doc_id", "lsig")}),
@@ -2231,7 +2225,7 @@ object TextOps {
         .otherwise("zh")
     Q.sql(
       "doc_mixed_lang",
-      s"""WITH s AS (SELECT lang, str_split(text, ' ') AS ws FROM documents),
+      s"""WITH ${duckWords("lang", "documents", name = "s")},
         |h AS (SELECT lang, ws[1:len(ws) // 2] AS hw,
         |        ws[len(ws) // 2 + 1:] AS tw FROM s),
         |f AS (SELECT lang,
@@ -2341,12 +2335,9 @@ object TextOps {
     // multiplicity and min bench id carried on the content group, the
     // per-doc report expanded by the linear membership join.
     val scaleOracle =
-      s"""WITH grp AS MATERIALIZED (
-         |  SELECT md5(text) AS tk, min(text) AS text,
-         |    CAST(sum(CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS m_bench,
-         |    min(CASE WHEN doc_id % 29 = 0 THEN doc_id END) AS min_bench_id
-         |  FROM documents GROUP BY 1),
+      s"""WITH ${duckDistinctTexts(Seq(
+           "CAST(sum(CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS m_bench",
+           "min(CASE WHEN doc_id % 29 = 0 THEN doc_id END) AS min_bench_id"))},
          |${duckShingleCtes("tk", "grp")},
          |tsig AS MATERIALIZED (SELECT tk, ${duckSigExprs("s3")} FROM docs),
          |tb AS (${duckBandsSql("tk", "tsig")}),
@@ -2373,7 +2364,7 @@ object TextOps {
          |ORDER BY d.doc_id""".stripMargin
     Q.sqlDual(
       "decontaminate_fuzzy",
-      s"""WITH $duckSigCtes,
+      s"""WITH ${duckSigCtes()},
          |bands AS (${duckBandsSql("doc_id", "sig")}),
          |bb AS (SELECT doc_id AS bench_id, band, v FROM bands WHERE doc_id % 29 = 0),
          |cb AS (SELECT doc_id, band, v FROM bands WHERE doc_id % 29 <> 0),
@@ -2449,7 +2440,9 @@ object TextOps {
     * template/boilerplate dups an embedding misses; emb_only = the
     * paraphrase dups shingles miss; a small `both` core says the two
     * planes are NOT redundant and a production dedup needs the union.
-    * Rides the driver's aligned doc_id ≡ vec_id key space.
+    * Rides the aligned doc_id ≡ vec_id key space: only ids that
+    * carry both a document and an embedding pair up, in either plane,
+    * while the adaptive LSH bit width counts every embedding.
     *
     * Scale: both candidate generators are the live blocked machineries
     * (minhash bands; adaptive sign-LSH with constant expected bucket)
@@ -2474,7 +2467,7 @@ object TextOps {
          |grp AS MATERIALIZED (
          |  SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS m, text, emb
          |  FROM j GROUP BY text, emb),
-         |w AS (SELECT gid AS doc_id, str_split(text, ' ') AS ws FROM grp),
+         |${duckWords("gid AS doc_id", "grp")},
          |docs AS (SELECT doc_id, ${duckGrams(3)} AS s3 FROM w),
          |sig AS (SELECT doc_id, s3, ${duckSigExprs("s3")} FROM docs),
          |tb AS ($duckBands),
@@ -2522,13 +2515,14 @@ object TextOps {
          |FROM g CROSS JOIN t ORDER BY verdict""".stripMargin
     Q.sqlDual(
       "dedup_plane_agreement",
-      s"""WITH $duckSigCtes,
+      s"""WITH ${duckSigCtes("documents WHERE doc_id IN (SELECT vec_id FROM embeddings)")},
          |tb AS ($duckBands),
          |tp AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |       FROM tb x JOIN tb y
          |         ON x.band = y.band AND x.v = y.v AND x.doc_id < y.doc_id),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         |${Similarity.signBandsSql("e")},
+         |${Similarity.duckEmb()},
+         |pe AS (SELECT vec_id, emb FROM e WHERE vec_id IN (SELECT doc_id FROM documents)),
+         |${Similarity.signBandsSql("pe", "n1 AS (SELECT count(*) AS n FROM e)")},
          |ec AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
          |       FROM bands x JOIN bands y
          |         ON x.band = y.band AND x.bucket = y.bucket
@@ -2694,7 +2688,7 @@ object TextOps {
     */
   val dedupCdc: Q = Q.sqlDual(
     "dedup_cdc",
-    s"""WITH w AS (SELECT doc_id, str_split(text, ' ') AS ws FROM documents),
+    s"""WITH ${duckWords()},
        |p AS (SELECT doc_id, i, ws[i] AS word
        |      FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i FROM w)),
        |g AS (SELECT doc_id, i, word,
@@ -2732,7 +2726,7 @@ object TextOps {
     s"""WITH dt AS MATERIALIZED (
        |  SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS m, text
        |  FROM documents GROUP BY text),
-       |w AS (SELECT gid, m, str_split(text, ' ') AS ws FROM dt),
+       |${duckWords("gid, m", "dt")},
        |p AS (SELECT gid, m, i, ws[i] AS word
        |      FROM (SELECT gid, m, ws, unnest(range(1, len(ws) + 1)) AS i FROM w)),
        |g AS (SELECT gid, m, i, word,

@@ -48,12 +48,25 @@ private[graft] object Tokens {
     (keyed, dist)
   }
 
+  /** DuckDB twin of [[distinctTexts]]: the CTE `name`, one row per
+    * distinct `documents` text keyed by `tk` (its md5), plus `aggs`. */
+  def duckDistinctTexts(aggs: Seq[String] = Nil, name: String = "grp"): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT md5(text) AS tk, min(text) AS text${aggs.map(a => s",\n    $a").mkString}
+       |  FROM documents GROUP BY 1)""".stripMargin
+
   // ---------------------------------------------------------- words --
 
   /** The word stream of `text`: split on single spaces, so empty words
     * survive between double spaces and an empty text is one empty word
     * (DuckDB twin: `str_split(text, ' ')`). */
   val words: Column = split(col("text"), " ")
+
+  /** DuckDB twin of [[words]]: the CTE `name` over `from` with the `keep`
+    * select items and the word list `ws`. */
+  def duckWords(keep: String = "doc_id", from: String = "documents",
+      name: String = "w"): String =
+    s"$name AS (SELECT ${if (keep.isEmpty) "" else s"$keep, "}str_split(text, ' ') AS ws FROM $from)"
 
   // -------------------------------------------------------- n-grams --
 
@@ -89,6 +102,6 @@ private[graft] object Tokens {
     * (the `keep` columns + word list `ws`) and `docs` (+ shingle list
     * `s3`), ready for the MinHash signature CTE. */
   def duckShingleCtes(keep: String = "doc_id", from: String = "documents"): String =
-    s"""w AS (SELECT $keep, str_split(text, ' ') AS ws FROM $from),
+    s"""${duckWords(keep, from)},
        |docs AS (SELECT $keep, ${duckGrams(3)} AS s3 FROM w)""".stripMargin
 }

@@ -29,16 +29,25 @@ object Similarity {
     round(GraftFunctions.graftCosine(a, b), 4)
 
   /** The serve query set: vectors with id < 10 are the queries of every
-    * ANN op (the oracles spell the same predicate as `vec_id < 10`). */
+    * ANN op. */
   private val isQuery: Column = col("vec_id") < 10
+
+  // ---- DuckDB oracle twins: only oracle strings read these ----
+
+  /** Twin of [[emb]]: the CTE `name` with the `keep` columns and the
+    * embedding as a DOUBLE list `emb`. */
+  private[graft] def duckEmb(keep: String = "vec_id", name: String = "e"): String =
+    s"$name AS (SELECT $keep, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)"
+
+  /** Twin of [[isQuery]] over the id column `id`. */
+  private def duckIsQuery(id: String = "vec_id"): String = s"$id < 10"
 
   // ---- shared quantizer-training blocks (trained IVF + PQ, both engines) --
 
   /** Decimal-exact per-label centroid CTEs (e, u, cd, cent) — the single
     * oracle-side definition of quantizer training. */
   private val centCtesSql: String =
-    """e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-      |           FROM embeddings),
+    s"""${duckEmb("vec_id, label")},
       |u AS (SELECT label, unnest(emb) AS v, generate_subscripts(emb, 1) AS dim FROM e),
       |cd AS (SELECT label, dim,
       |         CAST(sum(CAST(v AS DECIMAL(28,9))) AS DOUBLE) / count(*) AS c
@@ -70,16 +79,16 @@ object Similarity {
       count(lit(1)).as("n"))
     .select(col("clabel"), expr("transform(sv, x -> cast(x as double) / n)").as("cv"))
 
-  /** Full-vector centroid-distance ranks CTEs (ad, ar) on top of
-    * [[centCtesSql]] — rn = 1 is the IVF cell assignment; rn ≤ p is the
-    * multi-probe list. */
-  private val centRanksCtesSql: String =
-    """ad AS (SELECT vec_id, clabel,
+  /** Full-vector centroid-distance ranks CTEs (ad, ar — named with
+    * prefix `p`) on top of [[centCtesSql]] — rn = 1 is the IVF cell
+    * assignment; rn ≤ p is the multi-probe list. */
+  private def centRanksCtes(p: String = ""): String =
+    s"""${p}ad AS (SELECT vec_id, clabel,
       |         list_sum(list_transform(range(1, len(emb) + 1),
       |           i -> (emb[i] - cv[i]) * (emb[i] - cv[i]))) AS dist
       |       FROM e, cent),
-      |ar AS (SELECT vec_id, clabel, row_number() OVER (
-      |         PARTITION BY vec_id ORDER BY dist, clabel) AS rn FROM ad)""".stripMargin
+      |${p}ar AS (SELECT vec_id, clabel, row_number() OVER (
+      |         PARTITION BY vec_id ORDER BY dist, clabel) AS rn FROM ${p}ad)""".stripMargin
 
   /** Spark twin of `ar`: every (vector, label centroid) pair ranked by
     * L2², ties by label — the [[cellRanks]] fold over the label codebook;
@@ -162,10 +171,7 @@ object Similarity {
     * candidate lives in exactly one cell, so no pair is scored twice.
     * Persisted: both frames branch off the rank subtree, and without it
     * each re-runs centroid training + the |vectors|×|cells| scoring (≤
-    * nprobe tiny rows per vector; session-scoped, Verify clearCache).
-    * MEMORY_AND_DISK: the table is ∝ |vectors|, so at 100 TB memory-only
-    * eviction would re-train per miss; disk spill bounds the recompute at
-    * one. */
+    * nprobe tiny rows per vector; session-scoped, Verify clearCache). */
   private def probeList(e: DataFrame, ranks: DataFrame,
       nprobe: Int): (DataFrame, DataFrame) = {
     val r = ranks.filter(col("rn") <= nprobe)
@@ -180,6 +186,12 @@ object Similarity {
         col("qcell"), col("probe"))
     (assign, q)
   }
+
+  /** Oracle twin of [[probeList]]'s `assign`: each vector's rn = 1 cell
+    * off the rank CTE `ar`, whose centroid id column is `cid`. */
+  private def duckAssignSql(cid: String, materialized: Boolean = false): String =
+    s"assign AS${if (materialized) " MATERIALIZED" else ""} " +
+      s"(SELECT vec_id, $cid AS cell FROM ar WHERE rn = 1)"
 
   /** The IVF candidate side: every vector with its assigned cell. */
   private def cellCands(e: DataFrame, assign: DataFrame): DataFrame =
@@ -212,11 +224,16 @@ object Similarity {
       + when(element_at(col("embedding"), 3) > 0f, 2).otherwise(0)
       + when(element_at(col("embedding"), 4) > 0f, 1).otherwise(0)).cast("int")
 
+  /** Oracle twin of [[signCell]]. */
+  private val duckSignCell: String =
+    """CAST(embedding[1] > 0 AS INT) * 8 + CAST(embedding[2] > 0 AS INT) * 4
+      |      + CAST(embedding[3] > 0 AS INT) * 2 + CAST(embedding[4] > 0 AS INT)""".stripMargin
+
   /** Brute-force cosine top-k per query vector (query side broadcast). */
   val annTopk: Q = Q.sql(
     "ann_topk",
-    """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-      |           FROM embeddings WHERE vec_id < 10),
+    s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
+      |           FROM embeddings WHERE ${duckIsQuery()}),
       |c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
       |s AS (SELECT query_id, vec_id AS neighbor_id,
       |        round(list_cosine_similarity(qe, ce), 4) AS cos_sim
@@ -268,7 +285,7 @@ object Similarity {
         |    ${duckSig(32, 64, 32)} AS hi
         |  FROM e),
         |q AS (SELECT vec_id AS query_id, lo AS qlo, hi AS qhi
-        |      FROM sig WHERE vec_id < 10),
+        |      FROM sig WHERE ${duckIsQuery()}),
         |h AS (SELECT query_id, s.vec_id AS neighbor_id,
         |        CAST(bit_count(xor(s.lo, qlo)) + bit_count(xor(s.hi, qhi)) AS INT)
         |          AS hamming
@@ -278,7 +295,7 @@ object Similarity {
         |       FROM h),
         |served AS (SELECT * FROM hr WHERE rank <= 5),
         |qv AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-        |       FROM embeddings WHERE vec_id < 10),
+        |       FROM embeddings WHERE ${duckIsQuery()}),
         |cv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
         |cs AS (SELECT query_id, vec_id AS neighbor_id,
         |         round(list_cosine_similarity(qe, ce), 4) AS cos_sim
@@ -323,12 +340,8 @@ object Similarity {
     * cell. At scale, cells are the shuffle/partition key. */
   val annIvf: Q = Q.sql(
     "ann_ivf",
-    """WITH e AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-      |    CAST(embedding[1] > 0 AS INT) * 8 + CAST(embedding[2] > 0 AS INT) * 4
-      |      + CAST(embedding[3] > 0 AS INT) * 2 + CAST(embedding[4] > 0 AS INT) AS cell
-      |  FROM embeddings),
-      |q AS (SELECT vec_id AS query_id, emb AS qe, cell FROM e WHERE vec_id < 10),
+    s"""WITH ${duckEmb(s"vec_id, $duckSignCell AS cell")},
+      |q AS (SELECT vec_id AS query_id, emb AS qe, cell FROM e WHERE ${duckIsQuery()}),
       |s AS (SELECT query_id, e.vec_id AS neighbor_id, e.cell,
       |        round(list_cosine_similarity(qe, emb), 4) AS cos_sim
       |      FROM q JOIN e ON q.cell = e.cell AND e.vec_id <> q.query_id),
@@ -413,20 +426,11 @@ object Similarity {
        |          FROM eb, (SELECT unnest([1, 2]) AS band) bb)""".stripMargin
   }
 
-  val dedupEmbedding: Q = {
-    val bitsCase = adaptiveBitsSql
+  val dedupEmbedding: Q =
     Q.sql(
       "dedup_embedding",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-        |           FROM embeddings),
-        |n1 AS (SELECT count(*) AS n FROM e),
-        |eb AS (SELECT vec_id, emb, ($bitsCase) AS b FROM e, n1),
-        |bands AS (SELECT vec_id, band,
-        |            list_sum(list_transform(range(1, b + 1),
-        |              i -> CASE WHEN emb[(band - 1) * b + i] > 0
-        |                   THEN (CAST(1 AS BIGINT) << CAST(b - i AS INT))
-        |                   ELSE CAST(0 AS BIGINT) END)) AS bucket
-        |          FROM eb, (SELECT unnest([1, 2]) AS band) bb),
+      s"""WITH ${duckEmb()},
+        |${signBandsSql()},
         |cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
         |         FROM bands x JOIN bands y
         |           ON x.band = y.band AND x.bucket = y.bucket
@@ -450,7 +454,6 @@ object Similarity {
         .filter(col("cos_sim") >= 0.35)
         .orderBy(col("cos_sim").desc, col("id_a"), col("id_b"))
     }
-  }
 
   /** Per-label centroids — the k-means / IVF-training building block: one
     * partial-aggregating shuffle on (label, dim); at scale this is how IVF
@@ -489,10 +492,10 @@ object Similarity {
   val annIvfTrained: Q = Q.sql(
     "ann_ivf_trained",
     s"""WITH $centCtesSql,
-      |$centRanksCtesSql,
-      |assign AS (SELECT vec_id, clabel AS cell FROM ar WHERE rn = 1),
+      |${centRanksCtes()},
+      |${duckAssignSql("clabel")},
       |q AS (SELECT e.vec_id AS query_id, e.emb AS qe, a.cell
-      |      FROM e JOIN assign a ON e.vec_id = a.vec_id WHERE e.vec_id < 10),
+      |      FROM e JOIN assign a ON e.vec_id = a.vec_id WHERE ${duckIsQuery("e.vec_id")}),
       |cands AS (SELECT e.vec_id AS neighbor_id, e.emb AS ce, a.cell
       |          FROM e JOIN assign a ON e.vec_id = a.vec_id),
       |s AS (SELECT query_id, neighbor_id, q.cell,
@@ -522,7 +525,7 @@ object Similarity {
     * error reduce is a max, not a sum, so no ordering concerns. */
   val embQuantize: Q = Q.sql(
     "emb_quantize",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH ${duckEmb()},
       |m AS (SELECT vec_id, emb,
       |        list_max(list_transform(emb, x -> abs(x))) AS mx FROM e),
       |c AS (SELECT vec_id, mx,
@@ -560,7 +563,7 @@ object Similarity {
     * The norm fold runs per-element in array order on both engines. */
   val embNormalize: Q = Q.sql(
     "emb_normalize",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH ${duckEmb()},
       |n AS (SELECT vec_id, emb,
       |        sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm FROM e)
       |SELECT vec_id, round(nrm, 6) AS norm,
@@ -657,7 +660,7 @@ object Similarity {
     s"""WITH $centCtesSql,
       |$pqAminCtesSql,
       |$pqReconCtesSql,
-      |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10),
+      |q AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE ${duckIsQuery()}),
       |s AS (SELECT query_id, r.vec_id AS neighbor_id,
       |        round(list_sum(list_transform(range(1, 65),
       |          i -> (qe[i] - rv[i]) * (qe[i] - rv[i]))), 6) AS adc_dist
@@ -678,6 +681,19 @@ object Similarity {
       col("adc_dist"), 3)
       .orderBy("query_id", "rank")
   }
+
+  /** Oracle twin of the ground truth [[recallAt3]] reads: `bf` scores
+    * every query of `e` against every other vector, `bf3` keeps each
+    * query's top 3 (rank `rk`, ties by neighbor id) — [[annTopk]]'s
+    * ranking cut at 3. */
+  private val duckTruth3Sql: String =
+    s"""bf AS (SELECT bq.vec_id AS query_id, e.vec_id AS neighbor_id,
+       |         round(list_cosine_similarity(bq.emb, e.emb), 4) AS cs
+       |       FROM e bq JOIN e ON e.vec_id <> bq.vec_id WHERE ${duckIsQuery("bq.vec_id")}),
+       |bf3 AS (SELECT query_id, neighbor_id, rk FROM (
+       |          SELECT *, row_number() OVER (
+       |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
+       |          FROM bf) WHERE rk <= 3)""".stripMargin
 
   /** recall@3 of an index's top-3 against the brute-force top-3
     * ([[annTopk]]), per query: the body of every recall audit. */
@@ -704,20 +720,10 @@ object Similarity {
     * is the bounded broadcast side. */
   val annRecall: Q = Q.sql(
     "ann_recall",
-    """WITH e AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-      |    CAST(emb[1] > 0 AS INT) * 8 + CAST(emb[2] > 0 AS INT) * 4
-      |      + CAST(emb[3] > 0 AS INT) * 2 + CAST(emb[4] > 0 AS INT) AS cell
-      |  FROM embeddings),
+    s"""WITH ${duckEmb(s"vec_id, $duckSignCell AS cell")},
       |q AS (SELECT vec_id AS query_id, emb AS qe, cell AS qcell
-      |      FROM e WHERE vec_id < 10),
-      |bf AS (SELECT query_id, vec_id AS neighbor_id,
-      |         round(list_cosine_similarity(qe, emb), 4) AS cs
-      |       FROM q JOIN e ON e.vec_id <> q.query_id),
-      |bf3 AS (SELECT query_id, neighbor_id FROM (
-      |          SELECT *, row_number() OVER (
-      |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
-      |          FROM bf) WHERE rk <= 3),
+      |      FROM e WHERE ${duckIsQuery()}),
+      |$duckTruth3Sql,
       |iv AS (SELECT query_id, e.vec_id AS neighbor_id,
       |         round(list_cosine_similarity(qe, emb), 4) AS cs
       |       FROM q JOIN e ON q.qcell = e.cell AND e.vec_id <> q.query_id),
@@ -746,20 +752,10 @@ object Similarity {
     * rows. */
   val annNdcg: Q = Q.sql(
     "ann_ndcg",
-    s"""WITH e AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-      |    CAST(emb[1] > 0 AS INT) * 8 + CAST(emb[2] > 0 AS INT) * 4
-      |      + CAST(emb[3] > 0 AS INT) * 2 + CAST(emb[4] > 0 AS INT) AS cell
-      |  FROM embeddings),
+    s"""WITH ${duckEmb(s"vec_id, $duckSignCell AS cell")},
       |q AS (SELECT vec_id AS query_id, emb AS qe, cell AS qcell
-      |      FROM e WHERE vec_id < 10),
-      |bf AS (SELECT query_id, vec_id AS neighbor_id,
-      |         round(list_cosine_similarity(qe, emb), 4) AS cs
-      |       FROM q JOIN e ON e.vec_id <> q.query_id),
-      |bf3 AS (SELECT query_id, neighbor_id, rk FROM (
-      |          SELECT *, row_number() OVER (
-      |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
-      |          FROM bf) WHERE rk <= 3),
+      |      FROM e WHERE ${duckIsQuery()}),
+      |$duckTruth3Sql,
       |iv AS (SELECT query_id, e.vec_id AS neighbor_id,
       |         round(list_cosine_similarity(qe, emb), 4) AS cs
       |       FROM q JOIN e ON q.qcell = e.cell AND e.vec_id <> q.query_id),
@@ -805,10 +801,10 @@ object Similarity {
   val annIvfMultiprobe: Q = Q.sql(
     "ann_ivf_multiprobe",
     s"""WITH $centCtesSql,
-      |$centRanksCtesSql,
-      |assign AS (SELECT vec_id, clabel AS cell FROM ar WHERE rn = 1),
+      |${centRanksCtes()},
+      |${duckAssignSql("clabel")},
       |qprobe AS (SELECT vec_id, clabel AS cell, CAST(rn AS INT) AS probe
-      |           FROM ar WHERE rn <= 2 AND vec_id < 10),
+      |           FROM ar WHERE rn <= 2 AND ${duckIsQuery()}),
       |q AS (SELECT e.vec_id AS query_id, e.emb AS qe, p.cell, p.probe
       |      FROM e JOIN qprobe p ON e.vec_id = p.vec_id),
       |cands AS (SELECT e.vec_id AS neighbor_id, e.emb AS ce, a.cell
@@ -851,10 +847,10 @@ object Similarity {
   val annNprobeCurve: Q = Q.sql(
     "ann_nprobe_curve",
     s"""WITH $centCtesSql,
-      |$centRanksCtesSql,
-      |assign AS (SELECT vec_id, clabel AS cell FROM ar WHERE rn = 1),
+      |${centRanksCtes()},
+      |${duckAssignSql("clabel")},
       |qprobe AS (SELECT vec_id, clabel AS cell, CAST(rn AS INT) AS probe_rank
-      |           FROM ar WHERE rn <= 4 AND vec_id < 10),
+      |           FROM ar WHERE rn <= 4 AND ${duckIsQuery()}),
       |q AS (SELECT e.vec_id AS query_id, e.emb AS qe, p.cell, p.probe_rank
       |      FROM e JOIN qprobe p ON e.vec_id = p.vec_id),
       |cands AS (SELECT e.vec_id AS neighbor_id, e.emb AS ce, a.cell
@@ -872,14 +868,7 @@ object Similarity {
       |         PARTITION BY nprobe, query_id ORDER BY cs DESC, neighbor_id) AS rk
       |       FROM px),
       |iv3 AS (SELECT nprobe, query_id, neighbor_id FROM rk WHERE rk <= 3),
-      |qv AS (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10),
-      |bf AS (SELECT query_id, e.vec_id AS neighbor_id,
-      |         round(list_cosine_similarity(qe, emb), 4) AS cs
-      |       FROM qv JOIN e ON e.vec_id <> qv.query_id),
-      |bf3 AS (SELECT query_id, neighbor_id FROM (
-      |          SELECT *, row_number() OVER (
-      |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
-      |          FROM bf) WHERE rk <= 3),
+      |$duckTruth3Sql,
       |hits AS (SELECT nprobe, CAST(count(*) AS BIGINT) AS n_hits
       |         FROM iv3 JOIN bf3 ON iv3.query_id = bf3.query_id
       |           AND iv3.neighbor_id = bf3.neighbor_id
@@ -1004,17 +993,12 @@ object Similarity {
     s"""WITH $centCtesSql,
       |$pqAminCtesSql,
       |$pqReconCtesSql,
-      |fad AS (SELECT vec_id, clabel,
-      |         list_sum(list_transform(range(1, len(emb) + 1),
-      |           i -> (emb[i] - cv[i]) * (emb[i] - cv[i]))) AS dist
-      |       FROM e, cent),
-      |far AS (SELECT vec_id, clabel, row_number() OVER (
-      |         PARTITION BY vec_id ORDER BY dist, clabel) AS rn FROM fad),
+      |${centRanksCtes("f")},
       |asg AS (SELECT vec_id, clabel AS cell FROM far WHERE rn = 1),
       |qp AS (SELECT f.vec_id AS query_id, e.emb AS qe, f.clabel AS cell,
       |         CAST(f.rn AS INT) AS probe
       |       FROM far f JOIN e ON e.vec_id = f.vec_id
-      |       WHERE f.vec_id < 10 AND f.rn <= 2),
+      |       WHERE ${duckIsQuery("f.vec_id")} AND f.rn <= 2),
       |cand AS (SELECT qp.query_id, a.vec_id AS neighbor_id, qp.probe,
       |           round(list_sum(list_transform(range(1, 65),
       |             i -> (qe[i] - rv[i]) * (qe[i] - rv[i]))), 6) AS adc_dist
@@ -1208,19 +1192,25 @@ object Similarity {
        |c2$sfx AS MATERIALIZED ${centCte(s"a2$sfx")}""".stripMargin
   }
 
+  /** Oracle twin of [[kmeansRanks]] and [[probeList]]'s `assign`: `e`,
+    * the trained centroids `c2`, every (vector, centroid) pair ranked
+    * (`ar`) and each vector's cell (`assign`). */
+  private def kmeansCellsSql(k: Int, seeding: String = "id",
+      materialized: Boolean = false): String =
+    s"""${duckEmb()},
+       |${kmeansTrainSql(k, seeding)},
+       |ar AS (SELECT e.vec_id, s.cid, row_number() OVER (
+       |         PARTITION BY e.vec_id ORDER BY ${kmeansDistSql("e.emb", "s.cv")}, s.cid) AS rn
+       |       FROM e, c2 s),
+       |${duckAssignSql("cid", materialized)}""".stripMargin
+
   /** Oracle twin of the full kmeans search (training + probe/search CTEs);
     * ends with `r` = ranked per-query candidates. */
   private def kmeansSearchSql(k: Int, nprobe: Int,
       seeding: String = "id"): String = {
-    def dist(e: String, c: String) = kmeansDistSql(e, c)
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |${kmeansTrainSql(k, seeding)},
-       |ar AS (SELECT e.vec_id, s.cid, row_number() OVER (
-       |         PARTITION BY e.vec_id ORDER BY ${dist("e.emb", "s.cv")}, s.cid) AS rn
-       |       FROM e, c2 s),
-       |assign AS (SELECT vec_id, cid AS cell FROM ar WHERE rn = 1),
+    s"""${kmeansCellsSql(k, seeding)},
        |qprobe AS (SELECT vec_id, cid AS cell, CAST(rn AS INT) AS probe
-       |           FROM ar WHERE rn <= $nprobe AND vec_id < 10),
+       |           FROM ar WHERE rn <= $nprobe AND ${duckIsQuery()}),
        |q AS (SELECT e.vec_id AS query_id, e.emb AS qe, p.cell, p.probe
        |      FROM e JOIN qprobe p ON e.vec_id = p.vec_id),
        |cands AS (SELECT e.vec_id AS neighbor_id, e.emb AS ce, a.cell
@@ -1266,14 +1256,7 @@ object Similarity {
     "ann_recall_kmeans",
     s"""WITH ${kmeansSearchSql(k = 64, nprobe = 2)},
        |iv3 AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 3),
-       |bf AS (SELECT q2.query_id, e.vec_id AS neighbor_id,
-       |         round(list_cosine_similarity(q2.qe, e.emb), 4) AS cs
-       |       FROM (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10) q2
-       |       JOIN e ON e.vec_id <> q2.query_id),
-       |bf3 AS (SELECT query_id, neighbor_id FROM (
-       |          SELECT *, row_number() OVER (
-       |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
-       |          FROM bf) WHERE rk <= 3)
+       |$duckTruth3Sql
        |SELECT b.query_id, count(i.neighbor_id) AS n_hits, count(*) AS n_exact,
        |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
        |FROM bf3 b LEFT JOIN iv3 i
@@ -1304,14 +1287,7 @@ object Similarity {
     "ann_recall_kmeanspp",
     s"""WITH ${kmeansSearchSql(k = 64, nprobe = 2, seeding = "maximin")},
        |iv3 AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 3),
-       |bf AS (SELECT q2.query_id, e.vec_id AS neighbor_id,
-       |         round(list_cosine_similarity(q2.qe, e.emb), 4) AS cs
-       |       FROM (SELECT vec_id AS query_id, emb AS qe FROM e WHERE vec_id < 10) q2
-       |       JOIN e ON e.vec_id <> q2.query_id),
-       |bf3 AS (SELECT query_id, neighbor_id FROM (
-       |          SELECT *, row_number() OVER (
-       |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
-       |          FROM bf) WHERE rk <= 3)
+       |$duckTruth3Sql
        |SELECT b.query_id, count(i.neighbor_id) AS n_hits, count(*) AS n_exact,
        |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
        |FROM bf3 b LEFT JOIN iv3 i
@@ -1352,12 +1328,7 @@ object Similarity {
     * on that bounded frame; output ≤ k rows. */
   val embClusterPurity: Q = Q.sql(
     "emb_cluster_purity",
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      |${kmeansTrainSql(64, "id")},
-      |ar AS (SELECT e.vec_id, s.cid, row_number() OVER (
-      |         PARTITION BY e.vec_id ORDER BY ${kmeansDistSql("e.emb", "s.cv")}, s.cid) AS rn
-      |       FROM e, c2 s),
-      |assign AS (SELECT vec_id, cid AS cell FROM ar WHERE rn = 1),
+    s"""WITH ${kmeansCellsSql(64)},
       |m AS (SELECT cell, label, CAST(count(*) AS BIGINT) AS c
       |      FROM assign JOIN embeddings USING (vec_id) GROUP BY 1, 2),
       |rk AS (SELECT *, row_number() OVER (
@@ -1431,7 +1402,7 @@ object Similarity {
          |   FROM $asg JOIN grp g USING (gid),
          |     LATERAL (SELECT unnest(g.emb) AS v, generate_subscripts(g.emb, 1) AS dim) u
          |   GROUP BY $asg.cid, u.dim) GROUP BY cid)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH ${duckEmb()},
        |grp AS MATERIALIZED (SELECT min(vec_id) AS gid,
        |       CAST(count(*) AS BIGINT) AS m, emb FROM e GROUP BY emb),
        |seeds AS MATERIALIZED (
@@ -1467,12 +1438,7 @@ object Similarity {
 
   val dedupSemantic: Q = Q.sqlDual(
     "dedup_semantic",
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      |${kmeansTrainSql(64, "id")},
-      |ar AS (SELECT e.vec_id, s.cid, row_number() OVER (
-      |         PARTITION BY e.vec_id ORDER BY ${kmeansDistSql("e.emb", "s.cv")}, s.cid) AS rn
-      |       FROM e, c2 s),
-      |assign AS MATERIALIZED (SELECT vec_id, cid AS cell FROM ar WHERE rn = 1),
+    s"""WITH ${kmeansCellsSql(64, materialized = true)},
       |cc AS MATERIALIZED (SELECT a.vec_id, a.cell,
       |        round(list_cosine_similarity(e.emb, c2.cv), 4) AS ccos
       |      FROM assign a JOIN e ON e.vec_id = a.vec_id JOIN c2 ON c2.cid = a.cell),
@@ -1508,7 +1474,6 @@ object Similarity {
       .withColumn("gid", min("vec_id").over(byVec))
       .withColumn("mult", count(lit(1)).over(byVec))
       .withColumn("rk", row_number().over(byVec.orderBy("vec_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val reps = g.filter(col("rk") === 1)
       .select(col("gid"), col("cell"), col("ccos"), col("emb_d"), col("mult"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1559,12 +1524,7 @@ object Similarity {
     * both engines. */
   val dedupSemanticCurve: Q = Q.sql(
     "dedup_semantic_curve",
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      |${kmeansTrainSql(64, "id")},
-      |ar AS (SELECT e.vec_id, s.cid, row_number() OVER (
-      |         PARTITION BY e.vec_id ORDER BY ${kmeansDistSql("e.emb", "s.cv")}, s.cid) AS rn
-      |       FROM e, c2 s),
-      |assign AS MATERIALIZED (SELECT vec_id, cid AS cell FROM ar WHERE rn = 1),
+    s"""WITH ${kmeansCellsSql(64, materialized = true)},
       |cc AS MATERIALIZED (SELECT a.vec_id, a.cell,
       |        round(list_cosine_similarity(e.emb, c2.cv), 4) AS ccos
       |      FROM assign a JOIN e ON e.vec_id = a.vec_id JOIN c2 ON c2.cid = a.cell),
@@ -1659,8 +1619,7 @@ object Similarity {
     * aggregate (no window over pair rows); rollup ≤ |labels| rows. */
   val embTripletAudit: Q = Q.sql(
     "emb_triplet_audit",
-    """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-      |           FROM embeddings),
+    s"""WITH ${duckEmb("vec_id, label")},
       |a AS (SELECT vec_id AS aid, label AS alabel, emb AS ae
       |      FROM e WHERE vec_id < 30),
       |p AS (SELECT aid, alabel, e.vec_id AS vid, e.label = alabel AS same,
@@ -1718,7 +1677,7 @@ object Similarity {
     }
     Q.sql(
       "ann_kmeans_convergence",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${duckEmb()},
          |${kmeansTrainSql(64, "id", "_i")},
          |${kmeansTrainSql(64, "maximin", "_m")}
          |${Seq(armSql("_i", "id", 1), armSql("_i", "id", 2),
@@ -1816,7 +1775,7 @@ object Similarity {
     * ([[embOutliers]]'s discipline). */
   val embDimStats: Q = Q.sql(
     "emb_dim_stats",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH ${duckEmb()},
       |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
       |r AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
       |a AS (SELECT dim, count(*) AS n_vecs,
@@ -1881,7 +1840,7 @@ object Similarity {
     * (order-free), and the published doubles divide exact integers. */
   val embEffectiveRank: Q = Q.sql(
     "emb_effective_rank",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH ${duckEmb()},
       |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
       |r AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
       |a AS (SELECT dim, count(*) AS n,
@@ -2205,8 +2164,7 @@ object Similarity {
     * and expands per-doc top-3 edges through the bounded pool (own
     * group's 4 smallest ids + each candidate group's 3 smallest). */
   private lazy val knn3ScaleHeadSql: String =
-    s"""e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-       |      FROM embeddings),
+    s"""${duckEmb("vec_id, label")},
        |mem AS MATERIALIZED (
        |  SELECT vec_id, label, emb,
        |    min(vec_id) OVER (PARTITION BY emb) AS gid,
@@ -2237,8 +2195,7 @@ object Similarity {
 
   val annKnnGraph: Q = Q.sqlDual(
     "ann_knn_graph",
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
+    s"""WITH ${duckEmb()},
        |${signBandsSql()},
        |cand AS (SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
        |         FROM bands x JOIN bands y
@@ -2344,8 +2301,7 @@ object Similarity {
     * that size), rounded once per row. */
   val embHubness: Q = Q.sqlDual(
     "emb_hubness",
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
+    s"""WITH ${duckEmb()},
        |${signBandsSql()},
        |cand AS (SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
        |         FROM bands x JOIN bands y
@@ -2436,8 +2392,8 @@ object Similarity {
   val embClusterSample: Q = Q.sql(
     "emb_cluster_sample",
     s"""WITH $centCtesSql,
-       |$centRanksCtesSql,
-       |assign AS (SELECT vec_id, clabel AS cell FROM ar WHERE rn = 1),
+       |${centRanksCtes()},
+       |${duckAssignSql("clabel")},
        |t AS (SELECT CAST(count(*) AS BIGINT) AS n,
        |        CAST(count(DISTINCT cell) AS BIGINT) AS k FROM assign),
        |q AS (SELECT (n + k - 1) // k AS quota FROM t),
@@ -2495,7 +2451,7 @@ object Similarity {
     * engines; min/max/count aggregates over identical values. */
   val embWhiten: Q = Q.sql(
     "emb_whiten",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH ${duckEmb()},
       |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
       |r AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
       |a AS (SELECT dim, count(*) AS n_vecs,
@@ -2553,8 +2509,7 @@ object Similarity {
     * |buckets| ≤ 2·2^16 rows → 2-row band rollup. */
   val lshBucketStats: Q = Q.sql(
     "lsh_bucket_stats",
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
+    s"""WITH ${duckEmb()},
        |${signBandsSql("e")},
        |g AS (SELECT band, bucket, count(*) AS sz FROM bands GROUP BY 1, 2)
        |SELECT band, CAST(sum(sz) AS BIGINT) AS n_vecs,
@@ -2592,8 +2547,7 @@ object Similarity {
     * join-back); the report is a ≤ |labels|-row rollup. */
   val embLabelVote: Q = Q.sqlDual(
     "emb_label_vote",
-    s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
+    s"""WITH ${duckEmb("vec_id, label")},
        |${signBandsSql()},
        |cand AS (SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
        |         FROM bands x JOIN bands y
@@ -2685,12 +2639,8 @@ object Similarity {
     * is per-query over one probed cell's survivors. */
   val annFiltered: Q = Q.sql(
     "ann_filtered",
-    """WITH e AS (
-      |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb,
-      |    CAST(embedding[1] > 0 AS INT) * 8 + CAST(embedding[2] > 0 AS INT) * 4
-      |      + CAST(embedding[3] > 0 AS INT) * 2 + CAST(embedding[4] > 0 AS INT) AS cell
-      |  FROM embeddings),
-      |q AS (SELECT vec_id AS query_id, emb AS qe, cell FROM e WHERE vec_id < 10),
+    s"""WITH ${duckEmb(s"vec_id, label, $duckSignCell AS cell")},
+      |q AS (SELECT vec_id AS query_id, emb AS qe, cell FROM e WHERE ${duckIsQuery()}),
       |s AS (SELECT query_id, e.vec_id AS neighbor_id, e.label,
       |        round(list_cosine_similarity(qe, emb), 4) AS cos_sim
       |      FROM q JOIN e ON q.cell = e.cell AND e.vec_id <> q.query_id
@@ -2735,7 +2685,7 @@ object Similarity {
     * exact DECIMAL sums of the already-rounded shares. */
   val embMatryoshka: Q = Q.sql(
     "emb_matryoshka",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH ${duckEmb()},
       |u AS (SELECT vec_id,
       |        CAST(round(round(unnest(emb), 6) * 1000000, 0) AS BIGINT) AS uv,
       |        generate_subscripts(emb, 1) AS dim FROM e),
@@ -2806,7 +2756,7 @@ object Similarity {
   val annIvfBalance: Q = Q.sql(
     "ann_ivf_balance",
     s"""WITH $centCtesSql,
-      |$centRanksCtesSql,
+      |${centRanksCtes()},
       |a AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_vecs
       |      FROM ar WHERE rn = 1 GROUP BY 1),
       |t AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS tot,
@@ -2857,7 +2807,7 @@ object Similarity {
   val annQuerySkew: Q = Q.sql(
     "ann_query_skew",
     s"""WITH $centCtesSql,
-      |$centRanksCtesSql,
+      |${centRanksCtes()},
       |a AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_vecs
       |      FROM ar WHERE rn = 1 GROUP BY 1),
       |qt AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_queries
@@ -2993,8 +2943,7 @@ object Similarity {
     * engines. */
   val embIsotropy: Q = Q.sql(
     "emb_isotropy",
-    """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-      |           FROM embeddings),
+    s"""WITH ${duckEmb("vec_id, label")},
       |r AS (SELECT label, emb,
       |        list_sum(list_transform(emb, x -> x * x)) AS normsq
       |      FROM e),
@@ -3047,7 +2996,7 @@ object Similarity {
   val annShardPlan: Q = Q.sql(
     "ann_shard_plan",
     s"""WITH $centCtesSql,
-      |$centRanksCtesSql,
+      |${centRanksCtes()},
       |a AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_vecs
       |      FROM ar WHERE rn = 1 GROUP BY 1),
       |r AS (SELECT cell, n_vecs,
@@ -3092,8 +3041,7 @@ object Similarity {
     * means ride exact decimals. */
   val crossmodalMix: Q = Q.sql(
     "crossmodal_mix",
-    """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-      |           FROM embeddings),
+    s"""WITH ${duckEmb("vec_id, label")},
       |j AS (SELECT e.label, d.lang, d.source, d.n_chars,
       |        sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm
       |      FROM e JOIN documents d ON d.doc_id = e.vec_id)
@@ -3163,10 +3111,9 @@ object Similarity {
     val idHash = graft.text.TextOps.duckWordHash("CAST(vec_id AS VARCHAR)")
     Q.sql(
       "ann_graph_search",
-      s"""WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-        |            FROM embeddings),
+      s"""WITH ${duckEmb(name = "e0")},
         |q AS MATERIALIZED (SELECT vec_id AS query_id, emb AS qe
-        |     FROM e0 WHERE vec_id < 10),
+        |     FROM e0 WHERE ${duckIsQuery()}),
         |e AS MATERIALIZED (SELECT min(vec_id) AS vec_id, emb
         |     FROM e0 WHERE vec_id >= 10 GROUP BY emb),
         |${signBandsSql("e")},
@@ -3302,7 +3249,7 @@ object Similarity {
     * the two imbalance ratios divide the 4-row extremes once. */
   val annPqDimAlloc: Q = Q.sql(
     "ann_pq_dim_alloc",
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+    s"""WITH ${duckEmb()},
       |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
       |r0 AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
       |a AS (SELECT dim, count(*) AS n,
@@ -3397,8 +3344,7 @@ object Similarity {
     * to the residual table. */
   val embRvq: Q = Q.sql(
     "emb_rvq",
-    s"""WITH e0 AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-      |            FROM embeddings),
+    s"""WITH ${duckEmb("vec_id, label", name = "e0")},
       |u0 AS (SELECT label, unnest(emb) AS v, generate_subscripts(emb, 1) AS dim
       |       FROM e0),
       |cd0 AS (SELECT label, dim,

@@ -650,6 +650,25 @@ class PlanShapeSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("dedup_semantic persists only its representative frame") {
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // every cached-frame scan the executed plan runs, also the scans
+    // inside another cached frame's own plan
+    def scans(p: SparkPlan): Seq[InMemoryTableScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case s: InMemoryTableScanExec => s +: scans(s.relation.cachedPlan)
+      case other => other.children.flatMap(scans)
+    }
+    val df = SparkEntry.queries("dedup_semantic")(spark, sfDir)
+    val frames = scans(finalPlan(df)).map(_.relation.cacheBuilder).distinct
+    assert(frames.size == 1,
+      s"dedup_semantic persists ${frames.size} frames:\n" +
+        frames.map(_.logicalPlan.treeString).mkString("\n---\n"))
+    spark.catalog.clearCache()
+  }
+
   test("vocab_coverage: two-phase rank — bucket pre-pass before the per-lang rank") {
     val df = SparkEntry.queries("vocab_coverage")(spark, sfDir)
     val windows = df.queryExecution.optimizedPlan.collect {
