@@ -10,6 +10,26 @@ import org.apache.spark.sql.SparkSession
   * dedup blocks of uneven size.
   */
 object GraftSession {
+  /** Size of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
+    * default 100). Sized from measured working sets, counted as compiles
+    * (`CodegenMetrics.METRIC_COMPILATION_TIME`) under a cache too large to
+    * evict anything, so each compile is a distinct class:
+    *  - one iteration of the benchmark's `audit_rebuild_capture` (8 audit
+    *    views + capture) generates 163 classes, 7 of them new on every
+    *    capture call; with 100 entries a second pass of the 8 views
+    *    recompiled 101 classes (sf0.001 test data);
+    *  - one iteration of `corpus_dedup` generates 119, and 12 more once its
+    *    persisted frames serve from the cache;
+    *  - one `graft.Verify` pass over all 308 ops at sf0.01 generates 5508.
+    * 1000 holds the largest repeated working set six times over, so a
+    * repeated op family compiles nothing after its first pass. It does not
+    * hold the whole op surface, which Verify runs once per op.
+    *
+    * The cache is one per JVM and takes its size from the session that
+    * first generates code, so this setting holds only when that session is
+    * built here; a later session in the same JVM shares the cache as it is. */
+  val codegenCacheEntries = 1000
+
   def build(appName: String, cpus: String): SparkSession = {
     // shuffle partitions default to the core count (local mode: one
     // healthy partition per core; AQE coalesces below that). The env
@@ -48,6 +68,7 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", maxSplit)
       .config("spark.sql.streaming.stateStore.providerClass", stateStore)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

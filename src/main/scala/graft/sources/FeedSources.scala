@@ -109,8 +109,10 @@ object FeedSources {
   def appendPartitioned(log: DataFrame, path: String): Unit =
     writeGuarded(log, path, SaveMode.Append)
 
+  /** Reads a partitioned sink; a re-read of an unchanged sink reuses its
+    * schema and runs no inference job ([[graft.Tables.parquet]]). */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
 
   /** Exactly-once view over the at-least-once capture sink: replayed
     * micro-batches (crash between write and checkpoint commit) appear as

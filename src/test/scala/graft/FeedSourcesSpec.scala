@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.FeedSources
+import org.apache.spark.graft.Jobs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -120,6 +121,18 @@ class FeedSourcesSpec extends AnyFunSuite {
     // a replayed batch (the at-least-once case) disappears behind the
     // exactly-once view
     assert(FeedSources.exactlyOnceView(spark, path).count() === n1)
+  }
+
+  test("re-reading an unchanged sink runs no inference job and plans as an inferred read") {
+    val path = s"$tmp/reread"
+    FeedSources.appendPartitioned(feed.limit(200), path)
+    FeedSources.exactlyOnceView(spark, path)
+    val (again, jobs) = Jobs.during(spark.sparkContext)(FeedSources.exactlyOnceView(spark, path))
+    assert(jobs === 0)
+    val inferred = spark.read.parquet(path).dropDuplicates("day", "event_id")
+    assert(again.queryExecution.analyzed.sameResult(inferred.queryExecution.analyzed))
+    assert(again.schema("day").dataType === inferred.schema("day").dataType)
+    assert(again.schema === inferred.schema)
   }
 
   test("compaction plan covers every fragmented partition exactly once") {

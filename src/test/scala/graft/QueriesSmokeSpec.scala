@@ -12,6 +12,7 @@ object TestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", s"/tmp/graft-warehouse-${sys.props("user.name")}")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.codegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -5,8 +5,7 @@
 # (JDK17 add-opens, SPARK_DRIVER_MEM heap).
 #
 # usage: tools/run_graft.sh <MainClass> [args...]
-#   env: SPARK_GRAFT_CPUS (read by GraftSession), SPARK_DRIVER_MEM,
-#        SPARK_GRAFT_SF_DIR (graft.ExplainOne)
+#   env: SPARK_GRAFT_CPUS (read by GraftSession), SPARK_DRIVER_MEM
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 MAIN=$1; shift
 OPENS=""
