@@ -25,7 +25,7 @@ object Tables {
   private val seen = new ConcurrentHashMap[String, Seen]()
 
   /** SQL settings that change the schema a parquet read infers: the
-    * footer type mapping (`Tables.events` sets nanosAsLong), schema merging
+    * footer type mapping ([[rawEvents]] sets nanosAsLong), schema merging
     * and partition-value inference. */
   private val inferenceConfs = Seq(
     SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_BINARY_AS_STRING,
@@ -83,16 +83,21 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame       = apply(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame     = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = apply(s, d, "lineitem")
-  /** events.ts in the driver's data is parquet TIMESTAMP(NANOS), which
-    * Spark's vectorized reader rejects; read it as raw long nanos and
-    * truncate to microseconds (the engine's native timestamp precision).
-    * Integer division — a double round-trip would lose precision above
-    * 2^53 ns. Re-materialized feeds (e.g. the gen_scale.py sf1 replica)
-    * carry ts already at micros; accept both encodings. */
-  def events(s: SparkSession, d: String): DataFrame = {
+  /** The raw read of an events feed at `path`. events.ts in the driver's
+    * data is parquet TIMESTAMP(NANOS), which Spark's vectorized reader
+    * rejects; this read takes it as raw long nanos, and
+    * [[graft.sources.FeedSources.normalize]] truncates it to microseconds
+    * (the engine's native timestamp precision). */
+  def rawEvents(s: SparkSession, path: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.sources.FeedSources.normalize(apply(s, d, "events"))
+    parquet(s, path)
   }
+
+  /** The normalized events table: ts as instant-micros whether the file
+    * stores nanos or, as re-materialized feeds (e.g. the gen_scale.py sf1
+    * replica) do, micros. */
+  def events(s: SparkSession, d: String): DataFrame =
+    graft.sources.FeedSources.normalize(rawEvents(s, s"$d/events.parquet"))
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

@@ -45,24 +45,11 @@ object FeedSources {
     case _ => raw
   }
 
-  /** [[feedSchema]] with ts matching the actual file encoding — file
-    * streaming sources require an explicit schema, and a LongType ts over
-    * a TIMESTAMP-encoded file (or vice versa) mis-reads. One batch footer
-    * peek decides. */
-  def feedSchemaFor(spark: SparkSession, dir: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val actual = spark.read.option("pathGlobFilter", "events.parquet")
-      .parquet(dir).schema("ts").dataType
-    StructType(feedSchema.map(f => if (f.name == "ts") f.copy(dataType = actual) else f))
-  }
-
-  def parquetFeed(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // parquet is self-describing: honor the file's ts encoding and let
-    // normalize converge it (a forced LongType over a TIMESTAMP file
-    // mis-reads)
-    normalize(spark.read.parquet(path))
-  }
+  /** Parquet is self-describing: the raw events read honors the file's ts
+    * encoding and normalize converges it (a forced LongType over a
+    * TIMESTAMP file mis-reads). */
+  def parquetFeed(spark: SparkSession, path: String): DataFrame =
+    normalize(graft.Tables.rawEvents(spark, path))
 
   def csvFeed(spark: SparkSession, path: String): DataFrame =
     normalize(spark.read.schema(feedSchema).option("header", "true").csv(path))

@@ -1,8 +1,11 @@
 package graft.streaming
 
 import graft.{Det, Q}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Structured-Streaming ingestion of the audit change feed — the Spark-first
   * replacement for the reference's synchronous trigger capture path
@@ -22,47 +25,98 @@ object EventStream {
 
   private val TS = "yyyy-MM-dd HH:mm:ss"
 
+  /** State partitions of every bounded replay: [[drained]] pins
+    * `spark.sql.shuffle.partitions` to this fixed constant for the query's
+    * lifetime instead of inheriting the batch engine's shuffle width. State
+    * store count follows state VOLUME (rate × watermark horizon), not batch
+    * width: every stateful operator commits one state store per partition
+    * per micro-batch, so a 32-wide batch setting buys a kilobyte-scale
+    * session state 32 store commits per batch — pure fixed cost. */
+  private val StatePartitions = 8
+
   /** Drains a bounded replay and blocks until the query self-terminates.
-    *
-    * Two scale knobs, both about not inheriting batch settings blindly:
-    * the query runs under `Trigger.AvailableNow` (process everything
+    * The query runs under `Trigger.AvailableNow` (process everything
     * available, including the trailing no-data batch that advances the
     * watermark for stateful emission/eviction, then stop — the bounded
-    * replay trigger), and `spark.sql.shuffle.partitions` is pinned to
-    * `statePartitions` for the query's lifetime. State store count is a
-    * knob of state VOLUME (rate × watermark horizon), not of the batch
-    * engine's shuffle width: every stateful operator commits one state
-    * store per partition per micro-batch, so a 32-wide batch knob buys a
-    * kilobyte-scale session state 32 store commits per batch — pure fixed
-    * cost. On a cluster the same argument sizes it UP independently of
-    * the batch side when the horizon's state is large. */
-  private def drained(s: SparkSession, statePartitions: Int = 8)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    * replay trigger) with [[StatePartitions]] state partitions. */
+  private def drained(s: SparkSession)(start: => StreamingQuery): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, statePartitions.toString)
+    s.conf.set(key, StatePartitions.toString)
     try {
       val q = start
       try q.awaitTermination() finally q.stop()
     } finally s.conf.set(key, prev)
   }
 
-  private val availableNow = org.apache.spark.sql.streaming.Trigger.AvailableNow()
+  private val availableNow = Trigger.AvailableNow()
+
+  /** Drains `stream` in append mode into a fresh scratch parquet sink and
+    * returns the sink's batch read-back. The read-back takes the stream's
+    * own schema: a run that emits no rows (an all-sessions-open replay)
+    * leaves the sink without a data file to infer one from. Its columns
+    * are nullable, as in any parquet read, unless `keepNullability` keeps
+    * the stream's own (a typed stream's encoder schema). */
+  private def drainToSink(stream: Dataset[_],
+      keepNullability: Boolean = false): DataFrame = {
+    val s = stream.sparkSession
+    val tmp = graft.Scratch.dir("graft-stream-sink-")
+    drained(s) {
+      stream.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", s"$tmp/out")
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .trigger(availableNow)
+        .start()
+    }
+    val schema =
+      if (keepNullability) stream.schema
+      else StructType(stream.schema.map(f => StructField(f.name, f.dataType)))
+    s.read.schema(schema).parquet(s"$tmp/out")
+  }
+
+  /** The foreachBatch twin of [[drainToSink]]: drains `stream` to
+    * completion, handing each micro-batch and its id to `write`. */
+  private def drainBatches(stream: DataFrame, checkpoint: String,
+      outputMode: String = "append")(write: (DataFrame, Long) => Unit): Unit =
+    drained(stream.sparkSession) {
+      stream.writeStream.outputMode(outputMode)
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch((b: Dataset[Row], id: Long) => write(b.toDF(), id))
+        .trigger(availableNow)
+        .start()
+    }
+
+  /** Last writer per `key` over a foreachBatch sink whose rows carry their
+    * micro-batch id `bid`: the row of the highest batch id wins, and
+    * row_number collapses same-batch duplicates. foreachBatch + parquet
+    * append is at-least-once — a retried micro-batch after a partial write
+    * duplicates sink rows — and this is the streaming-upsert read-back
+    * (what a Delta/Iceberg MERGE sink does natively) that absorbs it. */
+  private def lastWriter(sink: DataFrame, key: String): DataFrame =
+    sink.withColumn("rn", row_number().over(Window.partitionBy(key).orderBy(col("bid").desc)))
+      .filter(col("rn") === 1)
+
+  /** File stream over one table of a scale-factor directory. File
+    * streaming sources need a directory and an explicit schema: the source
+    * watches `d` narrowed to `<table>.parquet`, with the schema of that
+    * table's batch read — [[graft.Tables.parquet]], so an unchanged file
+    * runs no inference job; events through [[graft.Tables.rawEvents]], so
+    * ts keeps the file's encoding. */
+  def fileStream(s: SparkSession, d: String, table: String): DataFrame = {
+    val path = s"$d/$table.parquet"
+    val batch =
+      if (table == "events") graft.Tables.rawEvents(s, path) else graft.Tables.parquet(s, path)
+    s.readStream.schema(batch.schema).option("pathGlobFilter", s"$table.parquet").parquet(d)
+  }
 
   /** Streaming DataFrame of the normalized audit feed. Schema,
     * nanos→micros normalization and the operation mapping are the shared
-    * canonical ones (FeedSources / AuditModel) — the streaming and batch
-    * paths must never desynchronize. */
-  def readFeed(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // file streaming sources need a directory; narrow to the feed file.
-    // Schema matches the file's actual ts encoding (nanos-long vs micros
-    // timestamp) — normalize converges both to instant-micros.
-    graft.sources.FeedSources.normalize(
-        s.readStream.schema(graft.sources.FeedSources.feedSchemaFor(s, d))
-          .option("pathGlobFilter", "events.parquet").parquet(d))
+    * canonical ones (Tables / FeedSources / AuditModel) — the streaming
+    * and batch paths must never desynchronize. */
+  def readFeed(s: SparkSession, d: String): DataFrame =
+    graft.sources.FeedSources.normalize(fileStream(s, d, "events"))
       .withColumn("operation", graft.audit.AuditModel.operation)
-  }
 
   /** 10-minute tumbling change rollup with a 30-minute watermark.
     * Append-mode semantics: a window is emitted once — when the watermark
@@ -93,12 +147,8 @@ object EventStream {
        |ORDER BY win_start, operation""".stripMargin) { (s, d) =>
     val tmp = graft.Scratch.dir("graft-audit-stream-")
     captureToAuditSink(s, d, s"$tmp/sink", s"$tmp/ckpt")
-    graft.sources.FeedSources.exactlyOnceView(s, s"$tmp/sink")
-      .groupBy(window(col("ts"), "10 minutes"), col("operation"))
-      .agg(count(lit(1)).as("n"), Det.dsumRound(col("value"), 2).as("total_value"))
-      .select(
-        date_format(col("window.start"), TS).as("win_start"),
-        col("operation"), col("n"), col("total_value"))
+    // the batch read-back's watermark is dropped by the optimizer
+    windowedRollup(graft.sources.FeedSources.exactlyOnceView(s, s"$tmp/sink"))
       .orderBy("win_start", "operation")
   }
 
@@ -130,7 +180,6 @@ object EventStream {
       |  AND epoch_ns(p.ts) // 1000
       |    BETWEEN epoch_ns(e.ts) // 1000 - 3600000000 AND epoch_ns(e.ts) // 1000
       |ORDER BY error_id, purchase_id""".stripMargin) { (s, d) =>
-    val tmp = graft.Scratch.dir("graft-stream-join-")
     val errs = readFeed(s, d).filter(col("event_type") === "error")
       .select(col("event_id").as("error_id"), col("user_id").as("e_entity"),
         col("ts").as("e_ts"))
@@ -139,21 +188,10 @@ object EventStream {
       .select(col("event_id").as("purchase_id"), col("user_id").as("p_entity"),
         col("ts").as("p_ts"), col("value"))
       .withWatermark("p_ts", "1 hour")
-    drained(s) {
-      errs.join(purch,
-          col("e_entity") === col("p_entity") &&
-          col("p_ts") >= col("e_ts") - expr("INTERVAL 1 HOUR") &&
-          col("p_ts") <= col("e_ts"))
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(availableNow)
-        .start()
-    }
-    s.read.schema(
-        "error_id BIGINT, e_entity BIGINT, e_ts TIMESTAMP, purchase_id BIGINT, p_entity BIGINT, p_ts TIMESTAMP, value DOUBLE")
-      .parquet(s"$tmp/out")
+    drainToSink(errs.join(purch,
+        col("e_entity") === col("p_entity") &&
+        col("p_ts") >= col("e_ts") - expr("INTERVAL 1 HOUR") &&
+        col("p_ts") <= col("e_ts")))
       .select(col("error_id"), col("purchase_id"), col("e_entity").as("entity_id"),
         date_format(col("e_ts"), TS).as("err_at"),
         date_format(col("p_ts"), TS).as("purchase_at"),
@@ -246,22 +284,10 @@ object EventStream {
     * a live pipeline), so this emits every *closed* session. */
   val auditSessionizeStream: Q = Q.rowsOnly("audit_sessionize_stream", "StreamingSessionSpec") { (s, d) =>
     import s.implicits._
-    val tmp = graft.Scratch.dir("graft-sessions-")
     val feed = readFeed(s, d)
       .select(col("user_id").as("entity_id"), col("ts"), col("value"))
       .as[FeedEvent]
-    drained(s) {
-      sessionize(feed)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(availableNow)
-        .start()
-    }
-    // explicit schema: an all-sessions-open run leaves the sink empty
-    s.read.schema(org.apache.spark.sql.Encoders.product[ClosedSession].schema)
-      .parquet(s"$tmp/out")
+    drainToSink(sessionize(feed), keepNullability = true)
       .orderBy("entity_id", "session_start")
   }
 
@@ -287,21 +313,11 @@ object EventStream {
     val base = graft.Tables.events(s, d)
     base.write.parquet(s"$tmp/feed")
     base.filter(col("event_id") % 10 === 0).write.mode("append").parquet(s"$tmp/feed")
-    drained(s) {
-      s.readStream.schema(base.schema).parquet(s"$tmp/feed")
+    drainToSink(s.readStream.schema(base.schema).parquet(s"$tmp/feed")
         .withColumn("operation", graft.audit.AuditModel.operation)
         .select(col("event_id").as("audit_id"), col("operation"), col("ts"), col("value"))
         .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("audit_id")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(availableNow)
-        .start()
-    }
-    s.read.schema("audit_id BIGINT, operation STRING, ts TIMESTAMP, value DOUBLE")
-      .parquet(s"$tmp/out")
+        .dropDuplicatesWithinWatermark("audit_id"))
       .groupBy("operation")
       .agg(count(lit(1)).as("n"), Det.dsumRound(col("value"), 2).as("total_value"))
       .orderBy("operation")
@@ -313,22 +329,17 @@ object EventStream {
     *
     * Delivery is AT-LEAST-ONCE: `foreachBatch` + parquet append is not
     * idempotent (a batch replayed after a crash-before-checkpoint lands
-    * twice). Every row therefore carries its micro-batch id, so consumers
-    * get exactly-once by deduplicating on (batch_id, event_id) — the
-    * standard Spark pattern when the sink itself can't transact. */
+    * twice). Consumers get exactly-once by deduplicating on
+    * (day, event_id), [[graft.sources.FeedSources.exactlyOnceView]]: a
+    * replayed row keeps its event time, so its duplicate lands in the same
+    * day partition and the dedup shuffle stays partition-local. Every row
+    * also carries the id of the micro-batch that wrote it (`batch_id`). */
   def captureToAuditSink(s: SparkSession, d: String, sinkPath: String,
-      checkpoint: String): Unit = {
-    drained(s) {
-      readFeed(s, d).writeStream
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          graft.sources.FeedSources.appendPartitioned(
-            batch.toDF().withColumn("batch_id", lit(batchId)), sinkPath)
-        }
-        .trigger(availableNow)
-        .start()
+      checkpoint: String): Unit =
+    drainBatches(readFeed(s, d), checkpoint) { (batch, batchId) =>
+      graft.sources.FeedSources.appendPartitioned(
+        batch.withColumn("batch_id", lit(batchId)), sinkPath)
     }
-  }
 
   /** Streaming corpus ingest QA — the block-C twin of [[auditStream]]'s
     * capture pipeline: documents arrive as files, every doc is scored
@@ -363,24 +374,13 @@ object EventStream {
        |  round(1.0 * sum(passed) / count(*), 4) AS pass_share
        |FROM sc GROUP BY lang, source ORDER BY lang, source""".stripMargin) { (s, d) =>
     val tmp = graft.Scratch.dir("graft-corpus-stream-")
-    // one batch footer peek for the file-stream schema (file sources
-    // require it explicitly), then the capture replay
-    val docSchema = graft.Tables.documents(s, d).schema
-    drained(s) {
-      val feed = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(d)
-      graft.text.CorpusOps.withQualityFlags(feed)
-        .withColumn("passed",
-          when(expr(graft.text.CorpusOps.passAllSql), 1).otherwise(0))
-        .select("doc_id", "lang", "source", "n_words", "passed")
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.toDF().write.mode(org.apache.spark.sql.SaveMode.Append)
-            .partitionBy("lang").parquet(s"$tmp/sink")
-        }
-        .trigger(availableNow)
-        .start()
+    val scored = graft.text.CorpusOps.withQualityFlags(fileStream(s, d, "documents"))
+      .withColumn("passed",
+        when(expr(graft.text.CorpusOps.passAllSql), 1).otherwise(0))
+      .select("doc_id", "lang", "source", "n_words", "passed")
+    drainBatches(scored, s"$tmp/ckpt") { (batch, _) =>
+      batch.write.mode(org.apache.spark.sql.SaveMode.Append)
+        .partitionBy("lang").parquet(s"$tmp/sink")
     }
     corpusQaRollup(s, s"$tmp/sink")
   }
@@ -429,21 +429,12 @@ object EventStream {
         graft.text.TextOps.signaturesOf(graft.Tables.documents(s, d)
           .filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val docSchema = graft.Tables.documents(s, d).schema
-    drained(s) {
-      s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet").parquet(d)
-        .filter(col("doc_id") % 10 === 0)
-        .select("doc_id", "text")
-        .writeStream
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.text.TextOps.incrementalVerdicts(exGroups,
-              graft.text.TextOps.signaturesOf(batch.toDF()))
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$tmp/sink")
-        }
-        .trigger(availableNow)
-        .start()
+    val incoming = fileStream(s, d, "documents")
+      .filter(col("doc_id") % 10 === 0)
+      .select("doc_id", "text")
+    drainBatches(incoming, s"$tmp/ckpt") { (batch, _) =>
+      graft.text.TextOps.incrementalVerdicts(exGroups, graft.text.TextOps.signaturesOf(batch))
+        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$tmp/sink")
     }
     s.read.parquet(s"$tmp/sink").dropDuplicates("doc_id").orderBy("doc_id")
   }
@@ -485,23 +476,12 @@ object EventStream {
       |  f.n_changes, round(f.n_changes / 60.0, 4) AS rate_per_min,
       |  CAST(2 * f.n_changes * t.n_windows > 3 * t.total AS INT) AS alert
       |FROM f, t ORDER BY win_start""".stripMargin) { (s, d) =>
-    val tmp = graft.Scratch.dir("graft-rate-alert-")
-    drained(s) {
-      readFeed(s, d)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-        .agg(count(lit(1)).as("n_changes"))
-        .select(date_format(col("window.start"), TS).as("win_start"),
-          col("n_changes"))
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(availableNow)
-        .start()
-    }
-    val f = s.read.schema("win_start STRING, n_changes BIGINT")
-      .parquet(s"$tmp/out")
+    val f = drainToSink(readFeed(s, d)
+      .withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
+      .agg(count(lit(1)).as("n_changes"))
+      .select(date_format(col("window.start"), TS).as("win_start"),
+        col("n_changes")))
     val t = f.agg(count(lit(1)).as("n_windows"), sum("n_changes").as("total"))
     f.crossJoin(broadcast(t))
       .select(col("win_start"), col("n_changes"),
@@ -529,9 +509,7 @@ object EventStream {
     * final hour windows in state forever (their end never falls behind
     * the terminal watermark), silently dropping the tail of the stitch.
     * Each micro-batch's updated windows land in parquet stamped with the
-    * batch id and read-back takes the last writer per hour — the
-    * streaming-upsert pattern (what a Delta/Iceberg MERGE sink does
-    * natively), which also absorbs foreachBatch's at-least-once retries. */
+    * batch id and read-back takes the [[lastWriter]] per hour. */
   val auditStreamBackfill: Q = Q.sql(
     "audit_stream_backfill",
     s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS h,
@@ -542,26 +520,16 @@ object EventStream {
     val cutoff = lit("2024-01-16 00:00:00").cast("timestamp")
     val tmp = graft.Scratch.dir("graft-backfill-")
     val sink = s"$tmp/sink"
-    drained(s) {
-      readFeed(s, d).filter(col("ts") >= cutoff)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n"), Det.dsumRound(col("value"), 2).as("total_value"))
-        .select(date_format(col("window.start"), TS).as("h"),
-          col("n"), col("total_value"))
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-            b.toDF().withColumn("bid", lit(bid))
-              .write.mode("append").parquet(sink)
-        }
-        .trigger(availableNow).start()
+    val hourly = readFeed(s, d).filter(col("ts") >= cutoff)
+      .withWatermark("ts", "30 minutes")
+      .groupBy(window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n"), Det.dsumRound(col("value"), 2).as("total_value"))
+      .select(date_format(col("window.start"), TS).as("h"),
+        col("n"), col("total_value"))
+    drainBatches(hourly, s"$tmp/ckpt", "update") { (b, bid) =>
+      b.withColumn("bid", lit(bid)).write.mode("append").parquet(sink)
     }
-    val lastWriter = org.apache.spark.sql.expressions.Window
-      .partitionBy("h").orderBy(col("bid").desc)
-    val streamLeg = s.read.parquet(sink)
-      .withColumn("rn", row_number().over(lastWriter)).filter(col("rn") === 1)
+    val streamLeg = lastWriter(s.read.parquet(sink), "h")
       .select(col("h"), lit("stream").as("leg"), col("n"), col("total_value"))
     val batchLeg = graft.Tables.events(s, d).filter(col("ts") < cutoff)
       .groupBy(date_trunc("hour", col("ts")).as("hh"))
@@ -592,32 +560,18 @@ object EventStream {
         .filter(col("event_type") === "purchase")
         .select(col("entity_id").as("r_entity"), col("ts").as("r_ts"),
           col("value").as("r_value"))
-      drained(s) {
-        readFeed(s, d).filter(col("event_type") === "error")
-          .select(col("event_id").as("audit_id"), col("user_id").as("entity_id"),
-            col("ts"))
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], bid: Long) =>
-              graft.plans.AsOf.join(b.toDF(), purchases,
-                  key = ("entity_id", "r_entity"), time = ("ts", "r_ts"))
-                .withColumn("bid", lit(bid))
-                .write.mode("append").parquet(sink)
-          }
-          .trigger(availableNow).start()
+      val errors = readFeed(s, d).filter(col("event_type") === "error")
+        .select(col("event_id").as("audit_id"), col("user_id").as("entity_id"),
+          col("ts"))
+      drainBatches(errors, s"$tmp/ckpt") { (b, bid) =>
+        graft.plans.AsOf.join(b, purchases,
+            key = ("entity_id", "r_entity"), time = ("ts", "r_ts"))
+          .withColumn("bid", lit(bid))
+          .write.mode("append").parquet(sink)
       }
-      // foreachBatch + parquet append is at-least-once: a retried
-      // micro-batch after a partial write duplicates sink rows. Read-back
-      // keeps the LAST writer per audit_id (max batch id, then row_number
-      // to collapse same-batch partial-write duplicates) — the same
-      // streaming-upsert discipline as audit_stream_backfill, which is
-      // what makes the "crash-replayed matches batch byte-for-byte"
-      // contract actually hold under retries.
-      val lastWriter = org.apache.spark.sql.expressions.Window
-        .partitionBy("audit_id").orderBy(col("bid").desc)
-      s.read.parquet(sink)
-        .withColumn("rn", row_number().over(lastWriter)).filter(col("rn") === 1)
+      // the last writer per audit_id is what makes the "crash-replayed
+      // matches batch byte-for-byte" contract hold under retries
+      lastWriter(s.read.parquet(sink), "audit_id")
         .select(col("audit_id"), col("entity_id"),
           date_format(col("ts"), TS).as("err_at"),
           col("r_value").as("last_purchase_value"),
@@ -667,9 +621,8 @@ object EventStream {
       |  round(1.0 * count(late_s) / count(*), 4) AS late_share,
       |  CAST(coalesce(max(late_s), 0) AS BIGINT) AS max_late_s
       |FROM x GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("event_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val w = Window.partitionBy("user_id").orderBy("event_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
     graft.Tables.events(s, d)
       .select(col("user_id"), col("event_id"), col("ts"))
       .withColumn("frontier", max("ts").over(w))

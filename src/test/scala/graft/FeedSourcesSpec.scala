@@ -59,6 +59,13 @@ class FeedSourcesSpec extends AnyFunSuite {
     assert(days > 1)
   }
 
+  test("a second readFeed over an unchanged feed runs no job") {
+    graft.streaming.EventStream.readFeed(spark, sfDir)
+    val (_, jobs) = Jobs.during(spark.sparkContext)(
+      graft.streaming.EventStream.readFeed(spark, sfDir))
+    assert(jobs === 0)
+  }
+
   test("immutability is ENFORCED: destructive writes to a live sink throw") {
     import org.apache.spark.sql.SaveMode
     val path = s"$tmp/audit3"

@@ -4,6 +4,7 @@ import graft.streaming.EventStream
 // Spark 4.1 moved MemoryStream under execution.streaming.runtime
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Append-mode watermark semantics of the windowed rollup, verified
@@ -173,6 +174,26 @@ class StreamingWindowSpec extends AnyFunSuite {
     assert(got.contains(base + "01:30:00"), "window ending exactly at the watermark publishes")
     // tail windows past the frontier stayed in state
     assert(!got.contains(base + "02:15:00"))
+  }
+
+  test("audit_sessionize_stream: a replay that closes no session reads back 0 rows") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-opensession-").toString
+    // one change: its session is still open when the feed ends, so the
+    // sessionizer emits nothing and the sink holds no data file to infer
+    // a schema from
+    Seq((1L, ts("2024-01-01 10:00:00"), 7L, "purchase", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.parquet(s"$tmp/stage")
+    val part = new java.io.File(s"$tmp/stage").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$tmp/events.parquet"))
+    val got = EventStream.auditSessionizeStream.fn(spark, tmp)
+    assert(got.count() === 0)
+    // the schema of a run that closes sessions: the ClosedSession encoder's
+    assert(got.schema.map(f => (f.name, f.dataType, f.nullable)) === Seq(
+      ("entity_id", LongType, false), ("session_start", StringType, true),
+      ("n_events", LongType, false), ("session_value", DoubleType, false)))
   }
 
   test("audit_stream_backfill: legs partition cleanly at the seam and conserve the feed") {
