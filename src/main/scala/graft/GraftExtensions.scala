@@ -1,21 +1,26 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
 
-import graft.audit.{ArrayBucket, ArrayFloorSearch}
-import graft.text.{MinHashSig, WordShingles}
-import graft.vector.{CosineSimilarity, Deflate6, Dot612, FromScaled18, FromScaledN, FromScaledSplit, L2Squared, ScaleVec612, ToScaled18, ToScaledN, VecSumDec}
+import graft.audit.ArrayBucket
+import graft.text.{GramStats, MinHashSig, ViterbiSegment, WordShingles}
+import graft.vector.{CosineSimilarity, Deflate6, Dot612, FromScaledN, FromScaledSplit, L2Squared, ScaleVec612, ToScaledN, VecSumDec}
 
-/** Engine extension surface.
+/** Engine extension surface: the one way graft's native layer enters a
+  * session. At session build time it registers the `graft_*` functions of
+  * [[GraftFunctions]], the [[graft.plans.AsOfStrategy]] planner strategy
+  * and the [[graft.plans.AsOfRangePushdown]] optimizer rule.
   *
-  * `GraftExtensions` registers the engine's native Catalyst expressions at
-  * session build time (`SparkSession.builder().withExtensions(...)`);
-  * `GraftFunctions.ensureRegistered` does the same imperatively for
-  * sessions the engine does not construct (the driver's), so every
-  * operator works in any session handed to it.
+  * [[GraftSession.build]] installs it (`withExtensions`). A session that
+  * graft does not build gets it through Spark's own setting,
+  * `spark.sql.extensions=graft.GraftExtensions`, given before the session
+  * is created. A session built without either has no `graft_*` function,
+  * and the ops that call one fail at analysis with `UNRESOLVED_ROUTINE`.
+  * Sessions cloned from a built one (`newSession`, a streaming query's
+  * micro-batch session) keep its extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -29,120 +34,57 @@ object GraftFunctions {
 
   type Builder = Seq[Expression] => Expression
 
-  val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
-    (FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      ((exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      ((exprs: Seq[Expression]) => {
-        // validate here: builder failures surface as raw internal
-        // exceptions at resolution, so name the function and the rule
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"graft_shingles expects (array<string>, n), got ${exprs.length} arguments")
-        if (!exprs(1).foldable)
-          throw new IllegalArgumentException(
-            "graft_shingles: n must be a literal integer")
-        WordShingles(exprs(0), exprs(1).eval() match {
-          case i: java.lang.Integer => i.intValue
-          case l: java.lang.Long if l == l.intValue.toLong => l.intValue
-          case other => throw new IllegalArgumentException(
-            s"graft_shingles: n must be a literal integer, got $other")
-        })
-      }): Builder),
-    (FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      ((exprs: Seq[Expression]) => MinHashSig(exprs(0))): Builder),
-    (FunctionIdentifier("graft_floor_search"),
-      new ExpressionInfo(classOf[ArrayFloorSearch].getName, "graft_floor_search"),
-      ((exprs: Seq[Expression]) => ArrayFloorSearch(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2Squared].getName, "graft_l2sq"),
-      ((exprs: Seq[Expression]) => L2Squared(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_array_bucket"),
-      new ExpressionInfo(classOf[ArrayBucket].getName, "graft_array_bucket"),
-      ((exprs: Seq[Expression]) => ArrayBucket(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_vec_sum"),
-      new ExpressionInfo(classOf[VecSumDec].getName, "graft_vec_sum"),
-      ((exprs: Seq[Expression]) => VecSumDec(exprs(0))): Builder),
-    (FunctionIdentifier("graft_dot612"),
-      new ExpressionInfo(classOf[Dot612].getName, "graft_dot612"),
-      ((exprs: Seq[Expression]) => Dot612(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_scalevec612"),
-      new ExpressionInfo(classOf[ScaleVec612].getName, "graft_scalevec612"),
-      ((exprs: Seq[Expression]) => ScaleVec612(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_deflate6"),
-      new ExpressionInfo(classOf[Deflate6].getName, "graft_deflate6"),
-      ((exprs: Seq[Expression]) => Deflate6(exprs(0), exprs(1), exprs(2))): Builder),
-    (FunctionIdentifier("graft_to_scaled18"),
-      new ExpressionInfo(classOf[ToScaled18].getName, "graft_to_scaled18"),
-      ((exprs: Seq[Expression]) => ToScaled18(exprs(0))): Builder),
-    (FunctionIdentifier("graft_from_scaled18"),
-      new ExpressionInfo(classOf[FromScaled18].getName, "graft_from_scaled18"),
-      ((exprs: Seq[Expression]) => FromScaled18(exprs(0))): Builder),
-    (FunctionIdentifier("graft_to_scaled2"),
-      new ExpressionInfo(classOf[ToScaledN].getName, "graft_to_scaled2"),
-      ((exprs: Seq[Expression]) => ToScaledN(exprs(0), 2)): Builder),
-    (FunctionIdentifier("graft_from_scaled2"),
-      new ExpressionInfo(classOf[FromScaledN].getName, "graft_from_scaled2"),
-      ((exprs: Seq[Expression]) => FromScaledN(exprs(0), 2)): Builder),
-    (FunctionIdentifier("graft_viterbi"),
-      new ExpressionInfo(classOf[graft.text.ViterbiSegment].getName, "graft_viterbi"),
-      ((exprs: Seq[Expression]) => graft.text.ViterbiSegment(exprs(0), exprs(1))): Builder),
-    (FunctionIdentifier("graft_from_scaled4_split"),
-      new ExpressionInfo(classOf[FromScaledSplit].getName, "graft_from_scaled4_split"),
-      ((exprs: Seq[Expression]) => FromScaledSplit(exprs(0), exprs(1), 4)): Builder),
-    (FunctionIdentifier("graft_gram_stats"),
-      new ExpressionInfo(classOf[graft.text.GramStats].getName, "graft_gram_stats"),
-      ((exprs: Seq[Expression]) => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"graft_gram_stats expects (array<string>, n), got ${exprs.length} arguments")
-        if (!exprs(1).foldable)
-          throw new IllegalArgumentException(
-            "graft_gram_stats: n must be a literal integer")
-        graft.text.GramStats(exprs(0), exprs(1).eval() match {
-          case i: java.lang.Integer => i.intValue
-          case l: java.lang.Long if l == l.intValue.toLong => l.intValue
-          case other => throw new IllegalArgumentException(
-            s"graft_gram_stats: n must be a literal integer, got $other")
-        })
-      }): Builder))
+  private def fn(name: String, cls: Class[_])(builder: Builder)
+      : (FunctionIdentifier, ExpressionInfo, Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
 
-  /** Idempotent runtime registration for externally-built sessions. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    descriptions.foreach { case (ident, info, builder) =>
-      classic.sessionState.functionRegistry
-        .createOrReplaceTempFunction(ident.funcName, builder, "built-in")
+  /** Builder of an `(array<string>, n)` n-gram kernel. Validated here:
+    * builder failures surface as raw internal exceptions at resolution,
+    * so the message names the function and the rule. */
+  private def gramKernel(name: String)(make: (Expression, Int) => Expression): Builder =
+    exprs => {
+      if (exprs.length != 2)
+        throw new IllegalArgumentException(
+          s"$name expects (array<string>, n), got ${exprs.length} arguments")
+      if (!exprs(1).foldable)
+        throw new IllegalArgumentException(s"$name: n must be a literal integer")
+      make(exprs(0), exprs(1).eval() match {
+        case i: java.lang.Integer => i.intValue
+        case l: java.lang.Long if l == l.intValue.toLong => l.intValue
+        case other => throw new IllegalArgumentException(
+          s"$name: n must be a literal integer, got $other")
+      })
     }
-    if (!classic.experimental.extraStrategies.contains(graft.plans.AsOfStrategy))
-      classic.experimental.extraStrategies =
-        classic.experimental.extraStrategies :+ graft.plans.AsOfStrategy
-    if (!classic.experimental.extraOptimizations.contains(graft.plans.AsOfRangePushdown))
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ graft.plans.AsOfRangePushdown
-  }
+
+  val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("graft_cosine", classOf[CosineSimilarity])(e => CosineSimilarity(e(0), e(1))),
+    fn("graft_shingles", classOf[WordShingles])(gramKernel("graft_shingles")(WordShingles(_, _))),
+    fn("graft_minhash_sig", classOf[MinHashSig])(e => MinHashSig(e(0))),
+    fn("graft_l2sq", classOf[L2Squared])(e => L2Squared(e(0), e(1))),
+    fn("graft_array_bucket", classOf[ArrayBucket])(e => ArrayBucket(e(0), e(1))),
+    fn("graft_vec_sum", classOf[VecSumDec])(e => VecSumDec(e(0))),
+    fn("graft_dot612", classOf[Dot612])(e => Dot612(e(0), e(1))),
+    fn("graft_scalevec612", classOf[ScaleVec612])(e => ScaleVec612(e(0), e(1))),
+    fn("graft_deflate6", classOf[Deflate6])(e => Deflate6(e(0), e(1), e(2))),
+    fn("graft_to_scaled18", classOf[ToScaledN])(e => ToScaledN(e(0), 18)),
+    fn("graft_from_scaled18", classOf[FromScaledN])(e => FromScaledN(e(0), 18)),
+    fn("graft_to_scaled2", classOf[ToScaledN])(e => ToScaledN(e(0), 2)),
+    fn("graft_from_scaled2", classOf[FromScaledN])(e => FromScaledN(e(0), 2)),
+    fn("graft_viterbi", classOf[ViterbiSegment])(e => ViterbiSegment(e(0), e(1))),
+    fn("graft_from_scaled4_split", classOf[FromScaledSplit])(e => FromScaledSplit(e(0), e(1), 4)),
+    fn("graft_gram_stats", classOf[GramStats])(gramKernel("graft_gram_stats")(GramStats(_, _))))
 
   /** Column-API form of the native cosine expression. */
   def graftCosine(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 
-  /** Column-API form of the native sorted-array floor search. */
-  def graftFloorSearch(sorted: Column, v: Column): Column =
-    call_function("graft_floor_search", sorted, v)
-
-  /** Column-API form of the native squared-L2 distance. */
-  def graftL2sq(a: Column, b: Column): Column =
-    call_function("graft_l2sq", a, b)
-
-  /** Column-API form of the native sorted-array range-bucket assigner. */
-  def graftArrayBucket(boundaries: Column, v: Column): Column =
-    call_function("graft_array_bucket", boundaries, v)
+  /** Column-API form of the native sorted-array search: the count of
+    * elements ≤ v (see [[graft.audit.ArrayBucket]]). */
+  def graftArrayBucket(sorted: Column, v: Column): Column =
+    call_function("graft_array_bucket", sorted, v)
 
   /** Column-API forms of the scale-18 fixed-point lane (see
-    * [[graft.vector.ToScaled18]]): double → unscaled long of
+    * [[graft.vector.ToScaledN]]): double → unscaled long of
     * CAST(x AS DECIMAL(38,18)), and its exact inverse to DOUBLE. */
   def graftToScaled18(x: Column): Column = call_function("graft_to_scaled18", x)
   def graftFromScaled18(l: Column): Column = call_function("graft_from_scaled18", l)

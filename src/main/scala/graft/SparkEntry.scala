@@ -2,8 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the operator
-  * inventory; each inventory row is one `queries` key. */
+/** Driver contract — see SURVEY.md §2 for the operator inventory; each
+  * inventory row is one `queries` key.
+  *
+  * Every op expects a session built by [[GraftSession.build]], or any
+  * session created with `spark.sql.extensions=graft.GraftExtensions`: the
+  * ops call the `graft_*` functions and plan AS-OF joins through
+  * [[GraftExtensions]], and none of them changes the session to add it. */
 object SparkEntry {
 
   private def registry: Seq[Q] =

@@ -230,7 +230,6 @@ object DataQuality {
         |SELECT pair, CAST(n_rows AS BIGINT) AS n_rows, r FROM (
         |  $rowsSql)
         |ORDER BY pair""".stripMargin) { (s, d) =>
-      graft.GraftFunctions.ensureRegistered(s)
       correlationsFrom(Tables.lineitem(s, d))
     }
   }

@@ -1475,7 +1475,6 @@ object Relational {
       |SELECT CAST(dec0 + 1 AS INT) AS decile, n_cust, min_rev, max_rev,
       |  total_rev, round(total_rev / grand, 4) AS rev_share
       |FROM g CROSS JOIN t ORDER BY decile""".stripMargin) { (s, d) =>
-    graft.GraftFunctions.ensureRegistered(s)
     val B = math.max(s.conf.get("spark.sql.shuffle.partitions").toInt, 2)
     val rev = Tables.orders(s, d)
       .groupBy(col("o_custkey"))
@@ -1621,7 +1620,6 @@ object Relational {
         |SELECT node AS p_partkey, outdeg, round(pr, 10) AS pagerank
         |FROM pr3 ORDER BY round(pr, 10) DESC, p_partkey LIMIT 20""".stripMargin) {
       (s, d) =>
-      graft.GraftFunctions.ensureRegistered(s) // graft_to_scaled18 in any session
       // co-purchase edges from ONE fact scan: group the order's parts into
       // a ≤7-element array (L lines/order is schema-bounded) and expand the
       // L² position pairs in-place — the self-join formulation shuffles

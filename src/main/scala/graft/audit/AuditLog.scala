@@ -164,14 +164,14 @@ final case class AuditLog(pkCol: String, seqCol: String) {
   private def truncStates(log: DataFrame, payload: Seq[String]): DataFrame = {
     val tset = log.filter(col("operation") === "T")
       .agg(sort_array(collect_list(col(seqCol))).as("__t_seqs"))
-    // O(log |T|) native binary search per row (ArrayFloorSearch) — the
-    // lambda-filter scan it replaces was O(|T|) per row, and |T| grows
-    // with history length (measured 48 s at sf1, |T| ≈ 3 000 × 1 M rows)
+    // the latest T seq ≤ this row's seq: an O(log |T|) native binary
+    // search per row (ArrayBucket counts the T seqs ≤ seq; `get` of
+    // count - 1 is NULL when the count is 0) — the lambda-filter scan it
+    // replaces was O(|T|) per row, and |T| grows with history length
+    // (measured 48 s at sf1, |T| ≈ 3 000 × 1 M rows)
     val withB = log.crossJoin(broadcast(tset))
-      .withColumn("__t_boundary",
-        org.apache.spark.sql.GraftPlanFactory.column(ArrayFloorSearch(
-          org.apache.spark.sql.GraftPlanFactory.expression(col("__t_seqs")),
-          org.apache.spark.sql.GraftPlanFactory.expression(col(seqCol)))))
+      .withColumn("__t_boundary", get(col("__t_seqs"),
+        graft.GraftFunctions.graftArrayBucket(col("__t_seqs"), col(seqCol)) - 1))
       .drop("__t_seqs")
     payload.foldLeft(withB) { (df, c) =>
       df.withColumn(s"__raw_$c", last(col(c), ignoreNulls = true).over(running))

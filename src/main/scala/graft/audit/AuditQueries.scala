@@ -854,7 +854,6 @@ object AuditQueries {
       //      plus broadcast per-bucket offsets = exact global ranks.
       // The ranks (and thus the oracle hash) are bit-identical to the
       // single-window form, independent of B and of sketch precision.
-      graft.GraftFunctions.ensureRegistered(s)
       val B = math.max(s.conf.get("spark.sql.shuffle.partitions").toInt, 2)
       val base = log(s, d).filter(col("value").isNotNull)
         .select("audit_id", "operation", "value")
@@ -977,7 +976,6 @@ object AuditQueries {
       |FROM l ASOF LEFT JOIN r
       |  ON l.entity_id = r.r_entity AND l.ts >= r.r_ts
       |ORDER BY l.audit_id""".stripMargin) { (s, d) =>
-    graft.GraftFunctions.ensureRegistered(s)
     val base = log(s, d)
     val l = base.filter(col("event_type") === "error")
       .select("audit_id", "entity_id", "ts")
@@ -1015,7 +1013,6 @@ object AuditQueries {
       |FROM l ASOF LEFT JOIN r
       |  ON l.entity_id = r.r_entity AND l.ts >= r.r_ts
       |ORDER BY l.audit_id""".stripMargin) { (s, d) =>
-    graft.GraftFunctions.ensureRegistered(s)
     val base = log(s, d)
     val l = base.filter(col("event_type") === "error")
       .select("audit_id", "entity_id", "ts")

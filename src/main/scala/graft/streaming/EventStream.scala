@@ -419,7 +419,6 @@ object EventStream {
     // same collapsed scale twin as the batch op — the streaming replay
     // must land on identical verdicts at every scale the gate runs
     graft.text.TextOps.dedupIncremental.scaleOracle.get) { (s, d) =>
-    graft.GraftFunctions.ensureRegistered(s)
     val tmp = graft.Scratch.dir("graft-sdi-")
     // the maintained dedup state is the COLLAPSED signature-group index
     // (one row per distinct signature with multiplicity + min id, see
@@ -553,7 +552,6 @@ object EventStream {
   val streamAsofEnrich: Q = Q(
     "stream_asof_enrich",
     { (s: SparkSession, d: String) =>
-      graft.GraftFunctions.ensureRegistered(s)
       val tmp = graft.Scratch.dir("graft-asof-stream-")
       val sink = s"$tmp/sink"
       val purchases = graft.audit.AuditQueries.log(s, d)

@@ -1,7 +1,8 @@
 package graft.text
 
 import graft.Q
-import graft.text.Tokens.{distinctTexts, docs, duckDistinctTexts, duckGrams, duckWords, grams,
+import graft.Tables.{documents => docs}
+import graft.text.Tokens.{distinctTexts, duckDistinctTexts, duckGrams, duckWords, grams,
   shingles, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

@@ -1,7 +1,8 @@
 package graft.text
 
 import graft.Q
-import graft.text.Tokens.{distinctTexts, docs, duckGrams, duckWords, grams, words}
+import graft.Tables.{documents => docs}
+import graft.text.Tokens.{distinctTexts, duckGrams, duckWords, grams, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1103,7 +1104,6 @@ object Retrieval {
          |SELECT query_id, rnk, doc_id, phrase_tf, score FROM r
          |WHERE rnk <= $TopK ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
       import s.implicits._
-      graft.GraftFunctions.ensureRegistered(s)
       val pq = phraseQueries.toDF("query_id", "phrase", "plen")
       val w = docs(s, d)
         .select(col("doc_id"), words.as("ws"))

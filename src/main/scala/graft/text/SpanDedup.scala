@@ -1,8 +1,8 @@
 package graft.text
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.Tables.{documents => docs}
 import graft.text.Tokens.distinctTexts
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Exact duplicated-substring audit — the character-span complement to
@@ -31,9 +31,6 @@ object SpanDedup {
 
   private val K = 40
   private val Stride = 20
-
-  private def docs(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
 
   /** Per-(lang, source) duplicated-span report: how much of each slice's
     * character mass sits in cross-document verbatim spans, and the worst

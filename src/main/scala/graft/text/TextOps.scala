@@ -1,7 +1,8 @@
 package graft.text
 
 import graft.Q
-import graft.text.Tokens.{distinctTexts, docs, duckDistinctTexts, duckGrams, duckShingleCtes,
+import graft.Tables.{documents => docs}
+import graft.text.Tokens.{distinctTexts, duckDistinctTexts, duckGrams, duckShingleCtes,
   duckWords, shingles, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

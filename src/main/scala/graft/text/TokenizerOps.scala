@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.Tables.{documents => docs}
 import graft.text.Tokens.words
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,9 +22,6 @@ import org.apache.spark.sql.expressions.Window
   * this is the same shape at sf0.001 and at 100 TB.
   */
 object TokenizerOps {
-
-  private def docs(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
 
   /** First-round BPE merge candidates: the top-20 adjacent character
     * pairs inside letter-run words, per language. This is exactly the

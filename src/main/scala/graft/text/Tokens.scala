@@ -1,7 +1,6 @@
 package graft.text
 
-import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The corpus token core: the three steps every corpus op starts with —
@@ -9,13 +8,6 @@ import org.apache.spark.sql.functions._
   * word array into n-grams — each defined once, with its DuckDB oracle
   * twin next to it (SURVEY §4). */
 private[graft] object Tokens {
-
-  /** The corpus, read in a session where the native n-gram kernel
-    * ([[shingles]]) resolves. */
-  def docs(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(s) // graft_shingles in any session
-    Tables.documents(s, d)
-  }
 
   // ------------------------------------------------------- collapse --
 

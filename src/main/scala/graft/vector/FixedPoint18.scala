@@ -5,108 +5,46 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** Scale-18 scalar fixed-point carriers — the rank-mass lane of the
-  * iterative graph ops (q_part_pagerank's edge⨝rank exchange).
+/** Scalar fixed-point carriers: `graft_to_scaledN(x)` emits exactly the
+  * unscaled long `CAST(x AS DECIMAL(38,N))` would carry, and
+  * `graft_from_scaledN(l)` ([[FromScaledN]]) reverses it with the same
+  * single correctly-rounded conversion `CAST(DECIMAL(38,N) AS DOUBLE)`
+  * performs. `sum(long)` then adds the unscaleds exactly as the decimal
+  * sum would, so swapping a DECIMAL lane for a long lane cannot move any
+  * output bit (pinned in NativeExprSpec against the decimal path). The
+  * gain: `DECIMAL(38,N)` partials ride the shuffle as a 16-byte unscaled
+  * int128 plus null bookkeeping and the aggregate buffer boxes `Decimal`;
+  * the long lane is roughly half the shuffle width with primitive agg
+  * buffers.
   *
-  * `DECIMAL(38,18)` per-term sums are exact and order-free, but each
-  * partial rides the shuffle as a 16-byte unscaled int128 plus null
-  * bookkeeping, and the aggregate buffer boxes `Decimal`. When the summed
-  * mass is provably bounded (PageRank: total rank mass ≡ 1, every group
-  * sum ≤ 1 < 9.2 = Long.MaxValue at scale 18), the SAME integers fit a
-  * primitive long lane: `graft_to_scaled18` emits exactly the unscaled
-  * value `CAST(x AS DECIMAL(38,18))` would produce, `sum(long)` adds the
-  * unscaleds exactly as the decimal sum would (overflow is unreachable:
-  * the addends are non-negative and every partial sum is ≤ the group's
-  * total mass ≤ 1 = 1e18 unscaled, nine-fold under capacity — NOT
-  * guarded by ANSI, which this engine leaves off; the to-scaled
-  * CONVERSION is loud via longValueExact), and `graft_from_scaled18` reverses
-  * it with the same single correctly-rounded conversion
-  * `CAST(DECIMAL(38,18) AS DOUBLE)` performs — so swapping the lane
-  * cannot move any output bit (pinned in NativeExprSpec against the
-  * decimal path). Roughly half the shuffle width, primitive agg buffers.
+  * Two lanes are registered, each with its own capacity bound:
+  *  - scale 18 (`graft_to_scaled18` / `graft_from_scaled18`), the
+  *    rank-mass lane of the iterative graph ops (q_part_pagerank's
+  *    edge⨝rank exchange). The summed mass is provably bounded: total
+  *    rank mass ≡ 1, the addends are non-negative and every partial sum
+  *    is ≤ the group's total mass ≤ 1 = 1e18 unscaled, nine-fold under
+  *    Long.MaxValue (≈ 9.2 at scale 18). That bound is NOT guarded by
+  *    ANSI, which this engine leaves off.
+  *  - scale 2 (`graft_to_scaled2` / `graft_from_scaled2`), for the
+  *    moment-sum shapes whose inputs are 2-decimal monetary values
+  *    (q_measure_correlations): the cast is exact for any value the
+  *    monetary columns can hold, and products of two scale-2 longs are
+  *    EXACT scale-4 integers (a long holds them up to |xy| < 9.2e14 —
+  *    price² tops out ~1.2e14), reassembled by [[FromScaledSplit]]. The
+  *    ANSI posture (`spark.sql.ansi.enabled`) depends on the deployment;
+  *    with it off, `sum(long)` past capacity would wrap SILENTLY. The only
+  *    loud path that is guaranteed is the caller-side guard in
+  *    DataQuality.correlationsFrom (max|x| witness lanes + raise_error).
   *
   * Conversion fidelity: Spark's double→decimal cast goes through
-  * `BigDecimal(Double.toString(x))` then HALF_UP to scale 18; decimal→
-  * double is `BigDecimal.doubleValue` (one correctly-rounded step). Both
-  * are reproduced verbatim below. Values beyond long capacity at scale 18
-  * (|x| ≥ 9.223…) throw ArithmeticException — the FixedPointVec loud-
-  * failure discipline, not a silent wrap.
+  * `BigDecimal(Double.toString(x))` then HALF_UP to scale N; decimal→
+  * double is `BigDecimal.doubleValue` (one correctly-rounded step, NOT
+  * `l / 10^N`, which rounds twice and can drift an ulp above 2⁵³). Both
+  * are reproduced verbatim below. Values beyond long capacity at scale N
+  * (|x| ≥ 9.223… at scale 18) throw ArithmeticException via
+  * longValueExact — the FixedPointVec loud-failure discipline, not a
+  * silent wrap.
   */
-case class ToScaled18(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_to_scaled18"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects double, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(x: Any): Any =
-    new java.math.BigDecimal(java.lang.Double.toString(x.asInstanceOf[Double]))
-      .setScale(18, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => s"""
-       |${ev.value} = new java.math.BigDecimal(java.lang.Double.toString($x))
-       |  .setScale(18, java.math.RoundingMode.HALF_UP)
-       |  .unscaledValue().longValueExact();
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `graft_from_scaled18(l)` → DOUBLE: the exact inverse lane —
-  * `CAST(DECIMAL(38,18)-with-unscaled-l AS DOUBLE)`, one correctly-rounded
-  * BigDecimal→double conversion (NOT `l / 1e18`, which rounds twice and
-  * can drift an ulp above 2⁵³). */
-case class FromScaled18(child: Expression) extends UnaryExpression {
-
-  override def prettyName: String = "graft_from_scaled18"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects bigint, got ${other.simpleString}")
-  }
-
-  override protected def nullSafeEval(l: Any): Any =
-    new java.math.BigDecimal(
-      java.math.BigInteger.valueOf(l.asInstanceOf[Long]), 18).doubleValue()
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, l => s"""
-       |${ev.value} = new java.math.BigDecimal(
-       |  java.math.BigInteger.valueOf($l), 18).doubleValue();
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Scale-parameterized twins of the scale-18 lane, for the moment-sum
-  * shapes whose inputs are 2-decimal monetary values (q_measure_
-  * correlations): `graft_to_scaled2(x)` emits the unscaled long of
-  * `CAST(x AS DECIMAL(38,2))` (exact for any value the monetary columns
-  * can hold), products of two scale-2 longs are EXACT scale-4 integers
-  * (a long holds them up to |xy| < 9.2e14 — price² tops out ~1.2e14),
-  * and the split-lane reassembly `graft_from_scaled4_split(hi, lo)`
-  * converts `hi*1e7 + lo` at scale 4 back to DOUBLE in the same single
-  * correctly-rounded BigDecimal step the decimal lane's
-  * `CAST(DECIMAL AS DOUBLE)` performs. The hi/lo split (base 1e7,
-  * balanced so both lanes carry ≤~1.2e7/row for the monetary columns)
-  * keeps each `sum(long)` lane inside long capacity to ~7.7e11 input
-  * rows — a 100 TB lineitem (~6e11 rows) fits. NOTE: the ANSI posture
-  * (`spark.sql.ansi.enabled`) depends on the deployment; with it off,
-  * `sum(long)` past capacity would wrap SILENTLY. The only loud path that
-  * is guaranteed is the caller-side guard in
-  * DataQuality.correlationsFrom (max|x| witness lanes + raise_error). */
 case class ToScaledN(child: Expression, scale: Int) extends UnaryExpression {
 
   override def prettyName: String = s"graft_to_scaled$scale"
@@ -135,8 +73,8 @@ case class ToScaledN(child: Expression, scale: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** `graft_from_scaledN(l)` → DOUBLE at the given scale — same one-step
-  * correctly-rounded conversion as [[FromScaled18]]. */
+/** `graft_from_scaledN(l)` → DOUBLE at the given scale: the exact inverse
+  * of [[ToScaledN]], one correctly-rounded BigDecimal→double step. */
 case class FromScaledN(child: Expression, scale: Int) extends UnaryExpression {
 
   override def prettyName: String = s"graft_from_scaled$scale"
@@ -167,7 +105,10 @@ case class FromScaledN(child: Expression, scale: Int) extends UnaryExpression {
   * unscaled sum (`hi*10⁷ + lo`, exact in BigInteger — the total may
   * exceed long capacity) and converts at scale 4 in one correctly-rounded
   * step, identical to `CAST(sum(DECIMAL(38,4)) AS DOUBLE)` over the same
-  * addends. Runs on the single aggregate output row only. */
+  * addends. Runs on the single aggregate output row only. The hi/lo split
+  * (base 1e7, balanced so both lanes carry ≤~1.2e7/row for the monetary
+  * columns) keeps each `sum(long)` lane inside long capacity to ~7.7e11
+  * input rows — a 100 TB lineitem (~6e11 rows) fits. */
 case class FromScaledSplit(left: Expression, right: Expression, scale: Int)
     extends BinaryExpression {
 

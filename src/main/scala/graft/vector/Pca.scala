@@ -1,6 +1,7 @@
 package graft.vector
 
-import graft.{GraftFunctions, Q, Tables}
+import graft.Q
+import graft.Tables.{embeddings => emb}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -40,11 +41,6 @@ import org.apache.spark.storage.StorageLevel
 object Pca {
 
   private val Rounds = 3
-
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.ensureRegistered(s)
-    Tables.embeddings(s, d)
-  }
 
   /** Per-row projection s = Σ_d c_d·p_d as a zero-shuffle native fold:
     * exact scale-12 fixed-point terms ([[Dot612]] — integer arithmetic,

@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.{Det, GraftFunctions, Q, Tables}
+import graft.Tables.{embeddings => emb}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -20,11 +21,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object Similarity {
 
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.ensureRegistered(s)
-    Tables.embeddings(s, d)
-  }
-
   private def cosR(a: Column, b: Column): Column =
     round(GraftFunctions.graftCosine(a, b), 4)
 
@@ -34,7 +30,7 @@ object Similarity {
 
   // ---- DuckDB oracle twins: only oracle strings read these ----
 
-  /** Twin of [[emb]]: the CTE `name` with the `keep` columns and the
+  /** Twin of [[Tables.embeddings]]: the CTE `name` with the `keep` columns and the
     * embedding as a DOUBLE list `emb`. */
   private[graft] def duckEmb(keep: String = "vec_id", name: String = "e"): String =
     s"$name AS (SELECT $keep, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)"

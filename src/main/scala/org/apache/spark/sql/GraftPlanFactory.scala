@@ -12,14 +12,4 @@ object GraftPlanFactory {
 
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
-
-  /** Wraps a raw Catalyst expression as a public Column — lets library
-    * code use graft's native expressions without requiring the session's
-    * function registry (ensureRegistered) first. */
-  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    classic.ExpressionUtils.column(e)
-
-  /** Inverse of [[column]]: the Catalyst expression behind a Column. */
-  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    classic.ExpressionUtils.expression(c)
 }

@@ -45,7 +45,6 @@ class BucketedAuditSpec extends AnyFunSuite {
 
   test("as-of join over the bucketed log plans zero shuffles (co-located)") {
     import org.apache.spark.sql.functions.col
-    GraftFunctions.ensureRegistered(spark)
     val b = AuditStorage.read(spark, table)
     val l = b.filter(col("event_type") === "error")
       .select("audit_id", "entity_id", "ts")

@@ -164,7 +164,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     // largest local corpus. The 128-bit fold's pair bound is ~2^-128 —
     // structurally safe past 1e9 keys, where the round-10 64-bit fold's
     // birthday bound reached ~3%.
-    graft.GraftFunctions.ensureRegistered(spark) // graft_shingles below
     for (dir <- Seq(sf, "/root/testdata/sf0.01")) {
       val terms = Tables.documents(spark, dir)
         .select(explode(split(col("text"), " ")).as("t")).distinct()
@@ -472,7 +471,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     }
     // Σ n_novel over docs = |distinct corpus shingles|: each shingle has
     // exactly one first occurrence — the conservation law of the op
-    graft.GraftFunctions.ensureRegistered(spark)
     val distinctShingles = graft.Tables.documents(spark, sf)
       .select(explode(expr("array_distinct(graft_shingles(split(text, ' '), 3))"))
         .as("s"))

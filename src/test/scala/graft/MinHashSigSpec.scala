@@ -11,7 +11,6 @@ class MinHashSigSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("graft_minhash_sig equals the array_min(transform(...)) composition") {
-    GraftFunctions.ensureRegistered(spark)
     val s3 = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), graft.text.Tokens.shingles(3).as("s3"))
@@ -24,7 +23,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("empty shingle set yields NULL (array_min semantics), not zeros") {
-    GraftFunctions.ensureRegistered(spark)
     val r = Seq(Seq.empty[String], Seq("a b c")).toDF("s3")
       .select(expr("graft_minhash_sig(s3)").as("sigs")).collect()
     assert(r(0).isNullAt(0))
@@ -32,7 +30,6 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   test("null shingles are skipped (array_min semantics); all-null input is NULL") {
-    GraftFunctions.ensureRegistered(spark)
     val rows = Seq(
       (1, Seq(Some("x y z"), None)),   // null skipped, hash of the rest
       (2, Seq(Some("x y z"))),         // reference without the null
@@ -57,7 +54,6 @@ class MinHashSigSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StringType))
     val viaEval = MinHashSig(lit).eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray
-    GraftFunctions.ensureRegistered(spark)
     val viaCodegen = Seq(Seq("x y z", "y z w")).toDF("s3")
       .select(expr("graft_minhash_sig(s3)")).head.getSeq[Long](0)
     assert(viaEval.toSeq === viaCodegen)

@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The round-4 native expressions: graft_floor_search (sorted-array
-  * binary search — the truncate-boundary lookup) and graft_l2sq
+/** The round-4 native expressions: graft_array_bucket (sorted-array
+  * binary search — the truncate-boundary lookup as
+  * `get(ts, graft_array_bucket(ts, v) - 1)`, and the range-bucket
+  * assigner) and graft_l2sq
   * (left-to-right squared-L2 loop — the k-means/PQ distance kernel).
   * Each is pinned for (a) semantics against the declarative form it
   * replaced — which must be EXACTLY equal, the swap is supposed to be
@@ -13,15 +15,15 @@ class NativeExprSpec extends AnyFunSuite {
   import TestSession._
   import spark.implicits._
 
-  private def registered() = GraftFunctions.ensureRegistered(spark)
+  /** The truncate-boundary lookup of AuditLog.truncStates. */
+  private val floorSearch = "get(ts, graft_array_bucket(ts, v) - 1)"
 
   test("floor_search matches array_max(filter(...)) on driven cases") {
-    registered()
     val arr = Seq(10L, 20L, 30L, 40L)
     val probes = Seq(5L, 10L, 15L, 39L, 40L, 99L)
     val df = probes.toDF("v")
       .withColumn("ts", typedLit(arr))
-      .withColumn("fast", expr("graft_floor_search(ts, v)"))
+      .withColumn("fast", expr(floorSearch))
       .withColumn("slow", expr("array_max(filter(ts, t -> t <= v))"))
     assert(df.filter(!(col("fast") <=> col("slow"))).count() === 0)
     // explicit edge values
@@ -31,27 +33,67 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("floor_search: empty array returns NULL; interpreted eval agrees") {
-    registered()
     val r = Seq(7L).toDF("v")
       .withColumn("ts", typedLit(Seq.empty[Long]))
-      .selectExpr("graft_floor_search(ts, v)").head()
+      .selectExpr(floorSearch).head()
     assert(r.isNullAt(0))
-    // interpreted path (direct eval, outside codegen)
+    // interpreted path (direct eval, outside codegen): the boundary is
+    // the element before the count of elements ≤ v, none when it is 0
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.ArrayData
     import org.apache.spark.sql.types.{ArrayType, LongType}
-    val e = graft.audit.ArrayFloorSearch(
-      Literal.create(ArrayData.toArrayData(Array(10L, 20L)), ArrayType(LongType)),
-      Literal(15L))
-    assert(e.eval(null) === 10L)
-    val none = graft.audit.ArrayFloorSearch(
-      Literal.create(ArrayData.toArrayData(Array(10L, 20L)), ArrayType(LongType)),
-      Literal(9L))
-    assert(none.eval(null) === null)
+    val ts = Array(10L, 20L)
+    def boundary(v: Long): Option[Long] = {
+      val n = graft.audit.ArrayBucket(
+        Literal.create(ArrayData.toArrayData(ts), ArrayType(LongType)),
+        Literal(v)).eval(null).asInstanceOf[Int]
+      ts.lift(n - 1)
+    }
+    assert(boundary(15L).contains(10L))
+    assert(boundary(9L).isEmpty)
+  }
+
+  test("array_bucket over bigint and double: empty, all greater, ties, NULL probe; eval ≡ codegen") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+    // (sorted array, probe, expected count of elements ≤ probe)
+    val longCases: Seq[(Seq[Long], Option[Long], Option[Int])] = Seq(
+      (Seq(), Some(7L), Some(0)),                  // empty array
+      (Seq(10L, 20L, 30L), Some(5L), Some(0)),     // all greater
+      (Seq(1L, 2L, 2L, 2L, 3L), Some(2L), Some(4)), // ties count
+      (Seq(2L, 2L), Some(2L), Some(2)),
+      (Seq(10L, 20L, 30L), Some(99L), Some(3)),
+      (Seq(10L, 20L, 30L), None, None))            // NULL probe
+    val doubleCases: Seq[(Seq[Double], Option[Double], Option[Int])] = Seq(
+      (Seq(), Some(0.5), Some(0)),
+      (Seq(1.5, 2.5), Some(-1.0), Some(0)),
+      (Seq(0.1, 0.25, 0.25, 0.25, 0.9), Some(0.25), Some(4)),
+      (Seq(0.25, 0.25), Some(0.25), Some(2)),
+      (Seq(0.1, 0.2), Some(1e9), Some(2)),
+      (Seq(0.1, 0.2), None, None))
+    def check[T](cases: Seq[(Seq[T], Option[T], Option[Int])], elem: DataType,
+        df: org.apache.spark.sql.DataFrame): Unit = {
+      // codegen: an RDD-backed frame is not folded into a local relation
+      val q = df.selectExpr("graft_array_bucket(ts, v) AS n")
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("*(1) Project [graft_array_bucket"), plan)
+      val viaCodegen = q.collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Int])).toSeq
+      val viaEval = cases.map { case (ts, v, _) =>
+        Option(graft.audit.ArrayBucket(
+          Literal.create(ArrayData.toArrayData(ts.toArray[Any]), ArrayType(elem)),
+          Literal.create(v.orNull, elem)).eval(null)).map(_.asInstanceOf[Int])
+      }
+      assert(viaCodegen === cases.map(_._3))
+      assert(viaEval === cases.map(_._3))
+    }
+    check(longCases, LongType, spark.sparkContext
+      .parallelize(longCases.map(c => (c._1, c._2)), 1).toDF("ts", "v"))
+    check(doubleCases, DoubleType, spark.sparkContext
+      .parallelize(doubleCases.map(c => (c._1, c._2)), 1).toDF("ts", "v"))
   }
 
   test("l2sq is bit-identical to the zip_with/aggregate HOF on real embeddings") {
-    registered()
     val e = Tables.embeddings(spark, sfDir)
       .select(expr("transform(embedding, x -> cast(x as double))").as("a"))
     val pairs = e.limit(50).crossJoin(
@@ -65,24 +107,22 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("both expressions survive codegen (no interpreted fallback in plan)") {
-    registered()
     // spark.range + id-dependent inputs: a plain local Seq would be
     // constant-folded into a LocalTableScan and never exercise codegen
     val df = spark.range(1)
       .selectExpr("array(1L + id, 5L + id) AS ts", "3L + id AS v",
         "array(1D + id, 2D) AS a", "array(3D, 4D + id) AS b")
-      .selectExpr("graft_floor_search(ts, v) AS f", "graft_l2sq(a, b) AS l")
+      .selectExpr("graft_array_bucket(ts, v) AS f", "graft_l2sq(a, b) AS l")
     df.collect()
     // `*(n)` prefixes mark WholeStageCodegen stages in the compact plan
     // string; both expressions must sit inside the starred Project
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("*(1) Project [graft_floor_search"), plan)
+    assert(plan.contains("*(1) Project [graft_array_bucket"), plan)
     assert(plan.contains("graft_l2sq"), plan)
-    assert(df.head().getLong(0) === 1L && df.head().getDouble(1) === 8.0)
+    assert(df.head().getInt(0) === 1 && df.head().getDouble(1) === 8.0)
   }
 
   test("dot612 equals the exact-decimal product fold, incl. negatives and ties") {
-    registered()
     // values exact at scale 6; includes a HALF_UP tie case: 0.5 * 0.000001
     // = 5e-7, whose scale-6 round is 0.000001 only under half-up
     val a = Seq(0.5, -1.25, 3.141593, 0.000001, -0.000001, 123.456789)
@@ -104,7 +144,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("dot612 overflows loudly on corpus-magnitude inputs; the Pca q fold does not") {
-    registered()
     // |v| = 4000 > ~3034: a single scale-12 term exceeds Long.MaxValue.
     // The kernel's contract is per-row scale-6 vectors of bounded
     // magnitude — corpus-scale matrix-vector sums (Pca's y) must use the
@@ -126,7 +165,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("scalevec612 + vec_sum equals the transform/cast feed") {
-    registered()
     val df = Tables.embeddings(spark, sfDir).limit(200)
       .select(expr("transform(embedding, x -> round(cast(x as double), 6))").as("v"),
         expr("round(cast(embedding[0] as double), 6)").as("s"))
@@ -141,7 +179,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("deflate6 equals the decimal zip_with deflation, HALF_UP at scale 6") {
-    registered()
     val c = Seq(1.5, -2.25, 0.000003, 7.999999)
     val pv = Seq(0.5, 0.5, 0.5, -0.125)
     val s = 0.000001 // s*p = 5e-7 and -1.25e-7: exercises both tie and truncate
@@ -158,7 +195,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("fixed-point trio survives codegen and interpreted eval agrees") {
-    registered()
     val df = Tables.embeddings(spark, sfDir).limit(50)
       .select(expr("transform(embedding, x -> round(cast(x as double), 6))").as("v"))
       .withColumn("d", expr("graft_dot612(v, v)"))
@@ -174,7 +210,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("scaled18 lane ≡ DECIMAL(38,18) pipeline bit-for-bit (per value and summed)") {
-    registered()
     // rank-mass-shaped doubles plus adversarial cases: HALF_UP ties at
     // scale 18 (±5e-19), subnormal-ish tinies, values near 1, and exact
     // dyadics whose decimal expansion exceeds 18 places (2^-60)
@@ -206,7 +241,7 @@ class NativeExprSpec extends AnyFunSuite {
     // interpreted path agrees with codegen
     import org.apache.spark.sql.catalyst.expressions.Literal
     xs.foreach { x =>
-      val viaExpr = graft.vector.ToScaled18(Literal(x)).eval(null)
+      val viaExpr = graft.vector.ToScaledN(Literal(x), 18).eval(null)
       val viaDec = new java.math.BigDecimal(java.lang.Double.toString(x))
         .setScale(18, java.math.RoundingMode.HALF_UP).unscaledValue().longValueExact()
       assert(viaExpr === viaDec, s"x=$x")
@@ -214,7 +249,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("scaled18 overflows loudly past long capacity; pagerank mass never reaches it") {
-    registered()
     // |x| >= 9.223372036854775808 cannot carry at scale 18 in a long —
     // the contract is bounded mass (PageRank: every group sum <= 1); a
     // violation must throw, not wrap
@@ -229,7 +263,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_viterbi ≡ the interpreted HOF fold on a real vocab (incl. ties)") {
-    registered()
     // a small piece table with DELIBERATE cost ties so the (cost, n, seg)
     // tie-break order is exercised, not just the happy path: 'ab' and
     // 'ba' tie at 2.0; chars tie pairwise; 'abab' forces the n tie-break
@@ -269,7 +302,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("scaled2 + split-4 moment lanes ≡ exact DECIMAL pipeline bit-for-bit") {
-    registered()
     // 2-decimal monetary shapes (the q_measure_correlations inputs):
     // column extremes plus 500 random price×quantity-ish pairs
     val rnd = new scala.util.Random(13)
@@ -317,7 +349,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("correlations capacity guard fails LOUDLY past the lane budget (ANSI is off)") {
-    registered()
     // In-contract inputs pass and produce the normal 6-pair output
     val ok = Seq(
       (1.0, 949.13, 0.05, 0.02), (50.0, 104999.91, 0.1, 0.08),
@@ -360,7 +391,6 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("graft_gram_stats ≡ the sorted-run HOF fold and the explode aggregation") {
-    registered()
     // the interpreted fold graft_gram_stats replaced in doc_repetition_topn
     def foldStats(n: Int): String =
       s"""named_struct('tot', cast(size(graft_shingles(ws, $n)) as bigint),

@@ -990,7 +990,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // Spark upgrade stops propagating cached outputPartitioning through
     // EnsureRequirements, this fails before the sf10 bench does.
     import org.apache.spark.sql.functions._
-    GraftFunctions.ensureRegistered(spark)
     val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val abcast = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -4,19 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft-warehouse-${sys.props("user.name")}")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", GraftSession.codegenCacheEntries.toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine's own session recipe at 4 cores. The warehouse dir comes
+    * from build.sbt's `Test / javaOptions`. */
+  lazy val spark: SparkSession = GraftSession.build("graft-test", "4")
   val sfDir = "/root/testdata/sf0.001"
 
   /** Counts data shuffles in a (possibly adaptively executed) plan. Under
@@ -58,8 +48,36 @@ class QueriesSmokeSpec extends AnyFunSuite {
   // operator fns are side-effecting at construction (the streaming ops run
   // their full capture pipeline, dedup_components its propagation rounds),
   // so building per-test would re-run those pipelines per assertion family.
-  private lazy val dfs: Map[String, org.apache.spark.sql.DataFrame] =
-    SparkEntry.queries.map { case (n, fn) => n -> fn(spark, sfDir) }
+  // The build also records what it did to the session's function registry:
+  // the names it added, and the registry's log lines (one "replaced a
+  // previously registered function" warning per re-registered name).
+  private lazy val (dfs, registryLog, functionsAdded) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val before = registry.listFunction().toSet
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("registry-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = log.add(e.getMessage.getFormattedMessage)
+    }
+    probe.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry").asInstanceOf[Logger]
+    logger.addAppender(probe)
+    val built = try SparkEntry.queries.map { case (n, fn) => n -> fn(spark, sfDir) }
+      finally { logger.removeAppender(probe); probe.stop() }
+    import scala.jdk.CollectionConverters._
+    (built, log.asScala.toList, registry.listFunction().toSet -- before)
+  }
+
+  test("building every op leaves the session's function registry unchanged") {
+    assert(registryLog.isEmpty,
+      s"${registryLog.size} registry log lines, first: ${registryLog.headOption}")
+    assert(functionsAdded.isEmpty, functionsAdded.mkString(", "))
+  }
 
   SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
     test(s"$name executes at sf0.001 and returns rows") {

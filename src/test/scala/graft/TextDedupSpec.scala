@@ -25,7 +25,6 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("dedup_incremental: verdicts match a direct cross-split band probe") {
-    GraftFunctions.ensureRegistered(spark)
     // independent band table straight off the (already spec-verified)
     // native signature expression — no shared helper with the op's plan
     val sigs = Tables.documents(spark, sfDir)
@@ -102,7 +101,6 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("dedup_lsh_curve: buckets match a driver-side replica; theory curve exact") {
-    GraftFunctions.ensureRegistered(spark)
     import java.math.{BigDecimal => JBD, RoundingMode}
     def r4(n: Long, d: Long): Double =
       JBD.valueOf(1.0 * n / d).setScale(4, RoundingMode.HALF_UP).doubleValue
@@ -226,7 +224,6 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("dedup_minhash: every doc gets a row; sub-3-word docs match nothing") {
-    GraftFunctions.ensureRegistered(spark)
     // random texts, exact-dup clusters, one-word-edited near dups, and
     // several docs under 3 words (one empty) — the all-NULL signature
     // class, itself duplicated, shuffled across the id range

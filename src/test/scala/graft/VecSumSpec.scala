@@ -13,10 +13,7 @@ class VecSumSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def registered() = GraftFunctions.ensureRegistered(spark)
-
   test("bit-identical to posexplode + dsum9 per-label means on real embeddings") {
-    registered()
     val e = Tables.embeddings(spark, sf)
     val slow = e
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -37,7 +34,6 @@ class VecSumSpec extends AnyFunSuite {
   }
 
   test("merge path: result identical across partitionings") {
-    registered()
     val e = Tables.embeddings(spark, sf)
       .select(expr("transform(embedding, x -> cast(cast(x as double) as decimal(28,9)))").as("v"))
     def total(df: org.apache.spark.sql.DataFrame) =
@@ -48,7 +44,6 @@ class VecSumSpec extends AnyFunSuite {
   }
 
   test("null arrays are skipped; an all-null group yields NULL") {
-    registered()
     val df = Seq(
       (1, Some(Seq(BigDecimal("1.5"), BigDecimal("2.0")))),
       (1, None),
@@ -63,7 +58,6 @@ class VecSumSpec extends AnyFunSuite {
   }
 
   test("ragged vector lengths fail loudly") {
-    registered()
     val df = Seq(Seq(BigDecimal(1)), Seq(BigDecimal(1), BigDecimal(2)))
       .toDF("v0")
       .withColumn("v", expr("transform(v0, x -> cast(x as decimal(28,9)))"))

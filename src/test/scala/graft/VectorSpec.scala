@@ -11,7 +11,6 @@ class VectorSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def cos(a: Seq[Float], b: Seq[Float]): Option[Double] = {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq((a, b)).toDF("a", "b")
       .select(call_function("graft_cosine", col("a"), col("b")).as("c"))
     Option(df.head().get(0)).map(_.asInstanceOf[Double])
@@ -34,7 +33,6 @@ class VectorSpec extends AnyFunSuite {
   }
 
   test("matches a reference computation on real embeddings") {
-    GraftFunctions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, TestSession.sfDir).limit(2)
       .collect().map(_.getSeq[Float](1))
     val expected = {
@@ -47,7 +45,6 @@ class VectorSpec extends AnyFunSuite {
   }
 
   test("expression survives codegen (no fallback in the plan)") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Tables.embeddings(spark, TestSession.sfDir)
       .select(call_function("graft_cosine", col("embedding"), col("embedding")).as("c"))
     // all self-similarities are 1.0 (unit-norm data)
@@ -353,7 +350,6 @@ class VectorSpec extends AnyFunSuite {
     // across equal cosines) must be pinned on a corpus that HAS them: the
     // sf0.001 vectors replicated 3x, with a 5-deep cluster on a subset —
     // m > 4 exercises the pool truncation
-    GraftFunctions.ensureRegistered(spark)
     val src = Tables.embeddings(spark, TestSession.sfDir)
     val tmp = java.nio.file.Files.createTempDirectory("graft-knn-dup-").toString
     src
@@ -667,7 +663,6 @@ class VectorSpec extends AnyFunSuite {
   }
 
   test("graft_cosine double overload agrees with the float path on float-exact input") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq((Seq(1.5f, -2.0f, 0.25f), Seq(0.5f, 1.0f, -4.0f))).toDF("a", "b")
       .select(
         call_function("graft_cosine", col("a"), col("b")).as("f"),
@@ -765,7 +760,6 @@ class VectorSpec extends AnyFunSuite {
     // brute-force ground truth recomputed independently over the same
     // deduplicated index (min-id representative per distinct embedding)
     val e = graft.Tables.embeddings(spark, sf)
-    GraftFunctions.ensureRegistered(spark)
     val reps = e.filter(col("vec_id") >= 10)
       .groupBy("embedding").agg(min("vec_id").as("vec_id"))
     val q = e.filter(col("vec_id") < 10)

@@ -11,7 +11,6 @@ class WordShinglesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("graft_shingles(ws, 3) equals the zip_with composition on the corpus") {
-    GraftFunctions.ensureRegistered(spark)
     val ws = Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
     val diff = ws.select(col("doc_id"),
@@ -22,7 +21,6 @@ class WordShinglesSpec extends AnyFunSuite {
   }
 
   test("n=2 and n=4 produce the expected grams, empty below n words") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Seq("a b c d", "a b", "a").toDF("text")
       .select(split(col("text"), " ").as("ws"))
       .select(expr("graft_shingles(ws, 2)").as("g2"),
@@ -34,7 +32,6 @@ class WordShinglesSpec extends AnyFunSuite {
   }
 
   test("null words yield null shingles (concat semantics), same on both paths") {
-    GraftFunctions.ensureRegistered(spark)
     // codegen path over a real column
     val viaCol = Seq(Seq(Some("a"), None, Some("c"))).toDF("ws")
       .select(expr("graft_shingles(ws, 2)").as("g"))
@@ -61,7 +58,6 @@ class WordShinglesSpec extends AnyFunSuite {
   }
 
   test("the shingling Project stays inside whole-stage codegen") {
-    GraftFunctions.ensureRegistered(spark)
     val df = Tables.documents(spark, sfDir)
       .select(split(col("text"), " ").as("ws"))
       .select(expr("graft_shingles(ws, 3)").as("s3"))
