@@ -55,6 +55,11 @@ object GraftSession {
     // determinism sweep runs Verify under 16m vs the 128m default and
     // diffs every op's result multiset (tools/determinism.py).
     val maxSplit = sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "128m")
+    // Managed tables (`saveAsTable`) go to a scratch dir deleted at JVM
+    // exit, not to a `spark-warehouse/` under the launch directory; a JVM
+    // that sets the property keeps its own.
+    val warehouse = sys.props.getOrElse("spark.sql.warehouse.dir",
+      Scratch.dir("graft-warehouse-"))
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -66,6 +71,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.sql.files.maxPartitionBytes", maxSplit)
+      .config("spark.sql.warehouse.dir", warehouse)
       .config("spark.sql.streaming.stateStore.providerClass", stateStore)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)

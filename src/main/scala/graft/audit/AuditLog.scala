@@ -104,21 +104,28 @@ final case class AuditLog(pkCol: String, seqCol: String) {
   // are the one spelling of each reconstruction step they share. Only
   // oracle strings read them.
 
+  /** Twin of `byEntity`: the window specification, for an `OVER (…)`
+    * that cannot use the named window `w`. */
+  val duckByEntity: String = s"PARTITION BY $pkCol ORDER BY $seqCol"
+
+  /** Twin of `running`. */
+  val duckRunning: String =
+    s"$duckByEntity ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+
   /** Twin of `byEntity`: the named window `w` the old-side lags run over. */
-  val duckWindow: String = s"WINDOW w AS (PARTITION BY $pkCol ORDER BY $seqCol)"
+  val duckWindow: String = s"WINDOW w AS ($duckByEntity)"
 
   /** Twin of `running` + `last(_, ignoreNulls = true)`: `expr`'s last
     * non-null value up to and including this change. */
   def duckLast(expr: String): String =
-    s"last_value($expr IGNORE NULLS) OVER " +
-      s"(PARTITION BY $pkCol ORDER BY $seqCol ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    s"last_value($expr IGNORE NULLS) OVER ($duckRunning)"
 
   /** Twin of `snapshot`'s columns: `<prefix>c` per payload field. */
   def duckStates(payload: Seq[String], prefix: String = "state_"): String =
     payload.map(c => s"${duckLast(c)} AS $prefix$c").mkString(",\n    ")
 
   /** Twin of `latest`: 1 on each entity's last row. */
-  val duckLatestRn: String = s"row_number() OVER (PARTITION BY $pkCol ORDER BY $seqCol DESC)"
+  val duckLatestRn: String = s"row_number() OVER ($duckByEntity DESC)"
 
   /** Twin of `snapshot`: the CTE `name` selecting `keep`, the payload's
     * states and any `extra` columns from `from`. */

@@ -71,6 +71,23 @@ object AuditQueries {
       .drop("__new_session")
   }
 
+  /** DuckDB twin of [[withSessionId]] over `audit`: the CTEs `marked` and
+    * `sessions`, the latter with the `keep` columns (`entity_id` among
+    * them) and the BIGINT `session_id`. */
+  private def duckSessionCtes(keep: String): String =
+    s"""marked AS (
+       |  SELECT $keep, audit_id,
+       |    CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
+       |           - lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER w > 1800
+       |         THEN 1
+       |         WHEN lag(audit_id) OVER w IS NULL
+       |         THEN 1 ELSE 0 END AS new_session
+       |  FROM audit ${alg.duckWindow}),
+       |sessions AS (
+       |  SELECT $keep,
+       |    CAST(sum(new_session) OVER (${alg.duckRunning}) AS BIGINT) AS session_id
+       |  FROM marked)""".stripMargin
+
   /** Oracle-side twin of `log` + `sparse` (DuckDB dialect). */
   private val auditCte =
     s"""WITH audit AS (
@@ -141,8 +158,8 @@ object AuditQueries {
     "audit_delta_old",
     auditCte + s""", old_feed AS (
       |  SELECT audit_id, entity_id, operation, value,
-      |    lag(value) OVER (PARTITION BY entity_id ORDER BY audit_id) AS old_value
-      |  FROM audit),
+      |    lag(value) OVER w AS old_value
+      |  FROM audit ${alg.duckWindow}),
       |live AS (
       |  SELECT entity_id, value AS live_value
       |  FROM (SELECT entity_id, value,
@@ -173,9 +190,9 @@ object AuditQueries {
     auditCte +
       s"""SELECT audit_id, entity_id,
          |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS changed_at,
-         |  row_number() OVER (PARTITION BY entity_id ORDER BY audit_id) AS change_seq,
+         |  row_number() OVER w AS change_seq,
          |  ${alg.duckStates(Seq("k", "val"))}
-         |FROM audit ORDER BY audit_id""".stripMargin) { (s, d) =>
+         |FROM audit ${alg.duckWindow} ORDER BY audit_id""".stripMargin) { (s, d) =>
     alg.snapshot(sparse(log(s, d)), Seq("k", "val"))
       .select(
         col("audit_id"), col("entity_id"), date_format(col("ts"), TS).as("changed_at"),
@@ -392,9 +409,9 @@ object AuditQueries {
       |  FROM b),
       |c AS (
       |  SELECT *,
-      |    lag(raw_k) OVER e AS p_raw_k, lag(src_k) OVER e AS p_src_k,
-      |    lag(raw_val) OVER e AS p_raw_val, lag(src_val) OVER e AS p_src_val
-      |  FROM s WINDOW e AS (PARTITION BY entity_id ORDER BY audit_id))
+      |    lag(raw_k) OVER w AS p_raw_k, lag(src_k) OVER w AS p_src_k,
+      |    lag(raw_val) OVER w AS p_raw_val, lag(src_val) OVER w AS p_src_val
+      |  FROM s ${alg.duckWindow})
       |SELECT audit_id, entity_id, operation,
       |  CASE WHEN tb IS NOT NULL AND (src_k IS NULL OR src_k <= tb)
       |    THEN NULL ELSE raw_k END AS state_k,
@@ -633,10 +650,9 @@ object AuditQueries {
   /** Lost-change detection: audit-id gaps within each entity's stream. */
   val auditGapDetect: Q = Q.sql(
     "audit_gap_detect",
-    auditCte + """, gaps AS (
-      |  SELECT entity_id,
-      |    audit_id - lag(audit_id) OVER (PARTITION BY entity_id ORDER BY audit_id) AS gap
-      |  FROM audit)
+    auditCte + s""", gaps AS (
+      |  SELECT entity_id, audit_id - lag(audit_id) OVER w AS gap
+      |  FROM audit ${alg.duckWindow})
       |SELECT entity_id, count(*) AS n_changes,
       |  coalesce(max(gap), 0) AS max_id_gap
       |FROM gaps GROUP BY entity_id ORDER BY entity_id""".stripMargin) { (s, d) =>
@@ -664,20 +680,7 @@ object AuditQueries {
   /** Change-burst sessionization: 30-min inactivity splits a session. */
   val auditSessionize: Q = Q.sql(
     "audit_sessionize",
-    auditCte + """, marked AS (
-      |  SELECT entity_id, audit_id, ts, value,
-      |    CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
-      |           - lag(CAST(floor(epoch(ts)) AS BIGINT))
-      |             OVER (PARTITION BY entity_id ORDER BY audit_id) > 1800
-      |         THEN 1
-      |         WHEN lag(audit_id) OVER (PARTITION BY entity_id ORDER BY audit_id) IS NULL
-      |         THEN 1 ELSE 0 END AS new_session
-      |  FROM audit),
-      |sessions AS (
-      |  SELECT entity_id, ts, value,
-      |    CAST(sum(new_session) OVER (PARTITION BY entity_id ORDER BY audit_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |  FROM marked)
+    auditCte + s""", ${duckSessionCtes("entity_id, ts, value")}
       |SELECT entity_id, session_id,
       |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
       |  count(*) AS n_events, """.stripMargin
@@ -1389,11 +1392,9 @@ object AuditQueries {
       Seq("k", "val"))}
       |SELECT audit_id, entity_id, operation, state_k, state_val,
       |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
-      |  strftime(lead(ts) OVER (PARTITION BY entity_id ORDER BY audit_id),
-      |           '%Y-%m-%d %H:%M:%S') AS valid_to,
-      |  CASE WHEN lead(ts) OVER (PARTITION BY entity_id ORDER BY audit_id)
-      |    IS NULL THEN 1 ELSE 0 END AS is_current
-      |FROM snap ORDER BY entity_id, audit_id""".stripMargin) { (s, d) =>
+      |  strftime(lead(ts) OVER w, '%Y-%m-%d %H:%M:%S') AS valid_to,
+      |  CASE WHEN lead(ts) OVER w IS NULL THEN 1 ELSE 0 END AS is_current
+      |FROM snap ${alg.duckWindow} ORDER BY entity_id, audit_id""".stripMargin) { (s, d) =>
     alg.snapshot(sparse(log(s, d)), Seq("k", "val"))
       .withColumn("next_ts", lead(col("ts"), 1).over(alg.byEntity))
       .select(col("audit_id"), col("entity_id"), col("operation"),
@@ -1461,10 +1462,10 @@ object AuditQueries {
     "audit_concurrent_writers",
     auditCte + s""", l AS (
       |  SELECT entity_id, audit_id, ts, changed_by, db_user,
-      |    lag(audit_id) OVER (PARTITION BY entity_id ORDER BY audit_id) AS prev_audit_id,
-      |    lag(ts) OVER (PARTITION BY entity_id ORDER BY audit_id) AS prev_ts,
-      |    lag(db_user) OVER (PARTITION BY entity_id ORDER BY audit_id) AS prev_session
-      |  FROM audit)
+      |    lag(audit_id) OVER w AS prev_audit_id,
+      |    lag(ts) OVER w AS prev_ts,
+      |    lag(db_user) OVER w AS prev_session
+      |  FROM audit ${alg.duckWindow})
       |SELECT entity_id, audit_id, prev_audit_id,
       |  CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(prev_ts)) AS BIGINT)
       |    AS gap_s,
@@ -1742,10 +1743,9 @@ object AuditQueries {
     "audit_op_transitions",
     auditCte + s""", l AS (
       |  SELECT entity_id,
-      |    coalesce(lag(operation) OVER (
-      |      PARTITION BY entity_id ORDER BY audit_id), '^') AS prev_op,
+      |    coalesce(lag(operation) OVER w, '^') AS prev_op,
       |    operation AS op
-      |  FROM audit),
+      |  FROM audit ${alg.duckWindow}),
       |c AS (SELECT prev_op, op, count(*) AS n,
       |        count(DISTINCT entity_id) AS n_entities
       |      FROM l GROUP BY 1, 2)
@@ -2422,25 +2422,12 @@ object AuditQueries {
       s"CAST(min(CASE WHEN cum >= CAST(ceil($p * nd) AS BIGINT) THEN v END) AS BIGINT) AS $alias"
     Q.sql(
       "audit_session_quantiles",
-      auditCte + s""", marked AS (
-        |  SELECT entity_id, audit_id, ts,
-        |    CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
-        |           - lag(CAST(floor(epoch(ts)) AS BIGINT))
-        |             OVER (PARTITION BY entity_id ORDER BY audit_id) > 1800
-        |         THEN 1
-        |         WHEN lag(audit_id) OVER (PARTITION BY entity_id ORDER BY audit_id) IS NULL
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM audit),
-        |sess AS (
-        |  SELECT entity_id, audit_id, ts,
-        |    sum(new_session) OVER (PARTITION BY entity_id ORDER BY audit_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_n
-        |  FROM marked),
+      auditCte + s""", ${duckSessionCtes("entity_id, ts")},
         |per AS (
-        |  SELECT entity_id, sess_n, CAST(count(*) AS BIGINT) AS n_events,
+        |  SELECT entity_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
         |    CAST(floor(epoch(max(ts))) AS BIGINT)
         |      - CAST(floor(epoch(min(ts))) AS BIGINT) AS duration_s
-        |  FROM sess GROUP BY 1, 2),
+        |  FROM sessions GROUP BY 1, 2),
         |m AS (
         |  SELECT 'n_events' AS metric, n_events AS v FROM per
         |  UNION ALL
@@ -2891,10 +2878,9 @@ object AuditQueries {
     * than 5 rows per entity past the first window. */
   val auditLifecyclePaths: Q = Q.sql(
     "audit_lifecycle_paths",
-    auditCte + """, capped AS (
-      |  SELECT entity_id, operation, audit_id,
-      |    row_number() OVER (PARTITION BY entity_id ORDER BY audit_id) AS rn
-      |  FROM audit),
+    auditCte + s""", capped AS (
+      |  SELECT entity_id, operation, audit_id, row_number() OVER w AS rn
+      |  FROM audit ${alg.duckWindow}),
       |paths AS (
       |  SELECT entity_id,
       |    string_agg(operation, '>' ORDER BY audit_id) AS path
@@ -3058,10 +3044,9 @@ object AuditQueries {
     * bounded at |roles|² rows. */
   val auditHandoff: Q = Q.sql(
     "audit_handoff",
-    auditCte + """, t AS (
-      |  SELECT entity_id, db_user,
-      |    lag(db_user) OVER (PARTITION BY entity_id ORDER BY audit_id) AS prev_user
-      |  FROM audit)
+    auditCte + s""", t AS (
+      |  SELECT entity_id, db_user, lag(db_user) OVER w AS prev_user
+      |  FROM audit ${alg.duckWindow})
       |SELECT prev_user AS from_role, db_user AS to_role,
       |  CAST(count(*) AS BIGINT) AS n_handoffs,
       |  CAST(count(DISTINCT entity_id) AS BIGINT) AS n_entities
@@ -3120,7 +3105,7 @@ object AuditQueries {
     "audit_gdpr_erasure",
     auditCte + s""", lo AS (
       |  SELECT entity_id, audit_id, ts,
-      |    last_value(operation) OVER (PARTITION BY entity_id ORDER BY audit_id
+      |    last_value(operation) OVER (${alg.duckByEntity}
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_op
       |  FROM audit)
       |SELECT CAST(date_trunc('day', ts) AS DATE) AS day,

@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import graft.{Q, Tables}
-import graft.text.Tokens.words
+import graft.text.Tokens.{duckWordList, words}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -324,10 +324,10 @@ object Multimodal {
     * broadcast. Exact integer sums; ratios rounded once. */
   val multimodalTokenBudget: Q = Q.sql(
     "multimodal_token_budget",
-    """WITH f AS (SELECT doc_id,
+    s"""WITH f AS (SELECT doc_id,
       |    ['image', 'audio', 'video'][CAST(doc_id % 3 + 1 AS INT)] AS media_type,
       |    CAST(length(text) // 256 + 1 AS INT) AS n_frames,
-      |    len(str_split(text, ' ')) AS n_words
+      |    len(${duckWordList()}) AS n_words
       |  FROM documents),
       |s AS (SELECT doc_id, media_type, n_words,
       |        CAST(1 + (n_frames - 1) // greatest(1, n_frames // 8) AS INT)
@@ -398,11 +398,11 @@ object Multimodal {
     * per (media_type, shard). */
   val multimodalInterleave: Q = Q.sql(
     "multimodal_interleave",
-    """WITH f AS (SELECT doc_id,
+    s"""WITH f AS (SELECT doc_id,
       |    ['image', 'audio', 'video'][CAST(doc_id % 3 + 1 AS INT)] AS media_type,
       |    CAST(doc_id // 256 AS BIGINT) AS shard,
       |    CAST(length(text) // 256 + 1 AS INT) AS n_frames,
-      |    len(str_split(text, ' ')) AS n_words
+      |    len(${duckWordList()}) AS n_words
       |  FROM documents),
       |t AS (SELECT doc_id, media_type, shard,
       |        CAST(1 + (n_frames - 1) // greatest(1, n_frames // 8) AS BIGINT) * 64

@@ -55,10 +55,8 @@ object EventStream {
     * returns the sink's batch read-back. The read-back takes the stream's
     * own schema: a run that emits no rows (an all-sessions-open replay)
     * leaves the sink without a data file to infer one from. Its columns
-    * are nullable, as in any parquet read, unless `keepNullability` keeps
-    * the stream's own (a typed stream's encoder schema). */
-  private def drainToSink(stream: Dataset[_],
-      keepNullability: Boolean = false): DataFrame = {
+    * are nullable, as in any parquet read. */
+  private def drainToSink(stream: Dataset[_]): DataFrame = {
     val s = stream.sparkSession
     val tmp = graft.Scratch.dir("graft-stream-sink-")
     drained(s) {
@@ -69,10 +67,8 @@ object EventStream {
         .trigger(availableNow)
         .start()
     }
-    val schema =
-      if (keepNullability) stream.schema
-      else StructType(stream.schema.map(f => StructField(f.name, f.dataType)))
-    s.read.schema(schema).parquet(s"$tmp/out")
+    s.read.schema(StructType(stream.schema.map(f => StructField(f.name, f.dataType))))
+      .parquet(s"$tmp/out")
   }
 
   /** The foreachBatch twin of [[drainToSink]]: drains `stream` to
@@ -287,7 +283,7 @@ object EventStream {
     val feed = readFeed(s, d)
       .select(col("user_id").as("entity_id"), col("ts"), col("value"))
       .as[FeedEvent]
-    drainToSink(sessionize(feed), keepNullability = true)
+    drainToSink(sessionize(feed))
       .orderBy("entity_id", "session_start")
   }
 

@@ -2,8 +2,8 @@ package graft.text
 
 import graft.Q
 import graft.Tables.{documents => docs}
-import graft.text.Tokens.{distinctTexts, duckDistinctTexts, duckGrams, duckWords, grams,
-  shingles, words}
+import graft.text.Tokens.{distinctTexts, duckDistinctTexts, duckGrams, duckWordList,
+  duckWords, grams, shingles, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -28,10 +28,10 @@ object CorpusOps {
     * corpus_funnel (their conjunction). Both dialects are emitted from
     * the same pairs. */
   private[graft] val duckQualityFeatures: String =
-    """len(str_split(text, ' ')) AS n_words,
-      |    len(list_distinct(str_split(text, ' '))) AS n_distinct,
+    s"""len(${duckWordList()}) AS n_words,
+      |    len(list_distinct(${duckWordList()})) AS n_distinct,
       |    length(replace(text, ' ', '')) AS word_chars,
-      |    len(list_filter(str_split(text, ' '), w -> w IN ('the', 'a', 'of'))) AS n_stop""".stripMargin
+      |    len(list_filter(${duckWordList()}, w -> w IN ('the', 'a', 'of'))) AS n_stop""".stripMargin
 
   private val ruleFlags: Seq[(String, String)] = Seq(
     "r_too_short" -> "n_words < 25",
@@ -609,8 +609,7 @@ object CorpusOps {
     val t = dist0.agg(count(lit(1)).cast("long").as("n_distinct"))
     val sp = s.range(0, 20).select(col("id").as("bucket"))
     val w = Window.orderBy("bucket") // ≤ 20 rows — single partition is fine
-    broadcast(sp)
-      .join(bc, Seq("bucket"), "left").join(fb, Seq("bucket"), "left")
+    sp.join(bc, Seq("bucket"), "left").join(fb, Seq("bucket"), "left")
       .select(col("bucket"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"),
         coalesce(col("n_new"), lit(0L)).as("n_new"))
@@ -626,7 +625,7 @@ object CorpusOps {
   val corpusPsi: Q = Q.sql(
     "corpus_psi",
     s"""WITH f AS (SELECT doc_id, source,
-      |    len(str_split(text, ' ')) AS n_words,
+      |    len(${duckWordList()}) AS n_words,
       |    length(replace(text, ' ', '')) AS word_chars
       |  FROM documents),
       |b AS (SELECT source, 'n_words' AS feature,
@@ -810,8 +809,8 @@ object CorpusOps {
     * divide ROUNDED values, so a shuffle cannot move a weight. */
   val corpusTemperature: Q = Q.sql(
     "corpus_temperature",
-    """WITH s AS (SELECT lang, count(*) AS n_docs,
-      |        sum(len(str_split(text, ' '))) AS tokens
+    s"""WITH s AS (SELECT lang, count(*) AS n_docs,
+      |        sum(len(${duckWordList()})) AS tokens
       |      FROM documents GROUP BY 1),
       |w AS (SELECT lang, n_docs, tokens,
       |        CAST(round(sqrt(1.0 * tokens), 4) AS DECIMAL(18, 4)) AS wgt
@@ -857,7 +856,7 @@ object CorpusOps {
     * audit_value_quantiles/audit_approx_entities. */
   val tokenHistogram: Q = Q.sql(
     "token_histogram",
-    """WITH t AS (SELECT source, len(str_split(text, ' ')) AS n_tok FROM documents)
+    s"""WITH t AS (SELECT source, len(${duckWordList()}) AS n_tok FROM documents)
       |SELECT source, count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS total_tokens,
       |  round(avg(n_tok), 4) AS mean_tokens,
       |  round(quantile_cont(n_tok, 0.25), 4) AS p25,
@@ -894,7 +893,7 @@ object CorpusOps {
     * what makes checkpoint-resumable training data possible. */
   val packSequences: Q = Q.sql(
     "pack_sequences",
-    """WITH t AS (SELECT doc_id, source, len(str_split(text, ' ')) AS n_tok
+    s"""WITH t AS (SELECT doc_id, source, len(${duckWordList()}) AS n_tok
       |           FROM documents),
       |c AS (SELECT doc_id, source, n_tok,
       |        CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
@@ -939,7 +938,7 @@ object CorpusOps {
     * single-rounded quotients. */
   val packEfficiency: Q = Q.sql(
     "pack_efficiency",
-    """WITH t AS (SELECT doc_id, source, len(str_split(text, ' ')) AS n_tok
+    s"""WITH t AS (SELECT doc_id, source, len(${duckWordList()}) AS n_tok
       |           FROM documents),
       |c AS (SELECT doc_id, source, n_tok,
       |        CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
@@ -1107,7 +1106,7 @@ object CorpusOps {
       "corpus_split",
       s"""WITH b AS (
          |  SELECT lang, source, ${splitCase(duckBucket)} AS split,
-         |    len(str_split(text, ' ')) AS n_words
+         |    len(${duckWordList()}) AS n_words
          |  FROM documents),
          |c AS (SELECT lang, source, split, count(*) AS n_docs,
          |        CAST(sum(n_words) AS BIGINT) AS n_words
@@ -1720,7 +1719,7 @@ object CorpusOps {
     val r2F = s"round($num * $num / nullif($den * $denY, 0), 4)"
     Q.sql(
       "zipf_fit",
-      s"""WITH w AS (SELECT lang, unnest(str_split(text, ' ')) AS term
+      s"""WITH w AS (SELECT lang, unnest(${duckWordList()}) AS term
          |       FROM documents),
          |lc AS (SELECT lang, term, CAST(count(*) AS BIGINT) AS c
          |       FROM w GROUP BY 1, 2),
@@ -1801,7 +1800,7 @@ object CorpusOps {
        |fd AS (SELECT f.*, CASE WHEN n_same > 1 THEN 1 ELSE 0 END AS is_dup
        |       FROM f JOIN dup ON f.digest = dup.digest),
        |ty AS (SELECT lang, source, count(*) AS n_types FROM (
-       |         SELECT DISTINCT lang, source, unnest(str_split(text, ' ')) AS term
+       |         SELECT DISTINCT lang, source, unnest(${duckWordList()}) AS term
        |         FROM documents) GROUP BY 1, 2),
        |g AS (SELECT lang, source,
        |        count(*) AS n_docs,
@@ -1883,7 +1882,7 @@ object CorpusOps {
     val alloc = s"CAST(floor($share * sum_tokens) AS BIGINT)"
     Q.sql(
       "epoch_plan",
-      s"""WITH s AS (SELECT lang, CAST(sum(len(str_split(text, ' '))) AS BIGINT)
+      s"""WITH s AS (SELECT lang, CAST(sum(len(${duckWordList()})) AS BIGINT)
        |          AS tokens
        |      FROM documents GROUP BY 1),
        |w AS (SELECT lang, tokens,
@@ -2052,7 +2051,7 @@ object CorpusOps {
     Q.sql(
       "sample_weighted",
       s"""WITH s AS (SELECT lang, count(*) AS n_docs,
-        |        sum(len(str_split(text, ' '))) AS tokens
+        |        sum(len(${duckWordList()})) AS tokens
         |      FROM documents GROUP BY 1),
         |w AS (SELECT lang, n_docs, tokens,
         |        CAST(round(sqrt(1.0 * tokens), 4) AS DECIMAL(18, 4)) AS wgt
@@ -2070,7 +2069,7 @@ object CorpusOps {
         |          THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         |        CAST(sum(CASE WHEN $duckHash
         |          < CAST(round(r.rate * 1000000, 0) AS BIGINT)
-        |          THEN len(str_split(d.text, ' ')) ELSE 0 END) AS BIGINT)
+        |          THEN len(${duckWordList("d.text")}) ELSE 0 END) AS BIGINT)
         |          AS kept_tokens
         |      FROM documents d JOIN r USING (lang) GROUP BY 1)
         |SELECT r.lang, CAST(r.n_docs AS BIGINT) AS n_docs,
@@ -2127,7 +2126,7 @@ object CorpusOps {
       s"CAST(min(CASE WHEN cum >= CAST(ceil($p * n_docs) AS BIGINT) THEN n_words END) AS INT) AS $alias"
     Q.sql(
       "token_length_quantiles",
-      s"""WITH h AS (SELECT lang, len(str_split(text, ' ')) AS n_words
+      s"""WITH h AS (SELECT lang, len(${duckWordList()}) AS n_words
         |       FROM documents),
         |c AS (SELECT lang, n_words, count(*) AS cnt FROM h GROUP BY 1, 2),
         |t AS (SELECT lang, n_words, cnt,
@@ -2258,7 +2257,7 @@ object CorpusOps {
     * discipline). */
   val stopwordProfile: Q = Q.sql(
     "stopword_profile",
-    """WITH w AS (SELECT source, unnest(str_split(text, ' ')) AS word
+    s"""WITH w AS (SELECT source, unnest(${duckWordList()}) AS word
       |       FROM documents),
       |sw AS (SELECT source, word, CAST(count(*) AS BIGINT) AS c
       |       FROM w GROUP BY 1, 2),
@@ -2323,7 +2322,7 @@ object CorpusOps {
     * full count table. Exact BIGINT/BIGINT ratios rounded once. */
   val vocabCoverage: Q = Q.sql(
     "vocab_coverage",
-    s"""WITH w AS (SELECT lang, unnest(str_split(text, ' ')) AS term
+    s"""WITH w AS (SELECT lang, unnest(${duckWordList()}) AS term
        |       FROM documents),
        |lc AS (SELECT lang, term, CAST(count(*) AS BIGINT) AS c
        |       FROM w GROUP BY 1, 2),
@@ -2398,7 +2397,7 @@ object CorpusOps {
     * Ratios are exact BIGINT quotients rounded once. */
   val vocabOverlap: Q = Q.sql(
     "vocab_overlap",
-    """WITH lt AS (SELECT DISTINCT lang, unnest(str_split(text, ' ')) AS term
+    s"""WITH lt AS (SELECT DISTINCT lang, unnest(${duckWordList()}) AS term
       |       FROM documents),
       |n AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_types FROM lt GROUP BY 1),
       |p AS (SELECT a.lang AS lang_a, b.lang AS lang_b,
@@ -2724,10 +2723,10 @@ object CorpusOps {
     * basis points end-to-end — both engines bit-equal at any scale. */
   val curriculumOrder: Q = Q.sql(
     "curriculum_order",
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT doc_id, lang,
-      |    len(str_split(text, ' ')) AS n_words,
-      |    len(list_distinct(str_split(text, ' '))) AS n_distinct,
+      |    len(${duckWordList()}) AS n_words,
+      |    len(list_distinct(${duckWordList()})) AS n_distinct,
       |    substr(md5(text), 1, 8) AS order_key
       |  FROM documents),
       |s AS (SELECT doc_id, lang, n_words, order_key,
@@ -2878,7 +2877,7 @@ object CorpusOps {
     * order-independent), scaled to integer micro-bits. */
   val corpusDsir: Q = Q.sql(
     "corpus_dsir",
-    s"""WITH t AS (SELECT doc_id, lang, unnest(str_split(text, ' ')) AS term
+    s"""WITH t AS (SELECT doc_id, lang, unnest(${duckWordList()}) AS term
       |           FROM documents),
       |f AS (SELECT doc_id, lang, ${TextOps.duckWordHash("term")} % $DsirB AS b,
       |        count(*) AS c
@@ -2969,7 +2968,7 @@ object CorpusOps {
     * identical bit patterns in both engines. */
   val corpusDoremi: Q = Q.sql(
     "corpus_doremi",
-    s"""WITH t AS (SELECT lang, unnest(str_split(text, ' ')) AS term
+    s"""WITH t AS (SELECT lang, unnest(${duckWordList()}) AS term
       |           FROM documents),
       |tf AS (SELECT lang, term, count(*) AS c FROM t GROUP BY 1, 2),
       |gt AS (SELECT term, CAST(sum(c) AS BIGINT) AS ct FROM tf GROUP BY 1),
@@ -3088,7 +3087,7 @@ object CorpusOps {
       |  SELECT doc_id, text, n_words, n_distinct, word_chars, n_stop,
       |    CAST(CASE WHEN $passAllSql THEN 1 ELSE 0 END AS BIGINT) AS heur_pass
       |  FROM (SELECT doc_id, text, $duckQualityFeatures FROM documents)),
-      |t AS (SELECT doc_id, heur_pass, unnest(str_split(text, ' ')) AS term
+      |t AS (SELECT doc_id, heur_pass, unnest(${duckWordList()}) AS term
       |      FROM lab),
       |tf AS (SELECT doc_id, heur_pass,
       |        ${TextOps.duckWordHash("term")} % $NbB AS b, count(*) AS c

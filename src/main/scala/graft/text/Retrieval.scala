@@ -2,7 +2,7 @@ package graft.text
 
 import graft.Q
 import graft.Tables.{documents => docs}
-import graft.text.Tokens.{distinctTexts, duckGrams, duckWords, grams, words}
+import graft.text.Tokens.{distinctTexts, duckGrams, duckWordList, duckWords, grams, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -956,8 +956,8 @@ object Retrieval {
     def rakeCtes(src: String): String =
       s"""t AS (SELECT doc_id, w AS word, CAST(i AS BIGINT) AS pos,
       |    CASE WHEN w IN ('the', 'a', 'of') THEN 1 ELSE 0 END AS stop
-      |  FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS w,
-      |          generate_subscripts(str_split(text, ' '), 1) AS i
+      |  FROM (SELECT doc_id, unnest(${duckWordList()}) AS w,
+      |          generate_subscripts(${duckWordList()}, 1) AS i
       |        FROM $src)
       |  WHERE length(w) > 0),
       |nw AS (SELECT doc_id, word, pos,

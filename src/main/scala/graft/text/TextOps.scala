@@ -3,7 +3,7 @@ package graft.text
 import graft.Q
 import graft.Tables.{documents => docs}
 import graft.text.Tokens.{distinctTexts, duckDistinctTexts, duckGrams, duckShingleCtes,
-  duckWords, shingles, words}
+  duckWordList, duckWords, shingles, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -82,7 +82,7 @@ object TextOps {
   /** Sorted bag-of-words fingerprint — single definition shared by
     * dedup_bow and dedup_source_matrix (both dialects). */
   private val duckBowFp =
-    "md5(array_to_string(list_sort(list_distinct(str_split(text, ' '))), ' '))"
+    s"md5(array_to_string(list_sort(list_distinct(${duckWordList()})), ' '))"
   private def bowFp: org.apache.spark.sql.Column =
     md5(array_join(array_sort(array_distinct(words)), " "))
 
@@ -335,7 +335,7 @@ object TextOps {
   private val componentsCtesSql: String =
     s"""$jaccardPairsCtesSql,
        |bowf AS (SELECT doc_id,
-       |           md5(array_to_string(list_sort(list_distinct(str_split(text, ' '))), ' ')) AS fp
+       |           md5(array_to_string(list_sort(list_distinct(${duckWordList()})), ' ')) AS fp
        |         FROM documents),
        |bow_star AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS root
        |             FROM bowf),
@@ -407,7 +407,7 @@ object TextOps {
        |      FROM p2 JOIN szs2 sa ON p2.ga = sa.gid
        |             JOIN szs2 sb ON p2.gb = sb.gid),
        |bowf2 AS (SELECT gid,
-       |           md5(array_to_string(list_sort(list_distinct(str_split(text, ' '))), ' ')) AS fp
+       |           md5(array_to_string(list_sort(list_distinct(${duckWordList()})), ' ')) AS fp
        |         FROM grp),
        |bst2 AS (SELECT gid, min(gid) OVER (PARTITION BY fp) AS root FROM bowf2),
        |bedges2 AS (SELECT root AS a, gid AS b FROM bst2 WHERE gid <> root),
@@ -557,10 +557,10 @@ object TextOps {
     * practice, and never the full-feed-in-one-partition shape. */
   val dedupKeepBest: Q = {
     val tail =
-      """f AS (SELECT doc_id, n_chars,
-       |        len(str_split(text, ' ')) AS n_words,
-       |        len(list_distinct(str_split(text, ' '))) AS n_distinct_words,
-       |        len(list_filter(str_split(text, ' '), w -> w IN ('the', 'a'))) AS n_stop
+      s"""f AS (SELECT doc_id, n_chars,
+       |        len(${duckWordList()}) AS n_words,
+       |        len(list_distinct(${duckWordList()})) AS n_distinct_words,
+       |        len(list_filter(${duckWordList()}, w -> w IN ('the', 'a'))) AS n_stop
        |      FROM documents),
        |sc AS (SELECT doc_id, n_chars,
        |         round(((1.0 * n_distinct_words / n_words) + 1 - (1.0 * n_stop / n_words)) / 2, 4)
@@ -619,7 +619,7 @@ object TextOps {
     * partial-agg groupBy bounded at |sources|, 1-row total broadcast. */
   val dedupTokenInflation: Q = {
     val tail =
-      """tok AS (SELECT doc_id, source, len(str_split(text, ' ')) AS n_tok
+      s"""tok AS (SELECT doc_id, source, len(${duckWordList()}) AS n_tok
        |        FROM documents),
        |jti AS (SELECT tok.source, tok.n_tok,
        |        CASE WHEN comp.doc_id <> comp.component THEN 1 ELSE 0 END AS is_dup
@@ -719,7 +719,7 @@ object TextOps {
     * publish as exact micro-token BIGINTs, order-free. */
   val dedupSoftWeight: Q = {
     val tail =
-      """tok AS (SELECT doc_id, len(str_split(text, ' ')) AS n_tok
+      s"""tok AS (SELECT doc_id, len(${duckWordList()}) AS n_tok
        |        FROM documents),
        |jt AS (SELECT comp.component, comp.doc_id, tok.n_tok
        |       FROM tok JOIN comp ON tok.doc_id = comp.doc_id),
@@ -798,11 +798,11 @@ object TextOps {
     Q.sql(
       "dedup_onion",
       s"""WITH $jaccardPairsCtesSql,
-        |tok AS (SELECT doc_id, len(str_split(text, ' ')) AS n_tok FROM documents),
+        |tok AS (SELECT doc_id, len(${duckWordList()}) AS n_tok FROM documents),
         |fe AS (SELECT doc_id, md5(text) AS fp FROM documents),
         |fp96 AS (SELECT doc_id, md5(substr(text, 1, 96)) AS fp FROM documents),
         |fbow AS (SELECT doc_id,
-        |    md5(array_to_string(list_sort(list_distinct(str_split(text, ' '))), ' ')) AS fp
+        |    md5(array_to_string(list_sort(list_distinct(${duckWordList()})), ' ')) AS fp
         |  FROM documents),
         |de AS (SELECT doc_id FROM (SELECT doc_id,
         |         min(doc_id) OVER (PARTITION BY fp) AS r FROM fe) WHERE doc_id > r),
@@ -921,22 +921,33 @@ object TextOps {
     signaturesOf(docs(s, d).select("doc_id", "text"), withShingles)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-  /** (keep…, band, v) band rows of a signature frame: one row per
+  /** (keep…, band, bucket) band rows of a signature frame: one row per
     * signature component. Bands are 0-based positions here and 1-based
     * in the oracles — they are only ever join keys, and both sides of
     * every band join come from this one explode. */
   private def bandsOf(sigs: DataFrame, keep: Column*): DataFrame =
-    sigs.select(keep :+ posexplode(array(sigCols: _*)).as(Seq("band", "v")): _*)
+    sigs.select(keep :+ posexplode(array(sigCols: _*)).as(Seq("band", "bucket")): _*)
 
-  /** The LSH candidate pairs: distinct (ga, gb) of `id` values whose band
-    * rows collide on (band, v) and satisfy `pred(ga, gb)` — the one band
-    * self-join of the family (NULL signatures never collide). */
-  private def bandPairs(bands: DataFrame, id: String,
-      pred: (Column, Column) => Column): DataFrame =
-    bands.select(col(id).as("ga"), col("band"), col("v"))
-      .join(bands.select(col(id).as("gb"), col("band"), col("v")), Seq("band", "v"))
-      .filter(pred(col("ga"), col("gb")))
-      .select("ga", "gb").distinct()
+  /** The LSH candidate pairs: distinct (`a`, `b`) of `id` values whose
+    * band rows collide on (band, bucket) and satisfy `pred(a, b)` — the
+    * one band self-join of both planes, over MinHash bands ([[bandsOf]])
+    * and sign-LSH bands (`Similarity.signBands`) alike. NULL buckets
+    * never collide. */
+  private[graft] def bandPairs(bands: DataFrame, id: String,
+      pred: (Column, Column) => Column, a: String = "ga", b: String = "gb"): DataFrame =
+    bands.select(col(id).as(a), col("band"), col("bucket"))
+      .join(bands.select(col(id).as(b), col("band"), col("bucket")), Seq("band", "bucket"))
+      .filter(pred(col(a), col(b)))
+      .select(a, b).distinct()
+
+  /** DuckDB twin of [[bandPairs]]: the CTE `name`, with its column list
+    * (e.g. `cand(id_a, id_b)`), of the distinct `id` pairs of the band
+    * relation `from` that collide on (band, bucket) with `x.id op y.id`. */
+  private[graft] def duckBandPairs(name: String, from: String, id: String,
+      op: String): String =
+    s"""$name AS (SELECT DISTINCT x.$id, y.$id
+       |  FROM $from x JOIN $from y
+       |    ON x.band = y.band AND x.bucket = y.bucket AND x.$id $op y.$id)""".stripMargin
 
   /** Signature groups (sig1..sigk, ex_mult, ex_min): one row per DISTINCT
     * signature with its multiplicity and min doc id. Docs with the same
@@ -967,7 +978,7 @@ object TextOps {
     val incAll = incSigs.withColumn("igid",
       min("doc_id").over(Window.partitionBy(sigCols: _*)))
     val incBands = bandsOf(incAll.filter(col("doc_id") === col("igid")), col("igid"))
-    val gm = exBands.join(broadcast(incBands), Seq("band", "v"))
+    val gm = exBands.join(broadcast(incBands), Seq("band", "bucket"))
       .select(col("igid"), col("ex_min"), col("ex_mult")).distinct()
       .groupBy("igid")
       .agg(sum("ex_mult").cast("long").as("n_near_dups"),
@@ -998,7 +1009,7 @@ object TextOps {
     * signature relation `from`, keeping the `keep` select items. */
   private def duckBandsSql(keep: String, from: String): String =
     sigNames.zipWithIndex
-      .map { case (n, i) => s"SELECT $keep, ${i + 1} AS band, $n AS v FROM $from" }
+      .map { case (n, i) => s"SELECT $keep, ${i + 1} AS band, $n AS bucket FROM $from" }
       .mkString("\n  UNION ALL ")
 
   /** DuckDB count of equal signature components between `sa` and `sb`. */
@@ -1040,8 +1051,7 @@ object TextOps {
          |    md5(concat_ws('|', sig1, sig2, sig3, sig4)) AS gid
          |  FROM tsig GROUP BY 1, 2, 3, 4),
          |gb AS (${duckBandsSql("gid", "sg")}),
-         |gp AS (SELECT DISTINCT a.gid AS ga, b.gid AS gb2 FROM gb a JOIN gb b
-         |       ON a.band = b.band AND a.v = b.v AND a.gid <> b.gid),
+         |${duckBandPairs("gp(ga, gb2)", "gb", "gid", "<>")},
          |ext AS (SELECT gp.ga, CAST(sum(s.mult) AS BIGINT) AS ext
          |        FROM gp JOIN sg s ON s.gid = gp.gb2 GROUP BY 1),
          |nm AS (SELECT sg.gid,
@@ -1058,10 +1068,8 @@ object TextOps {
       "dedup_minhash",
       s"""WITH ${duckSigCtes()},
          |bands AS (${duckBandsSql("doc_id", "sig")}),
-         |m AS (SELECT a.doc_id, count(DISTINCT b.doc_id) AS nm
-         |      FROM bands a JOIN bands b
-         |        ON a.band = b.band AND a.v = b.v AND a.doc_id <> b.doc_id
-         |      GROUP BY a.doc_id)
+         |${duckBandPairs("p(doc_id, other_id)", "bands", "doc_id", "<>")},
+         |m AS (SELECT doc_id, count(*) AS nm FROM p GROUP BY doc_id)
          |SELECT sig.doc_id, sig1, sig2, sig3, sig4,
          |  coalesce(nm, 0) AS n_band_matches
          |FROM sig LEFT JOIN m ON sig.doc_id = m.doc_id
@@ -1158,9 +1166,7 @@ object TextOps {
        |     FROM sk JOIN gmm ON sk.doc_id = gmm.doc_id
        |     WHERE sk.doc_id = gmm.gid),
        |gbands AS (${duckBandsSql("gid", "gsd")}),
-       |gpairs AS (SELECT DISTINCT a.gid AS ga, b.gid AS gb
-       |          FROM gbands a JOIN gbands b
-       |            ON a.band = b.band AND a.v = b.v AND a.gid < b.gid),
+       |${duckBandPairs("gpairs(ga, gb)", "gbands", "gid", "<")},
        |gj AS (SELECT ga, gb,
        |        ($duckSigMatchSql) AS n_sig_match,
        |        len(list_intersect(sa.s3d, sb.s3d)) AS common,
@@ -1182,9 +1188,7 @@ object TextOps {
   private lazy val minhashNaiveHeadSql: String =
     s"""${duckSigCtes()},
        |bands AS (${duckBandsSql("doc_id", "sig")}),
-       |pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |          FROM bands a JOIN bands b
-       |            ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id),
+       |${duckBandPairs("pairs(doc_a, doc_b)", "bands", "doc_id", "<")},
        |sd AS (SELECT doc_id, list_distinct(s3) AS s3d, ${sigNames.mkString(", ")}
        |       FROM sig),
        |j AS (SELECT doc_a, doc_b,
@@ -1436,7 +1440,7 @@ object TextOps {
     * side's band table broadcasts — a daily batch is tiny next to a
     * 100 TB corpus — so the corpus band table is scanned once and never
     * shuffles for the probe. (For a batch too big to broadcast, drop the
-    * hint and the same plan shuffles both sides on (band, v) — the
+    * hint and the same plan shuffles both sides on (band, bucket) — the
     * decision AQE already owns.) The LEFT join back to the batch keeps
     * no-match docs in the report with verdict 'admit'. */
   val dedupIncremental: Q = {
@@ -1461,7 +1465,7 @@ object TextOps {
          |gm AS (SELECT igid, CAST(sum(ex_mult) AS BIGINT) AS n_near_dups,
          |         min(ex_min) AS first_match
          |       FROM (SELECT DISTINCT ib.igid, eb.ex_min, eb.ex_mult
-         |             FROM ib JOIN eb USING (band, v))
+         |             FROM ib JOIN eb USING (band, bucket))
          |       GROUP BY 1),
          |inc AS (SELECT doc_id,
          |          min(doc_id) OVER (PARTITION BY ${sigNames.mkString(", ")}) AS igid
@@ -1476,11 +1480,11 @@ object TextOps {
       "dedup_incremental",
       s"""WITH ${duckSigCtes()},
          |bands AS (${duckBandsSql("doc_id", "sig")}),
-         |ib AS (SELECT doc_id AS inc_id, band, v FROM bands WHERE doc_id % 10 = 0),
-         |eb AS (SELECT doc_id AS ex_id, band, v FROM bands WHERE doc_id % 10 <> 0),
+         |ib AS (SELECT doc_id AS inc_id, band, bucket FROM bands WHERE doc_id % 10 = 0),
+         |eb AS (SELECT doc_id AS ex_id, band, bucket FROM bands WHERE doc_id % 10 <> 0),
          |m AS (SELECT inc_id, count(DISTINCT ex_id) AS n_near_dups,
          |        min(ex_id) AS first_match
-         |      FROM ib JOIN eb USING (band, v) GROUP BY 1),
+         |      FROM ib JOIN eb USING (band, bucket) GROUP BY 1),
          |i AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0)
          |SELECT i.doc_id, coalesce(n_near_dups, 0) AS n_near_dups, first_match,
          |  CASE WHEN coalesce(n_near_dups, 0) >= 1 THEN 'near_dup'
@@ -1518,7 +1522,7 @@ object TextOps {
       .mkString(" + ")
     Q.sql(
       "dedup_simhash",
-      s"""WITH w AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS word
+      s"""WITH w AS (SELECT doc_id, unnest(list_distinct(${duckWordList()})) AS word
          |           FROM documents),
          |h AS (SELECT doc_id, substr(md5(word), 1, 4) AS h4 FROM w),
          |v AS (SELECT doc_id, $duckVotes FROM h GROUP BY doc_id),
@@ -1555,11 +1559,11 @@ object TextOps {
   /** Stopword-profile language ID vs the labeled lang (confusion matrix). */
   val langId: Q = Q.sql(
     "lang_id",
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT lang,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'the')) AS n_the,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'data')) AS n_data,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'spark')) AS n_spark
+      |    len(list_filter(${duckWordList()}, w -> w = 'the')) AS n_the,
+      |    len(list_filter(${duckWordList()}, w -> w = 'data')) AS n_data,
+      |    len(list_filter(${duckWordList()}, w -> w = 'spark')) AS n_spark
       |  FROM documents),
       |p AS (SELECT lang,
       |        CASE WHEN n_the >= n_data AND n_the >= n_spark THEN 'en'
@@ -1604,11 +1608,11 @@ object TextOps {
     * drift from lang_id's prediction rule. */
   val langIdMetrics: Q = Q.sql(
     "lang_id_metrics",
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT lang,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'the')) AS n_the,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'data')) AS n_data,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'spark')) AS n_spark
+      |    len(list_filter(${duckWordList()}, w -> w = 'the')) AS n_the,
+      |    len(list_filter(${duckWordList()}, w -> w = 'data')) AS n_data,
+      |    len(list_filter(${duckWordList()}, w -> w = 'spark')) AS n_spark
       |  FROM documents),
       |p AS (SELECT lang,
       |        CASE WHEN n_the >= n_data AND n_the >= n_spark THEN 'en'
@@ -1652,12 +1656,12 @@ object TextOps {
   /** Per-document quality profile (type-token ratio, stopword ratio, …). */
   val textQuality: Q = Q.sql(
     "text_quality",
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT doc_id, n_chars,
-      |    len(str_split(text, ' ')) AS n_words,
-      |    len(list_distinct(str_split(text, ' '))) AS n_distinct_words,
+      |    len(${duckWordList()}) AS n_words,
+      |    len(list_distinct(${duckWordList()})) AS n_distinct_words,
       |    length(replace(text, ' ', '')) AS word_chars,
-      |    len(list_filter(str_split(text, ' '), w -> w IN ('the', 'a'))) AS n_stop
+      |    len(list_filter(${duckWordList()}, w -> w IN ('the', 'a'))) AS n_stop
       |  FROM documents)
       |SELECT doc_id, n_chars, n_words, n_distinct_words,
       |  round(1.0 * word_chars / n_words, 4) AS avg_word_len,
@@ -1715,10 +1719,10 @@ object TextOps {
     Q.sql(
       "quality_blocklist",
       s"""WITH f AS (
-         |  SELECT doc_id, len(str_split(text, ' ')) AS n_words,
-         |    len(list_filter(str_split(text, ' '),
+         |  SELECT doc_id, len(${duckWordList()}) AS n_words,
+         |    len(list_filter(${duckWordList()},
          |        w -> w IN ($duckList))) AS n_hits,
-         |    len(list_distinct(list_filter(str_split(text, ' '),
+         |    len(list_distinct(list_filter(${duckWordList()},
          |        w -> w IN ($duckList)))) AS n_distinct_hits
          |  FROM documents)
          |SELECT doc_id, n_words, n_hits, n_distinct_hits,
@@ -1764,12 +1768,12 @@ object TextOps {
     * engines cannot disagree at a bucket edge. */
   val docReadability: Q = Q.sql(
     "doc_readability",
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT doc_id,
-      |    len(str_split(text, ' ')) AS n_words,
+      |    len(${duckWordList()}) AS n_words,
       |    greatest(1, len(list_filter(string_split_regex(text, '[.!?]+'),
       |        s -> trim(s) <> ''))) AS n_sentences,
-      |    CAST(list_sum(list_transform(str_split(text, ' '),
+      |    CAST(list_sum(list_transform(${duckWordList()},
       |        w -> greatest(1, len(list_filter(
       |          string_split_regex(w, '[^aeiouy]+'), x -> x <> '')))))
       |      AS BIGINT) AS n_syllables
@@ -1865,11 +1869,11 @@ object TextOps {
   /** Whitespace + chars/4 BPE-approximation token counts. */
   val tokenCount: Q = Q.sql(
     "token_count",
-    """SELECT doc_id,
-      |  len(str_split(text, ' ')) AS n_ws_tokens,
+    s"""SELECT doc_id,
+      |  len(${duckWordList()}) AS n_ws_tokens,
       |  n_chars,
       |  (n_chars + 3) // 4 AS approx_bpe_tokens,
-      |  round(1.0 * n_chars / len(str_split(text, ' ')), 4) AS chars_per_token
+      |  round(1.0 * n_chars / len(${duckWordList()}), 4) AS chars_per_token
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
     docs(s, d)
       .select(col("doc_id"),
@@ -2007,9 +2011,7 @@ object TextOps {
          |         round(1.0 * common / (sa.sz + sb.sz - common), 4) AS jacc
          |       FROM p JOIN szs sa ON p.ga = sa.gid
          |              JOIN szs sb ON p.gb = sb.gid),
-         |detg AS (SELECT DISTINCT a.gid AS ga, b.gid AS gb
-         |         FROM bands a JOIN bands b
-         |           ON a.band = b.band AND a.v = b.v AND a.gid < b.gid),
+         |${duckBandPairs("detg(ga, gb)", "bands", "gid", "<")},
          |u0 AS (SELECT coalesce(jg.ga, detg.ga) AS ga,
          |         coalesce(jg.gb, detg.gb) AS gb,
          |         coalesce(jg.jacc, 0) AS jacc,
@@ -2039,9 +2041,7 @@ object TextOps {
          |ld AS (SELECT doc_id, ${duckGrams(3)} AS s3 FROM lw),
          |lsig AS (SELECT doc_id, ${duckSigExprs("s3")} FROM ld),
          |bands AS (${duckBandsSql("doc_id", "lsig")}),
-         |det AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |        FROM bands a JOIN bands b
-         |          ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id),
+         |${duckBandPairs("det(doc_a, doc_b)", "bands", "doc_id", "<")},
          |u AS (SELECT coalesce(j.jacc, 0) AS jacc,
          |        CASE WHEN det.doc_a IS NULL THEN 0 ELSE 1 END AS det
          |      FROM j FULL JOIN det
@@ -2145,11 +2145,11 @@ object TextOps {
     * any corpus size; output bounded by the disagreement count. */
   val docLangOutliers: Q = Q.sql(
     "doc_lang_outliers",
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT doc_id, lang, source,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'the')) AS n_the,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'data')) AS n_data,
-      |    len(list_filter(str_split(text, ' '), w -> w = 'spark')) AS n_spark
+      |    len(list_filter(${duckWordList()}, w -> w = 'the')) AS n_the,
+      |    len(list_filter(${duckWordList()}, w -> w = 'data')) AS n_data,
+      |    len(list_filter(${duckWordList()}, w -> w = 'spark')) AS n_spark
       |  FROM documents),
       |p AS (SELECT doc_id, lang, source, n_the, n_data, n_spark,
       |        CASE WHEN n_the >= n_data AND n_the >= n_spark THEN 'en'
@@ -2303,7 +2303,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct(col("doc_b")).as("n_docs_dropped"))
     val n = docs(s, d).agg(count(lit(1)).as("n_docs"))
-    broadcast(thDf).join(agg, Seq("threshold"), "left")
+    thDf.join(agg, Seq("threshold"), "left")
       .crossJoin(broadcast(n))
       .select(col("threshold"),
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
@@ -2322,7 +2322,7 @@ object TextOps {
     * bands see; `contaminated` flags ≥2 shared bands (est ≥ 0.5).
     *
     * Scale: the benchmark side is tiny by construction, so its band rows
-    * BROADCAST and the probe is a map-side hash equi-join on (band, v) —
+    * BROADCAST and the probe is a map-side hash equi-join on (band, bucket) —
     * the corpus is scanned once and never shuffles for the probe (the
     * decontaminate posture, on the minhash plane). Band rows come from
     * the same graft_minhash_sig machinery as dedup_minhash — one
@@ -2331,7 +2331,7 @@ object TextOps {
     // Collapsed scale twin: the SQL mirror of the Spark side's
     // distinct-content collapse. The naive oracle's corpus-band × bench-
     // band join is replication-quadratic (twins stand on both sides of
-    // every (band, v) collision), so the 1000x gate needs the band join
+    // every (band, bucket) collision), so the 1000x gate needs the band join
     // at content level: signatures once per distinct text, bench
     // multiplicity and min bench id carried on the content group, the
     // per-doc report expanded by the linear membership join.
@@ -2342,11 +2342,11 @@ object TextOps {
          |${duckShingleCtes("tk", "grp")},
          |tsig AS MATERIALIZED (SELECT tk, ${duckSigExprs("s3")} FROM docs),
          |tb AS (${duckBandsSql("tk", "tsig")}),
-         |bb AS (SELECT t.tk AS btk, g.m_bench, g.min_bench_id, t.band, t.v
+         |bb AS (SELECT t.tk AS btk, g.m_bench, g.min_bench_id, t.band, t.bucket
          |       FROM tb t JOIN grp g ON g.tk = t.tk WHERE g.m_bench >= 1),
          |hitg AS (SELECT c.tk, b.btk, b.m_bench, b.min_bench_id,
          |           count(*) AS shared_bands
-         |         FROM tb c JOIN bb b ON c.band = b.band AND c.v = b.v
+         |         FROM tb c JOIN bb b ON c.band = b.band AND c.bucket = b.bucket
          |         GROUP BY 1, 2, 3, 4),
          |bestg AS (SELECT tk, CAST(sum(m_bench) AS BIGINT) AS n_bench_hits,
          |            CAST(max(shared_bands) AS BIGINT) AS max_shared
@@ -2367,10 +2367,10 @@ object TextOps {
       "decontaminate_fuzzy",
       s"""WITH ${duckSigCtes()},
          |bands AS (${duckBandsSql("doc_id", "sig")}),
-         |bb AS (SELECT doc_id AS bench_id, band, v FROM bands WHERE doc_id % 29 = 0),
-         |cb AS (SELECT doc_id, band, v FROM bands WHERE doc_id % 29 <> 0),
+         |bb AS (SELECT doc_id AS bench_id, band, bucket FROM bands WHERE doc_id % 29 = 0),
+         |cb AS (SELECT doc_id, band, bucket FROM bands WHERE doc_id % 29 <> 0),
          |hit AS (SELECT cb.doc_id, bb.bench_id, count(*) AS shared_bands
-         |        FROM cb JOIN bb ON cb.band = bb.band AND cb.v = bb.v
+         |        FROM cb JOIN bb ON cb.band = bb.band AND cb.bucket = bb.bucket
          |        GROUP BY 1, 2),
          |best AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
          |           CAST(max(shared_bands) AS BIGINT) AS max_shared
@@ -2386,7 +2386,7 @@ object TextOps {
          |ORDER BY b.doc_id""".stripMargin,
       scaleOracle) { (s, d) =>
       // Replication-quadratic fix (round-10 100x sweep: 32 s / 20x): band
-      // collisions ran corpus DOC × bench DOC — b·c rows per (band, v)
+      // collisions ran corpus DOC × bench DOC — b·c rows per (band, bucket)
       // under twinning. Signatures are pure text functions, so the
       // collision graph now runs over DISTINCT CONTENT: each bench
       // content carries its bench-twin multiplicity and min bench id
@@ -2403,8 +2403,8 @@ object TextOps {
         .join(meta.filter(col("m_bench") >= 1)
           .select(col("tkey").as("btk"), col("m_bench"), col("min_bench_id")),
           col("tkey") === col("btk"))
-        .select(col("btk"), col("m_bench"), col("min_bench_id"), col("band"), col("v"))
-      val hitsG = bands.join(bench, Seq("band", "v"))
+        .select(col("btk"), col("m_bench"), col("min_bench_id"), col("band"), col("bucket"))
+      val hitsG = bands.join(bench, Seq("band", "bucket"))
         .groupBy("tkey", "btk", "m_bench", "min_bench_id")
         .agg(count(lit(1)).as("shared_bands"))
       // ONE aggregation carries the multiplicity-weighted hit count and
@@ -2472,9 +2472,7 @@ object TextOps {
          |docs AS (SELECT doc_id, ${duckGrams(3)} AS s3 FROM w),
          |sig AS (SELECT doc_id, s3, ${duckSigExprs("s3")} FROM docs),
          |tb AS ($duckBands),
-         |tp AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |       FROM tb x JOIN tb y
-         |         ON x.band = y.band AND x.v = y.v AND x.doc_id <= y.doc_id),
+         |${duckBandPairs("tp(a, b)", "tb", "doc_id", "<=")},
          |e AS (SELECT gid AS vec_id, emb FROM grp),
          |${graft.vector.Similarity.signBandsSql("e",
               // count(*) over ALL embeddings — exactly what the Spark
@@ -2483,10 +2481,7 @@ object TextOps {
               // with doc_ids, changing bucket geometry only at scales
               // where the naive oracle no longer runs
               "n1 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings)")},
-         |ec AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-         |       FROM bands x JOIN bands y
-         |         ON x.band = y.band AND x.bucket = y.bucket
-         |            AND x.vec_id <= y.vec_id),
+         |${duckBandPairs("ec(a, b)", "bands", "vec_id", "<=")},
          |ep AS (SELECT ec.a, ec.b
          |       FROM ec JOIN e ea ON ea.vec_id = ec.a
          |               JOIN e eb2 ON eb2.vec_id = ec.b
@@ -2518,16 +2513,11 @@ object TextOps {
       "dedup_plane_agreement",
       s"""WITH ${duckSigCtes("documents WHERE doc_id IN (SELECT vec_id FROM embeddings)")},
          |tb AS ($duckBands),
-         |tp AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |       FROM tb x JOIN tb y
-         |         ON x.band = y.band AND x.v = y.v AND x.doc_id < y.doc_id),
+         |${duckBandPairs("tp(a, b)", "tb", "doc_id", "<")},
          |${Similarity.duckEmb()},
          |pe AS (SELECT vec_id, emb FROM e WHERE vec_id IN (SELECT doc_id FROM documents)),
          |${Similarity.signBandsSql("pe", "n1 AS (SELECT count(*) AS n FROM e)")},
-         |ec AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-         |       FROM bands x JOIN bands y
-         |         ON x.band = y.band AND x.bucket = y.bucket
-         |            AND x.vec_id < y.vec_id),
+         |${duckBandPairs("ec(a, b)", "bands", "vec_id", "<")},
          |ep AS (SELECT ec.a, ec.b
          |       FROM ec JOIN e ea ON ea.vec_id = ec.a
          |               JOIN e eb2 ON eb2.vec_id = ec.b
@@ -2585,11 +2575,7 @@ object TextOps {
       val bands = Similarity.signBands(
         rep.select(col("gid").as("vec_id"), col("embedding")),
         countFrom = Some(e))
-      val ec = bands.select(col("vec_id").as("a"), col("band"), col("bucket"))
-        .join(bands.select(col("vec_id").as("b"), col("band"), col("bucket")),
-          Seq("band", "bucket"))
-        .filter(col("a") <= col("b"))
-        .select("a", "b").distinct()
+      val ec = bandPairs(bands, "vec_id", _ <= _, "a", "b")
       val ea = rep.select(col("gid").as("a"), col("embedding").as("ea"),
         col("m").as("ma"))
       val eb = rep.select(col("gid").as("b"), col("embedding").as("eb"),

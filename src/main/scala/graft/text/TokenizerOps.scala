@@ -2,7 +2,7 @@ package graft.text
 
 import graft.Q
 import graft.Tables.{documents => docs}
-import graft.text.Tokens.words
+import graft.text.Tokens.{duckWordList, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -74,9 +74,9 @@ object TokenizerOps {
     * once at the output edge. */
   val tokFertility: Q = Q.sql(
     "tok_fertility",
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT lang, source, n_chars,
-      |    len(str_split(text, ' ')) AS n_words,
+      |    len(${duckWordList()}) AS n_words,
       |    len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_tokens
       |  FROM documents)
       |SELECT lang, source, count(*) AS n_docs,
@@ -326,7 +326,7 @@ object TokenizerOps {
         |END""".stripMargin
     Q.sql(
       "tok_wordpiece",
-      s"""WITH t AS (SELECT unnest(str_split(text, ' ')) AS word FROM documents),
+      s"""WITH t AS (SELECT unnest(${duckWordList()}) AS word FROM documents),
         |wf AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS freq,
         |    length(word) AS len
         |  FROM t WHERE length(word) > 0 GROUP BY 1),

@@ -50,15 +50,17 @@ private[graft] object Tokens {
   // ---------------------------------------------------------- words --
 
   /** The word stream of `text`: split on single spaces, so empty words
-    * survive between double spaces and an empty text is one empty word
-    * (DuckDB twin: `str_split(text, ' ')`). */
+    * survive between double spaces and an empty text is one empty word. */
   val words: Column = split(col("text"), " ")
 
-  /** DuckDB twin of [[words]]: the CTE `name` over `from` with the `keep`
-    * select items and the word list `ws`. */
+  /** DuckDB twin of [[words]]: the word list of the text expression `text`. */
+  def duckWordList(text: String = "text"): String = s"str_split($text, ' ')"
+
+  /** The CTE `name` over `from` with the `keep` select items and the word
+    * list `ws` ([[duckWordList]]). */
   def duckWords(keep: String = "doc_id", from: String = "documents",
       name: String = "w"): String =
-    s"$name AS (SELECT ${if (keep.isEmpty) "" else s"$keep, "}str_split(text, ' ') AS ws FROM $from)"
+    s"$name AS (SELECT ${if (keep.isEmpty) "" else s"$keep, "}${duckWordList()} AS ws FROM $from)"
 
   // -------------------------------------------------------- n-grams --
 

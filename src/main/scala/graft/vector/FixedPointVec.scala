@@ -31,8 +31,6 @@ import org.apache.spark.sql.types._
   * a visible data bug).
   */
 object FixedPointVec {
-  final val Scale6 = 1000000L
-
   /** v is an exact scale-6 decimal by contract; recover its scaled long.
     * round() (not cast) absorbs the ≤½-ulp binary representation error. */
   @inline def toLong6(v: Double): Long = Math.round(v * 1e6)

@@ -2,6 +2,7 @@ package graft.vector
 
 import graft.{Det, GraftFunctions, Q, Tables}
 import graft.Tables.{embeddings => emb}
+import graft.text.TextOps.{bandPairs, duckBandPairs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -404,6 +405,27 @@ object Similarity {
       .select("vec_id", "band", "bucket")
   }
 
+  /** (a, b, cos_sim) of each band-candidate pair of `pairs` (columns a,
+    * b), both ids looked up as `id` in `vecs` — the scoring step after
+    * every sign-LSH band join. */
+  private def pairCosines(pairs: DataFrame, vecs: DataFrame, id: String): DataFrame = {
+    val Array(a, b) = pairs.columns
+    pairs
+      .join(vecs.select(col(id).as(a), col("embedding").as("ea")), Seq(a))
+      .join(vecs.select(col(id).as(b), col("embedding").as("eb")), Seq(b))
+      .select(col(a), col(b), cosR(col("ea"), col("eb")).as("cos_sim"))
+  }
+
+  /** DuckDB twin of [[pairCosines]]: the CTE `name` of the (a, b) pairs
+    * of `pairs` with their rounded cosine `cos_sim`, both ids looked up
+    * in `vecs` (vec_id, emb). */
+  private def duckPairCosines(name: String, pairs: String, a: String, b: String,
+      vecs: String = "e"): String =
+    s"""$name AS (SELECT $pairs.$a, $pairs.$b,
+       |    round(list_cosine_similarity(ea.emb, eb2.emb), 4) AS cos_sim
+       |  FROM $pairs JOIN $vecs ea ON ea.vec_id = $pairs.$a
+       |    JOIN $vecs eb2 ON eb2.vec_id = $pairs.$b)""".stripMargin
+
   /** Oracle CTE chain (n1, eb, bands) shared by the sign-LSH consumers.
     * `countExpr` overrides where the adaptive bit width's n comes from —
     * the SQL twin of [[signBands]]'s countFrom (a collapsed twin banding
@@ -427,26 +449,12 @@ object Similarity {
       "dedup_embedding",
       s"""WITH ${duckEmb()},
         |${signBandsSql()},
-        |cand AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bucket = y.bucket
-        |              AND x.vec_id < y.vec_id)
-        |SELECT id_a, id_b,
-        |  round(list_cosine_similarity(ea.emb, eb2.emb), 4) AS cos_sim
-        |FROM cand JOIN e ea ON ea.vec_id = id_a JOIN e eb2 ON eb2.vec_id = id_b
-        |WHERE round(list_cosine_similarity(ea.emb, eb2.emb), 4) >= 0.35
+        |${duckBandPairs("cand(id_a, id_b)", "bands", "vec_id", "<")},
+        |${duckPairCosines("sc", "cand", "id_a", "id_b")}
+        |SELECT id_a, id_b, cos_sim FROM sc WHERE cos_sim >= 0.35
         |ORDER BY cos_sim DESC, id_a, id_b""".stripMargin) { (s, d) =>
       val e = emb(s, d)
-      val bands = signBands(e)
-      val cand = bands.select(col("vec_id").as("id_a"), col("band"), col("bucket"))
-        .join(bands.select(col("vec_id").as("id_b"), col("band"), col("bucket")),
-          Seq("band", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b").distinct()
-      cand
-        .join(e.select(col("vec_id").as("id_a"), col("embedding").as("ea")), Seq("id_a"))
-        .join(e.select(col("vec_id").as("id_b"), col("embedding").as("eb")), Seq("id_b"))
-        .select(col("id_a"), col("id_b"), cosR(col("ea"), col("eb")).as("cos_sim"))
+      pairCosines(bandPairs(signBands(e), "vec_id", _ < _, "id_a", "id_b"), e, "vec_id")
         .filter(col("cos_sim") >= 0.35)
         .orderBy(col("cos_sim").desc, col("id_a"), col("id_b"))
     }
@@ -2119,15 +2127,7 @@ object Similarity {
     val bands = signBands(
       reps.select(col("gid").as("vec_id"), col("embedding")),
       countFrom = Some(e))
-    val gcand = bands.select(col("vec_id").as("gsrc"), col("band"), col("bucket"))
-      .join(bands.select(col("vec_id").as("gdst"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("gsrc") =!= col("gdst"))
-      .select("gsrc", "gdst").distinct()
-    val gcos = gcand
-      .join(reps.select(col("gid").as("gsrc"), col("embedding").as("se")), Seq("gsrc"))
-      .join(reps.select(col("gid").as("gdst"), col("embedding").as("de")), Seq("gdst"))
-      .select(col("gsrc"), col("gdst"), cosR(col("se"), col("de")).as("cos_sim"))
+    val gcos = pairCosines(bandPairs(bands, "vec_id", _ =!= _, "gsrc", "gdst"), reps, "gid")
     // own-group pool entries carry cosR(v, v) — not a 1.0 literal — so a
     // degenerate vector (NaN cosine) ranks exactly as it does in the
     // naive per-pair formulation
@@ -2168,14 +2168,8 @@ object Similarity {
        |  FROM e),
        |repse AS MATERIALIZED (SELECT gid AS vec_id, emb FROM mem WHERE rk = 1),
        |${signBandsSql("repse", "n1 AS (SELECT count(*) AS n FROM e)")},
-       |gcand AS (SELECT DISTINCT x.vec_id AS gsrc, y.vec_id AS gdst
-       |          FROM bands x JOIN bands y
-       |            ON x.band = y.band AND x.bucket = y.bucket
-       |               AND x.vec_id <> y.vec_id),
-       |gcos AS (SELECT gsrc, gdst,
-       |           round(list_cosine_similarity(ra.emb, rb.emb), 4) AS cos_sim
-       |         FROM gcand JOIN repse ra ON ra.vec_id = gsrc
-       |                    JOIN repse rb ON rb.vec_id = gdst),
+       |${duckBandPairs("gcand(gsrc, gdst)", "bands", "vec_id", "<>")},
+       |${duckPairCosines("gcos", "gcand", "gsrc", "gdst", "repse")},
        |own AS (SELECT gid, vec_id AS cand_id,
        |          round(list_cosine_similarity(emb, emb), 4) AS cos_sim
        |        FROM mem WHERE rk <= 4),
@@ -2193,14 +2187,8 @@ object Similarity {
     "ann_knn_graph",
     s"""WITH ${duckEmb()},
        |${signBandsSql()},
-       |cand AS (SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
-       |         FROM bands x JOIN bands y
-       |           ON x.band = y.band AND x.bucket = y.bucket
-       |              AND x.vec_id <> y.vec_id),
-       |sc AS (SELECT cand.src, cand.dst,
-       |         round(list_cosine_similarity(ea.emb, eb2.emb), 4) AS cos_sim
-       |       FROM cand JOIN e ea ON ea.vec_id = cand.src
-       |                 JOIN e eb2 ON eb2.vec_id = cand.dst),
+       |${duckBandPairs("cand(src, dst)", "bands", "vec_id", "<>")},
+       |${duckPairCosines("sc", "cand", "src", "dst")},
        |k AS (SELECT src, dst, cos_sim FROM (
        |        SELECT *, row_number() OVER (
        |          PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
@@ -2299,14 +2287,8 @@ object Similarity {
     "emb_hubness",
     s"""WITH ${duckEmb()},
        |${signBandsSql()},
-       |cand AS (SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
-       |         FROM bands x JOIN bands y
-       |           ON x.band = y.band AND x.bucket = y.bucket
-       |              AND x.vec_id <> y.vec_id),
-       |sc AS (SELECT cand.src, cand.dst,
-       |         round(list_cosine_similarity(ea.emb, eb2.emb), 4) AS cos_sim
-       |       FROM cand JOIN e ea ON ea.vec_id = cand.src
-       |                 JOIN e eb2 ON eb2.vec_id = cand.dst),
+       |${duckBandPairs("cand(src, dst)", "bands", "vec_id", "<>")},
+       |${duckPairCosines("sc", "cand", "src", "dst")},
        |k AS (SELECT src, dst FROM (
        |        SELECT *, row_number() OVER (
        |          PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
@@ -2545,14 +2527,8 @@ object Similarity {
     "emb_label_vote",
     s"""WITH ${duckEmb("vec_id, label")},
        |${signBandsSql()},
-       |cand AS (SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
-       |         FROM bands x JOIN bands y
-       |           ON x.band = y.band AND x.bucket = y.bucket
-       |              AND x.vec_id <> y.vec_id),
-       |sc AS (SELECT cand.src, cand.dst,
-       |         round(list_cosine_similarity(ea.emb, eb2.emb), 4) AS cos_sim
-       |       FROM cand JOIN e ea ON ea.vec_id = cand.src
-       |                 JOIN e eb2 ON eb2.vec_id = cand.dst),
+       |${duckBandPairs("cand(src, dst)", "bands", "vec_id", "<>")},
+       |${duckPairCosines("sc", "cand", "src", "dst")},
        |k AS (SELECT src, dst FROM (
        |        SELECT *, row_number() OVER (
        |          PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
@@ -2830,8 +2806,7 @@ object Similarity {
     val sp = labelCentroids(emb(s, d)).select(col("clabel").as("cell"))
     val t = a.agg(sum("n_vecs").cast("long").as("tot"))
     val tq = qt.agg(sum("n_queries").cast("long").as("totq"))
-    broadcast(sp)
-      .join(a, Seq("cell"), "left").join(qt, Seq("cell"), "left")
+    sp.join(a, Seq("cell"), "left").join(qt, Seq("cell"), "left")
       .select(col("cell"),
         coalesce(col("n_vecs"), lit(0L)).as("n_vecs"),
         coalesce(col("n_queries"), lit(0L)).as("n_queries"))
@@ -3113,14 +3088,8 @@ object Similarity {
         |e AS MATERIALIZED (SELECT min(vec_id) AS vec_id, emb
         |     FROM e0 WHERE vec_id >= 10 GROUP BY emb),
         |${signBandsSql("e")},
-        |cand AS (SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bucket = y.bucket
-        |              AND x.vec_id <> y.vec_id),
-        |sc AS (SELECT cand.src, cand.dst,
-        |         round(list_cosine_similarity(ea.emb, eb2.emb), 4) AS cos_sim
-        |       FROM cand JOIN e ea ON ea.vec_id = cand.src
-        |                 JOIN e eb2 ON eb2.vec_id = cand.dst),
+        |${duckBandPairs("cand(src, dst)", "bands", "vec_id", "<>")},
+        |${duckPairCosines("sc", "cand", "src", "dst")},
         |k AS MATERIALIZED (SELECT src, dst FROM (
         |       SELECT *, row_number() OVER (
         |         PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
@@ -3156,17 +3125,9 @@ object Similarity {
         .groupBy("embedding").agg(min("vec_id").as("vec_id"))
         .select(col("vec_id"), col("embedding"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val bands = signBands(reps)
-      val cand = bands.select(col("vec_id").as("src"), col("band"), col("bucket"))
-        .join(bands.select(col("vec_id").as("dst"), col("band"), col("bucket")),
-          Seq("band", "bucket"))
-        .filter(col("src") =!= col("dst"))
-        .select("src", "dst").distinct()
       val rankW = Window.partitionBy("src").orderBy(col("cos_sim").desc, col("dst"))
-      val k = cand
-        .join(reps.select(col("vec_id").as("src"), col("embedding").as("se")), Seq("src"))
-        .join(reps.select(col("vec_id").as("dst"), col("embedding").as("de")), Seq("dst"))
-        .select(col("src"), col("dst"), cosR(col("se"), col("de")).as("cos_sim"))
+      val k = pairCosines(bandPairs(signBands(reps), "vec_id", _ =!= _, "src", "dst"),
+          reps, "vec_id")
         .withColumn("rn", row_number().over(rankW))
         .filter(col("rn") <= 8)
         .select("src", "dst")

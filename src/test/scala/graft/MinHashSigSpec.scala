@@ -68,4 +68,45 @@ class MinHashSigSpec extends AnyFunSuite {
       MinHashSig.hash32(org.apache.spark.unsafe.types.UTF8String.fromString(w)))
     assert(viaSql.toSeq === viaNative)
   }
+
+  test("bandPairs: <, <=, <> over MinHash and sign-LSH bands; a pair once; NULL never collides") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    // MinHash-shaped (gid, band 0-3, bucket): 1 and 2 collide in bands 0
+    // and 2, 1 and 3 in band 3; 4 and 5 carry only NULL buckets
+    val sigs = Seq[(Long, Seq[Option[Long]])](
+      1L -> Seq(Some(10L), Some(20L), Some(30L), Some(40L)),
+      2L -> Seq(Some(10L), Some(21L), Some(30L), Some(41L)),
+      3L -> Seq(Some(12L), Some(22L), Some(32L), Some(40L)),
+      4L -> Seq(None, None, None, None),
+      5L -> Seq(None, None, None, None))
+    val minhash = sigs.flatMap { case (g, bs) =>
+      bs.zipWithIndex.map { case (b, i) => (g, i, b) } }.toDF("gid", "band", "bucket")
+    // sign-LSH-shaped (vec_id, band 1-2, bucket): 1 and 2 collide in both
+    // bands, 3 and 4 in band 1; 5 and 6 carry only NULL buckets
+    val signLsh = Seq[(Long, Int, Option[Long])](
+      (1L, 1, Some(5L)), (1L, 2, Some(6L)), (2L, 1, Some(5L)), (2L, 2, Some(6L)),
+      (3L, 1, Some(9L)), (3L, 2, Some(7L)), (4L, 1, Some(9L)), (4L, 2, Some(8L)),
+      (5L, 1, None), (5L, 2, None), (6L, 1, None), (6L, 2, None))
+      .toDF("vec_id", "band", "bucket")
+    // the inline self-join every op spelled before the shared helper
+    def inline(bands: DataFrame, id: String, p: (Column, Column) => Column) =
+      bands.select(col(id).as("a"), col("band"), col("bucket"))
+        .join(bands.select(col(id).as("b"), col("band"), col("bucket")), Seq("band", "bucket"))
+        .filter(p(col("a"), col("b"))).select("a", "b").distinct()
+    def pairs(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val preds = Seq[(String, (Column, Column) => Column)](
+      "<" -> (_ < _), "<=" -> (_ <= _), "<>" -> (_ =!= _))
+    Seq((minhash, "gid", Set((1L, 2L), (1L, 3L))),
+        (signLsh, "vec_id", Set((1L, 2L), (3L, 4L)))).foreach { case (bands, id, lt) =>
+      val self = lt.flatMap { case (a, b) => Seq(a -> a, b -> b) }
+      val want = Map("<" -> lt, "<=" -> (lt ++ self), "<>" -> (lt ++ lt.map(_.swap)))
+      preds.foreach { case (op, p) =>
+        val got = TextOps.bandPairs(bands, id, p)
+        assert(got.columns.toSeq === Seq("ga", "gb"))
+        assert(got.count() === want(op).size, s"$id $op: a pair came back twice")
+        assert(pairs(got) === want(op), s"$id $op")
+        assert(pairs(got) === pairs(inline(bands, id, p)), s"$id $op")
+      }
+    }
+  }
 }
