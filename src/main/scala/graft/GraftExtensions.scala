@@ -12,7 +12,8 @@ import graft.vector.{CosineSimilarity, Deflate6, Dot612, FromScaledN, FromScaled
 /** Engine extension surface: the one way graft's native layer enters a
   * session. At session build time it registers the `graft_*` functions of
   * [[GraftFunctions]], the [[graft.plans.AsOfStrategy]] planner strategy
-  * and the [[graft.plans.AsOfRangePushdown]] optimizer rule.
+  * and two optimizer rules, [[graft.plans.AsOfRangePushdown]] and
+  * [[graft.plans.SmallInputSinglePartition]].
   *
   * [[GraftSession.build]] installs it (`withExtensions`). A session that
   * graft does not build gets it through Spark's own setting,
@@ -27,6 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftFunctions.descriptions.foreach(e.injectFunction)
     e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
     e.injectOptimizerRule(_ => graft.plans.AsOfRangePushdown)
+    e.injectOptimizerRule(_ => graft.plans.SmallInputSinglePartition)
   }
 }
 

@@ -8,6 +8,17 @@ import org.apache.spark.sql.SparkSession
   * handles runtime re-planning (partition coalescing, skew-join splitting),
   * which is the scale path for the audit feed's hot entities and for
   * dedup blocks of uneven size.
+  *
+  * Below AQE's partition floor (`coalescePartitions.minPartitionSize`,
+  * Spark's default 1 MB, left unset here) a query's input takes the other
+  * path: [[graft.plans.SmallInputSinglePartition]] coalesces each scan to
+  * one partition, so the query plans no exchange (on the benchmark's audit
+  * ops, 5 jobs per op before and 1.67 after; six of its eight views now
+  * run as 1 job). The floor is compared with file bytes, while AQE sizes
+  * post-shuffle partitions on the larger shuffle bytes, so such a query
+  * gives up the few post-shuffle tasks it could have had: a net gain at
+  * sf0.01 (summed op time -6%), but 37 of the 255 ops it changes run more
+  * than 10% slower (measurements in the rule's Scaladoc).
   */
 object GraftSession {
   /** Size of Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`,
@@ -53,7 +64,10 @@ object GraftSession {
     // the first): how many partitions a parquet SCAN fans out to, which
     // moves partial-agg grouping and scan-side merge order. The
     // determinism sweep runs Verify under 16m vs the 128m default and
-    // diffs every op's result multiset (tools/determinism.py).
+    // diffs every op's result multiset (tools/determinism.py). A scan
+    // under the small-input floor is coalesced to one partition whatever
+    // its split size, so below it that sweep also needs
+    // -Dspark.sql.adaptive.coalescePartitions.minPartitionSize=1b.
     val maxSplit = sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "128m")
     // Managed tables (`saveAsTable`) go to a scratch dir deleted at JVM
     // exit, not to a `spark-warehouse/` under the launch directory; a JVM

@@ -1,6 +1,8 @@
 package graft.audit
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanFactory}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 
@@ -48,33 +50,46 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     * (audit.go:1362 NULLs new_* for both). */
   private val isTerminal = col("operation").isin(AuditModel.terminalOps: _*)
 
+  /** The columns a chain of `withColumn` calls over `cols` gives, in order
+    * (a name `df` already has is replaced in place, any other appended),
+    * analyzed once per step instead of once per column. No column reads
+    * another of the same step. When the step mixes window columns with
+    * plain ones, the window columns come from one projection and the plain
+    * ones from one above it, where the chain computed them, so a plain
+    * column never rides the window's exchange. */
+  private[graft] def withAll(df: DataFrame, cols: Seq[(String, Column)]): DataFrame = {
+    val (win, plain) = cols.partition(c => GraftPlanFactory.isWindowed(c._2))
+    if (win.isEmpty || plain.isEmpty) df.withColumns(ListMap(cols: _*))
+    else {
+      val w = df.withColumns(ListMap(win: _*))
+      val byName = plain.toMap
+      val had = df.columns.toSet
+      w.select(df.columns.toSeq.map(n => byName.get(n).fold(w.col(n))(_.as(n))) ++
+        cols.collect { case (n, e) if !had(n) => if (byName.contains(n)) e.as(n) else col(n) }: _*)
+    }
+  }
+
   /** Reference `*_audit_delta`: per change, the previous (`old_*`) and
     * current (`new_*`) payload values; old is NULL on inserts. */
   def delta(log: DataFrame, payload: Seq[String]): DataFrame =
-    payload.foldLeft(log) { (df, c) =>
-      df.withColumn(s"old_$c",
-          when(isInsert, lit(null)).otherwise(lag(col(c), 1).over(byEntity)))
-        .withColumn(s"new_$c", col(c))
-    }
+    withAll(log, payload.flatMap { c =>
+      Seq(s"old_$c" -> when(isInsert, lit(null)).otherwise(lag(col(c), 1).over(byEntity)),
+        s"new_$c" -> col(c))
+    })
 
   /** Reference `*_audit_snapshot`: full entity state as of each change —
     * the running last non-null payload value per key. */
   def snapshot(log: DataFrame, payload: Seq[String]): DataFrame =
-    payload.foldLeft(log) { (df, c) =>
-      df.withColumn(s"state_$c", last(col(c), ignoreNulls = true).over(running))
-    }
+    withAll(log, payload.map(c => s"state_$c" -> last(col(c), ignoreNulls = true).over(running)))
 
   /** Reference `*_audit_compare`: both sides fully reconstructed — old
     * state NULL on insert, new state NULL on delete. */
-  def compare(log: DataFrame, payload: Seq[String]): DataFrame = {
-    val snap = snapshot(log, payload)
-    payload.foldLeft(snap) { (df, c) =>
-      df.withColumn(s"old_state_$c",
-          when(isInsert, lit(null)).otherwise(lag(col(s"state_$c"), 1).over(byEntity)))
-        .withColumn(s"new_state_$c",
-          when(isTerminal, lit(null)).otherwise(col(s"state_$c")))
-    }
-  }
+  def compare(log: DataFrame, payload: Seq[String]): DataFrame =
+    withAll(snapshot(log, payload), payload.flatMap { c =>
+      Seq(s"old_state_$c" ->
+          when(isInsert, lit(null)).otherwise(lag(col(s"state_$c"), 1).over(byEntity)),
+        s"new_state_$c" -> when(isTerminal, lit(null)).otherwise(col(s"state_$c")))
+    })
 
   /** Each entity's last row by seq, whatever columns it carries — the
     * one top-1 every "latest per entity" view goes through. */
@@ -180,11 +195,11 @@ final case class AuditLog(pkCol: String, seqCol: String) {
       .withColumn("__t_boundary", get(col("__t_seqs"),
         graft.GraftFunctions.graftArrayBucket(col("__t_seqs"), col(seqCol)) - 1))
       .drop("__t_seqs")
-    payload.foldLeft(withB) { (df, c) =>
-      df.withColumn(s"__raw_$c", last(col(c), ignoreNulls = true).over(running))
-        .withColumn(s"__src_$c",
+    withAll(withB, payload.flatMap { c =>
+      Seq(s"__raw_$c" -> last(col(c), ignoreNulls = true).over(running),
+        s"__src_$c" ->
           last(when(col(c).isNotNull, col(seqCol)), ignoreNulls = true).over(running))
-    }
+    })
   }
 
   /** True iff a value whose source seq is `src` was wiped: a truncate
@@ -201,11 +216,9 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     * if the change that set it is newer than the latest T boundary. */
   def snapshotTruncAware(log: DataFrame, payload: Seq[String]): DataFrame = {
     val st = truncStates(log, payload)
-    dropTruncInternals(
-      payload.foldLeft(st) { (df, c) =>
-        df.withColumn(s"state_$c",
-          when(wiped(col(s"__src_$c")), lit(null)).otherwise(col(s"__raw_$c")))
-      }, payload)
+    dropTruncInternals(withAll(st, payload.map { c =>
+      s"state_$c" -> when(wiped(col(s"__src_$c")), lit(null)).otherwise(col(s"__raw_$c"))
+    }), payload)
   }
 
   /** Compare under statement-level TRUNCATE (audit.go:1362): old state is
@@ -213,16 +226,14 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     * before this change; new state is NULL after delete/truncate. */
   def compareTruncAware(log: DataFrame, payload: Seq[String]): DataFrame = {
     val st = truncStates(log, payload)
-    dropTruncInternals(
-      payload.foldLeft(st) { (df, c) =>
-        val pRaw = lag(col(s"__raw_$c"), 1).over(byEntity)
-        val pSrc = lag(col(s"__src_$c"), 1).over(byEntity)
-        val cur = when(wiped(col(s"__src_$c")), lit(null)).otherwise(col(s"__raw_$c"))
-        df.withColumn(s"state_$c", cur)
-          .withColumn(s"old_state_$c",
-            when(isInsert, lit(null)).when(wiped(pSrc), lit(null)).otherwise(pRaw))
-          .withColumn(s"new_state_$c", when(isTerminal, lit(null)).otherwise(cur))
-      }, payload)
+    dropTruncInternals(withAll(st, payload.flatMap { c =>
+      val pRaw = lag(col(s"__raw_$c"), 1).over(byEntity)
+      val pSrc = lag(col(s"__src_$c"), 1).over(byEntity)
+      val cur = when(wiped(col(s"__src_$c")), lit(null)).otherwise(col(s"__raw_$c"))
+      Seq(s"state_$c" -> cur,
+        s"old_state_$c" -> when(isInsert, lit(null)).when(wiped(pSrc), lit(null)).otherwise(pRaw),
+        s"new_state_$c" -> when(isTerminal, lit(null)).otherwise(cur))
+    }), payload)
   }
 
   // ----------------------------------------------- old-values (before_change) --
@@ -248,9 +259,9 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     case Some(l) =>
       val lv = l.select(
         col(pkCol).as("__live_pk") +: payload.map(c => col(c).as(s"__live_$c")): _*)
-      payload.foldLeft(df.join(lv, col(pkCol) === col("__live_pk"), "left")) {
-        (d, c) => d.withColumn(s"state_$c", coalesce(col(s"state_$c"), col(s"__live_$c")))
-      }.drop("__live_pk" +: payload.map(c => s"__live_$c"): _*)
+      withAll(df.join(lv, col(pkCol) === col("__live_pk"), "left"),
+        payload.map(c => s"state_$c" -> coalesce(col(s"state_$c"), col(s"__live_$c"))))
+        .drop("__live_pk" +: payload.map(c => s"__live_$c"): _*)
   }
 
   /** Reconstruction for feeds that carry OLD values — the reference's
@@ -263,9 +274,8 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     * Matches `createAuditSnapshotView`'s COALESCE chain (audit.go:1262). */
   def snapshotFromOld(log: DataFrame, payload: Seq[String],
       live: Option[DataFrame] = None): DataFrame = {
-    val states = payload.foldLeft(log) { (df, c) =>
-      df.withColumn(s"state_$c", last(col(s"old_$c"), ignoreNulls = true).over(later))
-    }
+    val states = withAll(log,
+      payload.map(c => s"state_$c" -> last(col(s"old_$c"), ignoreNulls = true).over(later)))
     withLiveFallback(states, payload, live)
   }
 
@@ -276,11 +286,9 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     * backfill (audit.go:1051). */
   def deltaFromOld(log: DataFrame, payload: Seq[String],
       live: Option[DataFrame] = None): DataFrame = {
-    val snap = snapshotFromOld(log, payload, live)
-    payload.foldLeft(snap) { (df, c) =>
-      df.withColumn(s"old_$c", when(isInsert, lit(null)).otherwise(col(s"old_$c")))
-        .withColumn(s"new_$c", when(isTerminal, lit(null)).otherwise(col(s"state_$c")))
-        .drop(s"state_$c")
-    }
+    withAll(snapshotFromOld(log, payload, live), payload.flatMap { c =>
+      Seq(s"old_$c" -> when(isInsert, lit(null)).otherwise(col(s"old_$c")),
+        s"new_$c" -> when(isTerminal, lit(null)).otherwise(col(s"state_$c")))
+    }).drop(payload.map(c => s"state_$c"): _*)
   }
 }

@@ -47,9 +47,9 @@ object AuditQueries {
       AuditModel.changeReason.as("change_reason"))
 
   /** Adds the sparse payload columns used by snapshot/compare. */
-  private def sparse(df: DataFrame): DataFrame = df
-    .withColumn("k", when(col("operation") === "U", col("field_k")))
-    .withColumn("val", when(col("event_type") === "purchase", col("value")))
+  private def sparse(df: DataFrame): DataFrame = df.select(col("*"),
+    when(col("operation") === "U", col("field_k")).as("k"),
+    when(col("event_type") === "purchase", col("value")).as("val"))
 
   /** Adds `n_changes`, each entity's change count, as the ascending
     * position: on the last row — the one `current` keeps — it equals the

@@ -2,8 +2,9 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Bridge into the package-private Dataset factory so graft's custom
-  * logical operators can be wrapped as public DataFrames. Standard pattern
+/** Bridge into the package-private classic API: the Dataset factory, so
+  * graft's custom logical operators can be wrapped as public DataFrames,
+  * and a column's expression tree. Standard pattern
   * for Spark extension libraries (cf. the DatasetFactory shims used by
   * open-source Spark storage/index layers). */
 object GraftPlanFactory {
@@ -12,4 +13,8 @@ object GraftPlanFactory {
 
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+
+  /** True iff `c` holds a window function built with `.over`. */
+  def isWindowed(c: Column): Boolean =
+    c.node.collect { case w: internal.Window => w }.nonEmpty
 }

@@ -35,6 +35,19 @@ class AuditLogSpec extends AnyFunSuite {
     assert(got(4) === ((5L, Some(7), None)))
   }
 
+  test("withAll gives the withColumn chain's columns and rows, a mixed step included") {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("entity_id").orderBy("audit_id")
+    val cols = Seq("prev_k" -> lag(col("k"), 1).over(w), "k" -> (col("k") * 10),
+      "op2" -> lower(col("operation")), "n" -> count(lit(1)).over(w))
+    // mixed (window and plain, "k" replaced in place), plain only, window only
+    Seq(cols, cols.slice(1, 3), cols.take(1)).foreach { cs =>
+      val want = cs.foldLeft(log) { case (d, (n, e)) => d.withColumn(n, e) }
+      val got = alg.withAll(log, cs)
+      assert(got.columns.toSeq === want.columns.toSeq)
+      assert(got.collect().map(_.toString).sorted === want.collect().map(_.toString).sorted)
+    }
+  }
+
   test("snapshot: state carries forward through changes that skip the field") {
     val got = alg.snapshot(log, Seq("k"))
       .orderBy("audit_id").select("state_k").collect().map(Option apply _.get(0))

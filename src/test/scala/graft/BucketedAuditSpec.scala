@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The scale claim behind AuditStorage: reconstructions over a bucketed
   * audit log run without a shuffle (the scan itself satisfies the window's
-  * required distribution), and results equal the unbucketed path. */
-class BucketedAuditSpec extends AnyFunSuite {
+  * required distribution), and results equal the unbucketed path. Runs on
+  * [[ScalePath]], so the unbucketed side keeps the exchanges of a large
+  * input. */
+class BucketedAuditSpec extends AnyFunSuite with ScalePath {
   import TestSession._
 
   // AQE-aware: descends into query stages (a naive collect over

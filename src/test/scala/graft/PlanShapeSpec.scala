@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression pins for the plan shapes SURVEY §8 documents — the
   * properties that make these the 100×-scale plans. Each assertion runs
-  * the query first so AQE finalizes the plan it actually executed. */
-class PlanShapeSpec extends AnyFunSuite {
+  * the query first so AQE finalizes the plan it actually executed. The
+  * suite runs on [[ScalePath]], because the sf0.001 data it reads would
+  * otherwise take the small-input single-stage plan. */
+class PlanShapeSpec extends AnyFunSuite with ScalePath {
   import TestSession._
 
   private def finalPlan(df: DataFrame): SparkPlan = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Args, Status, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSession {
@@ -27,6 +28,26 @@ object TestSession {
     }
     walk(p); n
   }
+
+  /** AQE's partition floor, which is also the small-input threshold of
+    * [[graft.plans.SmallInputSinglePartition]]. */
+  val MinPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  /** `body` with the session's `key` set to `value`, restored after. */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+}
+
+/** Runs a suite on the plans a large input gets: with
+  * [[TestSession.MinPartitionSize]] at 1 byte the sf0.001 test data is over
+  * the small-input threshold, so its queries keep their exchanges. Set
+  * for the whole suite and restored after it. */
+trait ScalePath extends Suite {
+  override def run(testName: Option[String], args: Args): Status =
+    TestSession.withConf(TestSession.MinPartitionSize, "1b")(super.run(testName, args))
 }
 
 /** Every registered operator must build a plan and execute at sf0.001.

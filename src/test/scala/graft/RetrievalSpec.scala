@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Retrieval operators: plan pins (chunking shuffle-free, BM25 probe
   * broadcast, two-phase top-k lossless) plus full value-level brute-force
   * replicas in plain Scala — the oracle gate checks DuckDB parity, these
-  * check the MATH against an independent implementation. */
-class RetrievalSpec extends AnyFunSuite {
+  * check the MATH against an independent implementation. Runs on
+  * [[ScalePath]]: the shuffle caps pin the exchange-planned plans, which
+  * the sf0.001 data would otherwise not take. */
+class RetrievalSpec extends AnyFunSuite with ScalePath {
   import TestSession._
 
   private def finalPlan(df: DataFrame): SparkPlan = {

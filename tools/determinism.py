@@ -14,6 +14,25 @@ layer exists to kill.
 
 Usage: python3 tools/determinism.py <outDirA> <outDirB> <reportJson>
   (each outDir is a graft.Verify output directory)
+
+Inputs under AQE's partition floor
+(spark.sql.adaptive.coalescePartitions.minPartitionSize, 1 MB) run as
+one stage whatever the shuffle width (graft.plans.SmallInputSinglePartition),
+so at sf0.01 a width-only sweep leaves most ops on one partition. The
+sweep that varies both paths compares Verify at default settings with
+Verify at width 32 and the floor at 1 byte, which puts every op back on
+its exchange-planned path:
+
+  tools/run_graft.sh graft.Verify <sf0.01 dir> /tmp/det-a
+  SPARK_GRAFT_SHUFFLE=32 tools/run_graft.sh \
+    -Dspark.sql.adaptive.coalescePartitions.minPartitionSize=1b \
+    graft.Verify <sf0.01 dir> /tmp/det-b
+  python3 tools/determinism.py /tmp/det-a /tmp/det-b /tmp/det.json
+
+The input-split axis (SPARK_GRAFT_MAX_SPLIT, 16m vs the 128m default)
+likewise varies nothing below the floor, where each scan is coalesced to
+one partition whatever its split count: sweep it with the same
+-D...minPartitionSize=1b flag on both runs.
 """
 import glob
 import hashlib
