@@ -12,8 +12,7 @@ import graft.vector.{CosineSimilarity, Deflate6, Dot612, FromScaledN, FromScaled
 /** Engine extension surface: the one way graft's native layer enters a
   * session. At session build time it registers the `graft_*` functions of
   * [[GraftFunctions]], the [[graft.plans.AsOfStrategy]] planner strategy
-  * and two optimizer rules, [[graft.plans.AsOfRangePushdown]] and
-  * [[graft.plans.SmallInputSinglePartition]].
+  * and the optimizer rule [[graft.plans.SmallInputSinglePartition]].
   *
   * [[GraftSession.build]] installs it (`withExtensions`). A session that
   * graft does not build gets it through Spark's own setting,
@@ -27,7 +26,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptions.foreach(e.injectFunction)
     e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
-    e.injectOptimizerRule(_ => graft.plans.AsOfRangePushdown)
     e.injectOptimizerRule(_ => graft.plans.SmallInputSinglePartition)
   }
 }

@@ -41,55 +41,40 @@ object GraftSession {
     * built here; a later session in the same JVM shares the cache as it is. */
   val codegenCacheEntries = 1000
 
+  /** The session at `local[cpus]` with graft's settings. Each setting is a
+    * default: a key the JVM carries as a system property (`-Dspark.…`,
+    * e.g. from `tools/run_graft.sh`) keeps the JVM's value. */
   def build(appName: String, cpus: String): SparkSession = {
-    // shuffle partitions default to the core count (local mode: one
-    // healthy partition per core; AQE coalesces below that). The env
-    // override exists for scale-leg experiments — e.g. probing whether a
-    // 10x-data one-box run is partition-count-bound — without forking
-    // the session recipe.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // Streaming state store provider. The deployment posture for a
-    // 100 TB horizon is RocksDB (state lives off-heap/on-disk per
-    // executor, bounded heap regardless of watermark horizon × key
-    // cardinality); the local default stays Spark's in-memory
-    // HDFS-backed provider so sandbox runs don't pay RocksDB's
-    // per-micro-batch checkpoint overhead on tiny state. Output is
-    // byte-identical either way (RocksDbStateSpec pins it for the
-    // flatMapGroupsWithState sessionizer and
-    // dropDuplicatesWithinWatermark — a provider is a KV layout, never
-    // semantics).
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    // Input-split size — the second determinism axis (shuffle width is
-    // the first): how many partitions a parquet SCAN fans out to, which
-    // moves partial-agg grouping and scan-side merge order. The
-    // determinism sweep runs Verify under 16m vs the 128m default and
-    // diffs every op's result multiset (tools/determinism.py). A scan
-    // under the small-input floor is coalesced to one partition whatever
-    // its split size, so below it that sweep also needs
-    // -Dspark.sql.adaptive.coalescePartitions.minPartitionSize=1b.
-    val maxSplit = sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "128m")
-    // Managed tables (`saveAsTable`) go to a scratch dir deleted at JVM
-    // exit, not to a `spark-warehouse/` under the launch directory; a JVM
-    // that sets the property keeps its own.
-    val warehouse = sys.props.getOrElse("spark.sql.warehouse.dir",
-      Scratch.dir("graft-warehouse-"))
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.compression.codec", "snappy")
-      .config("spark.sql.files.maxPartitionBytes", maxSplit)
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.streaming.stateStore.providerClass", stateStore)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
-      .getOrCreate()
+    def default(key: String, value: => String): Unit =
+      b.config(key, sys.props.getOrElse(key, value))
+    // one shuffle partition per core (AQE coalesces below that)
+    default("spark.sql.shuffle.partitions", cpus)
+    default("spark.sql.adaptive.enabled", "true")
+    default("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    default("spark.sql.adaptive.skewJoin.enabled", "true")
+    default("spark.sql.session.timeZone", "UTC")
+    default("spark.sql.parquet.compression.codec", "snappy")
+    // input-split size, the second determinism axis after shuffle width
+    // (tools/determinism.py); below the small-input floor a scan is one
+    // partition whatever its split size, so a sweep of this key there
+    // also needs -Dspark.sql.adaptive.coalescePartitions.minPartitionSize=1b
+    default("spark.sql.files.maxPartitionBytes", "128m")
+    // managed tables (`saveAsTable`) go to a scratch dir deleted at JVM
+    // exit, not to a `spark-warehouse/` under the launch directory
+    default("spark.sql.warehouse.dir", Scratch.dir("graft-warehouse-"))
+    // Spark's in-memory HDFS-backed state store: sandbox runs do not pay
+    // RocksDB's per-batch checkpoint cost on tiny state. RocksDB is the
+    // deployment posture for large state, and output is identical under
+    // either provider (RocksDbStateSpec)
+    default("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    default("spark.ui.enabled", "false")
+    default("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.SparkSession
 
 /** Session-scoped scratch-directory registry.
   *
@@ -16,12 +17,15 @@ import java.util.concurrent.ConcurrentHashMap
   *     JVM shutdown hook (a long-lived bench session exits clean);
   *   - derived exports that are a pure function of their input dataset
   *     (the `.gfc` feed export) are memoized per (kind, dataset-path)
-  *     key, so a repeated run reuses the first export instead of
-  *     stacking a fresh copy per invocation.
+  *     key and the dataset's file listing, so a repeated run reuses the
+  *     first export instead of stacking a fresh copy per invocation, and
+  *     a dataset rewritten in place gets a fresh export.
   */
 object Scratch {
 
-  private val cached = new ConcurrentHashMap[String, String]()
+  /** An export and the [[Tables.files]] listing of the input it was built from. */
+  private final case class Export(files: Seq[(String, Long, Long)], dir: String)
+  private val cached = new ConcurrentHashMap[String, Export]()
   private val live = ConcurrentHashMap.newKeySet[Path]()
 
   private lazy val hook: Unit = {
@@ -48,13 +52,20 @@ object Scratch {
   }
 
   /** Memoized scratch dir keyed by (kind, source dataset path): `build`
-    * runs once per key per JVM; later callers reuse the materialized
-    * export. Only for builds that are a deterministic pure function of
-    * the key. */
-  def cachedExport(kind: String, sourcePath: String)(build: String => Unit): String =
-    cached.computeIfAbsent(s"$kind|${Paths.get(sourcePath).toAbsolutePath}", { _ =>
-      val d = dir(s"graft-$kind-")
-      build(d)
-      d
-    })
+    * runs once per key per JVM while the dataset's files (their path,
+    * size and mtime, as [[Tables.files]] lists them) stay the same; later
+    * callers reuse the materialized export. Only for builds that are a
+    * deterministic pure function of the dataset. */
+  def cachedExport(s: SparkSession, kind: String, sourcePath: String)
+      (build: String => Unit): String = {
+    val files = Tables.files(s, sourcePath)
+    cached.compute(s"$kind|${Paths.get(sourcePath).toAbsolutePath}", { (_, last) =>
+      if (last != null && last.files == files) last
+      else {
+        val d = dir(s"graft-$kind-")
+        build(d)
+        Export(files, d)
+      }
+    }).dir
+  }
 }

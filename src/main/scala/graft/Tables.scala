@@ -2,8 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
-  PartitioningAwareFileIndex}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -36,21 +35,33 @@ object Tables {
     SQLConf.CASE_SENSITIVE, SQLConf.PARTITION_COLUMN_TYPE_INFERENCE,
     SQLConf.SESSION_LOCAL_TIMEZONE).map(_.key)
 
-  private def listing(df: DataFrame): Seq[(String, Long, Long)] =
-    df.queryExecution.analyzed.collectLeaves().flatMap {
-      case LogicalRelation(HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _),
-          _, _, _, _) => i.allFiles()
-      case _ => Nil
-    }.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+  /** The (path, size, mtime) of every data file under `path`, sorted;
+    * empty for a missing path. Hidden names are skipped as a Spark read
+    * skips them: a component starting with `.`, or with `_` unless it is a
+    * `k=v` partition directory. A read of `path` and an export built from
+    * it ([[Scratch.cachedExport]]) are keyed on this listing. */
+  private[graft] def files(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return Nil
+    val base = fs.makeQualified(root).toUri.getPath.length
+    val it = fs.listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filterNot { f =>
+        f.getPath.toUri.getPath.drop(base).split('/').exists(c =>
+          c.startsWith(".") || (c.startsWith("_") && !c.contains("=")))
+      }
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+  }
 
   /** Reads a parquet path, inferring its schema only when the files or the
     * [[inferenceConfs]] changed since the path was last read.
     *
     * Inference runs a footer-reading Spark job on every plain
-    * `spark.read.parquet`. Here the read first lists the files (no job)
-    * through a read with the last inferred schema; when the listing and
-    * the settings match that read's, it is the answer. Otherwise the schema
-    * is inferred again and stored.
+    * `spark.read.parquet`. Here the read first lists the files ([[files]],
+    * no job); when the listing and the settings match the last read's, a
+    * read with the last inferred schema is the answer. Otherwise the
+    * schema is inferred again and stored.
     *
     * Spark finds a cached plan by path, not by file content, so a frame
     * persisted over a path rewritten outside this session would keep
@@ -59,17 +70,16 @@ object Tables {
     * before the frame is handed out. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val confs = inferenceConfs.map(spark.conf.getOption)
+    val listed = files(spark, path)
     val last = Option(seen.get(path))
-    val reused = last.filter(_.confs == confs).flatMap { l =>
-      Some(spark.read.schema(l.schema).parquet(path)).filter(listing(_) == l.files)
-    }
-    reused.getOrElse {
-      val df = spark.read.parquet(path)
-      val files = listing(df)
-      seen.put(path, Seen(files, confs, df.schema))
-      if (last.exists(_.files != files)) spark.catalog.refreshByPath(path)
-      df
-    }
+    last.filter(l => l.confs == confs && l.files == listed)
+      .map(l => spark.read.schema(l.schema).parquet(path))
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        seen.put(path, Seen(listed, confs, df.schema))
+        if (last.exists(_.files != listed)) spark.catalog.refreshByPath(path)
+        df
+      }
   }
 
   /** Reads one table of a scale-factor directory. */

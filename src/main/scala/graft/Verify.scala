@@ -10,19 +10,24 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.build("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val ops = SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) }
+    val failed = ops.toSeq.flatMap { case (name, fn) =>
+      val ok =
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          false
+        }
       // operator-internal caches must not leak into the next op — but
       // most ops persist nothing, so only pay the unpersist walk when
       // something is actually cached
       if (!spark.sharedState.cacheManager.isEmpty) spark.catalog.clearCache()
+      if (ok) None else Some(name)
     }
+    // one closing line that names every failure, so a run's verdict is
+    // not buried among Spark's WARN lines
+    System.err.println(s"[verify] ${failed.size} of ${ops.size} ops failed: " +
+      (if (failed.isEmpty) "none" else failed.sorted.mkString(", ")))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

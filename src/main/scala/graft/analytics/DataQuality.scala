@@ -166,6 +166,22 @@ object DataQuality {
       .orderBy("constraint_name")
   }
 
+  /** The correlated measures (name → lineitem column), their pairs, and
+    * the square + cross-product lanes, which share the split-sum shape. */
+  private val corrVars = Seq("qty" -> "l_quantity", "price" -> "l_extendedprice",
+    "disc" -> "l_discount", "tax" -> "l_tax")
+  private val corrPairs = for {
+    ((a, _), i) <- corrVars.zipWithIndex
+    (b, _) <- corrVars.drop(i + 1)
+  } yield (a, b)
+  private val corrProds = corrVars.map { case (k, _) => (k, k) } ++ corrPairs
+
+  /** Pearson r of measures `a` and `b` over the sums `n`, `s_a`, `s_a_b`…
+    * — one formula string for both engines, rounded once. */
+  private def corrR(a: String, b: String): String =
+    s"round((n * s_${a}_$b - s_$a * s_$b) / sqrt((n * s_${a}_$a - s_$a * s_$a)" +
+      s" * (n * s_${b}_$b - s_$b * s_$b)), 4)"
+
   /** Pairwise Pearson correlations of the fact measures in ONE scan —
     * the statistics plane of the profile (native `corr` aggregates in
     * either engine accumulate doubles in partition order, so their last
@@ -200,26 +216,15 @@ object DataQuality {
     * correctly-rounded BigDecimal → double steps) are pinned lane-equal
     * in NativeExprSpec. */
   val qMeasureCorrelations: Q = {
-    val vars = Seq("qty" -> "l_quantity", "price" -> "l_extendedprice",
-      "disc" -> "l_discount", "tax" -> "l_tax")
-    val pairs = for {
-      ((a, _), i) <- vars.zipWithIndex
-      (b, _) <- vars.drop(i + 1)
-    } yield (a, b)
-    // square + cross-product lanes share the split-sum shape
-    val prods = vars.map { case (k, _) => (k, k) } ++ pairs
     def dec2(c: String) = s"CAST($c AS DECIMAL(18,2))"
     val sumsSql = (
-      vars.map { case (k, c) => s"CAST(sum(${dec2(c)}) AS DOUBLE) AS s_$k" } ++
-      prods.map { case (a, b) =>
-        val ca = vars.find(_._1 == a).get._2; val cb = vars.find(_._1 == b).get._2
+      corrVars.map { case (k, c) => s"CAST(sum(${dec2(c)}) AS DOUBLE) AS s_$k" } ++
+      corrProds.map { case (a, b) =>
+        val ca = corrVars.find(_._1 == a).get._2; val cb = corrVars.find(_._1 == b).get._2
         s"CAST(sum(${dec2(ca)} * ${dec2(cb)}) AS DOUBLE) AS s_${a}_$b"
       }).mkString(",\n    ")
-    def rExpr(a: String, b: String) =
-      s"round((n * s_${a}_$b - s_$a * s_$b) / sqrt((n * s_${a}_$a - s_$a * s_$a)" +
-        s" * (n * s_${b}_$b - s_$b * s_$b)), 4)"
-    val rowsSql = pairs.map { case (a, b) =>
-      s"SELECT '${a}_x_$b' AS pair, n AS n_rows, ${rExpr(a, b)} AS r FROM a"
+    val rowsSql = corrPairs.map { case (a, b) =>
+      s"SELECT '${a}_x_$b' AS pair, n AS n_rows, ${corrR(a, b)} AS r FROM a"
     }.mkString("\n  UNION ALL ")
     Q.sql(
       "q_measure_correlations",
@@ -240,18 +245,8 @@ object DataQuality {
     * rows through the real table, but only a crafted max|x| here). */
   private[graft] def correlationsFrom(li: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val vars = Seq("qty" -> "l_quantity", "price" -> "l_extendedprice",
-      "disc" -> "l_discount", "tax" -> "l_tax")
-    val pairs = for {
-      ((a, _), i) <- vars.zipWithIndex
-      (b, _) <- vars.drop(i + 1)
-    } yield (a, b)
-    val prods = vars.map { case (k, _) => (k, k) } ++ pairs
-    def rExpr(a: String, b: String) =
-      s"round((n * s_${a}_$b - s_$a * s_$b) / sqrt((n * s_${a}_$a - s_$a * s_$a)" +
-        s" * (n * s_${b}_$b - s_$b * s_$b)), 4)"
     val proj = li.select(
-      vars.map { case (k, c) =>
+      corrVars.map { case (k, c) =>
         call_function("graft_to_scaled2", col(c)).as(s"x_$k") }: _*)
     // split base 1e7 balances the two product lanes: hi ≤ maxᵃmaxᵇ/1e7
     // (~1.2e7 for these columns) and lo < 1e7 per row, so capacity is
@@ -259,13 +254,13 @@ object DataQuality {
     // guard below makes anything past that loud (ANSI is off: without
     // it, sum(long) wraps silently)
     val aggs =
-      vars.map { case (k, _) => sum(col(s"x_$k")).as(s"l_$k") } ++
-      prods.flatMap { case (a, b) =>
+      corrVars.map { case (k, _) => sum(col(s"x_$k")).as(s"l_$k") } ++
+      corrProds.flatMap { case (a, b) =>
         Seq(sum(expr(s"(x_$a * x_$b) div 10000000")).as(s"h_${a}_$b"),
           sum(expr(s"(x_$a * x_$b) % 10000000")).as(s"g_${a}_$b"))
       } ++
       // exact worst-addend witnesses for the guard (primitive long max)
-      vars.map { case (k, _) => max(abs(col(s"x_$k"))).as(s"m_$k") }
+      corrVars.map { case (k, _) => max(abs(col(s"x_$k"))).as(s"m_$k") }
     val agg = proj.agg(count(lit(1)).cast("double").as("n"), aggs: _*)
     // Loud capacity guard, evaluated once on the single aggregate row.
     // worstAddend bounds every per-row |addend| across all sum lanes
@@ -276,9 +271,9 @@ object DataQuality {
     def m(k: String) = coalesce(col(s"m_$k").cast("double"), lit(0.0))
     val base = 1e7
     val worstAddend = greatest(
-      (vars.map { case (k, _) => m(k) } :+ lit(base - 1)) ++
-      prods.map { case (a, b) => m(a) / lit(base) * m(b) + lit(2.0) }: _*)
-    val worstProd = greatest(prods.map { case (a, b) => m(a) * m(b) }: _*)
+      (corrVars.map { case (k, _) => m(k) } :+ lit(base - 1)) ++
+      corrProds.map { case (a, b) => m(a) / lit(base) * m(b) + lit(2.0) }: _*)
+    val worstProd = greatest(corrProds.map { case (a, b) => m(a) * m(b) }: _*)
     val guardedN = when(
       col("n") * worstAddend < lit(9.0e18) && worstProd < lit(9.0e18),
       col("n")).otherwise(raise_error(lit(
@@ -286,13 +281,13 @@ object DataQuality {
         " (n x worst per-row addend or a per-row product >= 9.0e18);" +
         " re-split at a smaller base or widen the lanes")))
     val a = agg.select(guardedN.as("n") +: (
-      vars.map { case (k, _) =>
+      corrVars.map { case (k, _) =>
         call_function("graft_from_scaled2", col(s"l_$k")).as(s"s_$k") } ++
-      prods.map { case (x, y) =>
+      corrProds.map { case (x, y) =>
         call_function("graft_from_scaled4_split",
           col(s"h_${x}_$y"), col(s"g_${x}_$y")).as(s"s_${x}_$y") }): _*)
-    val structs = pairs.map { case (x, y) =>
-      s"struct('${x}_x_$y' as pair, n as n_rows, ${rExpr(x, y)} as r)"
+    val structs = corrPairs.map { case (x, y) =>
+      s"struct('${x}_x_$y' as pair, n as n_rows, ${corrR(x, y)} as r)"
     }.mkString(", ")
     a.select(expr(s"explode(array($structs)) as p"))
       .select(col("p.pair"),

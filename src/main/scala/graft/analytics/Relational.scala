@@ -24,6 +24,21 @@ object Relational {
 
   private def li(s: SparkSession, d: String) = Tables.lineitem(s, d)
 
+  /** Line items with their order, customer and (broadcast) customer
+    * nation: the sales fact every per-nation revenue op groups. */
+  private def nationSales(s: SparkSession, d: String): DataFrame =
+    li(s, d)
+      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
+
+  /** DuckDB twin of [[nationSales]]: its FROM clause. */
+  private val duckNationSales: String =
+    """FROM lineitem
+      |  JOIN orders ON l_orderkey = o_orderkey
+      |  JOIN customer ON o_custkey = c_custkey
+      |  JOIN nation ON c_nationkey = n_nationkey""".stripMargin
+
   /** TPC-H Q1 flavor: multi-aggregate scan of the biggest fact table.
     * Map-side partial aggregation keeps the shuffle at |groups| rows. */
   val q1Pricing: Q = Q.sql(
@@ -261,16 +276,10 @@ object Relational {
       |FROM (
       |  SELECT n_name, CAST(year(o_orderdate) AS INT) AS yr,
       |    l_extendedprice * (1 - l_discount) AS rev
-      |  FROM lineitem
-      |  JOIN orders ON l_orderkey = o_orderkey
-      |  JOIN customer ON o_custkey = c_custkey
-      |  JOIN nation ON c_nationkey = n_nationkey)
+      |  $duckNationSales)
       |GROUP BY ROLLUP(n_name, yr)
       |ORDER BY nation, yr""".stripMargin) { (s, d) =>
-    val base = li(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
+    val base = nationSales(s, d)
       .select(
         col("n_name"), year(col("o_orderdate")).cast("int").as("yr"),
         (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
@@ -480,10 +489,7 @@ object Relational {
       |  SELECT r_name AS region, n_name AS nation,
       |    CAST(year(o_orderdate) AS INT) AS yr,
       |    l_extendedprice * (1 - l_discount) AS rev
-      |  FROM lineitem
-      |  JOIN orders ON l_orderkey = o_orderkey
-      |  JOIN customer ON o_custkey = c_custkey
-      |  JOIN nation ON c_nationkey = n_nationkey
+      |  $duckNationSales
       |  JOIN region ON n_regionkey = r_regionkey),
       |g AS (SELECT region, nation, yr, ${Det.dsumRoundSql("rev", 2)} AS revenue
       |      FROM base GROUP BY region, nation, yr)
@@ -491,10 +497,7 @@ object Relational {
       |  round(revenue / CAST(sum(CAST(revenue AS DECIMAL(28,2)))
       |    OVER (PARTITION BY region, yr) AS DOUBLE), 6) AS share
       |FROM g ORDER BY region, yr, nation""".stripMargin) { (s, d) =>
-    val base = li(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
+    val base = nationSales(s, d)
       .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
       .select(col("r_name").as("region"), col("n_name").as("nation"),
         year(col("o_orderdate")).cast("int").as("yr"),

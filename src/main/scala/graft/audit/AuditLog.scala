@@ -135,6 +135,12 @@ final case class AuditLog(pkCol: String, seqCol: String) {
   def duckLast(expr: String): String =
     s"last_value($expr IGNORE NULLS) OVER ($duckRunning)"
 
+  /** Twin of `later` + `last(_, ignoreNulls = true)`: `expr`'s first
+    * non-null value strictly after this change. */
+  def duckNext(expr: String): String =
+    s"first_value($expr IGNORE NULLS) OVER ($duckByEntity " +
+      "ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)"
+
   /** Twin of `snapshot`'s columns: `<prefix>c` per payload field. */
   def duckStates(payload: Seq[String], prefix: String = "state_"): String =
     payload.map(c => s"${duckLast(c)} AS $prefix$c").mkString(",\n    ")

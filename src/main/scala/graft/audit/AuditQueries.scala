@@ -1,7 +1,7 @@
 package graft.audit
 
 import graft.{Det, Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -166,14 +166,10 @@ object AuditQueries {
       |          ${alg.duckLatestRn} AS rn
       |        FROM audit) WHERE rn = 1),
       |rec AS (
-      |  SELECT f.audit_id, f.entity_id, f.operation,
-      |    CASE WHEN f.operation = 'I' THEN NULL ELSE f.old_value END AS old_value,
-      |    CASE WHEN f.operation IN ('D', 'T') THEN NULL ELSE coalesce(
-      |      first_value(f.old_value IGNORE NULLS) OVER (
-      |        PARTITION BY f.entity_id ORDER BY f.audit_id
-      |        ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING),
-      |      l.live_value) END AS new_value
-      |  FROM old_feed f JOIN live l ON f.entity_id = l.entity_id)
+      |  SELECT audit_id, entity_id, operation,
+      |    CASE WHEN operation = 'I' THEN NULL ELSE old_value END AS old_value,
+      |    ${alg.duckNew(s"coalesce(${alg.duckNext("old_value")}, live_value)")} AS new_value
+      |  FROM old_feed JOIN live USING (entity_id))
       |SELECT audit_id, entity_id, operation, old_value, new_value
       |FROM rec ORDER BY audit_id""".stripMargin) { (s, d) =>
     val base = log(s, d)
@@ -737,6 +733,42 @@ object AuditQueries {
       .orderBy("entity_id", "session_start")
   }
 
+  /** Calendar-filled (day, operation, n) daily frame — zero-count days
+    * INCLUDED (a silent feed is the anomaly the volume monitors exist to
+    * catch). Shared by audit_daily_anomaly, audit_volume_mad,
+    * audit_cusum and audit_seasonal_adjust; ≤ |ops|×|days| rows at any feed
+    * size. */
+  private val filledDailyCtes: String =
+    """, d AS (
+      |  SELECT CAST(ts AS DATE) AS day, operation, count(*) AS n
+      |  FROM audit GROUP BY 1, 2),
+      |bounds AS (
+      |  SELECT min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1 FROM audit),
+      |days AS (
+      |  SELECT CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
+      |    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM bounds),
+      |grid AS (
+      |  SELECT day, operation
+      |  FROM days CROSS JOIN (SELECT DISTINCT operation FROM audit)),
+      |filled AS (
+      |  SELECT grid.day, grid.operation, CAST(coalesce(d.n, 0) AS BIGINT) AS n
+      |  FROM grid LEFT JOIN d ON grid.day = d.day AND grid.operation = d.operation)""".stripMargin
+
+  /** Spark twin of [[filledDailyCtes]]. */
+  private def filledDaily(s: SparkSession, d: String): DataFrame = {
+    val counts = log(s, d)
+      .groupBy(col("ts").cast("date").as("day"), col("operation"))
+      .agg(count(lit(1)).as("n"))
+    // full calendar range, so a day silent across EVERY op class still
+    // appears (observed-days-only would drop it); sequence(date, date)
+    // steps one day in both engines
+    val days = counts.agg(min("day").as("d0"), max("day").as("d1"))
+      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
+    days.crossJoin(counts.select("operation").distinct())
+      .join(counts, Seq("day", "operation"), "left")
+      .withColumn("n", coalesce(col("n"), lit(0L)).cast("long"))
+  }
+
   /** Capture-health monitoring: per-(day, operation) change volume versus
     * a trailing 7-calendar-day baseline; a day outside ±50% of its
     * baseline is flagged. The grid is a CALENDAR scaffold (generated
@@ -752,20 +784,7 @@ object AuditQueries {
     * after the fact. */
   val auditDailyAnomaly: Q = Q.sql(
     "audit_daily_anomaly",
-    auditCte + """, d AS (
-      |  SELECT CAST(ts AS DATE) AS day, operation, count(*) AS n
-      |  FROM audit GROUP BY 1, 2),
-      |bounds AS (
-      |  SELECT min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1 FROM audit),
-      |days AS (
-      |  SELECT CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-      |    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM bounds),
-      |grid AS (
-      |  SELECT day, operation
-      |  FROM days CROSS JOIN (SELECT DISTINCT operation FROM audit)),
-      |filled AS (
-      |  SELECT grid.day, grid.operation, coalesce(d.n, 0) AS n
-      |  FROM grid LEFT JOIN d ON grid.day = d.day AND grid.operation = d.operation),
+    auditCte + filledDailyCtes + """,
       |w AS (
       |  SELECT day, operation, n,
       |    avg(n) OVER tw AS base, count(*) OVER tw AS n_hist
@@ -777,18 +796,8 @@ object AuditQueries {
       |  CASE WHEN n_hist >= 3 AND (n > 1.5 * base OR n < 0.5 * base)
       |    THEN 1 ELSE 0 END AS anomaly
       |FROM w ORDER BY operation, day""".stripMargin) { (s, d) =>
-    val counts = log(s, d)
-      .groupBy(col("ts").cast("date").as("day"), col("operation"))
-      .agg(count(lit(1)).as("n"))
-    // full calendar range, so a day silent across EVERY op class still
-    // appears (observed-days-only would drop it); sequence(date, date)
-    // steps one day in both engines
-    val days = counts.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days.crossJoin(counts.select("operation").distinct())
     val tw = Window.partitionBy("operation").orderBy("day").rowsBetween(-7, -1)
-    grid.join(counts, Seq("day", "operation"), "left")
-      .withColumn("n", coalesce(col("n"), lit(0L)))
+    filledDaily(s, d)
       .withColumn("base", avg("n").over(tw))
       .withColumn("n_hist", count(lit(1)).over(tw))
       .select(col("day"), col("operation"), col("n"),
@@ -961,6 +970,46 @@ object AuditQueries {
       .orderBy("day")
   }
 
+  /** The purchases of the change log `base` as (r_entity, r_ts, r_value):
+    * the right side of an as-of lookup. */
+  private[graft] def asofPurchases(base: DataFrame): DataFrame =
+    base.filter(col("event_type") === "purchase")
+      .select(col("entity_id").as("r_entity"), col("ts").as("r_ts"),
+        col("value").as("r_value"))
+
+  /** An as-of lookup's output row: the error change, and its purchase
+    * match as `<label>_purchase_value` / `<label>_purchase_at`. */
+  private[graft] def asofColumns(label: String): Seq[Column] = Seq(
+    col("audit_id"), col("entity_id"), date_format(col("ts"), TS).as("err_at"),
+    col("r_value").as(s"${label}_purchase_value"),
+    date_format(col("r_ts"), TS).as(s"${label}_purchase_at"))
+
+  /** Each error-class change of the change log (audit_id, entity_id, ts)
+    * with the entity's latest purchase at or before it ([[asofPurchases]]),
+    * a match older than `tolerance` micros left NULL — through the custom
+    * AS-OF operator ([[graft.plans.AsOfJoinExec]]). */
+  private def errorPurchases(s: SparkSession, d: String,
+      tolerance: Option[Long] = None): DataFrame = {
+    val base = log(s, d)
+    graft.plans.AsOf.join(
+      base.filter(col("event_type") === "error").select("audit_id", "entity_id", "ts"),
+      asofPurchases(base), key = ("entity_id", "r_entity"), time = ("ts", "r_ts"),
+      tolerance = tolerance)
+  }
+
+  /** DuckDB twin of [[errorPurchases]] without the tolerance: the audit
+    * CTE with `l` and `r`, and the FROM clause of their ASOF join (a
+    * SELECT list goes between the two). */
+  private val duckAsofFrames: String =
+    auditCte + """, l AS (
+      |  SELECT audit_id, entity_id, ts FROM audit WHERE event_type = 'error'),
+      |r AS (SELECT entity_id AS r_entity, ts AS r_ts, value AS r_value
+      |      FROM audit WHERE event_type = 'purchase')""".stripMargin
+  private val duckAsofFrom: String =
+    """FROM l ASOF LEFT JOIN r
+      |  ON l.entity_id = r.r_entity AND l.ts >= r.r_ts
+      |ORDER BY l.audit_id""".stripMargin
+
   /** Point-in-time lookup via the engine's custom AS-OF JOIN operator
     * (graft.plans.AsOfJoinExec): for each delete-class change, the
     * entity's latest update-class value as of that moment — the
@@ -968,28 +1017,14 @@ object AuditQueries {
     * as a single sort-merge pass. */
   val auditAsofState: Q = Q.sql(
     "audit_asof_state",
-    auditCte + """, l AS (
-      |  SELECT audit_id, entity_id, ts FROM audit WHERE event_type = 'error'),
-      |r AS (SELECT entity_id AS r_entity, ts AS r_ts, value AS r_value
-      |      FROM audit WHERE event_type = 'purchase')
+    duckAsofFrames + """
       |SELECT l.audit_id, l.entity_id,
       |  strftime(l.ts, '%Y-%m-%d %H:%M:%S') AS err_at,
       |  r.r_value AS last_purchase_value,
       |  strftime(r.r_ts, '%Y-%m-%d %H:%M:%S') AS last_purchase_at
-      |FROM l ASOF LEFT JOIN r
-      |  ON l.entity_id = r.r_entity AND l.ts >= r.r_ts
-      |ORDER BY l.audit_id""".stripMargin) { (s, d) =>
-    val base = log(s, d)
-    val l = base.filter(col("event_type") === "error")
-      .select("audit_id", "entity_id", "ts")
-    val r = base.filter(col("event_type") === "purchase")
-      .select(col("entity_id").as("r_entity"), col("ts").as("r_ts"),
-        col("value").as("r_value"))
-    graft.plans.AsOf.join(l, r, key = ("entity_id", "r_entity"), time = ("ts", "r_ts"))
-      .select(col("audit_id"), col("entity_id"),
-        date_format(col("ts"), TS).as("err_at"),
-        col("r_value").as("last_purchase_value"),
-        date_format(col("r_ts"), TS).as("last_purchase_at"))
+      |""".stripMargin + duckAsofFrom) { (s, d) =>
+    errorPurchases(s, d)
+      .select(asofColumns("last"): _*)
       .orderBy("audit_id")
   }
 
@@ -1001,10 +1036,7 @@ object AuditQueries {
     * at explicit microsecond precision. */
   val auditAsofTolerance: Q = Q.sql(
     "audit_asof_tolerance",
-    auditCte + """, l AS (
-      |  SELECT audit_id, entity_id, ts FROM audit WHERE event_type = 'error'),
-      |r AS (SELECT entity_id AS r_entity, ts AS r_ts, value AS r_value
-      |      FROM audit WHERE event_type = 'purchase')
+    duckAsofFrames + """
       |SELECT l.audit_id, l.entity_id,
       |  strftime(l.ts, '%Y-%m-%d %H:%M:%S') AS err_at,
       |  CASE WHEN r.r_ts IS NOT NULL
@@ -1013,21 +1045,9 @@ object AuditQueries {
       |  CASE WHEN r.r_ts IS NOT NULL
       |         AND epoch_ns(l.ts) // 1000 - epoch_ns(r.r_ts) // 1000 <= 3600000000
       |    THEN strftime(r.r_ts, '%Y-%m-%d %H:%M:%S') END AS recent_purchase_at
-      |FROM l ASOF LEFT JOIN r
-      |  ON l.entity_id = r.r_entity AND l.ts >= r.r_ts
-      |ORDER BY l.audit_id""".stripMargin) { (s, d) =>
-    val base = log(s, d)
-    val l = base.filter(col("event_type") === "error")
-      .select("audit_id", "entity_id", "ts")
-    val r = base.filter(col("event_type") === "purchase")
-      .select(col("entity_id").as("r_entity"), col("ts").as("r_ts"),
-        col("value").as("r_value"))
-    graft.plans.AsOf.join(l, r, key = ("entity_id", "r_entity"),
-        time = ("ts", "r_ts"), tolerance = Some(3600L * 1000000L))
-      .select(col("audit_id"), col("entity_id"),
-        date_format(col("ts"), TS).as("err_at"),
-        col("r_value").as("recent_purchase_value"),
-        date_format(col("r_ts"), TS).as("recent_purchase_at"))
+      |""".stripMargin + duckAsofFrom) { (s, d) =>
+    errorPurchases(s, d, tolerance = Some(3600L * 1000000L))
+      .select(asofColumns("recent"): _*)
       .orderBy("audit_id")
   }
 
@@ -1149,26 +1169,32 @@ object AuditQueries {
     * between the appends (metadata-only walk): a configured
     * maxRecordsPerFile or future AQE rebalance splitting a day fails
     * loudly here instead of silently breaking the cross-engine hash. */
-  private def healthSink(s: SparkSession, d: String): String =
-    graft.Scratch.cachedExport("sink-health", d) { dir =>
-      val base = log(s, d)
-      graft.sources.FeedSources.appendPartitioned(
-        base.repartition(to_date(col("ts"))), dir)
-      graft.sources.FeedSources.assertMaxFilesPerPartition(s, dir, 1, "day=")
-      graft.sources.FeedSources.appendPartitioned(
-        base.filter(col("audit_id") % 97 === 0).repartition(1), dir)
-    }
+  private def healthSink(s: SparkSession, d: String): DataFrame =
+    graft.sources.FeedSources.partitionHealth(s,
+      graft.Scratch.cachedExport(s, "sink-health", d) { dir =>
+        val base = log(s, d)
+        graft.sources.FeedSources.appendPartitioned(
+          base.repartition(to_date(col("ts"))), dir)
+        graft.sources.FeedSources.assertMaxFilesPerPartition(s, dir, 1, "day=")
+        graft.sources.FeedSources.appendPartitioned(
+          base.filter(col("audit_id") % 97 === 0).repartition(1), dir)
+      })
 
-  val auditPartitionHealth: Q = Q.sql(
-    "audit_partition_health",
-    """WITH base AS (
+  /** DuckDB twin of [[healthSink]]'s two appends: rows per day of the base
+    * write (`base`) and of the replayed batch (`rep`). */
+  private val duckHealthSink: String =
+    """base AS (
       |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
       |    CAST(count(*) AS BIGINT) AS n
       |  FROM events GROUP BY 1),
       |rep AS (
       |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
       |    CAST(count(*) AS BIGINT) AS n
-      |  FROM events WHERE event_id % 97 = 0 GROUP BY 1)
+      |  FROM events WHERE event_id % 97 = 0 GROUP BY 1)""".stripMargin
+
+  val auditPartitionHealth: Q = Q.sql(
+    "audit_partition_health",
+    s"""WITH $duckHealthSink
       |SELECT b.day,
       |  CAST(CASE WHEN r.n IS NULL THEN 1 ELSE 2 END AS BIGINT) AS n_files,
       |  CAST(b.n + coalesce(r.n, 0) AS BIGINT) AS n_rows,
@@ -1180,7 +1206,7 @@ object AuditQueries {
       |  (b.n + coalesce(r.n, 0) > 1000000) AS oversized
       |FROM base b LEFT JOIN rep r ON b.day = r.day
       |ORDER BY b.day""".stripMargin) { (s, d) =>
-    graft.sources.FeedSources.partitionHealth(s, healthSink(s, d))
+    healthSink(s, d)
       .select(col("day"), col("n_files"), col("n_rows"),
         col("min_file_rows"), col("max_file_rows"),
         (col("n_files") > 1).as("needs_compact"),
@@ -1204,14 +1230,7 @@ object AuditQueries {
     * 4-job rollup run on that bounded frame. */
   val auditCompactionPlan: Q = Q.sql(
     "audit_compaction_plan",
-    """WITH base AS (
-      |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-      |    CAST(count(*) AS BIGINT) AS n
-      |  FROM events GROUP BY 1),
-      |rep AS (
-      |  SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-      |    CAST(count(*) AS BIGINT) AS n
-      |  FROM events WHERE event_id % 97 = 0 GROUP BY 1),
+    s"""WITH $duckHealthSink,
       |cand AS (SELECT b.day, b.n + r.n AS n_rows, 2 AS n_files
       |         FROM base b JOIN rep r ON b.day = r.day),
       |rk AS (SELECT day, n_rows, n_files,
@@ -1230,7 +1249,7 @@ object AuditQueries {
       |  round(CAST(sum(n_rows) AS DOUBLE) * 4 / t.tot, 4) AS skew
       |FROM j CROSS JOIN t GROUP BY job, t.tot
       |ORDER BY job""".stripMargin) { (s, d) =>
-    val cand = graft.sources.FeedSources.partitionHealth(s, healthSink(s, d))
+    val cand = healthSink(s, d)
       .filter(col("n_files") > 1)
       .select(col("day"), col("n_rows"), col("n_files"))
     val rk = cand.withColumn("rk",
@@ -1254,13 +1273,21 @@ object AuditQueries {
       .orderBy("job")
   }
 
-  /** Reference audit.audit_history true semantics (audit.go:608-625):
-    * contiguous ranges during which auditing was live, derived from the
-    * record itself as gaps-and-islands over covered hours per operation —
-    * an hour gap in the capture stream ends a range, making coverage holes
-    * visible instead of silent. */
-  val auditEnabledRanges: Q = Q.sql(
-    "audit_enabled_ranges",
+  /** Changes per (operation, hour) of the change log (`hrs`: operation,
+    * h, n), and the same hours with their island id `grp` (`isl`): the
+    * consecutive hours of one operation share it, so an hour gap in the
+    * capture stream starts a new island (gaps-and-islands). */
+  private def hourIslands(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val hrs = log(s, d)
+      .groupBy(col("operation"), date_trunc("hour", col("ts")).as("h"))
+      .agg(count(lit(1)).as("n"))
+    (hrs, hrs.withColumn("grp",
+      expr("unix_timestamp(h) div 3600")
+        - row_number().over(Window.partitionBy("operation").orderBy("h"))))
+  }
+
+  /** DuckDB twin of [[hourIslands]]: the audit CTE, then `hrs` and `isl`. */
+  private val duckHourIslands: String =
     auditCte + """, hrs AS (
       |  SELECT operation, date_trunc('hour', ts) AS h, count(*) AS n
       |  FROM audit GROUP BY 1, 2),
@@ -1268,19 +1295,23 @@ object AuditQueries {
       |  SELECT operation, h, n,
       |    CAST(floor(epoch(h)) AS BIGINT) // 3600
       |      - row_number() OVER (PARTITION BY operation ORDER BY h) AS grp
-      |  FROM hrs)
+      |  FROM hrs)""".stripMargin
+
+  /** Reference audit.audit_history true semantics (audit.go:608-625):
+    * contiguous ranges during which auditing was live, derived from the
+    * record itself as gaps-and-islands over covered hours per operation —
+    * an hour gap in the capture stream ends a range, making coverage holes
+    * visible instead of silent. */
+  val auditEnabledRanges: Q = Q.sql(
+    "audit_enabled_ranges",
+    duckHourIslands + """
       |SELECT operation,
       |  strftime(min(h), '%Y-%m-%d %H:%M:%S') AS enabled_from,
       |  strftime(max(h), '%Y-%m-%d %H:%M:%S') AS enabled_to,
       |  count(*) AS n_hours, CAST(sum(n) AS BIGINT) AS n_changes
       |FROM isl GROUP BY operation, grp
       |ORDER BY operation, enabled_from""".stripMargin) { (s, d) =>
-    val hrs = log(s, d)
-      .groupBy(col("operation"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("n"))
-    val isl = hrs.withColumn("grp",
-      expr("unix_timestamp(h) div 3600")
-        - row_number().over(Window.partitionBy("operation").orderBy("h")))
+    val (_, isl) = hourIslands(s, d)
     isl.groupBy("operation", "grp")
       .agg(
         date_format(min("h"), TS).as("enabled_from"),
@@ -1862,13 +1893,27 @@ object AuditQueries {
     * Scale shape: the raw feed collapses to the |ops|×|days| daily grid
     * first (one partial-agg groupBy); the range window then runs on that
     * bounded aggregate — never on raw history. */
-  val auditRollingVolume: Q = Q.sql(
-    "audit_rolling_volume",
+  /** Changes per (operation, day) of the change log, with the day's
+    * integer index `day_num` (days since 1970-01-01) for RANGE frames and
+    * day-offset joins: (operation, day, day_num, n_changes). */
+  private def dailyChanges(s: SparkSession, d: String): DataFrame =
+    log(s, d)
+      .groupBy(col("operation"), to_date(col("ts")).as("day"),
+        datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
+          .as("day_num"))
+      .agg(count(lit(1)).as("n_changes"))
+
+  /** DuckDB twin of [[dailyChanges]]: the audit CTE, then `g`. */
+  private val duckDailyChanges: String =
     auditCte + """, g AS (
       |  SELECT operation, CAST(ts AS DATE) AS day,
       |    date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day_num,
       |    count(*) AS n_changes
-      |  FROM audit GROUP BY 1, 2, 3)
+      |  FROM audit GROUP BY 1, 2, 3)""".stripMargin
+
+  val auditRollingVolume: Q = Q.sql(
+    "audit_rolling_volume",
+    duckDailyChanges + """
       |SELECT operation, day, n_changes,
       |  CAST(sum(n_changes) OVER w AS BIGINT) AS sum_7d,
       |  round(avg(n_changes) OVER w, 4) AS avg_7d
@@ -1878,11 +1923,7 @@ object AuditQueries {
       |ORDER BY operation, day""".stripMargin) { (s, d) =>
     val w = Window.partitionBy("operation").orderBy("day_num")
       .rangeBetween(-6, Window.currentRow)
-    log(s, d)
-      .groupBy(col("operation"), to_date(col("ts")).as("day"),
-        datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-          .as("day_num"))
-      .agg(count(lit(1)).as("n_changes"))
+    dailyChanges(s, d)
       .select(col("operation"), col("day"), col("n_changes"),
         sum("n_changes").over(w).cast("long").as("sum_7d"),
         round(avg("n_changes").over(w), 4).as("avg_7d"))
@@ -2012,11 +2053,7 @@ object AuditQueries {
          |      / CAST(sum(CAST($wCase AS DECIMAL(20,0))) AS DOUBLE), 4)""".stripMargin
     Q.sql(
       "audit_ewma_volume",
-      auditCte + s""", g AS (
-        |  SELECT operation, CAST(ts AS DATE) AS day,
-        |    date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day_num,
-        |    count(*) AS n_changes
-        |  FROM audit GROUP BY 1, 2, 3),
+      duckDailyChanges + s""",
         |e AS (
         |  SELECT a.operation, a.day, a.n_changes, $ewmaExpr AS ewma_14d
         |  FROM g a JOIN g b ON a.operation = b.operation
@@ -2027,11 +2064,7 @@ object AuditQueries {
         |  (round(n_changes / ewma_14d, 4) >= 2.0
         |   OR round(n_changes / ewma_14d, 4) <= 0.5) AS anomaly
         |FROM e ORDER BY operation, day""".stripMargin) { (s, d) =>
-      val g = log(s, d)
-        .groupBy(col("operation"), to_date(col("ts")).as("day"),
-          datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-            .as("day_num"))
-        .agg(count(lit(1)).as("n_changes"))
+      val g = dailyChanges(s, d)
       val ratio = round(col("n_changes") / col("ewma_14d"), 4)
       g.as("a")
         .join(g.as("b"),
@@ -2257,38 +2290,6 @@ object AuditQueries {
     * back as a broadcast. All medians are exact integers (lower median:
     * rank (cnt+1)/2 under a (value, day) total order), so z is one
     * shared double expression over exact ints, rounded once. */
-  /** Calendar-filled (day, operation, n) daily frame — zero-count days
-    * INCLUDED (a silent feed is the anomaly the volume monitors exist to
-    * catch). Shared by audit_volume_mad and audit_cusum; ≤ |ops|×|days|
-    * rows at any feed size. */
-  private val filledDailyCtes: String =
-    """, d AS (
-      |  SELECT CAST(ts AS DATE) AS day, operation, count(*) AS n
-      |  FROM audit GROUP BY 1, 2),
-      |bounds AS (
-      |  SELECT min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1 FROM audit),
-      |days AS (
-      |  SELECT CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-      |    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS day FROM bounds),
-      |grid AS (
-      |  SELECT day, operation
-      |  FROM days CROSS JOIN (SELECT DISTINCT operation FROM audit)),
-      |filled AS (
-      |  SELECT grid.day, grid.operation, CAST(coalesce(d.n, 0) AS BIGINT) AS n
-      |  FROM grid LEFT JOIN d ON grid.day = d.day AND grid.operation = d.operation)""".stripMargin
-
-  /** Spark twin of [[filledDailyCtes]]. */
-  private def filledDaily(s: SparkSession, d: String): DataFrame = {
-    val counts = log(s, d)
-      .groupBy(col("ts").cast("date").as("day"), col("operation"))
-      .agg(count(lit(1)).as("n"))
-    val days = counts.agg(min("day").as("d0"), max("day").as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    days.crossJoin(counts.select("operation").distinct())
-      .join(counts, Seq("day", "operation"), "left")
-      .withColumn("n", coalesce(col("n"), lit(0L)).cast("long"))
-  }
-
   val auditVolumeMad: Q = Q.sql(
     "audit_volume_mad",
     auditCte + filledDailyCtes + """,
@@ -2928,14 +2929,7 @@ object AuditQueries {
     * posture, never against raw feed rows). */
   val auditBlindSpots: Q = Q.sql(
     "audit_blind_spots",
-    auditCte + """, hrs AS (
-      |  SELECT operation, date_trunc('hour', ts) AS h, count(*) AS n
-      |  FROM audit GROUP BY 1, 2),
-      |isl AS (
-      |  SELECT operation, h, n,
-      |    CAST(floor(epoch(h)) AS BIGINT) // 3600
-      |      - row_number() OVER (PARTITION BY operation ORDER BY h) AS grp
-      |  FROM hrs),
+    duckHourIslands + """,
       |islands AS (
       |  SELECT operation, min(h) AS efrom, max(h) AS eto
       |  FROM isl GROUP BY operation, grp),
@@ -2959,12 +2953,7 @@ object AuditQueries {
       |  strftime(gap_to, '%Y-%m-%d %H:%M:%S') AS gap_to,
       |  n_hours_dark, other_changes, n_other_ops
       |FROM dark ORDER BY operation, gap_from""".stripMargin) { (s, d) =>
-    val hrs = log(s, d)
-      .groupBy(col("operation"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("n"))
-    val isl = hrs.withColumn("grp",
-      expr("unix_timestamp(h) div 3600")
-        - row_number().over(Window.partitionBy("operation").orderBy("h")))
+    val (hrs, isl) = hourIslands(s, d)
     val islands = isl.groupBy("operation", "grp")
       .agg(min("h").as("efrom"), max("h").as("eto"))
     val w = Window.partitionBy("operation").orderBy("efrom")
@@ -3077,10 +3066,10 @@ object AuditQueries {
        |  CAST(count(*) AS BIGINT) AS n, ${Det.dsumRoundSql("value", 2)} AS total_value
        |FROM events WHERE event_id > 500
        |GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin) { (s, d) =>
-    // export memoized per dataset path (pure function of the feed) and
-    // shutdown-hook cleaned — repeated bench runs reuse one export
-    // instead of leaking a fresh full feed copy per invocation
-    val tmp = graft.Scratch.cachedExport("gfc", d) { dir =>
+    // export memoized per dataset path and file listing (pure function of
+    // the feed) and shutdown-hook cleaned — repeated bench runs reuse one
+    // export instead of leaking a fresh full feed copy per invocation
+    val tmp = graft.Scratch.cachedExport(s, "gfc", d) { dir =>
       graft.sources.GraftFeedFormat.write(Tables.events(s, d), dir)
     }
     val fd = graft.sources.FeedSources.normalize(

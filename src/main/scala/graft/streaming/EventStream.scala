@@ -550,10 +550,8 @@ object EventStream {
     { (s: SparkSession, d: String) =>
       val tmp = graft.Scratch.dir("graft-asof-stream-")
       val sink = s"$tmp/sink"
-      val purchases = graft.audit.AuditQueries.log(s, d)
-        .filter(col("event_type") === "purchase")
-        .select(col("entity_id").as("r_entity"), col("ts").as("r_ts"),
-          col("value").as("r_value"))
+      val purchases = graft.audit.AuditQueries.asofPurchases(
+        graft.audit.AuditQueries.log(s, d))
       val errors = readFeed(s, d).filter(col("event_type") === "error")
         .select(col("event_id").as("audit_id"), col("user_id").as("entity_id"),
           col("ts"))
@@ -566,10 +564,7 @@ object EventStream {
       // the last writer per audit_id is what makes the "crash-replayed
       // matches batch byte-for-byte" contract hold under retries
       lastWriter(s.read.parquet(sink), "audit_id")
-        .select(col("audit_id"), col("entity_id"),
-          date_format(col("ts"), TS).as("err_at"),
-          col("r_value").as("last_purchase_value"),
-          date_format(col("r_ts"), TS).as("last_purchase_at"))
+        .select(graft.audit.AuditQueries.asofColumns("last"): _*)
         .orderBy("audit_id")
     },
     graft.audit.AuditQueries.auditAsofState.oracle)

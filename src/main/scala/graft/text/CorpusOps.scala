@@ -2,8 +2,8 @@ package graft.text
 
 import graft.Q
 import graft.Tables.{documents => docs}
-import graft.text.Tokens.{distinctTexts, duckDistinctTexts, duckGrams, duckWordList,
-  duckWords, grams, shingles, words}
+import graft.text.Tokens.{distinctTexts, duckDistinctTexts, duckDocGroups, duckGrams,
+  duckShingleRows, duckWordList, duckWords, grams, shingles, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -50,6 +50,18 @@ object CorpusOps {
   private[graft] val passAllSql: String = ruleFlags
     .map { case (_, p) => s"(CASE WHEN $p THEN 1 ELSE 0 END)" }
     .mkString(" + ") + " = 0"
+
+  /** DuckDB twin of [[withQualityFlags]]: per document, its `keep`
+    * columns with the features (`f`), then `keep`, n_words and the rule
+    * flags (`r`). */
+  private def duckQualityFlags(keep: String): String =
+    s"""f AS (
+       |  SELECT $keep,
+       |    $duckQualityFeatures
+       |  FROM documents),
+       |r AS (SELECT $keep, n_words,
+       |    $duckFlagExprs
+       |  FROM f)""".stripMargin
 
   /** Adds the feature + per-rule flag columns on the Spark side (rule
     * predicates are the exact strings the oracles use). */
@@ -122,13 +134,7 @@ object CorpusOps {
     * 0.46, avg word len 3.7-5.3) so every rule actually discriminates. */
   val qualityFilter: Q = Q.sql(
     "quality_filter",
-    s"""WITH f AS (
-      |  SELECT doc_id,
-      |    $duckQualityFeatures
-      |  FROM documents),
-      |r AS (SELECT doc_id, n_words,
-      |    $duckFlagExprs
-      |  FROM f)
+    s"""WITH ${duckQualityFlags("doc_id")}
       |SELECT doc_id, n_words, ${ruleFlags.map(_._1).mkString(", ")},
       |  ${ruleFlags.map(_._1).mkString(" + ")} AS n_failed,
       |  CASE WHEN ${ruleFlags.map(_._1).mkString(" + ")} = 0
@@ -171,13 +177,7 @@ object CorpusOps {
     }.mkString("\n  UNION ALL\n  ")
     Q.sql(
       "quality_source_matrix",
-      s"""WITH f AS (
-        |  SELECT doc_id, source,
-        |    $duckQualityFeatures
-        |  FROM documents),
-        |r AS (SELECT source,
-        |    $duckFlagExprs
-        |  FROM f),
+      s"""WITH ${duckQualityFlags("source")},
         |g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |    ${ruleFlags.map { case (n, _) =>
                s"CAST(sum($n) AS BIGINT) AS $n" }.mkString(",\n    ")}
@@ -324,110 +324,106 @@ object CorpusOps {
     * distinct-hit counts partial-aggregate on doc_id, the rollup is
     * bounded at |sources| rows, and the totals side is one
     * partial-aggregating groupBy of the raw table. */
-  val contaminationSources: Q = Q.sqlDual(
-    "contamination_sources",
-    s"""WITH ${duckWords("doc_id, source")},
-      |ex AS (SELECT doc_id, source, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
-      |b AS (SELECT doc_id AS bench_id, shingle FROM ex WHERE doc_id % 29 = 0),
-      |h AS (SELECT c.doc_id, c.source, c.shingle, b.bench_id
-      |      FROM ex c JOIN b USING (shingle) WHERE c.doc_id % 29 <> 0),
-      |pd AS (SELECT doc_id, source, count(DISTINCT shingle) AS hs FROM h GROUP BY 1, 2),
-      |ps AS (SELECT source, CAST(count(*) AS BIGINT) AS n_contaminated,
-      |         CAST(sum(hs) AS BIGINT) AS n_hit_shingles
-      |       FROM pd GROUP BY 1),
-      |pb AS (SELECT source, CAST(count(DISTINCT bench_id) AS BIGINT) AS n_bench_docs
-      |       FROM h GROUP BY 1),
-      |t AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-      |      FROM documents WHERE doc_id % 29 <> 0 GROUP BY 1)
-      |SELECT t.source, t.n_docs,
-      |  coalesce(ps.n_contaminated, 0) AS n_contaminated,
-      |  round(1.0 * coalesce(ps.n_contaminated, 0) / t.n_docs, 4) AS contam_rate,
-      |  coalesce(pb.n_bench_docs, 0) AS n_bench_docs,
-      |  coalesce(ps.n_hit_shingles, 0) AS n_hit_shingles
-      |FROM t LEFT JOIN ps ON t.source = ps.source
-      |       LEFT JOIN pb ON t.source = pb.source
-      |ORDER BY t.source""".stripMargin,
-    // Collapsed scale twin: same content-collapse discipline as the
-    // decontaminate twin, with the source dimension carried on the
-    // (content, source) multiplicity table rather than the explode — the
-    // shingle work and the content-pair graph stay sf0.1-sized at any
-    // replication depth. Output is |sources|-bounded, so the final
-    // rollup is trivially checkable.
-    s"""WITH gts AS MATERIALIZED (
-      |  SELECT md5(text) AS tk, source,
-      |    CAST(sum(CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS mb,
-      |    CAST(sum(CASE WHEN doc_id % 29 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS mc
-      |  FROM documents GROUP BY 1, 2),
-      |${duckDistinctTexts(name = "gt")},
-      |${duckWords("tk", "gt")},
-      |ex AS MATERIALIZED (
-      |  SELECT tk, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
-      |bb AS (SELECT tk, source, mb FROM gts WHERE mb >= 1),
-      |bsh AS MATERIALIZED (
-      |  SELECT e.tk AS btk, e.shingle FROM ex e
-      |  WHERE e.tk IN (SELECT DISTINCT tk FROM bb)),
-      |hs AS (SELECT e.tk, CAST(count(*) AS BIGINT) AS hs FROM ex e
-      |       WHERE e.shingle IN (SELECT DISTINCT shingle FROM bsh) GROUP BY 1),
-      |ps AS (SELECT g.source, CAST(sum(g.mc) AS BIGINT) AS n_contaminated,
-      |         CAST(sum(g.mc * h.hs) AS BIGINT) AS n_hit_shingles
-      |       FROM gts g JOIN hs h USING (tk) WHERE g.mc > 0 GROUP BY 1),
-      |cs AS (SELECT DISTINCT g.source, e.shingle
-      |       FROM gts g JOIN ex e ON e.tk = g.tk WHERE g.mc > 0),
-      |hitb AS (SELECT DISTINCT c.source, b.btk FROM cs c JOIN bsh b USING (shingle)),
-      |pb AS (SELECT h.source, CAST(sum(bb2.mbs) AS BIGINT) AS n_bench_docs
-      |       FROM hitb h
-      |       JOIN (SELECT tk, CAST(sum(mb) AS BIGINT) AS mbs FROM bb GROUP BY 1) bb2
-      |         ON bb2.tk = h.btk
-      |       GROUP BY 1),
-      |t AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-      |      FROM documents WHERE doc_id % 29 <> 0 GROUP BY 1)
-      |SELECT t.source, t.n_docs,
-      |  coalesce(ps.n_contaminated, 0) AS n_contaminated,
-      |  round(1.0 * coalesce(ps.n_contaminated, 0) / t.n_docs, 4) AS contam_rate,
-      |  coalesce(pb.n_bench_docs, 0) AS n_bench_docs,
-      |  coalesce(ps.n_hit_shingles, 0) AS n_hit_shingles
-      |FROM t LEFT JOIN ps ON t.source = ps.source
-      |       LEFT JOIN pb ON t.source = pb.source
-      |ORDER BY t.source""".stripMargin) { (s, d) =>
-    // The quadratic trap here (found by the round-10 100x bench leg) is
-    // pairing corpus shingle occurrences with bench DOCS: a shingle in b
-    // bench docs and c corpus docs makes b·c join rows — replication-
-    // quadratic, and a replicated crawl puts twins on BOTH sides. The
-    // per-doc counts only need membership in the distinct bench-shingle
-    // SET (content-bounded), and the bench-doc dimension only needs
-    // (shingle, source) pairs — |sources|-bounded per shingle — so
-    // neither side ever enumerates doc×doc pairs. (The former
-    // broadcast(bench) also pinned an sf-scaling frame to the driver;
-    // the distinct set joins un-hinted, AQE decides.)
-    val ex = docs(s, d)
-      .select(col("doc_id"), col("source"), words.as("ws"))
-      .select(col("doc_id"), col("source"),
-        grams(4, distinct = true).as("shingle"))
-    val bench = ex.filter(col("doc_id") % 29 === 0)
-      .select(col("doc_id").as("bench_id"), col("shingle"))
-    val corpus = ex.filter(col("doc_id") % 29 =!= 0)
-    val ps = corpus
-      .join(bench.select("shingle").distinct(), Seq("shingle"), "left_semi")
-      // shingles are already distinct per doc (array_distinct above), so
-      // the per-doc hit count is a plain count — no count_distinct state
-      .groupBy("doc_id", "source").agg(count(lit(1)).as("hs"))
-      .groupBy("source")
-      .agg(count(lit(1)).cast("long").as("n_contaminated"),
-        sum("hs").cast("long").as("n_hit_shingles"))
-    val pb = bench
-      .join(corpus.select("source", "shingle").distinct(), Seq("shingle"))
-      .groupBy("source")
-      .agg(count_distinct(col("bench_id")).cast("long").as("n_bench_docs"))
-    val t = docs(s, d).filter(col("doc_id") % 29 =!= 0)
-      .groupBy("source").agg(count(lit(1)).cast("long").as("n_docs"))
-    t.join(ps, Seq("source"), "left").join(pb, Seq("source"), "left")
-      .select(col("source"), col("n_docs"),
-        coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
-        round(lit(1.0) * coalesce(col("n_contaminated"), lit(0L)) / col("n_docs"), 4)
-          .as("contam_rate"),
-        coalesce(col("n_bench_docs"), lit(0L)).as("n_bench_docs"),
-        coalesce(col("n_hit_shingles"), lit(0L)).as("n_hit_shingles"))
-      .orderBy("source")
+  val contaminationSources: Q = {
+    // the per-source rollup both oracles end with, over `ps` (per-source
+    // contaminated docs and hit shingles) and `pb` (leaked bench docs)
+    val tail =
+      """t AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+        |      FROM documents WHERE doc_id % 29 <> 0 GROUP BY 1)
+        |SELECT t.source, t.n_docs,
+        |  coalesce(ps.n_contaminated, 0) AS n_contaminated,
+        |  round(1.0 * coalesce(ps.n_contaminated, 0) / t.n_docs, 4) AS contam_rate,
+        |  coalesce(pb.n_bench_docs, 0) AS n_bench_docs,
+        |  coalesce(ps.n_hit_shingles, 0) AS n_hit_shingles
+        |FROM t LEFT JOIN ps ON t.source = ps.source
+        |       LEFT JOIN pb ON t.source = pb.source
+        |ORDER BY t.source""".stripMargin
+    Q.sqlDual(
+      "contamination_sources",
+      s"""WITH ${duckWords("doc_id, source")},
+        |ex AS (SELECT doc_id, source, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
+        |b AS (SELECT doc_id AS bench_id, shingle FROM ex WHERE doc_id % 29 = 0),
+        |h AS (SELECT c.doc_id, c.source, c.shingle, b.bench_id
+        |      FROM ex c JOIN b USING (shingle) WHERE c.doc_id % 29 <> 0),
+        |pd AS (SELECT doc_id, source, count(DISTINCT shingle) AS hs FROM h GROUP BY 1, 2),
+        |ps AS (SELECT source, CAST(count(*) AS BIGINT) AS n_contaminated,
+        |         CAST(sum(hs) AS BIGINT) AS n_hit_shingles
+        |       FROM pd GROUP BY 1),
+        |pb AS (SELECT source, CAST(count(DISTINCT bench_id) AS BIGINT) AS n_bench_docs
+        |       FROM h GROUP BY 1),
+        |$tail""".stripMargin,
+      // Collapsed scale twin: same content-collapse discipline as the
+      // decontaminate twin, with the source dimension carried on the
+      // (content, source) multiplicity table rather than the explode — the
+      // shingle work and the content-pair graph stay sf0.1-sized at any
+      // replication depth. Output is |sources|-bounded, so the final
+      // rollup is trivially checkable.
+      s"""WITH ${duckDistinctTexts(Seq(
+          "CAST(sum(CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS mb",
+          "CAST(sum(CASE WHEN doc_id % 29 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS mc"),
+          name = "gts", keys = Seq("source"))},
+        |${duckDistinctTexts(name = "gt")},
+        |${duckWords("tk", "gt")},
+        |ex AS MATERIALIZED (
+        |  SELECT tk, unnest(list_distinct(${duckGrams(4)})) AS shingle FROM w),
+        |bb AS (SELECT tk, source, mb FROM gts WHERE mb >= 1),
+        |bsh AS MATERIALIZED (
+        |  SELECT e.tk AS btk, e.shingle FROM ex e
+        |  WHERE e.tk IN (SELECT DISTINCT tk FROM bb)),
+        |hs AS (SELECT e.tk, CAST(count(*) AS BIGINT) AS hs FROM ex e
+        |       WHERE e.shingle IN (SELECT DISTINCT shingle FROM bsh) GROUP BY 1),
+        |ps AS (SELECT g.source, CAST(sum(g.mc) AS BIGINT) AS n_contaminated,
+        |         CAST(sum(g.mc * h.hs) AS BIGINT) AS n_hit_shingles
+        |       FROM gts g JOIN hs h USING (tk) WHERE g.mc > 0 GROUP BY 1),
+        |cs AS (SELECT DISTINCT g.source, e.shingle
+        |       FROM gts g JOIN ex e ON e.tk = g.tk WHERE g.mc > 0),
+        |hitb AS (SELECT DISTINCT c.source, b.btk FROM cs c JOIN bsh b USING (shingle)),
+        |pb AS (SELECT h.source, CAST(sum(bb2.mbs) AS BIGINT) AS n_bench_docs
+        |       FROM hitb h
+        |       JOIN (SELECT tk, CAST(sum(mb) AS BIGINT) AS mbs FROM bb GROUP BY 1) bb2
+        |         ON bb2.tk = h.btk
+        |       GROUP BY 1),
+        |$tail""".stripMargin) { (s, d) =>
+      // The quadratic trap here (found by the round-10 100x bench leg) is
+      // pairing corpus shingle occurrences with bench DOCS: a shingle in b
+      // bench docs and c corpus docs makes b·c join rows — replication-
+      // quadratic, and a replicated crawl puts twins on BOTH sides. The
+      // per-doc counts only need membership in the distinct bench-shingle
+      // SET (content-bounded), and the bench-doc dimension only needs
+      // (shingle, source) pairs — |sources|-bounded per shingle — so
+      // neither side ever enumerates doc×doc pairs. (The former
+      // broadcast(bench) also pinned an sf-scaling frame to the driver;
+      // the distinct set joins un-hinted, AQE decides.)
+      val ex = docs(s, d)
+        .select(col("doc_id"), col("source"), words.as("ws"))
+        .select(col("doc_id"), col("source"),
+          grams(4, distinct = true).as("shingle"))
+      val bench = ex.filter(col("doc_id") % 29 === 0)
+        .select(col("doc_id").as("bench_id"), col("shingle"))
+      val corpus = ex.filter(col("doc_id") % 29 =!= 0)
+      val ps = corpus
+        .join(bench.select("shingle").distinct(), Seq("shingle"), "left_semi")
+        // shingles are already distinct per doc (array_distinct above), so
+        // the per-doc hit count is a plain count — no count_distinct state
+        .groupBy("doc_id", "source").agg(count(lit(1)).as("hs"))
+        .groupBy("source")
+        .agg(count(lit(1)).cast("long").as("n_contaminated"),
+          sum("hs").cast("long").as("n_hit_shingles"))
+      val pb = bench
+        .join(corpus.select("source", "shingle").distinct(), Seq("shingle"))
+        .groupBy("source")
+        .agg(count_distinct(col("bench_id")).cast("long").as("n_bench_docs"))
+      val t = docs(s, d).filter(col("doc_id") % 29 =!= 0)
+        .groupBy("source").agg(count(lit(1)).cast("long").as("n_docs"))
+      t.join(ps, Seq("source"), "left").join(pb, Seq("source"), "left")
+        .select(col("source"), col("n_docs"),
+          coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
+          round(lit(1.0) * coalesce(col("n_contaminated"), lit(0L)) / col("n_docs"), 4)
+            .as("contam_rate"),
+          coalesce(col("n_bench_docs"), lit(0L)).as("n_bench_docs"),
+          coalesce(col("n_hit_shingles"), lit(0L)).as("n_hit_shingles"))
+        .orderBy("source")
+    }
   }
 
   /** Bloom hash family for [[decontaminateBloom]] — k = 3 affine hashes
@@ -793,6 +789,28 @@ object CorpusOps {
       .orderBy("lang", "source", "rk")
   }
 
+  /** Per-language docs, tokens and temperature weight `wgt` = √tokens
+    * (T = 2), rounded once to DECIMAL(18,4): (lang, n_docs, tokens, wgt).
+    * One partial-aggregating groupBy on lang. */
+  private def langWeights(s: SparkSession, d: String): DataFrame =
+    docs(s, d)
+      .select(col("lang"), size(words).as("n_tok"))
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tokens"))
+      .withColumn("wgt",
+        round(sqrt(lit(1.0) * col("tokens")), 4).cast("decimal(18,4)"))
+
+  /** DuckDB twin of [[langWeights]]: the CTE `w`, with the totals `t`
+    * (sum_wgt, sum_tokens). */
+  private val duckLangWeights: String =
+    s"""s AS (SELECT lang, count(*) AS n_docs,
+       |        sum(len(${duckWordList()})) AS tokens
+       |      FROM documents GROUP BY 1),
+       |w AS (SELECT lang, n_docs, tokens,
+       |        CAST(round(sqrt(1.0 * tokens), 4) AS DECIMAL(18, 4)) AS wgt
+       |      FROM s),
+       |t AS (SELECT sum(wgt) AS sum_wgt, sum(tokens) AS sum_tokens FROM w)""".stripMargin
+
   /** Temperature-scaled mixing weights per language — the multilingual
     * sampling standard: raw share pᵢ = tokensᵢ/Σtokens is flattened to
     * wᵢ ∝ tokensᵢ^(1/T) with T = 2 (i.e. √tokens), so low-resource
@@ -809,13 +827,7 @@ object CorpusOps {
     * divide ROUNDED values, so a shuffle cannot move a weight. */
   val corpusTemperature: Q = Q.sql(
     "corpus_temperature",
-    s"""WITH s AS (SELECT lang, count(*) AS n_docs,
-      |        sum(len(${duckWordList()})) AS tokens
-      |      FROM documents GROUP BY 1),
-      |w AS (SELECT lang, n_docs, tokens,
-      |        CAST(round(sqrt(1.0 * tokens), 4) AS DECIMAL(18, 4)) AS wgt
-      |      FROM s),
-      |t AS (SELECT sum(wgt) AS sum_wgt, sum(tokens) AS sum_tokens FROM w)
+    s"""WITH $duckLangWeights
       |SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
       |  CAST(tokens AS BIGINT) AS tokens,
       |  round(1.0 * tokens / sum_tokens, 6) AS nat_share,
@@ -823,12 +835,7 @@ object CorpusOps {
       |  round(round(CAST(wgt AS DOUBLE) / CAST(sum_wgt AS DOUBLE), 6)
       |        / round(1.0 * tokens / sum_tokens, 6), 4) AS boost
       |FROM w CROSS JOIN t ORDER BY lang""".stripMargin) { (s, d) =>
-    val perLang = docs(s, d)
-      .select(col("lang"), size(words).as("n_tok"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tokens"))
-      .withColumn("wgt",
-        round(sqrt(lit(1.0) * col("tokens")), 4).cast("decimal(18,4)"))
+    val perLang = langWeights(s, d)
     // totals come from the per-lang AGGREGATE via an unpartitioned window
     // (≤ |langs| rows — bounded, never feed-sized), so the corpus is
     // scanned exactly once; a separate totals branch would re-scan and
@@ -879,6 +886,29 @@ object CorpusOps {
 
   // ---------------------------------------------------- sequence packing --
 
+  /** The per-source token tape: (doc_id, source, n_tok, start_off), each
+    * doc's word count and its start offset on its source's tape in doc_id
+    * order — one running-sum window per source partition. */
+  private def tokenTape(s: SparkSession, d: String): DataFrame = {
+    val tape = Window.partitionBy("source").orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    docs(s, d)
+      .select(col("doc_id"), col("source"),
+        size(words).as("n_tok"))
+      .withColumn("start_off",
+        (sum("n_tok").over(tape) - col("n_tok")).cast("long"))
+  }
+
+  /** DuckDB twin of [[tokenTape]]: the CTE `c`. */
+  private val duckTokenTape: String =
+    s"""t AS (SELECT doc_id, source, len(${duckWordList()}) AS n_tok
+       |           FROM documents),
+       |c AS (SELECT doc_id, source, n_tok,
+       |        CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
+       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok
+       |          AS BIGINT) AS start_off
+       |      FROM t)""".stripMargin
+
   /** Concatenate-and-chunk sequence packing: documents stream per source in
     * doc_id order into a contiguous token tape, cut into fixed 512-token
     * training sequences — the step that turns a curated corpus into model
@@ -893,26 +923,14 @@ object CorpusOps {
     * what makes checkpoint-resumable training data possible. */
   val packSequences: Q = Q.sql(
     "pack_sequences",
-    s"""WITH t AS (SELECT doc_id, source, len(${duckWordList()}) AS n_tok
-      |           FROM documents),
-      |c AS (SELECT doc_id, source, n_tok,
-      |        CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok
-      |          AS BIGINT) AS start_off
-      |      FROM t)
+    s"""WITH $duckTokenTape
       |SELECT doc_id, source, n_tok, start_off,
       |  start_off // 512 AS chunk_first,
       |  (start_off + n_tok - 1) // 512 AS chunk_last,
       |  CAST(start_off // 512 <> (start_off + n_tok - 1) // 512 AS INT)
       |    AS straddles
       |FROM c ORDER BY source, doc_id""".stripMargin) { (s, d) =>
-    val tape = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs(s, d)
-      .select(col("doc_id"), col("source"),
-        size(words).as("n_tok"))
-      .withColumn("start_off",
-        (sum("n_tok").over(tape) - col("n_tok")).cast("long"))
+    tokenTape(s, d)
       .select(col("doc_id"), col("source"), col("n_tok"), col("start_off"),
         expr("start_off div 512").as("chunk_first"),
         expr("(start_off + n_tok - 1) div 512").as("chunk_last"),
@@ -938,13 +956,7 @@ object CorpusOps {
     * single-rounded quotients. */
   val packEfficiency: Q = Q.sql(
     "pack_efficiency",
-    s"""WITH t AS (SELECT doc_id, source, len(${duckWordList()}) AS n_tok
-      |           FROM documents),
-      |c AS (SELECT doc_id, source, n_tok,
-      |        CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok
-      |          AS BIGINT) AS start_off
-      |      FROM t),
+    s"""WITH $duckTokenTape,
       |p AS (SELECT source, n_tok, start_off // 512 AS cf,
       |        (start_off + n_tok - 1) // 512 AS cl
       |      FROM c)
@@ -962,13 +974,7 @@ object CorpusOps {
       |  CAST(sum(cl - cf) AS BIGINT) AS n_crossings,
       |  round(1.0 * sum(cl - cf) / count(*), 4) AS crossings_per_doc
       |FROM p GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
-    val tape = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs(s, d)
-      .select(col("doc_id"), col("source"),
-        size(words).as("n_tok"))
-      .withColumn("start_off",
-        (sum("n_tok").over(tape) - col("n_tok")).cast("long"))
+    tokenTape(s, d)
       .withColumn("cf", expr("start_off div 512"))
       .withColumn("cl", expr("(start_off + n_tok - 1) div 512"))
       .groupBy("source")
@@ -1187,7 +1193,7 @@ object CorpusOps {
         col("hit_id").isNull)
       .withColumn("split", expr(splitCase(sparkBucket)))
       .select("doc_id", "source", "n_chars", "text", "split", "lang")
-    val dir = graft.Scratch.cachedExport("corpus-release", d) { out =>
+    val dir = graft.Scratch.cachedExport(s, "corpus-release", d) { out =>
       graft.sources.FeedSources.writeGuardedBy(kept0, out, Seq("split", "lang"))
     }
     // Read back with the writer's schema pinned: a release where zero
@@ -1250,10 +1256,7 @@ object CorpusOps {
     // explode exceeds single-box DuckDB (the doc_keyphrase_rake twin's
     // shape; MATERIALIZED pins each hop to one evaluation).
     val scaleOracle =
-      s"""WITH grp AS MATERIALIZED (SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS m,
-        |       text FROM documents GROUP BY text),
-        |gmr AS MATERIALIZED (SELECT d.doc_id, g.gid
-        |       FROM documents d JOIN grp g USING (text)),
+      s"""WITH $duckDocGroups,
         |${duckWords("gid, m", "grp")},
         |t AS (SELECT gid, m, len(ws) AS n, unnest(ws) AS term FROM w),
         |tf AS (SELECT gid, m, n, term, count(*) AS c FROM t GROUP BY 1, 2, 3, 4),
@@ -1705,28 +1708,61 @@ object CorpusOps {
     * integers rounded once to 6 decimals, products re-rounded to scale 6
     * (every sum stays ≤ 13 significant digits — exact as DOUBLE), all
     * final arithmetic in identically-shaped DOUBLE expressions. */
+  /** Per-(lang, term) counts `c` of the corpus. */
+  private def langTermCounts(s: SparkSession, d: String): DataFrame =
+    docs(s, d)
+      .select(col("lang"), explode(words).as("term"))
+      .groupBy("lang", "term").agg(count(lit(1)).as("c"))
+
+  /** The top-[[ZipfTopK]] terms per language of the counts `lc`, ranked
+    * `rnk` by (c DESC, term). Two-phase top-k: membership in the global
+    * top-k implies membership in the owning bucket's top-k under the same
+    * order, so the per-(lang, bucket) pre-pass only discards non-winners
+    * (the oracle needs no bucket model) and the global per-lang rank sees
+    * ≤ |buckets|×k survivors, never a whole vocabulary in one partition. */
+  private def topTermRanks(lc: DataFrame): DataFrame =
+    lc.withColumn("bucket", pmod(hash(col("term")), lit(ZipfBuckets)))
+      .withColumn("pre_rnk", row_number().over(
+        Window.partitionBy("lang", "bucket").orderBy(col("c").desc, col("term"))))
+      .filter(col("pre_rnk") <= ZipfTopK)
+      .drop("bucket", "pre_rnk")
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("lang").orderBy(col("c").desc, col("term"))))
+      .filter(col("rnk") <= ZipfTopK)
+
+  /** DuckDB twin of [[langTermCounts]] (`lc`) and the rank of
+    * [[topTermRanks]] before its cut (`r`: lang, c, rnk). */
+  private val duckTermRanks: String =
+    s"""w AS (SELECT lang, unnest(${duckWordList()}) AS term
+       |       FROM documents),
+       |lc AS (SELECT lang, term, CAST(count(*) AS BIGINT) AS c
+       |       FROM w GROUP BY 1, 2),
+       |r AS (SELECT lang, c,
+       |        row_number() OVER (PARTITION BY lang ORDER BY c DESC, term) AS rnk
+       |      FROM lc)""".stripMargin
+
+  /** The least-squares fit over the sufficient statistics nt, sx, sy,
+    * sxy, sxx, syy (exact DECIMAL sums): slope, intercept and r² as
+    * formula strings both engines evaluate — identical expression trees,
+    * identical IEEE evaluation. Shared by zipf_fit and heaps_fit. */
+  private object Ols {
+    private def d(x: String) = s"CAST($x AS DOUBLE)"
+    private val num = s"(${d("nt")} * ${d("sxy")} - ${d("sx")} * ${d("sy")})"
+    private val den = s"(${d("nt")} * ${d("sxx")} - ${d("sx")} * ${d("sx")})"
+    private val denY = s"(${d("nt")} * ${d("syy")} - ${d("sy")} * ${d("sy")})"
+    val slope = s"($num / nullif($den, 0))"
+    val intercept = s"((${d("sy")} - $slope * ${d("sx")}) / ${d("nt")})"
+    val r2 = s"$num * $num / nullif($den * $denY, 0)"
+  }
+
   val zipfFit: Q = {
     def lg(x: String) = s"CAST(round(log2($x), 6) AS DECIMAL(18, 6))"
-    def d(x: String) = s"CAST($x AS DOUBLE)"
-    // shared final-math formulas (identical expression trees → identical
-    // IEEE evaluation in both engines)
-    val num = s"(${d("nt")} * ${d("sxy")} - ${d("sx")} * ${d("sy")})"
-    val den = s"(${d("nt")} * ${d("sxx")} - ${d("sx")} * ${d("sx")})"
-    val denY = s"(${d("nt")} * ${d("syy")} - ${d("sy")} * ${d("sy")})"
-    val slopeRaw = s"($num / nullif($den, 0))"
-    val slopeF = s"round($slopeRaw, 4)"
-    val interceptF = s"round((${d("sy")} - $slopeRaw * ${d("sx")}) / ${d("nt")}, 4)"
-    val r2F = s"round($num * $num / nullif($den * $denY, 0), 4)"
+    val slopeF = s"round(${Ols.slope}, 4)"
+    val interceptF = s"round(${Ols.intercept}, 4)"
+    val r2F = s"round(${Ols.r2}, 4)"
     Q.sql(
       "zipf_fit",
-      s"""WITH w AS (SELECT lang, unnest(${duckWordList()}) AS term
-         |       FROM documents),
-         |lc AS (SELECT lang, term, CAST(count(*) AS BIGINT) AS c
-         |       FROM w GROUP BY 1, 2),
-         |r AS (SELECT lang, c,
-         |        row_number() OVER (PARTITION BY lang ORDER BY c DESC, term)
-         |          AS rnk
-         |      FROM lc),
+      s"""WITH $duckTermRanks,
          |p AS (SELECT lang, ${lg("rnk")} AS x, ${lg("c")} AS y
          |      FROM r WHERE rnk <= $ZipfTopK),
          |a AS (SELECT lang, count(*) AS nt,
@@ -1738,23 +1774,7 @@ object CorpusOps {
          |SELECT lang, CAST(nt AS BIGINT) AS n_terms,
          |  $slopeF AS slope, $interceptF AS intercept, $r2F AS r2
          |FROM a ORDER BY lang""".stripMargin) { (s, dir) =>
-      val lc = docs(s, dir)
-        .select(col("lang"), explode(words).as("term"))
-        .groupBy("lang", "term").agg(count(lit(1)).as("c"))
-      // two-phase top-k: membership in the global top-1000 implies
-      // membership in the owning bucket's top-1000 under the same
-      // (c DESC, term) order — the pre-pass only discards non-winners,
-      // so the oracle needs no bucket model
-      val pre = lc
-        .withColumn("bucket", pmod(hash(col("term")), lit(ZipfBuckets)))
-        .withColumn("pre_rnk", row_number().over(
-          Window.partitionBy("lang", "bucket").orderBy(col("c").desc, col("term"))))
-        .filter(col("pre_rnk") <= ZipfTopK)
-        .drop("bucket", "pre_rnk")
-      pre
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("lang").orderBy(col("c").desc, col("term"))))
-        .filter(col("rnk") <= ZipfTopK)
+      topTermRanks(langTermCounts(s, dir))
         .withColumn("x", expr(lg("rnk")))
         .withColumn("y", expr(lg("c")))
         .groupBy("lang").agg(
@@ -2000,11 +2020,7 @@ object CorpusOps {
     * over raw data, no all-pairs anywhere. */
   val ngramNovelty: Q = Q.sql(
     "ngram_novelty",
-    s"""WITH ${duckWords("doc_id, lang, source")},
-      |sh AS (SELECT doc_id, lang, source,
-      |         list_distinct(${duckGrams(3)}) AS s3
-      |       FROM w),
-      |ex AS (SELECT doc_id, lang, source, unnest(s3) AS shingle FROM sh),
+    s"""WITH ${duckShingleRows("doc_id, lang, source")},
       |f AS (SELECT shingle, min(doc_id) AS first_doc FROM ex GROUP BY 1)
       |SELECT ex.doc_id, ex.lang, ex.source,
       |  count(*) AS n_shingles,
@@ -2050,13 +2066,7 @@ object CorpusOps {
     val sparkHash = s"${TextOps.sparkWordHash("cast(doc_id as string)")} % 1000000"
     Q.sql(
       "sample_weighted",
-      s"""WITH s AS (SELECT lang, count(*) AS n_docs,
-        |        sum(len(${duckWordList()})) AS tokens
-        |      FROM documents GROUP BY 1),
-        |w AS (SELECT lang, n_docs, tokens,
-        |        CAST(round(sqrt(1.0 * tokens), 4) AS DECIMAL(18, 4)) AS wgt
-        |      FROM s),
-        |t AS (SELECT sum(wgt) AS sum_wgt, sum(tokens) AS sum_tokens FROM w),
+      s"""WITH $duckLangWeights,
         |r AS (SELECT lang, n_docs, tokens,
         |        least(1.0, round(
         |          round(round(CAST(wgt AS DOUBLE) / CAST(sum_wgt AS DOUBLE), 6)
@@ -2077,12 +2087,7 @@ object CorpusOps {
         |  k.n_kept, k.kept_tokens,
         |  round(1.0 * k.n_kept / r.n_docs, 4) AS realized_rate
         |FROM r JOIN k USING (lang) ORDER BY r.lang""".stripMargin) { (s, d) =>
-      val perLang = docs(s, d)
-        .select(col("lang"), size(words).as("n_tok"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tokens"))
-        .withColumn("wgt",
-          round(sqrt(lit(1.0) * col("tokens")), 4).cast("decimal(18,4)"))
+      val perLang = langWeights(s, d)
       val allW = Window.rowsBetween(Window.unboundedPreceding,
         Window.unboundedFollowing)
       val boost = round(
@@ -2175,20 +2180,16 @@ object CorpusOps {
     * prediction — the saturation verdict, spec-pinned; on an open
     * natural corpus β lands near 0.4-0.6. */
   val heapsFit: Q = {
-    def d(x: String) = s"CAST($x AS DOUBLE)"
-    val num = s"(${d("nt")} * ${d("sxy")} - ${d("sx")} * ${d("sy")})"
-    val den = s"(${d("nt")} * ${d("sxx")} - ${d("sx")} * ${d("sx")})"
-    val denY = s"(${d("nt")} * ${d("syy")} - ${d("sy")} * ${d("sy")})"
-    val slopeRaw = s"($num / nullif($den, 0))"
-    val interceptRaw = s"((${d("sy")} - $slopeRaw * ${d("sx")}) / ${d("nt")})"
-    val lg10N = s"${d("round(log2(10.0 * n_total), 6)")}"
+    val slopeRaw = Ols.slope
+    val interceptRaw = Ols.intercept
+    val lg10N = "CAST(round(log2(10.0 * n_total), 6) AS DOUBLE)"
     // `+ 0` normalizes IEEE signed zero: on a closed vocabulary the OLS
     // slope is a true 0 and DuckDB's round() preserves -0.0 where Spark
     // emits +0.0 — one bit, hash-divergent. Both dialects consume these
     // same strings so the normalization cannot drift.
     val betaF = s"(round($slopeRaw, 4) + 0)"
     val interceptF = s"(round($interceptRaw, 4) + 0)"
-    val r2F = s"(round($num * $num / nullif($den * $denY, 0), 4) + 0)"
+    val r2F = s"(round(${Ols.r2}, 4) + 0)"
     val predF = s"(round($interceptRaw + $slopeRaw * $lg10N, 4) + 0)"
     val finalSel =
       s"""SELECT CAST(nt AS BIGINT) AS n_points, n_total,
@@ -2322,13 +2323,7 @@ object CorpusOps {
     * full count table. Exact BIGINT/BIGINT ratios rounded once. */
   val vocabCoverage: Q = Q.sql(
     "vocab_coverage",
-    s"""WITH w AS (SELECT lang, unnest(${duckWordList()}) AS term
-       |       FROM documents),
-       |lc AS (SELECT lang, term, CAST(count(*) AS BIGINT) AS c
-       |       FROM w GROUP BY 1, 2),
-       |r AS (SELECT lang, c,
-       |        row_number() OVER (PARTITION BY lang ORDER BY c DESC, term) AS rnk
-       |      FROM lc),
+    s"""WITH $duckTermRanks,
        |t AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_types,
        |        CAST(sum(c) AS BIGINT) AS n_tokens
        |      FROM lc GROUP BY 1),
@@ -2347,24 +2342,11 @@ object CorpusOps {
        |  round(1.0 * c1000 / n_tokens, 4) AS cov1000
        |FROM cv JOIN t ON cv.lang = t.lang
        |ORDER BY t.lang""".stripMargin) { (s, d) =>
-    val lc = docs(s, d)
-      .select(col("lang"), explode(words).as("term"))
-      .groupBy("lang", "term").agg(count(lit(1)).as("c"))
+    val lc = langTermCounts(s, d)
     val t = lc.groupBy("lang")
       .agg(count(lit(1)).cast("long").as("n_types"),
         sum("c").cast("long").as("n_tokens"))
-    // two-phase rank — the zipf_fit machinery: bucket pre-pass, then the
-    // global per-lang rank over ≤ |buckets|×1000 survivors
-    val pre = lc
-      .withColumn("bucket", pmod(hash(col("term")), lit(ZipfBuckets)))
-      .withColumn("pre_rnk", row_number().over(
-        Window.partitionBy("lang", "bucket").orderBy(col("c").desc, col("term"))))
-      .filter(col("pre_rnk") <= ZipfTopK)
-      .drop("bucket", "pre_rnk")
-    val ranked = pre
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("lang").orderBy(col("c").desc, col("term"))))
-      .filter(col("rnk") <= ZipfTopK)
+    val ranked = topTermRanks(lc)
     def covc(k: Int) =
       sum(when(col("rnk") <= k, col("c")).otherwise(0L)).cast("long")
     val cv = ranked.groupBy("lang")
@@ -2435,6 +2417,93 @@ object CorpusOps {
 
   // ---------------------------------------- bigram LM perplexity --
 
+  /** The bigram model both bigram perplexities share: the per-text
+    * (gram, w1, w2) tf table `dtf` over distinct texts, the bigram counts
+    * `bc`, each bigram scored by `bitsF` against the per-w1 table, per-w2
+    * table and one-row scalar that `model` builds from the word frame
+    * `w` (tkey, m, ws) and `bc`, then per-doc bits/bigram and perplexity.
+    *
+    * Two collapses (the corpus_perplexity posture): distinct texts with
+    * multiplicity-weighted model counts, and gram/word strings folded to
+    * 128-bit Hash128 ids in the source projection — the persisted tf
+    * table and every model join carry fixed-width keys over
+    * 1/dup-factor of the mass; strings exist only inside the stage that
+    * explodes them. gid determines (w1, w2), so grouping carries them for
+    * free. A doc with < 2 words has no bigram rows and drops out of the
+    * expansion join — exactly the naive shape. */
+  private def bigramPpl(s: SparkSession, d: String, bitsF: String)(
+      model: (DataFrame, DataFrame) => (DataFrame, DataFrame, DataFrame)): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    val (keyed, dist) = distinctTexts(docs(s, d))
+    val w = dist.select(col("tkey"), col("m"), words.as("ws"))
+    val dtf = w.select(col("tkey"), col("m"), grams(2).as("gram"))
+      .select(col("tkey"), col("m"), graft.Hash128.key128(col("gram")).as("gid"),
+        graft.Hash128.key128(expr("split_part(gram, ' ', 1)")).as("w1"),
+        graft.Hash128.key128(expr("split_part(gram, ' ', 2)")).as("w2"))
+      .groupBy("tkey", "m", "gid", "w1", "w2").agg(count(lit(1)).cast("long").as("tf"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val bc = dtf.groupBy("gid", "w1", "w2")
+      .agg(sum(col("tf") * col("m")).cast("long").as("cbg"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (w1c, w2c, scalar) = model(w, bc)
+    val scored = dtf
+      .join(bc.select("gid", "cbg"), Seq("gid"))
+      .join(w1c, Seq("w1"))
+      .join(w2c, Seq("w2"))
+      .crossJoin(broadcast(scalar))
+      .withColumn("bits", expr(bitsF))
+    // half-up mean in integer micro-bits — bits is rounded at 6, so
+    // tf·round(bits·1e6) is an exact BIGINT and (2s + n·100) div (2n·100)
+    // is the half-up 4-decimal mean with no double near a tie (the
+    // q_revenue_ma7 discipline; a double round here flipped at sf1)
+    val per = scored.groupBy("tkey")
+      .agg(sum("tf").cast("long").as("n_bigrams"),
+        sum(col("tf") * expr("CAST(round(bits * 1000000, 0) AS BIGINT)"))
+          .cast("long").as("sum_micro"))
+    keyed.join(per, Seq("tkey"))
+      .select(col("doc_id"), col("n_bigrams"),
+        (expr("(2 * sum_micro + n_bigrams * 100) div (2 * n_bigrams * 100)")
+          .cast("double") / 10000).as("bits_per_bigram"))
+      .withColumn("ppl", round(pow(lit(2), col("bits_per_bigram")), 2))
+      .orderBy("doc_id")
+  }
+
+  /** DuckDB twin of [[bigramPpl]]: `w` (key, m, ws), the tf table `dtf`,
+    * the bigram counts `bc`, the `model` CTEs, each bigram scored by
+    * `bitsF` through `joins`, and the same integer half-up per-doc mean.
+    * Doc-level (m = 1) by default; `collapsed` scores one representative
+    * per distinct text and expands through the doc map — the scale twin,
+    * since the naive token/bigram explode is corpus-sized and exceeds
+    * single-box DuckDB at the 1000x gate. */
+  private def duckBigramPpl(bitsF: String, model: String, joins: String,
+      collapsed: Boolean = false): String = {
+    val (head, key, from) =
+      if (collapsed) (s"$duckDocGroups,\n${duckWords("gid, m", "grp")}", "gid",
+        "agg JOIN gmr USING (gid)")
+      else (duckWords("doc_id, 1 AS m"), "doc_id", "agg")
+    s"""WITH $head,
+       |db AS (SELECT $key, m, unnest(${duckGrams(2)}) AS gram FROM w),
+       |dtf AS MATERIALIZED (SELECT $key, m, gram, CAST(count(*) AS BIGINT) AS tf
+       |        FROM db GROUP BY 1, 2, 3),
+       |bc AS MATERIALIZED (SELECT gram, CAST(sum(tf * m) AS BIGINT) AS cbg
+       |        FROM dtf GROUP BY 1),
+       |$model,
+       |sc AS (SELECT d.$key, d.tf, $bitsF AS bits
+       |       FROM dtf d
+       |       JOIN bc ON d.gram = bc.gram
+       |       $joins),
+       |agg AS (SELECT $key, CAST(sum(tf) AS BIGINT) AS n_bigrams,
+       |          CAST(sum(tf * CAST(round(bits * 1000000, 0) AS BIGINT)) AS BIGINT)
+       |            AS sum_micro
+       |        FROM sc GROUP BY 1)
+       |SELECT doc_id, n_bigrams,
+       |  CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100) AS DOUBLE)
+       |    / 10000 AS bits_per_bigram,
+       |  round(pow(2, CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100)
+       |    AS DOUBLE) / 10000), 2) AS ppl
+       |FROM $from ORDER BY doc_id""".stripMargin
+  }
+
   /** Bigram-LM document scoring — the conditional upgrade of
     * corpus_perplexity's unigram model: P(w₂|w₁) interpolated with the
     * unigram floor (λ=0.8 bigram MLE + 0.2 unigram — the Jelinek-Mercer
@@ -2454,116 +2523,25 @@ object CorpusOps {
     * summed as DECIMAL. */
   val corpusBigramPpl: Q = {
     val bitsF = "round(-log2(0.8 * cbg / cw1 + 0.2 * cu / n), 6)"
-    // Collapsed scale twin (the corpus_perplexity twin's shape): score
-    // one representative per distinct text with multiplicity-weighted
-    // model counts and expand per-doc rows through the membership map —
-    // the naive token/bigram explode is corpus-sized and exceeds
-    // single-box DuckDB at the 1000x gate.
-    val scaleOracle =
-      s"""WITH grp AS MATERIALIZED (SELECT min(doc_id) AS gid,
-         |       CAST(count(*) AS BIGINT) AS m, text FROM documents GROUP BY text),
-         |gmr AS MATERIALIZED (SELECT d.doc_id, g.gid
-         |       FROM documents d JOIN grp g USING (text)),
-         |${duckWords("gid, m", "grp")},
-         |ug AS (SELECT m, unnest(ws) AS term FROM w),
-         |uc AS (SELECT term, CAST(sum(m) AS BIGINT) AS cu FROM ug GROUP BY 1),
-         |nt AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
-         |db AS (SELECT gid, m, unnest(${duckGrams(2)}) AS gram FROM w),
-         |dtf AS MATERIALIZED (SELECT gid, m, gram, CAST(count(*) AS BIGINT) AS tf
-         |        FROM db GROUP BY 1, 2, 3),
-         |bc AS (SELECT gram, CAST(sum(tf * m) AS BIGINT) AS cbg FROM dtf GROUP BY 1),
-         |w1c AS (SELECT split_part(gram, ' ', 1) AS w1,
-         |          CAST(sum(cbg) AS BIGINT) AS cw1 FROM bc GROUP BY 1),
-         |sc AS (SELECT d.gid, d.tf, $bitsF AS bits
-         |       FROM dtf d
-         |       JOIN bc ON d.gram = bc.gram
-         |       JOIN w1c ON split_part(d.gram, ' ', 1) = w1c.w1
-         |       JOIN uc ON split_part(d.gram, ' ', 2) = uc.term
-         |       CROSS JOIN nt),
-         |agg AS (SELECT gid, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(tf * CAST(round(bits * 1000000, 0) AS BIGINT)) AS BIGINT)
-         |            AS sum_micro
-         |        FROM sc GROUP BY 1)
-         |SELECT gmr.doc_id, n_bigrams,
-         |  CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100) AS DOUBLE)
-         |    / 10000 AS bits_per_bigram,
-         |  round(pow(2, CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100)
-         |    AS DOUBLE) / 10000), 2) AS ppl
-         |FROM agg JOIN gmr ON agg.gid = gmr.gid ORDER BY gmr.doc_id""".stripMargin
-    Q.sqlDual(
-      "corpus_bigram_ppl",
-      s"""WITH ${duckWords()},
-         |ug AS (SELECT unnest(ws) AS term FROM w),
-         |uc AS (SELECT term, CAST(count(*) AS BIGINT) AS cu FROM ug GROUP BY 1),
-         |nt AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
-         |db AS (SELECT doc_id, unnest(${duckGrams(2)}) AS gram FROM w),
-         |dtf AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
-         |        FROM db GROUP BY 1, 2),
-         |bc AS (SELECT gram, CAST(sum(tf) AS BIGINT) AS cbg FROM dtf GROUP BY 1),
-         |w1c AS (SELECT split_part(gram, ' ', 1) AS w1,
-         |          CAST(sum(cbg) AS BIGINT) AS cw1 FROM bc GROUP BY 1),
-         |sc AS (SELECT d.doc_id, d.tf, $bitsF AS bits
-         |       FROM dtf d
-         |       JOIN bc ON d.gram = bc.gram
-         |       JOIN w1c ON split_part(d.gram, ' ', 1) = w1c.w1
-         |       JOIN uc ON split_part(d.gram, ' ', 2) = uc.term
-         |       CROSS JOIN nt),
-         |agg AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(tf * CAST(round(bits * 1000000, 0) AS BIGINT)) AS BIGINT)
-         |            AS sum_micro
-         |        FROM sc GROUP BY doc_id)
-         |SELECT doc_id, n_bigrams,
-         |  CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100) AS DOUBLE)
-         |    / 10000 AS bits_per_bigram,
-         |  round(pow(2, CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100)
-         |    AS DOUBLE) / 10000), 2) AS ppl
-         |FROM agg ORDER BY doc_id""".stripMargin,
-      scaleOracle) { (s, d) =>
-      import org.apache.spark.storage.StorageLevel
-      // two collapses (the corpus_perplexity posture): distinct texts
-      // with multiplicity-weighted model counts, and gram/word strings
-      // folded to 128-bit Hash128 ids in the source projection — the
-      // persisted tf table and every model join carry fixed-width keys
-      // over 1/dup-factor of the mass; strings exist only inside the
-      // stage that explodes them. gid determines (w1, w2), so grouping
-      // carries them for free. A doc with < 2 words has no bigram rows
-      // and drops out of the expansion join — exactly the naive shape.
-      val (keyed, dist) = distinctTexts(docs(s, d))
-      val w = dist.select(col("tkey"), col("m"), words.as("ws"))
-      val uc = w.select(col("m"), explode(col("ws")).as("term"))
-        .select(col("m"), graft.Hash128.key128(col("term")).as("w2"))
-        .groupBy("w2").agg(sum("m").cast("long").as("cu"))
-      val nt = uc.agg(sum("cu").cast("long").as("n"))
-      val dtf = w.select(col("tkey"), col("m"), grams(2).as("gram"))
-        .select(col("tkey"), col("m"), graft.Hash128.key128(col("gram")).as("gid"),
-          graft.Hash128.key128(expr("split_part(gram, ' ', 1)")).as("w1"),
-          graft.Hash128.key128(expr("split_part(gram, ' ', 2)")).as("w2"))
-        .groupBy("tkey", "m", "gid", "w1", "w2").agg(count(lit(1)).cast("long").as("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val bc = dtf.groupBy("gid", "w1", "w2")
-        .agg(sum(col("tf") * col("m")).cast("long").as("cbg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val w1c = bc.groupBy("w1").agg(sum("cbg").cast("long").as("cw1"))
-      val scored = dtf
-        .join(bc.select("gid", "cbg"), Seq("gid"))
-        .join(w1c, Seq("w1"))
-        .join(uc, Seq("w2"))
-        .crossJoin(broadcast(nt))
-        .withColumn("bits", expr(bitsF))
-      // half-up mean in integer micro-bits — bits is rounded at 6, so
-      // tf·round(bits·1e6) is an exact BIGINT and (2s + n·100) div (2n·100)
-      // is the half-up 4-decimal mean with no double near a tie (the
-      // q_revenue_ma7 discipline; a double round here flipped at sf1)
-      val per = scored.groupBy("tkey")
-        .agg(sum("tf").cast("long").as("n_bigrams"),
-          sum(col("tf") * expr("CAST(round(bits * 1000000, 0) AS BIGINT)"))
-            .cast("long").as("sum_micro"))
-      keyed.join(per, Seq("tkey"))
-        .select(col("doc_id"), col("n_bigrams"),
-          (expr("(2 * sum_micro + n_bigrams * 100) div (2 * n_bigrams * 100)")
-            .cast("double") / 10000).as("bits_per_bigram"))
-        .withColumn("ppl", round(pow(lit(2), col("bits_per_bigram")), 2))
-        .orderBy("doc_id")
+    val model =
+      """ug AS (SELECT m, unnest(ws) AS term FROM w),
+        |uc AS (SELECT term, CAST(sum(m) AS BIGINT) AS cu FROM ug GROUP BY 1),
+        |nt AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uc),
+        |w1c AS (SELECT split_part(gram, ' ', 1) AS w1,
+        |          CAST(sum(cbg) AS BIGINT) AS cw1 FROM bc GROUP BY 1)""".stripMargin
+    val joins =
+      """JOIN w1c ON split_part(d.gram, ' ', 1) = w1c.w1
+        |       JOIN uc ON split_part(d.gram, ' ', 2) = uc.term
+        |       CROSS JOIN nt""".stripMargin
+    Q.sqlDual("corpus_bigram_ppl", duckBigramPpl(bitsF, model, joins),
+      duckBigramPpl(bitsF, model, joins, collapsed = true)) { (s, d) =>
+      bigramPpl(s, d, bitsF) { (w, bc) =>
+        val uc = w.select(col("m"), explode(col("ws")).as("term"))
+          .select(col("m"), graft.Hash128.key128(col("term")).as("w2"))
+          .groupBy("w2").agg(sum("m").cast("long").as("cu"))
+        (bc.groupBy("w1").agg(sum("cbg").cast("long").as("cw1")), uc,
+          uc.agg(sum("cu").cast("long").as("n")))
+      }
     }
   }
 
@@ -2579,13 +2557,13 @@ object CorpusOps {
     * perplexity-filtering a corpus (a doc ranked differently by the two
     * models is exactly the smoothing-sensitive tail).
     *
-    * Scale shape: identical to [[corpusBigramPpl]] — the (doc, gram, tf)
-    * frame persists and feeds every model join; the model tables
-    * (bigram counts, left-context totals + continuation-type counts per
-    * w1, left-neighbor-type counts per w2, one scalar) are vocab²-
-    * bounded partial aggregates joined ON THE GRAM (never broadcast —
-    * vocabulary grows with the corpus). Per-doc means use the exact
-    * integer micro-bits half-up division (the q_revenue_ma7 discipline).
+    * Scale shape: identical to [[corpusBigramPpl]] ([[bigramPpl]]); the
+    * model tables (left-context totals + continuation-type counts per w1,
+    * left-neighbor-type counts per w2, one scalar) are vocab²-bounded
+    * partial aggregates joined ON THE GRAM (never broadcast — vocabulary
+    * grows with the corpus). cbg weights by m, while k1/nl/bb count
+    * DISTINCT gram types — a twin doc introduces no new type, so the
+    * group-level bc yields them exactly.
     *
     * Determinism: counts are exact integers; D subtraction (x−0.75) is
     * exact in binary; the probability is one fixed-parenthesization
@@ -2593,115 +2571,27 @@ object CorpusOps {
   val corpusKnPpl: Q = {
     val bitsF = "round(-log2(greatest(cbg - 0.75e0, 0e0) / cw1" +
       " + (0.75e0 * k1 / cw1) * (nl * 1e0 / bb)), 6)"
-    // Collapsed scale twin — same shape as corpus_bigram_ppl's. The KN
-    // type counts (k1 / nl / bb) come off the gram-level bc table, which
-    // the collapse reproduces exactly (a twin doc introduces no new
-    // gram type), so only cbg needs the multiplicity weight.
-    val scaleOracle =
-      s"""WITH grp AS MATERIALIZED (SELECT min(doc_id) AS gid,
-         |       CAST(count(*) AS BIGINT) AS m, text FROM documents GROUP BY text),
-         |gmr AS MATERIALIZED (SELECT d.doc_id, g.gid
-         |       FROM documents d JOIN grp g USING (text)),
-         |${duckWords("gid, m", "grp")},
-         |db AS (SELECT gid, m, unnest(${duckGrams(2)}) AS gram FROM w),
-         |dtf AS MATERIALIZED (SELECT gid, m, gram, CAST(count(*) AS BIGINT) AS tf
-         |        FROM db GROUP BY 1, 2, 3),
-         |bc AS MATERIALIZED (SELECT gram, CAST(sum(tf * m) AS BIGINT) AS cbg
-         |        FROM dtf GROUP BY 1),
-         |w1c AS (SELECT split_part(gram, ' ', 1) AS w1,
-         |          CAST(sum(cbg) AS BIGINT) AS cw1,
-         |          CAST(count(*) AS BIGINT) AS k1
-         |        FROM bc GROUP BY 1),
-         |nlc AS (SELECT split_part(gram, ' ', 2) AS w2,
-         |          CAST(count(*) AS BIGINT) AS nl
-         |        FROM bc GROUP BY 1),
-         |bt AS (SELECT CAST(count(*) AS BIGINT) AS bb FROM bc),
-         |sc AS (SELECT d.gid, d.tf, $bitsF AS bits
-         |       FROM dtf d
-         |       JOIN bc ON d.gram = bc.gram
-         |       JOIN w1c ON split_part(d.gram, ' ', 1) = w1c.w1
-         |       JOIN nlc ON split_part(d.gram, ' ', 2) = nlc.w2
-         |       CROSS JOIN bt),
-         |agg AS (SELECT gid, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(tf * CAST(round(bits * 1000000, 0) AS BIGINT)) AS BIGINT)
-         |            AS sum_micro
-         |        FROM sc GROUP BY 1)
-         |SELECT gmr.doc_id, n_bigrams,
-         |  CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100) AS DOUBLE)
-         |    / 10000 AS bits_per_bigram,
-         |  round(pow(2, CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100)
-         |    AS DOUBLE) / 10000), 2) AS ppl
-         |FROM agg JOIN gmr ON agg.gid = gmr.gid ORDER BY gmr.doc_id""".stripMargin
-    Q.sqlDual(
-      "corpus_kn_ppl",
-      s"""WITH ${duckWords()},
-         |db AS (SELECT doc_id, unnest(${duckGrams(2)}) AS gram FROM w),
-         |dtf AS (SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS tf
-         |        FROM db GROUP BY 1, 2),
-         |bc AS (SELECT gram, CAST(sum(tf) AS BIGINT) AS cbg FROM dtf GROUP BY 1),
-         |w1c AS (SELECT split_part(gram, ' ', 1) AS w1,
-         |          CAST(sum(cbg) AS BIGINT) AS cw1,
-         |          CAST(count(*) AS BIGINT) AS k1
-         |        FROM bc GROUP BY 1),
-         |nlc AS (SELECT split_part(gram, ' ', 2) AS w2,
-         |          CAST(count(*) AS BIGINT) AS nl
-         |        FROM bc GROUP BY 1),
-         |bt AS (SELECT CAST(count(*) AS BIGINT) AS bb FROM bc),
-         |sc AS (SELECT d.doc_id, d.tf, $bitsF AS bits
-         |       FROM dtf d
-         |       JOIN bc ON d.gram = bc.gram
-         |       JOIN w1c ON split_part(d.gram, ' ', 1) = w1c.w1
-         |       JOIN nlc ON split_part(d.gram, ' ', 2) = nlc.w2
-         |       CROSS JOIN bt),
-         |agg AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-         |          CAST(sum(tf * CAST(round(bits * 1000000, 0) AS BIGINT)) AS BIGINT)
-         |            AS sum_micro
-         |        FROM sc GROUP BY doc_id)
-         |SELECT doc_id, n_bigrams,
-         |  CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100) AS DOUBLE)
-         |    / 10000 AS bits_per_bigram,
-         |  round(pow(2, CAST((2 * sum_micro + n_bigrams * 100) // (2 * n_bigrams * 100)
-         |    AS DOUBLE) / 10000), 2) AS ppl
-         |FROM agg ORDER BY doc_id""".stripMargin,
-      scaleOracle) { (s, d) =>
-      import org.apache.spark.storage.StorageLevel
-      // same double collapse as corpus_bigram_ppl (distinct texts +
-      // 128-bit Hash128 ids). The KN model tables are all
-      // multiplicity-aware or multiplicity-FREE: cbg weights by m, while
-      // k1/nl/bb count DISTINCT gram types — a twin doc introduces no
-      // new type, so the group-level bc yields them exactly.
-      val (keyed, dist) = distinctTexts(docs(s, d))
-      val w = dist.select(col("tkey"), col("m"), words.as("ws"))
-      val dtf = w.select(col("tkey"), col("m"), grams(2).as("gram"))
-        .select(col("tkey"), col("m"), graft.Hash128.key128(col("gram")).as("gid"),
-          graft.Hash128.key128(expr("split_part(gram, ' ', 1)")).as("w1"),
-          graft.Hash128.key128(expr("split_part(gram, ' ', 2)")).as("w2"))
-        .groupBy("tkey", "m", "gid", "w1", "w2").agg(count(lit(1)).cast("long").as("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val bc = dtf.groupBy("gid", "w1", "w2")
-        .agg(sum(col("tf") * col("m")).cast("long").as("cbg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val w1c = bc.groupBy("w1")
-        .agg(sum("cbg").cast("long").as("cw1"),
-          count(lit(1)).cast("long").as("k1"))
-      val nlc = bc.groupBy("w2").agg(count(lit(1)).cast("long").as("nl"))
-      val bt = bc.agg(count(lit(1)).cast("long").as("bb"))
-      val scored = dtf
-        .join(bc.select("gid", "cbg"), Seq("gid"))
-        .join(w1c, Seq("w1"))
-        .join(nlc, Seq("w2"))
-        .crossJoin(broadcast(bt))
-        .withColumn("bits", expr(bitsF))
-      val per = scored.groupBy("tkey")
-        .agg(sum("tf").cast("long").as("n_bigrams"),
-          sum(col("tf") * expr("CAST(round(bits * 1000000, 0) AS BIGINT)"))
-            .cast("long").as("sum_micro"))
-      keyed.join(per, Seq("tkey"))
-        .select(col("doc_id"), col("n_bigrams"),
-          (expr("(2 * sum_micro + n_bigrams * 100) div (2 * n_bigrams * 100)")
-            .cast("double") / 10000).as("bits_per_bigram"))
-        .withColumn("ppl", round(pow(lit(2), col("bits_per_bigram")), 2))
-        .orderBy("doc_id")
+    val model =
+      """w1c AS (SELECT split_part(gram, ' ', 1) AS w1,
+        |          CAST(sum(cbg) AS BIGINT) AS cw1,
+        |          CAST(count(*) AS BIGINT) AS k1
+        |        FROM bc GROUP BY 1),
+        |nlc AS (SELECT split_part(gram, ' ', 2) AS w2,
+        |          CAST(count(*) AS BIGINT) AS nl
+        |        FROM bc GROUP BY 1),
+        |bt AS (SELECT CAST(count(*) AS BIGINT) AS bb FROM bc)""".stripMargin
+    val joins =
+      """JOIN w1c ON split_part(d.gram, ' ', 1) = w1c.w1
+        |       JOIN nlc ON split_part(d.gram, ' ', 2) = nlc.w2
+        |       CROSS JOIN bt""".stripMargin
+    Q.sqlDual("corpus_kn_ppl", duckBigramPpl(bitsF, model, joins),
+      duckBigramPpl(bitsF, model, joins, collapsed = true)) { (s, d) =>
+      bigramPpl(s, d, bitsF) { (_, bc) =>
+        (bc.groupBy("w1").agg(sum("cbg").cast("long").as("cw1"),
+            count(lit(1)).cast("long").as("k1")),
+          bc.groupBy("w2").agg(count(lit(1)).cast("long").as("nl")),
+          bc.agg(count(lit(1)).cast("long").as("bb")))
+      }
     }
   }
 
@@ -2791,13 +2681,7 @@ object CorpusOps {
     }.mkString("\n  UNION ALL ")
     Q.sql(
       "quality_ablation",
-      s"""WITH f AS (
-        |  SELECT doc_id,
-        |    $duckQualityFeatures
-        |  FROM documents),
-        |r AS (SELECT doc_id, n_words,
-        |    $duckFlagExprs
-        |  FROM f),
+      s"""WITH ${duckQualityFlags("doc_id")},
         |x AS (SELECT *, $nf AS n_failed FROM r),
         |a AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(sum(CASE WHEN n_failed = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_passed,

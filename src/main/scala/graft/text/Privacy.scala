@@ -396,10 +396,27 @@ object Privacy {
     * projection, there is no aggregate, window or join anywhere, so the
     * op is a single scan at any corpus size (the 100 TB shape: this runs
     * as a side-output of the release writer). */
+  /** The release docs some PII class matches, with each class's match
+    * count `n_<class>`. The flagged-universe filter is the single
+    * alternation scan (one short-circuiting pass; exactly "some class
+    * matches"), NEVER a predicate over the count columns: Catalyst pushes
+    * a count-based filter below the counting projection by alias
+    * substitution, and every extract_all then evaluates twice per row
+    * (filter + project) — measured 2x on the sf10 leg. */
+  private def piiCounts(s: SparkSession, d: String): DataFrame =
+    piiClasses.foldLeft(releaseDf(s, d)
+        .filter(col("text").rlike(Prefilter) && col("text").rlike(AnyClass))) {
+      case (df, (n, p, _)) =>
+        df.withColumn(s"n_$n",
+          size(regexp_extract_all(col("text"), lit(p), lit(0))).cast("long"))
+    }
+
+  /** DuckDB twin of [[piiCounts]]' count columns. */
+  private val duckPiiCounts: String = piiClasses.map { case (n, p, _) =>
+    s"CAST(len(regexp_extract_all(text, '$p')) AS BIGINT) AS n_$n"
+  }.mkString(",\n    ")
+
   val piiTextDetect: Q = {
-    val duckCounts = piiClasses.map { case (n, p, _) =>
-      s"CAST(len(regexp_extract_all(text, '$p')) AS BIGINT) AS n_$n"
-    }.mkString(",\n    ")
     val duckSample = piiClasses.map { case (n, p, _) =>
       s"WHEN n_$n > 0 THEN regexp_extract_all(text, '$p')[1]"
     }.mkString("CASE ", "\n    ", " END")
@@ -407,7 +424,7 @@ object Privacy {
       "pii_text_detect",
       s"""WITH rel AS ($releaseSql),
          |x AS (SELECT doc_id, source,
-         |    $duckCounts,
+         |    $duckPiiCounts,
          |    text
          |  FROM rel WHERE regexp_matches(text, '$Prefilter')
          |    AND regexp_matches(text, '$AnyClass'))
@@ -415,19 +432,7 @@ object Privacy {
          |  ${piiClasses.map { case (n, _, _) => s"n_$n" }.mkString(", ")},
          |  $duckSample AS sample
          |FROM x ORDER BY doc_id""".stripMargin) { (s, d) =>
-      // the flagged-universe filter is the single alternation scan (one
-      // short-circuiting pass; exactly "some class matches"), NEVER a
-      // predicate over the count columns: Catalyst pushes a count-based
-      // filter below the counting projection by alias substitution, and
-      // every extract_all then evaluates twice per row (filter + project)
-      // — measured 2x on the sf10 leg
-      val flagged = releaseDf(s, d)
-        .filter(col("text").rlike(Prefilter) && col("text").rlike(AnyClass))
-      val counted = piiClasses.foldLeft(flagged) {
-        case (df, (n, p, _)) =>
-          df.withColumn(s"n_$n",
-            size(regexp_extract_all(col("text"), lit(p), lit(0))).cast("long"))
-      }
+      val counted = piiCounts(s, d)
       val sampleCol = piiClasses.reverse.foldLeft(lit(null).cast("string")) {
         case (els, (n, p, _)) =>
           when(col(s"n_$n") > 0,
@@ -459,9 +464,6 @@ object Privacy {
     val duckRedacted = piiClasses.foldLeft("text") { case (acc, (_, p, t)) =>
       s"regexp_replace($acc, '$p', '$t', 'g')"
     }
-    val duckCounts = piiClasses.map { case (n, p, _) =>
-      s"CAST(len(regexp_extract_all(text, '$p')) AS BIGINT) AS n_$n"
-    }.mkString(",\n    ")
     val anyHit = piiClasses.map { case (n, _, _) => s"n_$n" }.mkString(" + ")
     val duckResidual = piiClasses.map { case (_, p, _) =>
       s"len(regexp_extract_all(redacted, '$p'))"
@@ -470,7 +472,7 @@ object Privacy {
       "pii_redact",
       s"""WITH rel AS ($releaseSql),
          |x AS (SELECT doc_id, source, text,
-         |    $duckCounts,
+         |    $duckPiiCounts,
          |    $duckRedacted AS redacted
          |  FROM rel WHERE regexp_matches(text, '$Prefilter')
          |    AND regexp_matches(text, '$AnyClass')),
@@ -480,15 +482,7 @@ object Privacy {
          |  FROM x)
          |SELECT doc_id, source, redacted, n_masked, n_residual
          |FROM y ORDER BY doc_id""".stripMargin) { (s, d) =>
-      // flagged universe via the alternation scan (see pii_text_detect —
-      // a count-predicate filter would double every extract_all)
-      val flagged = releaseDf(s, d)
-        .filter(col("text").rlike(Prefilter) && col("text").rlike(AnyClass))
-      val counted = piiClasses.foldLeft(flagged) {
-        case (df, (n, p, _)) =>
-          df.withColumn(s"n_$n",
-            size(regexp_extract_all(col("text"), lit(p), lit(0))).cast("long"))
-      }
+      val counted = piiCounts(s, d)
       val redactedCol = piiClasses.foldLeft(col("text")) { case (acc, (_, p, t)) =>
         regexp_replace(acc, lit(p), lit(t))
       }

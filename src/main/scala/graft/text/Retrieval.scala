@@ -3,7 +3,7 @@ package graft.text
 import graft.Q
 import graft.Tables.{documents => docs}
 import graft.text.Tokens.{distinctTexts, duckGrams, duckWordList, duckWords, grams, words}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -29,6 +29,31 @@ object Retrieval {
   private[graft] val ChunkWords = 64
   private[graft] val ChunkStride = 48
 
+  /** The window starts of every document: (doc_id, ws, n, start_word),
+    * one row per window, every `ChunkStride` words. */
+  private def chunkStarts(s: SparkSession, d: String): DataFrame =
+    docs(s, d)
+      .select(col("doc_id"), words.as("ws"))
+      .withColumn("n", size(col("ws")))
+      .select(col("doc_id"), col("ws"), col("n"),
+        explode(expr(s"sequence(0, n - 1, $ChunkStride)")).as("start_word"))
+
+  /** The md5 digest of a window's text: its words from `start_word`, at
+    * most `ChunkWords` of them. */
+  private val chunkDigest: Column =
+    md5(array_join(expr(s"slice(ws, start_word + 1, $ChunkWords)"), " "))
+
+  /** DuckDB twin of [[chunkStarts]]: the word lists `w` and the windows `s`. */
+  private val duckChunkStarts: String =
+    s"""${duckWords()},
+       |s AS (SELECT doc_id, ws, len(ws) AS n,
+       |        unnest(range(0, len(ws), $ChunkStride)) AS start_word
+       |      FROM w)""".stripMargin
+
+  /** DuckDB twin of [[chunkDigest]]. */
+  private val duckChunkDigest: String =
+    s"md5(array_to_string(ws[start_word + 1 : least(start_word + $ChunkWords, n)], ' '))"
+
   /** Fixed-window word chunking with overlap — the within-document twin of
     * CorpusOps.pack_sequences (which packs ACROSS documents): every doc
     * explodes into 64-word windows on a 48-word stride, each chunk carrying
@@ -42,28 +67,19 @@ object Retrieval {
     * output partitioning inherited from the input files. */
   val docChunk: Q = Q.sql(
     "doc_chunk",
-    s"""WITH ${duckWords()},
-       |s AS (SELECT doc_id, ws, len(ws) AS n,
-       |        unnest(range(0, len(ws), $ChunkStride)) AS start_word
-       |      FROM w)
+    s"""WITH $duckChunkStarts
        |SELECT doc_id,
        |  CAST(start_word // $ChunkStride AS BIGINT) AS chunk_idx,
        |  CAST(start_word AS BIGINT) AS start_word,
        |  CAST(least(n - start_word, $ChunkWords) AS BIGINT) AS chunk_words,
-       |  md5(array_to_string(ws[start_word + 1 : least(start_word + $ChunkWords, n)], ' '))
-       |    AS chunk_digest
+       |  $duckChunkDigest AS chunk_digest
        |FROM s ORDER BY doc_id, chunk_idx""".stripMargin) { (s, d) =>
-    docs(s, d)
-      .select(col("doc_id"), words.as("ws"))
-      .withColumn("n", size(col("ws")))
-      .select(col("doc_id"), col("ws"), col("n"),
-        explode(expr(s"sequence(0, n - 1, $ChunkStride)")).as("start_word"))
+    chunkStarts(s, d)
       .select(col("doc_id"),
         (col("start_word") / ChunkStride).cast("long").as("chunk_idx"),
         col("start_word").cast("long").as("start_word"),
         least(col("n") - col("start_word"), lit(ChunkWords)).cast("long").as("chunk_words"),
-        md5(array_join(expr(s"slice(ws, start_word + 1, $ChunkWords)"), " "))
-          .as("chunk_digest"))
+        chunkDigest.as("chunk_digest"))
       .orderBy("doc_id", "chunk_idx")
   }
 
@@ -119,48 +135,37 @@ object Retrieval {
     * 1-row corpus stats all broadcast — the corpus never shuffles for the
     * probe, exactly the decontaminate posture. Top-k per query ranks the
     * ROUNDED score (ann_pq_search discipline) with doc_id tiebreak. */
-  val bm25Search: Q = {
-    val duckQueryValues = bm25Queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => s"($qid, '$t')") }
-      .mkString(", ")
-    Q.sql(
-      "bm25_search",
-      s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
-         |${duckWords()},
-         |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
-         |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
-         |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
-         |dft AS (SELECT term, count(*) AS df FROM tf
-         |        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY 1),
-         |c AS (SELECT qt.query_id, tf.doc_id,
-         |        CAST($contribFormula AS DECIMAL(18, 6)) AS c
-         |      FROM qt JOIN tf ON qt.term = tf.term
-         |           JOIN dft ON dft.term = qt.term CROSS JOIN st),
-         |sc AS (SELECT query_id, doc_id, CAST(round(sum(c), 4) AS DOUBLE) AS score
-         |       FROM c GROUP BY 1, 2),
-         |r AS (SELECT query_id, doc_id, score,
-         |        row_number() OVER (PARTITION BY query_id
-         |                           ORDER BY score DESC, doc_id) AS rnk
-         |      FROM sc)
-         |SELECT query_id, rnk, doc_id, score FROM r
-         |WHERE rnk <= $TopK ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
-      val (_, topk, _) = bm25Machine(s, d)
-      topk.orderBy("query_id", "rnk")
-    }
+  val bm25Search: Q = Q.sql(
+    "bm25_search",
+    s"""WITH $duckBm25Ranks
+       |SELECT query_id, rnk, doc_id, score FROM r
+       |WHERE rnk <= $TopK ORDER BY query_id, rnk""".stripMargin) { (s, d) =>
+    bm25Machine(s, d).topk.orderBy("query_id", "rnk")
   }
 
-  /** The shared BM25 engine: (persisted per-(doc, dl, term) tf table,
-    * per-query top-k frame). bm25_search serves the top-k directly;
+  /** The query workload as (query_id, term) rows, one per distinct term of
+    * a query. */
+  private def queryTerms(s: SparkSession): DataFrame = {
+    import s.implicits._
+    bm25Queries
+      .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
+      .toDF("query_id", "term")
+  }
+
+  /** The shared BM25 engine's frames: the persisted per-(doc, dl, term) tf
+    * table, the df of each query term, the one-row corpus stats
+    * (n_docs, sum_dl) and the per-query top-k. */
+  private final case class Bm25(tf: DataFrame, dft: DataFrame, stats: DataFrame,
+      topk: DataFrame)
+
+  /** The shared BM25 engine. bm25_search serves the top-k directly;
     * bm25_eval audits it against a BM25-independent relevance definition
     * over the SAME tf table — composed from the live machinery so the
     * audit cannot drift from what the serve path returns (the ann_recall
     * discipline). */
-  private def bm25Machine(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+  private def bm25Machine(s: SparkSession, d: String): Bm25 = {
     import s.implicits._
-    val qt = bm25Queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-      .toDF("query_id", "term")
+    val qt = queryTerms(s)
     // distinct terms built driver-side (bounded by the query workload) —
     // a Spark .distinct() here would buy a shuffle to dedup ~10 rows
     val qTerms = bm25Queries.flatMap(_._2).distinct.toDF("term")
@@ -188,8 +193,40 @@ object Retrieval {
         Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))))
       .filter(col("rnk") <= TopK)
       .select(col("query_id"), col("rnk"), col("doc_id"), col("score"))
-    (tf, topk, stats)
+    Bm25(tf, dft, stats, topk)
   }
+
+  /** DuckDB twin of [[bm25Machine]]'s shared steps: the query terms `qt`,
+    * the word lists `w`, the per-(doc, dl, term) tf table `tf`, the corpus
+    * stats `st` (n_docs, sum_dl) and the query-term df table `dft`. */
+  private lazy val duckBm25Head: String = {
+    val values = bm25Queries
+      .flatMap { case (qid, ts) => ts.distinct.map(t => s"($qid, '$t')") }
+      .mkString(", ")
+    s"""qt(query_id, term) AS (VALUES $values),
+       |${duckWords()},
+       |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
+       |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
+       |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
+       |dft AS (SELECT term, count(*) AS df FROM tf
+       |        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY 1)""".stripMargin
+  }
+
+  /** [[duckBm25Head]] plus the per-query BM25 ranking `r` (query_id,
+    * doc_id, score, rnk over every scored doc) — the twin of
+    * [[bm25Machine]]'s top-k before its `rnk <= TopK` cut. */
+  private lazy val duckBm25Ranks: String =
+    s"""$duckBm25Head,
+       |c AS (SELECT qt.query_id, tf.doc_id,
+       |        CAST($contribFormula AS DECIMAL(18, 6)) AS c
+       |      FROM qt JOIN tf ON qt.term = tf.term
+       |           JOIN dft ON dft.term = qt.term CROSS JOIN st),
+       |sc AS (SELECT query_id, doc_id, CAST(round(sum(c), 4) AS DOUBLE) AS score
+       |       FROM c GROUP BY 1, 2),
+       |r AS (SELECT query_id, doc_id, score,
+       |        row_number() OVER (PARTITION BY query_id
+       |                           ORDER BY score DESC, doc_id) AS rnk
+       |      FROM sc)""".stripMargin
 
   /** Retrieval-quality audit of the BM25 serve path against a
     * BM25-INDEPENDENT relevance definition: a document is relevant to a
@@ -205,87 +242,64 @@ object Retrieval {
     * the probe); the per-(query, doc) match count is a partial-agg
     * groupBy bounded by docs-containing-a-query-term; everything after is
     * ≤ |queries| × k rows. */
-  val bm25Eval: Q = {
-    val duckQueryValues = bm25Queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => s"($qid, '$t')") }
-      .mkString(", ")
-    Q.sql(
-      "bm25_eval",
-      s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
-         |qn AS (SELECT query_id, count(DISTINCT term) AS nq FROM qt GROUP BY 1),
-         |${duckWords()},
-         |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
-         |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
-         |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
-         |dft AS (SELECT term, count(*) AS df FROM tf
-         |        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY 1),
-         |c AS (SELECT qt.query_id, tf.doc_id,
-         |        CAST($contribFormula AS DECIMAL(18, 6)) AS c
-         |      FROM qt JOIN tf ON qt.term = tf.term
-         |           JOIN dft ON dft.term = qt.term CROSS JOIN st),
-         |sc AS (SELECT query_id, doc_id, CAST(round(sum(c), 4) AS DOUBLE) AS score
-         |       FROM c GROUP BY 1, 2),
-         |r AS (SELECT query_id, doc_id,
-         |        row_number() OVER (PARTITION BY query_id
-         |                           ORDER BY score DESC, doc_id) AS rnk
-         |      FROM sc),
-         |topk AS (SELECT query_id, doc_id, rnk FROM r WHERE rnk <= $TopK),
-         |rel AS (SELECT qt.query_id, tf.doc_id
-         |        FROM qt JOIN tf ON qt.term = tf.term
-         |        GROUP BY qt.query_id, tf.doc_id
-         |        HAVING count(DISTINCT qt.term) =
-         |          (SELECT nq FROM qn WHERE qn.query_id = qt.query_id)),
-         |nrel AS (SELECT query_id, count(*) AS n_rel FROM rel GROUP BY 1),
-         |hit AS (SELECT topk.query_id,
-         |          count(rel.doc_id) AS hits,
-         |          min(CASE WHEN rel.doc_id IS NOT NULL THEN topk.rnk END) AS first_rel
-         |        FROM topk LEFT JOIN rel
-         |          ON topk.query_id = rel.query_id AND topk.doc_id = rel.doc_id
-         |        GROUP BY topk.query_id)
-         |SELECT qn.query_id,
-         |  coalesce(nrel.n_rel, 0) AS n_rel,
-         |  coalesce(hit.hits, 0) AS hits,
-         |  round(1.0 * coalesce(hit.hits, 0) / $TopK, 4) AS precision_at_k,
-         |  CASE WHEN coalesce(nrel.n_rel, 0) = 0 THEN NULL
-         |       ELSE round(1.0 * coalesce(hit.hits, 0)
-         |                  / least(nrel.n_rel, $TopK), 4) END AS recall_at_k,
-         |  round(coalesce(1.0 / hit.first_rel, 0), 4) AS mrr
-         |FROM qn LEFT JOIN nrel ON qn.query_id = nrel.query_id
-         |        LEFT JOIN hit ON qn.query_id = hit.query_id
-         |ORDER BY qn.query_id""".stripMargin) { (s, d) =>
-      import s.implicits._
-      val (tf, topk, _) = bm25Machine(s, d)
-      val qt = bm25Queries
-        .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-        .toDF("query_id", "term")
-      val qn = bm25Queries.map { case (qid, ts) => (qid, ts.distinct.size.toLong) }
-        .toDF("query_id", "nq")
-      val rel = tf.join(broadcast(qt), Seq("term"))
-        .groupBy("query_id", "doc_id")
-        .agg(countDistinct(col("term")).as("nmatch"))
-        .join(broadcast(qn), Seq("query_id"))
-        .filter(col("nmatch") === col("nq"))
-        .select("query_id", "doc_id")
-      val nrel = rel.groupBy("query_id").agg(count(lit(1)).as("n_rel"))
-      val relR = rel.select(col("query_id").as("rq"), col("doc_id").as("rel_doc"))
-      val hits = topk
-        .join(relR, col("query_id") === col("rq") && col("doc_id") === col("rel_doc"),
-          "left")
-        .groupBy("query_id")
-        .agg(count(col("rel_doc")).as("hits"),
-          min(when(col("rel_doc").isNotNull, col("rnk"))).as("first_rel"))
-      qn.join(nrel, Seq("query_id"), "left")
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_rel"), lit(0L)).as("n_rel"),
-          coalesce(col("hits"), lit(0L)).as("hits"),
-          round(lit(1.0) * coalesce(col("hits"), lit(0L)) / TopK, 4).as("precision_at_k"),
-          when(coalesce(col("n_rel"), lit(0L)) === 0, lit(null).cast("double"))
-            .otherwise(round(lit(1.0) * coalesce(col("hits"), lit(0L))
-              / least(col("n_rel"), lit(TopK.toLong)), 4)).as("recall_at_k"),
-          round(coalesce(lit(1.0) / col("first_rel"), lit(0.0)), 4).as("mrr"))
-        .orderBy("query_id")
-    }
+  val bm25Eval: Q = Q.sql(
+    "bm25_eval",
+    s"""WITH $duckBm25Ranks,
+       |qn AS (SELECT query_id, count(DISTINCT term) AS nq FROM qt GROUP BY 1),
+       |topk AS (SELECT query_id, doc_id, rnk FROM r WHERE rnk <= $TopK),
+       |rel AS (SELECT qt.query_id, tf.doc_id
+       |        FROM qt JOIN tf ON qt.term = tf.term
+       |        GROUP BY qt.query_id, tf.doc_id
+       |        HAVING count(DISTINCT qt.term) =
+       |          (SELECT nq FROM qn WHERE qn.query_id = qt.query_id)),
+       |nrel AS (SELECT query_id, count(*) AS n_rel FROM rel GROUP BY 1),
+       |hit AS (SELECT topk.query_id,
+       |          count(rel.doc_id) AS hits,
+       |          min(CASE WHEN rel.doc_id IS NOT NULL THEN topk.rnk END) AS first_rel
+       |        FROM topk LEFT JOIN rel
+       |          ON topk.query_id = rel.query_id AND topk.doc_id = rel.doc_id
+       |        GROUP BY topk.query_id)
+       |SELECT qn.query_id,
+       |  coalesce(nrel.n_rel, 0) AS n_rel,
+       |  coalesce(hit.hits, 0) AS hits,
+       |  round(1.0 * coalesce(hit.hits, 0) / $TopK, 4) AS precision_at_k,
+       |  CASE WHEN coalesce(nrel.n_rel, 0) = 0 THEN NULL
+       |       ELSE round(1.0 * coalesce(hit.hits, 0)
+       |                  / least(nrel.n_rel, $TopK), 4) END AS recall_at_k,
+       |  round(coalesce(1.0 / hit.first_rel, 0), 4) AS mrr
+       |FROM qn LEFT JOIN nrel ON qn.query_id = nrel.query_id
+       |        LEFT JOIN hit ON qn.query_id = hit.query_id
+       |ORDER BY qn.query_id""".stripMargin) { (s, d) =>
+    import s.implicits._
+    val Bm25(tf, _, _, topk) = bm25Machine(s, d)
+    val qt = queryTerms(s)
+    val qn = bm25Queries.map { case (qid, ts) => (qid, ts.distinct.size.toLong) }
+      .toDF("query_id", "nq")
+    val rel = tf.join(broadcast(qt), Seq("term"))
+      .groupBy("query_id", "doc_id")
+      .agg(countDistinct(col("term")).as("nmatch"))
+      .join(broadcast(qn), Seq("query_id"))
+      .filter(col("nmatch") === col("nq"))
+      .select("query_id", "doc_id")
+    val nrel = rel.groupBy("query_id").agg(count(lit(1)).as("n_rel"))
+    val relR = rel.select(col("query_id").as("rq"), col("doc_id").as("rel_doc"))
+    val hits = topk
+      .join(relR, col("query_id") === col("rq") && col("doc_id") === col("rel_doc"),
+        "left")
+      .groupBy("query_id")
+      .agg(count(col("rel_doc")).as("hits"),
+        min(when(col("rel_doc").isNotNull, col("rnk"))).as("first_rel"))
+    qn.join(nrel, Seq("query_id"), "left")
+      .join(hits, Seq("query_id"), "left")
+      .select(col("query_id"),
+        coalesce(col("n_rel"), lit(0L)).as("n_rel"),
+        coalesce(col("hits"), lit(0L)).as("hits"),
+        round(lit(1.0) * coalesce(col("hits"), lit(0L)) / TopK, 4).as("precision_at_k"),
+        when(coalesce(col("n_rel"), lit(0L)) === 0, lit(null).cast("double"))
+          .otherwise(round(lit(1.0) * coalesce(col("hits"), lit(0L))
+            / least(col("n_rel"), lit(TopK.toLong)), 4)).as("recall_at_k"),
+        round(coalesce(lit(1.0) / col("first_rel"), lit(0.0)), 4).as("mrr"))
+      .orderBy("query_id")
   }
 
   // -------------------------------------------------- tf-idf keywords --
@@ -368,13 +382,8 @@ object Retrieval {
     * not k². Only docs with at least one shared window are reported. */
   val chunkOverlap: Q = Q.sql(
     "chunk_overlap",
-    s"""WITH ${duckWords()},
-       |s AS (SELECT doc_id, ws, len(ws) AS n,
-       |        unnest(range(0, len(ws), $ChunkStride)) AS start_word
-       |      FROM w),
-       |ch AS (SELECT doc_id,
-       |         md5(array_to_string(ws[start_word + 1 : start_word + $ChunkWords], ' '))
-       |           AS digest
+    s"""WITH $duckChunkStarts,
+       |ch AS (SELECT doc_id, $duckChunkDigest AS digest
        |       FROM s WHERE n - start_word >= $ChunkWords),
        |dd AS (SELECT DISTINCT doc_id, digest FROM ch),
        |cnt AS (SELECT digest, count(*) AS n_docs FROM dd GROUP BY 1),
@@ -385,15 +394,9 @@ object Retrieval {
        |  CAST(n_shared AS BIGINT) AS n_shared,
        |  round(1.0 * n_shared / n_digests, 4) AS shared_ratio
        |FROM per WHERE n_shared >= 1 ORDER BY doc_id""".stripMargin) { (s, d) =>
-    val dd = docs(s, d)
-      .select(col("doc_id"), words.as("ws"))
-      .withColumn("n", size(col("ws")))
-      .select(col("doc_id"), col("ws"), col("n"),
-        explode(expr(s"sequence(0, n - 1, $ChunkStride)")).as("start_word"))
+    val dd = chunkStarts(s, d)
       .filter(col("n") - col("start_word") >= ChunkWords)
-      .select(col("doc_id"),
-        md5(array_join(expr(s"slice(ws, start_word + 1, $ChunkWords)"), " "))
-          .as("digest"))
+      .select(col("doc_id"), chunkDigest.as("digest"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cnt = dd.groupBy("digest").agg(count(lit(1)).as("n_docs"))
@@ -561,78 +564,57 @@ object Retrieval {
     * any corpus size. Contributions are rounded once then summed as
     * DECIMAL (exact, order-independent); the fused rank orders by the
     * rounded score with doc_id tiebreak. */
-  val hybridRrf: Q = {
-    val duckQueryValues = bm25Queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => s"($qid, '$t')") }
-      .mkString(", ")
-    Q.sql(
-      "hybrid_rrf",
-      s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
-         |${duckWords()},
-         |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
-         |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
-         |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
-         |dft AS (SELECT term, count(*) AS df FROM tf
-         |        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY 1),
-         |c AS (SELECT qt.query_id, tf.doc_id,
-         |        CAST($contribFormula AS DECIMAL(18, 6)) AS c
-         |      FROM qt JOIN tf ON qt.term = tf.term
-         |           JOIN dft ON dft.term = qt.term CROSS JOIN st),
-         |bsc AS (SELECT query_id, doc_id, CAST(round(sum(c), 4) AS DOUBLE) AS score
-         |        FROM c GROUP BY 1, 2),
-         |sk AS (SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
-         |         CAST(rnk AS BIGINT) AS sparse_rnk
-         |       FROM (SELECT query_id, doc_id,
-         |               row_number() OVER (PARTITION BY query_id
-         |                                  ORDER BY score DESC, doc_id) AS rnk
-         |             FROM bsc) WHERE rnk <= $TopK),
-         |seed AS (SELECT query_id, doc_id FROM sk WHERE sparse_rnk = 1),
-         |q AS (SELECT seed.query_id, CAST(e.embedding AS DOUBLE[]) AS qe
-         |      FROM seed JOIN embeddings e ON e.vec_id = seed.doc_id),
-         |${graft.vector.Similarity.duckEmb(name = "ce")},
-         |ds AS (SELECT query_id, vec_id AS doc_id,
-         |         round(list_cosine_similarity(qe, emb), 4) AS cos_sim
-         |       FROM q, ce),
-         |dk AS (SELECT query_id, doc_id, CAST(rnk AS BIGINT) AS dense_rnk
-         |       FROM (SELECT query_id, doc_id,
-         |               row_number() OVER (PARTITION BY query_id
-         |                                  ORDER BY cos_sim DESC, doc_id) AS rnk
-         |             FROM ds) WHERE rnk <= $DenseTopK),
-         |f AS (SELECT query_id, doc_id, sparse_rnk, dense_rnk,
-         |        $rrfFormula AS rrf_score
-         |      FROM sk FULL JOIN dk USING (query_id, doc_id)),
-         |fr AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |         ORDER BY rrf_score DESC, doc_id) AS fused_rank FROM f)
-         |SELECT query_id, fused_rank, doc_id, rrf_score, sparse_rnk, dense_rnk
-         |FROM fr WHERE fused_rank <= $TopK
-         |ORDER BY query_id, fused_rank""".stripMargin) { (s, d) =>
-      val (_, topk, _) = bm25Machine(s, d)
-      val sk = topk.select(col("query_id").cast("long").as("query_id"),
-        col("doc_id"), col("rnk").cast("long").as("sparse_rnk"))
-      val e = graft.Tables.embeddings(s, d)
-      val seed = sk.filter(col("sparse_rnk") === 1).select("query_id", "doc_id")
-      val q = e.join(broadcast(seed), col("vec_id") === col("doc_id"))
-        .select(col("query_id"), col("embedding").as("qe"))
-      val denseW = Window.partitionBy("query_id")
-        .orderBy(col("cos_sim").desc, col("doc_id"))
-      val dk = e.select(col("vec_id").as("doc_id"), col("embedding").as("emb"))
-        .crossJoin(broadcast(q))
-        .select(col("query_id"), col("doc_id"),
-          round(graft.GraftFunctions.graftCosine(col("qe"), col("emb")), 4)
-            .as("cos_sim"))
-        .withColumn("rnk", row_number().over(denseW))
-        .filter(col("rnk") <= DenseTopK)
-        .select(col("query_id"), col("doc_id"), col("rnk").cast("long").as("dense_rnk"))
-      val fusedW = Window.partitionBy("query_id")
-        .orderBy(col("rrf_score").desc, col("doc_id"))
-      sk.join(dk, Seq("query_id", "doc_id"), "full_outer")
-        .withColumn("rrf_score", expr(rrfFormula))
-        .withColumn("fused_rank", row_number().over(fusedW))
-        .filter(col("fused_rank") <= TopK)
-        .select(col("query_id"), col("fused_rank"), col("doc_id"),
-          col("rrf_score"), col("sparse_rnk"), col("dense_rnk"))
-        .orderBy("query_id", "fused_rank")
-    }
+  val hybridRrf: Q = Q.sql(
+    "hybrid_rrf",
+    s"""WITH $duckBm25Ranks,
+       |sk AS (SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
+       |         CAST(rnk AS BIGINT) AS sparse_rnk
+       |       FROM r WHERE rnk <= $TopK),
+       |seed AS (SELECT query_id, doc_id FROM sk WHERE sparse_rnk = 1),
+       |q AS (SELECT seed.query_id, CAST(e.embedding AS DOUBLE[]) AS qe
+       |      FROM seed JOIN embeddings e ON e.vec_id = seed.doc_id),
+       |${graft.vector.Similarity.duckEmb(name = "ce")},
+       |ds AS (SELECT query_id, vec_id AS doc_id,
+       |         round(list_cosine_similarity(qe, emb), 4) AS cos_sim
+       |       FROM q, ce),
+       |dk AS (SELECT query_id, doc_id, CAST(rnk AS BIGINT) AS dense_rnk
+       |       FROM (SELECT query_id, doc_id,
+       |               row_number() OVER (PARTITION BY query_id
+       |                                  ORDER BY cos_sim DESC, doc_id) AS rnk
+       |             FROM ds) WHERE rnk <= $DenseTopK),
+       |f AS (SELECT query_id, doc_id, sparse_rnk, dense_rnk,
+       |        $rrfFormula AS rrf_score
+       |      FROM sk FULL JOIN dk USING (query_id, doc_id)),
+       |fr AS (SELECT *, row_number() OVER (PARTITION BY query_id
+       |         ORDER BY rrf_score DESC, doc_id) AS fused_rank FROM f)
+       |SELECT query_id, fused_rank, doc_id, rrf_score, sparse_rnk, dense_rnk
+       |FROM fr WHERE fused_rank <= $TopK
+       |ORDER BY query_id, fused_rank""".stripMargin) { (s, d) =>
+    val sk = bm25Machine(s, d).topk.select(col("query_id").cast("long").as("query_id"),
+      col("doc_id"), col("rnk").cast("long").as("sparse_rnk"))
+    val e = graft.Tables.embeddings(s, d)
+    val seed = sk.filter(col("sparse_rnk") === 1).select("query_id", "doc_id")
+    val q = e.join(broadcast(seed), col("vec_id") === col("doc_id"))
+      .select(col("query_id"), col("embedding").as("qe"))
+    val denseW = Window.partitionBy("query_id")
+      .orderBy(col("cos_sim").desc, col("doc_id"))
+    val dk = e.select(col("vec_id").as("doc_id"), col("embedding").as("emb"))
+      .crossJoin(broadcast(q))
+      .select(col("query_id"), col("doc_id"),
+        round(graft.GraftFunctions.graftCosine(col("qe"), col("emb")), 4)
+          .as("cos_sim"))
+      .withColumn("rnk", row_number().over(denseW))
+      .filter(col("rnk") <= DenseTopK)
+      .select(col("query_id"), col("doc_id"), col("rnk").cast("long").as("dense_rnk"))
+    val fusedW = Window.partitionBy("query_id")
+      .orderBy(col("rrf_score").desc, col("doc_id"))
+    sk.join(dk, Seq("query_id", "doc_id"), "full_outer")
+      .withColumn("rrf_score", expr(rrfFormula))
+      .withColumn("fused_rank", row_number().over(fusedW))
+      .filter(col("fused_rank") <= TopK)
+      .select(col("query_id"), col("fused_rank"), col("doc_id"),
+        col("rrf_score"), col("sparse_rnk"), col("dense_rnk"))
+      .orderBy("query_id", "fused_rank")
   }
 
   /** Chunk-granular dedup over doc_chunk's sliding windows: digests that
@@ -649,26 +631,14 @@ object Retrieval {
     * inflate the report: the count is distinct DOCS per digest. */
   val chunkDedup: Q = Q.sql(
     "chunk_dedup",
-    s"""WITH ${duckWords()},
-       |s AS (SELECT doc_id, ws, len(ws) AS n,
-       |        unnest(range(0, len(ws), $ChunkStride)) AS start_word
-       |      FROM w),
-       |c AS (SELECT doc_id,
-       |        md5(array_to_string(ws[start_word + 1 : least(start_word + $ChunkWords, n)], ' '))
-       |          AS chunk_digest
-       |      FROM s)
+    s"""WITH $duckChunkStarts,
+       |c AS (SELECT doc_id, $duckChunkDigest AS chunk_digest FROM s)
        |SELECT chunk_digest, count(*) AS n_chunks,
        |  count(DISTINCT doc_id) AS n_docs, min(doc_id) AS first_doc
        |FROM c GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2
        |ORDER BY chunk_digest""".stripMargin) { (s, d) =>
-    docs(s, d)
-      .select(col("doc_id"), words.as("ws"))
-      .withColumn("n", size(col("ws")))
-      .select(col("doc_id"), col("ws"), col("n"),
-        explode(expr(s"sequence(0, n - 1, $ChunkStride)")).as("start_word"))
-      .select(col("doc_id"),
-        md5(array_join(expr(s"slice(ws, start_word + 1, $ChunkWords)"), " "))
-          .as("chunk_digest"))
+    chunkStarts(s, d)
+      .select(col("doc_id"), chunkDigest.as("chunk_digest"))
       .groupBy("chunk_digest")
       .agg(count(lit(1)).as("n_chunks"),
         countDistinct(col("doc_id")).as("n_docs"),
@@ -702,21 +672,12 @@ object Retrieval {
     val paramContrib =
       "round(ln((n_docs - df + 0.5) / (df + 0.5) + 1) * tf * (k1v + 1) " +
         "/ (tf + k1v * (1 - bv + bv * dl * n_docs / sum_dl)), 6)"
-    val duckQueryValues = bm25Queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => s"($qid, '$t')") }
-      .mkString(", ")
     val duckCfgValues = cfgRows
       .map { case (id, k1v, bv) => s"($id, $k1v, $bv)" }.mkString(", ")
     Q.sql(
       "bm25_param_sensitivity",
-      s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
+      s"""WITH $duckBm25Head,
         |cfg(cfg_id, k1v, bv) AS (VALUES $duckCfgValues),
-        |${duckWords()},
-        |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
-        |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
-        |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
-        |dft AS (SELECT term, count(*) AS df FROM tf
-        |        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY 1),
         |c AS (SELECT cfg.cfg_id, qt.query_id, tf.doc_id,
         |        CAST($paramContrib AS DECIMAL(18, 6)) AS c
         |      FROM qt JOIN tf ON qt.term = tf.term
@@ -751,15 +712,10 @@ object Retrieval {
         |FROM j JOIN cfg ON j.cfg_id = cfg.cfg_id
         |GROUP BY 1, 2, 3 ORDER BY cfg.cfg_id""".stripMargin) { (s, d) =>
       import s.implicits._
-      val (tf, _, stats) = bm25Machine(s, d)
-      val qt = bm25Queries
-        .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-        .toDF("query_id", "term")
-      val qTerms = bm25Queries.flatMap(_._2).distinct.toDF("term")
+      val Bm25(tf, dft, stats, _) = bm25Machine(s, d)
+      val qt = queryTerms(s)
       val cfg = cfgRows.map { case (id, k1v, bv) => (id, k1v.toDouble, bv.toDouble) }
         .toDF("cfg_id", "k1v", "bv")
-      val dft = tf.join(broadcast(qTerms), Seq("term"))
-        .groupBy("term").agg(count(lit(1)).as("df"))
       val top = tf.join(broadcast(qt), Seq("term"))
         .join(broadcast(dft), Seq("term"))
         .crossJoin(broadcast(stats))
@@ -816,113 +772,89 @@ object Retrieval {
     * terms (≤ |query terms|+2/query) and df tables all broadcast; the
     * corpus never shuffles for the probe. Weights and contributions round
     * once to 6 decimals (shared formula strings), sums ride DECIMAL. */
-  val queryExpansionPrf: Q = {
-    val duckQueryValues = bm25Queries
-      .flatMap { case (qid, ts) => ts.distinct.map(t => s"($qid, '$t')") }
-      .mkString(", ")
-    Q.sql(
-      "query_expansion_prf",
-      s"""WITH qt(query_id, term) AS (VALUES $duckQueryValues),
-         |${duckWords()},
-         |t AS (SELECT doc_id, len(ws) AS dl, unnest(ws) AS term FROM w),
-         |tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM t GROUP BY 1, 2, 3),
-         |st AS (SELECT count(*) AS n_docs, sum(len(ws)) AS sum_dl FROM w),
-         |dft AS (SELECT term, count(*) AS df FROM tf
-         |        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY 1),
-         |c AS (SELECT qt.query_id, tf.doc_id,
-         |        CAST($contribFormula AS DECIMAL(18, 6)) AS c
-         |      FROM qt JOIN tf ON qt.term = tf.term
-         |           JOIN dft ON dft.term = qt.term CROSS JOIN st),
-         |sc AS (SELECT query_id, doc_id, CAST(round(sum(c), 4) AS DOUBLE) AS score
-         |       FROM c GROUP BY 1, 2),
-         |r AS (SELECT query_id, doc_id, score,
-         |        row_number() OVER (PARTITION BY query_id
-         |                           ORDER BY score DESC, doc_id) AS rnk
-         |      FROM sc),
-         |rtop AS (SELECT query_id, doc_id FROM r WHERE rnk <= $TopK),
-         |fb AS (SELECT query_id, doc_id FROM r WHERE rnk <= 3),
-         |fbw AS (SELECT f.query_id, tf.term, CAST(sum(tf.tf) AS BIGINT) AS fbw
-         |        FROM fb f JOIN tf ON tf.doc_id = f.doc_id GROUP BY 1, 2),
-         |cd AS (SELECT term, count(*) AS df FROM tf
-         |       WHERE term IN (SELECT DISTINCT term FROM fbw) GROUP BY 1),
-         |ex AS (SELECT query_id, term, 0.5 AS qw FROM (
-         |         SELECT fbw.query_id, fbw.term,
-         |           row_number() OVER (PARTITION BY fbw.query_id
-         |             ORDER BY round(fbw.fbw * ln(1.0 * st.n_docs / cd.df), 6) DESC,
-         |                      fbw.term) AS rn
-         |         FROM fbw JOIN cd ON cd.term = fbw.term CROSS JOIN st
-         |         LEFT JOIN qt q ON q.query_id = fbw.query_id AND q.term = fbw.term
-         |         WHERE q.term IS NULL)
-         |       WHERE rn <= 2),
-         |exq AS (SELECT query_id, term, 1.0 AS qw FROM qt
-         |        UNION ALL SELECT query_id, term, qw FROM ex),
-         |dft2 AS (SELECT term, count(*) AS df FROM tf
-         |         WHERE term IN (SELECT DISTINCT term FROM exq) GROUP BY 1),
-         |c2 AS (SELECT e.query_id, tf.doc_id,
-         |         CAST($contribWeighted AS DECIMAL(18, 6)) AS c
-         |       FROM exq e JOIN tf ON tf.term = e.term
-         |            JOIN dft2 ON dft2.term = e.term CROSS JOIN st),
-         |sc2 AS (SELECT query_id, doc_id, CAST(round(sum(c), 4) AS DOUBLE) AS score
-         |        FROM c2 GROUP BY 1, 2),
-         |r2 AS (SELECT query_id, doc_id, score,
-         |         row_number() OVER (PARTITION BY query_id
-         |                            ORDER BY score DESC, doc_id) AS rnk
-         |       FROM sc2)
-         |SELECT r2.query_id, CAST(r2.rnk AS BIGINT) AS rnk, r2.doc_id, r2.score,
-         |  (o.doc_id IS NULL) AS entered_topk
-         |FROM r2 LEFT JOIN rtop o
-         |  ON o.query_id = r2.query_id AND o.doc_id = r2.doc_id
-         |WHERE r2.rnk <= $TopK ORDER BY r2.query_id, r2.rnk""".stripMargin) { (s, d) =>
-      import s.implicits._
-      val (tf, topk0, stats) = bm25Machine(s, d)
-      // the serve ranking is read twice (feedback docs + the entered_topk
-      // join) and the expansion chain is ~10 sequential jobs deep — pin
-      // the <=|q|*k-row frame so the second read is a cache hit, not a
-      // second corpus pass (the tok_unigram chain-depth lesson)
-      val topk = topk0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val qt = bm25Queries
-        .flatMap { case (qid, ts) => ts.distinct.map(t => (qid, t)) }
-        .toDF("query_id", "term")
-      val fb = topk.filter(col("rnk") <= 3).select(col("query_id"), col("doc_id"))
-      val fbw = tf.join(broadcast(fb), Seq("doc_id"))
-        .groupBy("query_id", "term").agg(sum("tf").cast("long").as("fbw"))
-      // ONE df pass serves both readers: cd (feedback-term idf for the
-      // expansion rank) and dft2 (the re-score) — exq's terms are a
-      // subset of fbw-terms ∪ query-terms by construction, so separate
-      // cd/dft2 passes would scan tf twice for the same counts
-      val dfAll = tf.join(
-          broadcast(fbw.select("term").unionByName(qt.select("term")).distinct()),
-          Seq("term"))
-        .groupBy("term").agg(count(lit(1)).as("df"))
-      val cd = dfAll
-      val exW = Window.partitionBy("query_id")
-        .orderBy(round(col("fbw") * log(lit(1.0) * col("n_docs") / col("df")), 6).desc,
-          col("term"))
-      val ex = fbw.join(qt, Seq("query_id", "term"), "left_anti")
-        .join(broadcast(cd), Seq("term"))
-        .crossJoin(broadcast(stats))
-        .withColumn("rn", row_number().over(exW))
-        .filter(col("rn") <= 2)
-        .select(col("query_id"), col("term"), lit(0.5).as("qw"))
-      val exq = qt.withColumn("qw", lit(1.0)).unionByName(ex)
-      val dft2 = dfAll
-      val c2 = tf.join(broadcast(exq), Seq("term"))
-        .join(broadcast(dft2), Seq("term"))
-        .crossJoin(broadcast(stats))
-        .withColumn("c", expr(contribWeighted).cast("decimal(18,6)"))
-      val r2 = c2.groupBy("query_id", "doc_id").agg(sum("c").as("dsum"))
-        .withColumn("score", round(col("dsum"), 4).cast("double"))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id")))
-          .cast("long"))
-        .filter(col("rnk") <= TopK)
-      val orig = topk.select(col("query_id").as("oq"), col("doc_id").as("od"))
-      r2.join(broadcast(orig),
-          col("oq") === col("query_id") && col("od") === col("doc_id"), "left")
-        .select(col("query_id"), col("rnk"), col("doc_id"), col("score"),
-          col("od").isNull.as("entered_topk"))
-        .orderBy("query_id", "rnk")
-    }
+  val queryExpansionPrf: Q = Q.sql(
+    "query_expansion_prf",
+    s"""WITH $duckBm25Ranks,
+       |rtop AS (SELECT query_id, doc_id FROM r WHERE rnk <= $TopK),
+       |fb AS (SELECT query_id, doc_id FROM r WHERE rnk <= 3),
+       |fbw AS (SELECT f.query_id, tf.term, CAST(sum(tf.tf) AS BIGINT) AS fbw
+       |        FROM fb f JOIN tf ON tf.doc_id = f.doc_id GROUP BY 1, 2),
+       |cd AS (SELECT term, count(*) AS df FROM tf
+       |       WHERE term IN (SELECT DISTINCT term FROM fbw) GROUP BY 1),
+       |ex AS (SELECT query_id, term, 0.5 AS qw FROM (
+       |         SELECT fbw.query_id, fbw.term,
+       |           row_number() OVER (PARTITION BY fbw.query_id
+       |             ORDER BY round(fbw.fbw * ln(1.0 * st.n_docs / cd.df), 6) DESC,
+       |                      fbw.term) AS rn
+       |         FROM fbw JOIN cd ON cd.term = fbw.term CROSS JOIN st
+       |         LEFT JOIN qt q ON q.query_id = fbw.query_id AND q.term = fbw.term
+       |         WHERE q.term IS NULL)
+       |       WHERE rn <= 2),
+       |exq AS (SELECT query_id, term, 1.0 AS qw FROM qt
+       |        UNION ALL SELECT query_id, term, qw FROM ex),
+       |dft2 AS (SELECT term, count(*) AS df FROM tf
+       |         WHERE term IN (SELECT DISTINCT term FROM exq) GROUP BY 1),
+       |c2 AS (SELECT e.query_id, tf.doc_id,
+       |         CAST($contribWeighted AS DECIMAL(18, 6)) AS c
+       |       FROM exq e JOIN tf ON tf.term = e.term
+       |            JOIN dft2 ON dft2.term = e.term CROSS JOIN st),
+       |sc2 AS (SELECT query_id, doc_id, CAST(round(sum(c), 4) AS DOUBLE) AS score
+       |        FROM c2 GROUP BY 1, 2),
+       |r2 AS (SELECT query_id, doc_id, score,
+       |         row_number() OVER (PARTITION BY query_id
+       |                            ORDER BY score DESC, doc_id) AS rnk
+       |       FROM sc2)
+       |SELECT r2.query_id, CAST(r2.rnk AS BIGINT) AS rnk, r2.doc_id, r2.score,
+       |  (o.doc_id IS NULL) AS entered_topk
+       |FROM r2 LEFT JOIN rtop o
+       |  ON o.query_id = r2.query_id AND o.doc_id = r2.doc_id
+       |WHERE r2.rnk <= $TopK ORDER BY r2.query_id, r2.rnk""".stripMargin) { (s, d) =>
+    val Bm25(tf, _, stats, topk0) = bm25Machine(s, d)
+    // the serve ranking is read twice (feedback docs + the entered_topk
+    // join) and the expansion chain is ~10 sequential jobs deep — pin
+    // the <=|q|*k-row frame so the second read is a cache hit, not a
+    // second corpus pass (the tok_unigram chain-depth lesson)
+    val topk = topk0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val qt = queryTerms(s)
+    val fb = topk.filter(col("rnk") <= 3).select(col("query_id"), col("doc_id"))
+    val fbw = tf.join(broadcast(fb), Seq("doc_id"))
+      .groupBy("query_id", "term").agg(sum("tf").cast("long").as("fbw"))
+    // ONE df pass serves both readers: cd (feedback-term idf for the
+    // expansion rank) and dft2 (the re-score) — exq's terms are a
+    // subset of fbw-terms ∪ query-terms by construction, so separate
+    // cd/dft2 passes would scan tf twice for the same counts
+    val dfAll = tf.join(
+        broadcast(fbw.select("term").unionByName(qt.select("term")).distinct()),
+        Seq("term"))
+      .groupBy("term").agg(count(lit(1)).as("df"))
+    val cd = dfAll
+    val exW = Window.partitionBy("query_id")
+      .orderBy(round(col("fbw") * log(lit(1.0) * col("n_docs") / col("df")), 6).desc,
+        col("term"))
+    val ex = fbw.join(qt, Seq("query_id", "term"), "left_anti")
+      .join(broadcast(cd), Seq("term"))
+      .crossJoin(broadcast(stats))
+      .withColumn("rn", row_number().over(exW))
+      .filter(col("rn") <= 2)
+      .select(col("query_id"), col("term"), lit(0.5).as("qw"))
+    val exq = qt.withColumn("qw", lit(1.0)).unionByName(ex)
+    val dft2 = dfAll
+    val c2 = tf.join(broadcast(exq), Seq("term"))
+      .join(broadcast(dft2), Seq("term"))
+      .crossJoin(broadcast(stats))
+      .withColumn("c", expr(contribWeighted).cast("decimal(18,6)"))
+    val r2 = c2.groupBy("query_id", "doc_id").agg(sum("c").as("dsum"))
+      .withColumn("score", round(col("dsum"), 4).cast("double"))
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id")))
+        .cast("long"))
+      .filter(col("rnk") <= TopK)
+    val orig = topk.select(col("query_id").as("oq"), col("doc_id").as("od"))
+    r2.join(broadcast(orig),
+        col("oq") === col("query_id") && col("od") === col("doc_id"), "left")
+      .select(col("query_id"), col("rnk"), col("doc_id"), col("score"),
+        col("od").isNull.as("entered_topk"))
+      .orderBy("query_id", "rnk")
   }
 
   /** RAKE keyphrase extraction (Rose et al. 2010, "Automatic Keyword

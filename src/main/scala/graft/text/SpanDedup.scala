@@ -32,6 +32,14 @@ object SpanDedup {
   private val K = 40
   private val Stride = 20
 
+  /** One row per `K`-char span of `text` (every `Stride` chars from the
+    * first): its md5, `key`. */
+  private val spanKeys =
+    explode(expr(
+      s"""transform(sequence(1, cast(n_chars as int) - ${K - 1}, $Stride),
+         |  i -> md5(substring(text, i, $K)))""".stripMargin))
+      .as("key")
+
   /** Per-(lang, source) duplicated-span report: how much of each slice's
     * character mass sits in cross-document verbatim spans, and the worst
     * single document's duplicated share. */
@@ -83,10 +91,7 @@ object SpanDedup {
     val sp = dist
       .filter(col("n_chars") >= K)
       .select(col("tkey"), col("m"),
-        explode(expr(
-          s"""transform(sequence(1, cast(n_chars as int) - ${K - 1}, $Stride),
-             |  i -> md5(substring(text, i, $K)))""".stripMargin))
-          .as("key"))
+        spanKeys)
     val k = sp.groupBy("key")
       .agg(min("tkey").as("mnt"), max("tkey").as("mxt"), max("m").as("mxm"))
     val perText = sp.join(k, "key")
@@ -164,10 +169,7 @@ object SpanDedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keyed = dist
       .select(col("tkey"), col("m"), col("mindoc"),
-        explode(expr(
-          s"""transform(sequence(1, cast(n_chars as int) - ${K - 1}, $Stride),
-             |  i -> md5(substring(text, i, $K)))""".stripMargin))
-          .as("key"))
+        spanKeys)
     val top = keyed.groupBy("key", "tkey", "m", "mindoc")
       .agg(count(lit(1)).cast("long").as("occ"))
       .groupBy("key")

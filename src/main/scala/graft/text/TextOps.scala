@@ -3,7 +3,7 @@ package graft.text
 import graft.Q
 import graft.Tables.{documents => docs}
 import graft.text.Tokens.{distinctTexts, duckDistinctTexts, duckGrams, duckShingleCtes,
-  duckWordList, duckWords, shingles, words}
+  duckShingleRows, duckWordList, duckWords, shingles, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -180,11 +180,7 @@ object TextOps {
     * `dedup_ngram_jaccard` and `dedup_components` (emitted without the
     * leading WITH so the components oracle can prepend RECURSIVE). */
   private val jaccardPairsCtesSql: String =
-    s"""${duckWords("doc_id, lang, source")},
-       |sh AS (SELECT doc_id, lang, source,
-       |         list_distinct(${duckGrams(3)}) AS s3
-       |       FROM w),
-       |ex AS (SELECT doc_id, lang, source, unnest(s3) AS shingle FROM sh),
+    s"""${duckShingleRows("doc_id, lang, source")},
        |dft AS MATERIALIZED (SELECT lang, source, shingle FROM ex
        |        GROUP BY 1, 2, 3 HAVING count(*) <= $ShingleDfCap),
        |exf AS (SELECT doc_id, lang, source, shingle
@@ -949,6 +945,16 @@ object TextOps {
        |  FROM $from x JOIN $from y
        |    ON x.band = y.band AND x.bucket = y.bucket AND x.$id $op y.$id)""".stripMargin
 
+  /** The rows of two band relations that collide on (band, bucket) — the
+    * cross-set probe of an index's bands by a batch's (dedup_incremental,
+    * decontaminate_fuzzy); [[bandPairs]] is the self-join. NULL buckets
+    * never collide. */
+  private def bandHits(a: DataFrame, b: DataFrame): DataFrame = a.join(b, Seq("band", "bucket"))
+
+  /** DuckDB twin of [[bandHits]]: the join of the band relations `a` and
+    * `b` (each a relation with its alias) on (band, bucket). */
+  private def duckBandHits(a: String, b: String): String = s"$a JOIN $b USING (band, bucket)"
+
   /** Signature groups (sig1..sigk, ex_mult, ex_min): one row per DISTINCT
     * signature with its multiplicity and min doc id. Docs with the same
     * k-band signature are indistinguishable to any band join, so the
@@ -978,7 +984,7 @@ object TextOps {
     val incAll = incSigs.withColumn("igid",
       min("doc_id").over(Window.partitionBy(sigCols: _*)))
     val incBands = bandsOf(incAll.filter(col("doc_id") === col("igid")), col("igid"))
-    val gm = exBands.join(broadcast(incBands), Seq("band", "bucket"))
+    val gm = bandHits(exBands, broadcast(incBands))
       .select(col("igid"), col("ex_min"), col("ex_mult")).distinct()
       .groupBy("igid")
       .agg(sum("ex_mult").cast("long").as("n_near_dups"),
@@ -1148,13 +1154,22 @@ object TextOps {
     (gmap, gsig, gMetrics)
   }
 
+  /** DuckDB twin of [[minhashGroupMetrics]]' per-pair metrics over
+    * (n_sig_match, common, za, zb): est_jacc, exact_jacc, abs_err. */
+  private lazy val duckPairMetrics: String = {
+    val k = minhashParams.length
+    s"""round(n_sig_match / $k.0, 4) AS est_jacc,
+       |  round(1.0 * common / (za + zb - common), 4) AS exact_jacc,
+       |  round(abs(round(n_sig_match / $k.0, 4)
+       |    - round(1.0 * common / (za + zb - common), 4)), 4) AS abs_err""".stripMargin
+  }
+
   /** DuckDB CTE chain of the distinct-shingle-set collapse (the SQL
     * mirror of [[minhashGroupMetrics]]), ending in
     * `gmet(ga, gb, n_sig_match, est_jacc, exact_jacc, abs_err)` with
     * `gmm(doc_id, gid)` / `gsd(gid, s3d, sig1..)` in scope — the shared
     * head of the dedup_minhash_est and dedup_minhash_calib scale twins. */
-  private lazy val minhashScaleHeadSql: String = {
-    val k = minhashParams.length
+  private lazy val minhashScaleHeadSql: String =
     s"""${duckShingleCtes()},
        |sk AS MATERIALIZED (SELECT doc_id, list_distinct(s3) AS s3d FROM docs),
        |gmm AS MATERIALIZED (SELECT doc_id,
@@ -1174,12 +1189,8 @@ object TextOps {
        |      FROM gpairs JOIN gsd sa ON sa.gid = ga
        |                  JOIN gsd sb ON sb.gid = gb),
        |gmet AS (SELECT ga, gb, n_sig_match,
-       |        round(n_sig_match / $k.0, 4) AS est_jacc,
-       |        round(1.0 * common / (za + zb - common), 4) AS exact_jacc,
-       |        round(abs(round(n_sig_match / $k.0, 4)
-       |          - round(1.0 * common / (za + zb - common), 4)), 4) AS abs_err
+       |  $duckPairMetrics
        |      FROM gj)""".stripMargin
-  }
 
   /** DuckDB CTE chain of the naive doc-level candidate pairs, ending in
     * `j(doc_a, doc_b, n_sig_match, common, za, zb)` over the distinct
@@ -1240,10 +1251,7 @@ object TextOps {
     "dedup_minhash_est",
     s"""WITH $minhashNaiveHeadSql
        |SELECT doc_a, doc_b, n_sig_match,
-       |  round(n_sig_match / $k.0, 4) AS est_jacc,
-       |  round(1.0 * common / (za + zb - common), 4) AS exact_jacc,
-       |  round(abs(round(n_sig_match / $k.0, 4)
-       |    - round(1.0 * common / (za + zb - common), 4)), 4) AS abs_err
+       |  $duckPairMetrics
        |FROM j ORDER BY doc_a, doc_b""".stripMargin,
     scaleOracle) { (s, d) =>
     // Signature-collapsed formulation (the dedup_minhash trick applied to
@@ -1308,6 +1316,19 @@ object TextOps {
     val nullCols =
       """CAST(NULL AS BIGINT) AS doc_a, CAST(NULL AS BIGINT) AS doc_b,
         |          CAST(NULL AS DOUBLE) AS exact_jacc""".stripMargin
+    // up to 5 exhibit pairs (a, b) per n_sig_match bucket of `from`,
+    // picked by the md5 of the id pair
+    def exhibits(a: String, b: String, from: String) =
+      s"""exh AS (SELECT CAST(n_sig_match AS BIGINT) AS n_sig_match,
+         |          'exhibit' AS kind, CAST(rn AS BIGINT) AS rnk,
+         |          CAST(NULL AS BIGINT) AS n_pairs,
+         |          CAST(NULL AS BIGINT) AS exact_sum_4dp,
+         |          CAST(NULL AS BIGINT) AS err_sum_4dp,
+         |          $a AS doc_a, $b AS doc_b, exact_jacc
+         |        FROM (SELECT *, row_number() OVER (PARTITION BY n_sig_match
+         |                ORDER BY md5(CAST($a AS VARCHAR) || ':' || CAST($b AS VARCHAR)))
+         |                  AS rn
+         |              FROM $from) rc WHERE rn <= 5)""".stripMargin
     val sumCols =
       """CAST(sum(CAST(CAST(exact_jacc AS DECIMAL(18,4)) * 10000 AS BIGINT))
         |            AS BIGINT) AS exact_sum_4dp,
@@ -1319,9 +1340,7 @@ object TextOps {
     val naive =
       s"""WITH $minhashNaiveHeadSql,
          |met AS (SELECT doc_a, doc_b, n_sig_match,
-         |        round(1.0 * common / (za + zb - common), 4) AS exact_jacc,
-         |        round(abs(round(n_sig_match / $k.0, 4)
-         |          - round(1.0 * common / (za + zb - common), 4)), 4) AS abs_err
+         |  $duckPairMetrics
          |      FROM j),
          |summ AS (SELECT CAST(n_sig_match AS BIGINT) AS n_sig_match,
          |          'summary' AS kind, CAST(0 AS BIGINT) AS rnk,
@@ -1335,16 +1354,7 @@ object TextOps {
          |canon AS (SELECT m.* FROM met m
          |          JOIN gidm a ON m.doc_a = a.doc_id AND a.doc_id = a.gid
          |          JOIN gidm b ON m.doc_b = b.doc_id AND b.doc_id = b.gid),
-         |exh AS (SELECT CAST(n_sig_match AS BIGINT) AS n_sig_match,
-         |          'exhibit' AS kind, CAST(rn AS BIGINT) AS rnk,
-         |          CAST(NULL AS BIGINT) AS n_pairs,
-         |          CAST(NULL AS BIGINT) AS exact_sum_4dp,
-         |          CAST(NULL AS BIGINT) AS err_sum_4dp,
-         |          doc_a, doc_b, exact_jacc
-         |        FROM (SELECT *, row_number() OVER (PARTITION BY n_sig_match
-         |                ORDER BY md5(CAST(doc_a AS VARCHAR) || ':'
-         |                             || CAST(doc_b AS VARCHAR))) AS rn
-         |              FROM canon) rc WHERE rn <= 5)
+         |${exhibits("doc_a", "doc_b", "canon")}
          |SELECT * FROM (SELECT * FROM summ UNION ALL SELECT * FROM exh) u
          |ORDER BY n_sig_match, rnk""".stripMargin
     // scale twin: the collapsed group head + multiplicity arithmetic —
@@ -1372,16 +1382,7 @@ object TextOps {
          |          $nullCols
          |        FROM (SELECT * FROM crossb UNION ALL SELECT * FROM intrab) cb
          |        GROUP BY 1),
-         |exh AS (SELECT CAST(n_sig_match AS BIGINT) AS n_sig_match,
-         |          'exhibit' AS kind, CAST(rn AS BIGINT) AS rnk,
-         |          CAST(NULL AS BIGINT) AS n_pairs,
-         |          CAST(NULL AS BIGINT) AS exact_sum_4dp,
-         |          CAST(NULL AS BIGINT) AS err_sum_4dp,
-         |          ga AS doc_a, gb AS doc_b, exact_jacc
-         |        FROM (SELECT *, row_number() OVER (PARTITION BY n_sig_match
-         |                ORDER BY md5(CAST(ga AS VARCHAR) || ':'
-         |                             || CAST(gb AS VARCHAR))) AS rn
-         |              FROM gmet) rc WHERE rn <= 5)
+         |${exhibits("ga", "gb", "gmet")}
          |SELECT * FROM (SELECT * FROM summ UNION ALL SELECT * FROM exh) u
          |ORDER BY n_sig_match, rnk""".stripMargin
     Q.sqlDual("dedup_minhash_calib", naive, scale) { (s, d) =>
@@ -1465,7 +1466,7 @@ object TextOps {
          |gm AS (SELECT igid, CAST(sum(ex_mult) AS BIGINT) AS n_near_dups,
          |         min(ex_min) AS first_match
          |       FROM (SELECT DISTINCT ib.igid, eb.ex_min, eb.ex_mult
-         |             FROM ib JOIN eb USING (band, bucket))
+         |             FROM ${duckBandHits("ib", "eb")})
          |       GROUP BY 1),
          |inc AS (SELECT doc_id,
          |          min(doc_id) OVER (PARTITION BY ${sigNames.mkString(", ")}) AS igid
@@ -1484,7 +1485,7 @@ object TextOps {
          |eb AS (SELECT doc_id AS ex_id, band, bucket FROM bands WHERE doc_id % 10 <> 0),
          |m AS (SELECT inc_id, count(DISTINCT ex_id) AS n_near_dups,
          |        min(ex_id) AS first_match
-         |      FROM ib JOIN eb USING (band, bucket) GROUP BY 1),
+         |      FROM ${duckBandHits("ib", "eb")} GROUP BY 1),
          |i AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0)
          |SELECT i.doc_id, coalesce(n_near_dups, 0) AS n_near_dups, first_match,
          |  CASE WHEN coalesce(n_near_dups, 0) >= 1 THEN 'near_dup'
@@ -1557,18 +1558,42 @@ object TextOps {
   // ------------------------------------------------------ text analysis --
 
   /** Stopword-profile language ID vs the labeled lang (confusion matrix). */
+  /** The stopword votes of a text: n_the, n_data, n_spark. */
+  private val langVotes: Seq[Column] = Seq(
+    size(filter(words, _ === "the")).as("n_the"),
+    size(filter(words, _ === "data")).as("n_data"),
+    size(filter(words, _ === "spark")).as("n_spark"))
+
+  /** lang_id's rule over [[langVotes]]: the language whose stopword has
+    * the most votes, ties to en, then es. */
+  private val predictedLang: Column =
+    when(col("n_the") >= col("n_data") && col("n_the") >= col("n_spark"), "en")
+      .when(col("n_data") >= col("n_spark"), "es")
+      .otherwise("zh")
+
+  /** DuckDB twin of [[langVotes]]: `f`, the `keep` columns and the votes
+    * of each document. */
+  private def duckLangVotes(keep: String): String =
+    s"""f AS (
+       |  SELECT $keep,
+       |    len(list_filter(${duckWordList()}, w -> w = 'the')) AS n_the,
+       |    len(list_filter(${duckWordList()}, w -> w = 'data')) AS n_data,
+       |    len(list_filter(${duckWordList()}, w -> w = 'spark')) AS n_spark
+       |  FROM documents)""".stripMargin
+
+  /** DuckDB twin of [[predictedLang]]. */
+  private val duckPredictedLang: String =
+    """CASE WHEN n_the >= n_data AND n_the >= n_spark THEN 'en'
+      |             WHEN n_data >= n_spark THEN 'es' ELSE 'zh' END""".stripMargin
+
+  /** DuckDB twin of [[langPredicted]]: `p` (lang, predicted) per document. */
+  private val duckLangPredicted: String =
+    s"""${duckLangVotes("lang")},
+       |p AS (SELECT lang, $duckPredictedLang AS predicted FROM f)""".stripMargin
+
   val langId: Q = Q.sql(
     "lang_id",
-    s"""WITH f AS (
-      |  SELECT lang,
-      |    len(list_filter(${duckWordList()}, w -> w = 'the')) AS n_the,
-      |    len(list_filter(${duckWordList()}, w -> w = 'data')) AS n_data,
-      |    len(list_filter(${duckWordList()}, w -> w = 'spark')) AS n_spark
-      |  FROM documents),
-      |p AS (SELECT lang,
-      |        CASE WHEN n_the >= n_data AND n_the >= n_spark THEN 'en'
-      |             WHEN n_data >= n_spark THEN 'es' ELSE 'zh' END AS predicted
-      |      FROM f)
+    s"""WITH $duckLangPredicted
       |SELECT lang, predicted, count(*) AS n
       |FROM p GROUP BY 1, 2 ORDER BY lang, predicted""".stripMargin) { (s, d) =>
     langPredicted(s, d)
@@ -1583,14 +1608,8 @@ object TextOps {
     * the two cannot drift. */
   private def langPredicted(s: SparkSession, d: String): DataFrame = {
     val (keyed, dist) = distinctTexts(docs(s, d), Seq("lang"))
-    val per = dist.select(col("tkey"),
-        size(filter(words, _ === "the")).as("n_the"),
-        size(filter(words, _ === "data")).as("n_data"),
-        size(filter(words, _ === "spark")).as("n_spark"))
-      .select(col("tkey"),
-        when(col("n_the") >= col("n_data") && col("n_the") >= col("n_spark"), "en")
-          .when(col("n_data") >= col("n_spark"), "es")
-          .otherwise("zh").as("predicted"))
+    val per = dist.select(col("tkey") +: langVotes: _*)
+      .select(col("tkey"), predictedLang.as("predicted"))
     keyed.join(per, Seq("tkey"))
       .select("lang", "predicted")
   }
@@ -1608,16 +1627,7 @@ object TextOps {
     * drift from lang_id's prediction rule. */
   val langIdMetrics: Q = Q.sql(
     "lang_id_metrics",
-    s"""WITH f AS (
-      |  SELECT lang,
-      |    len(list_filter(${duckWordList()}, w -> w = 'the')) AS n_the,
-      |    len(list_filter(${duckWordList()}, w -> w = 'data')) AS n_data,
-      |    len(list_filter(${duckWordList()}, w -> w = 'spark')) AS n_spark
-      |  FROM documents),
-      |p AS (SELECT lang,
-      |        CASE WHEN n_the >= n_data AND n_the >= n_spark THEN 'en'
-      |             WHEN n_data >= n_spark THEN 'es' ELSE 'zh' END AS predicted
-      |      FROM f),
+    s"""WITH $duckLangPredicted,
       |m AS (SELECT lang, predicted, count(*) AS n FROM p GROUP BY 1, 2),
       |t AS (SELECT lang, CAST(sum(n) AS BIGINT) AS n_true,
       |        CAST(sum(CASE WHEN predicted = lang THEN n ELSE 0 END) AS BIGINT) AS tp
@@ -1977,6 +1987,15 @@ object TextOps {
     * (doc_a, doc_b) for the FULL OUTER — no broadcast of either
     * pair-scale side — and the final aggregate is ≤ 10 rows. */
   val dedupLshCurve: Q = {
+    // the curve both oracles end with, over the per-bucket pair and
+    // detection counts `bk`; the theoretical rate is 1 − (1 − J)^4 at
+    // the bucket's lower edge
+    val curve =
+      """SELECT round(bucket / 10.0, 1) AS bucket_lo, n_pairs, n_detected,
+        |  round(1.0 * n_detected / n_pairs, 4) AS detect_rate,
+        |  round((10000 - (10 - bucket) * (10 - bucket) * (10 - bucket)
+        |    * (10 - bucket)) / 10000.0, 4) AS theo_rate
+        |FROM bk ORDER BY bucket_lo""".stripMargin
     // Collapsed scale twin (the dedup_plane_agreement twin pattern):
     // groups = distinct (lang, source, text) — FINER than the Spark
     // side's (lang, source, s3d) but value-identical, because two
@@ -2029,11 +2048,7 @@ object TextOps {
          |         CAST(sum(mult) AS BIGINT) AS n_pairs,
          |         CAST(sum(det * mult) AS BIGINT) AS n_detected
          |       FROM u GROUP BY 1)
-         |SELECT round(bucket / 10.0, 1) AS bucket_lo, n_pairs, n_detected,
-         |  round(1.0 * n_detected / n_pairs, 4) AS detect_rate,
-         |  round((10000 - (10 - bucket) * (10 - bucket) * (10 - bucket)
-         |    * (10 - bucket)) / 10000.0, 4) AS theo_rate
-         |FROM bk ORDER BY bucket_lo""".stripMargin
+         |$curve""".stripMargin
     Q.sqlDual(
       "dedup_lsh_curve",
       s"""WITH $jaccardPairsCtesSql,
@@ -2049,11 +2064,7 @@ object TextOps {
          |bk AS (SELECT least(CAST(floor(jacc * 10) AS INT), 9) AS bucket,
          |         count(*) AS n_pairs, CAST(sum(det) AS BIGINT) AS n_detected
          |       FROM u GROUP BY 1)
-         |SELECT round(bucket / 10.0, 1) AS bucket_lo, n_pairs, n_detected,
-         |  round(1.0 * n_detected / n_pairs, 4) AS detect_rate,
-         |  round((10000 - (10 - bucket) * (10 - bucket) * (10 - bucket)
-         |    * (10 - bucket)) / 10000.0, 4) AS theo_rate
-         |FROM bk ORDER BY bucket_lo""".stripMargin,
+         |$curve""".stripMargin,
       scaleOracle) { (s, d) =>
       // Group-collapsed formulation (the dedup_minhash trick, here taken
       // all the way: the output is a ≤10-row histogram, so doc-level
@@ -2145,15 +2156,9 @@ object TextOps {
     * any corpus size; output bounded by the disagreement count. */
   val docLangOutliers: Q = Q.sql(
     "doc_lang_outliers",
-    s"""WITH f AS (
-      |  SELECT doc_id, lang, source,
-      |    len(list_filter(${duckWordList()}, w -> w = 'the')) AS n_the,
-      |    len(list_filter(${duckWordList()}, w -> w = 'data')) AS n_data,
-      |    len(list_filter(${duckWordList()}, w -> w = 'spark')) AS n_spark
-      |  FROM documents),
+    s"""WITH ${duckLangVotes("doc_id, lang, source")},
       |p AS (SELECT doc_id, lang, source, n_the, n_data, n_spark,
-      |        CASE WHEN n_the >= n_data AND n_the >= n_spark THEN 'en'
-      |             WHEN n_data >= n_spark THEN 'es' ELSE 'zh' END AS predicted,
+      |        $duckPredictedLang AS predicted,
       |        CASE WHEN n_the >= n_data AND n_the >= n_spark THEN n_the
       |             WHEN n_data >= n_spark THEN n_data ELSE n_spark END AS win_votes,
       |        CASE lang WHEN 'en' THEN n_the WHEN 'es' THEN n_data ELSE n_spark END AS label_votes
@@ -2168,15 +2173,9 @@ object TextOps {
     // so predicted/win_votes derive per text and label_votes (lang-
     // dependent) derives after the tkey map join
     val (keyed, dist) = distinctTexts(docs(s, d), Seq("doc_id", "lang", "source"))
-    val per = dist.select(col("tkey"),
-      size(filter(words, _ === "the")).as("n_the"),
-      size(filter(words, _ === "data")).as("n_data"),
-      size(filter(words, _ === "spark")).as("n_spark"))
+    val per = dist.select(col("tkey") +: langVotes: _*)
     keyed.join(per, Seq("tkey"))
-      .withColumn("predicted",
-        when(col("n_the") >= col("n_data") && col("n_the") >= col("n_spark"), "en")
-          .when(col("n_data") >= col("n_spark"), "es")
-          .otherwise("zh"))
+      .withColumn("predicted", predictedLang)
       .withColumn("win_votes",
         when(col("n_the") >= col("n_data") && col("n_the") >= col("n_spark"), col("n_the"))
           .when(col("n_data") >= col("n_spark"), col("n_data"))
@@ -2346,7 +2345,7 @@ object TextOps {
          |       FROM tb t JOIN grp g ON g.tk = t.tk WHERE g.m_bench >= 1),
          |hitg AS (SELECT c.tk, b.btk, b.m_bench, b.min_bench_id,
          |           count(*) AS shared_bands
-         |         FROM tb c JOIN bb b ON c.band = b.band AND c.bucket = b.bucket
+         |         FROM ${duckBandHits("tb c", "bb b")}
          |         GROUP BY 1, 2, 3, 4),
          |bestg AS (SELECT tk, CAST(sum(m_bench) AS BIGINT) AS n_bench_hits,
          |            CAST(max(shared_bands) AS BIGINT) AS max_shared
@@ -2370,7 +2369,7 @@ object TextOps {
          |bb AS (SELECT doc_id AS bench_id, band, bucket FROM bands WHERE doc_id % 29 = 0),
          |cb AS (SELECT doc_id, band, bucket FROM bands WHERE doc_id % 29 <> 0),
          |hit AS (SELECT cb.doc_id, bb.bench_id, count(*) AS shared_bands
-         |        FROM cb JOIN bb ON cb.band = bb.band AND cb.bucket = bb.bucket
+         |        FROM ${duckBandHits("cb", "bb")}
          |        GROUP BY 1, 2),
          |best AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bench_hits,
          |           CAST(max(shared_bands) AS BIGINT) AS max_shared
@@ -2404,7 +2403,7 @@ object TextOps {
           .select(col("tkey").as("btk"), col("m_bench"), col("min_bench_id")),
           col("tkey") === col("btk"))
         .select(col("btk"), col("m_bench"), col("min_bench_id"), col("band"), col("bucket"))
-      val hitsG = bands.join(bench, Seq("band", "bucket"))
+      val hitsG = bandHits(bands, bench)
         .groupBy("tkey", "btk", "m_bench", "min_bench_id")
         .agg(count(lit(1)).as("shared_bands"))
       // ONE aggregation carries the multiplicity-weighted hit count and
@@ -2454,6 +2453,24 @@ object TextOps {
   val dedupPlaneAgreement: Q = {
     import graft.vector.Similarity
     val duckBands = duckBandsSql("doc_id", "sig")
+    // each pair of the text plane `tp` or the embedding plane `ep` with its
+    // verdict, and its cosine (`uc`)
+    val verdicts =
+      s"""u AS (SELECT coalesce(tp.a, ep.a) AS a, coalesce(tp.b, ep.b) AS b,
+         |        CASE WHEN tp.a IS NOT NULL AND ep.a IS NOT NULL THEN 'both'
+         |             WHEN tp.a IS NOT NULL THEN 'text_only'
+         |             ELSE 'emb_only' END AS verdict
+         |      FROM tp FULL OUTER JOIN ep ON tp.a = ep.a AND tp.b = ep.b),
+         |${Similarity.duckPairCosines("uc", "u", "a", "b")}""".stripMargin
+    // per verdict, the pair count, share and half-up mean cosine of the
+    // per-verdict sums `g` (n_pairs, s4)
+    val shares =
+      """t AS (SELECT CAST(sum(n_pairs) AS BIGINT) AS total FROM g)
+        |SELECT verdict, n_pairs,
+        |  round(1.0 * n_pairs / total, 4) AS pair_share,
+        |  CAST((2 * s4 + n_pairs) // (2 * n_pairs) AS DOUBLE) / 10000 - 1
+        |    AS mean_cos
+        |FROM g CROSS JOIN t ORDER BY verdict""".stripMargin
     // Collapsed scale twin: the group-level mirror of the Spark body —
     // signatures/buckets per distinct (text, embedding) representative,
     // a<=b self-rows as the within-group twin pairs, counts as
@@ -2482,33 +2499,19 @@ object TextOps {
               // where the naive oracle no longer runs
               "n1 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings)")},
          |${duckBandPairs("ec(a, b)", "bands", "vec_id", "<=")},
-         |ep AS (SELECT ec.a, ec.b
-         |       FROM ec JOIN e ea ON ea.vec_id = ec.a
-         |               JOIN e eb2 ON eb2.vec_id = ec.b
-         |       WHERE round(list_cosine_similarity(ea.emb, eb2.emb), 4) >= 0.35),
-         |u AS (SELECT coalesce(tp.a, ep.a) AS a, coalesce(tp.b, ep.b) AS b,
-         |        CASE WHEN tp.a IS NOT NULL AND ep.a IS NOT NULL THEN 'both'
-         |             WHEN tp.a IS NOT NULL THEN 'text_only'
-         |             ELSE 'emb_only' END AS verdict
-         |      FROM tp FULL OUTER JOIN ep ON tp.a = ep.a AND tp.b = ep.b),
-         |sc AS (SELECT u.verdict,
-         |         CASE WHEN u.a = u.b THEN ma.m * (ma.m - 1) // 2
+         |${Similarity.duckPairCosines("ecs", "ec", "a", "b")},
+         |ep AS (SELECT a, b FROM ecs WHERE cos_sim >= 0.35),
+         |$verdicts,
+         |sc AS (SELECT uc.verdict,
+         |         CASE WHEN uc.a = uc.b THEN ma.m * (ma.m - 1) // 2
          |              ELSE ma.m * mb.m END AS wt,
-         |         CAST(round((round(list_cosine_similarity(ea.emb, eb2.emb), 4) + 1)
-         |           * 10000, 0) AS BIGINT) AS cos4
-         |       FROM u JOIN e ea ON ea.vec_id = u.a
-         |              JOIN e eb2 ON eb2.vec_id = u.b
-         |              JOIN grp ma ON ma.gid = u.a
-         |              JOIN grp mb ON mb.gid = u.b),
+         |         CAST(round((cos_sim + 1) * 10000, 0) AS BIGINT) AS cos4
+         |       FROM uc JOIN grp ma ON ma.gid = uc.a
+         |               JOIN grp mb ON mb.gid = uc.b),
          |g AS (SELECT verdict, CAST(sum(wt) AS BIGINT) AS n_pairs,
          |        CAST(sum(wt * cos4) AS BIGINT) AS s4
          |      FROM sc WHERE wt > 0 GROUP BY 1),
-         |t AS (SELECT CAST(sum(n_pairs) AS BIGINT) AS total FROM g)
-         |SELECT verdict, n_pairs,
-         |  round(1.0 * n_pairs / total, 4) AS pair_share,
-         |  CAST((2 * s4 + n_pairs) // (2 * n_pairs) AS DOUBLE) / 10000 - 1
-         |    AS mean_cos
-         |FROM g CROSS JOIN t ORDER BY verdict""".stripMargin
+         |$shares""".stripMargin
     Q.sqlDual(
       "dedup_plane_agreement",
       s"""WITH ${duckSigCtes("documents WHERE doc_id IN (SELECT vec_id FROM embeddings)")},
@@ -2518,29 +2521,16 @@ object TextOps {
          |pe AS (SELECT vec_id, emb FROM e WHERE vec_id IN (SELECT doc_id FROM documents)),
          |${Similarity.signBandsSql("pe", "n1 AS (SELECT count(*) AS n FROM e)")},
          |${duckBandPairs("ec(a, b)", "bands", "vec_id", "<")},
-         |ep AS (SELECT ec.a, ec.b
-         |       FROM ec JOIN e ea ON ea.vec_id = ec.a
-         |               JOIN e eb2 ON eb2.vec_id = ec.b
-         |       WHERE round(list_cosine_similarity(ea.emb, eb2.emb), 4) >= 0.35),
-         |u AS (SELECT coalesce(tp.a, ep.a) AS a, coalesce(tp.b, ep.b) AS b,
-         |        CASE WHEN tp.a IS NOT NULL AND ep.a IS NOT NULL THEN 'both'
-         |             WHEN tp.a IS NOT NULL THEN 'text_only'
-         |             ELSE 'emb_only' END AS verdict
-         |      FROM tp FULL OUTER JOIN ep ON tp.a = ep.a AND tp.b = ep.b),
-         |sc AS (SELECT u.verdict,
-         |         CAST(round((round(list_cosine_similarity(ea.emb, eb2.emb), 4) + 1)
-         |           * 10000, 0) AS BIGINT) AS cos4
-         |       FROM u JOIN e ea ON ea.vec_id = u.a
-         |              JOIN e eb2 ON eb2.vec_id = u.b),
+         |${Similarity.duckPairCosines("ecs", "ec", "a", "b")},
+         |ep AS (SELECT a, b FROM ecs WHERE cos_sim >= 0.35),
+         |$verdicts,
+         |sc AS (SELECT verdict,
+         |         CAST(round((cos_sim + 1) * 10000, 0) AS BIGINT) AS cos4
+         |       FROM uc),
          |g AS (SELECT verdict, CAST(count(*) AS BIGINT) AS n_pairs,
          |        CAST(sum(cos4) AS BIGINT) AS s4
          |      FROM sc GROUP BY 1),
-         |t AS (SELECT CAST(sum(n_pairs) AS BIGINT) AS total FROM g)
-         |SELECT verdict, n_pairs,
-         |  round(1.0 * n_pairs / total, 4) AS pair_share,
-         |  CAST((2 * s4 + n_pairs) // (2 * n_pairs) AS DOUBLE) / 10000 - 1
-         |    AS mean_cos
-         |FROM g CROSS JOIN t ORDER BY verdict""".stripMargin,
+         |$shares""".stripMargin,
       scaleOracle) { (s, d) =>
       // Replication-quadratic fix (round-10 100x sweep: >1200 s timeout
       // at sf10): both planes materialized DOC-level candidate pairs —
@@ -2673,128 +2663,113 @@ object TextOps {
     * occurrences (128-bit chunk keys — no chunk text rides the
     * occurrence exchange), one linear expansion join. Nothing all-pairs.
     */
-  val dedupCdc: Q = Q.sqlDual(
-    "dedup_cdc",
-    s"""WITH ${duckWords()},
-       |p AS (SELECT doc_id, i, ws[i] AS word
-       |      FROM (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i FROM w)),
-       |g AS (SELECT doc_id, i, word,
-       |        lag(word, 2) OVER (PARTITION BY doc_id ORDER BY i) AS w2,
-       |        lag(word, 1) OVER (PARTITION BY doc_id ORDER BY i) AS w1
-       |      FROM p),
-       |b AS (SELECT doc_id, i, word,
-       |        CASE WHEN i >= 3
-       |               AND ${duckWordHash("w2 || ' ' || w1 || ' ' || word")} % 16 = 0
-       |             THEN 1 ELSE 0 END AS bnd
-       |      FROM g),
-       |c AS (SELECT doc_id, i, word,
-       |        coalesce(CAST(sum(bnd) OVER (PARTITION BY doc_id ORDER BY i
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-       |          AS chunk_id
-       |      FROM b),
-       |ch AS (SELECT doc_id, chunk_id, CAST(count(*) AS BIGINT) AS nwords,
-       |         string_agg(word, ' ' ORDER BY i) AS ctext
-       |       FROM c GROUP BY 1, 2),
-       |occ AS (SELECT ctext, CAST(count(*) AS BIGINT) AS occ FROM ch GROUP BY 1)
-       |SELECT ch.doc_id,
-       |  CAST(count(*) AS BIGINT) AS n_chunks,
-       |  CAST(sum(ch.nwords) AS BIGINT) AS words_total,
-       |  CAST(sum(CASE WHEN o.occ >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
-       |  CAST(sum(CASE WHEN o.occ >= 2 THEN ch.nwords ELSE 0 END) AS BIGINT)
-       |    AS words_in_dup,
-       |  round(1.0 * sum(CASE WHEN o.occ >= 2 THEN ch.nwords ELSE 0 END)
-       |    / sum(ch.nwords), 4) AS dup_chunk_ratio
-       |FROM ch JOIN occ o ON ch.ctext = o.ctext
-       |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Collapsed scale twin (the replicated gates: chunking is a pure
-    // text function, so chunk the DISTINCT texts once, weight occurrence
-    // counts by multiplicity, and expand per-doc through the text join —
-    // the naive doc-level shape above OOMs single-box DuckDB at 100x)
-    s"""WITH dt AS MATERIALIZED (
-       |  SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS m, text
-       |  FROM documents GROUP BY text),
-       |${duckWords("gid, m", "dt")},
-       |p AS (SELECT gid, m, i, ws[i] AS word
-       |      FROM (SELECT gid, m, ws, unnest(range(1, len(ws) + 1)) AS i FROM w)),
-       |g AS (SELECT gid, m, i, word,
-       |        lag(word, 2) OVER (PARTITION BY gid ORDER BY i) AS w2,
-       |        lag(word, 1) OVER (PARTITION BY gid ORDER BY i) AS w1
-       |      FROM p),
-       |b AS (SELECT gid, m, i, word,
-       |        CASE WHEN i >= 3
-       |               AND ${duckWordHash("w2 || ' ' || w1 || ' ' || word")} % 16 = 0
-       |             THEN 1 ELSE 0 END AS bnd
-       |      FROM g),
-       |c AS (SELECT gid, m, i, word,
-       |        coalesce(CAST(sum(bnd) OVER (PARTITION BY gid ORDER BY i
-       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-       |          AS chunk_id
-       |      FROM b),
-       |ch AS MATERIALIZED (
-       |  SELECT gid, m, chunk_id, CAST(count(*) AS BIGINT) AS nwords,
-       |    string_agg(word, ' ' ORDER BY i) AS ctext
-       |  FROM c GROUP BY 1, 2, 3),
-       |occ AS (SELECT ctext, CAST(sum(m) AS BIGINT) AS occ FROM ch GROUP BY 1),
-       |pt AS (SELECT ch.gid,
-       |    CAST(count(*) AS BIGINT) AS n_chunks,
-       |    CAST(sum(ch.nwords) AS BIGINT) AS words_total,
-       |    CAST(sum(CASE WHEN o.occ >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
-       |    CAST(sum(CASE WHEN o.occ >= 2 THEN ch.nwords ELSE 0 END) AS BIGINT)
-       |      AS words_in_dup,
-       |    round(1.0 * sum(CASE WHEN o.occ >= 2 THEN ch.nwords ELSE 0 END)
-       |      / sum(ch.nwords), 4) AS dup_chunk_ratio
-       |  FROM ch JOIN occ o ON ch.ctext = o.ctext
-       |  GROUP BY 1)
-       |SELECT d.doc_id, pt.n_chunks, pt.words_total, pt.n_dup_chunks,
-       |  pt.words_in_dup, pt.dup_chunk_ratio
-       |FROM documents d JOIN dt ON d.text = dt.text JOIN pt ON dt.gid = pt.gid
-       |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-    val (keyed, dist) = distinctTexts(docs(s, d))
-    // per-position word rows over DISTINCT texts; the 3-word window comes
-    // from two lags over the tkey partition (never element_at(ws, i) —
-    // the optimizer-inlined-split O(words²) trap, see Tokens.shingles)
-    val pos = dist
-      .select(col("tkey"), col("m"),
-        posexplode(words).as(Seq("p0", "word")))
-      .select(col("tkey"), col("m"), (col("p0") + 1).as("i"), col("word"))
-    val wnd = Window.partitionBy("tkey").orderBy("i")
-    val bnd = pos
-      .withColumn("w2", lag("word", 2).over(wnd))
-      .withColumn("w1", lag("word", 1).over(wnd))
-      .withColumn("bnd",
-        when(col("i") >= 3 &&
-          expr(s"${sparkWordHash("concat(w2, ' ', w1, ' ', word)")} % 16") === 0, 1)
-          .otherwise(0))
-    val cumW = Window.partitionBy("tkey").orderBy("i")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    // persisted: referenced by BOTH the occurrence count and the join
-    // back — without it Catalyst re-expands the explode→window→chunk
-    // subtree (the heaviest pass) once per reference
-    val chunks = bnd
-      .withColumn("chunk_id", coalesce(sum("bnd").over(cumW), lit(0)).cast("long"))
-      .groupBy(col("tkey"), col("m"), col("chunk_id"))
-      .agg(count(lit(1)).cast("long").as("nwords"),
-        expr("array_join(transform(array_sort(collect_list(struct(i, word))), x -> x.word), ' ')")
-          .as("ctext"))
-      .withColumn("ckey", graft.Hash128.key128(col("ctext")))
-      .drop("ctext") // only the 16-byte key is needed past this point
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // corpus-wide occurrences, multiplicity-weighted; only the 16-byte
-    // chunk key rides this exchange
-    val occ = chunks.groupBy("ckey").agg(sum("m").cast("long").as("occ"))
-    val perText = chunks.join(occ, Seq("ckey"))
-      .groupBy("tkey")
-      .agg(count(lit(1)).cast("long").as("n_chunks"),
-        sum("nwords").cast("long").as("words_total"),
-        sum(when(col("occ") >= 2, 1L).otherwise(0L)).cast("long").as("n_dup_chunks"),
-        sum(when(col("occ") >= 2, col("nwords")).otherwise(0L)).cast("long")
-          .as("words_in_dup"))
-    keyed.join(perText, Seq("tkey"))
-      .select(col("doc_id"), col("n_chunks"), col("words_total"),
-        col("n_dup_chunks"), col("words_in_dup"),
-        round(lit(1.0) * col("words_in_dup") / col("words_total"), 4)
-          .as("dup_chunk_ratio"))
-      .orderBy("doc_id")
+  val dedupCdc: Q = {
+    // the chunking chain over `w` (the `key` columns + ws), each text's
+    // words partitioned by `part`: ending in the chunks `ch` (key…,
+    // chunk_id, nwords, ctext)
+    def chunks(key: String, part: String) =
+      s"""p AS (SELECT $key, i, ws[i] AS word
+         |      FROM (SELECT $key, ws, unnest(range(1, len(ws) + 1)) AS i FROM w)),
+         |g AS (SELECT $key, i, word,
+         |        lag(word, 2) OVER (PARTITION BY $part ORDER BY i) AS w2,
+         |        lag(word, 1) OVER (PARTITION BY $part ORDER BY i) AS w1
+         |      FROM p),
+         |b AS (SELECT $key, i, word,
+         |        CASE WHEN i >= 3
+         |               AND ${duckWordHash("w2 || ' ' || w1 || ' ' || word")} % 16 = 0
+         |             THEN 1 ELSE 0 END AS bnd
+         |      FROM g),
+         |c AS (SELECT $key, i, word,
+         |        coalesce(CAST(sum(bnd) OVER (PARTITION BY $part ORDER BY i
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
+         |          AS chunk_id
+         |      FROM b),
+         |ch AS MATERIALIZED (
+         |  SELECT $key, chunk_id, CAST(count(*) AS BIGINT) AS nwords,
+         |    string_agg(word, ' ' ORDER BY i) AS ctext
+         |  FROM c GROUP BY $key, chunk_id)""".stripMargin
+    // per-text chunk stats of `ch` against the occurrence counts `occ`
+    val stats =
+      """CAST(count(*) AS BIGINT) AS n_chunks,
+        |  CAST(sum(ch.nwords) AS BIGINT) AS words_total,
+        |  CAST(sum(CASE WHEN o.occ >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks,
+        |  CAST(sum(CASE WHEN o.occ >= 2 THEN ch.nwords ELSE 0 END) AS BIGINT)
+        |    AS words_in_dup,
+        |  round(1.0 * sum(CASE WHEN o.occ >= 2 THEN ch.nwords ELSE 0 END)
+        |    / sum(ch.nwords), 4) AS dup_chunk_ratio
+        |FROM ch JOIN occ o ON ch.ctext = o.ctext""".stripMargin
+    Q.sqlDual(
+      "dedup_cdc",
+      s"""WITH ${duckWords()},
+         |${chunks("doc_id", "doc_id")},
+         |occ AS (SELECT ctext, CAST(count(*) AS BIGINT) AS occ FROM ch GROUP BY 1)
+         |SELECT ch.doc_id,
+         |  $stats
+         |GROUP BY 1 ORDER BY 1""".stripMargin,
+      // Collapsed scale twin (the replicated gates: chunking is a pure
+      // text function, so chunk the DISTINCT texts once, weight occurrence
+      // counts by multiplicity, and expand per-doc through the text join —
+      // the naive doc-level shape above OOMs single-box DuckDB at 100x)
+      s"""WITH dt AS MATERIALIZED (
+         |  SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS m, text
+         |  FROM documents GROUP BY text),
+         |${duckWords("gid, m", "dt")},
+         |${chunks("gid, m", "gid")},
+         |occ AS (SELECT ctext, CAST(sum(m) AS BIGINT) AS occ FROM ch GROUP BY 1),
+         |pt AS (SELECT ch.gid,
+         |  $stats
+         |  GROUP BY 1)
+         |SELECT d.doc_id, pt.n_chunks, pt.words_total, pt.n_dup_chunks,
+         |  pt.words_in_dup, pt.dup_chunk_ratio
+         |FROM documents d JOIN dt ON d.text = dt.text JOIN pt ON dt.gid = pt.gid
+         |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
+      val (keyed, dist) = distinctTexts(docs(s, d))
+      // per-position word rows over DISTINCT texts; the 3-word window comes
+      // from two lags over the tkey partition (never element_at(ws, i) —
+      // the optimizer-inlined-split O(words²) trap, see Tokens.shingles)
+      val pos = dist
+        .select(col("tkey"), col("m"),
+          posexplode(words).as(Seq("p0", "word")))
+        .select(col("tkey"), col("m"), (col("p0") + 1).as("i"), col("word"))
+      val wnd = Window.partitionBy("tkey").orderBy("i")
+      val bnd = pos
+        .withColumn("w2", lag("word", 2).over(wnd))
+        .withColumn("w1", lag("word", 1).over(wnd))
+        .withColumn("bnd",
+          when(col("i") >= 3 &&
+            expr(s"${sparkWordHash("concat(w2, ' ', w1, ' ', word)")} % 16") === 0, 1)
+            .otherwise(0))
+      val cumW = Window.partitionBy("tkey").orderBy("i")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      // persisted: referenced by BOTH the occurrence count and the join
+      // back — without it Catalyst re-expands the explode→window→chunk
+      // subtree (the heaviest pass) once per reference
+      val chunks = bnd
+        .withColumn("chunk_id", coalesce(sum("bnd").over(cumW), lit(0)).cast("long"))
+        .groupBy(col("tkey"), col("m"), col("chunk_id"))
+        .agg(count(lit(1)).cast("long").as("nwords"),
+          expr("array_join(transform(array_sort(collect_list(struct(i, word))), x -> x.word), ' ')")
+            .as("ctext"))
+        .withColumn("ckey", graft.Hash128.key128(col("ctext")))
+        .drop("ctext") // only the 16-byte key is needed past this point
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // corpus-wide occurrences, multiplicity-weighted; only the 16-byte
+      // chunk key rides this exchange
+      val occ = chunks.groupBy("ckey").agg(sum("m").cast("long").as("occ"))
+      val perText = chunks.join(occ, Seq("ckey"))
+        .groupBy("tkey")
+        .agg(count(lit(1)).cast("long").as("n_chunks"),
+          sum("nwords").cast("long").as("words_total"),
+          sum(when(col("occ") >= 2, 1L).otherwise(0L)).cast("long").as("n_dup_chunks"),
+          sum(when(col("occ") >= 2, col("nwords")).otherwise(0L)).cast("long")
+            .as("words_in_dup"))
+      keyed.join(perText, Seq("tkey"))
+        .select(col("doc_id"), col("n_chunks"), col("words_total"),
+          col("n_dup_chunks"), col("words_in_dup"),
+          round(lit(1.0) * col("words_in_dup") / col("words_total"), 4)
+            .as("dup_chunk_ratio"))
+        .orderBy("doc_id")
+    }
   }
 
   /** Structural boilerplate templates — the whole-document companion of

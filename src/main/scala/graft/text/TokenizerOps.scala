@@ -355,11 +355,7 @@ object TokenizerOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val cnts = wf
         .select(col("freq"), explode(expr(
-          """flatten(transform(sequence(2, 4),
-            |  l -> IF(len >= l,
-            |         transform(sequence(1, len - l + 1),
-            |           i -> substring(word, i, l)),
-            |         array())))""".stripMargin)).as("piece"))
+          subPiecesSql)).as("piece"))
         .groupBy("piece").agg(sum("freq").cast("long").as("cnt"))
       val voc = cnts.orderBy(col("cnt").desc, col("piece")).limit(64)
       val vmap = voc.agg(
@@ -459,6 +455,15 @@ object TokenizerOps {
          s"  SELECT word, wcount, len, st FROM $p$j WHERE len = $j")
          .mkString("\n  UNION ALL\n")})""".stripMargin
 
+  /** Every 2-4 character substring of `word` (length `len`): the Spark
+    * twin of the seed CTEs' `sub` pieces. */
+  private val subPiecesSql: String =
+    """flatten(transform(sequence(2, 4),
+      |  l -> IF(len >= l,
+      |         transform(sequence(1, len - l + 1),
+      |           i -> substring(word, i, l)),
+      |         array())))""".stripMargin
+
   /** Seed-vocabulary CTE block (w0 → wf → voc): distinct words with
     * occurrence counts, and the char + top-64-substring piece table with
     * unigram costs. Shared head of both unigram oracles. */
@@ -507,11 +512,7 @@ object TokenizerOps {
       .groupBy("piece").agg(sum("wcount").cast("long").as("cnt"))
     val subs = wf
       .select(col("wcount"), explode(expr(
-        """flatten(transform(sequence(2, 4),
-          |  l -> IF(len >= l,
-          |         transform(sequence(1, len - l + 1),
-          |           i -> substring(word, i, l)),
-          |         array())))""".stripMargin)).as("piece"))
+        subPiecesSql)).as("piece"))
       .groupBy("piece").agg(sum("wcount").cast("long").as("cnt"))
     val top64 = subs.orderBy(col("cnt").desc, col("piece")).limit(64)
     val voc0 = chars.unionByName(top64)
@@ -569,114 +570,103 @@ object TokenizerOps {
       .persist(disk)
   }
 
-  val tokUnigram: Q = {
-    val steps = UnigramSteps
-    def duckStep(j: Int): String = duckViterbiStep(j, "d", "voc")
-    Q.sql(
-      "tok_unigram",
-      s"""WITH w0 AS (
-         |  SELECT word, CAST(count(*) AS BIGINT) AS wcount
-         |  FROM (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS word
-         |        FROM documents)
-         |  WHERE length(word) >= 1 GROUP BY 1),
-         |wf AS MATERIALIZED (SELECT word, wcount, length(word) AS len FROM w0),
-         |chars AS (SELECT piece, CAST(sum(wcount) AS BIGINT) AS cnt FROM (
-         |    SELECT substr(word, CAST(i AS INT), 1) AS piece, wcount
-         |    FROM (SELECT word, wcount, unnest(range(1, len + 1)) AS i FROM wf))
-         |  GROUP BY 1),
-         |sub AS (SELECT unnest(flatten(list_transform([2, 3, 4],
-         |    l -> list_transform(range(1, len - l + 2),
-         |      i -> substr(word, CAST(i AS INT), CAST(l AS INT)))))) AS piece,
-         |    wcount
-         |  FROM wf),
-         |cnts AS (SELECT piece, CAST(sum(wcount) AS BIGINT) AS cnt
-         |         FROM sub GROUP BY 1),
-         |top64 AS (SELECT piece, cnt FROM cnts ORDER BY cnt DESC, piece LIMIT 64),
-         |voc0 AS (SELECT piece, cnt FROM chars UNION ALL SELECT piece, cnt FROM top64),
-         |tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS nt FROM voc0),
-         |voc AS MATERIALIZED (SELECT piece, length(piece) AS plen, cnt,
-         |    CAST(round(-log2((1.0 * cnt) / tot.nt), 6) AS DECIMAL(18,6)) AS cost
-         |  FROM voc0 CROSS JOIN tot),
-         |d0 AS (SELECT word, wcount, len,
-         |    struct_pack(cost := CAST(0 AS DECIMAL(18,6)), n := 0, seg := '') AS st
-         |  FROM wf
-         |  WHERE CASE WHEN len > $steps
-         |             THEN error('tok_unigram: word exceeds unrolled DP')
-         |             ELSE TRUE END),
-         |${(1 to steps).map(duckStep).mkString(",\n")},
-         |vit AS MATERIALIZED (
-         |${(1 to steps).map(j =>
-           s"  SELECT word, wcount, len, st FROM d$j WHERE len = $j")
-           .mkString("\n  UNION ALL\n")}),
-         |emc AS (SELECT piece, CAST(sum(wcount) AS BIGINT) AS em_cnt FROM (
-         |    SELECT unnest(list_filter(str_split(struct_extract(st, 'seg'), ' '),
-         |        x -> x <> '')) AS piece, wcount
-         |    FROM vit) GROUP BY 1),
-         |emt AS (SELECT CAST(sum(em_cnt) AS BIGINT) AS nt FROM emc),
-         |em AS MATERIALIZED (SELECT piece, em_cnt,
-         |    CAST(round(-log2((1.0 * em_cnt) / emt.nt), 6) AS DECIMAL(18,6)) AS em_cost
-         |  FROM emc CROSS JOIN emt),
-         |lb AS (SELECT CAST(sum(wcount *
-         |    CAST(struct_extract(st, 'cost') * 1000000 AS BIGINT)) AS BIGINT)
-         |    AS loss_before_micro FROM vit),
-         |la AS (SELECT CAST(sum(em_cnt *
-         |    CAST(em_cost * 1000000 AS BIGINT)) AS BIGINT)
-         |    AS loss_after_micro FROM em),
-         |outp AS (SELECT em.piece, CAST(v.plen AS BIGINT) AS plen,
-         |    v.cnt AS seed_cnt, em.em_cnt,
-         |    CAST(CAST(v.cost * 1000000 AS BIGINT) AS DOUBLE) / 1000000
-         |      AS seed_cost_bits,
-         |    CAST(CAST(em.em_cost * 1000000 AS BIGINT) AS DOUBLE) / 1000000
-         |      AS em_cost_bits
-         |  FROM em JOIN voc v ON v.piece = em.piece
-         |  ORDER BY em.em_cnt DESC, em.piece LIMIT 32)
-         |SELECT outp.*, lb.loss_before_micro, la.loss_after_micro
-         |FROM outp CROSS JOIN lb CROSS JOIN la
-         |ORDER BY em_cnt DESC, piece""".stripMargin) { (s, d) =>
-      // ONE corpus pass → occurrence-weighted distinct-word table, then
-      // the E-step: exact Viterbi per distinct word via the native
-      // graft_viterbi kernel (ViterbiSegment — NativeExprSpec-pinned
-      // st-identical to the interpreted HOF fold it replaced). dp[j] =
-      // min over piece lengths 1–4 of dp[j-l] + cost(word[j-l+1 .. j]),
-      // minimized over (cost, n, seg) structs — field-lexicographic, seg
-      // encodes the path so the order is total. Single-char pieces come
-      // from the corpus itself, so every position is reachable.
-      val (wf, voc) = seedVocab(s, d)
-      val vit = viterbiUnder(s, wf, voc)
-      // M-step: piece counts under the Viterbi segmentation; total via
-      // the unpartitioned window over the piece-bounded aggregate
-      val totW = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val emc = vit
-        .select(col("wcount"), explode(split(col("seg"), " ")).as("piece"))
-        .filter(col("piece") =!= "")
-        .groupBy("piece").agg(sum("wcount").cast("long").as("em_cnt"))
-      val em = emc
-        .withColumn("nt", sum("em_cnt").over(totW).cast("long"))
-        .select(col("piece"), col("em_cnt"),
-          expr("cast(round(-log2((1.0 * em_cnt) / nt), 6) as decimal(18,6))")
-            .as("em_cost"))
-      // corpus loss in exact integer micro-bits: before = Viterbi path
-      // costs under seed probs; after = the SAME segmentation re-scored
-      // under the re-estimated probs (the EM Q-function, ≥ guaranteed)
-      val lb = vit.agg(
-        sum(col("wcount") * (col("cost") * lit(1000000)).cast("long"))
-          .cast("long").as("loss_before_micro"))
-      val la = em.agg(
-        sum(col("em_cnt") * (col("em_cost") * lit(1000000)).cast("long"))
-          .cast("long").as("loss_after_micro"))
-      em.join(broadcast(voc.select(col("piece"), col("plen"),
-          col("cnt").as("seed_cnt"), col("cost").as("seed_cost"))), Seq("piece"))
-        .orderBy(col("em_cnt").desc, col("piece")).limit(32)
-        .crossJoin(broadcast(lb)).crossJoin(broadcast(la))
-        .select(col("piece"), col("plen").cast("long").as("plen"),
-          col("seed_cnt"), col("em_cnt"),
-          ((col("seed_cost") * 1000000).cast("long").cast("double") / 1000000)
-            .as("seed_cost_bits"),
-          ((col("em_cost") * 1000000).cast("long").cast("double") / 1000000)
-            .as("em_cost_bits"),
-          col("loss_before_micro"), col("loss_after_micro"))
-        .orderBy(col("em_cnt").desc, col("piece"))
-    }
+  /** Piece occurrences of the segmentation `vit` (word, wcount, seg),
+    * weighted by word count: (piece, `out`). */
+  private def pieceCounts(vit: DataFrame, out: String): DataFrame =
+    vit.select(col("wcount"), explode(split(col("seg"), " ")).as("piece"))
+      .filter(col("piece") =!= "")
+      .groupBy("piece").agg(sum("wcount").cast("long").as(out))
+
+  /** The EM re-estimate of `vit`: each piece's count `em_cnt` and cost
+    * `em_cost` = round(−log2(p), 6) bits. The total rides an unpartitioned
+    * window over the piece-bounded aggregate. */
+  private def emCosts(vit: DataFrame): DataFrame =
+    pieceCounts(vit, "em_cnt")
+      .withColumn("nt", sum("em_cnt").over(
+        Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).cast("long"))
+      .select(col("piece"), col("em_cnt"),
+        expr("cast(round(-log2((1.0 * em_cnt) / nt), 6) as decimal(18,6))")
+          .as("em_cost"))
+
+  /** The corpus loss of the segmentation `vit` in exact integer micro-bits,
+    * one row: `out`. */
+  private def pathLoss(vit: DataFrame, out: String): DataFrame =
+    vit.agg(sum(col("wcount") * (col("cost") * lit(1000000)).cast("long"))
+      .cast("long").as(out))
+
+  /** DuckDB twin of [[pieceCounts]] over the Viterbi CTE `vit`: `name`. */
+  private def duckPieceCounts(name: String, out: String, vit: String): String =
+    s"""$name AS (SELECT piece, CAST(sum(wcount) AS BIGINT) AS $out FROM (
+       |    SELECT unnest(list_filter(str_split(struct_extract(st, 'seg'), ' '),
+       |        x -> x <> '')) AS piece, wcount
+       |    FROM $vit) GROUP BY 1)""".stripMargin
+
+  /** DuckDB twin of [[emCosts]] over `vit`: `name` (with `<name>c` and
+    * `<name>t` before it). */
+  private def duckEmCosts(name: String, vit: String): String =
+    s"""${duckPieceCounts(s"${name}c", "em_cnt", vit)},
+       |${name}t AS (SELECT CAST(sum(em_cnt) AS BIGINT) AS nt FROM ${name}c),
+       |$name AS MATERIALIZED (SELECT piece, em_cnt,
+       |    CAST(round(-log2((1.0 * em_cnt) / ${name}t.nt), 6) AS DECIMAL(18,6)) AS em_cost
+       |  FROM ${name}c CROSS JOIN ${name}t)""".stripMargin
+
+  /** DuckDB twin of [[pathLoss]] over `vit`: `name`. */
+  private def duckPathLoss(name: String, out: String, vit: String): String =
+    s"""$name AS (SELECT CAST(sum(wcount *
+       |    CAST(struct_extract(st, 'cost') * 1000000 AS BIGINT)) AS BIGINT)
+       |    AS $out FROM $vit)""".stripMargin
+
+  val tokUnigram: Q = Q.sql(
+    "tok_unigram",
+    s"""WITH $duckSeedCtes,
+       |${duckViterbiChain("d", "voc")},
+       |${duckEmCosts("em", "dvit")},
+       |${duckPathLoss("lb", "loss_before_micro", "dvit")},
+       |la AS (SELECT CAST(sum(em_cnt *
+       |    CAST(em_cost * 1000000 AS BIGINT)) AS BIGINT)
+       |    AS loss_after_micro FROM em),
+       |outp AS (SELECT em.piece, CAST(v.plen AS BIGINT) AS plen,
+       |    v.cnt AS seed_cnt, em.em_cnt,
+       |    CAST(CAST(v.cost * 1000000 AS BIGINT) AS DOUBLE) / 1000000
+       |      AS seed_cost_bits,
+       |    CAST(CAST(em.em_cost * 1000000 AS BIGINT) AS DOUBLE) / 1000000
+       |      AS em_cost_bits
+       |  FROM em JOIN voc v ON v.piece = em.piece
+       |  ORDER BY em.em_cnt DESC, em.piece LIMIT 32)
+       |SELECT outp.*, lb.loss_before_micro, la.loss_after_micro
+       |FROM outp CROSS JOIN lb CROSS JOIN la
+       |ORDER BY em_cnt DESC, piece""".stripMargin) { (s, d) =>
+    // ONE corpus pass → occurrence-weighted distinct-word table, then
+    // the E-step: exact Viterbi per distinct word via the native
+    // graft_viterbi kernel (ViterbiSegment — NativeExprSpec-pinned
+    // st-identical to the interpreted HOF fold it replaced). dp[j] =
+    // min over piece lengths 1–4 of dp[j-l] + cost(word[j-l+1 .. j]),
+    // minimized over (cost, n, seg) structs — field-lexicographic, seg
+    // encodes the path so the order is total. Single-char pieces come
+    // from the corpus itself, so every position is reachable.
+    val (wf, voc) = seedVocab(s, d)
+    val vit = viterbiUnder(s, wf, voc)
+    // M-step: piece counts under the Viterbi segmentation
+    val em = emCosts(vit)
+    // corpus loss in exact integer micro-bits: before = Viterbi path
+    // costs under seed probs; after = the SAME segmentation re-scored
+    // under the re-estimated probs (the EM Q-function, ≥ guaranteed)
+    val lb = pathLoss(vit, "loss_before_micro")
+    val la = em.agg(
+      sum(col("em_cnt") * (col("em_cost") * lit(1000000)).cast("long"))
+        .cast("long").as("loss_after_micro"))
+    em.join(broadcast(voc.select(col("piece"), col("plen"),
+        col("cnt").as("seed_cnt"), col("cost").as("seed_cost"))), Seq("piece"))
+      .orderBy(col("em_cnt").desc, col("piece")).limit(32)
+      .crossJoin(broadcast(lb)).crossJoin(broadcast(la))
+      .select(col("piece"), col("plen").cast("long").as("plen"),
+        col("seed_cnt"), col("em_cnt"),
+        ((col("seed_cost") * 1000000).cast("long").cast("double") / 1000000)
+          .as("seed_cost_bits"),
+        ((col("em_cost") * 1000000).cast("long").cast("double") / 1000000)
+          .as("em_cost_bits"),
+        col("loss_before_micro"), col("loss_after_micro"))
+      .orderBy(col("em_cnt").desc, col("piece"))
   }
 
   /** Unigram-LM vocabulary pruning — the second half of Kudo's
@@ -704,130 +694,98 @@ object TokenizerOps {
     * cost), ranked with piece-string tie-breaks; both loss totals are
     * integer micro-bit sums; the only float ops are the two
     * round(−log2(p), 6) cost formulas, each rounded once. */
-  val tokUnigramPrune: Q = {
-    Q.sql(
-      "tok_unigram_prune",
-      s"""WITH $duckSeedCtes,
-         |${duckViterbiChain("d", "voc")},
-         |e1c AS (SELECT piece, CAST(sum(wcount) AS BIGINT) AS em_cnt FROM (
-         |    SELECT unnest(list_filter(str_split(struct_extract(st, 'seg'), ' '),
-         |        x -> x <> '')) AS piece, wcount
-         |    FROM dvit) GROUP BY 1),
-         |e1t AS (SELECT CAST(sum(em_cnt) AS BIGINT) AS nt FROM e1c),
-         |e1 AS (SELECT piece, em_cnt,
-         |    CAST(round(-log2((1.0 * em_cnt) / e1t.nt), 6) AS DECIMAL(18,6))
-         |      AS em_cost
-         |  FROM e1c CROSS JOIN e1t),
-         |contrib AS MATERIALIZED (SELECT v.piece, v.plen, v.cnt,
-         |    coalesce(e.em_cnt, 0) AS em_cnt,
-         |    coalesce(e.em_cnt, 0)
-         |      * coalesce(CAST(e.em_cost * 1000000 AS BIGINT), 0) AS contrib_micro
-         |  FROM voc v LEFT JOIN e1 e ON e.piece = v.piece),
-         |multi AS (SELECT *, row_number()
-         |    OVER (ORDER BY contrib_micro, piece) AS rk
-         |  FROM contrib WHERE plen >= 2),
-         |nmult AS (SELECT count(*) AS nm FROM multi),
-         |kept0 AS (SELECT piece, plen, cnt, em_cnt FROM contrib WHERE plen = 1
-         |  UNION ALL
-         |  SELECT piece, plen, cnt, em_cnt FROM multi, nmult WHERE rk > nm // 2),
-         |tot2 AS (SELECT CAST(sum(cnt) AS BIGINT) AS nt FROM kept0),
-         |kvoc AS MATERIALIZED (SELECT piece, plen, cnt, em_cnt,
-         |    CAST(round(-log2((1.0 * cnt) / tot2.nt), 6) AS DECIMAL(18,6)) AS cost
-         |  FROM kept0 CROSS JOIN tot2),
-         |${duckViterbiChain("p", "kvoc")},
-         |c2 AS (SELECT piece, CAST(sum(wcount) AS BIGINT) AS pruned_cnt FROM (
-         |    SELECT unnest(list_filter(str_split(struct_extract(st, 'seg'), ' '),
-         |        x -> x <> '')) AS piece, wcount
-         |    FROM pvit) GROUP BY 1),
-         |ls AS (SELECT CAST(sum(wcount *
-         |    CAST(struct_extract(st, 'cost') * 1000000 AS BIGINT)) AS BIGINT)
-         |    AS loss_seed_micro FROM dvit),
-         |lp AS (SELECT CAST(sum(wcount *
-         |    CAST(struct_extract(st, 'cost') * 1000000 AS BIGINT)) AS BIGINT)
-         |    AS loss_pruned_micro FROM pvit),
-         |nn AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM voc) AS n_seed_pieces,
-         |         (SELECT CAST(count(*) AS BIGINT) FROM kvoc) AS n_kept,
-         |         (SELECT CAST(count(*) AS BIGINT) FROM voc)
-         |           - (SELECT CAST(count(*) AS BIGINT) FROM kvoc) AS n_pruned),
-         |outp AS (SELECT k.piece, CAST(k.plen AS BIGINT) AS plen,
-         |    k.cnt AS seed_cnt, k.em_cnt,
-         |    coalesce(c2.pruned_cnt, 0) AS pruned_cnt,
-         |    CAST(CAST(k.cost * 1000000 AS BIGINT) AS DOUBLE) / 1000000
-         |      AS pruned_cost_bits
-         |  FROM kvoc k LEFT JOIN c2 ON c2.piece = k.piece
-         |  ORDER BY coalesce(c2.pruned_cnt, 0) DESC, k.piece LIMIT 32)
-         |SELECT outp.*, nn.n_seed_pieces, nn.n_kept, nn.n_pruned,
-         |  ls.loss_seed_micro, lp.loss_pruned_micro
-         |FROM outp CROSS JOIN nn CROSS JOIN ls CROSS JOIN lp
-         |ORDER BY pruned_cnt DESC, piece""".stripMargin) { (s, d) =>
-      val (wf, voc) = seedVocab(s, d)
-      val vit1 = viterbiUnder(s, wf, voc)
-      // piece-bounded totals ride unpartitioned windows over the
-      // aggregates (≤|chars|+64 rows) instead of separate agg + broadcast
-      // hops — the op's cost at small SF is its sequential job chain
-      val totW = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val e1c = vit1
-        .select(col("wcount"), explode(split(col("seg"), " ")).as("piece"))
-        .filter(col("piece") =!= "")
-        .groupBy("piece").agg(sum("wcount").cast("long").as("em_cnt"))
-      val e1 = e1c
-        .withColumn("nt", sum("em_cnt").over(totW).cast("long"))
-        .select(col("piece"), col("em_cnt"),
-          expr("cast(round(-log2((1.0 * em_cnt) / nt), 6) as decimal(18,6))")
-            .as("em_cost"))
-      val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val contrib = voc
-        .join(e1, Seq("piece"), "left")
-        .select(col("piece"), col("plen"), col("cnt"),
-          coalesce(col("em_cnt"), lit(0L)).cast("long").as("em_cnt"),
-          (coalesce(col("em_cnt"), lit(0L))
-            * coalesce((col("em_cost") * 1000000).cast("long"), lit(0L)))
-            .cast("long").as("contrib_micro"))
-        .persist(disk) // piece-bounded; read by the rank and the union
-      val rkW = Window.orderBy(col("contrib_micro"), col("piece"))
-      val multi = contrib.filter(col("plen") >= 2)
-        .withColumn("rk", row_number().over(rkW)) // piece-bounded window
-        .withColumn("nm", count(lit(1)).over(totW))
-      val kept0 = contrib.filter(col("plen") === 1)
-        .select("piece", "plen", "cnt", "em_cnt")
-        .unionByName(multi
-          .filter(col("rk") > col("nm") / 2)
-          .select("piece", "plen", "cnt", "em_cnt"))
-      val kvoc = kept0
-        .withColumn("nt", sum("cnt").over(totW).cast("long"))
-        .select(col("piece"), col("plen"), col("cnt"), col("em_cnt"),
-          expr("cast(round(-log2((1.0 * cnt) / nt), 6) as decimal(18,6))")
-            .as("cost"))
-        .persist(disk)
-      val vit2 = viterbiUnder(s, wf, kvoc)
-      val c2 = vit2
-        .select(col("wcount"), explode(split(col("seg"), " ")).as("piece"))
-        .filter(col("piece") =!= "")
-        .groupBy("piece").agg(sum("wcount").cast("long").as("pruned_cnt"))
-      val ls = vit1.agg(
-        sum(col("wcount") * (col("cost") * lit(1000000)).cast("long"))
-          .cast("long").as("loss_seed_micro"))
-      val lp = vit2.agg(
-        sum(col("wcount") * (col("cost") * lit(1000000)).cast("long"))
-          .cast("long").as("loss_pruned_micro"))
-      val nSeed = voc.agg(count(lit(1)).cast("long").as("n_seed_pieces"))
-      val nKept = kvoc.agg(count(lit(1)).cast("long").as("n_kept"))
-      kvoc.join(c2, Seq("piece"), "left")
-        .select(col("piece"), col("plen").cast("long").as("plen"),
-          col("cnt").as("seed_cnt"), col("em_cnt"),
-          coalesce(col("pruned_cnt"), lit(0L)).cast("long").as("pruned_cnt"),
-          ((col("cost") * 1000000).cast("long").cast("double") / 1000000)
-            .as("pruned_cost_bits"))
-        .orderBy(col("pruned_cnt").desc, col("piece")).limit(32)
-        .crossJoin(broadcast(nSeed)).crossJoin(broadcast(nKept))
-        .crossJoin(broadcast(ls)).crossJoin(broadcast(lp))
-        .select(col("piece"), col("plen"), col("seed_cnt"), col("em_cnt"),
-          col("pruned_cnt"), col("pruned_cost_bits"),
-          col("n_seed_pieces"), col("n_kept"),
-          (col("n_seed_pieces") - col("n_kept")).as("n_pruned"),
-          col("loss_seed_micro"), col("loss_pruned_micro"))
-        .orderBy(col("pruned_cnt").desc, col("piece"))
-    }
+  val tokUnigramPrune: Q = Q.sql(
+    "tok_unigram_prune",
+    s"""WITH $duckSeedCtes,
+       |${duckViterbiChain("d", "voc")},
+       |${duckEmCosts("e1", "dvit")},
+       |contrib AS MATERIALIZED (SELECT v.piece, v.plen, v.cnt,
+       |    coalesce(e.em_cnt, 0) AS em_cnt,
+       |    coalesce(e.em_cnt, 0)
+       |      * coalesce(CAST(e.em_cost * 1000000 AS BIGINT), 0) AS contrib_micro
+       |  FROM voc v LEFT JOIN e1 e ON e.piece = v.piece),
+       |multi AS (SELECT *, row_number()
+       |    OVER (ORDER BY contrib_micro, piece) AS rk
+       |  FROM contrib WHERE plen >= 2),
+       |nmult AS (SELECT count(*) AS nm FROM multi),
+       |kept0 AS (SELECT piece, plen, cnt, em_cnt FROM contrib WHERE plen = 1
+       |  UNION ALL
+       |  SELECT piece, plen, cnt, em_cnt FROM multi, nmult WHERE rk > nm // 2),
+       |tot2 AS (SELECT CAST(sum(cnt) AS BIGINT) AS nt FROM kept0),
+       |kvoc AS MATERIALIZED (SELECT piece, plen, cnt, em_cnt,
+       |    CAST(round(-log2((1.0 * cnt) / tot2.nt), 6) AS DECIMAL(18,6)) AS cost
+       |  FROM kept0 CROSS JOIN tot2),
+       |${duckViterbiChain("p", "kvoc")},
+       |${duckPieceCounts("c2", "pruned_cnt", "pvit")},
+       |${duckPathLoss("ls", "loss_seed_micro", "dvit")},
+       |${duckPathLoss("lp", "loss_pruned_micro", "pvit")},
+       |nn AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM voc) AS n_seed_pieces,
+       |         (SELECT CAST(count(*) AS BIGINT) FROM kvoc) AS n_kept,
+       |         (SELECT CAST(count(*) AS BIGINT) FROM voc)
+       |           - (SELECT CAST(count(*) AS BIGINT) FROM kvoc) AS n_pruned),
+       |outp AS (SELECT k.piece, CAST(k.plen AS BIGINT) AS plen,
+       |    k.cnt AS seed_cnt, k.em_cnt,
+       |    coalesce(c2.pruned_cnt, 0) AS pruned_cnt,
+       |    CAST(CAST(k.cost * 1000000 AS BIGINT) AS DOUBLE) / 1000000
+       |      AS pruned_cost_bits
+       |  FROM kvoc k LEFT JOIN c2 ON c2.piece = k.piece
+       |  ORDER BY coalesce(c2.pruned_cnt, 0) DESC, k.piece LIMIT 32)
+       |SELECT outp.*, nn.n_seed_pieces, nn.n_kept, nn.n_pruned,
+       |  ls.loss_seed_micro, lp.loss_pruned_micro
+       |FROM outp CROSS JOIN nn CROSS JOIN ls CROSS JOIN lp
+       |ORDER BY pruned_cnt DESC, piece""".stripMargin) { (s, d) =>
+    val (wf, voc) = seedVocab(s, d)
+    val vit1 = viterbiUnder(s, wf, voc)
+    // piece-bounded totals ride unpartitioned windows over the
+    // aggregates (≤|chars|+64 rows) instead of separate agg + broadcast
+    // hops — the op's cost at small SF is its sequential job chain
+    val totW = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val e1 = emCosts(vit1)
+    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val contrib = voc
+      .join(e1, Seq("piece"), "left")
+      .select(col("piece"), col("plen"), col("cnt"),
+        coalesce(col("em_cnt"), lit(0L)).cast("long").as("em_cnt"),
+        (coalesce(col("em_cnt"), lit(0L))
+          * coalesce((col("em_cost") * 1000000).cast("long"), lit(0L)))
+          .cast("long").as("contrib_micro"))
+      .persist(disk) // piece-bounded; read by the rank and the union
+    val rkW = Window.orderBy(col("contrib_micro"), col("piece"))
+    val multi = contrib.filter(col("plen") >= 2)
+      .withColumn("rk", row_number().over(rkW)) // piece-bounded window
+      .withColumn("nm", count(lit(1)).over(totW))
+    val kept0 = contrib.filter(col("plen") === 1)
+      .select("piece", "plen", "cnt", "em_cnt")
+      .unionByName(multi
+        .filter(col("rk") > col("nm") / 2)
+        .select("piece", "plen", "cnt", "em_cnt"))
+    val kvoc = kept0
+      .withColumn("nt", sum("cnt").over(totW).cast("long"))
+      .select(col("piece"), col("plen"), col("cnt"), col("em_cnt"),
+        expr("cast(round(-log2((1.0 * cnt) / nt), 6) as decimal(18,6))")
+          .as("cost"))
+      .persist(disk)
+    val vit2 = viterbiUnder(s, wf, kvoc)
+    val c2 = pieceCounts(vit2, "pruned_cnt")
+    val ls = pathLoss(vit1, "loss_seed_micro")
+    val lp = pathLoss(vit2, "loss_pruned_micro")
+    val nSeed = voc.agg(count(lit(1)).cast("long").as("n_seed_pieces"))
+    val nKept = kvoc.agg(count(lit(1)).cast("long").as("n_kept"))
+    kvoc.join(c2, Seq("piece"), "left")
+      .select(col("piece"), col("plen").cast("long").as("plen"),
+        col("cnt").as("seed_cnt"), col("em_cnt"),
+        coalesce(col("pruned_cnt"), lit(0L)).cast("long").as("pruned_cnt"),
+        ((col("cost") * 1000000).cast("long").cast("double") / 1000000)
+          .as("pruned_cost_bits"))
+      .orderBy(col("pruned_cnt").desc, col("piece")).limit(32)
+      .crossJoin(broadcast(nSeed)).crossJoin(broadcast(nKept))
+      .crossJoin(broadcast(ls)).crossJoin(broadcast(lp))
+      .select(col("piece"), col("plen"), col("seed_cnt"), col("em_cnt"),
+        col("pruned_cnt"), col("pruned_cost_bits"),
+        col("n_seed_pieces"), col("n_kept"),
+        (col("n_seed_pieces") - col("n_kept")).as("n_pruned"),
+        col("loss_seed_micro"), col("loss_pruned_micro"))
+      .orderBy(col("pruned_cnt").desc, col("piece"))
   }
 
   val all: Seq[Q] = Seq(bpePairStats, tokFertility, bpeMergeIterate,

@@ -41,11 +41,22 @@ private[graft] object Tokens {
   }
 
   /** DuckDB twin of [[distinctTexts]]: the CTE `name`, one row per
-    * distinct `documents` text keyed by `tk` (its md5), plus `aggs`. */
-  def duckDistinctTexts(aggs: Seq[String] = Nil, name: String = "grp"): String =
+    * distinct `documents` text keyed by `tk` (its md5), plus `aggs`. With
+    * `keys` (columns of `documents`), one row per distinct (text, keys…). */
+  def duckDistinctTexts(aggs: Seq[String] = Nil, name: String = "grp",
+      keys: Seq[String] = Nil): String =
     s"""$name AS MATERIALIZED (
-       |  SELECT md5(text) AS tk, min(text) AS text${aggs.map(a => s",\n    $a").mkString}
-       |  FROM documents GROUP BY 1)""".stripMargin
+       |  SELECT md5(text) AS tk, ${keys.map(k => s"$k, ").mkString}min(text) AS text${aggs.map(a => s",\n    $a").mkString}
+       |  FROM documents GROUP BY ${(1 to keys.size + 1).mkString(", ")})""".stripMargin
+
+  /** DuckDB twin of [[distinctTexts]] with its expansion map: `grp`, one
+    * row per distinct `documents` text keyed by its first doc id `gid`,
+    * with multiplicity `m`, and `gmr`, the (doc_id, gid) map. */
+  val duckDocGroups: String =
+    """grp AS MATERIALIZED (SELECT min(doc_id) AS gid, CAST(count(*) AS BIGINT) AS m,
+      |       text FROM documents GROUP BY text),
+      |gmr AS MATERIALIZED (SELECT d.doc_id, g.gid
+      |       FROM documents d JOIN grp g USING (text))""".stripMargin
 
   // ---------------------------------------------------------- words --
 
@@ -91,6 +102,16 @@ private[graft] object Tokens {
     val hi = if (n == 2) "len(ws)" else s"len(ws) - ${n - 2}"
     s"list_transform(range(1, $hi), i -> $parts)"
   }
+
+  /** DuckDB twin of `grams(3, distinct = true)` per document: `w`, `sh`
+    * (the `keep` columns + distinct shingle list `s3`) and `ex`, one row
+    * per (`keep`…, shingle). */
+  def duckShingleRows(keep: String): String =
+    s"""${duckWords(keep)},
+       |sh AS (SELECT $keep,
+       |         list_distinct(${duckGrams(3)}) AS s3
+       |       FROM w),
+       |ex AS (SELECT $keep, unnest(s3) AS shingle FROM sh)""".stripMargin
 
   /** DuckDB twin of the words → 3-gram shingle step over `from`: `w`
     * (the `keep` columns + word list `ws`) and `docs` (+ shingle list

@@ -63,6 +63,31 @@ object Similarity {
       |             PARTITION BY vec_id, m ORDER BY dist, clabel) AS rn FROM ad)
       |         WHERE rn = 1)""".stripMargin
 
+  /** The exact per-dim sum of the `embedding`s of a group: DECIMAL(28,9)
+    * lanes of the mergeable `graft_vec_sum` aggregate. */
+  private val decimalVecSum: Column =
+    expr("graft_vec_sum(transform(embedding, x -> cast(cast(x as double) as decimal(28,9))))")
+
+  /** One row per coordinate of each embedding of `df`: (dim, v), `v` the
+    * coordinate rounded to 6, then the `keep` columns. */
+  private def coordRows(df: DataFrame, keep: String*): DataFrame =
+    df.select(keep.map(col) :+
+        posexplode(expr("transform(embedding, x -> cast(x as double))")).as(Seq("pos", "x")): _*)
+      .select(Seq((col("pos") + 1).cast("long").as("dim"), round(col("x"), 6).as("v")) ++
+        keep.map(col): _*)
+
+  /** DuckDB twin of [[coordRows]] (`r`) and its per-dim moments `a` (dim,
+    * n_vecs, mean, ex2 = mean of v², vmin, vmax) over `e`. */
+  private val duckDimMoments: String =
+    s"""${duckEmb()},
+       |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
+       |r AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
+       |a AS (SELECT dim, count(*) AS n_vecs,
+       |        CAST(sum(CAST(v AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mean,
+       |        CAST(sum(CAST(v * v AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS ex2,
+       |        min(v) AS vmin, max(v) AS vmax
+       |      FROM r GROUP BY dim)""".stripMargin
+
   /** Spark twin of `cent`: decimal-exact per-label centroids. One
     * vector-level partial aggregate (graft_vec_sum) — no per-dim row is
     * ever exploded or shuffled; per-dim values are bit-identical to the
@@ -70,10 +95,7 @@ object Similarity {
     * same double division). */
   private def labelCentroids(e: DataFrame): DataFrame = e
     .groupBy(col("label").as("clabel"))
-    .agg(
-      expr("graft_vec_sum(transform(embedding, x -> cast(cast(x as double) as decimal(28,9))))")
-        .as("sv"),
-      count(lit(1)).as("n"))
+    .agg(decimalVecSum.as("sv"), count(lit(1)).as("n"))
     .select(col("clabel"), expr("transform(sv, x -> cast(x as double) / n)").as("cv"))
 
   /** Full-vector centroid-distance ranks CTEs (ad, ar — named with
@@ -184,11 +206,58 @@ object Similarity {
     (assign, q)
   }
 
+  /** Vectors per IVF cell of the rank frame `ranks`: (cell, n_vecs) over
+    * each vector's rn = 1 cell. */
+  private def cellSizes(ranks: DataFrame): DataFrame =
+    ranks.filter(col("rn") === 1)
+      .groupBy(col("cid").as("cell"))
+      .agg(count(lit(1)).cast("long").as("n_vecs"))
+
+  /** DuckDB twin of [[cellSizes]] over the label-codebook ranks `ar`: `a`. */
+  private val duckCellSizes: String =
+    """a AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_vecs
+      |      FROM ar WHERE rn = 1 GROUP BY 1)""".stripMargin
+
   /** Oracle twin of [[probeList]]'s `assign`: each vector's rn = 1 cell
     * off the rank CTE `ar`, whose centroid id column is `cid`. */
   private def duckAssignSql(cid: String, materialized: Boolean = false): String =
     s"assign AS${if (materialized) " MATERIALIZED" else ""} " +
       s"(SELECT vec_id, $cid AS cell FROM ar WHERE rn = 1)"
+
+  /** Oracle twin of [[ivfSearch]]: with `e`, the rank CTE `ar` (centroid
+    * id column `cid`) and `assign` in scope, each query probes its
+    * `nprobe` nearest cells; ends with `r`, the ranked per-query
+    * candidates (query_id, neighbor_id, cell, probe, cos_sim, rank). */
+  private def duckProbeSql(cid: String, nprobe: Int): String =
+    s"""qprobe AS (SELECT vec_id, $cid AS cell, CAST(rn AS INT) AS probe
+       |           FROM ar WHERE rn <= $nprobe AND ${duckIsQuery()}),
+       |q AS (SELECT e.vec_id AS query_id, e.emb AS qe, p.cell, p.probe
+       |      FROM e JOIN qprobe p ON e.vec_id = p.vec_id),
+       |cands AS (SELECT e.vec_id AS neighbor_id, e.emb AS ce, a.cell
+       |          FROM e JOIN assign a ON e.vec_id = a.vec_id),
+       |s AS (SELECT query_id, neighbor_id, q.cell, q.probe,
+       |        round(list_cosine_similarity(qe, ce), 4) AS cos_sim
+       |      FROM q JOIN cands ON q.cell = cands.cell
+       |        AND cands.neighbor_id <> q.query_id),
+       |r AS (SELECT *, row_number() OVER (
+       |        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank
+       |      FROM s)""".stripMargin
+
+  /** The IVF search over the cell ranks `ranks` of `e`: database vectors
+    * keep their rn = 1 cell; queries probe their `nprobe` nearest cells
+    * (fan-out only on the bounded broadcast query side; every candidate
+    * lives in exactly one cell, so nothing scores twice). Each query's
+    * top-3 by cosine: query_id, neighbor_id, the `carry` columns of the
+    * probe (`cell`, `probe`), cos_sim, rank. */
+  private def ivfSearch(e: DataFrame, ranks: DataFrame, nprobe: Int,
+      carry: Seq[String]): DataFrame = {
+    val (assign, q) = probeList(e, ranks, nprobe)
+    topk(probe(cellCands(e, assign), q, byCell = true)
+      .select(Seq(col("query_id"), col("neighbor_id")) ++ carry.map(col) :+
+        cosR(col("qe"), col("ce")).as("cos_sim"): _*),
+      col("cos_sim").desc, 3)
+      .orderBy("query_id", "rank")
+  }
 
   /** The IVF candidate side: every vector with its assigned cell. */
   private def cellCands(e: DataFrame, assign: DataFrame): DataFrame =
@@ -416,12 +485,12 @@ object Similarity {
       .select(col(a), col(b), cosR(col("ea"), col("eb")).as("cos_sim"))
   }
 
-  /** DuckDB twin of [[pairCosines]]: the CTE `name` of the (a, b) pairs
-    * of `pairs` with their rounded cosine `cos_sim`, both ids looked up
-    * in `vecs` (vec_id, emb). */
-  private def duckPairCosines(name: String, pairs: String, a: String, b: String,
+  /** DuckDB twin of [[pairCosines]]: the CTE `name` of the rows of
+    * `pairs` (the (a, b) pair and any other columns it carries) with their
+    * rounded cosine `cos_sim`, both ids looked up in `vecs` (vec_id, emb). */
+  private[graft] def duckPairCosines(name: String, pairs: String, a: String, b: String,
       vecs: String = "e"): String =
-    s"""$name AS (SELECT $pairs.$a, $pairs.$b,
+    s"""$name AS (SELECT $pairs.*,
        |    round(list_cosine_similarity(ea.emb, eb2.emb), 4) AS cos_sim
        |  FROM $pairs JOIN $vecs ea ON ea.vec_id = $pairs.$a
        |    JOIN $vecs eb2 ON eb2.vec_id = $pairs.$b)""".stripMargin
@@ -474,10 +543,7 @@ object Similarity {
     // |labels|×|dims| rows; values bit-identical to the per-dim shape
     Tables.embeddings(s, d)
       .groupBy("label")
-      .agg(
-        expr("graft_vec_sum(transform(embedding, x -> cast(cast(x as double) as decimal(28,9))))")
-          .as("sv"),
-        count(lit(1)).as("n"))
+      .agg(decimalVecSum.as("sv"), count(lit(1)).as("n"))
       .select(col("label"), posexplode(col("sv")).as(Seq("pos", "sd")), col("n"))
       .select(col("label"), (col("pos") + 1).cast("long").as("dim"),
         round(col("sd").cast("double") / col("n"), 6).as("c"), col("n"))
@@ -498,26 +564,11 @@ object Similarity {
     s"""WITH $centCtesSql,
       |${centRanksCtes()},
       |${duckAssignSql("clabel")},
-      |q AS (SELECT e.vec_id AS query_id, e.emb AS qe, a.cell
-      |      FROM e JOIN assign a ON e.vec_id = a.vec_id WHERE ${duckIsQuery("e.vec_id")}),
-      |cands AS (SELECT e.vec_id AS neighbor_id, e.emb AS ce, a.cell
-      |          FROM e JOIN assign a ON e.vec_id = a.vec_id),
-      |s AS (SELECT query_id, neighbor_id, q.cell,
-      |        round(list_cosine_similarity(qe, ce), 4) AS cos_sim
-      |      FROM q JOIN cands ON q.cell = cands.cell
-      |        AND cands.neighbor_id <> q.query_id),
-      |r AS (SELECT *, row_number() OVER (
-      |        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank
-      |      FROM s)
+      |${duckProbeSql("clabel", 1)}
       |SELECT query_id, neighbor_id, cell, cos_sim, rank
       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d)
-    val (assign, q) = probeList(e, centroidRanks(e), nprobe = 1)
-    topk(probe(cellCands(e, assign), q, byCell = true)
-      .select(col("query_id"), col("neighbor_id"), col("cell"),
-        cosR(col("qe"), col("ce")).as("cos_sim")),
-      col("cos_sim").desc, 3)
-      .orderBy("query_id", "rank")
+    ivfSearch(e, centroidRanks(e), nprobe = 1, Seq("cell"))
   }
 
   /** Int8 scalar quantization per vector — the ANN memory-compression
@@ -699,6 +750,23 @@ object Similarity {
        |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
        |          FROM bf) WHERE rk <= 3)""".stripMargin
 
+  /** The oracle head of the sign-cell index audits: `e` with its sign
+    * cell, the queries `q`, the brute-force top-3 `bf3`
+    * ([[duckTruth3Sql]]) and the index's top-3 `iv3` (query_id,
+    * neighbor_id, rk) — the twin of [[annIvf]] ranked against [[annTopk]]. */
+  private lazy val duckSignRecallHead: String =
+    s"""${duckEmb(s"vec_id, $duckSignCell AS cell")},
+      |q AS (SELECT vec_id AS query_id, emb AS qe, cell AS qcell
+      |      FROM e WHERE ${duckIsQuery()}),
+      |$duckTruth3Sql,
+      |iv AS (SELECT query_id, e.vec_id AS neighbor_id,
+      |         round(list_cosine_similarity(qe, emb), 4) AS cs
+      |       FROM q JOIN e ON q.qcell = e.cell AND e.vec_id <> q.query_id),
+      |iv3 AS (SELECT query_id, neighbor_id, rk FROM (
+      |          SELECT *, row_number() OVER (
+      |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
+      |          FROM iv) WHERE rk <= 3)""".stripMargin
+
   /** recall@3 of an index's top-3 against the brute-force top-3
     * ([[annTopk]]), per query: the body of every recall audit. */
   private def recallAt3(index: Q)(s: SparkSession, d: String): DataFrame = {
@@ -715,6 +783,15 @@ object Similarity {
       .orderBy("query_id")
   }
 
+  /** DuckDB twin of [[recallAt3]]: per query, the hits of the index
+    * top-3 `iv3` in the brute-force top-3 `bf3`. */
+  private val duckRecallAt3: String =
+    """SELECT b.query_id, count(i.neighbor_id) AS n_hits, count(*) AS n_exact,
+      |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
+      |FROM bf3 b LEFT JOIN iv3 i
+      |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
+      |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin
+
   /** ANN quality audit: recall@3 of the IVF index against the brute-force
     * ground truth, per query — the readout that justifies serving from
     * cells instead of scanning the corpus (the same estimate-globally /
@@ -724,22 +801,8 @@ object Similarity {
     * is the bounded broadcast side. */
   val annRecall: Q = Q.sql(
     "ann_recall",
-    s"""WITH ${duckEmb(s"vec_id, $duckSignCell AS cell")},
-      |q AS (SELECT vec_id AS query_id, emb AS qe, cell AS qcell
-      |      FROM e WHERE ${duckIsQuery()}),
-      |$duckTruth3Sql,
-      |iv AS (SELECT query_id, e.vec_id AS neighbor_id,
-      |         round(list_cosine_similarity(qe, emb), 4) AS cs
-      |       FROM q JOIN e ON q.qcell = e.cell AND e.vec_id <> q.query_id),
-      |iv3 AS (SELECT query_id, neighbor_id FROM (
-      |          SELECT *, row_number() OVER (
-      |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
-      |          FROM iv) WHERE rk <= 3)
-      |SELECT b.query_id, count(i.neighbor_id) AS n_hits, count(*) AS n_exact,
-      |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
-      |FROM bf3 b LEFT JOIN iv3 i
-      |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-      |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin)(recallAt3(annIvf))
+    s"""WITH $duckSignRecallHead
+      |$duckRecallAt3""".stripMargin)(recallAt3(annIvf))
 
   /** Position-aware twin of ann_recall: nDCG@3 of the IVF list against
     * the brute-force ranking. Recall counts WHICH true neighbors the
@@ -756,17 +819,7 @@ object Similarity {
     * rows. */
   val annNdcg: Q = Q.sql(
     "ann_ndcg",
-    s"""WITH ${duckEmb(s"vec_id, $duckSignCell AS cell")},
-      |q AS (SELECT vec_id AS query_id, emb AS qe, cell AS qcell
-      |      FROM e WHERE ${duckIsQuery()}),
-      |$duckTruth3Sql,
-      |iv AS (SELECT query_id, e.vec_id AS neighbor_id,
-      |         round(list_cosine_similarity(qe, emb), 4) AS cs
-      |       FROM q JOIN e ON q.qcell = e.cell AND e.vec_id <> q.query_id),
-      |iv3 AS (SELECT query_id, neighbor_id, rk FROM (
-      |          SELECT *, row_number() OVER (
-      |            PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rk
-      |          FROM iv) WHERE rk <= 3),
+    s"""WITH $duckSignRecallHead,
       |g AS (SELECT i.query_id,
       |        coalesce(4 - b.rk, 0)
       |          * (CASE i.rk WHEN 1 THEN 1.000 WHEN 2 THEN 0.631
@@ -807,28 +860,11 @@ object Similarity {
     s"""WITH $centCtesSql,
       |${centRanksCtes()},
       |${duckAssignSql("clabel")},
-      |qprobe AS (SELECT vec_id, clabel AS cell, CAST(rn AS INT) AS probe
-      |           FROM ar WHERE rn <= 2 AND ${duckIsQuery()}),
-      |q AS (SELECT e.vec_id AS query_id, e.emb AS qe, p.cell, p.probe
-      |      FROM e JOIN qprobe p ON e.vec_id = p.vec_id),
-      |cands AS (SELECT e.vec_id AS neighbor_id, e.emb AS ce, a.cell
-      |          FROM e JOIN assign a ON e.vec_id = a.vec_id),
-      |s AS (SELECT query_id, neighbor_id, q.cell, q.probe,
-      |        round(list_cosine_similarity(qe, ce), 4) AS cos_sim
-      |      FROM q JOIN cands ON q.cell = cands.cell
-      |        AND cands.neighbor_id <> q.query_id),
-      |r AS (SELECT *, row_number() OVER (
-      |        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank
-      |      FROM s)
+      |${duckProbeSql("clabel", 2)}
       |SELECT query_id, neighbor_id, cell, probe, cos_sim, rank
       |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
     val e = emb(s, d)
-    val (assign, q) = probeList(e, centroidRanks(e), nprobe = 2)
-    topk(probe(cellCands(e, assign), q, byCell = true)
-      .select(col("query_id"), col("neighbor_id"), col("cell"), col("probe"),
-        cosR(col("qe"), col("ce")).as("cos_sim")),
-      col("cos_sim").desc, 3)
-      .orderBy("query_id", "rank")
+    ivfSearch(e, centroidRanks(e), nprobe = 2, Seq("cell", "probe"))
   }
 
   /** The IVF tuning curve: recall@3 and scanned-candidate share for
@@ -1213,34 +1249,14 @@ object Similarity {
   private def kmeansSearchSql(k: Int, nprobe: Int,
       seeding: String = "id"): String = {
     s"""${kmeansCellsSql(k, seeding)},
-       |qprobe AS (SELECT vec_id, cid AS cell, CAST(rn AS INT) AS probe
-       |           FROM ar WHERE rn <= $nprobe AND ${duckIsQuery()}),
-       |q AS (SELECT e.vec_id AS query_id, e.emb AS qe, p.cell, p.probe
-       |      FROM e JOIN qprobe p ON e.vec_id = p.vec_id),
-       |cands AS (SELECT e.vec_id AS neighbor_id, e.emb AS ce, a.cell
-       |          FROM e JOIN assign a ON e.vec_id = a.vec_id),
-       |s AS (SELECT query_id, neighbor_id, q.cell, q.probe,
-       |        round(list_cosine_similarity(qe, ce), 4) AS cos_sim
-       |      FROM q JOIN cands ON q.cell = cands.cell
-       |        AND cands.neighbor_id <> q.query_id),
-       |r AS (SELECT *, row_number() OVER (
-       |        PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rank
-       |      FROM s)""".stripMargin
+       |${duckProbeSql("cid", nprobe)}""".stripMargin
   }
 
-  /** Spark search path over [[kmeansRanks]]: database vectors keep their
-    * rn = 1 cell; queries probe their `nprobe` nearest cells (fan-out only
-    * on the bounded broadcast query side; every candidate lives in exactly
-    * one cell, so nothing scores twice). */
+  /** Spark search path over [[kmeansRanks]] ([[ivfSearch]]). */
   private def kmeansSearch(s: SparkSession, d: String,
       k: Int, rounds: Int, nprobe: Int, seeding: String = "id"): DataFrame = {
     val e = emb(s, d)
-    val (assign, q) = probeList(e, kmeansRanks(e, k, rounds, seeding), nprobe)
-    topk(probe(cellCands(e, assign), q, byCell = true)
-      .select(col("query_id"), col("neighbor_id"), col("cell"), col("probe"),
-        cosR(col("qe"), col("ce")).as("cos_sim")),
-      col("cos_sim").desc, 3)
-      .orderBy("query_id", "rank")
+    ivfSearch(e, kmeansRanks(e, k, rounds, seeding), nprobe, Seq("cell", "probe"))
   }
 
   /** Parameterized trained IVF at k = 64 cells, 2 Lloyd rounds,
@@ -1261,11 +1277,7 @@ object Similarity {
     s"""WITH ${kmeansSearchSql(k = 64, nprobe = 2)},
        |iv3 AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 3),
        |$duckTruth3Sql
-       |SELECT b.query_id, count(i.neighbor_id) AS n_hits, count(*) AS n_exact,
-       |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
-       |FROM bf3 b LEFT JOIN iv3 i
-       |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-       |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin)(recallAt3(annIvfKmeans))
+       |$duckRecallAt3""".stripMargin)(recallAt3(annIvfKmeans))
 
   /** The k-means index with the `maximin` seeding knob engaged — seeds are
     * spread by deterministic batch farthest-point (k-means‖-style, see
@@ -1292,11 +1304,7 @@ object Similarity {
     s"""WITH ${kmeansSearchSql(k = 64, nprobe = 2, seeding = "maximin")},
        |iv3 AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 3),
        |$duckTruth3Sql
-       |SELECT b.query_id, count(i.neighbor_id) AS n_hits, count(*) AS n_exact,
-       |  round(count(i.neighbor_id) / 3.0, 4) AS recall_at_3
-       |FROM bf3 b LEFT JOIN iv3 i
-       |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-       |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin)(recallAt3(annIvfKmeanspp))
+       |$duckRecallAt3""".stripMargin)(recallAt3(annIvfKmeanspp))
 
   /** Per-round convergence audit of the k-means trainer, both seedings
     * side by side: after each Lloyd round, how many cells survive, how far
@@ -1440,15 +1448,60 @@ object Similarity {
        |FROM out1 ORDER BY cell""".stripMargin
   }
 
+  /** The SemDeDup frames both semantic-dedup ops share: each distinct
+    * embedding's representative (gid, cell, ccos, emb_d, mult) — its
+    * k-means cell at k = 64 off the broadcast argmin fold (the corpus is
+    * never exchanged for assignment), its centroid cosine and its group
+    * multiplicity — persisted, and the within-cell representative pairs
+    * (gid_u, ccos_u, eu, gid_v, ccos_v, ev). Identical embeddings
+    * collapse to one representative, so the candidate join runs over
+    * groups, never over twin pairs. */
+  private def semanticCells(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val embD = toEmbD(emb(s, d))
+    val cent = kmeansRounds(embD, 64, 2, "id").last
+    val cc = embD.crossJoin(broadcast(centsArr(cent)))
+      .select(col("vec_id"), col("emb_d"), expr(s"$argmin.cid").as("cell"))
+      .join(broadcast(cent.select(col("cid").as("cell"), col("cv"))), Seq("cell"))
+      .select(col("vec_id"), col("cell"), col("emb_d"),
+        cosR(col("emb_d"), col("cv")).as("ccos"))
+    val byVec = Window.partitionBy("emb_d")
+    val reps = cc
+      .withColumn("gid", min("vec_id").over(byVec))
+      .withColumn("mult", count(lit(1)).over(byVec))
+      .withColumn("rk", row_number().over(byVec.orderBy("vec_id")))
+      .filter(col("rk") === 1)
+      .select(col("gid"), col("cell"), col("ccos"), col("emb_d"), col("mult"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val r1 = reps.select(col("gid").as("gid_u"), col("cell"),
+      col("ccos").as("ccos_u"), col("emb_d").as("eu"))
+    val r2 = reps.select(col("gid").as("gid_v"), col("cell"),
+      col("ccos").as("ccos_v"), col("emb_d").as("ev"))
+    (reps, r1.join(r2, Seq("cell")))
+  }
+
+  /** A pair of [[semanticCells]] where v ranks ahead of u: nearer its
+    * centroid, ties to the smaller id. */
+  private val aheadOf: Column = col("ccos_v") < col("ccos_u") ||
+    (col("ccos_v") === col("ccos_u") && col("gid_v") < col("gid_u"))
+
+  /** DuckDB twin of [[semanticCells]] at the vector level: the k-means
+    * cells, and `cc` (vec_id, cell, ccos). */
+  private lazy val duckSemanticCells: String =
+    s"""${kmeansCellsSql(64, materialized = true)},
+       |cc AS MATERIALIZED (SELECT a.vec_id, a.cell,
+       |        round(list_cosine_similarity(e.emb, c2.cv), 4) AS ccos
+       |      FROM assign a JOIN e ON e.vec_id = a.vec_id JOIN c2 ON c2.cid = a.cell)""".stripMargin
+
+  /** DuckDB twin of [[aheadOf]] over `cc` rows `u` and `v`. */
+  private val duckAheadOf: String =
+    "(v.ccos < u.ccos OR (v.ccos = u.ccos AND v.vec_id < u.vec_id))"
+
   val dedupSemantic: Q = Q.sqlDual(
     "dedup_semantic",
-    s"""WITH ${kmeansCellsSql(64, materialized = true)},
-      |cc AS MATERIALIZED (SELECT a.vec_id, a.cell,
-      |        round(list_cosine_similarity(e.emb, c2.cv), 4) AS ccos
-      |      FROM assign a JOIN e ON e.vec_id = a.vec_id JOIN c2 ON c2.cid = a.cell),
+    s"""WITH $duckSemanticCells,
       |pr AS (SELECT u.vec_id, u.cell,
       |         max(CASE WHEN round(list_cosine_similarity(eu.emb, ev.emb), 4) >= 0.35
-      |              AND (v.ccos < u.ccos OR (v.ccos = u.ccos AND v.vec_id < u.vec_id))
+      |              AND $duckAheadOf
       |             THEN 1 ELSE 0 END) AS pruned
       |       FROM cc u JOIN e eu ON eu.vec_id = u.vec_id
       |         LEFT JOIN cc v ON u.cell = v.cell AND u.vec_id <> v.vec_id
@@ -1464,32 +1517,10 @@ object Similarity {
       |FROM pr JOIN ng ON ng.cell = pr.cell
       |GROUP BY pr.cell, ng.n_groups ORDER BY cell""".stripMargin,
     dedupSemanticScaleSql) { (s, d) =>
-    val embD = toEmbD(emb(s, d))
-    val cent = kmeansRounds(embD, 64, 2, "id").last
-    // per-vector cell + centroid cosine off the broadcast argmin fold —
-    // the corpus is never exchanged for assignment
-    val cc = embD.crossJoin(broadcast(centsArr(cent)))
-      .select(col("vec_id"), col("emb_d"), expr(s"$argmin.cid").as("cell"))
-      .join(broadcast(cent.select(col("cid").as("cell"), col("cv"))), Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("emb_d"),
-        cosR(col("emb_d"), col("cv")).as("ccos"))
-    val byVec = Window.partitionBy("emb_d")
-    val g = cc
-      .withColumn("gid", min("vec_id").over(byVec))
-      .withColumn("mult", count(lit(1)).over(byVec))
-      .withColumn("rk", row_number().over(byVec.orderBy("vec_id")))
-    val reps = g.filter(col("rk") === 1)
-      .select(col("gid"), col("cell"), col("ccos"), col("emb_d"), col("mult"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val r1 = reps.select(col("gid").as("gid_u"), col("cell"),
-      col("ccos").as("ccos_u"), col("emb_d").as("eu"))
-    val r2 = reps.select(col("gid").as("gid_v"), col("cell"),
-      col("ccos").as("ccos_v"), col("emb_d").as("ev"))
-    val beaten = r1.join(r2, Seq("cell"))
+    val (reps, pairs) = semanticCells(s, d)
+    val beaten = pairs
       .filter(col("gid_u") =!= col("gid_v") &&
-        cosR(col("eu"), col("ev")) >= 0.35 &&
-        (col("ccos_v") < col("ccos_u") ||
-          (col("ccos_v") === col("ccos_u") && col("gid_v") < col("gid_u"))))
+        cosR(col("eu"), col("ev")) >= 0.35 && aheadOf)
       .select(col("gid_u").as("gid")).distinct()
       .withColumn("beaten", lit(1))
     // twins prune each other only when their mutual cosine clears the
@@ -1528,14 +1559,9 @@ object Similarity {
     * both engines. */
   val dedupSemanticCurve: Q = Q.sql(
     "dedup_semantic_curve",
-    s"""WITH ${kmeansCellsSql(64, materialized = true)},
-      |cc AS MATERIALIZED (SELECT a.vec_id, a.cell,
-      |        round(list_cosine_similarity(e.emb, c2.cv), 4) AS ccos
-      |      FROM assign a JOIN e ON e.vec_id = a.vec_id JOIN c2 ON c2.cid = a.cell),
+    s"""WITH $duckSemanticCells,
       |mx AS (SELECT u.vec_id,
-      |         max(CASE WHEN v.vec_id IS NOT NULL
-      |                   AND (v.ccos < u.ccos
-      |                        OR (v.ccos = u.ccos AND v.vec_id < u.vec_id))
+      |         max(CASE WHEN v.vec_id IS NOT NULL AND $duckAheadOf
       |              THEN round(list_cosine_similarity(eu.emb, ev.emb), 4) END)
       |           AS best
       |       FROM cc u JOIN e eu ON eu.vec_id = u.vec_id
@@ -1557,32 +1583,9 @@ object Similarity {
       |  round(1.0 * (sum(mult) - count(*) FILTER (WHERE beaten = 0))
       |    / sum(mult), 4) AS prune_rate
       |FROM s GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    val embD = toEmbD(emb(s, d))
-    val cent = kmeansRounds(embD, 64, 2, "id").last
-    val cc = embD.crossJoin(broadcast(centsArr(cent)))
-      .select(col("vec_id"), col("emb_d"), expr(s"$argmin.cid").as("cell"))
-      .join(broadcast(cent.select(col("cid").as("cell"), col("cv"))), Seq("cell"))
-      .select(col("vec_id"), col("cell"), col("emb_d"),
-        cosR(col("emb_d"), col("cv")).as("ccos"))
-    // identical embeddings collapse to one representative carrying the
-    // group multiplicity (dedup_semantic's exchange discipline): the
-    // candidate join runs over groups, never over twin pairs
-    val byVec = Window.partitionBy("emb_d")
-    val reps = cc
-      .withColumn("gid", min("vec_id").over(byVec))
-      .withColumn("mult", count(lit(1)).over(byVec))
-      .withColumn("rk", row_number().over(byVec.orderBy("vec_id")))
-      .filter(col("rk") === 1)
-      .select(col("gid"), col("cell"), col("ccos"), col("emb_d"), col("mult"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val r1 = reps.select(col("gid").as("gid_u"), col("cell"),
-      col("ccos").as("ccos_u"), col("emb_d").as("eu"))
-    val r2 = reps.select(col("gid").as("gid_v"), col("cell"),
-      col("ccos").as("ccos_v"), col("emb_d").as("ev"))
-    val best = r1.join(r2, Seq("cell"))
-      .filter(col("gid_u") =!= col("gid_v") &&
-        (col("ccos_v") < col("ccos_u") ||
-          (col("ccos_v") === col("ccos_u") && col("gid_v") < col("gid_u"))))
+    val (reps, pairs) = semanticCells(s, d)
+    val best = pairs
+      .filter(col("gid_u") =!= col("gid_v") && aheadOf)
       .groupBy(col("gid_u").as("gid"))
       .agg(max(cosR(col("eu"), col("ev"))).as("best"))
     reps.join(best, Seq("gid"), "left")
@@ -1779,14 +1782,7 @@ object Similarity {
     * ([[embOutliers]]'s discipline). */
   val embDimStats: Q = Q.sql(
     "emb_dim_stats",
-    s"""WITH ${duckEmb()},
-      |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
-      |r AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
-      |a AS (SELECT dim, count(*) AS n_vecs,
-      |        CAST(sum(CAST(v AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mean,
-      |        CAST(sum(CAST(v * v AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS ex2,
-      |        min(v) AS vmin, max(v) AS vmax
-      |      FROM r GROUP BY dim)
+    s"""WITH $duckDimMoments
       |SELECT dim, n_vecs, round(mean, 6) AS mean,
       |  round(sqrt(ex2 - mean * mean), 6) AS std, vmin, vmax
       |FROM a ORDER BY dim""".stripMargin) { (s, d) =>
@@ -1798,11 +1794,7 @@ object Similarity {
     // (min/max are multiplicity-blind by definition)
     val g = emb(s, d).groupBy("embedding")
       .agg(count(lit(1)).cast("long").as("m"))
-    g.select(col("m"),
-        posexplode(expr("transform(embedding, x -> cast(x as double))"))
-          .as(Seq("pos", "x")))
-      .select((col("pos") + 1).cast("long").as("dim"),
-        round(col("x"), 6).as("v"), col("m"))
+    coordRows(g, "m")
       .groupBy("dim").agg(
         sum("m").as("n_vecs"),
         // explicit narrow casts keep the products inside DECIMAL(38,_)
@@ -1844,13 +1836,7 @@ object Similarity {
     * (order-free), and the published doubles divide exact integers. */
   val embEffectiveRank: Q = Q.sql(
     "emb_effective_rank",
-    s"""WITH ${duckEmb()},
-      |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
-      |r AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
-      |a AS (SELECT dim, count(*) AS n,
-      |        CAST(sum(CAST(v AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mean,
-      |        CAST(sum(CAST(v * v AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS ex2
-      |      FROM r GROUP BY dim),
+    s"""WITH $duckDimMoments,
       |l AS (SELECT dim, CAST(round((ex2 - mean * mean) * 1e12, 0) AS BIGINT)
       |        AS lam_p FROM a),
       |t AS (SELECT CAST(sum(lam_p) AS BIGINT) AS s1,
@@ -1871,11 +1857,7 @@ object Similarity {
     // per-twin formulation; everything after is 64-row arithmetic
     val g = emb(s, d).groupBy("embedding")
       .agg(count(lit(1)).cast("long").as("m"))
-    val lam = g.select(col("m"),
-        posexplode(expr("transform(embedding, x -> cast(x as double))"))
-          .as(Seq("pos", "x")))
-      .select((col("pos") + 1).cast("long").as("dim"),
-        round(col("x"), 6).as("v"), col("m"))
+    val lam = coordRows(g, "m")
       .groupBy("dim").agg(
         (sum(col("v").cast("decimal(18,6)") * col("m").cast("decimal(12,0)"))
           .cast("double") / sum("m")).as("mean"),
@@ -2037,8 +2019,7 @@ object Similarity {
         .select(col("doc_id").as("vec_id"), col("source")), Seq("vec_id"))
     // one exchange: |sources| buffers carrying (vec-sum, norm-sum, count)
     val agg = j.groupBy("source").agg(
-      expr("graft_vec_sum(transform(embedding, " +
-        "x -> cast(cast(x as double) as decimal(28,9))))").as("sv"),
+      decimalVecSum.as("sv"),
       Det.dsum9(expr("aggregate(transform(embedding, x -> cast(x as double)), " +
         "cast(0.0 as double), (acc, x) -> acc + x * x)")).as("q"),
       count(lit(1)).cast("long").as("n"))
@@ -2176,89 +2157,80 @@ object Similarity {
        |extp AS (SELECT g.gsrc AS gid, m.vec_id AS cand_id, g.cos_sim
        |         FROM gcos g JOIN mem m ON m.gid = g.gdst AND m.rk <= 3),
        |pool AS MATERIALIZED (SELECT * FROM own UNION ALL SELECT * FROM extp),
-       |edges AS MATERIALIZED (SELECT src, dst, cos_sim FROM (
-       |    SELECT s.vec_id AS src, p.cand_id AS dst, p.cos_sim,
-       |      row_number() OVER (
-       |        PARTITION BY s.vec_id ORDER BY p.cos_sim DESC, p.cand_id) AS rn
-       |    FROM mem s JOIN pool p ON p.gid = s.gid AND p.cand_id <> s.vec_id)
-       |  WHERE rn <= 3)""".stripMargin
+       |sc AS (SELECT s.vec_id AS src, p.cand_id AS dst, p.cos_sim
+       |       FROM mem s JOIN pool p ON p.gid = s.gid AND p.cand_id <> s.vec_id),
+       |${duckNearest("edges", 3)}""".stripMargin
 
-  val annKnnGraph: Q = Q.sqlDual(
-    "ann_knn_graph",
-    s"""WITH ${duckEmb()},
+  /** The naive (doc-level) twin of [[knn3ScaleHeadSql]]: every vector
+    * banded, band pairs scored, each vector's 3 nearest kept, ending in
+    * the same `edges(src, dst, cos_sim)` with `e` / `n1` in scope. */
+  private lazy val knn3HeadSql: String =
+    s"""${duckEmb("vec_id, label")},
        |${signBandsSql()},
        |${duckBandPairs("cand(src, dst)", "bands", "vec_id", "<>")},
        |${duckPairCosines("sc", "cand", "src", "dst")},
-       |k AS (SELECT src, dst, cos_sim FROM (
-       |        SELECT *, row_number() OVER (
-       |          PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
-       |      WHERE rn <= 3),
-       |m AS (SELECT k.src, k.cos_sim,
-       |        CASE WHEN k2.src IS NOT NULL THEN 1 ELSE 0 END AS mutual
-       |      FROM k LEFT JOIN k k2 ON k2.src = k.dst AND k2.dst = k.src),
-       |deg AS (SELECT src, count(*) AS degree,
-       |          CAST(sum(mutual) AS BIGINT) AS n_mut,
-       |          sum(CAST(cos_sim AS DECIMAL(18,4))) AS sum_cos
-       |        FROM m GROUP BY 1),
-       |dd AS (SELECT CAST(degree AS INT) AS degree, count(*) AS n_vectors,
-       |         CAST(sum(degree) AS BIGINT) AS n_edges,
-       |         CAST(sum(n_mut) AS BIGINT) AS n_mutual,
-       |         round(CAST(sum(sum_cos) AS DOUBLE) / sum(degree), 4) AS avg_cos
-       |       FROM deg GROUP BY 1),
-       |d0 AS (SELECT CAST(0 AS INT) AS degree,
-       |         n1.n - (SELECT count(*) FROM deg) AS n_vectors,
-       |         CAST(0 AS BIGINT) AS n_edges, CAST(0 AS BIGINT) AS n_mutual,
-       |         CAST(NULL AS DOUBLE) AS avg_cos
-       |       FROM n1)
-       |SELECT * FROM d0 WHERE n_vectors > 0
-       |UNION ALL SELECT * FROM dd ORDER BY degree""".stripMargin,
-    s"""WITH $knn3ScaleHeadSql,
-       |m AS (SELECT k.src, k.cos_sim,
-       |        CASE WHEN k2.src IS NOT NULL THEN 1 ELSE 0 END AS mutual
-       |      FROM edges k LEFT JOIN edges k2
-       |        ON k2.src = k.dst AND k2.dst = k.src),
-       |deg AS (SELECT src, count(*) AS degree,
-       |          CAST(sum(mutual) AS BIGINT) AS n_mut,
-       |          sum(CAST(cos_sim AS DECIMAL(18,4))) AS sum_cos
-       |        FROM m GROUP BY 1),
-       |dd AS (SELECT CAST(degree AS INT) AS degree, count(*) AS n_vectors,
-       |         CAST(sum(degree) AS BIGINT) AS n_edges,
-       |         CAST(sum(n_mut) AS BIGINT) AS n_mutual,
-       |         round(CAST(sum(sum_cos) AS DOUBLE) / sum(degree), 4) AS avg_cos
-       |       FROM deg GROUP BY 1),
-       |d0 AS (SELECT CAST(0 AS INT) AS degree,
-       |         n1.n - (SELECT count(*) FROM deg) AS n_vectors,
-       |         CAST(0 AS BIGINT) AS n_edges, CAST(0 AS BIGINT) AS n_mutual,
-       |         CAST(NULL AS DOUBLE) AS avg_cos
-       |       FROM n1)
-       |SELECT * FROM d0 WHERE n_vectors > 0
-       |UNION ALL SELECT * FROM dd ORDER BY degree""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
-    val knn = knn3Collapsed(e)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mutual = knn
-      .join(knn.select(col("src").as("r_src"), col("dst").as("r_dst")),
-        col("r_src") === col("dst") && col("r_dst") === col("src"), "left")
-      .select(col("src"), col("cos_sim"),
-        when(col("r_src").isNotNull, 1).otherwise(0).as("mutual"))
-    val deg = mutual.groupBy("src")
-      .agg(count(lit(1)).as("degree"),
-        sum("mutual").cast("long").as("n_mut"),
-        sum(col("cos_sim").cast("decimal(18,4)")).as("sum_cos"))
-    val dd = deg.groupBy(col("degree").cast("int").as("degree"))
-      .agg(count(lit(1)).as("n_vectors"),
-        sum("degree").cast("long").as("n_edges"),
-        sum("n_mut").cast("long").as("n_mutual"),
-        round(sum("sum_cos").cast("double") / sum("degree"), 4).as("avg_cos"))
-    val nDeg = deg.agg(count(lit(1)).as("n_with_edges"))
-    val d0 = e.agg(count(lit(1)).as("n"))
-      .crossJoin(broadcast(nDeg))
-      .select(lit(0).cast("int").as("degree"),
-        (col("n") - col("n_with_edges")).as("n_vectors"),
-        lit(0L).as("n_edges"), lit(0L).as("n_mutual"),
-        lit(null).cast("double").as("avg_cos"))
-      .filter(col("n_vectors") > 0)
-    d0.unionByName(dd).orderBy("degree")
+       |${duckNearest("edges", 3)}""".stripMargin
+
+  /** The CTE `name`: each `src`'s `k` nearest `dst` among the scored pairs
+    * `sc` (src, dst, cos_sim), ties to the smaller id — the twin of the
+    * top-k rank in [[knn3Collapsed]]. */
+  private def duckNearest(name: String, k: Int): String =
+    s"""$name AS MATERIALIZED (SELECT src, dst, cos_sim FROM (
+       |    SELECT *, row_number() OVER (
+       |      PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
+       |  WHERE rn <= $k)""".stripMargin
+
+  val annKnnGraph: Q = {
+    val body =
+      """m AS (SELECT k.src, k.cos_sim,
+        |        CASE WHEN k2.src IS NOT NULL THEN 1 ELSE 0 END AS mutual
+        |      FROM edges k LEFT JOIN edges k2
+        |        ON k2.src = k.dst AND k2.dst = k.src),
+        |deg AS (SELECT src, count(*) AS degree,
+        |          CAST(sum(mutual) AS BIGINT) AS n_mut,
+        |          sum(CAST(cos_sim AS DECIMAL(18,4))) AS sum_cos
+        |        FROM m GROUP BY 1),
+        |dd AS (SELECT CAST(degree AS INT) AS degree, count(*) AS n_vectors,
+        |         CAST(sum(degree) AS BIGINT) AS n_edges,
+        |         CAST(sum(n_mut) AS BIGINT) AS n_mutual,
+        |         round(CAST(sum(sum_cos) AS DOUBLE) / sum(degree), 4) AS avg_cos
+        |       FROM deg GROUP BY 1),
+        |d0 AS (SELECT CAST(0 AS INT) AS degree,
+        |         n1.n - (SELECT count(*) FROM deg) AS n_vectors,
+        |         CAST(0 AS BIGINT) AS n_edges, CAST(0 AS BIGINT) AS n_mutual,
+        |         CAST(NULL AS DOUBLE) AS avg_cos
+        |       FROM n1)
+        |SELECT * FROM d0 WHERE n_vectors > 0
+        |UNION ALL SELECT * FROM dd ORDER BY degree""".stripMargin
+    Q.sqlDual("ann_knn_graph", s"WITH $knn3HeadSql,\n$body",
+      s"WITH $knn3ScaleHeadSql,\n$body") { (s, d) =>
+      val e = emb(s, d)
+      val knn = knn3Collapsed(e)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val mutual = knn
+        .join(knn.select(col("src").as("r_src"), col("dst").as("r_dst")),
+          col("r_src") === col("dst") && col("r_dst") === col("src"), "left")
+        .select(col("src"), col("cos_sim"),
+          when(col("r_src").isNotNull, 1).otherwise(0).as("mutual"))
+      val deg = mutual.groupBy("src")
+        .agg(count(lit(1)).as("degree"),
+          sum("mutual").cast("long").as("n_mut"),
+          sum(col("cos_sim").cast("decimal(18,4)")).as("sum_cos"))
+      val dd = deg.groupBy(col("degree").cast("int").as("degree"))
+        .agg(count(lit(1)).as("n_vectors"),
+          sum("degree").cast("long").as("n_edges"),
+          sum("n_mut").cast("long").as("n_mutual"),
+          round(sum("sum_cos").cast("double") / sum("degree"), 4).as("avg_cos"))
+      val nDeg = deg.agg(count(lit(1)).as("n_with_edges"))
+      val d0 = e.agg(count(lit(1)).as("n"))
+        .crossJoin(broadcast(nDeg))
+        .select(lit(0).cast("int").as("degree"),
+          (col("n") - col("n_with_edges")).as("n_vectors"),
+          lit(0L).as("n_edges"), lit(0L).as("n_mutual"),
+          lit(null).cast("double").as("avg_cos"))
+        .filter(col("n_vectors") > 0)
+      d0.unionByName(dd).orderBy("degree")
+    }
   }
 
   /** kNN-graph hubness audit — the IN-degree distribution of the
@@ -2283,72 +2255,51 @@ object Similarity {
     * two broadcast 1-row aggregates; cum_share accumulates raw integer
     * counts over the ≤12-row report (single-partition window is fine at
     * that size), rounded once per row. */
-  val embHubness: Q = Q.sqlDual(
-    "emb_hubness",
-    s"""WITH ${duckEmb()},
-       |${signBandsSql()},
-       |${duckBandPairs("cand(src, dst)", "bands", "vec_id", "<>")},
-       |${duckPairCosines("sc", "cand", "src", "dst")},
-       |k AS (SELECT src, dst FROM (
-       |        SELECT *, row_number() OVER (
-       |          PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
-       |      WHERE rn <= 3),
-       |ind AS (SELECT dst, CAST(count(*) AS BIGINT) AS indeg FROM k GROUP BY 1),
-       |b AS (SELECT CAST(least(indeg, 10) AS INT) AS indeg_bucket,
-       |        CAST(count(*) AS BIGINT) AS n_vectors,
-       |        CAST(sum(indeg) AS BIGINT) AS n_in_edges
-       |      FROM ind GROUP BY 1),
-       |z AS (SELECT CAST(0 AS INT) AS indeg_bucket,
-       |        n1.n - (SELECT count(*) FROM ind) AS n_vectors,
-       |        CAST(0 AS BIGINT) AS n_in_edges
-       |      FROM n1),
-       |u AS (SELECT * FROM z WHERE n_vectors > 0 UNION ALL SELECT * FROM b)
-       |SELECT indeg_bucket, n_vectors, n_in_edges,
-       |  round(1.0 * n_vectors / n1.n, 4) AS share,
-       |  round(1.0 * sum(n_vectors) OVER (ORDER BY indeg_bucket) / n1.n, 4)
-       |    AS cum_share
-       |FROM u, n1 ORDER BY indeg_bucket""".stripMargin,
-    s"""WITH $knn3ScaleHeadSql,
-       |ind AS (SELECT dst, CAST(count(*) AS BIGINT) AS indeg
-       |        FROM edges GROUP BY 1),
-       |b AS (SELECT CAST(least(indeg, 10) AS INT) AS indeg_bucket,
-       |        CAST(count(*) AS BIGINT) AS n_vectors,
-       |        CAST(sum(indeg) AS BIGINT) AS n_in_edges
-       |      FROM ind GROUP BY 1),
-       |z AS (SELECT CAST(0 AS INT) AS indeg_bucket,
-       |        n1.n - (SELECT count(*) FROM ind) AS n_vectors,
-       |        CAST(0 AS BIGINT) AS n_in_edges
-       |      FROM n1),
-       |u AS (SELECT * FROM z WHERE n_vectors > 0 UNION ALL SELECT * FROM b)
-       |SELECT indeg_bucket, n_vectors, n_in_edges,
-       |  round(1.0 * n_vectors / n1.n, 4) AS share,
-       |  round(1.0 * sum(n_vectors) OVER (ORDER BY indeg_bucket) / n1.n, 4)
-       |    AS cum_share
-       |FROM u, n1 ORDER BY indeg_bucket""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
-    val ind = knn3Collapsed(e)
-      .groupBy(col("dst"))
-      .agg(count(lit(1)).cast("long").as("indeg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = ind
-      .groupBy(least(col("indeg"), lit(10L)).cast("int").as("indeg_bucket"))
-      .agg(count(lit(1)).cast("long").as("n_vectors"),
-        sum("indeg").cast("long").as("n_in_edges"))
-    val n1 = e.agg(count(lit(1)).as("n"))
-    val nRef = ind.agg(count(lit(1)).as("n_ref"))
-    val z = n1.crossJoin(broadcast(nRef))
-      .select(lit(0).cast("int").as("indeg_bucket"),
-        (col("n") - col("n_ref")).as("n_vectors"),
-        lit(0L).as("n_in_edges"))
-      .filter(col("n_vectors") > 0)
-    val w = Window.orderBy("indeg_bucket")
-    z.unionByName(b)
-      .crossJoin(broadcast(n1))
-      .withColumn("share", round(lit(1.0) * col("n_vectors") / col("n"), 4))
-      .withColumn("cum_share",
-        round(lit(1.0) * sum("n_vectors").over(w) / col("n"), 4))
-      .select("indeg_bucket", "n_vectors", "n_in_edges", "share", "cum_share")
-      .orderBy("indeg_bucket")
+  val embHubness: Q = {
+    val body =
+      """ind AS (SELECT dst, CAST(count(*) AS BIGINT) AS indeg
+        |        FROM edges GROUP BY 1),
+        |b AS (SELECT CAST(least(indeg, 10) AS INT) AS indeg_bucket,
+        |        CAST(count(*) AS BIGINT) AS n_vectors,
+        |        CAST(sum(indeg) AS BIGINT) AS n_in_edges
+        |      FROM ind GROUP BY 1),
+        |z AS (SELECT CAST(0 AS INT) AS indeg_bucket,
+        |        n1.n - (SELECT count(*) FROM ind) AS n_vectors,
+        |        CAST(0 AS BIGINT) AS n_in_edges
+        |      FROM n1),
+        |u AS (SELECT * FROM z WHERE n_vectors > 0 UNION ALL SELECT * FROM b)
+        |SELECT indeg_bucket, n_vectors, n_in_edges,
+        |  round(1.0 * n_vectors / n1.n, 4) AS share,
+        |  round(1.0 * sum(n_vectors) OVER (ORDER BY indeg_bucket) / n1.n, 4)
+        |    AS cum_share
+        |FROM u, n1 ORDER BY indeg_bucket""".stripMargin
+    Q.sqlDual("emb_hubness", s"WITH $knn3HeadSql,\n$body",
+      s"WITH $knn3ScaleHeadSql,\n$body") { (s, d) =>
+      val e = emb(s, d)
+      val ind = knn3Collapsed(e)
+        .groupBy(col("dst"))
+        .agg(count(lit(1)).cast("long").as("indeg"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val b = ind
+        .groupBy(least(col("indeg"), lit(10L)).cast("int").as("indeg_bucket"))
+        .agg(count(lit(1)).cast("long").as("n_vectors"),
+          sum("indeg").cast("long").as("n_in_edges"))
+      val n1 = e.agg(count(lit(1)).as("n"))
+      val nRef = ind.agg(count(lit(1)).as("n_ref"))
+      val z = n1.crossJoin(broadcast(nRef))
+        .select(lit(0).cast("int").as("indeg_bucket"),
+          (col("n") - col("n_ref")).as("n_vectors"),
+          lit(0L).as("n_in_edges"))
+        .filter(col("n_vectors") > 0)
+      val w = Window.orderBy("indeg_bucket")
+      z.unionByName(b)
+        .crossJoin(broadcast(n1))
+        .withColumn("share", round(lit(1.0) * col("n_vectors") / col("n"), 4))
+        .withColumn("cum_share",
+          round(lit(1.0) * sum("n_vectors").over(w) / col("n"), 4))
+        .select("indeg_bucket", "n_vectors", "n_in_edges", "share", "cum_share")
+        .orderBy("indeg_bucket")
+    }
   }
 
   /** Cluster-balanced subsampling — the topic-flattening curation step
@@ -2429,13 +2380,7 @@ object Similarity {
     * engines; min/max/count aggregates over identical values. */
   val embWhiten: Q = Q.sql(
     "emb_whiten",
-    s"""WITH ${duckEmb()},
-      |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
-      |r AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
-      |a AS (SELECT dim, count(*) AS n_vecs,
-      |        CAST(sum(CAST(v AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mean,
-      |        CAST(sum(CAST(v * v AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS ex2
-      |      FROM r GROUP BY dim),
+    s"""WITH $duckDimMoments,
       |st AS (SELECT dim, n_vecs, mean, sqrt(ex2 - mean * mean) AS std FROM a),
       |z AS (SELECT r.dim,
       |        CASE WHEN st.std = 0 THEN NULL ELSE (r.v - st.mean) / st.std END AS z
@@ -2449,11 +2394,7 @@ object Similarity {
       |ORDER BY z.dim""".stripMargin) { (s, d) =>
     import org.apache.spark.storage.StorageLevel
     // ≈ 16 B/coordinate: |corpus| × |dims| × (long, double) — disk-backed
-    val r = emb(s, d)
-      .select(posexplode(expr("transform(embedding, x -> cast(x as double))"))
-        .as(Seq("pos", "x")))
-      .select((col("pos") + 1).cast("long").as("dim"), round(col("x"), 6).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val r = coordRows(emb(s, d)).persist(StorageLevel.MEMORY_AND_DISK)
     val st = r.groupBy("dim").agg(
       count(lit(1)).as("n_vecs"),
       (sum(col("v").cast("decimal(18,6)")).cast("double") / count(lit(1))).as("mean"),
@@ -2523,76 +2464,55 @@ object Similarity {
     * size ⇒ pair work O(n·const)); the vote is a (src, neighbor-label)
     * partial agg with a struct-max argmax (one aggregation, no rank
     * join-back); the report is a ≤ |labels|-row rollup. */
-  val embLabelVote: Q = Q.sqlDual(
-    "emb_label_vote",
-    s"""WITH ${duckEmb("vec_id, label")},
-       |${signBandsSql()},
-       |${duckBandPairs("cand(src, dst)", "bands", "vec_id", "<>")},
-       |${duckPairCosines("sc", "cand", "src", "dst")},
-       |k AS (SELECT src, dst FROM (
-       |        SELECT *, row_number() OVER (
-       |          PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
-       |      WHERE rn <= 3),
-       |lv AS (SELECT k.src, e.label AS nlabel, count(*) AS cnt
-       |       FROM k JOIN e ON e.vec_id = k.dst GROUP BY 1, 2),
-       |vote AS (SELECT src, nlabel AS vote FROM (
-       |        SELECT *, row_number() OVER (
-       |          PARTITION BY src ORDER BY cnt DESC, nlabel) AS rn FROM lv)
-       |      WHERE rn = 1),
-       |j AS (SELECT e.label, CASE WHEN vote.src IS NULL THEN 0 ELSE 1 END AS voted,
-       |        CASE WHEN vote.vote = e.label THEN 1 ELSE 0 END AS agree
-       |      FROM e LEFT JOIN vote ON vote.src = e.vec_id)
-       |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-       |  CAST(sum(voted) AS BIGINT) AS n_voted,
-       |  CAST(sum(agree) AS BIGINT) AS n_agree,
-       |  round(1.0 * sum(agree) / nullif(sum(voted), 0), 4) AS accuracy,
-       |  CAST(sum(voted) - sum(agree) AS BIGINT) AS n_flagged
-       |FROM j GROUP BY label ORDER BY label""".stripMargin,
-    s"""WITH $knn3ScaleHeadSql,
-       |lv AS (SELECT k.src, e.label AS nlabel, count(*) AS cnt
-       |       FROM edges k JOIN e ON e.vec_id = k.dst GROUP BY 1, 2),
-       |vote AS (SELECT src, nlabel AS vote FROM (
-       |        SELECT *, row_number() OVER (
-       |          PARTITION BY src ORDER BY cnt DESC, nlabel) AS rn FROM lv)
-       |      WHERE rn = 1),
-       |j AS (SELECT e.label, CASE WHEN vote.src IS NULL THEN 0 ELSE 1 END AS voted,
-       |        CASE WHEN vote.vote = e.label THEN 1 ELSE 0 END AS agree
-       |      FROM e LEFT JOIN vote ON vote.src = e.vec_id)
-       |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-       |  CAST(sum(voted) AS BIGINT) AS n_voted,
-       |  CAST(sum(agree) AS BIGINT) AS n_agree,
-       |  round(1.0 * sum(agree) / nullif(sum(voted), 0), 4) AS accuracy,
-       |  CAST(sum(voted) - sum(agree) AS BIGINT) AS n_flagged
-       |FROM j GROUP BY label ORDER BY label""".stripMargin) { (s, d) =>
-    val e = emb(s, d)
-    // round-10 quadratic fix (100x sweep: 20 s / 10.2x): the per-doc
-    // band self-join paid M² candidate rows per exact-dup cluster. The
-    // 3-NN edge list now comes from the shared duplicate-collapsed
-    // builder ([[knn3Collapsed]] — also ann_knn_graph's); the dst picks
-    // are id-exact, so the label votes are unchanged even where
-    // identical embeddings carry different labels.
-    val k = knn3Collapsed(e).select("src", "dst")
-    // argmax by (cnt, −label) struct-max: max count, smallest label on
-    // ties — one aggregation instead of a rank + join-back
-    val vote = k.join(e.select(col("vec_id").as("dst"), col("label").as("nlabel")),
-        Seq("dst"))
-      .groupBy("src", "nlabel").agg(count(lit(1)).as("cnt"))
-      .groupBy("src")
-      .agg(max(struct(col("cnt"), (-col("nlabel")).as("nl"))).as("__m"))
-      .select(col("src"), (-col("__m.nl")).cast("int").as("vote"))
-    e.select(col("vec_id"), col("label"))
-      .join(vote, col("src") === col("vec_id"), "left")
-      .select(col("label"),
-        when(col("src").isNull, 0).otherwise(1).as("voted"),
-        when(col("vote") === col("label"), 1).otherwise(0).as("agree"))
-      .groupBy("label")
-      .agg(count(lit(1)).cast("long").as("n_vecs"),
-        sum("voted").cast("long").as("n_voted"),
-        sum("agree").cast("long").as("n_agree"),
-        round(lit(1.0) * sum("agree") / nullif(sum("voted"), lit(0)), 4)
-          .as("accuracy"),
-        (sum("voted") - sum("agree")).cast("long").as("n_flagged"))
-      .orderBy("label")
+  val embLabelVote: Q = {
+    val body =
+      """lv AS (SELECT k.src, e.label AS nlabel, count(*) AS cnt
+        |       FROM edges k JOIN e ON e.vec_id = k.dst GROUP BY 1, 2),
+        |vote AS (SELECT src, nlabel AS vote FROM (
+        |        SELECT *, row_number() OVER (
+        |          PARTITION BY src ORDER BY cnt DESC, nlabel) AS rn FROM lv)
+        |      WHERE rn = 1),
+        |j AS (SELECT e.label, CASE WHEN vote.src IS NULL THEN 0 ELSE 1 END AS voted,
+        |        CASE WHEN vote.vote = e.label THEN 1 ELSE 0 END AS agree
+        |      FROM e LEFT JOIN vote ON vote.src = e.vec_id)
+        |SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
+        |  CAST(sum(voted) AS BIGINT) AS n_voted,
+        |  CAST(sum(agree) AS BIGINT) AS n_agree,
+        |  round(1.0 * sum(agree) / nullif(sum(voted), 0), 4) AS accuracy,
+        |  CAST(sum(voted) - sum(agree) AS BIGINT) AS n_flagged
+        |FROM j GROUP BY label ORDER BY label""".stripMargin
+    Q.sqlDual("emb_label_vote", s"WITH $knn3HeadSql,\n$body",
+      s"WITH $knn3ScaleHeadSql,\n$body") { (s, d) =>
+      val e = emb(s, d)
+      // round-10 quadratic fix (100x sweep: 20 s / 10.2x): the per-doc
+      // band self-join paid M² candidate rows per exact-dup cluster. The
+      // 3-NN edge list now comes from the shared duplicate-collapsed
+      // builder ([[knn3Collapsed]] — also ann_knn_graph's); the dst picks
+      // are id-exact, so the label votes are unchanged even where
+      // identical embeddings carry different labels.
+      val k = knn3Collapsed(e).select("src", "dst")
+      // argmax by (cnt, −label) struct-max: max count, smallest label on
+      // ties — one aggregation instead of a rank + join-back
+      val vote = k.join(e.select(col("vec_id").as("dst"), col("label").as("nlabel")),
+          Seq("dst"))
+        .groupBy("src", "nlabel").agg(count(lit(1)).as("cnt"))
+        .groupBy("src")
+        .agg(max(struct(col("cnt"), (-col("nlabel")).as("nl"))).as("__m"))
+        .select(col("src"), (-col("__m.nl")).cast("int").as("vote"))
+      e.select(col("vec_id"), col("label"))
+        .join(vote, col("src") === col("vec_id"), "left")
+        .select(col("label"),
+          when(col("src").isNull, 0).otherwise(1).as("voted"),
+          when(col("vote") === col("label"), 1).otherwise(0).as("agree"))
+        .groupBy("label")
+        .agg(count(lit(1)).cast("long").as("n_vecs"),
+          sum("voted").cast("long").as("n_voted"),
+          sum("agree").cast("long").as("n_agree"),
+          round(lit(1.0) * sum("agree") / nullif(sum("voted"), lit(0)), 4)
+            .as("accuracy"),
+          (sum("voted") - sum("agree")).cast("long").as("n_flagged"))
+        .orderBy("label")
+    }
   }
 
   /** Filtered ANN — the metadata-predicate serve path: top-3 cosine per
@@ -2729,8 +2649,7 @@ object Similarity {
     "ann_ivf_balance",
     s"""WITH $centCtesSql,
       |${centRanksCtes()},
-      |a AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_vecs
-      |      FROM ar WHERE rn = 1 GROUP BY 1),
+      |$duckCellSizes,
       |t AS (SELECT CAST(sum(n_vecs) AS BIGINT) AS tot,
       |        CAST(count(*) AS BIGINT) AS n_cells,
       |        CAST(max(n_vecs) AS BIGINT) AS mx
@@ -2742,9 +2661,7 @@ object Similarity {
       |    AS cum_share,
       |  t.n_cells, round(1.0 * t.mx * t.n_cells / t.tot, 4) AS imbalance
       |FROM a CROSS JOIN t ORDER BY a.cell""".stripMargin) { (s, d) =>
-    val a = centroidRanks(emb(s, d)).filter(col("rn") === 1)
-      .groupBy(col("cid").as("cell"))
-      .agg(count(lit(1)).cast("long").as("n_vecs"))
+    val a = cellSizes(centroidRanks(emb(s, d)))
     val t = a.agg(sum("n_vecs").cast("long").as("tot"),
       count(lit(1)).cast("long").as("n_cells"),
       max("n_vecs").cast("long").as("mx"))
@@ -2780,8 +2697,7 @@ object Similarity {
     "ann_query_skew",
     s"""WITH $centCtesSql,
       |${centRanksCtes()},
-      |a AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_vecs
-      |      FROM ar WHERE rn = 1 GROUP BY 1),
+      |$duckCellSizes,
       |qt AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_queries
       |       FROM ar WHERE rn <= 2 AND vec_id % 17 = 0 GROUP BY 1),
       |sp AS (SELECT clabel AS cell FROM cent),
@@ -2797,9 +2713,7 @@ object Similarity {
       |CROSS JOIN t CROSS JOIN tq ORDER BY sp.cell""".stripMargin) { (s, d) =>
     val ranks = centroidRanks(emb(s, d))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = ranks.filter(col("rn") === 1)
-      .groupBy(col("cid").as("cell"))
-      .agg(count(lit(1)).cast("long").as("n_vecs"))
+    val a = cellSizes(ranks)
     val qt = ranks.filter(col("rn") <= 2 && col("vec_id") % 17 === 0)
       .groupBy(col("cid").as("cell"))
       .agg(count(lit(1)).cast("long").as("n_queries"))
@@ -2968,8 +2882,7 @@ object Similarity {
     "ann_shard_plan",
     s"""WITH $centCtesSql,
       |${centRanksCtes()},
-      |a AS (SELECT clabel AS cell, CAST(count(*) AS BIGINT) AS n_vecs
-      |      FROM ar WHERE rn = 1 GROUP BY 1),
+      |$duckCellSizes,
       |r AS (SELECT cell, n_vecs,
       |        row_number() OVER (ORDER BY n_vecs DESC, cell) - 1 AS rk
       |      FROM a),
@@ -2984,9 +2897,7 @@ object Similarity {
       |  round(CAST(sum(n_vecs) AS DOUBLE) * 8 / t.tot, 4) AS skew
       |FROM sh CROSS JOIN t GROUP BY shard, t.tot
       |ORDER BY shard""".stripMargin) { (s, d) =>
-    val a = centroidRanks(emb(s, d)).filter(col("rn") === 1)
-      .groupBy(col("cid").as("cell"))
-      .agg(count(lit(1)).cast("long").as("n_vecs"))
+    val a = cellSizes(centroidRanks(emb(s, d)))
     val r = a.withColumn("rk",
       row_number().over(Window.orderBy(col("n_vecs").desc, col("cell"))) - 1)
     val sh = r.withColumn("shard",
@@ -3090,10 +3001,7 @@ object Similarity {
         |${signBandsSql("e")},
         |${duckBandPairs("cand(src, dst)", "bands", "vec_id", "<>")},
         |${duckPairCosines("sc", "cand", "src", "dst")},
-        |k AS MATERIALIZED (SELECT src, dst FROM (
-        |       SELECT *, row_number() OVER (
-        |         PARTITION BY src ORDER BY cos_sim DESC, dst) AS rn FROM sc)
-        |     WHERE rn <= 8),
+        |${duckNearest("k", 8)},
         |ent AS (SELECT vec_id, emb FROM e ORDER BY $idHash, vec_id LIMIT 32),
         |s0 AS MATERIALIZED (SELECT query_id, vec_id, cos FROM (
         |       SELECT q.query_id, ent.vec_id,
@@ -3206,13 +3114,7 @@ object Similarity {
     * the two imbalance ratios divide the 4-row extremes once. */
   val annPqDimAlloc: Q = Q.sql(
     "ann_pq_dim_alloc",
-    s"""WITH ${duckEmb()},
-      |u AS (SELECT unnest(emb) AS x, generate_subscripts(emb, 1) AS dim FROM e),
-      |r0 AS (SELECT CAST(dim AS BIGINT) AS dim, round(x, 6) AS v FROM u),
-      |a AS (SELECT dim, count(*) AS n,
-      |        CAST(sum(CAST(v AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mean,
-      |        CAST(sum(CAST(v * v AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS ex2
-      |      FROM r0 GROUP BY dim),
+    s"""WITH $duckDimMoments,
       |vd AS (SELECT dim, CAST(round(ex2 - mean * mean, 12) AS DECIMAL(28,12)) AS var
       |       FROM a),
       |rk AS (SELECT dim, var,
@@ -3241,10 +3143,7 @@ object Similarity {
       |  round(g.var_bal / t.tot, 4) AS share_bal,
       |  imb.imb_nat, imb.imb_bal
       |FROM g CROSS JOIN t CROSS JOIN imb ORDER BY g.m""".stripMargin) { (s, d) =>
-    val vd = emb(s, d)
-      .select(posexplode(expr("transform(embedding, x -> cast(x as double))"))
-        .as(Seq("pos", "x")))
-      .select((col("pos") + 1).cast("long").as("dim"), round(col("x"), 6).as("v"))
+    val vd = coordRows(emb(s, d))
       .groupBy("dim").agg(
         count(lit(1)).as("n"),
         (sum(col("v").cast("decimal(18,6)")).cast("double") / count(lit(1))).as("mean"),

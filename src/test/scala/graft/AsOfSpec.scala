@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{AsOf, AsOfJoinExec, AsOfJoinPlan}
+import graft.plans.AsOf
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -69,32 +69,13 @@ class AsOfSpec extends AnyFunSuite {
     assert(sizes.toSeq === Seq(0, 3))
   }
 
-  test("AsOfRangePushdown pushes a post-join time bound into both scans") {
-    val base = graft.audit.AuditQueries.log(spark, TestSession.sfDir)
-    val l = base.filter(col("event_type") === "error")
-      .select("audit_id", "entity_id", "ts")
-    val r = base.filter(col("event_type") === "purchase")
-      .select(col("entity_id").as("r_entity"), col("ts").as("r_ts"),
-        col("value").as("r_value"))
-    val bound = to_timestamp(lit("2024-01-15 00:00:00"))
-    val df = AsOf.join(l, r, ("entity_id", "r_entity"), ("ts", "r_ts"))
-      .filter(col("ts") <= bound)
-    val optimized = df.queryExecution.optimizedPlan
-    // the copied right-side bound survives optimization: r_ts <= T sits in
-    // the right subtree (in the operator-optimization batch, where the
-    // extension injects the rule, Catalyst carries it on through the
-    // right side's projection onto the scan's own time column)
-    val join = optimized.collectFirst { case j: AsOfJoinPlan => j }
-    assert(join.exists(_.right.toString.contains("<= 2024-01-15 00:00:00")), optimized)
-    assert(join.exists(_.left.toString.contains("<= 2024-01-15 00:00:00")), optimized)
-    // semantics unchanged: matches the unfiltered join post-filtered
-    val expected = AsOf.join(l, r, ("entity_id", "r_entity"), ("ts", "r_ts"))
-      .collect().filter(_.getAs[java.sql.Timestamp]("ts")
-        .compareTo(java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) <= 0)
-      .map(row => (row.getLong(0), Option(row.get(5)))).sortBy(_._1)
-    val got = df.collect()
-      .map(row => (row.getLong(0), Option(row.get(5)))).sortBy(_._1)
-    assert(got.toSeq === expected.toSeq)
+  test("union-window reference carries the newest right row, a NULL payload included") {
+    val l = Seq((1L, 1L, 20L)).toDF("id", "k", "t")
+    val r = Seq((1L, 5L, Option("a")), (1L, 10L, Option.empty[String])).toDF("rk", "rt", "v")
+    def v(df: org.apache.spark.sql.DataFrame) =
+      df.select("v").collect().map(row => Option(row.getString(0))).toSeq
+    assert(v(AsOf.join(l, r, ("k", "rk"), ("t", "rt"))) === Seq(None))
+    assert(v(AsOf.viaUnionWindow(l, r, ("k", "rk"), ("t", "rt"), Seq("v"))) === Seq(None))
   }
 
   test("custom operator and union-window composition agree on real data") {

@@ -690,7 +690,7 @@ class CorpusOpsSpec extends AnyFunSuite {
   test("corpus_export: the release sink is append-only (overwrite refused, files intact)") {
     // force the export, then try to destroy it through the guarded writer
     SparkEntry.queries("corpus_export")(spark, sf).collect()
-    val dir = graft.Scratch.cachedExport("corpus-release", sf)(_ => fail("must be memoized"))
+    val dir = graft.Scratch.cachedExport(spark, "corpus-release", sf)(_ => fail("must be memoized"))
     val before = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).count()
     assertThrows[UnsupportedOperationException] {
       graft.sources.FeedSources.writeGuardedBy(

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Provider-parity pin for the streaming state store.
   *
-  * GraftSession exposes `SPARK_GRAFT_STATE_STORE` because the 100 TB
-  * posture for stateful streaming is the RocksDB provider (per-executor
+  * `spark.sql.streaming.stateStore.providerClass` is a deploy-time key
+  * (a `-Dspark.…` property overrides GraftSession's default) because the
+  * 100 TB posture for stateful streaming is the RocksDB provider (per-executor
   * off-heap/on-disk state, heap bounded regardless of watermark horizon ×
   * key cardinality), while the sandbox default stays the in-memory
   * HDFS-backed provider. A provider swap must be a pure KV-layout change:

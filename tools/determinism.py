@@ -6,7 +6,7 @@ partitioning, partial-agg merge order, and AQE's runtime re-plans).
 The engine's per-op determinism discipline (round-once, DECIMAL sums,
 fixed-point lanes, total-order ties) is spec-pinned locally but this is
 the suite-wide artifact: run graft.Verify twice under different
-SPARK_GRAFT_SHUFFLE values, then hash each op's result as a
+spark.sql.shuffle.partitions values, then hash each op's result as a
 column-sorted, row-sorted multiset (file order and row order inside
 parquet parts are partitioning artifacts; VALUES must be identical). Any
 mismatch is a latent partition-order dependence — the bug class the Det
@@ -24,12 +24,13 @@ Verify at width 32 and the floor at 1 byte, which puts every op back on
 its exchange-planned path:
 
   tools/run_graft.sh graft.Verify <sf0.01 dir> /tmp/det-a
-  SPARK_GRAFT_SHUFFLE=32 tools/run_graft.sh \
+  tools/run_graft.sh -Dspark.sql.shuffle.partitions=32 \
     -Dspark.sql.adaptive.coalescePartitions.minPartitionSize=1b \
     graft.Verify <sf0.01 dir> /tmp/det-b
   python3 tools/determinism.py /tmp/det-a /tmp/det-b /tmp/det.json
 
-The input-split axis (SPARK_GRAFT_MAX_SPLIT, 16m vs the 128m default)
+The input-split axis (-Dspark.sql.files.maxPartitionBytes=16m vs the
+128m default)
 likewise varies nothing below the floor, where each scan is coalesced to
 one partition whatever its split count: sweep it with the same
 -D...minPartitionSize=1b flag on both runs.
