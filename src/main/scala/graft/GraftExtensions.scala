@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.functions.call_function
 
 import graft.audit.ArrayBucket
 import graft.text.{GramStats, MinHashSig, ViterbiSegment, WordShingles}
@@ -73,19 +72,4 @@ object GraftFunctions {
     fn("graft_viterbi", classOf[ViterbiSegment])(e => ViterbiSegment(e(0), e(1))),
     fn("graft_from_scaled4_split", classOf[FromScaledSplit])(e => FromScaledSplit(e(0), e(1), 4)),
     fn("graft_gram_stats", classOf[GramStats])(gramKernel("graft_gram_stats")(GramStats(_, _))))
-
-  /** Column-API form of the native cosine expression. */
-  def graftCosine(a: Column, b: Column): Column =
-    call_function("graft_cosine", a, b)
-
-  /** Column-API form of the native sorted-array search: the count of
-    * elements ≤ v (see [[graft.audit.ArrayBucket]]). */
-  def graftArrayBucket(sorted: Column, v: Column): Column =
-    call_function("graft_array_bucket", sorted, v)
-
-  /** Column-API forms of the scale-18 fixed-point lane (see
-    * [[graft.vector.ToScaledN]]): double → unscaled long of
-    * CAST(x AS DECIMAL(38,18)), and its exact inverse to DOUBLE. */
-  def graftToScaled18(x: Column): Column = call_function("graft_to_scaled18", x)
-  def graftFromScaled18(l: Column): Column = call_function("graft_from_scaled18", l)
 }

@@ -251,8 +251,9 @@ object DataQuality {
     // split base 1e7 balances the two product lanes: hi ≤ maxᵃmaxᵇ/1e7
     // (~1.2e7 for these columns) and lo < 1e7 per row, so capacity is
     // ~9.2e18 / 1.2e7 ≈ 7.7e11 rows on every lane — 100 TB fits; the
-    // guard below makes anything past that loud (ANSI is off: without
-    // it, sum(long) wraps silently)
+    // guard below makes anything past that loud even where a deployment
+    // turns ANSI off (it is on by default in Spark 4): without ANSI,
+    // sum(long) wraps silently
     val aggs =
       corrVars.map { case (k, _) => sum(col(s"x_$k")).as(s"l_$k") } ++
       corrProds.flatMap { case (a, b) =>

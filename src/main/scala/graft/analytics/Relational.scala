@@ -1454,11 +1454,12 @@ object Relational {
   /** Exact customer revenue deciles WITHOUT a global sort — the segment
     * table every lifecycle/marketing query starts from. The textbook
     * `ntile(10) OVER (ORDER BY revenue)` funnels every customer through
-    * ONE window partition; here global ranks come from the
-    * audit_value_quantiles machinery instead: sketch-learned equi-depth
-    * buckets (B = shuffle-partitions knob) + native binary search +
-    * bucket-local row_number + broadcast offsets — bit-identical ranks,
-    * B-way parallelism. Decile = (rank·10) div n, exact at any n. */
+    * ONE window partition; here global ranks come from
+    * [[Bands.exactRanks]] (shared with audit_value_quantiles) instead:
+    * sketch-learned equi-depth buckets (B = shuffle-partitions knob) +
+    * native binary search + bucket-local row_number + broadcast offsets —
+    * bit-identical ranks, B-way parallelism. Decile = (rank·10) div n,
+    * exact at any n. */
   val qCustomerDeciles: Q = Q.sql(
     "q_customer_deciles",
     s"""WITH r AS (SELECT o_custkey,
@@ -1478,27 +1479,10 @@ object Relational {
       |SELECT CAST(dec0 + 1 AS INT) AS decile, n_cust, min_rev, max_rev,
       |  total_rev, round(total_rev / grand, 4) AS rev_share
       |FROM g CROSS JOIN t ORDER BY decile""".stripMargin) { (s, d) =>
-    val B = math.max(s.conf.get("spark.sql.shuffle.partitions").toInt, 2)
     val rev = Tables.orders(s, d)
       .groupBy(col("o_custkey"))
       .agg(Det.dsumRound(col("o_totalprice"), 2).as("revenue"))
-    val fracs = array((1 until B).map(i => lit(i.toDouble / B)): _*)
-    val bounds = rev.agg(
-      percentile_approx(col("revenue"), fracs, lit(10000)).as("bnds"))
-    val bucketed = rev.crossJoin(broadcast(bounds))
-      .withColumn("bucket",
-        graft.GraftFunctions.graftArrayBucket(col("bnds"), col("revenue")))
-      .drop("bnds")
-    val off = bucketed.groupBy("bucket").agg(count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(
-        sum("bn").over(Window.orderBy("bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum("bn").over(
-        Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select("bucket", "off", "n")
-    val wLocal = Window.partitionBy("bucket").orderBy("revenue", "o_custkey")
-    val ranked = bucketed.join(broadcast(off), Seq("bucket"))
-      .withColumn("rn", col("off") + row_number().over(wLocal) - 1)
+    val ranked = Bands.exactRanks(rev, Nil, Seq("revenue", "o_custkey"))
       .withColumn("dec0", expr("(rn * 10) div n"))
     val g = ranked.groupBy("dec0")
       .agg(count(lit(1)).as("n_cust"),
@@ -1677,14 +1661,14 @@ object Relational {
         val contrib = e.join(pr.select(col("node").as("src"), col("pr"), col("outdeg")
             .as("od")), Seq("src"))
           .groupBy(col("dst"))
-          .agg(sum(graft.GraftFunctions.graftToScaled18(
+          .agg(sum(call_function("graft_to_scaled18",
             col("pr") * col("w") / col("od"))).as("mL"))
         val next = pr.select(col("node"), col("outdeg"))
           .join(contrib, col("dst") === col("node"), "left")
           .crossJoin(broadcast(nn))
           .select(col("node"), col("outdeg"),
             ((lit(1) - d85) / col("n")
-              + d85 * graft.GraftFunctions.graftFromScaled18(
+              + d85 * call_function("graft_from_scaled18",
                 coalesce(col("mL"), lit(0L)))).as("pr"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         next.count() // materialize so the pin truncates, not defers, re-execution

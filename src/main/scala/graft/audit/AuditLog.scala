@@ -199,7 +199,7 @@ final case class AuditLog(pkCol: String, seqCol: String) {
     // (measured 48 s at sf1, |T| ≈ 3 000 × 1 M rows)
     val withB = log.crossJoin(broadcast(tset))
       .withColumn("__t_boundary", get(col("__t_seqs"),
-        graft.GraftFunctions.graftArrayBucket(col("__t_seqs"), col(seqCol)) - 1))
+        call_function("graft_array_bucket", col("__t_seqs"), col(seqCol)) - 1))
       .drop("__t_seqs")
     withAll(withB, payload.flatMap { c =>
       Seq(s"__raw_$c" -> last(col(c), ignoreNulls = true).over(running),

@@ -851,46 +851,11 @@ object AuditQueries {
     Q.sql(
       "audit_value_quantiles",
       auditCte + oracleRanks + finalSel("o")) { (s, d) =>
-      // Scale-safe exact ranks. A `row_number() OVER (PARTITION BY
-      // operation …)` window would sort the ENTIRE feed into |op-classes|
-      // (~4) partitions — a straggler/OOM by construction at 100 TB. So
-      // rank in two levels instead:
-      //   1. one cheap mergeable pass learns ~equi-depth value boundaries
-      //      per operation (approx_percentile sketch);
-      //   2. each row gets a range-bucket via O(log B) native binary
-      //      search (ArrayBucket) on the broadcast boundaries — bucket is
-      //      monotone in value and equal values share a bucket, so
-      //      bucket-local order extends to the global order;
-      //   3. row_number within (operation, bucket) — |ops|×B bounded
-      //      window partitions, parallelism scales with the B knob —
-      //      plus broadcast per-bucket offsets = exact global ranks.
-      // The ranks (and thus the oracle hash) are bit-identical to the
-      // single-window form, independent of B and of sketch precision.
-      val B = math.max(s.conf.get("spark.sql.shuffle.partitions").toInt, 2)
+      // scale-safe exact ranks: bucketed by learned value bounds, so no
+      // window sorts a whole operation class (Bands.exactRanks)
       val base = log(s, d).filter(col("value").isNotNull)
         .select("audit_id", "operation", "value")
-      val fracs = array((1 until B).map(i => lit(i.toDouble / B)): _*)
-      val bounds = base.groupBy("operation")
-        .agg(percentile_approx(col("value"), fracs, lit(10000)).as("bnds"))
-      val bucketed = base.join(broadcast(bounds), Seq("operation"))
-        .withColumn("bucket",
-          graft.GraftFunctions.graftArrayBucket(col("bnds"), col("value")))
-        .drop("bnds")
-      // per-(operation,bucket) counts → rank offset of each bucket and the
-      // per-operation total; |ops|×B rows, broadcast back onto the feed
-      val wOp = Window.partitionBy("operation")
-      val off = bucketed.groupBy("operation", "bucket")
-        .agg(count(lit(1)).as("bn"))
-        .withColumn("off", coalesce(
-          sum("bn").over(wOp.orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n", sum("bn").over(wOp))
-        .select("operation", "bucket", "off", "n")
-      val wLocal = Window.partitionBy("operation", "bucket")
-        .orderBy("value", "audit_id")
-      bucketed.join(broadcast(off), Seq("operation", "bucket"))
-        .withColumn("rn",
-          row_number().over(wLocal).cast("long") + col("off") - 1)
+      graft.analytics.Bands.exactRanks(base, Seq("operation"), Seq("value", "audit_id"))
         .select("operation", "value", "rn", "n")
         .createOrReplaceTempView("graft_vq_o")
       s.sql(finalSel("graft_vq_o"))

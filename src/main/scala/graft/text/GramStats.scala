@@ -1,8 +1,7 @@
 package graft.text
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -32,7 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one null key, exactly like the sorted fold's null-safe `<=>` run and
   * the explode shape's null group. Returns NULL only for NULL input.
   */
-case class GramStats(child: Expression, n: Int) extends UnaryExpression {
+case class GramStats(child: Expression, n: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(n >= 1, s"gram size must be >= 1, got $n")
 
   override def prettyName: String = "graft_gram_stats"
@@ -41,48 +41,35 @@ case class GramStats(child: Expression, n: Int) extends UnaryExpression {
     StructField("dist", LongType, nullable = false),
     StructField("best", LongType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override protected def nullSafeEval(input: Any): Any =
     GramStats.compute(input.asInstanceOf[ArrayData], n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, words =>
-      s"${ev.value} = graft.text.GramStats.compute($words, $n);")
+    defineCodeGen(ctx, ev, words => s"graft.text.GramStats.compute($words, $n)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object GramStats {
-  private val sep = UTF8String.fromString(" ")
 
-  /** One pass: window the word array, count each space-joined gram in a
-    * hash map (exact string keys — no hashing shortcut that could merge
-    * two grams), then read (total, distinct, max frequency) off the map. */
+  /** One pass: window the word array ([[WordShingles.window]]), count
+    * each space-joined gram in a hash map (exact string keys — no hashing
+    * shortcut that could merge two grams), then read (total, distinct,
+    * max frequency) off the map. */
   def compute(words: ArrayData, n: Int): InternalRow = {
-    val k = words.numElements()
-    val m = if (k < n) 0 else k - n + 1
+    val m = WordShingles.windows(words, n)
     if (m == 0) return new GenericInternalRow(Array[Any](0L, 0L, 0L))
     val map = new java.util.HashMap[UTF8String, Array[Int]](m * 2)
     val parts = new Array[UTF8String](n)
     var nullCnt = 0
     var i = 0
     while (i < m) {
-      var j = 0
-      var hasNull = false
-      while (j < n) {
-        if (words.isNullAt(i + j)) hasNull = true
-        else parts(j) = words.getUTF8String(i + j)
-        j += 1
-      }
-      if (hasNull) nullCnt += 1
+      val g = WordShingles.window(words, i, parts)
+      if (g == null) nullCnt += 1
       else {
-        val g = UTF8String.concatWs(sep, parts: _*)
         val c = map.get(g)
         if (c == null) map.put(g, Array(1)) else c(0) += 1
       }

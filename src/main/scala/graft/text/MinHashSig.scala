@@ -1,22 +1,22 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the 4-member MinHash signature of a shingle
   * set in ONE pass — md5 computed once per shingle, all four
-  * `(a·h + b) mod p` minima updated in a single generated loop.
+  * `(a·h + b) mod p` minima updated in a single loop.
   *
   * The composition it replaces — `array_min(transform(s3, w -> (a *
   * conv(substring(md5(w),1,8),16,10) + b) % p))` × 4 — runs interpreted
   * (higher-order functions never enter codegen) and digests every shingle
   * four times, once per hash parameter. At 100 TB corpora the md5 pass IS
   * the signature cost, so a 4× digest reduction plus codegen is the
-  * difference that matters.
+  * difference that matters. Both paths run one compiled method,
+  * [[MinHashSig.compute]].
   *
   * Arithmetic is bit-identical to the composition and to the DuckDB
   * oracle's nibble-decode twin: h = first 4 md5 bytes big-endian
@@ -26,72 +26,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * NULL and `array_min` ignores NULLs); an input that is NULL, empty, or
   * all-NULL yields NULL (`array_min` of no non-null values).
   */
-case class MinHashSig(child: Expression) extends UnaryExpression {
+case class MinHashSig(child: Expression)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def prettyName: String = "graft_minhash_sig"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val shingles = input.asInstanceOf[ArrayData]
-    val n = shingles.numElements()
-    val mins = Array.fill(MinHashSig.Params.length)(Long.MaxValue)
-    var hashed = 0
-    var i = 0
-    while (i < n) {
-      if (!shingles.isNullAt(i)) {
-        hashed += 1
-        val h = MinHashSig.hash32(shingles.getUTF8String(i))
-        var k = 0
-        while (k < mins.length) {
-          val (a, b) = MinHashSig.Params(k)
-          val v = (a * h + b) % MinHashSig.P
-          if (v < mins(k)) mins(k) = v
-          k += 1
-        }
-      }
-      i += 1
-    }
-    if (hashed == 0) null
-    else new GenericArrayData(mins.map(java.lang.Long.valueOf(_): Any))
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    MinHashSig.compute(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, shingles => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val hashed = ctx.freshName("hashed")
-      val mins = MinHashSig.Params.indices.map(k => ctx.freshName(s"min$k"))
-      val decls = mins.map(m => s"long $m = Long.MAX_VALUE;").mkString("\n")
-      val updates = MinHashSig.Params.zip(mins).map { case ((a, b), m) =>
-        s"{ long v = (${a}L * $h + ${b}L) % ${MinHashSig.P}L; if (v < $m) $m = v; }"
-      }.mkString("\n    ")
-      s"""
-         |int $n = $shingles.numElements();
-         |int $hashed = 0;
-         |$decls
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$shingles.isNullAt($i)) {
-         |    $hashed++;
-         |    long $h = graft.text.MinHashSig.hash32($shingles.getUTF8String($i));
-         |    $updates
-         |  }
-         |}
-         |if ($hashed == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    new long[]{${mins.mkString(", ")}});
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, shingles => s"""
+       |${ev.value} = graft.text.MinHashSig.compute($shingles);
+       |${ev.isNull} = ${ev.value} == null;
+     """.stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -104,6 +55,34 @@ object MinHashSig {
   val Params: Seq[(Long, Long)] =
     Seq((999983L, 7L), (424243L, 99991L), (765431L, 12345L), (550007L, 777L))
   val P = 1000000007L
+
+  // Params unpacked once into primitive arrays for the per-shingle loop
+  private val A: Array[Long] = Params.map(_._1).toArray
+  private val B: Array[Long] = Params.map(_._2).toArray
+
+  /** The signature: per hash k, min over the non-null shingles of
+    * `(A(k)·h + B(k)) mod P`, h = [[hash32]] computed once per shingle;
+    * null when no shingle is non-null. */
+  def compute(shingles: ArrayData): ArrayData = {
+    val n = shingles.numElements()
+    val mins = Array.fill(A.length)(Long.MaxValue)
+    var hashed = false
+    var i = 0
+    while (i < n) {
+      if (!shingles.isNullAt(i)) {
+        hashed = true
+        val h = hash32(shingles.getUTF8String(i))
+        var k = 0
+        while (k < mins.length) {
+          val v = (A(k) * h + B(k)) % P
+          if (v < mins(k)) mins(k) = v
+          k += 1
+        }
+      }
+      i += 1
+    }
+    if (hashed) UnsafeArrayData.fromPrimitiveArray(mins) else null
+  }
 
   private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("MD5"))

@@ -601,7 +601,7 @@ object Retrieval {
     val dk = e.select(col("vec_id").as("doc_id"), col("embedding").as("emb"))
       .crossJoin(broadcast(q))
       .select(col("query_id"), col("doc_id"),
-        round(graft.GraftFunctions.graftCosine(col("qe"), col("emb")), 4)
+        round(call_function("graft_cosine", col("qe"), col("emb")), 4)
           .as("cos_sim"))
       .withColumn("rnk", row_number().over(denseW))
       .filter(col("rnk") <= DenseTopK)

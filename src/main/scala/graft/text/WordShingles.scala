@@ -1,7 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -15,10 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * higher-order functions always run interpreted (no codegen), and each
   * `slice` materializes an intermediate array, so an n-gram needs n array
   * copies plus boxed lambda calls per element — outside every
-  * whole-stage-codegen span. This expression emits one tight generated
-  * loop over the unsafe array data (`doGenCode`), producing each shingle
-  * with a single `UTF8String.concatWs` and no intermediate arrays, and
-  * keeps the surrounding Project inside codegen.
+  * whole-stage-codegen span. This expression runs one tight compiled loop
+  * over the unsafe array data ([[WordShingles.compute]], a single static
+  * call from generated code), producing each shingle with a single
+  * `UTF8String.concatWs` and no intermediate arrays, and keeps the
+  * surrounding Project inside codegen.
   *
   * Semantics are identical to the composition it replaces (and to the
   * DuckDB oracle's `list_transform(range(...), ...)` twin): documents
@@ -27,69 +27,57 @@ import org.apache.spark.unsafe.types.UTF8String
   * `split()` output never contains nulls, but the function is public).
   * Returns NULL only for NULL input.
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, n: Int)
+    extends UnaryExpression with ExpectsInputTypes {
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
   override def prettyName: String = "graft_shingles"
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
+  override protected def nullSafeEval(input: Any): Any =
+    WordShingles.compute(input.asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, words => s"graft.text.WordShingles.compute($words, $n)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object WordShingles {
   private val sep = UTF8String.fromString(" ")
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[ArrayData]
-    val k = words.numElements()
-    val m = if (k < n) 0 else k - n + 1
+  /** The shingles: every n-word window in word order. */
+  def compute(words: ArrayData, n: Int): ArrayData = {
+    val m = windows(words, n)
     val out = new Array[Any](m)
     val parts = new Array[UTF8String](n)
     var i = 0
     while (i < m) {
-      var j = 0
-      var hasNull = false
-      while (j < n) {
-        if (words.isNullAt(i + j)) hasNull = true
-        else parts(j) = words.getUTF8String(i + j)
-        j += 1
-      }
-      out(i) = if (hasNull) null else UTF8String.concatWs(sep, parts: _*)
+      out(i) = window(words, i, parts)
       i += 1
     }
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, words => {
-      val sepRef = ctx.addReferenceObj("sep", sep, classOf[UTF8String].getName)
-      val k = ctx.freshName("k")
-      val m = ctx.freshName("m")
-      val out = ctx.freshName("out")
-      val parts = ctx.freshName("parts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val u = classOf[UTF8String].getName
-      val hasNull = ctx.freshName("hasNull")
-      s"""
-         |int $k = $words.numElements();
-         |int $m = $k < $n ? 0 : $k - $n + 1;
-         |$u[] $out = new $u[$m];
-         |$u[] $parts = new $u[$n];
-         |for (int $i = 0; $i < $m; $i++) {
-         |  boolean $hasNull = false;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    if ($words.isNullAt($i + $j)) { $hasNull = true; }
-         |    else { $parts[$j] = $words.getUTF8String($i + $j); }
-         |  }
-         |  $out[$i] = $hasNull ? null : $u.concatWs($sepRef, $parts);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  /** Number of n-word windows of `words`: 0 below n words. */
+  def windows(words: ArrayData, n: Int): Int = {
+    val k = words.numElements()
+    if (k < n) 0 else k - n + 1
+  }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  /** The i-th window, its `parts.length` words space-joined (`parts` is
+    * caller-owned scratch); null when it touches a NULL word. The one
+    * n-gram window of [[compute]] and [[GramStats.compute]]. */
+  def window(words: ArrayData, i: Int, parts: Array[UTF8String]): UTF8String = {
+    var j = 0
+    while (j < parts.length) {
+      if (words.isNullAt(i + j)) return null
+      parts(j) = words.getUTF8String(i + j)
+      j += 1
+    }
+    UTF8String.concatWs(sep, parts: _*)
+  }
 }

@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 /** Native Catalyst expression: cosine similarity of two float or double
   * vectors (both sides the same element type).
   *
-  * Stays inside whole-stage codegen (doGenCode emits a tight primitive
-  * loop over the unsafe array data — no boxing, no UDF serialization),
+  * Stays inside whole-stage codegen (the generated code is one static
+  * call into a primitive loop over the unsafe array data — no per-element
+  * boxing, no UDF serialization; one loop per element type),
   * which is what makes brute-force scoring viable as the small-side
   * baseline of the ANN operators at scale. Accumulates in double so the
   * result matches an oracle computing over DOUBLE[] exactly; the double
@@ -43,48 +44,58 @@ case class CosineSimilarity(left: Expression, right: Expression)
             s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
     }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var nx = 0.0; var ny = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (isFloat) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xi * yi; nx += xi * xi; ny += yi * yi
-      i += 1
-    }
-    if (nx == 0.0 || ny == 0.0) null
-    else java.lang.Double.valueOf(dot / math.sqrt(nx * ny))
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    if (isFloat) CosineSimilarity.ofFloats(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    else CosineSimilarity.ofDoubles(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xa, ya) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      def get(arr: String, idx: String) =
-        if (isFloat) s"(double) $arr.getFloat($idx)" else s"$arr.getDouble($idx)"
+    nullSafeCodeGen(ctx, ev, (x, y) => {
+      val cos = ctx.freshName("cos")
+      val kernel = if (isFloat) "ofFloats" else "ofDoubles"
       s"""
-         |int $n = java.lang.Math.min($xa.numElements(), $ya.numElements());
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double xi = ${get(xa, i)};
-         |  double yi = ${get(ya, i)};
-         |  $dot += xi * yi; $nx += xi * xi; $ny += yi * yi;
-         |}
-         |if ($nx == 0.0 || $ny == 0.0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $dot / java.lang.Math.sqrt($nx * $ny);
-         |}
+         |java.lang.Double $cos = graft.vector.CosineSimilarity.$kernel($x, $y);
+         |${ev.isNull} = $cos == null;
+         |if ($cos != null) ${ev.value} = $cos;
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** Cosine of two float vectors over their common prefix, accumulated
+    * in double; null when either norm is zero. */
+  def ofFloats(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var nx = 0.0; var ny = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getFloat(i).toDouble
+      val yi = y.getFloat(i).toDouble
+      dot += xi * yi; nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    of(dot, nx, ny)
+  }
+
+  /** [[ofFloats]] over double vectors. */
+  def ofDoubles(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var nx = 0.0; var ny = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getDouble(i)
+      val yi = y.getDouble(i)
+      dot += xi * yi; nx += xi * xi; ny += yi * yi
+      i += 1
+    }
+    of(dot, nx, ny)
+  }
+
+  private def of(dot: Double, nx: Double, ny: Double): java.lang.Double =
+    if (nx == 0.0 || ny == 0.0) null
+    else java.lang.Double.valueOf(dot / math.sqrt(nx * ny))
 }

@@ -1,7 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
@@ -23,8 +22,10 @@ import org.apache.spark.sql.types._
   *    edge⨝rank exchange). The summed mass is provably bounded: total
   *    rank mass ≡ 1, the addends are non-negative and every partial sum
   *    is ≤ the group's total mass ≤ 1 = 1e18 unscaled, nine-fold under
-  *    Long.MaxValue (≈ 9.2 at scale 18). That bound is NOT guarded by
-  *    ANSI, which this engine leaves off.
+  *    Long.MaxValue (≈ 9.2 at scale 18). The bound is the guard: a
+  *    deployment can turn ANSI (`spark.sql.ansi.enabled`, on by default
+  *    in Spark 4 and left at that default here) off, and with it off
+  *    `sum(long)` past capacity would wrap silently.
   *  - scale 2 (`graft_to_scaled2` / `graft_from_scaled2`), for the
   *    moment-sum shapes whose inputs are 2-decimal monetary values
   *    (q_measure_correlations): the cast is exact for any value the
@@ -40,65 +41,62 @@ import org.apache.spark.sql.types._
   * `BigDecimal(Double.toString(x))` then HALF_UP to scale N; decimal→
   * double is `BigDecimal.doubleValue` (one correctly-rounded step, NOT
   * `l / 10^N`, which rounds twice and can drift an ulp above 2⁵³). Both
-  * are reproduced verbatim below. Values beyond long capacity at scale N
-  * (|x| ≥ 9.223… at scale 18) throw ArithmeticException via
-  * longValueExact — the FixedPointVec loud-failure discipline, not a
-  * silent wrap.
+  * are reproduced verbatim in each companion's `compute`, the one method
+  * both interpreted eval and generated code call. Values beyond long
+  * capacity at scale N (|x| ≥ 9.223… at scale 18) throw
+  * ArithmeticException via longValueExact — the FixedPointVec
+  * loud-failure discipline, not a silent wrap.
   */
-case class ToScaledN(child: Expression, scale: Int) extends UnaryExpression {
+case class ToScaledN(child: Expression, scale: Int)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def prettyName: String = s"graft_to_scaled$scale"
   override def dataType: DataType = LongType
   override def nullable: Boolean = child.nullable
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects double, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(DoubleType)
 
   override protected def nullSafeEval(x: Any): Any =
-    new java.math.BigDecimal(java.lang.Double.toString(x.asInstanceOf[Double]))
-      .setScale(scale, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
+    ToScaledN.compute(x.asInstanceOf[Double], scale)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => s"""
-       |${ev.value} = new java.math.BigDecimal(java.lang.Double.toString($x))
-       |  .setScale($scale, java.math.RoundingMode.HALF_UP)
-       |  .unscaledValue().longValueExact();
-     """.stripMargin)
+    defineCodeGen(ctx, ev, x => s"graft.vector.ToScaledN.compute($x, $scale)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
+object ToScaledN {
+  def compute(x: Double, scale: Int): Long =
+    new java.math.BigDecimal(java.lang.Double.toString(x))
+      .setScale(scale, java.math.RoundingMode.HALF_UP)
+      .unscaledValue().longValueExact()
+}
+
 /** `graft_from_scaledN(l)` → DOUBLE at the given scale: the exact inverse
   * of [[ToScaledN]], one correctly-rounded BigDecimal→double step. */
-case class FromScaledN(child: Expression, scale: Int) extends UnaryExpression {
+case class FromScaledN(child: Expression, scale: Int)
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def prettyName: String = s"graft_from_scaled$scale"
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = child.nullable
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects bigint, got ${other.simpleString}")
-  }
+  override def inputTypes: Seq[DataType] = Seq(LongType)
 
   override protected def nullSafeEval(l: Any): Any =
-    new java.math.BigDecimal(
-      java.math.BigInteger.valueOf(l.asInstanceOf[Long]), scale).doubleValue()
+    FromScaledN.compute(l.asInstanceOf[Long], scale)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, l => s"""
-       |${ev.value} = new java.math.BigDecimal(
-       |  java.math.BigInteger.valueOf($l), $scale).doubleValue();
-     """.stripMargin)
+    defineCodeGen(ctx, ev, l => s"graft.vector.FromScaledN.compute($l, $scale)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object FromScaledN {
+  def compute(l: Long, scale: Int): Double =
+    new java.math.BigDecimal(java.math.BigInteger.valueOf(l), scale).doubleValue()
 }
 
 /** `graft_from_scaled4_split(hi, lo)` → DOUBLE: reassembles a split-lane
@@ -110,36 +108,32 @@ case class FromScaledN(child: Expression, scale: Int) extends UnaryExpression {
   * columns) keeps each `sum(long)` lane inside long capacity to ~7.7e11
   * input rows — a 100 TB lineitem (~6e11 rows) fits. */
 case class FromScaledSplit(left: Expression, right: Expression, scale: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def prettyName: String = s"graft_from_scaled${scale}_split"
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = left.nullable || right.nullable
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (bigint, bigint), got $other")
-    }
-
-  private val base = java.math.BigInteger.valueOf(10000000L)
+  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
 
   override protected def nullSafeEval(hi: Any, lo: Any): Any =
-    new java.math.BigDecimal(
-      java.math.BigInteger.valueOf(hi.asInstanceOf[Long]).multiply(base)
-        .add(java.math.BigInteger.valueOf(lo.asInstanceOf[Long])), scale)
-      .doubleValue()
+    FromScaledSplit.compute(hi.asInstanceOf[Long], lo.asInstanceOf[Long], scale)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (hi, lo) => s"""
-       |${ev.value} = new java.math.BigDecimal(
-       |  java.math.BigInteger.valueOf($hi)
-       |    .multiply(java.math.BigInteger.valueOf(10000000L))
-       |    .add(java.math.BigInteger.valueOf($lo)), $scale).doubleValue();
-     """.stripMargin)
+    defineCodeGen(ctx, ev, (hi, lo) =>
+      s"graft.vector.FromScaledSplit.compute($hi, $lo, $scale)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object FromScaledSplit {
+  private val base = java.math.BigInteger.valueOf(10000000L)
+
+  def compute(hi: Long, lo: Long, scale: Int): Double =
+    new java.math.BigDecimal(
+      java.math.BigInteger.valueOf(hi).multiply(base)
+        .add(java.math.BigInteger.valueOf(lo)), scale)
+      .doubleValue()
 }

@@ -1,7 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -29,6 +28,9 @@ import org.apache.spark.sql.types._
   * scale-6 magnitude contract fails loudly instead of silently wrapping
   * (a wrapped sum would hash-diverge from the oracle; a thrown error is
   * a visible data bug).
+  *
+  * Each kernel's arithmetic is one `compute` method on its companion,
+  * called by interpreted eval and, as one static call, by generated code.
   */
 object FixedPointVec {
   /** v is an exact scale-6 decimal by contract; recover its scaled long.
@@ -44,24 +46,28 @@ object FixedPointVec {
   * scale-6 double vectors. Equals DuckDB's
   * `sum(CAST(a AS DECIMAL(18,6)) * CAST(b AS DECIMAL(18,6)))`. */
 case class Dot612(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def prettyName: String = "graft_dot612"
   override def dataType: DataType = DecimalType(28, 12)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<double>, array<double>), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Dot612.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.vector.Dot612.compute($x, $y)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object Dot612 {
+  def compute(x: ArrayData, y: ArrayData): Decimal = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
@@ -73,27 +79,6 @@ case class Dot612(left: Expression, right: Expression)
     }
     Decimal(acc, 28, 12)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xa, ya) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($xa.numElements(), $ya.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc = java.lang.Math.addExact($acc, java.lang.Math.multiplyExact(
-         |    java.lang.Math.round($xa.getDouble($i) * 1e6),
-         |    java.lang.Math.round($ya.getDouble($i) * 1e6)));
-         |}
-         |${ev.value} = org.apache.spark.sql.types.Decimal.apply($acc, 28, 12);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** `graft_scalevec612(arr, s)` → ARRAY<DECIMAL(28,12)>: exact elementwise
@@ -101,25 +86,30 @@ case class Dot612(left: Expression, right: Expression)
   * row-level term vector fed to `graft_vec_sum` (matrix-vector products
   * without a per-(row,dim) explode). */
 case class ScaleVec612(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def prettyName: String = "graft_scalevec612"
   override def dataType: DataType =
     ArrayType(DecimalType(28, 12), containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<double>, double), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), DoubleType)
 
-  override protected def nullSafeEval(a: Any, s: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val sv = FixedPointVec.toLong6(s.asInstanceOf[Double])
+  override protected def nullSafeEval(a: Any, s: Any): Any =
+    ScaleVec612.compute(a.asInstanceOf[ArrayData], s.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, s) => s"graft.vector.ScaleVec612.compute($x, $s)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object ScaleVec612 {
+  def compute(x: ArrayData, s: Double): ArrayData = {
+    val sv = FixedPointVec.toLong6(s)
     val n = x.numElements()
     val out = new Array[Any](n)
     var i = 0
@@ -130,29 +120,6 @@ case class ScaleVec612(left: Expression, right: Expression)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xa, s) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sv = ctx.freshName("sv")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $xa.numElements();
-         |long $sv = java.lang.Math.round($s * 1e6);
-         |Object[] $out = new Object[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $out[$i] = org.apache.spark.sql.types.Decimal.apply(
-         |    java.lang.Math.multiplyExact(
-         |      java.lang.Math.round($xa.getDouble($i) * 1e6), $sv), 28, 12);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** `graft_deflate6(c, p, s)` → ARRAY<DOUBLE>: exact per-element
@@ -161,65 +128,39 @@ case class ScaleVec612(left: Expression, right: Expression)
   * Equals DuckDB's `round(CAST(c AS DECIMAL(18,6)) −
   * CAST(s AS DECIMAL(18,6)) * CAST(p AS DECIMAL(18,6)), 6)`. */
 case class Deflate6(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+    extends TernaryExpression with ExpectsInputTypes {
 
   override def prettyName: String = "graft_deflate6"
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (array<double>, array<double>, double), got " +
-          s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-          s"${third.dataType.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType), DoubleType)
 
-  override protected def nullSafeEval(c: Any, p: Any, s: Any): Any = {
-    val ca = c.asInstanceOf[ArrayData]
-    val pa = p.asInstanceOf[ArrayData]
-    val sv = FixedPointVec.toLong6(s.asInstanceOf[Double])
-    val n = math.min(ca.numElements(), pa.numElements())
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val c12 = Math.multiplyExact(FixedPointVec.toLong6(ca.getDouble(i)), 1000000L)
-      val sp = Math.multiplyExact(sv, FixedPointVec.toLong6(pa.getDouble(i)))
-      out(i) = java.lang.Double.valueOf(
-        FixedPointVec.halfUp12to6(Math.subtractExact(c12, sp)) / 1e6)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(c: Any, p: Any, s: Any): Any =
+    Deflate6.compute(c.asInstanceOf[ArrayData], p.asInstanceOf[ArrayData],
+      s.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (ca, pa, s) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sv = ctx.freshName("sv")
-      val d = ctx.freshName("d")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = java.lang.Math.min($ca.numElements(), $pa.numElements());
-         |long $sv = java.lang.Math.round($s * 1e6);
-         |Object[] $out = new Object[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = java.lang.Math.subtractExact(
-         |    java.lang.Math.multiplyExact(
-         |      java.lang.Math.round($ca.getDouble($i) * 1e6), 1000000L),
-         |    java.lang.Math.multiplyExact(
-         |      $sv, java.lang.Math.round($pa.getDouble($i) * 1e6)));
-         |  $out[$i] = java.lang.Double.valueOf(($d >= 0
-         |    ? ($d + 500000L) / 1000000L
-         |    : -((-$d + 500000L) / 1000000L)) / 1e6);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (c, p, s) => s"graft.vector.Deflate6.compute($c, $p, $s)")
 
   override protected def withNewChildrenInternal(
       f: Expression, sec: Expression, t: Expression): Expression =
     copy(first = f, second = sec, third = t)
+}
+
+object Deflate6 {
+  def compute(c: ArrayData, p: ArrayData, s: Double): ArrayData = {
+    val sv = FixedPointVec.toLong6(s)
+    val n = math.min(c.numElements(), p.numElements())
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      val c12 = Math.multiplyExact(FixedPointVec.toLong6(c.getDouble(i)), 1000000L)
+      val sp = Math.multiplyExact(sv, FixedPointVec.toLong6(p.getDouble(i)))
+      out(i) = FixedPointVec.halfUp12to6(Math.subtractExact(c12, sp)) / 1e6
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }

@@ -1,7 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -15,29 +14,35 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Why it exists: the HOF form materializes an intermediate array and runs
   * interpreted lambdas per row — at sf1 the k-means training scan
   * (|corpus| × k cells pairs per Lloyd round) spent ~30 s mostly in that
-  * allocation. This is a tight primitive loop inside whole-stage codegen:
-  * no intermediate array, no boxing.
+  * allocation. This is a tight primitive loop, one static call from both
+  * interpreted eval (the k-means `aggregate(…)` lambdas) and whole-stage
+  * codegen: no intermediate array, no per-element boxing.
   */
 case class L2Squared(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
 
   override def prettyName: String = "graft_l2sq"
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<double>, array<double>), got " +
-            s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    L2Squared.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.vector.L2Squared.compute($x, $y)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object L2Squared {
+
+  /** Σ (x_i − y_i)² over the common prefix, left to right. */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
@@ -46,27 +51,6 @@ case class L2Squared(left: Expression, right: Expression)
       acc += d * d
       i += 1
     }
-    java.lang.Double.valueOf(acc)
+    acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xa, ya) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($xa.numElements(), $ya.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $xa.getDouble($i) - $ya.getDouble($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,6 +1,6 @@
 package graft.vector
 
-import graft.{Det, GraftFunctions, Q, Tables}
+import graft.{Det, Q, Tables}
 import graft.Tables.{embeddings => emb}
 import graft.text.TextOps.{bandPairs, duckBandPairs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -23,7 +23,7 @@ import org.apache.spark.sql.expressions.Window
 object Similarity {
 
   private def cosR(a: Column, b: Column): Column =
-    round(GraftFunctions.graftCosine(a, b), 4)
+    round(call_function("graft_cosine", a, b), 4)
 
   /** The serve query set: vectors with id < 10 are the queries of every
     * ANN op. */
@@ -2804,7 +2804,7 @@ object Similarity {
       .crossJoin(broadcast(cent))
       .select(col("vec_id"), col("label"),
         (col("clabel") === col("label")).as("own"),
-        GraftFunctions.graftCosine(col("embd"), col("cv")).as("cs"))
+        call_function("graft_cosine", col("embd"), col("cv")).as("cs"))
     val m = scored.groupBy("vec_id", "label")
       .agg(max(when(col("own"), col("cs"))).as("own_cos"),
         max(when(!col("own"), col("cs"))).as("best_other"))

@@ -122,6 +122,58 @@ class NativeExprSpec extends AnyFunSuite {
     assert(df.head().getInt(0) === 1 && df.head().getDouble(1) === 8.0)
   }
 
+  /** One call per scalar `graft_*` function: SQL arguments over
+    * `spark.range`, each depending on `id` so nothing constant-folds. */
+  private val scalarCalls: Seq[(String, Seq[String])] = Seq(
+    "graft_cosine" -> Seq("array(cast(1 + id AS float), 2F)", "array(3F, cast(4 - id AS float))"),
+    "graft_shingles" -> Seq("split(concat('a b a ', cast(id AS string)), ' ')", "2"),
+    "graft_minhash_sig" -> Seq("array(concat('w ', cast(id AS string)), 'x y z')"),
+    "graft_l2sq" -> Seq("array(1D + id, 2D)", "array(3D, 4D + id)"),
+    "graft_array_bucket" -> Seq("array(1L + id, 5L + id)", "3L + id"),
+    "graft_dot612" -> Seq("array(0.5D + id, -1.25D)", "array(2D, 0.000001D * id)"),
+    "graft_scalevec612" -> Seq("array(0.5D + id, -1.25D)", "0.000001D + id"),
+    "graft_deflate6" -> Seq("array(1.5D + id, -2.25D)", "array(0.5D, -0.125D)",
+      "0.000001D * (id + 1)"),
+    "graft_to_scaled18" -> Seq("0.1D * (id + 1)"),
+    "graft_from_scaled18" -> Seq("100000000000000000L * (id + 1)"),
+    "graft_to_scaled2" -> Seq("104999.91D + id"),
+    "graft_from_scaled2" -> Seq("10499991L + id"),
+    "graft_viterbi" -> Seq("substr('ababab', 1, 2 + cast(id AS int))",
+      """array(named_struct('piece', 'a', 'cost', CAST(1 AS decimal(18,6))),
+        |  named_struct('piece', 'ab', 'cost', CAST(2 AS decimal(18,6))),
+        |  named_struct('piece', 'b', 'cost', CAST(1 AS decimal(18,6))))""".stripMargin),
+    "graft_from_scaled4_split" -> Seq("3L + id", "1234567L"),
+    "graft_gram_stats" -> Seq("split(concat('a b a b ', cast(id AS string)), ' ')", "2"))
+
+  test("every scalar graft_* function stays in codegen; direct eval ≡ codegen, NULL row included") {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val scalar = GraftFunctions.descriptions.map(_._1.funcName).filterNot(_ == "graft_vec_sum")
+    assert(scalarCalls.map(_._1).sorted === scalar.sorted)
+    scalarCalls.foreach { case (name, args) =>
+      // row id = 1 carries a NULL first argument
+      val sqlArgs = s"IF(id = 1, NULL, ${args.head})" +: args.tail
+      val in = spark.range(3).selectExpr(
+        sqlArgs.zipWithIndex.map { case (a, i) => s"$a AS a$i" }: _*)
+      val q = spark.range(3).selectExpr(s"$name(${sqlArgs.mkString(", ")}) AS r")
+      val viaCodegen = q.collect().map(_.get(0)).toSeq
+      val plan = q.queryExecution.executedPlan.toString
+      assert(s"\\*\\(\\d+\\) Project \\[$name\\(".r.findFirstIn(plan).isDefined,
+        s"$name left whole-stage codegen:\n$plan")
+      val builder = GraftFunctions.descriptions.find(_._1.funcName == name).get._3
+      val viaEval = in.collect().toSeq.map { row =>
+        val lits = in.schema.fields.indices.map { i =>
+          val dt = in.schema(i).dataType
+          Literal(CatalystTypeConverters.createToCatalystConverter(dt)(row.get(i)), dt)
+        }
+        val e = builder(lits)
+        CatalystTypeConverters.createToScalaConverter(e.dataType)(e.eval(null))
+      }
+      assert(viaEval === viaCodegen, name)
+      assert(viaCodegen(1) == null && viaCodegen(0) != null && viaCodegen(2) != null, name)
+    }
+  }
+
   test("dot612 equals the exact-decimal product fold, incl. negatives and ties") {
     // values exact at scale 6; includes a HALF_UP tie case: 0.5 * 0.000001
     // = 5e-7, whose scale-6 round is 0.000001 only under half-up

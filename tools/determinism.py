@@ -34,6 +34,16 @@ The input-split axis (-Dspark.sql.files.maxPartitionBytes=16m vs the
 likewise varies nothing below the floor, where each scan is coalesced to
 one partition whatever its split count: sweep it with the same
 -D...minPartitionSize=1b flag on both runs.
+
+The codegen axis compares default Verify (whole-stage codegen, generated
+expressions) with Verify on the interpreted paths only: every native
+graft_* kernel then runs through its eval, every other expression
+through Spark's interpreted fallback:
+
+  tools/run_graft.sh -Dspark.sql.codegen.wholeStage=false \
+    -Dspark.sql.codegen.factoryMode=NO_CODEGEN \
+    graft.Verify <sf0.01 dir> /tmp/det-c
+  python3 tools/determinism.py /tmp/det-a /tmp/det-c /tmp/det-cg.json
 """
 import glob
 import hashlib

@@ -7,8 +7,9 @@ For every op directory (or only the named ops) the parquet schema and rows
 must be equal (pyarrow.Table.equals; row order is ignored when one side is
 only a reordering of the other). oracle_sql.json and oracle_sql_scale.json
 must match per op byte for byte; an oracle that differs in whitespace only
-is counted but accepted. Prints one line per differing op and exits 1 when
-any op differs, 0 otherwise.
+is counted but accepted. plans.json (each op's normalized optimized plan)
+must match per op byte for byte when both sides have one. Prints one line
+per differing op and exits 1 when any op differs, 0 otherwise.
 """
 import json
 import os
@@ -76,6 +77,15 @@ def main(argv):
                     ws_only.setdefault(fname, []).append(k)
                 else:
                     diffs.setdefault(k, []).append(f"{fname} differs beyond whitespace")
+    plans = [os.path.join(d, "plans.json") for d in (parent, change)]
+    if all(os.path.exists(p) for p in plans):
+        a, b = (json.load(open(p)) for p in plans)
+        for k in sorted(only & (a.keys() | b.keys()) if only else a.keys() | b.keys()):
+            if k not in a or k not in b:
+                diffs.setdefault(k, []).append(
+                    "plans.json entry missing in " + ("parent" if k not in a else "change"))
+            elif a[k] != b[k]:
+                diffs.setdefault(k, []).append("optimized plan differs")
     for op in sorted(diffs):
         print(f"DIFF {op}: " + "; ".join(diffs[op]))
     ws = ", ".join(f"{f} {len(v)}" for f, v in sorted(ws_only.items())) or "none"
