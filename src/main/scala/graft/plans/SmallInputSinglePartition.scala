@@ -17,6 +17,18 @@ import org.apache.spark.sql.internal.SQLConf
   * so `EnsureRequirements` plans no exchange: the query runs as one job
   * of one task, plus one job per broadcast side.
   *
+  * For a join this holds only while Spark's single-partition size guard
+  * passes: every input must be estimated at most
+  * `spark.sql.maxSinglePartitionBytes`, which [[graft.GraftSession]] sets
+  * to its maximum ([[graft.GraftSession.maxSinglePartitionBytes]]). At
+  * Spark's 128 MB default a join over joins, estimated as a product of
+  * sizes, hash-shuffled its one-partition inputs again: a warm
+  * `dedup_minhash` on the benchmark's corpus ran 9 jobs and wrote 28 KB of
+  * shuffle, and runs 4 jobs and writes none with the guard lifted.
+  * An operator that reports an unknown partitioning (`Expand` for
+  * several DISTINCT aggregates, cubes and time windows, `Union`, a full
+  * outer join, a side of local rows) still gets an exchange above it.
+  *
   * The threshold is AQE's own floor, compared with file bytes. AQE never
   * coalesces a post-shuffle partition below the floor, but it sizes that
   * on shuffle bytes, which are larger than the compressed files (decoded

@@ -400,7 +400,7 @@ class NativeExprSpec extends AnyFunSuite {
       java.lang.Double.doubleToLongBits(q.getDouble(1)))
   }
 
-  test("correlations capacity guard fails LOUDLY past the lane budget (ANSI is off)") {
+  test("correlations capacity guard fails LOUDLY past the lane budget, ANSI on and off") {
     // In-contract inputs pass and produce the normal 6-pair output
     val ok = Seq(
       (1.0, 949.13, 0.05, 0.02), (50.0, 104999.91, 0.1, 0.08),

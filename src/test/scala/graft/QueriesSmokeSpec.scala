@@ -15,18 +15,21 @@ object TestSession {
     * every `=== 0` assertion passes vacuously — this walker descends into
     * query stages. ReusedExchange is deliberately not counted (a reused
     * exchange is the sharing we want to reward). */
-  def shuffleCount(p: org.apache.spark.sql.execution.SparkPlan): Int = {
+  def shuffleCount(p: org.apache.spark.sql.execution.SparkPlan): Int = shuffles(p).size
+
+  /** The shuffles [[shuffleCount]] counts. */
+  def shuffles(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    var n = 0
-    def walk(x: SparkPlan): Unit = x match {
+    def walk(x: SparkPlan): Seq[ShuffleExchangeLike] = x match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case q: QueryStageExec => walk(q.plan)
-      case e: ShuffleExchangeLike => n += 1; e.children.foreach(walk)
-      case o => o.children.foreach(walk)
+      case e: ShuffleExchangeLike => e +: e.children.flatMap(walk)
+      case o => o.children.flatMap(walk)
     }
-    walk(p); n
+    walk(p)
   }
 
   /** AQE's partition floor, which is also the small-input threshold of

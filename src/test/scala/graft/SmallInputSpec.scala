@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.graft.Jobs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,6 +43,45 @@ class SmallInputSpec extends AnyFunSuite {
 
   test("the 8 audit views give the scale path's rows") {
     views.foreach(n => assert(rows(op(n)) === scaleRows(n), n))
+  }
+
+  /** The benchmark's three corpus ops, then the ops whose plan before
+    * execution at sf0.01 changes with the join-size guard
+    * (`spark.sql.maxSinglePartitionBytes`, see
+    * [[GraftSession.maxSinglePartitionBytes]]) lifted; the last four only in
+    * the order of their `Expand` projections, which follows expression ids. */
+  private val guarded = Seq("dedup_minhash", "ann_ivf_kmeans", "ann_topk",
+    "ann_ndcg", "ann_recall", "contamination_sources", "dedup_incremental", "sample_stratified",
+    "ann_query_skew", "heaps_fit", "quality_source_matrix", "zipf_fit",
+    "audit_client_sessions", "dq_profile", "pii_pseudonymize", "q_supplier_wait")
+
+  test("the ops the join-size guard re-planned give the scale path's rows") {
+    guarded.foreach(n => assert(rows(op(n)) === scaleRows(n), n))
+  }
+
+  /** Hash exchanges in the plan `df` ran. */
+  private def hashShuffles(df: DataFrame): Int =
+    shuffles(executed(df)).count(_.outputPartitioning.isInstanceOf[HashPartitioning])
+
+  /** The second `dedup_minhash` call, served from the frames the first one
+    * persisted: collected, with the jobs it ran. */
+  private def warmDedup(): (DataFrame, Int) = {
+    op("dedup_minhash").collect()
+    val df = op("dedup_minhash")
+    (df, Jobs.during(spark.sparkContext)(df.collect())._2)
+  }
+
+  test("a warm dedup_minhash joins in one stage at sf0.001") {
+    val (df, jobs) = warmDedup()
+    assert(hashShuffles(df) === 0, executed(df).toString)
+    assert(jobs <= 4)
+  }
+
+  test("under Spark's 128 MB single-partition guard the warm dedup_minhash re-shuffles") {
+    withConf("spark.sql.maxSinglePartitionBytes", "128m") {
+      val (df, _) = warmDedup()
+      assert(hashShuffles(df) > 0, executed(df).toString)
+    }
   }
 
   test("with the floor at 1 byte a window query keeps its exchange") {

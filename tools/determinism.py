@@ -44,6 +44,17 @@ through Spark's interpreted fallback:
     -Dspark.sql.codegen.factoryMode=NO_CODEGEN \
     graft.Verify <sf0.01 dir> /tmp/det-c
   python3 tools/determinism.py /tmp/det-a /tmp/det-c /tmp/det-cg.json
+
+The join axis compares default Verify, where a small-input join over
+single-partition inputs plans no exchange (GraftSession sets
+spark.sql.maxSinglePartitionBytes to its maximum), with Verify under
+Spark's 128m default, whose size guard hash-shuffles a join's inputs
+once their estimated sizes (a product of sizes for a join below it)
+pass 128 MB:
+
+  tools/run_graft.sh -Dspark.sql.maxSinglePartitionBytes=128m \
+    graft.Verify <sf0.01 dir> /tmp/det-j
+  python3 tools/determinism.py /tmp/det-a /tmp/det-j /tmp/det-join.json
 """
 import glob
 import hashlib
