@@ -56,8 +56,9 @@ object GraftSession {
     * query's files fit under the 1 MB floor, or above a global aggregate;
     * above the floor the joins plan as before.
     *
-    * Measured on the benchmark's `corpus_dedup` (10 parent/change pairs,
-    * seeds 1-10, alternating which side ran first, 4 vCPUs):
+    * Measured on the benchmark's `corpus_dedup` (10 pairs of runs at the
+    * 128 MB default and lifted, seeds 1-10, alternating which side ran
+    * first, 4 vCPUs):
     * `op_kind_p50_s` 0.740 -> 0.467 s (-37%, lower in 10 of 10 pairs) and
     * `rows_per_s` 663 -> 827; in a traced pair the text layer ran 4 jobs
     * instead of 9 and wrote no shuffle (28,312 B before).

@@ -19,9 +19,17 @@ class SmallInputSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
+  /** Rows of `name`, with nothing persisted by an earlier run: an op that
+    * persists a frame builds it under the current settings, so each path
+    * reads its own frames. */
+  private def freshRows(name: String): Seq[String] = {
+    spark.catalog.clearCache()
+    rows(op(name))
+  }
+
   /** Rows of `name` built and run with the floor at 1 byte. */
   private def scaleRows(name: String): Seq[String] =
-    withConf(MinPartitionSize, "1b")(rows(op(name)))
+    withConf(MinPartitionSize, "1b")(freshRows(name))
 
   private def executed(df: DataFrame) = df.queryExecution.executedPlan match {
     case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -42,7 +50,7 @@ class SmallInputSpec extends AnyFunSuite {
   }
 
   test("the 8 audit views give the scale path's rows") {
-    views.foreach(n => assert(rows(op(n)) === scaleRows(n), n))
+    views.foreach(n => assert(freshRows(n) === scaleRows(n), n))
   }
 
   /** The benchmark's three corpus ops, then the ops whose plan before
@@ -56,7 +64,7 @@ class SmallInputSpec extends AnyFunSuite {
     "audit_client_sessions", "dq_profile", "pii_pseudonymize", "q_supplier_wait")
 
   test("the ops the join-size guard re-planned give the scale path's rows") {
-    guarded.foreach(n => assert(rows(op(n)) === scaleRows(n), n))
+    guarded.foreach(n => assert(freshRows(n) === scaleRows(n), n))
   }
 
   /** Hash exchanges in the plan `df` ran. */
@@ -64,9 +72,10 @@ class SmallInputSpec extends AnyFunSuite {
     shuffles(executed(df)).count(_.outputPartitioning.isInstanceOf[HashPartitioning])
 
   /** The second `dedup_minhash` call, served from the frames the first one
-    * persisted: collected, with the jobs it ran. */
+    * persisted (under the caller's settings, see [[freshRows]]): collected,
+    * with the jobs it ran. */
   private def warmDedup(): (DataFrame, Int) = {
-    op("dedup_minhash").collect()
+    freshRows("dedup_minhash")
     val df = op("dedup_minhash")
     (df, Jobs.during(spark.sparkContext)(df.collect())._2)
   }
@@ -106,6 +115,6 @@ class SmallInputSpec extends AnyFunSuite {
   }
 
   test("audit_stream gives the same rows on both paths") {
-    assert(rows(op("audit_stream")) === scaleRows("audit_stream"))
+    assert(freshRows("audit_stream") === scaleRows("audit_stream"))
   }
 }
